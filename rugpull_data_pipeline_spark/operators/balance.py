@@ -2,14 +2,17 @@
 
 Spark-first restatement of the reference's engine core (SURVEY.md §3.1):
 
-    SIMD structural index + skip-map + FSM extractors     → schema-pruned from_json
-    (RECEIVER/stage1_simd.cpp:17-130,
-     stage2_processing.cpp:15-33,192-251)
+    SIMD structural index + skip-map + FSM extractors     → JSON source at the scan, one
+    (RECEIVER/stage1_simd.cpp:17-130,                        parse per block at a pruned
+     stage2_processing.cpp:15-33,192-251)                   schema (batch and stream)
     hot-address xxHash semi-join filter (J1, :358-364)    → arrays_overlap vs broadcast watchlist
-    index→address map + owner replacement (J2, :366-389,  → element_at on the concatenated key
-     applied :160-167)                                      array + coalesce precedence
-    per-(owner,mint) pre/post hash agg (A1, :149-174)     → groupBy(wallet, mint) conditional agg
+    index→address map + owner replacement (J2, :366-389,  → try_element_at on the concatenated
+     applied :160-167)                                      key array + CASE precedence
+    per-(owner,mint) pre/post hash agg (A1, :149-174)     → GROUP BY (signature, wallet, mint)
+                                                            conditional agg
     blockTime stamping (W1, file_utils.cpp:68-88)         → to_timestamp(from_unixtime(blockTime))
+
+The chain after the scan is one Spark SQL statement (``_EXTRACT_SQL``).
 
 Output matches the reference's one output relation: all-utf8
 {wallet, signature, mint, pre_balance, post_balance} + ts
@@ -37,13 +40,13 @@ def parse_blocks(raw: DataFrame, payload_col: str = "value") -> DataFrame:
     """Raw JSON payload strings → typed block rows (tight, nested-pruned
     schema: only the five arrays the reference materializes are declared).
 
-    For payloads that are already a DataFrame column (streaming micro-batches,
-    the custom DataSource) this is the only option. For block FILES prefer
-    ``read_blocks``: ``from_json`` is a scalar expression, so every optimizer
-    rule that collapses projections or infers generator filters duplicates
-    the full parse per consumer expression (measured: 2-4 Jackson passes per
-    row on the extraction chain), while the JSON datasource parses each line
-    exactly once at the scan."""
+    Only for payloads that are already a DataFrame column (the
+    ``solana_blocks`` DataSource). Block FILES go through ``read_blocks`` /
+    ``read_block_stream``: ``from_json`` is a scalar expression, so every
+    optimizer rule that collapses projections or infers generator filters
+    duplicates the full parse per consumer expression (measured: 2-4 Jackson
+    passes per row on the extraction chain), while the JSON datasource
+    parses each line exactly once at the scan."""
     return raw.select(
         F.from_json(F.col(payload_col), SOLANA_BLOCK).alias("block")
     ).select("block.result.*")
@@ -80,6 +83,10 @@ def _drop_tx_meta_field(name: str) -> T.StructType:
 _BALANCE_BLOCK = _drop_tx_meta_field("logMessages")
 
 
+def _scan_schema(with_logs: bool) -> T.StructType:
+    return SOLANA_BLOCK if with_logs else _BALANCE_BLOCK
+
+
 def read_blocks(
     spark: SparkSession, path_glob: str, with_logs: bool = False
 ) -> DataFrame:
@@ -92,117 +99,106 @@ def read_blocks(
     collapsed projection each carried their own ``from_json``, so the chain
     paid 2-4 full parses per row. ``with_logs=True`` keeps logMessages for
     the instruction-log consumers (P8)."""
-    schema = SOLANA_BLOCK if with_logs else _BALANCE_BLOCK
-    return spark.read.schema(schema).json(path_glob).select("result.*")
+    return spark.read.schema(_scan_schema(with_logs)).json(path_glob).select("result.*")
 
 
-def extract_balance_changes(
-    blocks: DataFrame, watchlist: DataFrame, prefilter: bool = True
+def read_block_stream(
+    spark: SparkSession,
+    path_glob: str,
+    with_logs: bool = False,
+    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
+    """The streaming twin of ``read_blocks``: the JSON file source parses
+    each landed line once at the scan, at the same pruned schema, so every
+    micro-batch arrives as typed block rows."""
+    reader = spark.readStream.schema(_scan_schema(with_logs))
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.json(path_glob).select("result.*")
+
+
+# The DuckDB oracle's CTE chain as one Spark SQL statement, analysed once.
+# Built from DataFrame and Column calls, the same plan takes ~90 py4j round
+# trips that each re-analyse the growing plan, which on a one-block stream
+# micro-batch costs more than the scan.
+_EXTRACT_SQL = """
+WITH tx AS (
+    SELECT to_timestamp(from_unixtime(blockTime)) AS ts,
+        explode(transactions) AS tx
+    FROM {blocks}
+),
+keyed AS (
+    -- One concatenated key sequence with continuous indexing:
+    -- accountKeys, then loadedAddresses readonly, then writable
+    -- (stage2_processing.cpp:366-389).
+    SELECT ts,
+        tx.transaction.signatures[0] AS signature,
+        concat(
+            coalesce(tx.transaction.message.accountKeys, array()),
+            coalesce(tx.meta.loadedAddresses.readonly, array()),
+            coalesce(tx.meta.loadedAddresses.writable, array())) AS all_keys,
+        tx.meta.preTokenBalances AS pre,
+        tx.meta.postTokenBalances AS post
+    FROM tx
+),
+hot AS (
+    -- J1: keep the tx iff any key is watchlisted (stage2_processing.cpp:
+    -- 358-364). The watchlist is one broadcast collect_set row, so the
+    -- filter is narrow and runs before any balance is exploded.
+    SELECT /*+ BROADCAST(w) */ keyed.*, w.watch
+    FROM keyed CROSS JOIN (
+        SELECT collect_set(address) AS watch FROM {watchlist}
+    ) w
+    WHERE arrays_overlap(all_keys, watch)
+),
+entries AS (
+    -- The pre and post passes (stage2_processing.cpp:391-403) as ONE
+    -- generator over phase-tagged elements: a UNION ALL of two explodes
+    -- would plan the scan and the J1 filter twice.
+    SELECT ts, signature, all_keys, watch, e.phase AS phase, e.b AS b
+    FROM (
+        SELECT ts, signature, all_keys, watch,
+            explode(concat(
+                transform(coalesce(pre, array()),
+                    b -> struct('pre' AS phase, b AS b)),
+                transform(coalesce(post, array()),
+                    b -> struct('post' AS phase, b AS b)))) AS e
+        FROM hot
+    )
+    WHERE e.b IS NOT NULL
+),
+resolved AS (
+    -- J2: when the address at accountIndex is watchlisted it is the pool
+    -- vault and replaces the owner (stage2_processing.cpp:160-167).
+    -- try_element_at: ANSI element_at throws on an out-of-range index; a
+    -- malformed tx must keep its owner instead.
+    SELECT ts, signature, phase,
+        CASE WHEN array_contains(watch, try_element_at(all_keys, b.accountIndex + 1))
+             THEN try_element_at(all_keys, b.accountIndex + 1)
+             ELSE b.owner END AS wallet,
+        b.mint AS mint,
+        b.uiTokenAmount.uiAmountString AS amount
+    FROM entries
+)
+-- A1: per-(tx, wallet, mint) pre/post merge; a row exists only when the
+-- pre or the post side had an entry (stage2_processing.cpp:399-401).
+SELECT wallet, signature, mint,
+    max(CASE WHEN phase = 'pre' THEN amount END) AS pre_balance,
+    max(CASE WHEN phase = 'post' THEN amount END) AS post_balance,
+    max(ts) AS ts
+FROM resolved
+GROUP BY signature, wallet, mint
+"""
+
+
+def extract_balance_changes(blocks: DataFrame, watchlist: DataFrame) -> DataFrame:
     """Typed block rows (result.*) + watchlist(address) → balance changes.
 
-    ``prefilter=True`` keeps the reference's cheap-check-before-parse shape
-    (SURVEY.md §4): transactions are dropped by the broadcast semi-join
-    *before* token-balance explosion pays for itself.
+    Keeps the reference's cheap-check-before-parse shape (SURVEY.md §4):
+    transactions are dropped by the broadcast watchlist filter *before*
+    the token-balance explode pays for itself. One parameterized statement,
+    so the plan is analysed once.
     """
-    watch_arr = F.broadcast(
-        watchlist.select(F.collect_set("address").alias("watch"))
+    return blocks.sparkSession.sql(
+        _EXTRACT_SQL, blocks=blocks, watchlist=watchlist
     )
-
-    tx = (
-        blocks.select(
-            F.to_timestamp(F.from_unixtime(F.col("blockTime"))).alias("ts"),
-            F.explode("transactions").alias("tx"),
-        )
-        # One concatenated key sequence with continuous indexing — exactly the
-        # reference's accountKeys‖readonly‖writable traversal order is
-        # accountKeys‖writable‖readonly in v1 and accountKeys‖readonly‖writable
-        # in v2; we follow stage2_processing.cpp:366-389 (keys, readonly,
-        # writable via loadedAddresses order).
-        .select(
-            "ts",
-            F.col("tx.transaction.signatures")[0].alias("signature"),
-            F.concat(
-                F.coalesce(F.col("tx.transaction.message.accountKeys"), F.array()),
-                F.coalesce(F.col("tx.meta.loadedAddresses.readonly"), F.array()),
-                F.coalesce(F.col("tx.meta.loadedAddresses.writable"), F.array()),
-            ).alias("all_keys"),
-            F.col("tx.meta.preTokenBalances").alias("pre"),
-            F.col("tx.meta.postTokenBalances").alias("post"),
-        )
-    )
-
-    # J1: hot-transaction semi-join — keep the tx iff any key is watchlisted
-    # (RECEIVER/stage2_processing.cpp:358-364). Broadcast + arrays_overlap:
-    # no shuffle, evaluated before any balance parsing.
-    if prefilter:
-        tx = tx.crossJoin(watch_arr).where(
-            F.arrays_overlap(F.col("all_keys"), F.col("watch"))
-        )
-    else:
-        tx = tx.crossJoin(watch_arr)
-
-    # Explode pre and post balance arrays with a phase tag (the two passes of
-    # stage2_processing.cpp:391-403) — fused into ONE generator: tag each
-    # array element with its phase, concatenate, explode once. The earlier
-    # union-of-two-explodes planned the whole scan+parse+semi-join subtree
-    # TWICE (Spark plans each union branch independently), doubling the input
-    # read — row set is identical (order differs; the groupBy below is
-    # order-insensitive).
-    def _tagged(col: str, tag: str):
-        return F.transform(
-            F.coalesce(F.col(col), F.array()),
-            lambda b: F.struct(F.lit(tag).alias("phase"), b.alias("b")),
-        )
-
-    entries = (
-        tx.select(
-            "ts",
-            "signature",
-            "all_keys",
-            "watch",
-            F.explode(
-                F.concat(_tagged("pre", "pre"), _tagged("post", "post"))
-            ).alias("e"),
-        )
-        .where(F.col("e.b").isNotNull())
-        .select(
-            "ts",
-            "signature",
-            "all_keys",
-            "watch",
-            F.col("e.phase").alias("phase"),
-            F.col("e.b").alias("b"),
-        )
-    )
-
-    # J2: owner replacement — if the address at this entry's accountIndex
-    # (within the concatenated sequence) is watchlisted, it is the pool vault
-    # and REPLACES the owner (stage2_processing.cpp:160-167 precedence).
-    # try_element_at: ANSI mode (Spark 4 default) makes element_at THROW on
-    # an out-of-range index; a malformed tx must yield null → owner kept.
-    addr_at = F.try_element_at(F.col("all_keys"), F.col("b.accountIndex") + F.lit(1))
-    entries = entries.select(
-        "ts",
-        "signature",
-        "phase",
-        F.when(F.array_contains(F.col("watch"), addr_at), addr_at)
-        .otherwise(F.col("b.owner"))
-        .alias("wallet"),
-        F.col("b.mint").alias("mint"),
-        F.col("b.uiTokenAmount.uiAmountString").alias("amount"),
-    )
-
-    # A1: per-(tx, wallet, mint) pre/post merge; emit iff either side present
-    # (stage2_processing.cpp:399-401 — explode_outer already dropped txs with
-    # no entries, and a row exists only when pre or post existed).
-    out = (
-        entries.groupBy("signature", "wallet", "mint")
-        .agg(
-            F.max(F.when(F.col("phase") == "pre", F.col("amount"))).alias("pre_balance"),
-            F.max(F.when(F.col("phase") == "post", F.col("amount"))).alias("post_balance"),
-            F.max("ts").alias("ts"),
-        )
-        .select("wallet", "signature", "mint", "pre_balance", "post_balance", "ts")
-    )
-    return out

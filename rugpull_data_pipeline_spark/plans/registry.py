@@ -17,6 +17,10 @@ becomes a supported pattern (round-12 ADVICE).
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -117,100 +121,49 @@ def get(name: str) -> QuerySpec:
     return _REGISTRY[name]
 
 
-# Queries deliberately RE-verified this round despite an existing green
-# driver row — the oldest-first re-proof cadence (staleness order computed
-# by tools/rotation_plan.py from the recorded CORRECTNESS artifacts). The
-# rotation test treats window slots as legal iff they are either
-# never-driver-green or named here, so a freshly graded CORRECTNESS file
-# can never redden the suite; the 25-entry cap
-# (tests/test_correctness_oracle.py) keeps the re-proof fraction bounded,
-# which is why the registry again grew by 25 genuinely new queries this
-# round (the standing window arithmetic: backlog 0 + 50 slots +
-# REPROOF <= 25).
-REPROOF: tuple[str, ...] = (
-    # Round-13 re-proof slots. Priority 1 (r12 VERDICT "Next round" item
-    # 2a): the 16 queries whose SEMANTICS PATH was touched by the r12/r13
-    # optimization passes — none of them was in the r12 driver window, so
-    # their oracle status rests on builder-side pytest only. Front-loaded
-    # so the driver independently re-verifies every changed path.
-    "solana_balance_extract",  # r12 fused explode + pruned JSON scan
-    "solana_balance_extract_xl",  # same shared operator
-    "solana_rugpull_score",  # same shared operator
-    "solana_enriched_report",  # same shared operator
-    "solana_hot_tx_count",  # same shared operator
-    "solana_pool_detection",  # same shared operator
-    "solana_balance_stream",  # streaming consumer of the shared operator
-    "solana_balance_from_datasource",  # datasource consumer of same
-    "graph_hits_power3",  # r12 in-plan norm -> r13 broadcast 1-row aggs
-    "sample_kcenter_coreset",  # r12 fused argmax job; r13 lazy checkpoint
-    "sim_lsh_hyperplane_ann",  # r12 literal signs -> r13 in-plan sign table
-    "audit_ann_recall",  # same bucket operator (r12 driver regression)
-    "audit_multiprobe_recall",  # same bucket operator
-    "dedup_minhash_lsh",  # r12 checkpointed shingle/band pipeline
-    "dedup_minhash_incremental",  # r12 materialized bands_capped
-    "q01_pricing_summary",  # r13 decimal(27,6) aggregate narrowing
-    # Priority 2: the oldest-first staleness cadence continues — the next
-    # 9 of the remaining r4 tier (tools/rotation_plan.py order); the other
-    # 16 r4 rows carry to a future rotation.
-    "q15_top_supplier",  # last green r4
-    "sample_reservoir_per_key",  # last green r4
-    "scalar_higher_order_funcs",  # last green r4
-    "scalar_null_safe_ops",  # last green r4
-    "setop_except_all",  # last green r4
-    "setop_intersect_all",  # last green r4
-    "sim_pq_encode",  # last green r4
-    "stream_backpressure_paced",  # last green r4
-    "stream_checkpoint_restart",  # last green r4
-)
+# The grading driver verifies the FIRST 50 queries in `queries()` order
+# against their DuckDB oracles each round and records the grade in a
+# CORRECTNESS_r<round>.json artifact at the repository root. The order is
+# derived from that record, so each grade rotates the window by itself:
+# queries never graded green come first, then the green ones, oldest last
+# green round first. Registration order breaks ties, and is the whole order
+# when no artifact is present (e.g. an installed package).
+_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# The grading driver verifies the FIRST 50 queries in `queries()` iteration
-# order against their DuckDB oracles each round. Cumulative record through
-# round 12: 425/425 distinct queries verified green, 0 standing red
-# (CORRECTNESS_r02..r12). The round-13 window = the 25 RE-PROOFS above
-# (16 optimization-touched + 9 stalest r4) + the 25 round-12 screening
-# debuts (green only at the latest grade, so they legally re-occupy
-# window slots without a REPROOF entry) = exactly 50. Everything NOT
-# listed keeps registration order behind these, so already-green queries
-# still run when the driver checks more than 50.
-DRIVER_PRIORITY: tuple[str, ...] = REPROOF + (
-    # ---- round-12 debuts: the screening/inference tier
-    # (plans/screening_ops.py) — green only at the latest grade ----
-    "eval_kruskal_wallis",
-    "eval_jonckheere_terpstra",
-    "eval_friedman_ranks",
-    "eval_chatterjee_xi",
-    "eval_goodman_kruskal_gamma",
-    "eval_theil_u_forecast",
-    "eval_power_twoprop",
-    "audit_srm_assignment",
-    "events_logrank_test",
-    "events_nelson_aalen",
-    "events_interarrival_expgof",
-    "window_interarrival_gap_test",
-    "profile_round_number_bias",
-    "profile_split_transactions",
-    "profile_amount_reuse",
-    "profile_card_testing_runs",
-    "profile_sequence_integrity",
-    "profile_velocity_screen",
-    "window_page_hinkley",
-    "window_amihud_illiquidity",
-    "window_stochastic_k",
-    "graph_katz_power3",
-    "agg_atkinson_index",
-    "text_code_prose_detect",
-    "mlprep_chi2_feature_select",
-)
+
+def load_grades() -> dict[str, dict]:
+    """The recorded driver grades: artifact file name -> its JSON."""
+    files = {}
+    for path in sorted(glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json"))):
+        with open(path) as fh:
+            files[os.path.basename(path)] = json.load(fh)
+    return files
+
+
+def last_green_round(files: dict[str, dict]) -> dict[str, int]:
+    """Query name -> the latest round whose grade matched its oracle."""
+    latest: dict[str, int] = {}
+    for fname, data in files.items():
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", fname)
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        for name, rec in data.get("queries", data).items():
+            if isinstance(rec, dict) and rec.get("hash_match") and not rec.get("err"):
+                latest[name] = max(latest.get(name, 0), rnd)
+    return latest
+
+
+def driver_order(names: list[str], files: dict[str, dict] | None = None) -> list[str]:
+    """``names`` (registration order) in driver-window order: never green
+    first, then oldest last green. ``files`` overrides the on-disk grades."""
+    latest = last_green_round(load_grades() if files is None else files)
+    return sorted(names, key=lambda n: latest.get(n, 0))  # stable sort
 
 
 def _ordered() -> list[tuple[str, QuerySpec]]:
     _load_plan_modules()
-    prio = [
-        (n, _REGISTRY[n]) for n in DRIVER_PRIORITY if n in _REGISTRY
-    ]
-    seen = set(DRIVER_PRIORITY)
-    rest = [(n, s) for n, s in _REGISTRY.items() if n not in seen]
-    return prio + rest
+    return [(n, _REGISTRY[n]) for n in driver_order(list(_REGISTRY))]
 
 
 def all_queries() -> dict[str, BuilderFn]:

@@ -1837,16 +1837,14 @@ from .registry import _REGISTRY  # noqa: E402
 def _tx_stream(spark: SparkSession, src_glob: str) -> DataFrame:
     """Streaming per-transaction rows from a block-JSON landing zone: the
     in-stream twin of domain._read_blocks + the P3/P4/P5 projections —
-    schema-pruned from_json, transaction explode, continuous key indexing
-    (accountKeys ‖ readonly ‖ writable), log join. Shared by the composed
-    §3.2 / fan-out / feedback jobs."""
-    from ..operators.balance import parse_blocks
+    the JSON file source parsing each block once at the scan, transaction
+    explode, continuous key indexing (accountKeys ‖ readonly ‖ writable),
+    log join. Shared by the composed §3.2 / fan-out / feedback jobs."""
+    from ..operators.balance import read_block_stream
 
-    raw = (
-        spark.readStream.option("maxFilesPerTrigger", 1)
-        .text(src_glob)
+    blocks = read_block_stream(
+        spark, src_glob, with_logs=True, max_files_per_trigger=1
     )
-    blocks = parse_blocks(raw, "value")
     return blocks.select(
         F.col("blockTime").alias("block_time"),
         F.explode("transactions").alias("t"),

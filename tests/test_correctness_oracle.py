@@ -37,136 +37,70 @@ def test_registry_coverage(spark):
         assert "nosql" in registry.get(name).tags, f"{name} lacks an oracle"
 
 
-def _green_rounds(files: dict[str, dict] | None = None) -> dict[str, set[int]]:
-    """Map query name -> set of driver rounds with a hash-green row, read
-    from the recorded CORRECTNESS_r*.json artifacts (the authoritative
-    cumulative record — comments have drifted before). ``files`` overrides
-    the on-disk artifacts for simulation."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-    import re as _re
-
-    if files is None:
-        files = {}
-        base = _os.path.join(_os.path.dirname(__file__), "..")
-        for path in sorted(_glob.glob(_os.path.join(base, "CORRECTNESS_r*.json"))):
-            with open(path) as fh:
-                files[_os.path.basename(path)] = _json.load(fh)
-    greens: dict[str, set[int]] = {}
-    for fname, rows in files.items():
-        m = _re.search(r"CORRECTNESS_r(\d+)\.json$", fname)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        for name, rec in rows.items():
-            if isinstance(rec, dict) and rec.get("hash_match"):
-                greens.setdefault(name, set()).add(rnd)
-    return greens
+_WINDOW = 50
+_GREEN_ROW = {"rows_match": True, "schema_match": True, "hash_match": True,
+              "spark_rows": 1, "oracle_rows": 1, "err": None}
 
 
-def _wasted_window_slots(
-    window: set[str], greens: dict[str, set[int]], reproof: set[str]
-) -> set[str]:
-    """A window slot is WASTED iff it was already driver-green in a round
-    STRICTLY BEFORE the latest recorded round and is not on the committed
-    REPROOF list. This encodes "no slot is wasted", not "the window was
-    never graded": when the driver grades the current window, the newly
-    green slots have first_green == latest round, so they stay legal —
-    the fresh artifact can no longer redden the suite (the old
-    `window ∩ green == ∅` shape went red in rounds 5 AND 6 the moment the
-    driver wrote its file; see VERDICT r6 §What's wrong). A window left
-    unrotated for two consecutive grades DOES go red: after the second
-    grade its slots are green before the latest round."""
-    latest = max((max(r) for r in greens.values()), default=0)
-    return {
-        n for n in window
-        if n not in reproof and any(r < latest for r in greens.get(n, ()))
-    }
+def _wasted_window_slots(order: list[str], latest: dict[str, int]) -> set[str]:
+    """A window slot is WASTED iff its query was graded green more recently
+    than some query left outside the window (never green counts as round
+    0, the stalest): the driver would re-check a fresher proof while an
+    older one, or none at all, waits."""
+    outside = [latest.get(n, 0) for n in order[_WINDOW:]]
+    if not outside:
+        return set()
+    return {n for n in order[:_WINDOW] if latest.get(n, 0) > min(outside)}
 
 
 def test_driver_window_rotation():
-    """The first-50 driver window must spend every slot productively:
-    each slot is either backlog (never green before the latest grade) or
-    a deliberate, committed re-proof (registry.REPROOF, oldest-first
-    staleness cadence)."""
+    """The live first-50 driver window spends every slot productively, and
+    stays so once the driver grades it: a fresh all-green artifact for the
+    current window rotates the window onto 50 other queries instead of
+    reddening the suite."""
     names = list(registry.all_queries())
-    unknown = [n for n in registry.DRIVER_PRIORITY if n not in names]
-    assert not unknown, f"priority list names unknown queries: {unknown}"
-    window = set(names[:50])
-    greens = _green_rounds()
-    reproof = set(registry.REPROOF)
-    # Every REPROOF name must exist and have a prior green row — a never
-    # green REPROOF entry is a mislabeled backlog slot (or a typo).
-    assert reproof <= set(names), f"REPROOF names unknown: {sorted(reproof - set(names))}"
-    mislabeled = {n for n in reproof if n not in greens}
-    assert not mislabeled, f"REPROOF names never driver-green: {sorted(mislabeled)}"
-    # Keep the re-proof fraction bounded: the window's job is coverage
-    # first, staleness second.
-    assert len(reproof) <= 25, f"REPROOF list too large: {len(reproof)}"
-    wasted = _wasted_window_slots(window, greens, reproof)
-    assert not wasted, (
-        "window slots already green before the latest grade and not on the "
-        f"committed REPROOF list: {sorted(wasted)} — rotate DRIVER_PRIORITY "
-        "or extend registry.REPROOF"
-    )
-    # Backlog that doesn't fit carries to later rotations; round 7 absorbs
-    # the final 38, so the carry should be empty and must never exceed one
-    # extra window.
-    never = set(names) - set(greens)
-    carried = never - window
-    assert len(carried) <= 50, f"carry-over too large: {sorted(carried)}"
+    files = registry.load_grades()
+    assert not _wasted_window_slots(names, registry.last_green_round(files))
+
+    latest_round = max(registry.last_green_round(files).values(), default=0)
+    graded = dict(files)
+    graded[f"CORRECTNESS_r{latest_round + 1:02d}.json"] = {
+        n: dict(_GREEN_ROW) for n in names[:_WINDOW]
+    }
+    rotated = registry.driver_order(names, graded)
+    assert sorted(rotated) == sorted(names)
+    assert not _wasted_window_slots(rotated, registry.last_green_round(graded))
+    assert not set(rotated[:_WINDOW]) & set(names[:_WINDOW])
 
 
 def test_driver_window_rotation_survives_fresh_grade():
-    """Simulate the exact event that reddened rounds 5 and 6 (and, via this
-    very test, round 7): the driver grades the current window and drops a
-    fresh all-green CORRECTNESS file. The wasted-slot predicate must stay
-    empty both before and after that artifact lands — and must fire if the
-    same window were graded a SECOND time without rotation.
+    """The window order as a pure function of the grades, on synthetic
+    fixtures with their own round numbering: registration order without
+    artifacts, never-green before green, oldest green first, and a window
+    that moves on after every grade (two grades in a row included)."""
+    names = [f"q{i:03d}" for i in range(120)]
+    assert registry.driver_order(names, {}) == names
 
-    The simulation runs on PURELY SYNTHETIC fixtures with its own round
-    numbering — it never reads the live CORRECTNESS_r*.json artifacts.
-    Rounds 5–7 each reddened because some variant of this scenario derived
-    its "pre-grade" baseline from the on-disk files, so the moment the real
-    driver artifact landed the simulated next grade silently became a
-    second grade of an unrotated window (VERDICT r7 §What's wrong #1). The
-    predicate's behavior is a pure function of (window, greens, reproof);
-    synthetic fixtures exercise it completely, and the LIVE on-disk state
-    is asserted separately by test_driver_window_rotation, which by design
-    stays green across exactly one grade of the committed window."""
-    window = {f"q{i:02d}" for i in range(50)}
-    reproof = {f"q{i:02d}" for i in range(10)}  # deliberate re-proof slots
-    green_row = {"rows_match": True, "schema_match": True, "hash_match": True,
-                 "spark_rows": 1, "oracle_rows": 1, "err": None}
-    # Round 1 graded the re-proof slots (that is what makes them re-proofs:
-    # a prior green row); the other 40 slots are backlog, never graded.
-    files = {
-        "CORRECTNESS_r01.json": {n: dict(green_row) for n in reproof},
-    }
-
-    # Pre-grade: legal (backlog never green; re-proofs green only at the
-    # latest recorded round).
-    assert not _wasted_window_slots(window, _green_rounds(files), reproof)
-    # The driver grades the whole window (CORRECTNESS_r02 lands, window
-    # untouched): still legal — every slot is green AT the latest round.
-    files_after = dict(files)
-    files_after["CORRECTNESS_r02.json"] = {n: dict(green_row) for n in window}
-    assert not _wasted_window_slots(window, _green_rounds(files_after), reproof), (
-        "rotation gate would redden the moment the driver grades this window"
-    )
-    # Two grades without rotation: the gate MUST fire (backlog slots are
-    # now green before the latest round and are not re-proofs).
-    files_twice = dict(files_after)
-    files_twice["CORRECTNESS_r03.json"] = {n: dict(green_row) for n in window}
-    stale = _wasted_window_slots(window, _green_rounds(files_twice), reproof)
-    assert stale == window - reproof, (
-        "gate failed to flag an unrotated window after a second grade"
-    )
-    # A rotated round-3 window (fresh backlog + the same re-proof slots)
-    # must be legal again even though the old window went stale.
-    window3 = {f"r{i:02d}" for i in range(40)} | reproof
-    assert not _wasted_window_slots(window3, _green_rounds(files_twice), reproof)
+    # Round 1 graded q000..q009 green and q010 red: the red one is still
+    # never-green, so it keeps its registration place in the backlog.
+    files = {"CORRECTNESS_r01.json": {n: dict(_GREEN_ROW) for n in names[:10]}}
+    files["CORRECTNESS_r01.json"]["q010"] = dict(_GREEN_ROW, hash_match=False)
+    order = registry.driver_order(names, files)
+    assert order == names[10:] + names[:10]
+    seen: set[str] = set()
+    for rnd in (2, 3, 4):
+        latest = registry.last_green_round(files)
+        assert not _wasted_window_slots(order, latest)
+        window = order[:_WINDOW]
+        assert not seen & set(window) or len(seen) + _WINDOW > len(names)
+        seen |= set(window)
+        files[f"CORRECTNESS_r{rnd:02d}.json"] = {n: dict(_GREEN_ROW) for n in window}
+        order = registry.driver_order(names, files)
+    # After three grades every query is green; the window is the oldest.
+    latest = registry.last_green_round(files)
+    assert set(latest) == set(names)
+    assert order[:_WINDOW] == sorted(names, key=lambda n: latest[n])[:_WINDOW]
+    assert not _wasted_window_slots(order, latest)
 
 
 def test_every_oracle_runs_standalone_in_duckdb(sf_dir):

@@ -5,6 +5,7 @@ triggers, no live RPC/Redis."""
 
 from __future__ import annotations
 
+import re
 import time
 
 import pytest
@@ -49,6 +50,55 @@ def test_stream_balance_matches_batch(spark, tmp_path):
     ).collect()
     assert len(collected) == len(batch) > 0
     assert set(map(tuple, collected)) == set(map(tuple, batch))
+
+
+def test_stream_micro_batch_parses_once_and_filters_before_explode(spark, tmp_path):
+    """A micro-batch of the balance stream parses each block once, at the
+    JSON file source's scan (no from_json re-parse per consumer
+    expression), and its broadcast watchlist filter runs below the pre/post
+    explode, so only watchlisted transactions pay for the balances."""
+    blocks_dir = str(tmp_path / "blocks")
+    watch_dir = str(tmp_path / "watch")
+    write_blocks_json(blocks_dir, n_blocks=2, seed=7, files=2)
+    spark.createDataFrame(
+        [(a,) for a in hot_addresses()], "address string"
+    ).write.parquet(watch_dir)
+
+    plans = []
+
+    def sink(df, epoch_id):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+
+    q = stream_balance_pipeline(spark, blocks_dir, watch_dir, sink)
+    q.processAllAvailable()
+    # foreachBatch hands the sink the micro-batch as an RDD-backed plan;
+    # the micro-batch's own plan holds the source scan.
+    source = q._jsq.streamingQuery().lastExecution().optimizedPlan().toString()
+    q.stop()
+
+    assert len(plans) == 1
+    scans = re.findall(r"Relation \[[^\]]*\] (\w+)", source)
+    assert scans == ["json"], source
+    for plan in (source, plans[0]):
+        assert not re.search(r"from_json|JsonToStructs", plan), plan
+    lines = plans[0].splitlines()
+    leaf = next(ln for ln in lines if "LogicalRDD" in ln)
+    assert "blockTime" in leaf and "transactions" in leaf, plans[0]
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    explode = next(
+        i for i, ln in enumerate(lines) if "Generate explode(concat(transform" in ln
+    )
+    join = next(
+        i for i, ln in enumerate(lines)
+        if "Join Cross" in ln and "strategy=broadcast" in ln
+    )
+    # The join is in the Generate's subtree: printed after it, nested
+    # deeper, with nothing at the Generate's depth or shallower in between.
+    assert join > explode and depth(lines[join]) > depth(lines[explode])
+    assert all(depth(ln) > depth(lines[explode]) for ln in lines[explode + 1 : join])
 
 
 def test_st5_dimension_refresh_next_batch(spark, tmp_path):

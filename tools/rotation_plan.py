@@ -1,106 +1,54 @@
-"""Rotation planner — computes the next driver-window candidates.
+"""Rotation report — the driver window that the recorded grades imply.
 
 The grading driver verifies the FIRST 50 entries of ``queries()`` each
-round; ``DRIVER_PRIORITY`` (plans/registry.py) is rotated every round so
-the window lands on (a) queries never driver-checked, then (b) the most
-stale previously-green queries. Until round 6 this arithmetic was done by
-hand against the CORRECTNESS_r*.json artifacts; this script makes it
-reproducible and keeps the carry-over cap visible:
+round. ``registry.driver_order`` derives that order from the
+CORRECTNESS_r*.json artifacts: queries never graded green first, then the
+green ones, oldest last green round first. This script prints the backlog,
+the staleness histogram and the next window:
 
-    python tools/rotation_plan.py            # backlog + staleness report
-    python tools/rotation_plan.py --emit 50  # print a ready-to-paste window
+    python tools/rotation_plan.py
 
 The gate lives in tests/test_correctness_oracle.py
-(test_driver_window_rotation): every window slot must be backlog
-(never driver-green before the latest grade) or on the committed
-registry.REPROOF list (<= 25 names); never-driver-checked carry-over
-must stay <= 50 (one extra window).
+(test_driver_window_rotation): no window slot may hold a query graded
+green more recently than one left outside the window.
 """
 
 from __future__ import annotations
 
 import argparse
-import glob
-import json
 import os
-import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def verified_by_round(repo: str = REPO) -> dict[str, int]:
-    """Map query name -> latest round with a green driver row."""
-    latest: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        data = json.load(open(path))
-        rows = data.get("queries", data)
-        for name, rec in rows.items():
-            if not isinstance(rec, dict):
-                continue
-            ok = all(rec.get(k) in (True, None) for k in
-                     ("rows_match", "schema_match", "hash_match")) and not rec.get("err")
-            if ok:
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
 def main() -> int:
-    ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("--emit", type=int, default=0,
-                    help="print a ready-to-paste DRIVER_PRIORITY of this size")
-    args = ap.parse_args()
+    argparse.ArgumentParser(description=__doc__).parse_args()
 
     from rugpull_data_pipeline_spark.plans import registry
 
     names = list(registry.all_queries())
-    latest = verified_by_round()
+    latest = registry.last_green_round(registry.load_grades())
     never = [n for n in names if n not in latest]
-    stale = sorted((n for n in names if n in latest), key=lambda n: (latest[n], n))
 
     window = 50
-    carry = max(0, len(never) - window)
     print(f"registry: {len(names)} queries")
     print(f"driver-verified (any round): {len(latest)}")
     print(f"never driver-checked: {len(never)} "
-          f"(carry after a green {window}-window: {carry}; cap 90)")
+          f"(carry after a green {window}-window: {max(0, len(never) - window)})")
     by_round: dict[int, int] = {}
     for n in latest.values():
         by_round[n] = by_round.get(n, 0) + 1
     print("verified-by-round histogram:",
           {f"r{r}": c for r, c in sorted(by_round.items())})
-    if stale:
-        oldest = [n for n in stale if latest[n] == latest[stale[0]]]
-        print(f"stalest tier: r{latest[stale[0]]} ({len(oldest)} queries)")
 
-    plan = never[:window] + stale[: max(0, window - len(never))]
-    print(f"\nnext-window plan ({len(plan)}): "
-          f"{len(never[:window])} backlog + {max(0, window - len(never))} stalest re-proof")
-    if args.emit:
-        plan = (never + stale)[: args.emit]
-        reproof = [n for n in plan if n in latest]
-        print("\n# Paste BOTH blocks: the re-proof slots must be declared in")
-        print("# registry.REPROOF or the rotation gate flags them as wasted.")
-        print("REPROOF: tuple[str, ...] = (")
-        for n in reproof:
-            print(f'    "{n}",  # last green r{latest[n]}')
-        print(")")
-        print("\nDRIVER_PRIORITY: tuple[str, ...] = (")
-        for n in plan:
-            if n not in latest:
-                print(f'    "{n}",')
-        print(") + REPROOF")
-    else:
-        for n in plan[:10]:
-            tag = "backlog" if n in set(never) else f"re-proof r{latest[n]}"
-            print(f"  {n} ({tag})")
-        if len(plan) > 10:
-            print(f"  ... {len(plan) - 10} more (--emit {window} to print all)")
+    plan = names[:window]
+    backlog = sum(1 for n in plan if n not in latest)
+    print(f"\nnext window ({len(plan)}): {backlog} backlog + "
+          f"{len(plan) - backlog} stalest re-proof")
+    for n in plan:
+        print(f"  {n} ({f're-proof r{latest[n]}' if n in latest else 'backlog'})")
     return 0
 
 

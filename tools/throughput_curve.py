@@ -2,9 +2,9 @@
 block corpus of arbitrary size, timed best-of-N on local[32].
 
 Commits the method used for the SCALE.md curve (39 MB → 115 MB → 449 MB →
-900 MB → 1.8 GB): schema-pruned from_json parse → broadcast watchlist
-semi-join → double explode → (owner,mint) pre/post merge, counted with a
-noop sink (count()), never collected. The reference anchor is its
+900 MB → 1.8 GB): JSON-source scan at the pruned schema → broadcast
+watchlist semi-join → fused pre/post explode → (owner,mint) pre/post merge,
+counted with a noop sink (count()), never collected. The reference anchor is its
 ≈25 MB/s sustained parse+filter cadence (2.5 blocks/s × ≤10 MB,
 SERVER/subscriber.py:23,111-114).
 
@@ -35,7 +35,7 @@ def main() -> int:
 
     from rugpull_data_pipeline_spark.operators.balance import (
         extract_balance_changes,
-        parse_blocks,
+        read_blocks,
     )
     from rugpull_data_pipeline_spark.session import get_spark
     from rugpull_data_pipeline_spark.sources.solana import (
@@ -61,9 +61,7 @@ def main() -> int:
     rows = None
     for i in range(args.runs):
         t0 = time.time()
-        out = extract_balance_changes(
-            parse_blocks(spark.read.text(f"{path}/blocks_*.json"), "value"), watch
-        )
+        out = extract_balance_changes(read_blocks(spark, f"{path}/blocks_*.json"), watch)
         rows = out.count()
         times.append(time.time() - t0)
         print(f"run {i + 1}: {times[-1]:.2f}s ({rows} rows)", flush=True)
