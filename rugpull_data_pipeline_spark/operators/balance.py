@@ -83,10 +83,6 @@ def _drop_tx_meta_field(name: str) -> T.StructType:
 _BALANCE_BLOCK = _drop_tx_meta_field("logMessages")
 
 
-def _scan_schema(with_logs: bool) -> T.StructType:
-    return SOLANA_BLOCK if with_logs else _BALANCE_BLOCK
-
-
 def read_blocks(
     spark: SparkSession, path_glob: str, with_logs: bool = False
 ) -> DataFrame:
@@ -99,7 +95,8 @@ def read_blocks(
     collapsed projection each carried their own ``from_json``, so the chain
     paid 2-4 full parses per row. ``with_logs=True`` keeps logMessages for
     the instruction-log consumers (P8)."""
-    return spark.read.schema(_scan_schema(with_logs)).json(path_glob).select("result.*")
+    schema = SOLANA_BLOCK if with_logs else _BALANCE_BLOCK
+    return spark.read.schema(schema).json(path_glob).select("result.*")
 
 
 def read_block_stream(
@@ -111,7 +108,7 @@ def read_block_stream(
     """The streaming twin of ``read_blocks``: the JSON file source parses
     each landed line once at the scan, at the same pruned schema, so every
     micro-batch arrives as typed block rows."""
-    reader = spark.readStream.schema(_scan_schema(with_logs))
+    reader = spark.readStream.schema(SOLANA_BLOCK if with_logs else _BALANCE_BLOCK)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.json(path_glob).select("result.*")

@@ -1,7 +1,7 @@
 """Round-9 analytics, privacy, and graph operators — the debut tier.
 
-The standing rotation obligation (registry.py: backlog 0 + 50 window slots
-+ REPROOF <= 25 means ~25 genuinely new queries per round) paired with the
+The standing rotation obligation (~25 genuinely new queries per round for
+the driver window, see registry.driver_order) paired with the
 round-8 verdict's content prescription: privacy-trio completion
 (t-closeness + a k-anonymity suppression/generalization plan + DP
 sensitivity budgeting), graph completion (bounded weighted shortest path,

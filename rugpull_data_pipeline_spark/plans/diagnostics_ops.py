@@ -2,8 +2,8 @@
 evaluation, recommender baselines, corpus dispersion, robust profiling,
 and layout simulation.
 
-The standing rotation obligation (registry.py: backlog 0 + 50 window slots
-+ REPROOF <= 25 means ~25 genuinely new queries per round) paired with the
+The standing rotation obligation (~25 genuinely new queries per round for
+the driver window, see registry.driver_order) paired with the
 round-9 verdict's content prescription: AR(1)/autocorrelation-grid fit and
 CUSUM changepoint (batch twins of the streaming kernels in
 ``streaming/pipelines.py`` — stream_cusum_alert / stream_kalman_filter),

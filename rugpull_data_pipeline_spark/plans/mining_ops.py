@@ -1,8 +1,7 @@
 """Round-8 pattern-mining, privacy, and advanced-analytics operators.
 
-The registry unfreeze mandated by the round-7 verdict (window arithmetic:
-backlog 0 + 50 slots + REPROOF ≤ 25 needs ~25 genuinely new queries per
-round). These close operator families a training-data / analytics engine
+The registry unfreeze mandated by the round-7 verdict (~25 genuinely new
+queries per round for the driver window, see registry.driver_order). These close operator families a training-data / analytics engine
 still needs around the existing 287: association rules and lift/gains
 evaluation, weight-of-evidence feature scoring, isotonic (PAVA)
 calibration, skyline (Pareto-frontier) selection, gaps-and-islands run

@@ -37,7 +37,7 @@ def test_registry_coverage(spark):
         assert "nosql" in registry.get(name).tags, f"{name} lacks an oracle"
 
 
-_WINDOW = 50
+_WINDOW = registry.DRIVER_WINDOW
 _GREEN_ROW = {"rows_match": True, "schema_match": True, "hash_match": True,
               "spark_rows": 1, "oracle_rows": 1, "err": None}
 
@@ -60,9 +60,15 @@ def test_driver_window_rotation():
     reddening the suite."""
     names = list(registry.all_queries())
     files = registry.load_grades()
-    assert not _wasted_window_slots(names, registry.last_green_round(files))
+    latest = registry.last_green_round(files)
+    assert not _wasted_window_slots(names, latest)
+    # Never-green queries that do not fit in the window wait for a later
+    # one; that backlog must never exceed one extra window, which bounds
+    # how fast queries may be registered ahead of their first grade.
+    carried = set(names) - set(latest) - set(names[:_WINDOW])
+    assert len(carried) <= _WINDOW, f"carry-over too large: {sorted(carried)}"
 
-    latest_round = max(registry.last_green_round(files).values(), default=0)
+    latest_round = max(latest.values(), default=0)
     graded = dict(files)
     graded[f"CORRECTNESS_r{latest_round + 1:02d}.json"] = {
         n: dict(_GREEN_ROW) for n in names[:_WINDOW]

@@ -7,6 +7,9 @@ ad-hoc inline snippet recreated every round; this script is that snippet,
 made durable. Output is byte-identical to the committed format: header
 with the query count, then one table row per query in `_ordered()` order
 (the order the grading driver sees), doc truncated to 150 chars.
+`_ordered()` derives that order from the CORRECTNESS_r*.json grades, so
+the row order is the one the grades implied when the file was generated;
+each new grade makes `--check` report it stale until it is regenerated.
 """
 
 from __future__ import annotations
@@ -27,7 +30,8 @@ def render() -> str:
         f"{len(rows)} queries. The grading driver verifies the FIRST 50 against "
         "their DuckDB oracles each round; `oracle` = `sql` means a full "
         "hash-compare twin exists, `rows-only` means the weaker row-count check "
-        "(genuinely non-SQL-expressible operators only).",
+        "(genuinely non-SQL-expressible operators only). Row order follows "
+        "the CORRECTNESS_r*.json grades present when this file was generated.",
         "",
         "| # | query | tags | oracle | doc |",
         "|---|---|---|---|---|",

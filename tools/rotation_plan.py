@@ -1,6 +1,6 @@
 """Rotation report — the driver window that the recorded grades imply.
 
-The grading driver verifies the FIRST 50 entries of ``queries()`` each
+The grading driver verifies the first ``registry.DRIVER_WINDOW`` entries of ``queries()`` each
 round. ``registry.driver_order`` derives that order from the
 CORRECTNESS_r*.json artifacts: queries never graded green first, then the
 green ones, oldest last green round first. This script prints the backlog,
@@ -15,7 +15,6 @@ green more recently than one left outside the window.
 
 from __future__ import annotations
 
-import argparse
 import os
 import sys
 
@@ -24,15 +23,13 @@ sys.path.insert(0, REPO)
 
 
 def main() -> int:
-    argparse.ArgumentParser(description=__doc__).parse_args()
-
     from rugpull_data_pipeline_spark.plans import registry
 
     names = list(registry.all_queries())
     latest = registry.last_green_round(registry.load_grades())
     never = [n for n in names if n not in latest]
 
-    window = 50
+    window = registry.DRIVER_WINDOW
     print(f"registry: {len(names)} queries")
     print(f"driver-verified (any round): {len(latest)}")
     print(f"never driver-checked: {len(never)} "

@@ -7,8 +7,8 @@ can be judged on the number they actually move.
 
 Usage: python tools/time_queries.py [sf_dir] name1 name2 ...
        python tools/time_queries.py --runs 3 /root/testdata/sf0.1 graph_sssp_bellman3
-With no names: times every round-9 debut (registry.DRIVER_PRIORITY before
-the REPROOF suffix).
+With no names: times the current driver window, the first
+registry.DRIVER_WINDOW queries in registry order.
 """
 
 from __future__ import annotations
@@ -36,9 +36,7 @@ def main() -> int:
     qs = registry.all_queries()
     names = args.names
     if not names:
-        names = [
-            n for n in registry.DRIVER_PRIORITY if n not in set(registry.REPROOF)
-        ]
+        names = list(qs)[: registry.DRIVER_WINDOW]
     # Warm session one-offs (codegen, parquet footers, Arrow worker pool).
     try:
         qs["q01_pricing_summary"](spark, args.sf_dir).write.format("noop").mode(
