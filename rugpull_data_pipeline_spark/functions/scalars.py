@@ -181,6 +181,11 @@ def split_ws(expr: str, d: str = SPARK) -> str:
     return f"string_split({expr}, ' ')"
 
 
+def toks(d: str = SPARK) -> str:
+    """The ``text`` column's single-space tokens."""
+    return split_ws("text", d)
+
+
 def arr_len(expr: str, d: str = SPARK) -> str:
     if d == SPARK:
         return f"size({expr})"

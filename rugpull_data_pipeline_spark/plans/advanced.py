@@ -35,11 +35,7 @@ from pyspark.sql import functions as F
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
-from .registry import register, sql_pair, static_table
-
-
-def _pair(name: str, q, tags: tuple[str, ...] = (), doc: str = "") -> None:
-    sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
+from .registry import pair, register, static_table
 
 
 # ---------------------------------------------------------------------------
@@ -190,7 +186,7 @@ def _theta(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "join_theta_nation_pairs",
     _theta,
     tags=("join",),
@@ -207,7 +203,7 @@ def _right(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "join_right_outer_customers",
     _right,
     tags=("join",),
@@ -227,7 +223,7 @@ def _cross(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "join_cross_region_bands",
     _cross,
     tags=("join",),
@@ -301,7 +297,7 @@ def _grouping_sets(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_grouping_sets",
     _grouping_sets,
     tags=("agg", "sweep:rollup-empty"),
@@ -332,7 +328,7 @@ def _lead_frames(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_lead_range_frame",
     _lead_frames,
     tags=("window", "temporal"),
@@ -352,7 +348,7 @@ def _intersect_all(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "setop_intersect_all",
     _intersect_all,
     tags=("setop",),
@@ -371,7 +367,7 @@ def _except_all(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "setop_except_all",
     _except_all,
     tags=("setop",),
@@ -453,7 +449,7 @@ def _resample_gapfill(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_resample_gapfill",
     _resample_gapfill,
     tags=("window", "temporal"),
@@ -494,7 +490,7 @@ def _higher_order(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "scalar_higher_order_funcs",
     _higher_order,
     tags=("scalar",),
@@ -521,7 +517,7 @@ def _collect_sorted(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_collect_sorted_set",
     _collect_sorted,
     tags=("agg",),
@@ -548,7 +544,7 @@ def _percentiles(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_percentiles_exact",
     _percentiles,
     tags=("agg",),
@@ -571,7 +567,7 @@ def _percent_cume(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_percent_cume",
     _percent_cume,
     tags=("window",),
@@ -597,7 +593,7 @@ def _null_safe(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "scalar_null_safe_ops",
     _null_safe,
     tags=("scalar",),
@@ -620,7 +616,7 @@ def _scalar_subquery(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "subquery_uncorrelated_scalar",
     _scalar_subquery,
     tags=("subquery",),
@@ -667,7 +663,7 @@ def _ohlc(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_ohlc_candles",
     _ohlc,
     tags=("window", "domain"),
@@ -733,7 +729,7 @@ def _cms_heavy_hitters(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_cms_heavy_hitters",
     _cms_heavy_hitters,
     tags=("agg", "sketch"),
@@ -762,7 +758,7 @@ def _q14(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "q14_promo_revenue",
     _q14,
     tags=("relational",),
@@ -827,7 +823,7 @@ def _scd2(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "dim_scd2_price_history",
     _scd2,
     tags=("window", "dimension"),

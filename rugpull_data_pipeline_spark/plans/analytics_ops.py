@@ -54,11 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
 from .mining_ops import _daily_means, _day_idx
-from .registry import register, sql_pair, static_table
-
-
-def _pair(name: str, q, tags: tuple[str, ...] = (), doc: str = "") -> None:
-    sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
+from .registry import pair, register, static_table
 
 
 # Decimal-cast cents quantization (NOT floor(double*100), which lands one
@@ -133,7 +129,7 @@ def _t_closeness(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "quality_t_closeness",
     _t_closeness,
     tags=("quality", "privacy", "audit"),
@@ -176,7 +172,7 @@ def _k_suppression(d: str) -> str:
     return " UNION ALL ".join(parts) + " ORDER BY level"
 
 
-_pair(
+pair(
     "quality_k_suppression_plan",
     _k_suppression,
     tags=("quality", "privacy", "audit"),
@@ -217,7 +213,7 @@ def _dp_sensitivity(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "quality_dp_sensitivity",
     _dp_sensitivity,
     tags=("quality", "privacy", "profiling"),
@@ -634,8 +630,7 @@ def _powerlaw(d: str, pw_src: str | None = None) -> str:
 )
 def graph_degree_powerlaw(spark, sf_dir):
     pw = _pw_df(spark, sf_dir).localCheckpoint()
-    pw.createOrReplaceTempView("plaw_pw_v")
-    return spark.sql(_powerlaw(SPARK, pw_src="SELECT src, dst FROM plaw_pw_v"))
+    return spark.sql(_powerlaw(SPARK, pw_src="SELECT src, dst FROM {pw}"), pw=pw)
 
 
 # ---------------------------------------------------------------------------
@@ -656,7 +651,7 @@ def _kfold(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "mlprep_kfold_assign",
     _kfold,
     tags=("mlprep", "sampling"),
@@ -768,7 +763,7 @@ def _boosted_stumps(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "mlprep_boosted_stumps2",
     _boosted_stumps,
     tags=("mlprep", "iterative"),
@@ -813,7 +808,7 @@ def _seq_support(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "events_sequential_support",
     _seq_support,
     tags=("events", "mining"),
@@ -890,9 +885,9 @@ def _dau_wau_mau(d: str, ud_src: str | None = None) -> str:
 )
 def events_dau_wau_mau(spark, sf_dir):
     ud = spark.sql(_dau_ud_core(SPARK)).localCheckpoint()
-    ud.createOrReplaceTempView("dau_ud_v")
     return spark.sql(
-        _dau_wau_mau(SPARK, ud_src="SELECT user_id, day_idx FROM dau_ud_v")
+        _dau_wau_mau(SPARK, ud_src="SELECT user_id, day_idx FROM {ud}"),
+        ud=ud,
     )
 
 
@@ -927,7 +922,7 @@ def _join_skew(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "layout_join_skew_advisor",
     _join_skew,
     tags=("layout", "advisor"),
@@ -988,7 +983,7 @@ def _encoding_advisor(d: str) -> str:
     return " UNION ALL ".join(parts) + " ORDER BY column_name"
 
 
-_pair(
+pair(
     "layout_encoding_advisor",
     _encoding_advisor,
     tags=("layout", "advisor", "profiling"),
@@ -1023,7 +1018,7 @@ def _geo_harmonic(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_geo_harmonic_mean",
     _geo_harmonic,
     tags=("agg", "stats"),
@@ -1061,7 +1056,7 @@ def _mode_peak_hour(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_mode_peak_hour",
     _mode_peak_hour,
     tags=("agg", "analytics"),
@@ -1129,7 +1124,7 @@ def _col_cov(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_column_covariance",
     _col_cov,
     tags=("agg", "stats", "profiling"),
@@ -1184,7 +1179,7 @@ def _pr_auc(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "eval_pr_auc_trapezoid",
     _pr_auc,
     tags=("eval", "mlprep"),
@@ -1231,7 +1226,7 @@ def _ks_separation(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "eval_ks_separation",
     _ks_separation,
     tags=("eval", "stats"),
@@ -1305,7 +1300,7 @@ def _seasonal_strength(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_seasonal_strength",
     _seasonal_strength,
     tags=("window", "timeseries"),
@@ -1343,7 +1338,7 @@ def _realized_vol(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_realized_vol",
     _realized_vol,
     tags=("window", "timeseries"),
@@ -1386,7 +1381,7 @@ def _sentence_stats(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_sentence_length_stats",
     _sentence_stats,
     tags=("text", "quality"),
@@ -1652,7 +1647,7 @@ def _contrastive(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "sample_contrastive_pairs",
     _contrastive,
     tags=("sampling", "similarity", "mlprep"),
@@ -1708,7 +1703,7 @@ def _nearest_value(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "join_nearest_value_1d",
     _nearest_value,
     tags=("join",),

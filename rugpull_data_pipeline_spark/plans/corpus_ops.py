@@ -35,15 +35,7 @@ from __future__ import annotations
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
-from .registry import register, sql_pair, static_table
-
-
-def _pair(name: str, q, tags: tuple[str, ...] = (), doc: str = "") -> None:
-    sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
-
-
-def _toks(d: str) -> str:
-    return S.split_ws("text", d)
+from .registry import pair, register, static_table
 
 
 # ---------------------------------------------------------------------------
@@ -72,7 +64,7 @@ def _windows(d: str) -> str:
         )
         return f"""
         SELECT doc_id, i AS pos, {S.portable_hash64(win, d)} AS wh
-        FROM (SELECT /*+ REPARTITION */ doc_id, {_toks(d)} AS toks
+        FROM (SELECT /*+ REPARTITION */ doc_id, {S.toks(d)} AS toks
               FROM documents) t
         LATERAL VIEW explode({seq}) w AS i
         """
@@ -93,7 +85,7 @@ def _windows(d: str) -> str:
             SELECT doc_id, len(toks) AS n,
                 unnest(range(1, len(toks) + 1)) AS pos,
                 unnest(toks) AS tok
-            FROM (SELECT doc_id, {_toks(d)} AS toks FROM documents) t
+            FROM (SELECT doc_id, {S.toks(d)} AS toks FROM documents) t
         ) tok_rows
         WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
     ) z
@@ -118,7 +110,7 @@ def _dedup_substring(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "dedup_substring_spans",
     _dedup_substring,
     tags=("dedup", "text"),
@@ -146,7 +138,7 @@ def _grams(d: str) -> str:
                 {seq},
                 i -> {S.portable_hash64(gram_sp, d)}
             ))) AS gh
-            FROM (SELECT /*+ REPARTITION */ doc_id, source, {_toks(d)} AS toks
+            FROM (SELECT /*+ REPARTITION */ doc_id, source, {S.toks(d)} AS toks
                   FROM documents) t
         ) g
         """
@@ -157,7 +149,7 @@ def _grams(d: str) -> str:
                 range(1, len(toks) - 3),
                 i -> {S.portable_hash64(gram_dk, d)}
             ))) AS gh
-        FROM (SELECT doc_id, source, {_toks(d)} AS toks FROM documents) t
+        FROM (SELECT doc_id, source, {S.toks(d)} AS toks FROM documents) t
         WHERE len(toks) >= 5
     ) g
     """
@@ -182,7 +174,7 @@ def _contamination(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_contamination_ngram",
     _contamination,
     tags=("text", "dedup"),
@@ -205,9 +197,9 @@ def _lm_score(d: str, cnt_src: str | None = None) -> str:
     # registry-wide plan audit). The per-doc scoring pass keeps its own
     # single explode.
     tok_src = (
-        f"SELECT doc_id, explode({_toks(d)}) AS tok FROM documents"
+        f"SELECT doc_id, explode({S.toks(d)}) AS tok FROM documents"
         if d == SPARK
-        else f"SELECT doc_id, unnest({_toks(d)}) AS tok FROM documents"
+        else f"SELECT doc_id, unnest({S.toks(d)}) AS tok FROM documents"
     )
     # Add-one smoothed unigram logprob. Each term is pre-rounded to 7
     # decimals BEFORE dsum's decimal(38,6) quantization: a 1-ulp ln()
@@ -261,10 +253,9 @@ def _lm_score(d: str, cnt_src: str | None = None) -> str:
 def text_ngram_lm_score(spark, sf_dir):
     cnt = spark.sql(
         f"SELECT tok, count(*) AS c FROM (SELECT doc_id,"
-        f" explode({_toks(SPARK)}) AS tok FROM documents) t GROUP BY tok"
+        f" explode({S.toks(SPARK)}) AS tok FROM documents) t GROUP BY tok"
     ).localCheckpoint()
-    cnt.createOrReplaceTempView("lm_cnt_v")
-    return spark.sql(_lm_score(SPARK, cnt_src="SELECT tok, c FROM lm_cnt_v"))
+    return spark.sql(_lm_score(SPARK, cnt_src="SELECT tok, c FROM {cnt}"), cnt=cnt)
 
 
 # ---------------------------------------------------------------------------
@@ -280,7 +271,7 @@ def _chunks(d: str) -> str:
         return f"""
         SELECT doc_id, i AS cidx, {ctext} AS ctext,
             {S.portable_hash64(ctext, d)} AS ch
-        FROM (SELECT /*+ REPARTITION */ doc_id, {_toks(d)} AS toks
+        FROM (SELECT /*+ REPARTITION */ doc_id, {S.toks(d)} AS toks
               FROM documents) t
         LATERAL VIEW explode(
             sequence(1, cast(ceil(size(toks) / {_CHUNK}.0) as int))) c AS i
@@ -300,7 +291,7 @@ def _chunks(d: str) -> str:
             SELECT doc_id,
                 unnest(range(1, len(toks) + 1)) AS pos,
                 unnest(toks) AS tok
-            FROM (SELECT doc_id, {_toks(d)} AS toks FROM documents) t
+            FROM (SELECT doc_id, {S.toks(d)} AS toks FROM documents) t
         ) z
         GROUP BY doc_id, ((pos - 1) // {_CHUNK}) + 1
     ) g
@@ -341,7 +332,7 @@ def _para_dedup(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_paragraph_dedup",
     _para_dedup,
     tags=("text", "dedup"),
@@ -397,7 +388,7 @@ def _cdc_merge(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "cdc_merge_apply",
     _cdc_merge,
     tags=("etl",),
@@ -428,7 +419,7 @@ def _hist(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_histogram_fixed_bins",
     _hist,
     tags=("agg",),
@@ -474,7 +465,7 @@ def _zorder(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "layout_zorder_stats",
     _zorder,
     tags=("layout",),
@@ -537,16 +528,16 @@ ORDER BY stage
 )
 def events_funnel_stages(spark, sf_dir):
     v = spark.sql(_FUNNEL_V).localCheckpoint()
-    v.createOrReplaceTempView("funnel_v_v")
     c = spark.sql(
-        f"WITH v AS (SELECT user_id, t1 FROM funnel_v_v){_FUNNEL_C}"
+        f"WITH v AS (SELECT user_id, t1 FROM {{v}}){_FUNNEL_C}", v=v
     ).localCheckpoint()
-    c.createOrReplaceTempView("funnel_c_v")
     return spark.sql(
         _funnel(
-            v_src="SELECT user_id, t1 FROM funnel_v_v",
-            c_src="SELECT user_id, t2 FROM funnel_c_v",
-        )
+            v_src="SELECT user_id, t1 FROM {v}",
+            c_src="SELECT user_id, t2 FROM {c}",
+        ),
+        v=v,
+        c=c,
     )
 
 
@@ -571,7 +562,7 @@ def _retention(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "events_retention_cohorts",
     _retention,
     tags=("analytics",),
@@ -593,7 +584,7 @@ def _sample_per_key(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "sample_reservoir_per_key",
     _sample_per_key,
     tags=("sampling",),
@@ -678,7 +669,7 @@ def _pq_encode(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "sim_pq_encode",
     _pq_encode,
     tags=("similarity",),
@@ -1004,7 +995,7 @@ def text_bigram_kneser_ney(spark, sf_dir):
         " WHERE size(w) >= 2"
         ") bg GROUP BY w1, w2"
     ).localCheckpoint()
-    cb.createOrReplaceTempView("kn_cb_v")
     return spark.sql(
-        _bigram_kn(SPARK, cb_src="SELECT w1, w2, c12 FROM kn_cb_v")
+        _bigram_kn(SPARK, cb_src="SELECT w1, w2, c12 FROM {cb}"),
+        cb=cb,
     )

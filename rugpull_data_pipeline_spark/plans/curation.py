@@ -36,11 +36,7 @@ from __future__ import annotations
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
-from .registry import register, sql_pair, static_table
-
-
-def _pair(name: str, q, tags: tuple[str, ...] = (), doc: str = "") -> None:
-    sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
+from .registry import pair, register, static_table
 
 
 def _str(expr: str, d: str) -> str:
@@ -71,7 +67,7 @@ def _q04(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "q04_order_priority",
     _q04,
     tags=("relational",),
@@ -99,7 +95,7 @@ def _q10(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "q10_returned_items",
     _q10,
     tags=("relational",),
@@ -145,7 +141,7 @@ def _pii_redact(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_pii_redact",
     _pii_redact,
     tags=("text",),
@@ -169,7 +165,7 @@ def _stratified_sample(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_stratified_sample",
     _stratified_sample,
     tags=("text",),
@@ -208,7 +204,7 @@ def _zscore_outliers(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_zscore_outliers",
     _zscore_outliers,
     tags=("agg",),
@@ -315,13 +311,13 @@ def _dedup_levenshtein(d: str, blocked_src: str | None = None) -> str:
 )
 def dedup_levenshtein_blocked(spark, sf_dir):
     blocked = spark.sql(_lev_blocked_core(SPARK)).localCheckpoint()
-    blocked.createOrReplaceTempView("lev_blocked_v")
     return spark.sql(
         _dedup_levenshtein(
             SPARK,
             blocked_src="SELECT doc_id, lang, lb, h1, h2, h3"
-            " FROM lev_blocked_v",
-        )
+            " FROM {blocked}",
+        ),
+        blocked=blocked,
     )
 
 
@@ -361,7 +357,7 @@ def _embedding_quantize(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "sim_embedding_quantize",
     _embedding_quantize,
     tags=("similarity",),
@@ -405,7 +401,7 @@ def _centroid_assign(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "sim_centroid_assign",
     _centroid_assign,
     tags=("similarity",),
@@ -612,7 +608,7 @@ def _profile_stats(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "profile_table_stats",
     _profile_stats,
     tags=("agg", "quality"),
@@ -642,7 +638,7 @@ def _q13(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "q13_order_count_dist",
     _q13,
     tags=("relational",),
@@ -674,7 +670,7 @@ def _q15(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "q15_top_supplier",
     _q15,
     tags=("relational", "subquery"),

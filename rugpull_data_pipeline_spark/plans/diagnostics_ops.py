@@ -63,11 +63,7 @@ from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
 from .llm_ops import _emb_dims, _word_tokens_all
 from .mining_ops import _daily_means, _day_idx
-from .registry import register, sql_pair
-
-
-def _pair(name: str, q, tags: tuple[str, ...] = (), doc: str = "") -> None:
-    sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
+from .registry import pair, register
 
 
 # Decimal-cast cents quantization (NOT floor(double*100), which lands one
@@ -215,7 +211,7 @@ def _ar1_fit(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_ar1_fit",
     _ar1_fit,
     tags=("window", "timeseries"),
@@ -269,7 +265,7 @@ def _cusum_cp(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_cusum_changepoint",
     _cusum_cp,
     tags=("window", "timeseries"),
@@ -344,7 +340,7 @@ def _variance_ratio(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_variance_ratio",
     _variance_ratio,
     tags=("window", "timeseries"),
@@ -391,7 +387,7 @@ def _donchian(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_donchian_breakout",
     _donchian,
     tags=("window", "timeseries"),
@@ -449,7 +445,7 @@ def _atr(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_atr_true_range",
     _atr,
     tags=("window", "timeseries"),
@@ -512,7 +508,7 @@ def _runs_test(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_runs_test",
     _runs_test,
     tags=("window", "timeseries", "stats"),
@@ -589,7 +585,7 @@ def _brier_decomp(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "eval_brier_decomposition",
     _brier_decomp,
     tags=("eval", "mlprep"),
@@ -669,11 +665,11 @@ def eval_kendall_tau(spark, sf_dir):
     daily = spark.sql(
         f"WITH {_daily_means(SPARK)} SELECT event_type, day_idx, dm FROM daily"
     ).localCheckpoint()
-    daily.createOrReplaceTempView("kendall_daily_v")
     return spark.sql(
         _kendall_tau(
-            SPARK, daily_src="SELECT event_type, day_idx, dm FROM kendall_daily_v"
-        )
+            SPARK, daily_src="SELECT event_type, day_idx, dm FROM {daily}"
+        ),
+        daily=daily,
     )
 
 
@@ -728,7 +724,7 @@ def _mcc(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "eval_matthews_corr",
     _mcc,
     tags=("eval", "mlprep"),
@@ -787,7 +783,7 @@ def _log_loss(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "eval_log_loss",
     _log_loss,
     tags=("eval", "mlprep"),
@@ -859,7 +855,7 @@ def _reg_diag(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "eval_regression_diagnostics",
     _reg_diag,
     tags=("eval", "stats"),
@@ -919,7 +915,7 @@ def _item_item(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "rec_item_item_topk",
     _item_item,
     tags=("rec", "join"),
@@ -1013,9 +1009,9 @@ def _bias_baseline(d: str, cell_src: str | None = None) -> str:
 )
 def rec_user_bias_baseline(spark, sf_dir):
     cell = spark.sql(_bias_cell_core(SPARK)).localCheckpoint()
-    cell.createOrReplaceTempView("bias_cell_v")
     return spark.sql(
-        _bias_baseline(SPARK, cell_src="SELECT user_id, item, r FROM bias_cell_v")
+        _bias_baseline(SPARK, cell_src="SELECT user_id, item, r FROM {cell}"),
+        cell=cell,
     )
 
 
@@ -1062,7 +1058,7 @@ def _readability(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_readability_indices",
     _readability,
     tags=("text",),
@@ -1113,7 +1109,7 @@ def _burstiness(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_burstiness_dispersion",
     _burstiness,
     tags=("text",),
@@ -1160,7 +1156,7 @@ def _simpson(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_simpson_diversity",
     _simpson,
     tags=("text",),
@@ -1277,9 +1273,9 @@ def _mad_screen(d: str, grid_src: str | None = None) -> str:
 )
 def profile_mad_screen(spark, sf_dir):
     grid = spark.sql(_mad_grid_core(SPARK)).localCheckpoint()
-    grid.createOrReplaceTempView("madscreen_grid_v")
     return spark.sql(
-        _mad_screen(SPARK, grid_src="SELECT grp, v, c FROM madscreen_grid_v")
+        _mad_screen(SPARK, grid_src="SELECT grp, v, c FROM {grid}"),
+        grid=grid,
     )
 
 
@@ -1325,7 +1321,7 @@ def _schema_drift(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "profile_schema_drift",
     _schema_drift,
     tags=("profile", "json"),
@@ -1373,7 +1369,7 @@ def _theil(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_theil_inequality",
     _theil,
     tags=("agg", "stats"),
@@ -1472,9 +1468,9 @@ def _cramers_v(d: str, obs_src: str | None = None) -> str:
 )
 def agg_cramers_v(spark, sf_dir):
     obs = spark.sql(_cramers_obs_core(SPARK)).localCheckpoint()
-    obs.createOrReplaceTempView("cramers_obs_v")
     return spark.sql(
-        _cramers_v(SPARK, obs_src="SELECT seg, band, o FROM cramers_obs_v")
+        _cramers_v(SPARK, obs_src="SELECT seg, band, o FROM {obs}"),
+        obs=obs,
     )
 
 
@@ -1515,7 +1511,7 @@ def _hhi(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_hhi_concentration",
     _hhi,
     tags=("agg", "stats"),
@@ -1607,8 +1603,7 @@ def _prune_sim(d: str, dg_src: str | None = None) -> str:
 )
 def layout_prune_simulator(spark, sf_dir):
     dg = spark.sql(_prune_dg_core(SPARK)).localCheckpoint()
-    dg.createOrReplaceTempView("prunesim_dg_v")
-    return spark.sql(_prune_sim(SPARK, dg_src="SELECT d, n FROM prunesim_dg_v"))
+    return spark.sql(_prune_sim(SPARK, dg_src="SELECT d, n FROM {dg}"), dg=dg)
 
 
 # ---------------------------------------------------------------------------
@@ -1677,9 +1672,9 @@ def _hour_gof(d: str, hc_src: str | None = None) -> str:
 )
 def events_hour_uniformity_gof(spark, sf_dir):
     hc = spark.sql(_hour_gof_core(SPARK)).localCheckpoint()
-    hc.createOrReplaceTempView("hourgof_hc_v")
     return spark.sql(
-        _hour_gof(SPARK, hc_src="SELECT event_type, hour, c FROM hourgof_hc_v")
+        _hour_gof(SPARK, hc_src="SELECT event_type, hour, c FROM {hc}"),
+        hc=hc,
     )
 
 
@@ -1762,9 +1757,9 @@ def _robust_scaler(d: str, grid_src: str | None = None) -> str:
 )
 def mlprep_robust_scaler(spark, sf_dir):
     grid = spark.sql(_scaler_grid_core(SPARK)).localCheckpoint()
-    grid.createOrReplaceTempView("scaler_grid_v")
     return spark.sql(
-        _robust_scaler(SPARK, grid_src="SELECT grp, v, c FROM scaler_grid_v")
+        _robust_scaler(SPARK, grid_src="SELECT grp, v, c FROM {grid}"),
+        grid=grid,
     )
 
 
@@ -1809,7 +1804,7 @@ def _anisotropy(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "sim_norm_anisotropy",
     _anisotropy,
     tags=("sim",),

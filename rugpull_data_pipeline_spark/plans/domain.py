@@ -450,7 +450,9 @@ def price_change_stateful_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise TimeoutError(
             "price-change stateful replay still running after 300 s"
         )
-    emitted = spark.table(name)
+    from .stream_infra import _sink_rows
+
+    emitted = _sink_rows(spark, name)
     return emitted.select(
         "pair",
         F.unix_timestamp("ts").alias("ts_epoch"),

@@ -38,11 +38,7 @@ from __future__ import annotations
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
-from .registry import register, sql_pair
-
-
-def _pair(name: str, q, tags: tuple[str, ...] = (), doc: str = "") -> None:
-    sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
+from .registry import pair, register
 
 
 # ---------------------------------------------------------------------------
@@ -129,13 +125,13 @@ def _rfm(d: str, um_src: str | None = None) -> str:
 )
 def events_rfm_segments(spark, sf_dir):
     um = spark.sql(_rfm_um_core(SPARK)).localCheckpoint()
-    um.createOrReplaceTempView("rfm_um_v")
     return spark.sql(
         _rfm(
             SPARK,
             um_src="SELECT user_id, recency_days, frequency,"
-            " monetary_cents FROM rfm_um_v",
-        )
+            " monetary_cents FROM {um}",
+        ),
+        um=um,
     )
 
 
@@ -196,7 +192,7 @@ def _ridge(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "mlprep_ridge_closed_form",
     _ridge,
     tags=("mlprep",),
@@ -245,7 +241,7 @@ def _completeness(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "profile_completeness_nulls",
     _completeness,
     tags=("profiling",),
@@ -304,7 +300,7 @@ def _jl_project(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "sim_random_projection16",
     _jl_project,
     tags=("similarity",),
@@ -434,14 +430,14 @@ def window_holt_linear(spark, sf_dir):
         return out
 
     folded = buckets.groupBy("event_type").applyInPandas(fold, schema)
-    folded.createOrReplaceTempView("holt_folded")
     return spark.sql(
         """
         SELECT event_type, hr, round(level, 6) AS level,
             round(trend, 6) AS trend,
             round(forecast_next, 6) AS forecast_next
-        FROM holt_folded ORDER BY event_type, hr
-        """
+        FROM {folded} ORDER BY event_type, hr
+        """,
+        folded=folded,
     )
 
 
@@ -502,7 +498,7 @@ def _bootstrap(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "sample_bootstrap_hash",
     _bootstrap,
     tags=("sampling", "eval"),
@@ -568,5 +564,4 @@ def graph_kcore_peel(spark, sf_dir):
     from .stats_eval import _lpa_edges
 
     edges = spark.sql(_lpa_edges(SPARK)).localCheckpoint()
-    edges.createOrReplaceTempView("kcore_edges")
-    return spark.sql(_kcore(SPARK, edges_src="SELECT u, v FROM kcore_edges"))
+    return spark.sql(_kcore(SPARK, edges_src="SELECT u, v FROM {edges}"), edges=edges)

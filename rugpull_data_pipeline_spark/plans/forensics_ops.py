@@ -43,11 +43,7 @@ from .diagnostics_ops import (
     _r6u,
 )
 from .mining_ops import _daily_means
-from .registry import register, sql_pair
-
-
-def _pair(name: str, q, tags: tuple[str, ...] = (), doc: str = "") -> None:
-    sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
+from .registry import pair, register
 
 
 # ---------------------------------------------------------------------------
@@ -86,7 +82,7 @@ def _structuring(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "profile_structuring_screen",
     _structuring,
     tags=("profile", "fraud"),
@@ -168,9 +164,9 @@ def _last_digit(d: str, dc_src: str | None = None) -> str:
 )
 def profile_last_digit_uniformity(spark, sf_dir):
     dc = spark.sql(_last_digit_core(SPARK)).localCheckpoint()
-    dc.createOrReplaceTempView("lastdigit_dc_v")
     return spark.sql(
-        _last_digit(SPARK, dc_src="SELECT event_type, dg, c FROM lastdigit_dc_v")
+        _last_digit(SPARK, dc_src="SELECT event_type, dg, c FROM {dc}"),
+        dc=dc,
     )
 
 
@@ -206,7 +202,7 @@ def _dup_billing(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "profile_duplicate_billing",
     _dup_billing,
     tags=("profile", "fraud"),
@@ -284,7 +280,7 @@ def _dormant(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "profile_dormant_reactivation",
     _dormant,
     tags=("profile", "fraud"),
@@ -355,7 +351,7 @@ def _lognormal(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "profile_lognormal_fit",
     _lognormal,
     tags=("profile", "stats"),
@@ -422,7 +418,7 @@ def _pump_dump(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_pump_dump_pattern",
     _pump_dump,
     tags=("window", "fraud"),
@@ -519,11 +515,11 @@ def window_squarewave_period(spark, sf_dir):
     daily = spark.sql(
         f"WITH {_daily_means(SPARK)} SELECT event_type, day_idx, dm FROM daily"
     ).localCheckpoint()
-    daily.createOrReplaceTempView("sqperiod_daily_v")
     return spark.sql(
         _sq_period(
-            SPARK, daily_src="SELECT event_type, day_idx, dm FROM sqperiod_daily_v"
-        )
+            SPARK, daily_src="SELECT event_type, day_idx, dm FROM {daily}"
+        ),
+        daily=daily,
     )
 
 
@@ -581,7 +577,7 @@ def _unit_root(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_unit_root_df",
     _unit_root,
     tags=("window", "stats"),
@@ -647,7 +643,7 @@ def _risk_ratios(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_risk_ratios",
     _risk_ratios,
     tags=("window", "stats"),
@@ -753,11 +749,11 @@ def window_market_beta(spark, sf_dir):
         f"WITH {_daily_means(SPARK)} SELECT event_type, day_idx, dm"
         " FROM daily"
     ).localCheckpoint()
-    daily.createOrReplaceTempView("mbeta_daily_v")
     return spark.sql(
         _market_beta(
-            SPARK, daily_src="SELECT event_type, day_idx, dm FROM mbeta_daily_v"
-        )
+            SPARK, daily_src="SELECT event_type, day_idx, dm FROM {daily}"
+        ),
+        daily=daily,
     )
 
 
@@ -813,7 +809,7 @@ def _hill_tail(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_hill_tail_index",
     _hill_tail,
     tags=("agg", "stats"),
@@ -871,7 +867,7 @@ def _anova(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "eval_anova_oneway",
     _anova,
     tags=("eval", "stats"),
@@ -972,5 +968,4 @@ def _levene(d: str, g_src: str | None = None) -> str:
 )
 def eval_levene_bf(spark, sf_dir):
     g = spark.sql(_levene_core(SPARK)).localCheckpoint()
-    g.createOrReplaceTempView("levene_g_v")
-    return spark.sql(_levene(SPARK, g_src="SELECT grp, v, c FROM levene_g_v"))
+    return spark.sql(_levene(SPARK, g_src="SELECT grp, v, c FROM {g}"), g=g)

@@ -34,12 +34,8 @@ from ..functions.scalars import DUCK, SPARK
 from .analytics_ops import _pw_df
 from .diagnostics_ops import _dsum9, _r6u
 from .llm_ops import _emb_dims, _word_tokens_all
-from .mining_ops import _daily_means, _day_idx
-from .registry import register, sql_pair
-
-
-def _pair(name: str, q, tags: tuple[str, ...] = (), doc: str = "") -> None:
-    sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
+from .mining_ops import _day_idx
+from .registry import pair, register
 
 
 def _cents(col: str) -> str:
@@ -94,7 +90,7 @@ def _anomalous_days(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_anomalous_days",
     _anomalous_days,
     tags=("window", "timeseries", "quality"),
@@ -191,7 +187,7 @@ def _pacf2(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_pacf_lag2",
     _pacf2,
     tags=("window", "timeseries", "stats"),
@@ -264,9 +260,9 @@ def _user_overlap(d: str, ut_src: str | None = None) -> str:
 )
 def events_user_overlap_types(spark, sf_dir):
     ut = spark.sql(_user_overlap_core(SPARK)).localCheckpoint()
-    ut.createOrReplaceTempView("overlap_ut_v")
     return spark.sql(
-        _user_overlap(SPARK, ut_src="SELECT event_type, user_id FROM overlap_ut_v")
+        _user_overlap(SPARK, ut_src="SELECT event_type, user_id FROM {ut}"),
+        ut=ut,
     )
 
 
@@ -310,7 +306,7 @@ def _wk_lift(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "events_weekday_weekend_lift",
     _wk_lift,
     tags=("events", "analytics", "timeseries"),
@@ -376,7 +372,7 @@ def _cliffs_delta(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "eval_cliffs_delta",
     _cliffs_delta,
     tags=("eval", "stats"),
@@ -424,7 +420,7 @@ def _stopword_profile(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_stopword_profile",
     _stopword_profile,
     tags=("text", "quality"),
@@ -479,7 +475,7 @@ def _char_class(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_char_class_profile",
     _char_class,
     tags=("text", "profiling"),
@@ -530,7 +526,7 @@ def _pk_uniqueness(d: str) -> str:
     return " UNION ALL ".join(parts) + " ORDER BY table_name"
 
 
-_pair(
+pair(
     "profile_pk_uniqueness",
     _pk_uniqueness,
     tags=("profile", "quality"),
@@ -579,7 +575,7 @@ def _lorenz(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_lorenz_deciles",
     _lorenz,
     tags=("agg", "stats"),
@@ -678,9 +674,9 @@ def _centroid_sep(d: str, cm_src: str | None = None) -> str:
 )
 def sim_centroid_separation(spark, sf_dir):
     cm = spark.sql(_centroid_core(SPARK)).localCheckpoint()
-    cm.createOrReplaceTempView("centroid_cm_v")
     return spark.sql(
-        _centroid_sep(SPARK, cm_src="SELECT label, dim, m FROM centroid_cm_v")
+        _centroid_sep(SPARK, cm_src="SELECT label, dim, m FROM {cm}"),
+        cm=cm,
     )
 
 
@@ -743,9 +739,9 @@ def _degree_gini(d: str, pw_src: str | None = None) -> str:
 )
 def graph_degree_gini(spark, sf_dir):
     pw = _pw_df(spark, sf_dir).localCheckpoint()
-    pw.createOrReplaceTempView("dgini_pw_v")
     return spark.sql(
-        _degree_gini(SPARK, pw_src="SELECT src, dst FROM dgini_pw_v")
+        _degree_gini(SPARK, pw_src="SELECT src, dst FROM {pw}"),
+        pw=pw,
     )
 
 
@@ -772,7 +768,7 @@ def _family_sizes(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "dedup_doc_family_sizes",
     _family_sizes,
     tags=("dedup", "profiling"),

@@ -23,11 +23,7 @@ from __future__ import annotations
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
-from .registry import register, sql_pair
-
-
-def _pair(name: str, q, tags: tuple[str, ...] = (), doc: str = "") -> None:
-    sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
+from .registry import pair, register
 
 
 # ---------------------------------------------------------------------------
@@ -37,12 +33,8 @@ def _pair(name: str, q, tags: tuple[str, ...] = (), doc: str = "") -> None:
 _STOPWORDS = "('the', 'a', 'of', 'and', 'to', 'in', 'is', 'it')"
 
 
-def _toks(d: str) -> str:
-    return S.split_ws("text", d)
-
-
 def _token_count(d: str) -> str:
-    toks = _toks(d)
+    toks = S.toks(d)
     return f"""
     SELECT doc_id,
         {S.arr_len(toks, d)} AS n_tokens,
@@ -53,7 +45,7 @@ def _token_count(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_token_count",
     _token_count,
     tags=("text",),
@@ -63,7 +55,7 @@ _pair(
 
 
 def _quality(d: str) -> str:
-    toks = _toks(d)
+    toks = S.toks(d)
     stop_filter = f"filter({toks}, t -> t IN {_STOPWORDS})" if d == SPARK else (
         f"list_filter({toks}, t -> t IN {_STOPWORDS})"
     )
@@ -78,7 +70,7 @@ def _quality(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_quality_score",
     _quality,
     tags=("text",),
@@ -88,7 +80,7 @@ _pair(
 
 
 def _lang_id(d: str) -> str:
-    toks = _toks(d)
+    toks = S.toks(d)
     # Deterministic n-gram-free marker heuristic: score membership of marker
     # word sets; classify by the dominant set (engine-portable CASE cascade).
     en = "('the', 'a', 'fast', 'slow', 'small')"
@@ -120,7 +112,7 @@ def _lang_id(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_lang_id_heuristic",
     _lang_id,
     tags=("text",),
@@ -130,7 +122,7 @@ _pair(
 
 
 def _fingerprint(d: str) -> str:
-    toks = _toks(d)
+    toks = S.toks(d)
     # Portable lowercase: U+0130 (Turkish dotted capital I) is the one code
     # point whose lowercase MAPPING differs between the engines — Java/Spark
     # applies the full Unicode mapping ('i' + U+0307 combining dot), DuckDB's
@@ -170,7 +162,7 @@ def _token_bpe(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_token_bpe_regex",
     _token_bpe,
     tags=("text",),
@@ -180,7 +172,7 @@ _pair(
 )
 
 
-_pair(
+pair(
     "text_fingerprint",
     _fingerprint,
     tags=("text", "dedup"),
@@ -242,11 +234,11 @@ def _tfidf_topterms(d: str) -> str:
 def _word_tokens_all(d: str) -> str:
     """CTE text: (doc_id, tok) — one row per token occurrence (with repeats)."""
     if d == SPARK:
-        return f"SELECT doc_id, explode({_toks(d)}) AS tok FROM documents"
-    return f"SELECT doc_id, unnest({_toks(d)}) AS tok FROM documents"
+        return f"SELECT doc_id, explode({S.toks(d)}) AS tok FROM documents"
+    return f"SELECT doc_id, unnest({S.toks(d)}) AS tok FROM documents"
 
 
-_pair(
+pair(
     "text_vocab_topk",
     _vocab_topk,
     tags=("text",),
@@ -254,7 +246,7 @@ _pair(
     "top-100 (tokenizer-vocab construction; one shuffle on the token).",
 )
 
-_pair(
+pair(
     "text_tfidf_topterms",
     _tfidf_topterms,
     tags=("text",),
@@ -286,7 +278,7 @@ def _train_val_split(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_train_val_split",
     _train_val_split,
     tags=("text", "sampling"),
@@ -301,7 +293,7 @@ def _corpus_curation(d: str) -> str:
     # ratio, repetition) → exact-dup keep-list (min doc_id per content hash)
     # → surviving corpus stats per source. Each stage is a shuffle-planar
     # DataFrame op; nothing touches the driver.
-    toks = _toks(d)
+    toks = S.toks(d)
     stop_filter = f"filter({toks}, t -> t IN {_STOPWORDS})" if d == SPARK else (
         f"list_filter({toks}, t -> t IN {_STOPWORDS})"
     )
@@ -337,7 +329,7 @@ def _corpus_curation(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_corpus_curation",
     _corpus_curation,
     tags=("text", "dedup"),
@@ -363,7 +355,7 @@ def _dedup_exact(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "dedup_exact_docs",
     _dedup_exact,
     tags=("dedup",),
@@ -394,7 +386,7 @@ def _ngram_shingles(d: str) -> str:
             i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1),
                         ' ', element_at(toks, i + 2))
         ))) AS sh
-        FROM (SELECT /*+ REPARTITION */ doc_id, {_toks(d)} AS toks FROM documents) t
+        FROM (SELECT /*+ REPARTITION */ doc_id, {S.toks(d)} AS toks FROM documents) t
         WHERE size(toks) >= 3
         """
     return f"""
@@ -405,7 +397,7 @@ def _ngram_shingles(d: str) -> str:
         -- (hung on the giant-payload sweep's 150k-token doc; round 9)
         i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
     ))) AS sh
-    FROM (SELECT doc_id, {_toks(d)} AS toks FROM documents) t
+    FROM (SELECT doc_id, {S.toks(d)} AS toks FROM documents) t
     WHERE len(toks) >= 3
     """
 
@@ -590,19 +582,19 @@ def _dedup_cluster(d: str, pairs_src: str | None = None) -> str:
 )
 def dedup_cluster_neardup(spark, sf_dir):
     pairs = dedup_ngram_jaccard(spark, sf_dir).localCheckpoint()
-    pairs.createOrReplaceTempView("neardup_pairs_v")
     return spark.sql(
         _dedup_cluster(
-            SPARK, pairs_src="SELECT doc_a, doc_b, jaccard FROM neardup_pairs_v"
-        )
+            SPARK, pairs_src="SELECT doc_a, doc_b, jaccard FROM {pairs}"
+        ),
+        pairs=pairs,
     )
 
 
 def _word_tokens(d: str) -> str:
     """CTE text: (doc_id, tok) distinct word per doc."""
     if d == SPARK:
-        return f"SELECT doc_id, explode(array_distinct({_toks(d)})) AS tok FROM documents"
-    return f"SELECT doc_id, unnest(list_distinct({_toks(d)})) AS tok FROM documents"
+        return f"SELECT doc_id, explode(array_distinct({S.toks(d)})) AS tok FROM documents"
+    return f"SELECT doc_id, unnest(list_distinct({S.toks(d)})) AS tok FROM documents"
 
 
 _N_HASHES = 16
@@ -720,7 +712,9 @@ def _dedup_minhash_lsh(d: str) -> str:
 def _mh_lsh_pieces(d: str) -> dict[str, str]:
     """The _dedup_minhash_lsh CTE bodies as standalone statements, so the
     Spark builder can materialize the shared cores (round-11 checkpoint
-    contract) while the oracle keeps the single WITH-chain text."""
+    contract) while the oracle keeps the single WITH-chain text. ``{sh}``,
+    ``{bc}`` and ``{ds}`` are the cores, passed to ``spark.sql`` as
+    DataFrame arguments."""
     shh = S.portable_hash64("sh", d)
     min_cols = ",\n            ".join(
         f"min(({a} * m + {b}) % {_MINHASH_P}) AS h{j}"
@@ -795,20 +789,9 @@ def _mh_lsh_pieces(d: str) -> dict[str, str]:
 def dedup_minhash_lsh(spark, sf_dir):
     pieces = _mh_lsh_pieces(SPARK)
     sh = spark.sql(pieces["sh_hashed"]).localCheckpoint()
-    sh.createOrReplaceTempView("mhlsh_sh_v")
-    bc = spark.sql(
-        pieces["bands_capped"].replace("{sh}", "mhlsh_sh_v")
-    ).localCheckpoint()
-    bc.createOrReplaceTempView("mhlsh_bands_v")
-    ds = spark.sql(
-        pieces["doc_sets"].replace("{sh}", "mhlsh_sh_v")
-    ).localCheckpoint()
-    ds.createOrReplaceTempView("mhlsh_sets_v")
-    return spark.sql(
-        pieces["final"]
-        .replace("{bc}", "mhlsh_bands_v")
-        .replace("{ds}", "mhlsh_sets_v")
-    )
+    bc = spark.sql(pieces["bands_capped"], sh=sh).localCheckpoint()
+    ds = spark.sql(pieces["doc_sets"], sh=sh).localCheckpoint()
+    return spark.sql(pieces["final"], bc=bc, ds=ds)
 
 
 def _dedup_simhash(d: str) -> str:
@@ -841,7 +824,7 @@ def _dedup_simhash(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "dedup_simhash_signature",
     _dedup_simhash,
     tags=("dedup",),
@@ -864,7 +847,7 @@ def _dedup_simhash_pairs(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "dedup_simhash_neardup",
     _dedup_simhash_pairs,
     tags=("dedup",),
@@ -912,7 +895,7 @@ def _dedup_simhash_blocked(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "dedup_simhash_blocked",
     _dedup_simhash_blocked,
     tags=("dedup", "scale"),
@@ -984,7 +967,7 @@ def _sim_topk(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "sim_cosine_topk_bruteforce",
     _sim_topk,
     tags=("similarity",),
@@ -1011,7 +994,7 @@ def _dedup_embedding(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "dedup_embedding_cosine",
     _dedup_embedding,
     tags=("dedup", "similarity"),
@@ -1180,15 +1163,15 @@ def sim_lsh_hyperplane_ann(spark, sf_dir):
     from .stats_eval import _lsh_buckets_df
 
     b = _lsh_buckets_df(spark, sf_dir).localCheckpoint()
-    b.createOrReplaceTempView("lshann_buckets_v")
     return spark.sql(
         _sim_lsh_hyperplane(
-            SPARK, buckets_src="SELECT vec_id, bucket FROM lshann_buckets_v"
-        )
+            SPARK, buckets_src="SELECT vec_id, bucket FROM {b}"
+        ),
+        b=b,
     )
 
 
-_pair(
+pair(
     "sim_cosine_ivf_bucketed",
     _sim_ivf,
     tags=("similarity",),
@@ -1238,7 +1221,7 @@ def _pack_sequences(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_pack_sequences",
     _pack_sequences,
     tags=("text", "sampling"),
@@ -1287,7 +1270,7 @@ def _mixture_sample(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_mixture_sample",
     _mixture_sample,
     tags=("text", "sampling"),
@@ -1308,7 +1291,7 @@ _BM25_TOPK = 10
 
 
 def _bm25(d: str) -> str:
-    toks = _toks(d)
+    toks = S.toks(d)
     if d == SPARK:
         occ = f"SELECT doc_id, explode({toks}) AS tok FROM documents"
     else:
@@ -1361,7 +1344,7 @@ def _bm25(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_keyword_bm25",
     _bm25,
     tags=("text", "similarity"),
@@ -1388,7 +1371,7 @@ _EDGE_CAP = 64  # max docs sharing one edge hash (hot-boilerplate guard)
 
 
 def _suffix_prefix_overlap(d: str) -> str:
-    toks = _toks(d)
+    toks = S.toks(d)
     n = S.arr_len("w", d)
     pre = S.arr_join(S.arr_slice("w", "1", str(_EDGE_K), d), "' '", d)
     suf = S.arr_join(
@@ -1426,7 +1409,7 @@ def _suffix_prefix_overlap(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "dedup_suffix_prefix_overlap",
     _suffix_prefix_overlap,
     tags=("dedup", "text"),

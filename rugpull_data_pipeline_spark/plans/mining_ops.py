@@ -59,11 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
 from .llm_ops import _cosine
-from .registry import register, sql_pair, static_table
-
-
-def _pair(name: str, q, tags: tuple[str, ...] = (), doc: str = "") -> None:
-    sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
+from .registry import pair, register, static_table
 
 
 def _day_idx(d: str) -> str:
@@ -99,7 +95,7 @@ def _gaps_islands(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_gaps_islands",
     _gaps_islands,
     tags=("window", "events"),
@@ -231,7 +227,7 @@ def _lift_gains(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "eval_lift_gains_decile",
     _lift_gains,
     tags=("eval", "mlprep"),
@@ -285,7 +281,7 @@ def _woe_iv(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "mlprep_woe_iv",
     _woe_iv,
     tags=("mlprep", "eval"),
@@ -339,7 +335,7 @@ def _bipartite(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "graph_bipartite_project",
     _bipartite,
     tags=("graph", "mining"),
@@ -580,7 +576,7 @@ def _bitmap_distinct(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_bitmap_distinct",
     _bitmap_distinct,
     tags=("agg", "sketch"),
@@ -616,7 +612,7 @@ def _ttr(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_ttr_diversity",
     _ttr,
     tags=("text", "quality"),
@@ -659,7 +655,7 @@ def _oov(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_oov_rate",
     _oov,
     tags=("text", "quality"),
@@ -693,7 +689,7 @@ def _l_diversity(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "quality_l_diversity",
     _l_diversity,
     tags=("quality", "profiling", "audit"),
@@ -745,7 +741,7 @@ def _stl(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_stl_decompose",
     _stl,
     tags=("window", "timeseries"),
@@ -805,7 +801,7 @@ def _sax(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_sax_symbolic",
     _sax,
     tags=("window", "timeseries"),
@@ -856,7 +852,7 @@ def _ma_crossover(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_ma_crossover",
     _ma_crossover,
     tags=("window", "timeseries"),
@@ -904,7 +900,7 @@ def _weighted_median(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_weighted_median",
     _weighted_median,
     tags=("agg", "stats"),
@@ -941,7 +937,7 @@ def _systematic(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "sample_systematic_every_k",
     _systematic,
     tags=("sampling",),
@@ -980,7 +976,7 @@ def _distinct_ratio(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "profile_distinct_ratio_advisor",
     _distinct_ratio,
     tags=("profiling", "layout"),
@@ -1028,7 +1024,7 @@ def _bloom_advisor(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "layout_bloom_advisor",
     _bloom_advisor,
     tags=("layout", "advisor"),
@@ -1106,8 +1102,7 @@ def _isotonic(d: str, g_src: str | None = None) -> str:
 )
 def mlprep_isotonic_pava(spark, sf_dir):
     g = spark.sql(_isotonic_g_core(SPARK)).localCheckpoint()
-    g.createOrReplaceTempView("iso_g_v")
-    return spark.sql(_isotonic(SPARK, g_src="SELECT b, w, p FROM iso_g_v"))
+    return spark.sql(_isotonic(SPARK, g_src="SELECT b, w, p FROM {g}"), g=g)
 
 
 # ---------------------------------------------------------------------------
@@ -1131,7 +1126,7 @@ def _range_search(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "sim_range_search_radius",
     _range_search,
     tags=("similarity",),

@@ -56,11 +56,7 @@ from __future__ import annotations
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
-from .registry import register, sql_pair, static_table
-
-
-def _pair(name: str, q, tags: tuple[str, ...] = (), doc: str = "") -> None:
-    sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
+from .registry import pair, register, static_table
 
 
 _W = "PARTITION BY event_type ORDER BY ts, event_id"
@@ -87,7 +83,7 @@ def _rolling_median(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_rolling_median",
     _rolling_median,
     tags=("window", "series"),
@@ -156,7 +152,7 @@ def _acf_lags(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_acf_lags",
     _acf_lags,
     tags=("window", "series", "agg"),
@@ -206,7 +202,7 @@ def _linreg_daily(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_linreg_daily",
     _linreg_daily,
     tags=("agg", "series"),
@@ -269,7 +265,7 @@ def _word_entropy(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_word_entropy",
     _word_entropy,
     tags=("text", "quality"),
@@ -302,7 +298,7 @@ def _ws_normalize(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_whitespace_normalize",
     _ws_normalize,
     tags=("text", "curation"),
@@ -342,7 +338,7 @@ def _feature_hash(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_feature_hash_16",
     _feature_hash,
     tags=("text", "mlprep"),
@@ -490,7 +486,7 @@ def _bollinger(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_bollinger_bands",
     _bollinger,
     tags=("window", "series"),
@@ -586,11 +582,11 @@ def sim_mmr_diversify(spark, sf_dir):
         " (SELECT embedding FROM embeddings WHERE vec_id = 100) q"
         " WHERE c.vec_id < 32"
     ).localCheckpoint()
-    cand.createOrReplaceTempView("mmr_cand_v")
     return spark.sql(
         _mmr_diversify(
-            SPARK, cand_src="SELECT vec_id, embedding, rel FROM mmr_cand_v"
-        )
+            SPARK, cand_src="SELECT vec_id, embedding, rel FROM {cand}"
+        ),
+        cand=cand,
     )
 
 
@@ -691,9 +687,9 @@ def text_bpe_merge_round2(spark, sf_dir):
     cnt1 = spark.sql(
         _bpe_pair_count(SPARK, "documents", S.split_ws("text", SPARK))
     ).localCheckpoint()
-    cnt1.createOrReplaceTempView("bpe_cnt1_v")
     return spark.sql(
-        _bpe_round2(SPARK, cnt1_src="SELECT pa, pb, c FROM bpe_cnt1_v")
+        _bpe_round2(SPARK, cnt1_src="SELECT pa, pb, c FROM {cnt1}"),
+        cnt1=cnt1,
     )
 
 
@@ -731,7 +727,7 @@ def _pit_join(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "join_point_in_time",
     _pit_join,
     tags=("join", "temporal", "dimension"),
@@ -811,7 +807,7 @@ def _filter_gate(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_filter_gate",
     _filter_gate,
     tags=("text", "quality", "curation"),
@@ -1363,9 +1359,9 @@ def audit_minhash_estimate(spark, sf_dir):
     sh = spark.sql(
         f"SELECT doc_id, {shh} AS shh FROM ({_ngram_shingles(SPARK)}) raw"
     ).localCheckpoint()
-    sh.createOrReplaceTempView("mh_audit_sh_v")
     return spark.sql(
-        _minhash_audit(SPARK, sh_src="SELECT doc_id, shh FROM mh_audit_sh_v")
+        _minhash_audit(SPARK, sh_src="SELECT doc_id, shh FROM {sh}"),
+        sh=sh,
     )
 
 
@@ -1405,7 +1401,7 @@ def _rsi14(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_rsi_14",
     _rsi14,
     tags=("window", "series"),
@@ -1465,7 +1461,7 @@ def _knn_classify(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "sim_knn_classify",
     _knn_classify,
     tags=("similarity", "mlprep"),
@@ -1513,7 +1509,7 @@ def _hhi(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_holder_concentration",
     _hhi,
     tags=("agg", "domain"),
@@ -1575,7 +1571,7 @@ def _temporal_split(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "sample_temporal_split",
     _temporal_split,
     tags=("sample", "mlprep", "temporal"),
@@ -1611,7 +1607,7 @@ def _time_rollup(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_time_rollup",
     _time_rollup,
     tags=("agg", "temporal", "sweep:rollup-empty"),
@@ -1660,7 +1656,7 @@ def _seasonal_baseline(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_seasonal_baseline",
     _seasonal_baseline,
     tags=("series", "agg", "quality"),
@@ -1718,7 +1714,7 @@ def _token_budget_mixture(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_token_budget_mixture",
     _token_budget_mixture,
     tags=("text", "mlprep", "sample"),
@@ -1763,7 +1759,7 @@ def _lang_confusion(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "eval_lang_confusion",
     _lang_confusion,
     tags=("eval", "text"),
@@ -1814,7 +1810,7 @@ def _gini(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_gini_value",
     _gini,
     tags=("agg", "domain"),
@@ -1956,7 +1952,7 @@ def _time_to_convert(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "events_time_to_convert",
     _time_to_convert,
     tags=("events", "temporal", "agg"),

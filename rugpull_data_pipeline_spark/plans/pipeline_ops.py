@@ -38,11 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
-from .registry import register, sql_pair, static_table
-
-
-def _pair(name: str, q, tags: tuple[str, ...] = (), doc: str = "") -> None:
-    sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
+from .registry import pair, register, static_table
 
 
 # ---------------------------------------------------------------------------
@@ -104,7 +100,7 @@ def _chunk_sliding(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_chunk_sliding",
     _chunk_sliding,
     tags=("text",),
@@ -161,7 +157,7 @@ def _asof_tolerance(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "join_asof_tolerance",
     _asof_tolerance,
     tags=("join", "temporal"),
@@ -214,7 +210,7 @@ def _compaction_plan(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "layout_compaction_plan",
     _compaction_plan,
     tags=("layout",),
@@ -273,7 +269,7 @@ def _vacuum_plan(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "layout_vacuum_plan",
     _vacuum_plan,
     tags=("layout",),
@@ -459,17 +455,17 @@ def sim_ivfpq_topk(spark, sf_dir):
     pv = spark.sql(
         f"SELECT vec_id, label, s, {sub} AS pv FROM {base} {lateral}"
     ).localCheckpoint()
-    pv.createOrReplaceTempView("ivfpq_pv_v")
     return spark.sql(
         _ivfpq_topk(
             SPARK,
-            pv_src="SELECT vec_id, label, s, pv FROM ivfpq_pv_v",
+            pv_src="SELECT vec_id, label, s, pv FROM {pv}",
             cb_src=(
-                "SELECT vec_id AS cid, s, pv AS cv FROM ivfpq_pv_v"
+                "SELECT vec_id AS cid, s, pv AS cv FROM {pv}"
                 f" WHERE vec_id BETWEEN 1 AND {_PQ_K}"
             ),
             cents_src=None,
-        )
+        ),
+        pv=pv,
     )
 
 
@@ -565,7 +561,7 @@ def _chunk_decontaminate(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "dedup_chunk_decontaminate",
     _chunk_decontaminate,
     tags=("dedup", "text"),
@@ -607,7 +603,7 @@ def _transition_matrix(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "events_transition_matrix",
     _transition_matrix,
     tags=("events", "window"),
@@ -665,7 +661,7 @@ def _interval_overlap(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "join_interval_overlap",
     _interval_overlap,
     tags=("join", "temporal"),
@@ -711,7 +707,7 @@ def _twap_irregular(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_twap_irregular",
     _twap_irregular,
     tags=("window", "temporal"),
@@ -755,7 +751,7 @@ def _importance_sample(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "sample_importance_weighted",
     _importance_sample,
     tags=("text", "sample"),
@@ -827,9 +823,9 @@ def _mad_outliers(d: str, med_src: str | None = None) -> str:
 )
 def agg_mad_outliers(spark, sf_dir):
     med = spark.sql(_mad_med_core(SPARK)).localCheckpoint()
-    med.createOrReplaceTempView("madout_med_v")
     return spark.sql(
-        _mad_outliers(SPARK, med_src="SELECT event_type, m FROM madout_med_v")
+        _mad_outliers(SPARK, med_src="SELECT event_type, m FROM {med}"),
+        med=med,
     )
 
 
@@ -907,7 +903,7 @@ def _winnow_fingerprint(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_winnow_fingerprint",
     _winnow_fingerprint,
     tags=("text", "dedup"),
@@ -1086,15 +1082,15 @@ def _pmi_collocations(
 )
 def text_pmi_collocations(spark, sf_dir):
     uni = spark.sql(_pmi_uni_core()).localCheckpoint()
-    uni.createOrReplaceTempView("pmi_uni_v")
     big = spark.sql(_pmi_bigall_core()).localCheckpoint()
-    big.createOrReplaceTempView("pmi_bigall_v")
     return spark.sql(
         _pmi_collocations(
             SPARK,
-            uni_src="SELECT w, c FROM pmi_uni_v",
-            bigall_src="SELECT a, b, c FROM pmi_bigall_v",
-        )
+            uni_src="SELECT w, c FROM {uni}",
+            bigall_src="SELECT a, b, c FROM {big}",
+        ),
+        uni=uni,
+        big=big,
     )
 
 
@@ -1118,7 +1114,7 @@ def _winnow_pairs(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "dedup_winnow_pairs",
     _winnow_pairs,
     tags=("dedup", "text"),
@@ -1157,7 +1153,7 @@ def _path_trigrams(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "events_path_trigrams",
     _path_trigrams,
     tags=("events", "window"),
@@ -1201,7 +1197,7 @@ def _max_drawdown(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_max_drawdown",
     _max_drawdown,
     tags=("window", "domain"),
@@ -1255,7 +1251,7 @@ def _ewma_halflife(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_ewma_halflife",
     _ewma_halflife,
     tags=("window",),
@@ -1300,7 +1296,7 @@ def _fk_integrity(d: str) -> str:
     return f"SELECT * FROM ({parts}) rels ORDER BY fk"
 
 
-_pair(
+pair(
     "profile_fk_integrity",
     _fk_integrity,
     tags=("profile", "quality"),
@@ -1364,7 +1360,7 @@ def _series_correlation(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_series_correlation",
     _series_correlation,
     tags=("agg", "domain"),
@@ -1431,7 +1427,7 @@ def _manifest_prune(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "layout_manifest_prune",
     _manifest_prune,
     tags=("layout", "profiling"),

@@ -30,21 +30,13 @@ from __future__ import annotations
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
 from ..tmpdirs import scratch_dir
-from .registry import register, sql_pair
+from .registry import pair, register
 
 # Per-process external-path cache for the bucketed-table fixture (see
 # layout_bucketed_join).
 _BUCKETED_DIRS: dict[str, str] = {}
 
 _N_CENTROIDS = 8
-
-
-def _pair(name: str, q, tags: tuple[str, ...] = (), doc: str = "") -> None:
-    sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
-
-
-def _toks(d: str) -> str:
-    return S.split_ws("text", d)
 
 
 # ---------------------------------------------------------------------------
@@ -64,14 +56,14 @@ def _rep_grams(d: str) -> str:
         seq = "CASE WHEN size(toks) >= 3 THEN sequence(1, size(toks) - 2) ELSE array() END"
         return f"""
         SELECT doc_id, explode(transform({seq}, i -> {S.portable_hash64(gram_sp, d)})) AS gh
-        FROM (SELECT /*+ REPARTITION */ doc_id, {_toks(d)} AS toks
+        FROM (SELECT /*+ REPARTITION */ doc_id, {S.toks(d)} AS toks
               FROM documents) t
         """
     return f"""
     SELECT doc_id,
         unnest(list_transform(range(1, len(toks) - 1),
                               i -> {S.portable_hash64(gram_dk, d)})) AS gh
-    FROM (SELECT doc_id, {_toks(d)} AS toks FROM documents) t
+    FROM (SELECT doc_id, {S.toks(d)} AS toks FROM documents) t
     WHERE len(toks) >= 3
     """
 
@@ -96,7 +88,7 @@ def _repetition(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_repetition_score",
     _repetition,
     tags=("text", "quality"),
@@ -118,13 +110,13 @@ def _bpe_pairs(d: str) -> str:
         seq = "CASE WHEN size(toks) >= 2 THEN sequence(1, size(toks) - 1) ELSE array() END"
         pairs = f"""
         SELECT explode(transform({seq}, i -> {mk})) AS pair
-        FROM (SELECT /*+ REPARTITION */ {_toks(d)} AS toks FROM documents) t
+        FROM (SELECT /*+ REPARTITION */ {S.toks(d)} AS toks FROM documents) t
         """
     else:
         mk = "toks[i] || '|' || toks[i + 1]"
         pairs = f"""
         SELECT unnest(list_transform(range(1, len(toks)), i -> {mk})) AS pair
-        FROM (SELECT {_toks(d)} AS toks FROM documents) t
+        FROM (SELECT {S.toks(d)} AS toks FROM documents) t
         WHERE len(toks) >= 2
         """
     return f"""
@@ -143,7 +135,7 @@ def _bpe_pairs(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_bpe_merge_pairs",
     _bpe_pairs,
     tags=("text", "tokenizer"),
@@ -247,9 +239,9 @@ def _keep_best_source(d: str) -> str:
     # crawl-ish ones; the rank is a small CASE dim (in production a
     # broadcast priority table).
     if d == SPARK:
-        prefix = f"concat_ws(' ', slice({_toks(d)}, 1, 8))"
+        prefix = f"concat_ws(' ', slice({S.toks(d)}, 1, 8))"
     else:
-        prefix = f"array_to_string(({_toks(d)})[1:8], ' ')"
+        prefix = f"array_to_string(({S.toks(d)})[1:8], ' ')"
     th = S.portable_hash64(prefix, d)
     prio = (
         "CASE source WHEN 'src0' THEN 0 WHEN 'src1' THEN 1 "
@@ -275,7 +267,7 @@ def _keep_best_source(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "dedup_keep_best_source",
     _keep_best_source,
     tags=("dedup",),
@@ -311,11 +303,11 @@ def dedup_semantic_cluster(spark, sf_dir):
         f"SELECT vec_id, v, {nrm2} AS n2"
         f" FROM (SELECT vec_id, {ivx} AS v FROM embeddings) raw"
     ).localCheckpoint()
-    ivdf.createOrReplaceTempView("semdedup_iv_v")
     return spark.sql(
         _semantic_dedup(
-            SPARK, iv_src="SELECT vec_id, v, n2 FROM semdedup_iv_v"
-        )
+            SPARK, iv_src="SELECT vec_id, v, n2 FROM {ivdf}"
+        ),
+        ivdf=ivdf,
     )
 
 
@@ -464,7 +456,7 @@ def stream_session_windows(spark, sf_dir):
         )
     )
     name = "sess_win_sink_" + os.path.basename(src_dir)[-8:]
-    from .stream_infra import _state_partitions
+    from .stream_infra import _sink_rows, _state_partitions
 
     with _state_partitions(spark):
         q = (
@@ -486,7 +478,7 @@ def stream_session_windows(spark, sf_dir):
             raise TimeoutError(
                 "sessionization replay still running after 300 s"
             )
-    return spark.table(name).orderBy("user_id", "session_start")
+    return _sink_rows(spark, name).orderBy("user_id", "session_start")
 
 
 # ---------------------------------------------------------------------------
@@ -530,7 +522,7 @@ def _k_anonymity(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "quality_k_anonymity",
     _k_anonymity,
     tags=("quality", "profiling", "audit"),

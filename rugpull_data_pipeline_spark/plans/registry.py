@@ -5,14 +5,6 @@ here as a named query: a builder ``(spark, sf_dir) -> DataFrame`` and, when
 SQL-expressible, a DuckDB oracle string over the same parquet tables.
 ``__spark_entry__.py`` re-exports this registry as ``queries()`` /
 ``oracle_sql()``.
-
-Contract note: builders that stage intermediates behind fixed temp-view
-names (``mhlsh_*``, ``mhinc_*``, ``lpa_edges``, ``ivfpq_*``, ...) assume at
-most ONE in-flight build of that query per SparkSession — the driver, the
-bench, and the tests all build sequentially within a session. Two
-concurrent builds of the same query in one session would clobber each
-other's views; suffix the view names with a per-build token if that ever
-becomes a supported pattern (round-12 ADVICE).
 """
 
 from __future__ import annotations
@@ -26,6 +18,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.scalars import DUCK, SPARK
 from ..sources.tables import register_views
 
 BuilderFn = Callable[[SparkSession, str], DataFrame]
@@ -114,6 +107,16 @@ def sql_pair(
     _REGISTRY[name] = QuerySpec(
         name, builder, duck_sql if duck_sql is not None else spark_sql, tags, doc
     )
+
+
+def pair(
+    name: str,
+    q: Callable[[str], str],
+    tags: tuple[str, ...] = (),
+    doc: str = "",
+) -> None:
+    """Register ``q(dialect) -> SQL text`` as its Spark/DuckDB pair."""
+    sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
 
 
 def get(name: str) -> QuerySpec:

@@ -19,11 +19,7 @@ from pyspark.sql import functions as F
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
-from .registry import register, sql_pair, static_table
-
-
-def _pair(name: str, q, tags: tuple[str, ...] = (), doc: str = "") -> None:
-    sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
+from .registry import pair, register, sql_pair, static_table
 
 
 # ---------------------------------------------------------------------------
@@ -174,7 +170,7 @@ def _q01(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "q01_pricing_summary",
     _q01,
     tags=("agg",),
@@ -199,7 +195,7 @@ def _q03(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "q03_shipping_priority",
     _q03,
     tags=("join", "agg", "limit"),
@@ -224,7 +220,7 @@ def _q05(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "q05_local_supplier_volume",
     _q05,
     tags=("join", "agg"),
@@ -245,7 +241,7 @@ def _q06(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "q06_forecast_revenue",
     _q06,
     tags=("agg", "scan"),
@@ -274,7 +270,7 @@ def _q18(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "q18_large_volume_customers",
     _q18,
     tags=("join", "agg", "subquery"),
@@ -296,7 +292,7 @@ def _cond(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_conditional_pre_post",
     _cond,
     tags=("agg",),
@@ -318,7 +314,7 @@ def _lastval(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_last_value_per_key",
     _lastval,
     tags=("agg",),
@@ -338,7 +334,7 @@ def _distinct(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_distinct_per_type",
     _distinct,
     tags=("agg",),
@@ -355,7 +351,7 @@ def _dedup_events(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "dedup_exact_pairs",
     _dedup_events,
     tags=("agg", "dedup"),
@@ -377,7 +373,7 @@ def _rollup(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_rollup_region_nation",
     _rollup,
     tags=("agg", "sweep:rollup-empty"),
@@ -397,7 +393,7 @@ def _cube(d: str) -> str:
     """
 
 
-_pair("agg_cube_flag_status", _cube, tags=("agg", "sweep:rollup-empty"),
+pair("agg_cube_flag_status", _cube, tags=("agg", "sweep:rollup-empty"),
       doc="CUBE grouping sets.")
 
 
@@ -418,7 +414,7 @@ def _join_left(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "join_left_outer_orders",
     _join_left,
     tags=("join",),
@@ -439,7 +435,7 @@ def _join_full(d: str) -> str:
     """
 
 
-_pair("join_full_outer_nations", _join_full, tags=("join",), doc="Full outer join.")
+pair("join_full_outer_nations", _join_full, tags=("join",), doc="Full outer join.")
 
 
 def _join_semi(d: str) -> str:
@@ -452,7 +448,7 @@ def _join_semi(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "join_semi_parts_in_lineitem",
     _join_semi,
     tags=("join",),
@@ -475,7 +471,7 @@ def _join_anti(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "join_anti_customers_no_orders",
     _join_anti,
     tags=("join",),
@@ -497,7 +493,7 @@ def _join_semi_watchlist(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "join_watchlist_semi_events",
     _join_semi_watchlist,
     tags=("join", "flagship"),
@@ -522,7 +518,7 @@ def _join_enrich_tag(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "join_tag_enrichment",
     _join_enrich_tag,
     tags=("join",),
@@ -550,7 +546,7 @@ def _lag_price(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_price_change_10pct",
     _lag_price,
     tags=("window", "flagship"),
@@ -575,7 +571,7 @@ def _topk_group(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_topk_per_group",
     _topk_group,
     tags=("window", "limit"),
@@ -599,7 +595,7 @@ def _running(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_running_sum",
     _running,
     tags=("window",),
@@ -625,7 +621,7 @@ def _sessionize(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_sessionize_1h",
     _sessionize,
     tags=("window",),
@@ -647,7 +643,7 @@ def _intersect(d: str) -> str:
     """
 
 
-_pair("setop_intersect_buyers", _intersect, tags=("setop",), doc="INTERSECT.")
+pair("setop_intersect_buyers", _intersect, tags=("setop",), doc="INTERSECT.")
 
 
 def _except(d: str) -> str:
@@ -661,7 +657,7 @@ def _except(d: str) -> str:
     """
 
 
-_pair("setop_except_inactive", _except, tags=("setop",), doc="EXCEPT (anti set op).")
+pair("setop_except_inactive", _except, tags=("setop",), doc="EXCEPT (anti set op).")
 
 
 def _union(d: str) -> str:
@@ -675,7 +671,7 @@ def _union(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "setop_union_watchlists",
     _union,
     tags=("setop",),
@@ -693,7 +689,7 @@ def _sort_limit(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "sort_global_topn",
     _sort_limit,
     tags=("limit",),
@@ -722,7 +718,7 @@ def _string_funcs(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "scalar_string_regex",
     _string_funcs,
     tags=("scalar",),
@@ -742,7 +738,7 @@ def _date_funcs(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "scalar_date_bucketing",
     _date_funcs,
     tags=("scalar", "agg"),
@@ -764,7 +760,7 @@ def _math_amm(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "scalar_amm_price_math",
     _math_amm,
     tags=("scalar",),
@@ -869,7 +865,7 @@ def _rank_suite(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_rank_ntile",
     _rank_suite,
     tags=("window",),
@@ -889,7 +885,7 @@ def _corr_subquery(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "subquery_correlated_above_avg",
     _corr_subquery,
     tags=("join", "subquery"),

@@ -29,13 +29,9 @@ from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
 from .analytics_ops import _W_EDGE, _pw_df, _weighted_edges_sql
 from .diagnostics_ops import _EV_CENTS, _cents, _r6u
-from .llm_ops import _toks, _word_tokens_all
+from .llm_ops import _word_tokens_all
 from .mining_ops import _day_idx
-from .registry import register, sql_pair
-
-
-def _pair(name: str, q, tags: tuple[str, ...] = (), doc: str = "") -> None:
-    sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
+from .registry import pair, register, sql_pair
 
 
 # ---------------------------------------------------------------------------
@@ -138,9 +134,9 @@ def _mwu(d: str, g_src: str | None = None) -> str:
 )
 def eval_mann_whitney_u(spark, sf_dir):
     grid = spark.sql(_mwu_core(SPARK)).localCheckpoint()
-    grid.createOrReplaceTempView("mwu_grid_v")
     return spark.sql(
-        _mwu(SPARK, g_src="SELECT event_type, s, c FROM mwu_grid_v")
+        _mwu(SPARK, g_src="SELECT event_type, s, c FROM {grid}"),
+        grid=grid,
     )
 
 
@@ -203,7 +199,7 @@ def _rbo(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "eval_rank_biased_overlap",
     _rbo,
     tags=("eval", "stats"),
@@ -344,9 +340,9 @@ def _cindex(d: str, subj_src: str | None = None) -> str:
 )
 def eval_concordance_index(spark, sf_dir):
     subj = spark.sql(_cindex_core(SPARK)).localCheckpoint()
-    subj.createOrReplaceTempView("cindex_subj_v")
     return spark.sql(
-        _cindex(SPARK, subj_src="SELECT user_id, ev, t, r FROM cindex_subj_v")
+        _cindex(SPARK, subj_src="SELECT user_id, ev, t, r FROM {subj}"),
+        subj=subj,
     )
 
 
@@ -521,9 +517,9 @@ def _dsketch_duck() -> str:
 )
 def audit_quantile_sketch(spark, sf_dir):
     g = spark.sql(_mwu_core(SPARK)).localCheckpoint()
-    g.createOrReplaceTempView("qsketch_g_v")
     return spark.sql(
-        _qsketch_spark(g_src="SELECT event_type, s, c FROM qsketch_g_v")
+        _qsketch_spark(g_src="SELECT event_type, s, c FROM {g}"),
+        g=g,
     )
 
 
@@ -627,9 +623,9 @@ def _token_novelty(d: str, tb_src: str | None = None) -> str:
 )
 def text_token_novelty(spark, sf_dir):
     tb = spark.sql(_novelty_core(SPARK)).localCheckpoint()
-    tb.createOrReplaceTempView("novelty_tb_v")
     return spark.sql(
-        _token_novelty(SPARK, tb_src="SELECT batch, tok, c FROM novelty_tb_v")
+        _token_novelty(SPARK, tb_src="SELECT batch, tok, c FROM {tb}"),
+        tb=tb,
     )
 
 
@@ -728,9 +724,9 @@ def _burrows(d: str, ts_src: str | None = None) -> str:
 )
 def text_burrows_delta(spark, sf_dir):
     ts = spark.sql(_burrows_core(SPARK)).localCheckpoint()
-    ts.createOrReplaceTempView("burrows_ts_v")
     return spark.sql(
-        _burrows(SPARK, ts_src="SELECT source, tok, c FROM burrows_ts_v")
+        _burrows(SPARK, ts_src="SELECT source, tok, c FROM {ts}"),
+        ts=ts,
     )
 
 
@@ -747,7 +743,7 @@ def _rake_core(d: str) -> str:
     if d == SPARK:
         tokpos = f"""
         SELECT doc_id, pos, tok
-        FROM (SELECT doc_id, {_toks(SPARK)} AS tk FROM documents) b
+        FROM (SELECT doc_id, {S.toks(SPARK)} AS tk FROM documents) b
         LATERAL VIEW posexplode(tk) t AS pos, tok
         """
     else:
@@ -755,7 +751,7 @@ def _rake_core(d: str) -> str:
         SELECT doc_id, pos - 1 AS pos, tok FROM (
             SELECT doc_id, unnest(range(1, len(tk) + 1)) AS pos,
                 unnest(tk) AS tok
-            FROM (SELECT doc_id, {_toks(DUCK)} AS tk FROM documents) b
+            FROM (SELECT doc_id, {S.toks(DUCK)} AS tk FROM documents) b
         ) u
         """
     return f"""
@@ -841,9 +837,9 @@ def _rake(d: str, ns_src: str | None = None) -> str:
 )
 def text_keyphrase_rake(spark, sf_dir):
     ns = spark.sql(_rake_core(SPARK)).localCheckpoint()
-    ns.createOrReplaceTempView("rake_nonstop_v")
     return spark.sql(
-        _rake(SPARK, ns_src="SELECT doc_id, pos, tok, grp FROM rake_nonstop_v")
+        _rake(SPARK, ns_src="SELECT doc_id, pos, tok, grp FROM {ns}"),
+        ns=ns,
     )
 
 
@@ -907,9 +903,9 @@ def _reciprocity(d: str, de_src: str | None = None) -> str:
 )
 def graph_edge_reciprocity(spark, sf_dir):
     de = spark.sql(_reciprocity_core(SPARK)).localCheckpoint()
-    de.createOrReplaceTempView("recip_de_v")
     return spark.sql(
-        _reciprocity(SPARK, de_src="SELECT src, dst, w FROM recip_de_v")
+        _reciprocity(SPARK, de_src="SELECT src, dst, w FROM {de}"),
+        de=de,
     )
 
 
@@ -989,9 +985,9 @@ def _rich_club(d: str, pw_src: str | None = None) -> str:
 )
 def graph_rich_club(spark, sf_dir):
     pw = _pw_df(spark, sf_dir).localCheckpoint()
-    pw.createOrReplaceTempView("richclub_pw_v")
     return spark.sql(
-        _rich_club(SPARK, pw_src="SELECT src, dst, n_orders FROM richclub_pw_v")
+        _rich_club(SPARK, pw_src="SELECT src, dst, n_orders FROM {pw}"),
+        pw=pw,
     )
 
 
@@ -1068,9 +1064,9 @@ def _cohort_ltv(d: str, f_src: str | None = None) -> str:
 )
 def events_cohort_ltv(spark, sf_dir):
     f = spark.sql(_cohort_first_day(SPARK)).localCheckpoint()
-    f.createOrReplaceTempView("ltv_f_v")
     return spark.sql(
-        _cohort_ltv(SPARK, f_src="SELECT user_id, fd FROM ltv_f_v")
+        _cohort_ltv(SPARK, f_src="SELECT user_id, fd FROM {f}"),
+        f=f,
     )
 
 
@@ -1119,7 +1115,7 @@ def _pps(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "sample_pps_systematic",
     _pps,
     tags=("sample",),

@@ -41,12 +41,8 @@ from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
 from .diagnostics_ops import _EV_CENTS, _r6u
 from .mining_ops import _day_idx
-from .registry import register, sql_pair
+from .registry import pair, register
 from .robustness_ops import _mwu_core
-
-
-def _pair(name: str, q, tags: tuple[str, ...] = (), doc: str = "") -> None:
-    sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
 
 
 # Decimal-widened product of two bigint grid columns: at 100 TB a cell
@@ -142,9 +138,9 @@ def _kruskal_wallis(d: str, g_src: str | None = None) -> str:
 )
 def eval_kruskal_wallis(spark, sf_dir):
     g = spark.sql(_mwu_core(SPARK)).localCheckpoint()
-    g.createOrReplaceTempView("kw_grid_v")
     return spark.sql(
-        _kruskal_wallis(SPARK, g_src="SELECT event_type, s, c FROM kw_grid_v")
+        _kruskal_wallis(SPARK, g_src="SELECT event_type, s, c FROM {g}"),
+        g=g,
     )
 
 
@@ -230,9 +226,9 @@ def _jonckheere(d: str, g_src: str | None = None) -> str:
 )
 def eval_jonckheere_terpstra(spark, sf_dir):
     g = spark.sql(_mwu_core(SPARK)).localCheckpoint()
-    g.createOrReplaceTempView("jt_grid_v")
     return spark.sql(
-        _jonckheere(SPARK, g_src="SELECT event_type, s, c FROM jt_grid_v")
+        _jonckheere(SPARK, g_src="SELECT event_type, s, c FROM {g}"),
+        g=g,
     )
 
 
@@ -326,9 +322,9 @@ def _friedman(d: str, g_src: str | None = None) -> str:
 )
 def eval_friedman_ranks(spark, sf_dir):
     g = spark.sql(_friedman_core(SPARK)).localCheckpoint()
-    g.createOrReplaceTempView("friedman_grid_v")
     return spark.sql(
-        _friedman(SPARK, g_src="SELECT di, event_type, c FROM friedman_grid_v")
+        _friedman(SPARK, g_src="SELECT di, event_type, c FROM {g}"),
+        g=g,
     )
 
 
@@ -381,7 +377,7 @@ def _chatterjee(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "eval_chatterjee_xi",
     _chatterjee,
     tags=("eval", "stats"),
@@ -460,7 +456,7 @@ def _gk_gamma(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "eval_goodman_kruskal_gamma",
     _gk_gamma,
     tags=("eval", "stats"),
@@ -524,7 +520,7 @@ def _theil_u(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "eval_theil_u_forecast",
     _theil_u,
     tags=("eval", "timeseries"),
@@ -598,7 +594,7 @@ def _power_twoprop(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "eval_power_twoprop",
     _power_twoprop,
     tags=("eval", "stats"),
@@ -647,7 +643,7 @@ def _srm(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "audit_srm_assignment",
     _srm,
     tags=("audit", "eval"),
@@ -788,9 +784,9 @@ def _logrank(d: str, subj_src: str | None = None) -> str:
 )
 def events_logrank_test(spark, sf_dir):
     subj = spark.sql(_subj_core(SPARK)).localCheckpoint()
-    subj.createOrReplaceTempView("logrank_subj_v")
     return spark.sql(
-        _logrank(SPARK, subj_src="SELECT user_id, arm, ev, t FROM logrank_subj_v")
+        _logrank(SPARK, subj_src="SELECT user_id, arm, ev, t FROM {subj}"),
+        subj=subj,
     )
 
 
@@ -855,9 +851,9 @@ def _nelson_aalen(d: str, subj_src: str | None = None) -> str:
 )
 def events_nelson_aalen(spark, sf_dir):
     subj = spark.sql(_subj_core(SPARK)).localCheckpoint()
-    subj.createOrReplaceTempView("na_subj_v")
     return spark.sql(
-        _nelson_aalen(SPARK, subj_src="SELECT user_id, arm, ev, t FROM na_subj_v")
+        _nelson_aalen(SPARK, subj_src="SELECT user_id, arm, ev, t FROM {subj}"),
+        subj=subj,
     )
 
 
@@ -941,7 +937,7 @@ def _expgof(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "events_interarrival_expgof",
     _expgof,
     tags=("events", "stats"),
@@ -1049,7 +1045,7 @@ def _gap_runs(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_interarrival_gap_test",
     _gap_runs,
     tags=("window", "timeseries", "stats"),
@@ -1110,7 +1106,7 @@ def _round_bias(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "profile_round_number_bias",
     _round_bias,
     tags=("profile", "forensics"),
@@ -1157,7 +1153,7 @@ def _split_tx(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "profile_split_transactions",
     _split_tx,
     tags=("profile", "forensics"),
@@ -1202,7 +1198,7 @@ def _amount_reuse(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "profile_amount_reuse",
     _amount_reuse,
     tags=("profile", "forensics"),
@@ -1276,7 +1272,7 @@ def _card_testing(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "profile_card_testing_runs",
     _card_testing,
     tags=("profile", "forensics"),
@@ -1331,7 +1327,7 @@ def _seq_integrity(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "profile_sequence_integrity",
     _seq_integrity,
     tags=("profile", "forensics"),
@@ -1381,7 +1377,7 @@ def _velocity(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "profile_velocity_screen",
     _velocity,
     tags=("profile", "forensics"),
@@ -1457,7 +1453,7 @@ def _page_hinkley(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_page_hinkley",
     _page_hinkley,
     tags=("window", "timeseries", "stats"),
@@ -1509,7 +1505,7 @@ def _amihud(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_amihud_illiquidity",
     _amihud,
     tags=("window", "finance"),
@@ -1583,7 +1579,7 @@ def _stochastic_k(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_stochastic_k",
     _stochastic_k,
     tags=("window", "finance"),
@@ -1668,8 +1664,7 @@ def _katz_edges(d: str) -> str:
 )
 def graph_katz_power3(spark, sf_dir):
     e = spark.sql(_katz_edges(SPARK)).localCheckpoint()
-    e.createOrReplaceTempView("katz_edges_v")
-    return spark.sql(_katz3(SPARK, e_src="SELECT src, dst FROM katz_edges_v"))
+    return spark.sql(_katz3(SPARK, e_src="SELECT src, dst FROM {e}"), e=e)
 
 
 # ---------------------------------------------------------------------------
@@ -1709,7 +1704,7 @@ def _atkinson(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_atkinson_index",
     _atkinson,
     tags=("agg", "stats"),
@@ -1770,7 +1765,7 @@ def _code_detect(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_code_prose_detect",
     _code_detect,
     tags=("text", "llm"),
@@ -1849,7 +1844,7 @@ def _chi2_select(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "mlprep_chi2_feature_select",
     _chi2_select,
     tags=("mlprep", "stats"),

@@ -14,12 +14,8 @@ exercised in tests over generated block JSON (sources/solana.py).
 from __future__ import annotations
 
 from ..functions import scalars as S
-from ..functions.scalars import DUCK, SPARK
-from .registry import sql_pair
-
-
-def _pair(name: str, q, tags: tuple[str, ...] = (), doc: str = "") -> None:
-    sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
+from ..functions.scalars import SPARK
+from .registry import pair
 
 
 def _json_agg(d: str) -> str:
@@ -34,7 +30,7 @@ def _json_agg(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "json_extract_agg",
     _json_agg,
     tags=("json", "agg"),
@@ -58,7 +54,7 @@ def _json_prefilter(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "json_prefilter_then_parse",
     _json_prefilter,
     tags=("json",),
@@ -85,7 +81,7 @@ def _json_struct(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "json_struct_parse_bucket",
     _json_struct,
     tags=("json", "agg"),

@@ -29,12 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.scalars import DUCK, SPARK
-from .registry import register, sql_pair, static_table
-
-
-def _pair(name, q, tags=(), doc=""):
-    sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
+from ..functions.scalars import SPARK
+from .registry import pair, register, static_table
 
 
 # ---------------------------------------------------------------------------
@@ -58,7 +54,7 @@ def _variant(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "variant_shred_events",
     _variant,
     tags=("json", "spark4"),
@@ -92,7 +88,7 @@ def _rec_spine(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "recursive_cte_month_spine",
     _rec_spine,
     tags=("relational", "spark4"),
@@ -122,7 +118,7 @@ def _lateral(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "lateral_top2_per_nation",
     _lateral,
     tags=("relational", "subquery", "spark4"),
@@ -221,7 +217,7 @@ def _try_safe(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "scalar_try_safe_ops",
     _try_safe,
     tags=("scalar", "spark4"),
@@ -416,7 +412,6 @@ def spark4_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         .localCheckpoint()
     )
-    grid.createOrReplaceTempView("scripting_cents_grid")
     return spark.sql(
         """
         BEGIN
@@ -424,13 +419,13 @@ def spark4_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
           DECLARE n_total BIGINT;
           DECLARE n_above BIGINT;
           DECLARE n_iters INT DEFAULT 0;
-          SET n_total = (SELECT sum(c) FROM scripting_cents_grid);
+          SET n_total = (SELECT sum(c) FROM {grid});
           SET n_above = (SELECT coalesce(sum(c), 0)
-                         FROM scripting_cents_grid WHERE s >= thr);
+                         FROM {grid} WHERE s >= thr);
           WHILE n_above * 100 > n_total DO
             SET thr = thr * 2;
             SET n_above = (SELECT coalesce(sum(c), 0)
-                           FROM scripting_cents_grid WHERE s >= thr);
+                           FROM {grid} WHERE s >= thr);
             SET n_iters = n_iters + 1;
           END WHILE;
           -- empty grid (no valued events): the oracle's recursive walk
@@ -439,5 +434,6 @@ def spark4_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
           SELECT thr AS threshold_cents, n_above, n_total, n_iters
           WHERE n_total IS NOT NULL;
         END
-        """
+        """,
+        grid=grid,
     )

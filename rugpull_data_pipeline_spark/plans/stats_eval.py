@@ -49,24 +49,18 @@ Scale notes (each op, at 1000 executors / 100 TB):
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
+
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
-from .registry import register, sql_pair
-
-
-def _pair(name: str, q, tags: tuple[str, ...] = (), doc: str = "") -> None:
-    sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
-
-
-def _toks(d: str) -> str:
-    return S.split_ws("text", d)
+from .registry import pair, register
 
 
 def _word_tokens(table_sql: str, d: str) -> str:
     """(doc_id, lang, tok) — one row per token occurrence."""
     if d == SPARK:
-        return f"SELECT doc_id, lang, explode({_toks(d)}) AS tok FROM ({table_sql})"
-    return f"SELECT doc_id, lang, unnest({_toks(d)}) AS tok FROM ({table_sql})"
+        return f"SELECT doc_id, lang, explode({S.toks(d)}) AS tok FROM ({table_sql})"
+    return f"SELECT doc_id, lang, unnest({S.toks(d)}) AS tok FROM ({table_sql})"
 
 
 # Cents quantization via floor: round() half-way rules differ between the
@@ -114,7 +108,7 @@ def _auc(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "eval_auc_roc",
     _auc,
     tags=("eval", "mlprep"),
@@ -173,7 +167,7 @@ def _ks_drift(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "profile_drift_ks",
     _ks_drift,
     tags=("profiling", "mlprep"),
@@ -231,7 +225,7 @@ def _stump(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "mlprep_decision_stump",
     _stump,
     tags=("mlprep", "eval"),
@@ -304,9 +298,9 @@ def _chi2(d: str, cell_src: str | None = None) -> str:
 )
 def agg_chi2_independence(spark, sf_dir):
     cell = spark.sql(_lang_source_cell_core(SPARK)).localCheckpoint()
-    cell.createOrReplaceTempView("chi2_cell_v")
     return spark.sql(
-        _chi2(SPARK, cell_src="SELECT lang, source, c FROM chi2_cell_v")
+        _chi2(SPARK, cell_src="SELECT lang, source, c FROM {cell}"),
+        cell=cell,
     )
 
 
@@ -369,9 +363,9 @@ def graph_adamic_adar(spark, sf_dir):
     ut = spark.sql(
         "SELECT DISTINCT user_id, event_type FROM events"
     ).localCheckpoint()
-    ut.createOrReplaceTempView("aa_ut_v")
     return spark.sql(
-        _adamic_adar(SPARK, ut_src="SELECT user_id, event_type FROM aa_ut_v")
+        _adamic_adar(SPARK, ut_src="SELECT user_id, event_type FROM {ut}"),
+        ut=ut,
     )
 
 
@@ -382,7 +376,7 @@ def graph_adamic_adar(spark, sf_dir):
 
 def _naive_bayes(d: str, tr_src: str | None = None) -> str:
     """``tr_src`` overrides the train-token CTE body (the Spark builder
-    passes a localCheckpointed temp view so the explode runs ONCE; the
+    passes a localCheckpointed DataFrame so the explode runs ONCE; the
     oracle inlines it — DuckDB materializes CTEs referenced repeatedly)."""
     train_docs = "SELECT doc_id, lang, text FROM documents WHERE doc_id % 2 = 0"
     test_docs = "SELECT doc_id, lang, text FROM documents WHERE doc_id % 2 = 1"
@@ -448,9 +442,9 @@ def _naive_bayes(d: str, tr_src: str | None = None) -> str:
 def mlprep_naive_bayes(spark, sf_dir):
     train_docs = "SELECT doc_id, lang, text FROM documents WHERE doc_id % 2 = 0"
     tr = spark.sql(_word_tokens(train_docs, SPARK)).localCheckpoint()
-    tr.createOrReplaceTempView("nb_train_toks")
     return spark.sql(
-        _naive_bayes(SPARK, tr_src="SELECT * FROM nb_train_toks")
+        _naive_bayes(SPARK, tr_src="SELECT * FROM {tr}"),
+        tr=tr,
     )
 
 
@@ -501,7 +495,7 @@ def _zipf(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_zipf_fit",
     _zipf,
     tags=("text", "profiling"),
@@ -602,10 +596,11 @@ def _round_half_up6(x: float) -> float:
     )
 
 
-def _pca_power_components(spark) -> list[float]:
-    """Run the 2-round power iteration; return the 6-dp-quantized
-    UNnormalized second-round component vector (matches the oracle's c2),
-    or None when the embedding table is empty (no component rows).
+def _pca_power_components(spark) -> tuple[DataFrame, list[float] | None]:
+    """Run the 2-round power iteration; return the checkpointed
+    (vec_id, dm, x) element table with the 6-dp-quantized UNnormalized
+    second-round component vector (matches the oracle's c2), or None for
+    the vector when the embedding table is empty (no component rows).
 
     The dimension count is DERIVED from the table (max dim + 1), never
     hardcoded: a fixed 64 crashed with IndexError the moment the
@@ -614,11 +609,10 @@ def _pca_power_components(spark) -> list[float]:
     and both engines share the constant so the 6-dp quantization chain
     stays bit-identical at any dimensionality."""
     xv = spark.sql(_pca_xv(SPARK)).localCheckpoint()
-    xv.createOrReplaceTempView("pca_xv")
-    ndims_row = spark.sql("SELECT max(dm) + 1 AS n FROM pca_xv").first()
+    ndims_row = spark.sql("SELECT max(dm) + 1 AS n FROM {xv}", xv=xv).first()
     ndims = ndims_row["n"] if ndims_row else None
     if not ndims:
-        return None  # empty input: no component rows at all
+        return xv, None  # empty input: no component rows at all
     v = [0.125] * ndims
     for _ in range(_PCA_ROUNDS):
         vals = ", ".join(
@@ -629,19 +623,20 @@ def _pca_power_components(spark) -> list[float]:
             WITH vt AS (SELECT * FROM VALUES {vals} AS t(dm, m)),
             y AS (
                 SELECT xv.vec_id, {S.dsum('xv.x * vt.m', SPARK)} AS y
-                FROM pca_xv xv JOIN vt ON xv.dm = vt.dm GROUP BY xv.vec_id
+                FROM {{xv}} xv JOIN vt ON xv.dm = vt.dm GROUP BY xv.vec_id
             )
             SELECT xv.dm, round({S.dsum('y.y * xv.x', SPARK)}, 6) AS m
-            FROM pca_xv xv JOIN y ON xv.vec_id = y.vec_id GROUP BY xv.dm
-            """
+            FROM {{xv}} xv JOIN y ON xv.vec_id = y.vec_id GROUP BY xv.dm
+            """,
+            xv=xv,
         ).collect()
         if not comp:
-            return None  # empty input: no component rows at all
+            return xv, None  # empty input: no component rows at all
         nxt = [0.0] * ndims
         for row in comp:
             nxt[row["dm"]] = _round_half_up6(row["m"])
         v = nxt
-    return v
+    return xv, v
 
 
 @register(
@@ -661,7 +656,7 @@ def _pca_power_components(spark) -> list[float]:
     "over decimal-exact sums.",
 )
 def sim_pca_power1(spark, sf_dir):
-    v = _pca_power_components(spark)
+    _, v = _pca_power_components(spark)
     if v is None:
         # empty slice: mirror the oracle's 0-row answer
         return spark.createDataFrame([], "dim int, loading double")
@@ -726,11 +721,11 @@ def _ann_recall(d: str, buckets_src: str | None = None) -> str:
 )
 def audit_ann_recall(spark, sf_dir):
     b = _lsh_buckets_df(spark, sf_dir).localCheckpoint()
-    b.createOrReplaceTempView("annrec_buckets_v")
     return spark.sql(
         _ann_recall(
-            SPARK, buckets_src="SELECT vec_id, bucket FROM annrec_buckets_v"
-        )
+            SPARK, buckets_src="SELECT vec_id, bucket FROM {b}"
+        ),
+        b=b,
     )
 
 
@@ -772,7 +767,7 @@ def _neyman(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "sample_stratified_neyman",
     _neyman,
     tags=("sampling", "profiling"),
@@ -836,7 +831,7 @@ def _threshold_sweep(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "eval_threshold_sweep",
     _threshold_sweep,
     tags=("eval", "mlprep"),
@@ -886,7 +881,7 @@ def _quantile_bins(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "mlprep_quantile_binning",
     _quantile_bins,
     tags=("mlprep",),
@@ -963,9 +958,9 @@ def _mutual_info(d: str, cell_src: str | None = None) -> str:
 )
 def agg_mutual_info(spark, sf_dir):
     cell = spark.sql(_lang_source_cell_core(SPARK)).localCheckpoint()
-    cell.createOrReplaceTempView("mi_cell_v")
     return spark.sql(
-        _mutual_info(SPARK, cell_src="SELECT lang, source, c FROM mi_cell_v")
+        _mutual_info(SPARK, cell_src="SELECT lang, source, c FROM {cell}"),
+        cell=cell,
     )
 
 
@@ -1011,7 +1006,7 @@ def _ab_ztest(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "eval_ab_ztest",
     _ab_ztest,
     tags=("eval", "profiling"),
@@ -1128,9 +1123,8 @@ def _label_prop(d: str, edges_src: str | None = None) -> str:
 )
 def graph_label_prop2(spark, sf_dir):
     edges = spark.sql(_lpa_edges(SPARK)).localCheckpoint()
-    edges.createOrReplaceTempView("lpa_edges")
     return spark.sql(
-        _label_prop(SPARK, edges_src="SELECT u, v FROM lpa_edges")
+        _label_prop(SPARK, edges_src="SELECT u, v FROM {edges}"), edges=edges
     )
 
 
@@ -1164,10 +1158,9 @@ def _lsh_buckets_df(spark, sf_dir):
     from .llm_ops import _N_PLANES
     from .registry import static_table
 
+    # View-gated source (direct test callers may hold views for a
+    # different sf_dir — the static_table contract).
     emb = static_table(spark, sf_dir, "embeddings")
-    # View-gated source for the SQL form (direct test callers may hold
-    # views for a different sf_dir — the static_table contract).
-    emb.createOrReplaceTempView("lshb_emb_v")
 
     def psign(j: int) -> str:
         h = (
@@ -1192,11 +1185,11 @@ def _lsh_buckets_df(spark, sf_dir):
     WITH planes AS (
         SELECT dim, {scols}
         FROM (SELECT explode(sequence(1,
-            (SELECT max(size(embedding)) FROM lshb_emb_v))) AS dim)
+            (SELECT max(size(embedding)) FROM {{emb}}))) AS dim)
     ),
     ed AS (
         SELECT vec_id, pos + 1 AS dim, cast(col as double) AS v
-        FROM (SELECT /*+ REPARTITION */ vec_id, embedding FROM lshb_emb_v) e
+        FROM (SELECT /*+ REPARTITION */ vec_id, embedding FROM {{emb}}) e
         LATERAL VIEW posexplode(embedding) t AS pos, col
     ),
     sums AS (
@@ -1205,7 +1198,7 @@ def _lsh_buckets_df(spark, sf_dir):
         GROUP BY e.vec_id
     )
     SELECT vec_id, cast({bits} as bigint) AS bucket FROM sums
-    """)
+    """, emb=emb)
 
 
 def _lsh_buckets(d: str) -> str:
@@ -1347,19 +1340,19 @@ def _multiprobe_recall(
 )
 def audit_multiprobe_recall(spark, sf_dir):
     b = _lsh_buckets_df(spark, sf_dir).localCheckpoint()
-    b.createOrReplaceTempView("mprobe_buckets_v")
     q = spark.sql(
-        f"WITH buckets AS (SELECT vec_id, bucket FROM mprobe_buckets_v)"
-        f"{_multiprobe_queries_core(SPARK)}"
+        "WITH buckets AS (SELECT vec_id, bucket FROM {b})"
+        f"{_multiprobe_queries_core(SPARK)}",
+        b=b,
     ).localCheckpoint()
-    q.createOrReplaceTempView("mprobe_queries_v")
     return spark.sql(
         _multiprobe_recall(
             SPARK,
-            buckets_src="SELECT vec_id, bucket FROM mprobe_buckets_v",
-            queries_src="SELECT query_id, embedding, bucket"
-            " FROM mprobe_queries_v",
-        )
+            buckets_src="SELECT vec_id, bucket FROM {b}",
+            queries_src="SELECT query_id, embedding, bucket FROM {q}",
+        ),
+        b=b,
+        q=q,
     )
 
 
@@ -1439,7 +1432,7 @@ def _whiten_oracle() -> str:
     "broadcasts — at 100 TB it rides the same scan as the ranking.",
 )
 def sim_whiten_rerank(spark, sf_dir):
-    comp = _pca_power_components(spark)
+    xv, comp = _pca_power_components(spark)
     if comp is None:
         # empty slice: mirror the oracle's 0-row answer
         return spark.createDataFrame(
@@ -1453,7 +1446,7 @@ def sim_whiten_rerank(spark, sf_dir):
     # every pair identically on both engines (no ANSI error)
     return spark.sql(
         f"""
-        WITH xv AS (SELECT * FROM pca_xv),
+        WITH xv AS (SELECT * FROM {{xv}}),
         ct AS (SELECT * FROM VALUES {vals} AS t(dm, m)),
         nrm AS (SELECT sqrt({S.dsum('m * m', SPARK)}) AS nr FROM ct),
         loading AS (SELECT ct.dm,
@@ -1461,7 +1454,8 @@ def sim_whiten_rerank(spark, sf_dir):
                             AS l
                     FROM ct, nrm),
         {_whiten_body(SPARK)}
-        """
+        """,
+        xv=xv,
     )
 
 
@@ -1513,7 +1507,7 @@ def _spearman(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "eval_spearman_rho",
     _spearman,
     tags=("eval", "profiling"),
@@ -1574,7 +1568,7 @@ def _winsorized(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "agg_winsorized_mean",
     _winsorized,
     tags=("agg", "profiling"),
@@ -1635,7 +1629,7 @@ def _interarrival(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "events_interarrival_stats",
     _interarrival,
     tags=("events", "profiling", "series"),
@@ -1688,7 +1682,7 @@ def _calibration(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "eval_calibration_bins",
     _calibration,
     tags=("eval", "mlprep"),
@@ -1782,12 +1776,12 @@ def eval_ndcg_ranking(spark, sf_dir):
         f" FROM ({toks}) t GROUP BY doc_id, lang) nv"
         " JOIN documents d ON d.doc_id = nv.doc_id"
     ).localCheckpoint()
-    scored.createOrReplaceTempView("ndcg_scored_v")
     return spark.sql(
         _ndcg(
             SPARK,
-            scored_src="SELECT doc_id, lang, n_chars, rel FROM ndcg_scored_v",
-        )
+            scored_src="SELECT doc_id, lang, n_chars, rel FROM {scored}",
+        ),
+        scored=scored,
     )
 
 
@@ -1833,7 +1827,7 @@ def _freq_of_freq(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "profile_freq_of_freq",
     _freq_of_freq,
     tags=("profiling", "text"),
@@ -1893,7 +1887,7 @@ def _theil_sen(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_theil_sen",
     _theil_sen,
     tags=("window", "series", "profiling"),
@@ -1969,7 +1963,7 @@ def _pettitt(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_pettitt_changepoint",
     _pettitt,
     tags=("window", "series", "eval"),
@@ -1990,7 +1984,7 @@ _pair(
 
 
 def _cohens_kappa(d: str) -> str:
-    nvoc = S.arr_len(S.arr_distinct(_toks(d), d), d)
+    nvoc = S.arr_len(S.arr_distinct(S.toks(d), d), d)
     return f"""
     WITH preds AS (
         -- two independent curation gates over the same doc: rater A keeps
@@ -2035,7 +2029,7 @@ def _cohens_kappa(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "eval_cohens_kappa",
     _cohens_kappa,
     tags=("eval", "text"),
@@ -2135,19 +2129,19 @@ def _modularity(
 )
 def graph_community_modularity(spark, sf_dir):
     edges = spark.sql(_lpa_edges(SPARK)).localCheckpoint()
-    edges.createOrReplaceTempView("modularity_edges")
-    edges_ref = "SELECT u, v FROM modularity_edges"
+    edges_ref = "SELECT u, v FROM {edges}"
     body, prev = _lpa_chain(SPARK, edges_ref)
     labels = spark.sql(
-        f"WITH {body} SELECT node, label FROM {prev}"
+        f"WITH {body} SELECT node, label FROM {prev}", edges=edges
     ).localCheckpoint()
-    labels.createOrReplaceTempView("modularity_labels")
     return spark.sql(
         _modularity(
             SPARK,
             edges_src=edges_ref,
-            labels_src="SELECT node, label FROM modularity_labels",
-        )
+            labels_src="SELECT node, label FROM {labels}",
+        ),
+        edges=edges,
+        labels=labels,
     )
 
 
@@ -2199,7 +2193,7 @@ def _brier(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "eval_brier_score",
     _brier,
     tags=("eval", "mlprep"),
@@ -2275,7 +2269,7 @@ def _vpin(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_vpin_toxicity",
     _vpin,
     tags=("window", "series", "domain"),
@@ -2351,7 +2345,7 @@ def _ljung_box(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_ljung_box",
     _ljung_box,
     tags=("window", "series", "eval"),
@@ -2454,11 +2448,11 @@ def _simpson(d: str, cells_src: str | None = None) -> str:
 )
 def profile_simpson_paradox(spark, sf_dir):
     cells = spark.sql(_simpson_cells_core(SPARK)).localCheckpoint()
-    cells.createOrReplaceTempView("simpson_cells_v")
     return spark.sql(
         _simpson(
-            SPARK, cells_src="SELECT stratum, arm, n, conv FROM simpson_cells_v"
-        )
+            SPARK, cells_src="SELECT stratum, arm, n, conv FROM {cells}"
+        ),
+        cells=cells,
     )
 
 # ---------------------------------------------------------------------------
@@ -2512,7 +2506,7 @@ def _crosscorr(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_crosscorr_leadlag",
     _crosscorr,
     tags=("window", "series", "eval"),
@@ -2610,9 +2604,9 @@ def _jsd_drift(d: str, sc_src: str | None = None) -> str:
 )
 def profile_jsd_source_drift(spark, sf_dir):
     sc = spark.sql(_jsd_counts(SPARK)).localCheckpoint()
-    sc.createOrReplaceTempView("jsd_src_counts")
     return spark.sql(
-        _jsd_drift(SPARK, sc_src="SELECT * FROM jsd_src_counts")
+        _jsd_drift(SPARK, sc_src="SELECT * FROM {sc}"),
+        sc=sc,
     )
 
 
@@ -2699,8 +2693,9 @@ def _mann_kendall(d: str, daily_src: str | None = None) -> str:
 )
 def window_mann_kendall(spark, sf_dir):
     daily = spark.sql(_mk_daily(SPARK)).localCheckpoint()
-    daily.createOrReplaceTempView("mk_daily")
-    return spark.sql(_mann_kendall(SPARK, daily_src="SELECT * FROM mk_daily"))
+    return spark.sql(
+        _mann_kendall(SPARK, daily_src="SELECT * FROM {daily}"), daily=daily
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2741,7 +2736,7 @@ def _mcnemar(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "eval_mcnemar_paired",
     _mcnemar,
     tags=("eval",),
@@ -2842,22 +2837,24 @@ def _heaps_fit(
 )
 def profile_heaps_law(spark, sf_dir):
     tok = spark.sql(_heaps_tokens(SPARK)).localCheckpoint()
-    tok.createOrReplaceTempView("heaps_toks")
-    spark.sql(
-        "SELECT doc_id, cast(count(*) as bigint) AS m"
-        " FROM heaps_toks GROUP BY doc_id"
-    ).localCheckpoint().createOrReplaceTempView("heaps_doc_m")
-    spark.sql(
-        "SELECT tok, cast(min(doc_id) as bigint) AS fd"
-        " FROM heaps_toks GROUP BY tok"
-    ).localCheckpoint().createOrReplaceTempView("heaps_first")
+    doc_m = spark.sql(
+        "SELECT doc_id, cast(count(*) as bigint) AS m FROM {tok} GROUP BY doc_id",
+        tok=tok,
+    ).localCheckpoint()
+    first = spark.sql(
+        "SELECT tok, cast(min(doc_id) as bigint) AS fd FROM {tok} GROUP BY tok",
+        tok=tok,
+    ).localCheckpoint()
     return spark.sql(
         _heaps_fit(
             SPARK,
-            tok_src="SELECT * FROM heaps_toks",
-            doc_src="SELECT * FROM heaps_doc_m",
-            first_src="SELECT * FROM heaps_first",
-        )
+            tok_src="SELECT * FROM {tok}",
+            doc_src="SELECT * FROM {doc_m}",
+            first_src="SELECT * FROM {first}",
+        ),
+        tok=tok,
+        doc_m=doc_m,
+        first=first,
     )
 
 
@@ -2939,7 +2936,7 @@ def _hurst_rs(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_hurst_rs",
     _hurst_rs,
     tags=("window", "series"),
@@ -3002,7 +2999,7 @@ def _entropy_rate(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "events_entropy_rate",
     _entropy_rate,
     tags=("events", "eval"),
@@ -3077,7 +3074,7 @@ def _perm_entropy(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_perm_entropy",
     _perm_entropy,
     tags=("window", "series"),

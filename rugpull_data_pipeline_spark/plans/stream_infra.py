@@ -192,6 +192,15 @@ def _run_available_now(writer) -> None:
         )
 
 
+def _sink_rows(spark: SparkSession, name: str) -> DataFrame:
+    """The rows of the memory sink ``name``, with its session-wide view
+    dropped: the returned plan holds the sink itself, so the build leaves
+    no named state behind."""
+    rows = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return rows
+
+
 @contextmanager
 def _state_partitions(spark: SparkSession, n: int = 8):
     """Pin the state-store partition count for a stateful replay.
@@ -517,7 +526,7 @@ def stream_watermark_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     # The sentinel's own (still-open) window never emits; every real window
     # is past the final watermark and appears exactly once.
-    return spark.table(name).orderBy("window_start")
+    return _sink_rows(spark, name).orderBy("window_start")
 
 
 # ---------------------------------------------------------------------------
@@ -911,7 +920,7 @@ def stream_bollinger_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "checkpointLocation", scratch_dir(prefix="rugpull_boll_ckpt_")
             )
         )
-    return spark.table(name).orderBy("event_type", "ts_epoch", "v_micro")
+    return _sink_rows(spark, name).orderBy("event_type", "ts_epoch", "v_micro")
 
 
 # ---------------------------------------------------------------------------
@@ -981,7 +990,7 @@ def stream_attribution_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     return (
-        spark.table(name)
+        _sink_rows(spark, name)
         .select(
             "event_id",
             "user_id",
@@ -1085,7 +1094,7 @@ def stream_cusum_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "checkpointLocation", scratch_dir(prefix="rugpull_cusum_ckpt_")
             )
         )
-    return spark.table(name).orderBy("event_type", "ts_epoch", "v_micro")
+    return _sink_rows(spark, name).orderBy("event_type", "ts_epoch", "v_micro")
 
 
 # ---------------------------------------------------------------------------
@@ -1296,18 +1305,17 @@ def stream_psi_drift_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     _write_slices(src, src_dir, _PSI_N_BATCHES)
     acc_dir = os.path.join(scratch_dir(prefix="rugpull_psi_acc_"), "acc")
     res_dir = os.path.join(scratch_dir(prefix="rugpull_psi_res_"), "res")
-    view = f"psi_acc_{os.getpid()}_{abs(hash(acc_dir)) % 10**8}"
 
     def apply(batch: DataFrame, bid: int) -> None:
         batch.write.mode("append").parquet(acc_dir)
         s = batch.sparkSession
-        s.read.parquet(acc_dir).createOrReplaceTempView(view)
         from .traindata_ops import _psi_drift
 
-        body = _psi_drift(SPARK).replace("FROM events", f"FROM {view}")
+        body = _psi_drift(SPARK).replace("FROM events", "FROM {acc}")
         body = body.rsplit("ORDER BY", 1)[0]
         s.sql(
-            f"SELECT cast({bid} as int) AS batch_id, q.* FROM ({body}) q"
+            f"SELECT cast({bid} as int) AS batch_id, q.* FROM ({body}) q",
+            acc=s.read.parquet(acc_dir),
         ).write.mode("append").parquet(res_dir)
 
     stream = (
@@ -1416,25 +1424,23 @@ def stream_cms_topk_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     sk_dir = os.path.join(scratch_dir(prefix="rugpull_cms_state_"), "sketch")
     key_dir = os.path.join(scratch_dir(prefix="rugpull_cms_state_"), "keys")
     res_dir = os.path.join(scratch_dir(prefix="rugpull_cms_res_"), "res")
-    tag = f"{os.getpid()}_{abs(hash(res_dir)) % 10**8}"
 
     def apply(batch: DataFrame, bid: int) -> None:
         s = batch.sparkSession
-        bview = f"cms_batch_{tag}"
-        batch.createOrReplaceTempView(bview)
         # batch-local sketch + key set appended to the accumulated state.
-        s.sql(_cms_sketch_sql(SPARK, bview)).write.mode("append").parquet(sk_dir)
-        s.sql(f"SELECT DISTINCT user_id FROM {bview}").write.mode(
+        s.sql(_cms_sketch_sql(SPARK, "{batch}"), batch=batch).write.mode(
+            "append"
+        ).parquet(sk_dir)
+        s.sql("SELECT DISTINCT user_id FROM {batch}", batch=batch).write.mode(
             "append"
         ).parquet(key_dir)
-        sk_view, key_view = f"cms_sk_{tag}", f"cms_key_{tag}"
-        s.read.parquet(sk_dir).createOrReplaceTempView(sk_view)
-        s.read.parquet(key_dir).createOrReplaceTempView(key_view)
-        merged = f"SELECT r, b, cast(sum(c) as bigint) AS c FROM {sk_view} GROUP BY r, b"
-        keys = f"SELECT DISTINCT user_id FROM {key_view}"
-        s.sql(_cms_topk_sql(SPARK, f"({merged})", keys, bid)).write.mode(
-            "append"
-        ).parquet(res_dir)
+        merged = "SELECT r, b, cast(sum(c) as bigint) AS c FROM {sk} GROUP BY r, b"
+        keys = "SELECT DISTINCT user_id FROM {keys}"
+        s.sql(
+            _cms_topk_sql(SPARK, f"({merged})", keys, bid),
+            sk=s.read.parquet(sk_dir),
+            keys=s.read.parquet(key_dir),
+        ).write.mode("append").parquet(res_dir)
 
     stream = (
         spark.readStream.schema(src.schema)
@@ -1513,7 +1519,7 @@ def stream_hopping_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .outputMode("append")
             .option("checkpointLocation", scratch_dir(prefix="rugpull_hop_ckpt_"))
         )
-    return spark.table(name).orderBy("window_start")
+    return _sink_rows(spark, name).orderBy("window_start")
 
 
 # ---------------------------------------------------------------------------
@@ -1610,7 +1616,7 @@ def stream_kalman_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     return (
-        spark.table(name)
+        _sink_rows(spark, name)
         .select(
             "event_type",
             "ts_epoch",

@@ -35,11 +35,7 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 from ..functions import scalars as S
-from .registry import sql_pair
-
-
-def _pair(name: str, q, tags: tuple[str, ...] = (), doc: str = "") -> None:
-    sql_pair(name, q(S.SPARK), q(S.DUCK), tags=tags, doc=doc)
+from .registry import pair
 
 
 # --------------------------------------------------------------------------
@@ -78,7 +74,7 @@ def _q02(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "q02_min_cost_supplier",
     _q02,
     tags=("relational", "subquery"),
@@ -117,7 +113,7 @@ def _q07(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "q07_nation_volume_shipping",
     _q07,
     tags=("relational", "join"),
@@ -157,7 +153,7 @@ def _q08(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "q08_market_share",
     _q08,
     tags=("relational", "join"),
@@ -192,7 +188,7 @@ def _q09(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "q09_product_profit",
     _q09,
     tags=("relational", "join"),
@@ -221,7 +217,7 @@ def _q11(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "q11_important_stock",
     _q11,
     tags=("relational", "subquery"),
@@ -254,7 +250,7 @@ def _q12(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "q12_priority_class",
     _q12,
     tags=("relational",),
@@ -287,7 +283,7 @@ def _q16(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "q16_supplier_part_variety",
     _q16,
     tags=("relational", "subquery"),
@@ -316,7 +312,7 @@ def _q17(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "q17_small_quantity_revenue",
     _q17,
     tags=("relational", "subquery"),
@@ -346,7 +342,7 @@ def _q19(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "q19_disjunctive_predicates",
     _q19,
     tags=("relational",),
@@ -392,7 +388,7 @@ def _q20(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "q20_potential_promotion",
     _q20,
     tags=("relational", "subquery"),
@@ -435,7 +431,7 @@ def _q21(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "q21_sole_problem_supplier",
     _q21,
     tags=("relational", "subquery"),
@@ -470,7 +466,7 @@ def _q22(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "q22_inactive_customers",
     _q22,
     tags=("relational", "subquery"),

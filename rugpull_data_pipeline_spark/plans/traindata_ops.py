@@ -45,15 +45,7 @@ from __future__ import annotations
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
-from .registry import register, sql_pair
-
-
-def _pair(name: str, q, tags: tuple[str, ...] = (), doc: str = "") -> None:
-    sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
-
-
-def _toks(d: str) -> str:
-    return S.split_ws("text", d)
+from .registry import pair, register
 
 
 # ---------------------------------------------------------------------------
@@ -71,7 +63,7 @@ def _boilerplate(d: str) -> str:
         )
         nseg = f"ceil({S.arr_len('toks', d)} / {_SEG}.0)"
         lateral = f"LATERAL VIEW explode(sequence(1, cast({nseg} as int))) t_i AS i"
-        tok_src = f"SELECT /*+ REPARTITION */ doc_id, {_toks(d)} AS toks FROM documents"
+        tok_src = f"SELECT /*+ REPARTITION */ doc_id, {S.toks(d)} AS toks FROM documents"
         # Single-pass shape (r13, guide §2.4): Spark inlines the segs CTE
         # into BOTH consumers (the df aggregate and the join back), so the
         # two-consumer form scanned + tokenized + hashed documents TWICE.
@@ -120,7 +112,7 @@ def _boilerplate(d: str) -> str:
                 SELECT doc_id,
                     unnest(range(1, len(toks) + 1)) AS pos,
                     unnest(toks) AS tok
-                FROM (SELECT doc_id, {_toks(d)} AS toks FROM documents) t
+                FROM (SELECT doc_id, {S.toks(d)} AS toks FROM documents) t
             ) z
             GROUP BY doc_id, ((pos - 1) // {_SEG}) + 1
         ) g
@@ -142,7 +134,7 @@ def _boilerplate(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "text_boilerplate_ccnet",
     _boilerplate,
     tags=("text", "curation"),
@@ -190,7 +182,7 @@ def _incremental(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "dedup_incremental_newonly",
     _incremental,
     tags=("dedup", "etl"),
@@ -241,7 +233,7 @@ def _target_encode(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "mlprep_target_encode_loo",
     _target_encode,
     tags=("mlprep",),
@@ -282,7 +274,7 @@ def _rebalance(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "sample_class_rebalance",
     _rebalance,
     tags=("sampling", "mlprep"),
@@ -439,10 +431,8 @@ def _triangles(d: str) -> str:
 )
 def graph_triangle_count(spark, sf_dir):
     edges = spark.sql(_tri_edges(SPARK)).localCheckpoint()
-    edges.createOrReplaceTempView("tri_edges")
-    oriented = spark.sql(_tri_orient("tri_edges")).localCheckpoint()
-    oriented.createOrReplaceTempView("tri_oriented")
-    return spark.sql(_tri_corners(SPARK, "tri_oriented"))
+    oriented = spark.sql(_tri_orient("{edges}"), edges=edges).localCheckpoint()
+    return spark.sql(_tri_corners(SPARK, "{oriented}"), oriented=oriented)
 
 
 # ---------------------------------------------------------------------------
@@ -532,11 +522,11 @@ def profile_drift_psi(spark, sf_dir):
         f" END AS half, {bin_expr} AS bin FROM events"
         ") binned GROUP BY event_type, half, bin"
     ).localCheckpoint()
-    counts.createOrReplaceTempView("psi_counts_v")
     return spark.sql(
         _psi_drift(
-            SPARK, counts_src="SELECT event_type, half, bin, c FROM psi_counts_v"
-        )
+            SPARK, counts_src="SELECT event_type, half, bin, c FROM {counts}"
+        ),
+        counts=counts,
     )
 
 
@@ -559,7 +549,7 @@ def _group_holdout(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "sample_group_holdout",
     _group_holdout,
     tags=("sampling", "mlprep"),
@@ -723,12 +713,11 @@ def dedup_minhash_incremental(spark, sf_dir):
             ))) AS sh
             FROM (SELECT /*+ REPARTITION */ doc_id,
                   CASE WHEN length(source) = 4 THEN 'base' ELSE 'inc' END AS side,
-                  {_toks(SPARK)} AS toks FROM documents) t
+                  {S.toks(SPARK)} AS toks FROM documents) t
             WHERE size(toks) >= 3
         ) raw
         """
     ).localCheckpoint()
-    sh.createOrReplaceTempView("mhinc_sh_v")
     min_cols = ", ".join(
         f"min(({a} * m + {b}) % {_MINHASH_P}) AS h{j}"
         for j, (a, b) in enumerate(_MINHASH_AB)
@@ -757,21 +746,23 @@ def dedup_minhash_incremental(spark, sf_dir):
                 FROM (
                     SELECT doc_id, max(side) AS side, {min_cols}
                     FROM (SELECT doc_id, side, shh % {_MINHASH_P} AS m
-                          FROM mhinc_sh_v) s
+                          FROM {{sh}}) s
                     GROUP BY doc_id
                 ) sigs
                 LATERAL VIEW posexplode(array({band_keys})) AS band, band_key
             ) bands
         ) f WHERE bsz <= {_LSH_BUCKET_CAP}
-        """
+        """,
+        sh=sh,
     ).localCheckpoint()
-    bc.createOrReplaceTempView("mhinc_bands_v")
     return spark.sql(
         _minhash_incremental(
             SPARK,
-            sh_src="SELECT doc_id, shh FROM mhinc_sh_v",
-            bands_src="SELECT doc_id, side, band, band_key FROM mhinc_bands_v",
-        )
+            sh_src="SELECT doc_id, shh FROM {sh}",
+            bands_src="SELECT doc_id, side, band, band_key FROM {bc}",
+        ),
+        sh=sh,
+        bc=bc,
     )
 
 
@@ -802,7 +793,7 @@ def _skew_advisor(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "layout_partition_skew_advisor",
     _skew_advisor,
     tags=("layout", "profiling"),
@@ -890,9 +881,9 @@ def _markov_stationary(d: str, p_src: str | None = None) -> str:
 )
 def events_markov_stationary(spark, sf_dir):
     p = spark.sql(_markov_p_core(SPARK)).localCheckpoint()
-    p.createOrReplaceTempView("markov_p_v")
     return spark.sql(
-        _markov_stationary(SPARK, p_src="SELECT src, dst, p FROM markov_p_v")
+        _markov_stationary(SPARK, p_src="SELECT src, dst, p FROM {p}"),
+        p=p,
     )
 
 
@@ -920,7 +911,7 @@ def _running_distinct(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "window_running_distinct_types",
     _running_distinct,
     tags=("window", "events"),
@@ -961,7 +952,7 @@ def _category_encode(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "mlprep_category_encode",
     _category_encode,
     tags=("mlprep",),
@@ -1029,7 +1020,7 @@ def _benford(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "profile_benford_screen",
     _benford,
     tags=("profiling", "quality"),
@@ -1082,7 +1073,7 @@ def _moments(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "profile_moments_skew_kurtosis",
     _moments,
     tags=("profiling",),
@@ -1107,7 +1098,7 @@ _LR_RATE = "1.0"  # learning rate (double literal, cast at use sites)
 def _lr_feats(d: str) -> str:
     # Every ratio forced through double casts: a bare 1000.0 divisor is a
     # DECIMAL literal and the engines' decimal-division scale rules differ.
-    toks = _toks(d)
+    toks = S.toks(d)
     ntok = f"cast({S.arr_len('toks', d)} as double)"
     ndis = f"cast({S.arr_len(S.arr_distinct('toks', d), d)} as double)"
     return f"""
@@ -1330,9 +1321,9 @@ def events_survival_km(spark, sf_dir):
         f"SELECT user_id, min({ep}) AS v FROM events"
         " WHERE event_type = 'view' GROUP BY user_id"
     ).localCheckpoint()
-    fv.createOrReplaceTempView("km_fv_v")
     return spark.sql(
-        _km_survival(SPARK, fv_src="SELECT user_id, v FROM km_fv_v")
+        _km_survival(SPARK, fv_src="SELECT user_id, v FROM {fv}"),
+        fv=fv,
     )
 
 
@@ -1342,7 +1333,7 @@ def events_survival_km(spark, sf_dir):
 
 
 def _dataset_card(d: str) -> str:
-    toks = _toks(d)
+    toks = S.toks(d)
     return f"""
     WITH per_doc AS (
         SELECT lang, source, n_chars,
@@ -1368,7 +1359,7 @@ def _dataset_card(d: str) -> str:
     """
 
 
-_pair(
+pair(
     "traindata_dataset_card",
     _dataset_card,
     tags=("text", "profiling", "etl"),
@@ -1396,11 +1387,11 @@ def _dsir_selection(d: str, hashed_src: str | None = None) -> str:
         occ = (
             "SELECT doc_id, lang, explode({t}) AS tok "
             "FROM documents"
-        ).format(t=_toks(d))
+        ).format(t=S.toks(d))
     else:
         occ = (
             "SELECT doc_id, lang, unnest({t}) AS tok FROM documents"
-        ).format(t=_toks(d))
+        ).format(t=S.toks(d))
     b = f"{S.portable_hash64('tok', d)} % {_DSIR_BUCKETS}"
     # ``hashed_src`` lets the Spark builder checkpoint the token-bucket
     # table: inlined, tgt/src/tots and the per-doc fold each re-ran the
@@ -1475,9 +1466,8 @@ def sample_dsir_selection(spark, sf_dir):
     b = f"{S.portable_hash64('tok', SPARK)} % {_DSIR_BUCKETS}"
     hashed = spark.sql(
         f"SELECT doc_id, lang, {b} AS bkt FROM (SELECT doc_id, lang,"
-        f" explode({_toks(SPARK)}) AS tok FROM documents) occ"
+        f" explode({S.toks(SPARK)}) AS tok FROM documents) occ"
     ).localCheckpoint()
-    hashed.createOrReplaceTempView("dsir_hashed_v")
     # Folded bucket stats (r13, guide §2.2): the oracle's tgt/src/tots/
     # distinct-bkt CTEs are four separate full passes over the token-bucket
     # table; one conditional-sum groupBy(bkt) yields all of them (ct=0 rows
@@ -1491,7 +1481,7 @@ def sample_dsir_selection(spark, sf_dir):
         SELECT bkt,
             cast(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) as bigint) AS ct,
             cast(sum(CASE WHEN lang <> 'en' THEN 1 ELSE 0 END) as bigint) AS cs
-        FROM dsir_hashed_v GROUP BY bkt
+        FROM {{hashed}} GROUP BY bkt
     ),
     tots AS (
         SELECT cast(sum(ct) as bigint) AS nt, cast(sum(cs) as bigint) AS ns
@@ -1508,7 +1498,7 @@ def sample_dsir_selection(spark, sf_dir):
     scored AS (
         SELECT h.doc_id, max(h.lang) AS lang,
             {S.dsum('w.lw', SPARK)} AS importance
-        FROM dsir_hashed_v h JOIN w ON w.bkt = h.bkt
+        FROM {{hashed}} h JOIN w ON w.bkt = h.bkt
         WHERE h.lang <> 'en'
         GROUP BY h.doc_id
     )
@@ -1516,5 +1506,6 @@ def sample_dsir_selection(spark, sf_dir):
     FROM scored
     ORDER BY importance DESC, doc_id
     LIMIT {_DSIR_TOPK}
-    """
+    """,
+        hashed=hashed,
     )

@@ -46,3 +46,30 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_ORACLE
+
+
+def session_views(spark) -> set[str]:
+    """Names of the session's temp views (``SHOW VIEWS``: one cheap catalog
+    call, unlike ``spark.catalog.listTables()``)."""
+    return {r.viewName for r in spark.sql("SHOW VIEWS").collect()}
+
+
+@pytest.fixture
+def hand_views(spark):
+    """For tests that register hand-made fixture tables as temp views and
+    call builders directly with the sentinel sf_dir ``"unused"``: the
+    registry's view cache is pinned to that sentinel, so the gated
+    ``registry.static_table`` reads the hand views. Afterwards the views
+    the test registered (every fixture-table name and anything new) are
+    dropped and the cache cleared, so the next build re-registers the real
+    tables and no hand rows leak into view-first readers."""
+    from rugpull_data_pipeline_spark.plans import registry
+    from rugpull_data_pipeline_spark.sources.tables import TABLES
+
+    before = session_views(spark)
+    registry._VIEWS_FOR[id(spark)] = "unused"
+    yield spark
+    after = session_views(spark)
+    for v in (after - before) | (after & set(TABLES)):
+        spark.catalog.dropTempView(v)
+    registry._VIEWS_FOR.pop(id(spark), None)

@@ -12,32 +12,9 @@ import math
 
 import duckdb
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from rugpull_data_pipeline_spark.functions.scalars import DUCK, SPARK
-from rugpull_data_pipeline_spark.plans import registry
-
-
-@pytest.fixture
-def hand_views(spark):
-    # Pin the registry's view cache to the sentinel sf_dir these tests pass
-    # (""), so static_table-routed builders read the hand-crafted temp views
-    # instead of falling back to a parquet load (the gate's whole purpose:
-    # direct callers must OPT IN to view substitution, which this is).
-    registry._VIEWS_FOR[id(spark)] = ""
-    yield spark
-    # Drop the hand-data temp views, not just the registry's view cache:
-    # stream_infra._events_table is view-first since round 7, so a stale
-    # hand `events` view would otherwise leak 3-row fixtures into any
-    # later test that calls a raw builder directly (observed as an
-    # order-dependent failure in test_streaming_windows).
-    for v in ("events", "documents"):
-        try:
-            spark.catalog.dropTempView(v)
-        except Exception:  # noqa: BLE001
-            pass
-    registry._VIEWS_FOR.pop(id(spark), None)
 
 
 def _both(spark, events_rows, builder):
@@ -330,7 +307,7 @@ def test_hits_edgeless_graph_null_scores_both_engines(hand_views):
         "user_id", "event_type", "value",
     )
     sdf.createOrReplaceTempView("events")
-    srows = mlprep_ops.graph_hits_power3(spark, "").collect()
+    srows = mlprep_ops.graph_hits_power3(spark, "unused").collect()
 
     con = _duckdb.connect()
     dpdf = pdf.assign(ts=pd.to_datetime(pdf["t"], unit="s")).drop(columns=["t"])

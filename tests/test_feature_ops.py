@@ -7,19 +7,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
-from rugpull_data_pipeline_spark.plans import registry
 from rugpull_data_pipeline_spark.plans.feature_ops import (
     _completeness,
     _jl_project,
     _rfm,
     _ridge,
 )
-
-
-@pytest.fixture
-def hand_views(spark):
-    yield spark
-    registry._VIEWS_FOR.pop(id(spark), None)
 
 
 def _mk_events(spark, rows):

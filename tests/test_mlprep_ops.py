@@ -12,7 +12,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
-from rugpull_data_pipeline_spark.plans import registry
 from rugpull_data_pipeline_spark.plans.mlprep_ops import (
     _acf_lags,
     _feature_hash,
@@ -23,12 +22,6 @@ from rugpull_data_pipeline_spark.plans.mlprep_ops import (
 )
 
 DAY0 = 1704067200  # 2024-01-01T00:00:00Z — the linreg day-index anchor
-
-
-@pytest.fixture
-def hand_views(spark):
-    yield spark
-    registry._VIEWS_FOR.pop(id(spark), None)
 
 
 def _mk_events(spark, rows):
@@ -331,7 +324,7 @@ def test_attribution_last_touch_semantics(hand_views):
 
     got = {
         r.channel: r
-        for r in events_attribution_last_touch(spark, None).collect()
+        for r in events_attribution_last_touch(spark, "unused").collect()
     }
     assert got["click"].n_purchases == 1 and got["click"].revenue == 10.0
     assert got["direct"].n_purchases == 2 and got["direct"].revenue == 27.0
@@ -354,7 +347,7 @@ def test_pagerank_hand_graph(hand_views):
     )
     from rugpull_data_pipeline_spark.plans.mlprep_ops import graph_pagerank_power3
 
-    got = {r.event_type: r.pagerank for r in graph_pagerank_power3(spark, None).collect()}
+    got = {r.event_type: r.pagerank for r in graph_pagerank_power3(spark, "unused").collect()}
     assert got["a"] == pytest.approx(0.339430, abs=1e-6)
     assert got["b"] == pytest.approx(0.660570, abs=1e-6)
 
@@ -513,7 +506,7 @@ def test_hits_hand_graph_matches_replica(hand_views):
 
     got = {
         r.event_type: (r.authority, r.hub)
-        for r in graph_hits_power3(spark, None).collect()
+        for r in graph_hits_power3(spark, "unused").collect()
     }
     edges = {("a", "b"): 2.0, ("b", "b"): 1.0, ("b", "a"): 1.0}
     nodes = ["a", "b"]

@@ -19,18 +19,6 @@ from rugpull_data_pipeline_spark.plans.pipeline_ops import (
 )
 
 
-@pytest.fixture
-def hand_views(spark):
-    """Let a test overwrite the registry's temp views with hand data; drop
-    the registry's view cache afterwards so later tests re-register."""
-    # Pin the view cache to the sentinel sf_dir ("unused") the direct
-    # builder calls pass, so registry.static_table reads the hand views
-    # (test_property_mining2 convention).
-    registry._VIEWS_FOR[id(spark)] = "unused"
-    yield spark
-    registry._VIEWS_FOR.pop(id(spark), None)
-
-
 def _mk_events(spark, rows):
     df = spark.createDataFrame(
         [(eid, t, uid, et) for eid, t, uid, et in rows],

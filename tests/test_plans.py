@@ -9,6 +9,8 @@ from __future__ import annotations
 import pytest
 
 from rugpull_data_pipeline_spark.plans import registry
+from rugpull_data_pipeline_spark.sources.tables import TABLES
+from tests.conftest import session_views
 
 SF = "/root/testdata/sf0.001"
 
@@ -170,13 +172,20 @@ _NLJ_ALLOWED = {
 # of pure plan construction in the driver's pytest budget (the r12 driver
 # verify timed out at ~92% of the suite). The predicates are all pure
 # functions of the plan STRING, so one build serves all three.
+# The same builds also record any temp view a build left behind in the
+# session (fixture tables aside), for test_no_builder_leaves_a_temp_view.
 _PLAN_CACHE: dict[str, str] = {}
+_LEFT_VIEWS: dict[str, list[str]] = {}
 
 
 def _plan(spark, name: str) -> str:
     if name not in _PLAN_CACHE:
+        before = session_views(spark)
         df = registry.get(name).builder(spark, SF)
         _PLAN_CACHE[name] = df._jdf.queryExecution().executedPlan().toString()
+        left = session_views(spark) - before - set(TABLES)
+        if left:
+            _LEFT_VIEWS[name] = sorted(left)
     return _PLAN_CACHE[name]
 
 
@@ -189,6 +198,15 @@ def test_no_cartesian_products_anywhere(spark):
         if "CartesianProduct" in plan:
             offenders.append(name)
     assert not offenders, f"cartesian products in: {offenders}"
+
+
+def test_no_builder_leaves_a_temp_view(spark):
+    """Builders hand their intermediates to spark.sql as DataFrames; no build
+    may leave one registered under a session-wide name for a later (or
+    concurrent) build of the same query to find."""
+    for name in registry.all_queries():
+        _plan(spark, name)
+    assert not _LEFT_VIEWS, f"temp views left behind: {_LEFT_VIEWS}"
 
 
 def test_no_accidental_nested_loop_joins(spark):

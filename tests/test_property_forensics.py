@@ -15,25 +15,12 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
-from rugpull_data_pipeline_spark.plans import registry
 
 PROP = dict(
     max_examples=5,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-
-
-@pytest.fixture
-def hand_views(spark):
-    registry._VIEWS_FOR[id(spark)] = "unused"
-    yield spark
-    for v in ("events", "lineitem", "part", "documents"):
-        try:
-            spark.catalog.dropTempView(v)
-        except Exception:  # noqa: BLE001
-            pass
-    registry._VIEWS_FOR.pop(id(spark), None)
 
 
 def _mk_events(spark, rows):

@@ -20,19 +20,12 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
-from rugpull_data_pipeline_spark.plans import registry
 
 PROP = dict(
     max_examples=5,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-
-
-@pytest.fixture
-def hand_views(spark):
-    yield spark
-    registry._VIEWS_FOR.pop(id(spark), None)
 
 
 def _mk_events(spark, rows):

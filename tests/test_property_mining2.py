@@ -13,24 +13,12 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
-from rugpull_data_pipeline_spark.plans import registry
 
 PROP = dict(
     max_examples=5,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-
-
-@pytest.fixture
-def hand_views(spark):
-    # Mark the session's view cache as pointing at the hand fixtures so the
-    # gated registry.static_table reads the temp views the test registers
-    # (otherwise the gate would fall back to loading parquet from the
-    # literal "unused" sf_dir the direct builder calls pass).
-    registry._VIEWS_FOR[id(spark)] = "unused"
-    yield spark
-    registry._VIEWS_FOR.pop(id(spark), None)
 
 
 def _round6(x: float) -> float:

@@ -24,12 +24,6 @@ from rugpull_data_pipeline_spark.plans.stats_eval import (
 )
 
 
-@pytest.fixture
-def hand_views(spark):
-    yield spark
-    registry._VIEWS_FOR.pop(id(spark), None)
-
-
 def _mk_events(spark, rows):
     df = spark.createDataFrame(
         rows, "event_id long, t long, user_id long, event_type string, value double"
@@ -950,7 +944,7 @@ def test_heaps_law_matches_python_replica(hand_views):
         spark,
         [(i, f"a t{i}", "en", "s1") for i in range(1, 9)],
     )
-    row = profile_heaps_law(spark, None).collect()[0]
+    row = profile_heaps_law(spark, "unused").collect()[0]
     pts = [(math.log(2 * i), math.log(i + 1)) for i in range(1, 9)]
     xs = [round(x, 9) for x, _ in pts]
     ys = [round(y, 9) for _, y in pts]

@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
-from rugpull_data_pipeline_spark.plans import registry
 from rugpull_data_pipeline_spark.plans.traindata_ops import (
     _minhash_incremental,
     _skew_advisor,
@@ -25,12 +24,6 @@ from rugpull_data_pipeline_spark.plans.traindata_ops import (
     _target_encode,
     _triangles,
 )
-
-
-@pytest.fixture
-def hand_views(spark):
-    yield spark
-    registry._VIEWS_FOR.pop(id(spark), None)
 
 
 def _mk_events(spark, rows):

@@ -1,9 +1,9 @@
 """Time registered queries Spark-side only (noop sink, best-of-N).
 
-The per-round perf audit companion to tools/check_new.py: check_new
-measures build+oracle+compare wall (correctness harness), this measures
-ONLY the Spark plan execution — what a cluster pays — so plan rewrites
-can be judged on the number they actually move.
+The perf companion to tools/sweep.py: the sweep measures
+build+oracle+compare wall (correctness harness), this measures ONLY the
+Spark plan execution — what a cluster pays — so plan rewrites can be
+judged on the number they actually move.
 
 Usage: python tools/time_queries.py [sf_dir] name1 name2 ...
        python tools/time_queries.py --runs 3 /root/testdata/sf0.1 graph_sssp_bellman3
