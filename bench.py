@@ -19,6 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from rugpull_data_pipeline_spark.plans import registry
 from rugpull_data_pipeline_spark.session import get_spark
+from tools.plan_fingerprint import fingerprint
 
 # Representative of every operator family: flagship chain, heavy aggregation,
 # multi-join, window, JSON extraction, dedup sketches, similarity search.
@@ -107,9 +108,6 @@ def plan_fp(df) -> str:
     because the diff happened to touch zero headline files; the fingerprint
     makes that proof automatic (round-8 verdict item 3)."""
     import hashlib
-
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
-    from plan_fingerprint import fingerprint
 
     fp = fingerprint(df)
     return hashlib.md5(json.dumps(fp, sort_keys=True).encode()).hexdigest()[:12]

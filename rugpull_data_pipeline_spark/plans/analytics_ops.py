@@ -832,12 +832,12 @@ def _dau_ud_core(d: str) -> str:
     return f"SELECT DISTINCT user_id, {_day_idx(d)} AS day_idx FROM events"
 
 
-def _dau_wau_mau(d: str, ud_src: str | None = None) -> str:
-    # ``ud_src`` lets the Spark builder checkpoint the activity grid:
-    # inlined, spine/dau/w7/m30 each re-ran the fact distinct (5 fact
-    # scans planned — the round-11 registry-wide plan audit).
+def _dau_wau_mau(d: str, ud: str) -> str:
+    # The activity grid is a shared core: inlined, spine/dau/w7/m30
+    # each re-ran the fact distinct (5 fact scans planned — the
+    # round-11 registry-wide plan audit).
     return f"""
-    WITH ud AS ({ud_src if ud_src is not None else _dau_ud_core(d)}),
+    WITH ud AS ({ud}),
     spine AS (SELECT DISTINCT day_idx FROM ud),
     dau AS (
         SELECT day_idx, cast(count(*) as bigint) AS dau FROM ud GROUP BY day_idx
@@ -869,9 +869,10 @@ def _dau_wau_mau(d: str, ud_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "events_dau_wau_mau",
-    oracle=_dau_wau_mau(DUCK),
+    _dau_wau_mau,
+    shared={"ud": _dau_ud_core},
     tags=("events", "analytics"),
     doc="DAU / WAU / MAU engagement with the DAU/WAU stickiness ratio, "
     "via the active-window expansion: each distinct (user, day) fans "
@@ -883,12 +884,6 @@ def _dau_wau_mau(d: str, ud_src: str | None = None) -> str:
     "activity grid is localCheckpointed so its four consumers share "
     "ONE fact scan.",
 )
-def events_dau_wau_mau(spark, sf_dir):
-    ud = spark.sql(_dau_ud_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _dau_wau_mau(SPARK, ud_src="SELECT user_id, day_idx FROM {ud}"),
-        ud=ud,
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -190,17 +190,24 @@ pair(
 # ---------------------------------------------------------------------------
 
 
-def _lm_score(d: str, cnt_src: str | None = None) -> str:
-    # ``cnt_src`` lets the Spark builder checkpoint the vocab count table:
-    # inlined, the two scalar-total subqueries and the doc join each
-    # re-ran the token explode (6 fact scans planned — the round-11
-    # registry-wide plan audit). The per-doc scoring pass keeps its own
-    # single explode.
-    tok_src = (
+def _lm_tokens(d: str) -> str:
+    return (
         f"SELECT doc_id, explode({S.toks(d)}) AS tok FROM documents"
         if d == SPARK
         else f"SELECT doc_id, unnest({S.toks(d)}) AS tok FROM documents"
     )
+
+
+def _lm_vocab(d: str) -> str:
+    """The vocab count table — the shared core of text_ngram_lm_score."""
+    return f"SELECT tok, count(*) AS c FROM ({_lm_tokens(d)}) t GROUP BY tok"
+
+
+def _lm_score(d: str, cnt: str) -> str:
+    # The vocab count table is a shared core: inlined, the two
+    # scalar-total subqueries and the doc join each re-ran the token
+    # explode (6 fact scans planned — the round-11 registry-wide plan
+    # audit). The per-doc scoring pass keeps its own single explode.
     # Add-one smoothed unigram logprob. Each term is pre-rounded to 7
     # decimals BEFORE dsum's decimal(38,6) quantization: a 1-ulp ln()
     # difference between libms then collapses to the same double except
@@ -215,9 +222,8 @@ def _lm_score(d: str, cnt_src: str | None = None) -> str:
         "((SELECT n FROM tot) + (SELECT v FROM tot))), 7)"
     )
     return f"""
-    WITH tok AS ({tok_src}),
-    cnt AS ({cnt_src if cnt_src is not None
-             else 'SELECT tok, count(*) AS c FROM tok GROUP BY tok'}),
+    WITH tok AS ({_lm_tokens(d)}),
+    cnt AS ({cnt}),
     tot AS (
         SELECT cast(sum(c) as double) AS n, cast(count(*) as double) AS v
         FROM cnt
@@ -240,9 +246,10 @@ def _lm_score(d: str, cnt_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "text_ngram_lm_score",
-    oracle=_lm_score(DUCK),
+    _lm_score,
+    shared={"cnt": _lm_vocab},
     tags=("text",),
     doc="CCNet-style quality signal: add-one-smoothed unigram LM fit on the "
     "corpus itself, per-doc mean negative log-likelihood. Two hash aggs + "
@@ -250,12 +257,6 @@ def _lm_score(d: str, cnt_src: str | None = None) -> str:
     "The vocab count table is localCheckpointed so the LM-build explode "
     "runs once (the scoring pass keeps its own).",
 )
-def text_ngram_lm_score(spark, sf_dir):
-    cnt = spark.sql(
-        f"SELECT tok, count(*) AS c FROM (SELECT doc_id,"
-        f" explode({S.toks(SPARK)}) AS tok FROM documents) t GROUP BY tok"
-    ).localCheckpoint()
-    return spark.sql(_lm_score(SPARK, cnt_src="SELECT tok, c FROM {cnt}"), cnt=cnt)
 
 
 # ---------------------------------------------------------------------------
@@ -893,16 +894,11 @@ def kmeans_lloyd_fit(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _bigram_kn(d: str, cb_src: str | None = None) -> str:
+def _bigrams(d: str) -> str:
     # Bigrams by position; Spark's sequence(1, n-1) DESCENDS when n < 2, so
     # short docs are filtered before the explode in both dialects.
-    # ``cb_src`` lets the Spark builder checkpoint the bigram count table
-    # (the Spark twin of the DuckDB MATERIALIZED cb): inlined, the three
-    # stat aggregates each re-ran the bigram explode (5 fact scans
-    # planned — the round-11 registry-wide plan audit). The per-doc
-    # scoring pass keeps its own single explode.
     if d == SPARK:
-        bg_src = (
+        return (
             "SELECT doc_id, element_at(w, i) AS w1, element_at(w, i + 1) AS w2 "
             "FROM (SELECT doc_id, split(text, ' ') AS w FROM documents) b "
             "LATERAL VIEW explode(sequence(1, size(w) - 1)) t AS i "
@@ -914,7 +910,7 @@ def _bigram_kn(d: str, cb_src: str | None = None) -> str:
         # fan-out (a 150k-element copy per bigram row) — unbounded on the
         # giant-payload surface (r9 sweep). Tokens are never NULL, so
         # lead IS NULL exactly marks each doc's last position.
-        bg_src = (
+        return (
             "SELECT doc_id, tok AS w1, lead(tok, 1) OVER ("
             "PARTITION BY doc_id ORDER BY pos) AS w2 "
             "FROM (SELECT doc_id, unnest(range(1, len(w) + 1)) AS pos, "
@@ -922,6 +918,22 @@ def _bigram_kn(d: str, cb_src: str | None = None) -> str:
             "FROM (SELECT doc_id, split(text, ' ') AS w FROM documents) b) z "
             "QUALIFY w2 IS NOT NULL"
         )
+
+
+def _bigram_counts(d: str) -> str:
+    """The bigram count table — the shared core of text_bigram_kneser_ney."""
+    return (
+        "SELECT w1, w2, cast(count(*) as bigint) AS c12"
+        f" FROM ({_bigrams(d)}) bg GROUP BY w1, w2"
+    )
+
+
+def _bigram_kn(d: str, cb: str) -> str:
+    # The bigram count table is a shared core (the Spark twin of the
+    # DuckDB MATERIALIZED cb): inlined, the three stat aggregates each
+    # re-ran the bigram explode (5 fact scans planned — the round-11
+    # registry-wide plan audit). The per-doc scoring pass keeps its own
+    # single explode.
     # Interpolated KN with absolute discount D = 0.75 (exact in binary):
     #   P(w2|w1) = (c12 - D)/c1 + D * N1p_w1 / c1 * (N1f_w2 / T)
     # Every count is an exact bigint; the whole P is one deterministic
@@ -935,11 +947,8 @@ def _bigram_kn(d: str, cb_src: str | None = None) -> str:
     )
     mat = "MATERIALIZED " if d == DUCK else ""
     return f"""
-    WITH split_bg AS {mat}({bg_src}),
-    cb AS {mat}({cb_src if cb_src is not None else '''
-        SELECT w1, w2, cast(count(*) as bigint) AS c12
-        FROM split_bg GROUP BY w1, w2
-    '''}),
+    WITH split_bg AS {mat}({_bigrams(d)}),
+    cb AS {mat}({cb}),
     left_stats AS (
         SELECT w1, {S.isum('c12', d)} AS c1,
             cast(count(*) as bigint) AS n1p
@@ -969,9 +978,10 @@ def _bigram_kn(d: str, cb_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "text_bigram_kneser_ney",
-    oracle=_bigram_kn(DUCK),
+    _bigram_kn,
+    shared={"cb": _bigram_counts},
     tags=("text", "quality"),
     doc="Interpolated Kneser-Ney bigram LM scoring (D=0.75), the standard "
     "upgrade of text_ngram_lm_score's add-one unigram: the discounted "
@@ -986,16 +996,3 @@ def _bigram_kn(d: str, cb_src: str | None = None) -> str:
     "localCheckpointed (the Spark twin of the DuckDB MATERIALIZED cb) "
     "so the LM-build explode runs once.",
 )
-def text_bigram_kneser_ney(spark, sf_dir):
-    cb = spark.sql(
-        "SELECT w1, w2, cast(count(*) as bigint) AS c12 FROM ("
-        "SELECT doc_id, element_at(w, i) AS w1, element_at(w, i + 1) AS w2"
-        " FROM (SELECT doc_id, split(text, ' ') AS w FROM documents) b"
-        " LATERAL VIEW explode(sequence(1, size(w) - 1)) t AS i"
-        " WHERE size(w) >= 2"
-        ") bg GROUP BY w1, w2"
-    ).localCheckpoint()
-    return spark.sql(
-        _bigram_kn(SPARK, cb_src="SELECT w1, w2, c12 FROM {cb}"),
-        cb=cb,
-    )

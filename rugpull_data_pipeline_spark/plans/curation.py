@@ -264,16 +264,16 @@ def _lev_blocked_core(d: str) -> str:
     """
 
 
-def _dedup_levenshtein(d: str, blocked_src: str | None = None) -> str:
+def _dedup_levenshtein(d: str, blocked: str) -> str:
     # A naive (lang, length-bucket) block goes quadratic as the corpus
     # grows (394k candidate pairs at sf0.1 for 5k docs). The scale shape is
     # LSH-candidates → edit-distance VERIFY: three seeded min-shingle-hash
     # band keys, a union of three equi-joins (never an OR-join — Spark
     # would plan a nested loop), then the O(len²) kernel runs only on the
     # ~0.1% of pairs that share a band (437–1169 candidates at sf0.1).
-    # ``blocked_src`` lets the Spark builder checkpoint the block table:
-    # inlined, the six band-join sides each re-ran the shingle pipeline
-    # (14 fact scans planned — the round-11 registry-wide plan audit).
+    # The block table is a shared core: inlined, the six band-join sides
+    # each re-ran the shingle pipeline (14 fact scans planned — the
+    # round-11 registry-wide plan audit).
     band = (
         "SELECT a.doc_id AS doc_a, b.doc_id AS doc_b "
         "FROM blocked a JOIN blocked b "
@@ -282,8 +282,7 @@ def _dedup_levenshtein(d: str, blocked_src: str | None = None) -> str:
     )
     bands = "\n        UNION\n        ".join(band.format(k=k) for k in ("h1", "h2", "h3"))
     return f"""
-    WITH blocked AS ({blocked_src if blocked_src is not None
-                      else _lev_blocked_core(d)}),
+    WITH blocked AS ({blocked}),
     cand AS (
         {bands}
     )
@@ -297,9 +296,10 @@ def _dedup_levenshtein(d: str, blocked_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "dedup_levenshtein_blocked",
-    oracle=_dedup_levenshtein(DUCK),
+    _dedup_levenshtein,
+    shared={"blocked": _lev_blocked_core},
     tags=("dedup",),
     doc="Edit-distance near-dup, LSH-blocked: candidates come from three "
     "min-shingle-hash band keys scoped by (lang, length-bucket) — a union "
@@ -309,16 +309,6 @@ def _dedup_levenshtein(d: str, blocked_src: str | None = None) -> str:
     "The block table is localCheckpointed (text dropped — the verify "
     "step re-joins documents for it) so the shingle pipeline runs once.",
 )
-def dedup_levenshtein_blocked(spark, sf_dir):
-    blocked = spark.sql(_lev_blocked_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _dedup_levenshtein(
-            SPARK,
-            blocked_src="SELECT doc_id, lang, lb, h1, h2, h3"
-            " FROM {blocked}",
-        ),
-        blocked=blocked,
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -60,10 +60,10 @@ Scale notes (1000 executors / 100 TB):
 from __future__ import annotations
 
 from ..functions import scalars as S
-from ..functions.scalars import DUCK, SPARK
+from ..functions.scalars import SPARK
 from .llm_ops import _emb_dims, _word_tokens_all
-from .mining_ops import _daily_means, _day_idx
-from .registry import pair, register
+from .mining_ops import _daily_grid, _daily_means, _day_idx
+from .registry import pair
 
 
 # Decimal-cast cents quantization (NOT floor(double*100), which lands one
@@ -603,18 +603,12 @@ pair(
 # ---------------------------------------------------------------------------
 
 
-def _kendall_tau(d: str, daily_src: str | None = None) -> str:
-    # ``daily_src`` lets the Spark builder checkpoint the calendar grid:
-    # inlined, the xy pair-build sides and the n_days scalar each re-ran
-    # the fact hash-agg (6 fact scans planned — the round-11
-    # registry-wide plan audit).
-    daily = (
-        f"daily AS ({daily_src})"
-        if daily_src is not None
-        else _daily_means(d).strip().rstrip()
-    )
+def _kendall_tau(d: str, daily: str) -> str:
+    # The calendar grid is a shared core: inlined, the xy pair-build
+    # sides and the n_days scalar each re-ran the fact hash-agg (6 fact
+    # scans planned — the round-11 registry-wide plan audit).
     return f"""
-    WITH {daily},
+    WITH daily AS ({daily}),
     xy AS (
         SELECT v.day_idx, v.dm AS x, p.dm AS y, 1 AS k
         FROM (SELECT day_idx, dm FROM daily WHERE event_type = 'view') v
@@ -649,9 +643,10 @@ def _kendall_tau(d: str, daily_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "eval_kendall_tau",
-    oracle=_kendall_tau(DUCK),
+    _kendall_tau,
+    shared={"daily": _daily_grid},
     tags=("eval", "stats"),
     doc="Kendall tau-b rank correlation between the daily-mean 'view' and "
     "'purchase' series: concordant/discordant/tied pair counts from "
@@ -661,16 +656,6 @@ def _kendall_tau(d: str, daily_src: str | None = None) -> str:
     "pair-counting sibling of eval_spearman_rho. The calendar grid is "
     "localCheckpointed so its consumers share ONE fact scan.",
 )
-def eval_kendall_tau(spark, sf_dir):
-    daily = spark.sql(
-        f"WITH {_daily_means(SPARK)} SELECT event_type, day_idx, dm FROM daily"
-    ).localCheckpoint()
-    return spark.sql(
-        _kendall_tau(
-            SPARK, daily_src="SELECT event_type, day_idx, dm FROM {daily}"
-        ),
-        daily=daily,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -943,12 +928,12 @@ def _bias_cell_core(d: str) -> str:
     """
 
 
-def _bias_baseline(d: str, cell_src: str | None = None) -> str:
-    # ``cell_src`` lets the Spark builder checkpoint the rating matrix:
-    # inlined, gm/ib/ub/err each re-ran the fact hash-agg (14 fact scans
-    # planned — the round-11 registry-wide plan audit).
+def _bias_baseline(d: str, cell: str) -> str:
+    # The rating matrix is a shared core: inlined, gm/ib/ub/err each
+    # re-ran the fact hash-agg (14 fact scans planned — the round-11
+    # registry-wide plan audit).
     return f"""
-    WITH cell AS ({cell_src if cell_src is not None else _bias_cell_core(d)}),
+    WITH cell AS ({cell}),
     gm AS (
         SELECT {S.davg('r', d)} AS mu, cast(count(*) as bigint) AS n,
             1 AS k
@@ -995,9 +980,10 @@ def _bias_baseline(d: str, cell_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "rec_user_bias_baseline",
-    oracle=_bias_baseline(DUCK),
+    _bias_baseline,
+    shared={"cell": _bias_cell_core},
     tags=("rec", "mlprep"),
     doc="The classic user/item bias baseline recommender (r_hat = mu + "
     "b_u + b_i) on the (user, event_type) mean-value matrix, with "
@@ -1007,12 +993,6 @@ def _bias_baseline(d: str, cell_src: str | None = None) -> str:
     "joins on a constant key. The rating matrix is localCheckpointed so "
     "gm/ib/ub/err share ONE fact scan.",
 )
-def rec_user_bias_baseline(spark, sf_dir):
-    cell = spark.sql(_bias_cell_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _bias_baseline(SPARK, cell_src="SELECT user_id, item, r FROM {cell}"),
-        cell=cell,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1198,13 +1178,12 @@ def _mad_grid_core(d: str) -> str:
     """
 
 
-def _mad_screen(d: str, grid_src: str | None = None) -> str:
-    # ``grid_src`` lets the Spark builder checkpoint the cents grid:
-    # inlined, med/dev/outl each re-ran the 4-scan unpivot hash-agg
-    # (28 fact scans planned — the round-11 registry-wide plan audit's
-    # worst offender).
+def _mad_screen(d: str, grid: str) -> str:
+    # The cents grid is a shared core: inlined, med/dev/outl each
+    # re-ran the 4-scan unpivot hash-agg (28 fact scans planned — the
+    # round-11 registry-wide plan audit's worst offender).
     return f"""
-    WITH grid AS ({grid_src if grid_src is not None else _mad_grid_core(d)}),
+    WITH grid AS ({grid}),
     {_cum_grid('grid')},
     med AS (
         SELECT grp, max(n) AS n, {_q4_minmax(2, 'med', d)}
@@ -1257,9 +1236,10 @@ def _mad_screen(d: str, grid_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "profile_mad_screen",
-    oracle=_mad_screen(DUCK),
+    _mad_screen,
+    shared={"grid": _mad_grid_core},
     tags=("profile", "quality"),
     doc="Per-column robust anomaly screen over four lineitem measures: "
     "exact interpolated median and MAD computed on the distinct-cents "
@@ -1271,12 +1251,6 @@ def _mad_screen(d: str, grid_src: str | None = None) -> str:
     "The cents grid is localCheckpointed so med/dev/outl share ONE "
     "unpivot pass.",
 )
-def profile_mad_screen(spark, sf_dir):
-    grid = spark.sql(_mad_grid_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _mad_screen(SPARK, grid_src="SELECT grp, v, c FROM {grid}"),
-        grid=grid,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1396,12 +1370,12 @@ def _cramers_obs_core(d: str) -> str:
     """
 
 
-def _cramers_v(d: str, obs_src: str | None = None) -> str:
-    # ``obs_src`` lets the Spark builder checkpoint the contingency grid:
-    # inlined, segs/bands/tot/chi each re-ran the fact hash-agg (4 fact
-    # scans planned — the round-11 registry-wide plan audit).
+def _cramers_v(d: str, obs: str) -> str:
+    # The contingency grid is a shared core: inlined, segs/bands/tot/chi
+    # each re-ran the fact hash-agg (4 fact scans planned — the round-11
+    # registry-wide plan audit).
     return f"""
-    WITH obs AS ({obs_src if obs_src is not None else _cramers_obs_core(d)}),
+    WITH obs AS ({obs}),
     segs AS (
         SELECT seg, {S.isum('o', d)} AS rm, 1 AS k FROM obs GROUP BY seg
     ),
@@ -1454,9 +1428,10 @@ def _cramers_v(d: str, obs_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "agg_cramers_v",
-    oracle=_cramers_v(DUCK),
+    _cramers_v,
+    shared={"obs": _cramers_obs_core},
     tags=("agg", "stats"),
     doc="Cramer's V association between market segment and acctbal "
     "kilo-band, plus the Bergsma bias-corrected variant — the "
@@ -1466,12 +1441,6 @@ def _cramers_v(d: str, obs_src: str | None = None) -> str:
     "9-dp-quantized. The contingency grid is localCheckpointed so its "
     "consumers share ONE fact scan.",
 )
-def agg_cramers_v(spark, sf_dir):
-    obs = spark.sql(_cramers_obs_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _cramers_v(SPARK, obs_src="SELECT seg, band, o FROM {obs}"),
-        obs=obs,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1536,11 +1505,10 @@ def _prune_dg_core(d: str) -> str:
     """
 
 
-def _prune_sim(d: str, dg_src: str | None = None) -> str:
-    # ``dg_src`` lets the Spark builder checkpoint the date grid: inlined,
-    # the five predicate branches (each with a scalar parts_total
-    # subquery) re-ran the fact hash-agg (10 fact scans planned — the
-    # round-11 registry-wide plan audit).
+def _prune_sim(d: str, dg: str) -> str:
+    # The date grid is a shared core: inlined, the five predicate branches
+    # (each with a scalar parts_total subquery) re-ran the fact hash-agg
+    # (10 fact scans planned — the round-11 registry-wide plan audit).
     mon = S.fmt_month("d", d)
 
     def branch(name: str, lo_mon: str, hi_mon: str, lo_ts: str,
@@ -1576,7 +1544,7 @@ def _prune_sim(d: str, dg_src: str | None = None) -> str:
         ]
     )
     return f"""
-    WITH dg AS ({dg_src if dg_src is not None else _prune_dg_core(d)}),
+    WITH dg AS ({dg}),
     sim AS ({branches})
     SELECT predicate, parts_total, parts_read, rows_read, rows_matched,
         round(1 - cast(parts_read as double)
@@ -1588,9 +1556,10 @@ def _prune_sim(d: str, dg_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "layout_prune_simulator",
-    oracle=_prune_sim(DUCK),
+    _prune_sim,
+    shared={"dg": _prune_dg_core},
     tags=("layout",),
     doc="Partition-pruning what-if: if orders were laid out by "
     "month(o_orderdate), how many partitions and rows would five "
@@ -1601,9 +1570,6 @@ def _prune_sim(d: str, dg_src: str | None = None) -> str:
     "this runs off partition stats, same math. The date grid is "
     "localCheckpointed so the five branches share ONE fact scan.",
 )
-def layout_prune_simulator(spark, sf_dir):
-    dg = spark.sql(_prune_dg_core(SPARK)).localCheckpoint()
-    return spark.sql(_prune_sim(SPARK, dg_src="SELECT d, n FROM {dg}"), dg=dg)
 
 
 # ---------------------------------------------------------------------------
@@ -1620,13 +1586,13 @@ def _hour_gof_core(d: str) -> str:
     """
 
 
-def _hour_gof(d: str, hc_src: str | None = None) -> str:
-    # ``hc_src`` lets the Spark builder checkpoint the 24-row-per-type
-    # hour grid: inlined, tt/full_grid/pk each re-ran the fact hash-agg
-    # (4 fact scans planned — the round-11 registry-wide plan audit,
-    # same class as profile_last_digit_uniformity).
+def _hour_gof(d: str, hc: str) -> str:
+    # The 24-row-per-type hour grid is a shared core: inlined,
+    # tt/full_grid/pk each re-ran the fact hash-agg (4 fact scans
+    # planned — the round-11 registry-wide plan audit, same class as
+    # profile_last_digit_uniformity).
     return f"""
-    WITH hc AS ({hc_src if hc_src is not None else _hour_gof_core(d)}),
+    WITH hc AS ({hc}),
     tt AS (
         SELECT event_type, {S.isum('c', d)} AS n FROM hc GROUP BY event_type
     ),
@@ -1658,9 +1624,10 @@ def _hour_gof(d: str, hc_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "events_hour_uniformity_gof",
-    oracle=_hour_gof(DUCK),
+    _hour_gof,
+    shared={"hc": _hour_gof_core},
     tags=("events", "stats"),
     doc="Chi-square goodness-of-fit of hour-of-day activity vs the "
     "uniform null, per event type: chi2 = sum (24c - n)^2 / 24n stays "
@@ -1670,12 +1637,6 @@ def _hour_gof(d: str, hc_src: str | None = None) -> str:
     "of agg_mode_peak_hour. The hour grid is localCheckpointed so its "
     "consumers share ONE fact scan.",
 )
-def events_hour_uniformity_gof(spark, sf_dir):
-    hc = spark.sql(_hour_gof_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _hour_gof(SPARK, hc_src="SELECT event_type, hour, c FROM {hc}"),
-        hc=hc,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1704,12 +1665,12 @@ def _scaler_grid_core(d: str) -> str:
     """
 
 
-def _robust_scaler(d: str, grid_src: str | None = None) -> str:
-    # ``grid_src`` lets the Spark builder checkpoint the cents grid:
-    # inlined, qs/clip each re-ran the cross-table unpivot hash-agg
-    # (12 fact scans planned — the round-11 registry-wide plan audit).
+def _robust_scaler(d: str, grid: str) -> str:
+    # The cents grid is a shared core: inlined, qs/clip each re-ran
+    # the cross-table unpivot hash-agg (12 fact scans planned — the
+    # round-11 registry-wide plan audit).
     return f"""
-    WITH grid AS ({grid_src if grid_src is not None else _scaler_grid_core(d)}),
+    WITH grid AS ({grid}),
     {_cum_grid('grid')},
     qs AS (
         SELECT grp, max(n) AS n,
@@ -1743,9 +1704,10 @@ def _robust_scaler(d: str, grid_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "mlprep_robust_scaler",
-    oracle=_robust_scaler(DUCK),
+    _robust_scaler,
+    shared={"grid": _scaler_grid_core},
     tags=("mlprep", "profile"),
     doc="RobustScaler fit audit across four features from three tables: "
     "exact interpolated median and IQR from cumulative counts on the "
@@ -1755,12 +1717,6 @@ def _robust_scaler(d: str, grid_src: str | None = None) -> str:
     "domain; the quartile sibling of mlprep_quantile_binning. The cents "
     "grid is localCheckpointed so qs/clip share ONE unpivot pass.",
 )
-def mlprep_robust_scaler(spark, sf_dir):
-    grid = spark.sql(_scaler_grid_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _robust_scaler(SPARK, grid_src="SELECT grp, v, c FROM {grid}"),
-        grid=grid,
-    )
 
 
 # ---------------------------------------------------------------------------

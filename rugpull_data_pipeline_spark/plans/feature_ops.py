@@ -37,8 +37,9 @@ Scale notes (1000 executors / 100 TB):
 from __future__ import annotations
 
 from ..functions import scalars as S
-from ..functions.scalars import DUCK, SPARK
+from ..functions.scalars import SPARK
 from .registry import pair, register
+from .stats_eval import _lpa_edges
 
 
 # ---------------------------------------------------------------------------
@@ -79,13 +80,13 @@ def _rfm_um_core(d: str) -> str:
     """
 
 
-def _rfm(d: str, um_src: str | None = None) -> str:
-    # ``um_src`` lets the Spark builder checkpoint the per-user RFM
-    # table: inlined, the three tercile builders (each a grid + a count
-    # subquery) and seg re-ran the fact hash-agg (14 fact scans planned —
-    # the round-11 registry-wide plan audit).
+def _rfm(d: str, um: str) -> str:
+    # The per-user RFM table is a shared core: inlined, the three tercile
+    # builders (each a grid + a count subquery) and seg re-ran the fact
+    # hash-agg (14 fact scans planned — the round-11 registry-wide plan
+    # audit).
     return f"""
-    WITH um AS ({um_src if um_src is not None else _rfm_um_core(d)}),
+    WITH um AS ({um}),
     rb AS ({_rfm_bins('um', 'recency_days', d)}),
     fb AS ({_rfm_bins('um', 'frequency', d)}),
     mb AS ({_rfm_bins('um', 'monetary_cents', d)}),
@@ -108,9 +109,10 @@ def _rfm(d: str, um_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "events_rfm_segments",
-    oracle=_rfm(DUCK),
+    _rfm,
+    shared={"um": _rfm_um_core},
     tags=("events", "mlprep"),
     doc="RFM segmentation: per-user recency/frequency/monetary terciles "
     "(3 = best), reported as segment population counts — the classic "
@@ -123,16 +125,6 @@ def _rfm(d: str, um_src: str | None = None) -> str:
     "RFM table is localCheckpointed so the tercile builders share ONE "
     "fact scan.",
 )
-def events_rfm_segments(spark, sf_dir):
-    um = spark.sql(_rfm_um_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _rfm(
-            SPARK,
-            um_src="SELECT user_id, recency_days, frequency,"
-            " monetary_cents FROM {um}",
-        ),
-        um=um,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -520,13 +512,9 @@ pair(
 _KCORE_K = 2
 
 
-def _kcore(d: str, edges_src: str | None = None) -> str:
-    from .stats_eval import _lpa_edges
-
-    if edges_src is None:
-        edges_src = _lpa_edges(d)
+def _kcore(d: str, edges: str) -> str:
     return f"""
-    WITH edges AS ({edges_src}),
+    WITH edges AS ({edges}),
     sym AS (
         SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
     ),
@@ -546,9 +534,10 @@ def _kcore(d: str, edges_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "graph_kcore_peel",
-    oracle=_kcore(DUCK),
+    _kcore,
+    shared={"edges": _lpa_edges},
     tags=("graph", "iterative"),
     doc=f"k-core peeling (k = {_KCORE_K}, one full peel round — degree, "
     "prune, re-degree) over the capped user co-occurrence graph: nodes "
@@ -560,8 +549,3 @@ def _kcore(d: str, edges_src: str | None = None) -> str:
     "hash-aggs and two semi-join prunes, all equi-joins; top-20 by "
     "TakeOrderedAndProject.",
 )
-def graph_kcore_peel(spark, sf_dir):
-    from .stats_eval import _lpa_edges
-
-    edges = spark.sql(_lpa_edges(SPARK)).localCheckpoint()
-    return spark.sql(_kcore(SPARK, edges_src="SELECT u, v FROM {edges}"), edges=edges)

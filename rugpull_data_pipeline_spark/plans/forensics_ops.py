@@ -33,7 +33,6 @@ collect.
 from __future__ import annotations
 
 from ..functions import scalars as S
-from ..functions.scalars import DUCK, SPARK
 from .diagnostics_ops import (
     _EV_CENTS,
     _cents,
@@ -42,8 +41,8 @@ from .diagnostics_ops import (
     _q4_value,
     _r6u,
 )
-from .mining_ops import _daily_means
-from .registry import pair, register
+from .mining_ops import _daily_grid, _daily_means
+from .registry import pair
 
 
 # ---------------------------------------------------------------------------
@@ -110,12 +109,12 @@ def _last_digit_core(d: str) -> str:
     """
 
 
-def _last_digit(d: str, dc_src: str | None = None) -> str:
-    # ``dc_src`` lets the Spark builder checkpoint the 10-row-per-type
-    # digit grid: inlined, tt/full_grid/pk each re-ran the fact hash-agg
-    # (4 fact scans planned — the round-11 plan audit).
+def _last_digit(d: str, dc: str) -> str:
+    # The 10-row-per-type digit grid is a shared core: inlined,
+    # tt/full_grid/pk each re-ran the fact hash-agg (4 fact scans
+    # planned — the round-11 plan audit).
     return f"""
-    WITH dc AS ({dc_src if dc_src is not None else _last_digit_core(d)}),
+    WITH dc AS ({dc}),
     tt AS (
         SELECT event_type, {S.isum('c', d)} AS n FROM dc GROUP BY event_type
     ),
@@ -147,9 +146,10 @@ def _last_digit(d: str, dc_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "profile_last_digit_uniformity",
-    oracle=_last_digit(DUCK),
+    _last_digit,
+    shared={"dc": _last_digit_core},
     tags=("profile", "fraud"),
     doc="Newcomb last-digit audit, the uniformity sibling of "
     "profile_benford_screen's first-digit law: genuine continuous amounts "
@@ -162,12 +162,6 @@ def _last_digit(d: str, dc_src: str | None = None) -> str:
     "The digit grid is localCheckpointed so its consumers share ONE "
     "fact scan.",
 )
-def profile_last_digit_uniformity(spark, sf_dir):
-    dc = spark.sql(_last_digit_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _last_digit(SPARK, dc_src="SELECT event_type, dg, c FROM {dc}"),
-        dc=dc,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -436,7 +430,7 @@ pair(
 # ---------------------------------------------------------------------------
 
 
-def _sq_period(d: str, daily_src: str | None = None) -> str:
+def _sq_period(d: str, daily: str) -> str:
     # Square-wave correlation instead of a cos/sin DFT: the +-1 kernel
     # keeps the whole transform in EXACT decimal arithmetic (libm trig is
     # not correctly rounded and 1-ulp engine noise could flip a rounded
@@ -444,16 +438,10 @@ def _sq_period(d: str, daily_src: str | None = None) -> str:
     # Y_t = n*dm_t - S, so sum(Y_t * w_t) needs no double mean. n is
     # pre-narrowed to decimal(6,0) so n*dm never crosses the 38-digit
     # product cap (Spark would shave a scale digit there).
-    # ``daily_src`` lets the Spark builder checkpoint the calendar grid:
-    # inlined, st/cent re-derived it (4 fact scans planned — the
-    # round-11 plan audit).
-    daily = (
-        f"daily AS ({daily_src})"
-        if daily_src is not None
-        else _daily_means(d).strip().rstrip()
-    )
+    # The calendar grid is a shared core: inlined, st/cent re-derived it
+    # (4 fact scans planned — the round-11 plan audit).
     return f"""
-    WITH {daily},
+    WITH daily AS ({daily}),
     st AS (
         SELECT event_type, cast(count(*) as decimal(6,0)) AS n,
             cast(sum(dm) as decimal(38,6)) AS s1
@@ -497,9 +485,10 @@ def _sq_period(d: str, daily_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "window_squarewave_period",
-    oracle=_sq_period(DUCK),
+    _sq_period,
+    shared={"daily": _daily_grid},
     tags=("window", "stats"),
     doc="Integer-kernel periodogram: square-wave (+-1) correlation of the "
     "exactly-centered daily-mean series at periods 2..10 days, normalized "
@@ -511,16 +500,6 @@ def _sq_period(d: str, daily_src: str | None = None) -> str:
     "The calendar grid is localCheckpointed so its consumers share ONE "
     "fact scan.",
 )
-def window_squarewave_period(spark, sf_dir):
-    daily = spark.sql(
-        f"WITH {_daily_means(SPARK)} SELECT event_type, day_idx, dm FROM daily"
-    ).localCheckpoint()
-    return spark.sql(
-        _sq_period(
-            SPARK, daily_src="SELECT event_type, day_idx, dm FROM {daily}"
-        ),
-        daily=daily,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -661,13 +640,13 @@ pair(
 # ---------------------------------------------------------------------------
 
 
-def _market_beta(d: str, daily_src: str | None = None) -> str:
+def _market_beta(d: str, daily: str) -> str:
     # Market = SUM of the per-type means each day (a day counts only when
     # every type reported, so the series is complete); beta against the
     # per-day market MEAN folds the 1/n_types factor back in analytically.
-    # ``daily_src`` lets the Spark builder checkpoint the calendar grid:
-    # inlined, its three consumers (nt/mkt/mom) each re-ran the fact
-    # hash-agg (4 fact scans planned — the round-11 plan audit).
+    # The calendar grid is a shared core: inlined, its three consumers
+    # (nt/mkt/mom) each re-ran the fact hash-agg (4 fact scans planned —
+    # the round-11 plan audit).
     nd = "cast(k as double)"
     varm = (
         f"({nd} * cast(smm as double) - cast(sm as double)"
@@ -685,13 +664,8 @@ def _market_beta(d: str, daily_src: str | None = None) -> str:
         f"(cast(n_types as double) * {cov}"
         f" / nullif({varm}, cast(0 as double)))"
     )
-    daily = (
-        f"daily AS ({daily_src})"
-        if daily_src is not None
-        else _daily_means(d).strip().rstrip()
-    )
     return f"""
-    WITH {daily},
+    WITH daily AS ({daily}),
     nt AS (
         SELECT cast(count(DISTINCT event_type) as bigint) AS n_types,
             1 AS kc
@@ -731,9 +705,10 @@ def _market_beta(d: str, daily_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "window_market_beta",
-    oracle=_market_beta(DUCK),
+    _market_beta,
+    shared={"daily": _daily_grid},
     tags=("window", "stats"),
     doc="CAPM-style beta of each event type's daily-mean series against "
     "the equal-weight cross-type market (days where all types reported). "
@@ -744,17 +719,6 @@ def _market_beta(d: str, daily_src: str | None = None) -> str:
     "market-wide swings; near-zero correlation flags series decoupled "
     "from the market (wash-traded pools decouple).",
 )
-def window_market_beta(spark, sf_dir):
-    daily = spark.sql(
-        f"WITH {_daily_means(SPARK)} SELECT event_type, day_idx, dm"
-        " FROM daily"
-    ).localCheckpoint()
-    return spark.sql(
-        _market_beta(
-            SPARK, daily_src="SELECT event_type, day_idx, dm FROM {daily}"
-        ),
-        daily=daily,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -896,18 +860,18 @@ def _levene_core(d: str) -> str:
     """
 
 
-def _levene(d: str, g_src: str | None = None) -> str:
+def _levene(d: str, g: str) -> str:
     # Brown-Forsythe: one-way ANOVA on z = |x - median_g|, with the group
     # medians as exact quarter-cent integers and z therefore exact bigint
     # (|4s - med_q4| is in quarter-cents). The F combine mirrors
     # eval_anova_oneway on the z sums; the z^2 sum pre-squares in bigint
     # (fits up to $5M amounts) and rides one decimal(19,0) product.
-    # ``g_src`` lets the Spark builder checkpoint the cents grid: inlined,
-    # its consumers (cumg-median path + z) re-ran the fact hash-agg
-    # (5 fact scans planned — the round-11 plan audit).
+    # The cents grid is a shared core: inlined, its consumers (cumg-median
+    # path + z) re-ran the fact hash-agg (5 fact scans planned — the
+    # round-11 plan audit).
     tg2 = "cast(tz as double) * cast(tz as double) / cast(ng as double)"
     return f"""
-    WITH g AS ({g_src if g_src is not None else _levene_core(d)}),
+    WITH g AS ({g}),
     {_cum_grid('g')},
     med AS (
         SELECT grp AS event_type, {_q4_minmax(2, 'm', d)}, max(n) AS n
@@ -952,9 +916,10 @@ def _levene(d: str, g_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "eval_levene_bf",
-    oracle=_levene(DUCK),
+    _levene,
+    shared={"g": _levene_core},
     tags=("eval", "stats"),
     doc="Brown-Forsythe (median-based Levene) variance-homogeneity test "
     "across event types: one-way ANOVA on |x - group median|, the robust "
@@ -966,6 +931,3 @@ def _levene(d: str, g_src: str | None = None) -> str:
     "The cents grid is localCheckpointed so its consumers share ONE "
     "fact scan.",
 )
-def eval_levene_bf(spark, sf_dir):
-    g = spark.sql(_levene_core(SPARK)).localCheckpoint()
-    return spark.sql(_levene(SPARK, g_src="SELECT grp, v, c FROM {g}"), g=g)

@@ -211,12 +211,12 @@ def _user_overlap_core(d: str) -> str:
     return "SELECT DISTINCT event_type, user_id FROM events"
 
 
-def _user_overlap(d: str, ut_src: str | None = None) -> str:
-    # ``ut_src`` lets the Spark builder checkpoint the audience table:
-    # inlined, n_t + the pair self-join re-derived it (4 fact scans
-    # planned — the round-11 plan audit).
+def _user_overlap(d: str, ut: str) -> str:
+    # The audience table is a shared core: inlined, n_t + the pair
+    # self-join re-derived it (4 fact scans planned — the round-11
+    # plan audit).
     return f"""
-    WITH ut AS ({ut_src if ut_src is not None else _user_overlap_core(d)}),
+    WITH ut AS ({ut}),
     n_t AS (
         SELECT event_type, cast(count(*) as bigint) AS n_users
         FROM ut GROUP BY event_type
@@ -243,9 +243,10 @@ def _user_overlap(d: str, ut_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "events_user_overlap_types",
-    oracle=_user_overlap(DUCK),
+    _user_overlap,
+    shared={"ut": _user_overlap_core},
     tags=("events", "analytics"),
     doc="Pairwise audience overlap between event types: Jaccard and "
     "containment of the user sets for every type pair with at least one "
@@ -258,12 +259,6 @@ def _user_overlap(d: str, ut_src: str | None = None) -> str:
     "localCheckpointed so n_t and the pair self-join share ONE fact "
     "scan.",
 )
-def events_user_overlap_types(spark, sf_dir):
-    ut = spark.sql(_user_overlap_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _user_overlap(SPARK, ut_src="SELECT event_type, user_id FROM {ut}"),
-        ut=ut,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -605,13 +600,13 @@ def _centroid_core(d: str) -> str:
     """
 
 
-def _centroid_sep(d: str, cm_src: str | None = None) -> str:
-    # ``cm_src`` lets the Spark builder checkpoint the k x dims centroid
-    # grid: inlined, its four consumers (vc/cn/xc a/b) each re-derived it
-    # (7 embeddings scans planned — the round-11 plan audit).
+def _centroid_sep(d: str, cm: str) -> str:
+    # The k x dims centroid grid is a shared core: inlined, its four
+    # consumers (vc/cn/xc a/b) each re-derived it (7 embeddings scans
+    # planned — the round-11 plan audit).
     return f"""
     WITH ed AS ({_emb_dims(d)}),
-    cm AS ({cm_src if cm_src is not None else _centroid_core(d)}),
+    cm AS ({cm}),
     vc AS (
         SELECT e.label, e.vec_id,
             {_dsum9('round(e.v * c.m, 9)')} AS dot,
@@ -658,9 +653,10 @@ def _centroid_sep(d: str, cm_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "sim_centroid_separation",
-    oracle=_centroid_sep(DUCK),
+    _centroid_sep,
+    shared={"cm": _centroid_core},
     tags=("sim",),
     doc="Cluster-separation audit per label: mean cosine of each vector "
     "to its OWN centroid vs the maximum cosine between this centroid "
@@ -672,12 +668,6 @@ def _centroid_sep(d: str, cm_src: str | None = None) -> str:
     "grid is localCheckpointed so its four consumers share one "
     "derivation (inlined = 7 embeddings scans).",
 )
-def sim_centroid_separation(spark, sf_dir):
-    cm = spark.sql(_centroid_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _centroid_sep(SPARK, cm_src="SELECT label, dim, m FROM {cm}"),
-        cm=cm,
-    )
 
 
 # ---------------------------------------------------------------------------

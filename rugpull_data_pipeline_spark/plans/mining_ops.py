@@ -718,6 +718,11 @@ def _daily_means(d: str) -> str:
     """
 
 
+def _daily_grid(d: str) -> str:
+    """The calendar grid as a standalone query, for a shared core."""
+    return f"WITH {_daily_means(d)} SELECT event_type, day_idx, dm FROM daily"
+
+
 def _stl(d: str) -> str:
     return f"""
     WITH {_daily_means(d)},
@@ -1056,12 +1061,12 @@ def _isotonic_g_core(d: str) -> str:
     """
 
 
-def _isotonic(d: str, g_src: str | None = None) -> str:
-    # ``g_src`` lets the Spark builder checkpoint the bin grid: inlined,
-    # c/m/f and the final join each re-ran the fact hash-agg (4 fact
-    # scans planned — the round-11 registry-wide plan audit).
+def _isotonic(d: str, g: str) -> str:
+    # The bin grid is a shared core: inlined, c/m/f and the final join
+    # each re-ran the fact hash-agg (4 fact scans planned — the round-11
+    # registry-wide plan audit).
     return f"""
-    WITH g AS ({g_src if g_src is not None else _isotonic_g_core(d)}),
+    WITH g AS ({g}),
     c AS (
         SELECT b, w, p,
             cast(sum(w) OVER (ORDER BY b) as bigint) AS cw,
@@ -1087,9 +1092,10 @@ def _isotonic(d: str, g_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "mlprep_isotonic_pava",
-    oracle=_isotonic(DUCK),
+    _isotonic,
+    shared={"g": _isotonic_g_core},
     tags=("mlprep", "eval"),
     doc="Isotonic-regression calibration of the purchase rate against the "
     "value score via the closed-form minimax identity "
@@ -1100,9 +1106,6 @@ def _isotonic(d: str, g_src: str | None = None) -> str:
     "sized at any corpus scale. The bin grid is localCheckpointed so "
     "its consumers share ONE fact scan.",
 )
-def mlprep_isotonic_pava(spark, sf_dir):
-    g = spark.sql(_isotonic_g_core(SPARK)).localCheckpoint()
-    return spark.sql(_isotonic(SPARK, g_src="SELECT b, w, p FROM {g}"), g=g)
 
 
 # ---------------------------------------------------------------------------

@@ -620,7 +620,11 @@ def _bpe_pair_count(d: str, src: str, toks_expr: str) -> str:
     return f"SELECT pa, pb, count(*) AS c FROM ({pairs}) p GROUP BY pa, pb"
 
 
-def _bpe_round2(d: str, cnt1_src: str | None = None) -> str:
+def _bpe_round1_count(d: str) -> str:
+    return _bpe_pair_count(d, "documents", S.split_ws("text", d))
+
+
+def _bpe_round2(d: str, cnt1: str) -> str:
     # Applying a BPE merge is greedy LEFTMOST-first over non-overlapping
     # occurrences — exactly the semantics of SQL replace() over a delimited
     # string, PROVIDED every token owns both its delimiters. Joining tokens
@@ -629,17 +633,16 @@ def _bpe_round2(d: str, cnt1_src: str | None = None) -> str:
     # share a delimiter character and replace() merges [a,a,a,a] to
     # [aa,aa] exactly as the BPE training loop does (a single-space join
     # would consume the shared delimiter and miss the second site).
-    # ``cnt1_src`` lets the Spark builder checkpoint the round-1 pair
-    # count: inlined, the two scalar-subquery top1 references and the
-    # merge each re-ran the pair explode (7 fact scans planned — the
-    # round-11 registry-wide plan audit).
+    # The round-1 pair count is a shared core: inlined, the two
+    # scalar-subquery top1 references and the merge each re-ran the pair
+    # explode (7 fact scans planned — the round-11 registry-wide plan
+    # audit).
     split2 = (
         "split(trim(s), '  ')" if d == SPARK else "string_split(trim(s), '  ')"
     )
     top_pa, top_pb = "(SELECT pa FROM top1)", "(SELECT pb FROM top1)"
     return f"""
-    WITH cnt1 AS ({cnt1_src if cnt1_src is not None
-                   else _bpe_pair_count(d, "documents", S.split_ws("text", d))}),
+    WITH cnt1 AS ({cnt1}),
     top1 AS (SELECT pa, pb FROM cnt1 ORDER BY c DESC, pa, pb LIMIT 1),
     joined AS (
         SELECT concat(' ', {S.arr_join(S.split_ws("text", d), "'  '", d)}, ' ') AS s
@@ -667,9 +670,10 @@ def _bpe_round2(d: str, cnt1_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "text_bpe_merge_round2",
-    oracle=_bpe_round2(DUCK),
+    _bpe_round2,
+    shared={"cnt1": _bpe_round1_count},
     tags=("text", "tokenizer"),
     doc="Second BPE training round: pick the top merge from round 1 "
     "(deterministic tie-break), APPLY it corpus-wide, recount adjacent "
@@ -681,16 +685,6 @@ def _bpe_round2(d: str, cnt1_src: str | None = None) -> str:
     "rounds are explode + map-side-combinable hash aggs. The round-1 "
     "pair count is localCheckpointed so the explode runs once.",
 )
-def text_bpe_merge_round2(spark, sf_dir):
-    from ..functions import scalars as S
-
-    cnt1 = spark.sql(
-        _bpe_pair_count(SPARK, "documents", S.split_ws("text", SPARK))
-    ).localCheckpoint()
-    return spark.sql(
-        _bpe_round2(SPARK, cnt1_src="SELECT pa, pb, c FROM {cnt1}"),
-        cnt1=cnt1,
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -778,16 +778,16 @@ def _mad_med_core(d: str) -> str:
     return f"SELECT event_type, {med} AS m FROM events GROUP BY event_type"
 
 
-def _mad_outliers(d: str, med_src: str | None = None) -> str:
-    # ``med_src`` lets the Spark builder checkpoint the per-type median:
-    # inlined, the dev CTE's two consumers re-ran the median pass too
-    # (4 fact scans planned — the round-11 registry-wide plan audit).
-    # The remaining two fact scans are the genuinely distinct deviation
-    # passes (MAD of |x - med|, then the flag count) — column-pruned
-    # re-reads beat materializing a fact-sized deviation table.
+def _mad_outliers(d: str, med: str) -> str:
+    # The per-type median is a shared core: inlined, the dev CTE's two
+    # consumers re-ran the median pass too (4 fact scans planned — the
+    # round-11 registry-wide plan audit). The remaining two fact scans
+    # are the genuinely distinct deviation passes (MAD of |x - med|,
+    # then the flag count) — column-pruned re-reads beat materializing a
+    # fact-sized deviation table.
     mad = "percentile(ad, 0.5)" if d == SPARK else "quantile_cont(ad, 0.5)"
     return f"""
-    WITH med AS ({med_src if med_src is not None else _mad_med_core(d)}),
+    WITH med AS ({med}),
     dev AS (
         SELECT e.event_type, abs(e.value - m.m) AS ad, m.m
         FROM events e JOIN med m ON e.event_type = m.event_type
@@ -807,9 +807,10 @@ def _mad_outliers(d: str, med_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "agg_mad_outliers",
-    oracle=_mad_outliers(DUCK),
+    _mad_outliers,
+    shared={"med": _mad_med_core},
     tags=("agg", "quality"),
     doc="Robust outlier detection via median absolute deviation: per-group "
     "exact median, then the median of absolute deviations, flagging values "
@@ -821,12 +822,6 @@ def _mad_outliers(d: str, med_src: str | None = None) -> str:
     "the percentile family already proved. The per-type median is "
     "localCheckpointed so the two deviation passes don't re-run it.",
 )
-def agg_mad_outliers(spark, sf_dir):
-    med = spark.sql(_mad_med_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _mad_outliers(SPARK, med_src="SELECT event_type, m FROM {med}"),
-        med=med,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -927,10 +922,17 @@ _PMI_MIN_COUNT = 5
 _PMI_TOPK = 20
 
 
-def _pmi_uni_core() -> str:
-    """Spark-side unigram counts — ONE explode pass over documents."""
-    tk = S.split_ws("text", SPARK)
-    lat_all = S.explode_seq("p", "1", S.arr_len("tk", SPARK), SPARK)
+def _pmi_uni_core(d: str) -> str:
+    """Unigram counts — ONE explode pass over documents."""
+    tk = S.split_ws("text", d)
+    if d == DUCK:
+        return f"""
+    SELECT tok AS w, count(*) AS c FROM (
+        SELECT unnest(tk) AS tok
+        FROM (SELECT doc_id, {tk} AS tk FROM documents) t
+    ) z GROUP BY tok
+    """
+    lat_all = S.explode_seq("p", "1", S.arr_len("tk", d), d)
     return f"""
     SELECT element_at(tk, p) AS w, count(*) AS c
     FROM (SELECT /*+ REPARTITION */ doc_id, {tk} AS tk FROM documents) toks
@@ -939,36 +941,53 @@ def _pmi_uni_core() -> str:
     """
 
 
-def _pmi_bigall_core() -> str:
-    """Spark-side all-bigram counts — ONE explode pass over documents."""
-    tk = S.split_ws("text", SPARK)
-    lat_big = S.explode_seq("p", "1", f"{S.arr_len('tk', SPARK)} - 1", SPARK)
+def _pmi_bigall_core(d: str) -> str:
+    """All-bigram counts — ONE explode pass over documents."""
+    tk = S.split_ws("text", d)
+    if d == DUCK:
+        # Zipped (pos, tok) unnest + lead() bigrams: the lateral tk[p]
+        # form copied the token list per output row — unbounded on the
+        # giant-payload surface's 150k-token doc (r9 sweep). Tokens are
+        # never NULL, so lead IS NULL exactly marks each doc's last
+        # position.
+        return f"""
+    SELECT a, b, count(*) AS c FROM (
+        SELECT tok AS a, lead(tok, 1) OVER (
+            PARTITION BY doc_id ORDER BY pos) AS b
+        FROM (
+            SELECT doc_id,
+                unnest(range(1, len(tk) + 1)) AS pos,
+                unnest(tk) AS tok
+            FROM (SELECT doc_id, {tk} AS tk FROM documents) t
+        ) z
+    ) bg WHERE b IS NOT NULL GROUP BY a, b
+    """
+    # Single-token docs have no bigrams; Spark's sequence(1, n-1)
+    # DESCENDS when n < 2 (same pitfall as the Kneser-Ney bigram build)
+    # and ANSI element_at then throws on the out-of-bounds index — filter
+    # them before the explode, as DuckDB's empty range() does implicitly.
+    lat_big = S.explode_seq("p", "1", f"{S.arr_len('tk', d)} - 1", d)
     return f"""
     SELECT element_at(tk, p) AS a, element_at(tk, p + 1) AS b,
         count(*) AS c
     FROM (
         SELECT doc_id, tk FROM (
             SELECT /*+ REPARTITION */ doc_id, {tk} AS tk FROM documents
-        ) toks WHERE {S.arr_len('tk', SPARK)} >= 2
+        ) toks WHERE {S.arr_len('tk', d)} >= 2
     ) toks2 {lat_big}
     GROUP BY element_at(tk, p), element_at(tk, p + 1)
     """
 
 
-def _pmi_collocations(
-    d: str,
-    uni_src: str | None = None,
-    bigall_src: str | None = None,
-) -> str:
-    # ``uni_src``/``bigall_src`` let the Spark builder checkpoint the two
-    # count tables — the Spark twin of the DuckDB branch's MATERIALIZED
-    # CTEs (r9): inlined, the scalar total subqueries re-ran the explodes
-    # (6 fact scans planned — the round-11 registry-wide plan audit).
-    tk = S.split_ws("text", d)
-    if d == SPARK and uni_src is not None and bigall_src is not None:
-        srcs = f"""
-    WITH uni AS ({uni_src}),
-    big_all AS ({bigall_src}),
+def _pmi_collocations(d: str, uni: str, big_all: str) -> str:
+    # The two count tables are shared cores: inlined, the scalar total
+    # subqueries re-ran the explodes (6 fact scans planned — the round-11
+    # registry-wide plan audit). DuckDB MATERIALIZEs them for the same
+    # reason (r9).
+    mat = "MATERIALIZED " if d == DUCK else ""
+    return f"""
+    WITH uni AS {mat}({uni}),
+    big_all AS {mat}({big_all}),
     big AS (
         SELECT a, b, c FROM big_all WHERE c >= {_PMI_MIN_COUNT}
     ),
@@ -977,79 +996,7 @@ def _pmi_collocations(
     ),
     tot_b AS (
         SELECT cast(sum(c) as bigint) AS n_big FROM big_all
-    )"""
-    elif d == SPARK:
-        hint = "/*+ REPARTITION */ "
-        el = lambda i: f"element_at(tk, {i})"  # noqa: E731
-        lat_all = S.explode_seq("p", "1", S.arr_len("tk", d), d)
-        lat_big = S.explode_seq("p", "1", f"{S.arr_len('tk', d)} - 1", d)
-        srcs = f"""
-    WITH toks AS (
-        SELECT {hint}doc_id, {tk} AS tk FROM documents
-    ),
-    toks2 AS (
-        -- single-token docs have no bigrams; Spark's sequence(1, n-1)
-        -- DESCENDS when n < 2 (same pitfall as the Kneser-Ney bigram
-        -- build) and ANSI element_at then throws on the out-of-bounds
-        -- index — filter them before the explode, as DuckDB's empty
-        -- range() does implicitly.
-        SELECT doc_id, tk FROM toks WHERE {S.arr_len('tk', d)} >= 2
-    ),
-    uni AS (
-        SELECT {el('p')} AS w, count(*) AS c
-        FROM toks {lat_all}
-        GROUP BY {el('p')}
-    ),
-    big AS (
-        SELECT {el('p')} AS a, {el('p + 1')} AS b, count(*) AS c
-        FROM toks2 {lat_big}
-        GROUP BY {el('p')}, {el('p + 1')}
-        HAVING count(*) >= {_PMI_MIN_COUNT}
-    ),
-    tot AS (
-        SELECT cast(sum(c) as bigint) AS n_uni FROM uni
-    ),
-    tot_b AS (
-        SELECT cast(sum(c) as bigint) AS n_big
-        FROM (SELECT {el('p')} AS a, {el('p + 1')} AS b, count(*) AS c
-              FROM toks2 {lat_big} GROUP BY {el('p')}, {el('p + 1')}) all_b
-    )"""
-    else:
-        # Zipped (pos, tok) unnest + lead() bigrams, every re-referenced
-        # CTE MATERIALIZED: the lateral tk[p] form copied the token list
-        # per output row AND plain-CTE inlining re-ran the unigram fan-out
-        # once per reference — unbounded on the giant-payload surface's
-        # 150k-token doc (r9 sweep). Tokens are never NULL, so lead IS
-        # NULL exactly marks each doc's last position (the toks2 filter).
-        srcs = f"""
-    WITH tok_rows AS MATERIALIZED (
-        SELECT doc_id, pos, tok FROM (
-            SELECT doc_id,
-                unnest(range(1, len(tk) + 1)) AS pos,
-                unnest(tk) AS tok
-            FROM (SELECT doc_id, {tk} AS tk FROM documents) t
-        ) z
-    ),
-    uni AS MATERIALIZED (
-        SELECT tok AS w, count(*) AS c FROM tok_rows GROUP BY tok
-    ),
-    big_all AS MATERIALIZED (
-        SELECT a, b, count(*) AS c FROM (
-            SELECT tok AS a, lead(tok, 1) OVER (
-                PARTITION BY doc_id ORDER BY pos) AS b
-            FROM tok_rows
-        ) bg WHERE b IS NOT NULL GROUP BY a, b
-    ),
-    big AS (
-        SELECT a, b, c FROM big_all WHERE c >= {_PMI_MIN_COUNT}
-    ),
-    tot AS (
-        SELECT cast(sum(c) as bigint) AS n_uni FROM uni
-    ),
-    tot_b AS (
-        SELECT cast(sum(c) as bigint) AS n_big FROM big_all
-    )"""
-    return f"""{srcs}
+    )
     SELECT a, b, cast(big.c as bigint) AS n_ab,
         round(cast(big.c as double) * (SELECT n_uni FROM tot)
               * (SELECT n_uni FROM tot)
@@ -1064,9 +1011,10 @@ def _pmi_collocations(
     """
 
 
-@register(
+pair(
     "text_pmi_collocations",
-    oracle=_pmi_collocations(DUCK),
+    _pmi_collocations,
+    shared={"uni": _pmi_uni_core, "big_all": _pmi_bigall_core},
     tags=("text",),
     doc="PMI collocation mining (word2phrase-style phrase detection): "
     "adjacent-pair counts vs unigram counts, scored by the PMI RATIO "
@@ -1080,18 +1028,6 @@ def _pmi_collocations(
     "vocabulary. Both count tables are localCheckpointed (the Spark "
     "twin of the DuckDB MATERIALIZED CTEs) so each explode runs once.",
 )
-def text_pmi_collocations(spark, sf_dir):
-    uni = spark.sql(_pmi_uni_core()).localCheckpoint()
-    big = spark.sql(_pmi_bigall_core()).localCheckpoint()
-    return spark.sql(
-        _pmi_collocations(
-            SPARK,
-            uni_src="SELECT w, c FROM {uni}",
-            bigall_src="SELECT a, b, c FROM {big}",
-        ),
-        uni=uni,
-        big=big,
-    )
 
 
 def _winnow_pairs(d: str) -> str:

@@ -111,12 +111,35 @@ def sql_pair(
 
 def pair(
     name: str,
-    q: Callable[[str], str],
+    q: Callable[..., str],
     tags: tuple[str, ...] = (),
     doc: str = "",
+    shared: dict[str, Callable[[str], str]] | None = None,
 ) -> None:
-    """Register ``q(dialect) -> SQL text`` as its Spark/DuckDB pair."""
-    sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
+    """Register ``q(dialect, **shared_cores) -> SQL text`` as its
+    Spark/DuckDB pair.
+
+    ``shared`` maps a CTE name to its core text function ``core(dialect)``
+    for cores read by more than one consumer in ``q``. Spark inlines a
+    ``WITH`` CTE once per consumer, so each core is built once and eagerly
+    ``localCheckpoint``ed, and ``q`` reads it as ``SELECT * FROM {name}``.
+    DuckDB materializes CTEs itself, so the oracle inlines ``core(DUCK)``.
+    This is the one place that policy lives."""
+    shared = shared or {}
+    if not shared:
+        sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
+        return
+    text = q(SPARK, **{k: f"SELECT * FROM {{{k}}}" for k in shared})
+
+    def builder(spark: SparkSession, sf_dir: str) -> DataFrame:
+        _ensure_views(spark, sf_dir)
+        frames = {
+            k: spark.sql(core(SPARK)).localCheckpoint() for k, core in shared.items()
+        }
+        return spark.sql(text, **frames)
+
+    oracle = q(DUCK, **{k: core(DUCK) for k, core in shared.items()})
+    _REGISTRY[name] = QuerySpec(name, builder, oracle, tags, doc)
 
 
 def get(name: str) -> QuerySpec:

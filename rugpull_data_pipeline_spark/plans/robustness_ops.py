@@ -48,17 +48,17 @@ def _mwu_core(d: str) -> str:
     """
 
 
-def _mwu(d: str, g_src: str | None = None) -> str:
+def _mwu(d: str, g: str) -> str:
     # U from the same cumulative-window pair counting as eval_cliffs_delta
     # (never an n1 x n2 join); 2*U stays exact bigint. The tie-corrected
     # normal approximation needs sum(t^3 - t): the cube is computed in
     # bigint per grid row (safe to t ~ 2e6) and summed as decimal(38,0)
-    # so fleet-scale tie masses cannot wrap. ``g_src`` lets the Spark
-    # builder read a localCheckpointed grid so the four downstream
-    # consumers (p/o/types/svals) don't each re-scan the facts (CTE
-    # inlining planned 4 fact scans — the round-11 plan audit).
+    # so fleet-scale tie masses cannot wrap. The grid is a shared core,
+    # so the four downstream consumers (p/o/types/svals) don't each
+    # re-scan the facts (CTE inlining planned 4 fact scans — the round-11
+    # plan audit).
     return f"""
-    WITH g AS ({g_src if g_src is not None else _mwu_core(d)}),
+    WITH g AS ({g}),
     p AS (SELECT s, c AS cp FROM g WHERE event_type = 'purchase'),
     o AS (SELECT event_type, s, c FROM g WHERE event_type <> 'purchase'),
     types AS (
@@ -119,9 +119,10 @@ def _mwu(d: str, g_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "eval_mann_whitney_u",
-    oracle=_mwu(DUCK),
+    _mwu,
+    shared={"g": _mwu_core},
     tags=("eval", "stats"),
     doc="Mann-Whitney U rank-sum test of purchase value against each "
     "other event type: 2U stays exact bigint from the eval_cliffs_delta "
@@ -132,12 +133,6 @@ def _mwu(d: str, g_src: str | None = None) -> str:
     "equi-join — bounded by the value domain, not rows. The cents grid "
     "is localCheckpointed so its four consumers share ONE fact scan.",
 )
-def eval_mann_whitney_u(spark, sf_dir):
-    grid = spark.sql(_mwu_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _mwu(SPARK, g_src="SELECT event_type, s, c FROM {grid}"),
-        grid=grid,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -261,19 +256,18 @@ def _cindex_core(d: str) -> str:
     """
 
 
-def _cindex(d: str, subj_src: str | None = None) -> str:
+def _cindex(d: str, subj: str) -> str:
     # Harrell's C for view->purchase conversion with click count as the
     # risk score: concordant = higher score converts earlier. All pair
     # counting on the (day, score-band) grid via two suffix-sum windows —
     # O(days x 10) state, never an n^2 subject join. Tied event times are
     # not comparable (strict t' > t); tied scores earn half credit
     # (2*conc + ties over 2*comparable keeps it exact bigint).
-    # ``subj_src`` lets the Spark builder checkpoint the subject table:
-    # CTE inlining otherwise re-derives it per consumer (21 fact scans in
-    # the planned query — the round-11 plan audit).
+    # The subject table is a shared core: CTE inlining otherwise
+    # re-derives it per consumer (21 fact scans in the planned query —
+    # the round-11 plan audit).
     return f"""
-    WITH subj AS ({subj_src if subj_src is not None
-                   else _cindex_core(d)}),
+    WITH subj AS ({subj}),
     cells AS (
         SELECT t, r, {S.isum('ev', d)} AS dv,
             cast(count(*) as bigint) AS c
@@ -324,9 +318,10 @@ def _cindex(d: str, subj_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "eval_concordance_index",
-    oracle=_cindex(DUCK),
+    _cindex,
+    shared={"subj": _cindex_core},
     tags=("eval", "mlprep"),
     doc="Harrell's concordance index for view->purchase conversion with "
     "the user's click count as the risk score (higher score should "
@@ -338,12 +333,6 @@ def _cindex(d: str, subj_src: str | None = None) -> str:
     "of events_survival_km. The subject table is localCheckpointed so "
     "its five consumers share one derivation.",
 )
-def eval_concordance_index(spark, sf_dir):
-    subj = spark.sql(_cindex_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _cindex(SPARK, subj_src="SELECT user_id, ev, t, r FROM {subj}"),
-        subj=subj,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -570,14 +559,14 @@ def _novelty_core(d: str) -> str:
     """
 
 
-def _token_novelty(d: str, tb_src: str | None = None) -> str:
-    # ``tb_src`` lets the Spark builder checkpoint the batch-token grid:
-    # inlined, its two consumers re-run the token explode (8 documents
-    # scans planned — the round-11 plan audit). The cheap explode-free
-    # batch map is re-derived either way.
+def _token_novelty(d: str, tb: str) -> str:
+    # The batch-token grid is a shared core: inlined, its two consumers
+    # re-run the token explode (8 documents scans planned — the round-11
+    # plan audit). The cheap explode-free batch map is re-derived either
+    # way.
     return f"""
     WITH {_novelty_batch(d)},
-    tb AS ({tb_src if tb_src is not None else _novelty_core(d)}),
+    tb AS ({tb}),
     first_seen AS (
         SELECT tok, min(batch) AS fb FROM tb GROUP BY tok
     ),
@@ -607,9 +596,10 @@ def _token_novelty(d: str, tb_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "text_token_novelty",
-    oracle=_token_novelty(DUCK),
+    _token_novelty,
+    shared={"tb": _novelty_core},
     tags=("text", "curation"),
     doc="Token-novelty curve across eight ingest batches (doc_id ranges — "
     "arrival order): per batch, the share of vocabulary types and token "
@@ -621,12 +611,6 @@ def _token_novelty(d: str, tb_src: str | None = None) -> str:
     "batch-token grid is localCheckpointed so the token explode runs "
     "once.",
 )
-def text_token_novelty(spark, sf_dir):
-    tb = spark.sql(_novelty_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _token_novelty(SPARK, tb_src="SELECT batch, tok, c FROM {tb}"),
-        tb=tb,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -644,15 +628,15 @@ def _burrows_core(d: str) -> str:
     """
 
 
-def _burrows(d: str, ts_src: str | None = None) -> str:
+def _burrows(d: str, ts: str) -> str:
     # Counts-per-million are exact integers (1e6*c // n); z-scores use the
     # n-multiplied co-moment combine; per-pair |z_a - z_b| terms are
     # decimal-quantized before the order-free sum (the _dsum9 class).
-    # ``ts_src`` lets the Spark builder checkpoint the source-token grid:
-    # inlined, CTE fan-out re-ran the token explode 12 times (the
-    # round-11 plan audit's worst offender, 8 s at sf0.1).
+    # The source-token grid is a shared core: inlined, CTE fan-out re-ran
+    # the token explode 12 times (the round-11 plan audit's worst
+    # offender, 8 s at sf0.1).
     return f"""
-    WITH ts AS ({ts_src if ts_src is not None else _burrows_core(d)}),
+    WITH ts AS ({ts}),
     tot AS (
         SELECT source, {S.isum('c', d)} AS n, 1 AS k
         FROM ts GROUP BY source
@@ -707,9 +691,10 @@ def _burrows(d: str, ts_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "text_burrows_delta",
-    oracle=_burrows(DUCK),
+    _burrows,
+    shared={"ts": _burrows_core},
     tags=("text", "stats"),
     doc="Burrows' delta stylometry between corpus sources: z-score the "
     "counts-per-million of the 30 most frequent tokens across sources, "
@@ -722,12 +707,6 @@ def _burrows(d: str, ts_src: str | None = None) -> str:
     "The source-token grid is localCheckpointed so the token explode "
     "runs once (inlined it ran 12x).",
 )
-def text_burrows_delta(spark, sf_dir):
-    ts = spark.sql(_burrows_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _burrows(SPARK, ts_src="SELECT source, tok, c FROM {ts}"),
-        ts=ts,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -762,10 +741,10 @@ def _rake_core(d: str) -> str:
     """
 
 
-def _rake(d: str, ns_src: str | None = None) -> str:
-    # ``ns_src`` lets the Spark builder checkpoint the token-run table:
-    # inlined, its four consumers (wstat/plen/wdeg/scored) each re-ran
-    # the posexplode (the round-11 plan audit).
+def _rake(d: str, nonstop: str) -> str:
+    # The token-run table is a shared core: inlined, its four consumers
+    # (wstat/plen/wdeg/scored) each re-ran the posexplode (the round-11
+    # plan audit).
     if d == SPARK:
         phrase_agg = (
             "array_join(transform(array_sort(collect_list("
@@ -774,7 +753,7 @@ def _rake(d: str, ns_src: str | None = None) -> str:
     else:
         phrase_agg = "string_agg(n.tok, ' ' ORDER BY n.pos)"
     return f"""
-    WITH nonstop AS ({ns_src if ns_src is not None else _rake_core(d)}),
+    WITH nonstop AS ({nonstop}),
     wstat AS (
         SELECT tok, cast(count(*) as bigint) AS freq FROM nonstop
         GROUP BY tok
@@ -821,9 +800,10 @@ def _rake(d: str, ns_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "text_keyphrase_rake",
-    oracle=_rake(DUCK),
+    _rake,
+    shared={"nonstop": _rake_core},
     tags=("text", "curation"),
     doc="RAKE keyphrase extraction: candidate phrases are maximal "
     "stopword-free token runs (gaps-and-islands on token positions — no "
@@ -835,12 +815,6 @@ def _rake(d: str, ns_src: str | None = None) -> str:
     "per-document position row_numbers — fully distributed. The "
     "token-run table is localCheckpointed so the posexplode runs once.",
 )
-def text_keyphrase_rake(spark, sf_dir):
-    ns = spark.sql(_rake_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _rake(SPARK, ns_src="SELECT doc_id, pos, tok, grp FROM {ns}"),
-        ns=ns,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -864,12 +838,12 @@ def _reciprocity_core(d: str) -> str:
     """
 
 
-def _reciprocity(d: str, de_src: str | None = None) -> str:
-    # ``de_src`` lets the Spark builder checkpoint the edge table: the
-    # reciprocity self-join otherwise re-derived the lineitem self-join
-    # on both sides (4 fact scans planned — the round-11 plan audit).
+def _reciprocity(d: str, de: str) -> str:
+    # The edge table is a shared core: the reciprocity self-join
+    # otherwise re-derived the lineitem self-join on both sides (4 fact
+    # scans planned — the round-11 plan audit).
     return f"""
-    WITH de AS ({de_src if de_src is not None else _reciprocity_core(d)}),
+    WITH de AS ({de}),
     r AS (
         SELECT de.src, de.dst, de.w, rv.w AS w_rev
         FROM de LEFT JOIN de rv
@@ -887,9 +861,10 @@ def _reciprocity(d: str, de_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "graph_edge_reciprocity",
-    oracle=_reciprocity(DUCK),
+    _reciprocity,
+    shared={"de": _reciprocity_core},
     tags=("graph",),
     doc="Reciprocity of the directed followed-by part graph (edge u->v "
     "when v's line follows u's within an order): share of edges whose "
@@ -901,12 +876,6 @@ def _reciprocity(d: str, de_src: str | None = None) -> str:
     "EDGE table, already aggregated. The edge table is localCheckpointed "
     "so the lineitem self-join runs once.",
 )
-def graph_edge_reciprocity(spark, sf_dir):
-    de = spark.sql(_reciprocity_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _reciprocity(SPARK, de_src="SELECT src, dst, w FROM {de}"),
-        de=de,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1002,14 +971,14 @@ def _cohort_first_day(d: str) -> str:
     return f"SELECT user_id, min({di}) AS fd FROM events GROUP BY user_id"
 
 
-def _cohort_ltv(d: str, f_src: str | None = None) -> str:
+def _cohort_ltv(d: str, f: str) -> str:
     di = _day_idx(d)
-    # ``f_src`` lets the Spark builder checkpoint the first-day table:
-    # inlined, cs and the rev join each re-ran the fact hash-agg
-    # (4 fact scans planned — the round-11 plan audit; rev and gm keep
-    # their own genuinely distinct fact aggregates).
+    # The first-day table is a shared core: inlined, cs and the rev
+    # join each re-ran the fact hash-agg (4 fact scans planned — the
+    # round-11 plan audit; rev and gm keep their own genuinely
+    # distinct fact aggregates).
     return f"""
-    WITH f AS ({f_src if f_src is not None else _cohort_first_day(d)}),
+    WITH f AS ({f}),
     cs AS (
         SELECT {S.idiv('fd', '7', d)} AS cw,
             cast(count(*) as bigint) AS n_users
@@ -1047,9 +1016,10 @@ def _cohort_ltv(d: str, f_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "events_cohort_ltv",
-    oracle=_cohort_ltv(DUCK),
+    _cohort_ltv,
+    shared={"f": _cohort_first_day},
     tags=("events", "analytics"),
     doc="Weekly-cohort lifetime-value curves: users cohorted by "
     "first-activity epoch week; LTV(age) = cumulative purchase cents per "
@@ -1062,12 +1032,6 @@ def _cohort_ltv(d: str, f_src: str | None = None) -> str:
     "table is localCheckpointed so cs and the rev join share one "
     "derivation.",
 )
-def events_cohort_ltv(spark, sf_dir):
-    f = spark.sql(_cohort_first_day(SPARK)).localCheckpoint()
-    return spark.sql(
-        _cohort_ltv(SPARK, f_src="SELECT user_id, fd FROM {f}"),
-        f=f,
-    )
 
 
 # ---------------------------------------------------------------------------

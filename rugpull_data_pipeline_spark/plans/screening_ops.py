@@ -38,10 +38,9 @@ tools/scan_audit.py cap); constant fan-outs join on a literal key.
 from __future__ import annotations
 
 from ..functions import scalars as S
-from ..functions.scalars import DUCK, SPARK
 from .diagnostics_ops import _EV_CENTS, _r6u
 from .mining_ops import _day_idx
-from .registry import pair, register
+from .registry import pair
 from .robustness_ops import _mwu_core
 
 
@@ -57,15 +56,15 @@ def _dmul(a: str, b: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _kruskal_wallis(d: str, g_src: str | None = None) -> str:
+def _kruskal_wallis(d: str, g: str) -> str:
     # Midranks without materializing ranks per row: over the pooled cents
     # grid, 2*midrank(s) = 2*(count strictly below) + (count tied) + 1
     # stays bigint; per-group doubled rank sums fold as decimal(38,0).
     # H uses R_j = r2sum_j / 2; the tie correction divides by
-    # 1 - sum(t^3 - t)/(N^3 - N). ``g_src`` threads the checkpointed
-    # grid into both consumers (sv and pg) — one fact scan.
+    # 1 - sum(t^3 - t)/(N^3 - N). The shared grid core feeds both
+    # consumers (sv and pg) — one fact scan.
     return f"""
-    WITH g AS ({g_src if g_src is not None else _mwu_core(d)}),
+    WITH g AS ({g}),
     sv AS (SELECT s, {S.isum('c', d)} AS cs FROM g GROUP BY s),
     r AS (
         SELECT s, cs,
@@ -118,9 +117,10 @@ def _kruskal_wallis(d: str, g_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "eval_kruskal_wallis",
-    oracle=_kruskal_wallis(DUCK),
+    _kruskal_wallis,
+    shared={"g": _mwu_core},
     tags=("eval", "stats"),
     doc="Kruskal-Wallis k-sample rank test of events.value across all "
     "event types: the one-way ANOVA-on-ranks confirmatory sibling of "
@@ -136,12 +136,6 @@ def _kruskal_wallis(d: str, g_src: str | None = None) -> str:
     "RECEIVER/stage2_processing.cpp across candidate pools, run as a "
     "proper k-sample test.",
 )
-def eval_kruskal_wallis(spark, sf_dir):
-    g = spark.sql(_mwu_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _kruskal_wallis(SPARK, g_src="SELECT event_type, s, c FROM {g}"),
-        g=g,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -155,7 +149,7 @@ _JT_ORD = (
 )
 
 
-def _jonckheere(d: str, g_src: str | None = None) -> str:
+def _jonckheere(d: str, g0: str) -> str:
     # JT = sum over ordered group pairs (i < j) of the Mann-Whitney count
     # U_ij; doubled (2U = 2*below + ties) it stays exact bigint. Each
     # per-group cumulative rides the dense (ord x cents) fan-out — a
@@ -164,7 +158,7 @@ def _jonckheere(d: str, g_src: str | None = None) -> str:
     # residual filter (4 x 4 orders per cents row, never rows x rows).
     # The null mean/variance use the no-tie form (ties are in the doc).
     return f"""
-    WITH g0 AS ({g_src if g_src is not None else _mwu_core(d)}),
+    WITH g0 AS ({g0}),
     g AS (
         SELECT {_JT_ORD} AS o, s, {S.isum('c', d)} AS c
         FROM g0 WHERE event_type <> 'error'
@@ -209,9 +203,10 @@ def _jonckheere(d: str, g_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "eval_jonckheere_terpstra",
-    oracle=_jonckheere(DUCK),
+    _jonckheere,
+    shared={"g0": _mwu_core},
     tags=("eval", "stats"),
     doc="Jonckheere-Terpstra ordered-alternative trend test across the "
     "funnel stages signup < view < click < purchase (errors excluded): "
@@ -224,12 +219,6 @@ def _jonckheere(d: str, g_src: str | None = None) -> str:
     "decimal-widened. The grid is localCheckpointed — one fact scan "
     "feeds the stage cumulatives, the pair join, and the group sizes.",
 )
-def eval_jonckheere_terpstra(spark, sf_dir):
-    g = spark.sql(_mwu_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _jonckheere(SPARK, g_src="SELECT event_type, s, c FROM {g}"),
-        g=g,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -246,17 +235,17 @@ def _friedman_core(d: str) -> str:
     """
 
 
-def _friedman(d: str, g_src: str | None = None) -> str:
+def _friedman(d: str, g: str) -> str:
     # Blocks = calendar days, treatments = event types, response = daily
     # event count. Within each block the k treatments take midranks
     # (2*midrank = 2*below + tied + 1, exact bigint via two windows over
     # the 5-row block); missing (day, type) cells enter as zero counts so
     # every block ranks the same k treatments. Kendall's W = chi2_F /
-    # (n (k-1)) comes out of the same aggregate. ``g_src`` threads the
-    # checkpointed grid into its three consumers (days, types, full_g) —
-    # inlined, Spark planned FIVE fact scans here.
+    # (n (k-1)) comes out of the same aggregate. The shared grid core
+    # feeds its three consumers (days, types, full_g) — inlined, Spark
+    # planned FIVE fact scans here.
     return f"""
-    WITH g AS ({g_src if g_src is not None else _friedman_core(d)}),
+    WITH g AS ({g}),
     days AS (SELECT DISTINCT di, 1 AS k FROM g),
     types AS (SELECT DISTINCT event_type, 1 AS k FROM g),
     full_g AS (
@@ -305,9 +294,10 @@ def _friedman(d: str, g_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "eval_friedman_ranks",
-    oracle=_friedman(DUCK),
+    _friedman,
+    shared={"g": _friedman_core},
     tags=("eval", "stats"),
     doc="Friedman two-way rank test: do the event types keep the same "
     "activity ordering day after day? Blocks are calendar days, "
@@ -320,12 +310,6 @@ def _friedman(d: str, g_src: str | None = None) -> str:
     "the (day, type) count grid is localCheckpointed so its three "
     "consumers share ONE fact scan (inlined, Spark planned five).",
 )
-def eval_friedman_ranks(spark, sf_dir):
-    g = spark.sql(_friedman_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _friedman(SPARK, g_src="SELECT di, event_type, c FROM {g}"),
-        g=g,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -700,7 +684,7 @@ def _subj_core(d: str) -> str:
     """
 
 
-def _logrank(d: str, subj_src: str | None = None) -> str:
+def _logrank(d: str, subj: str) -> str:
     # Standard two-group log-rank: at each distinct subject time the
     # (time x arm) grid carries deaths d and leavers c; at-risk counts
     # are ONE descending cumulative window per arm over the dense grid.
@@ -708,7 +692,7 @@ def _logrank(d: str, subj_src: str | None = None) -> str:
     # decimal sums of per-time doubles (each term's expression tree is
     # fixed, so both engines compute bit-identical summands).
     return f"""
-    WITH subj AS ({subj_src if subj_src is not None else _subj_core(d)}),
+    WITH subj AS ({subj}),
     cell AS (
         SELECT t, arm, cast(count(*) as bigint) AS c,
             {S.isum('ev', d)} AS dd
@@ -765,9 +749,10 @@ def _logrank(d: str, subj_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "events_logrank_test",
-    oracle=_logrank(DUCK),
+    _logrank,
+    shared={"subj": _subj_core},
     tags=("events", "stats"),
     doc="Two-group log-rank test on view->purchase survival: do the two "
     "hash arms (the SAME portable-hash assignment audit_srm_assignment "
@@ -782,12 +767,6 @@ def _logrank(d: str, subj_src: str | None = None) -> str:
     "purchase, horizon) feed every consumer. Reference: "
     "SERVER/subscriber.py's collapse-watch cohorts, compared properly.",
 )
-def events_logrank_test(spark, sf_dir):
-    subj = spark.sql(_subj_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _logrank(SPARK, subj_src="SELECT user_id, arm, ev, t FROM {subj}"),
-        subj=subj,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -795,13 +774,13 @@ def events_logrank_test(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _nelson_aalen(d: str, subj_src: str | None = None) -> str:
+def _nelson_aalen(d: str, subj: str) -> str:
     # H(t) = sum_{t_i <= t} d_i / n_i and its Poisson variance
     # sum d_i / n_i^2: each increment is one exact double division
     # (deterministic), 9-dp-quantized, then an exact decimal cumulative
     # sum — no exp/ln at all, unlike the KM product.
     return f"""
-    WITH subj AS ({subj_src if subj_src is not None else _subj_core(d)}),
+    WITH subj AS ({subj}),
     agg AS (
         SELECT t, {S.isum('ev', d)} AS d_ev,
             cast(count(*) as bigint) AS c
@@ -835,9 +814,10 @@ def _nelson_aalen(d: str, subj_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "events_nelson_aalen",
-    oracle=_nelson_aalen(DUCK),
+    _nelson_aalen,
+    shared={"subj": _subj_core},
     tags=("events", "stats"),
     doc="Nelson-Aalen cumulative hazard of view->purchase conversion: "
     "the estimator-of-choice when hazard INCREMENTS matter (a conversion "
@@ -849,12 +829,6 @@ def _nelson_aalen(d: str, subj_src: str | None = None) -> str:
     "KM sibling carries is gone here. The subject core is "
     "localCheckpointed (three fact passes feed every consumer).",
 )
-def events_nelson_aalen(spark, sf_dir):
-    subj = spark.sql(_subj_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _nelson_aalen(SPARK, subj_src="SELECT user_id, arm, ev, t FROM {subj}"),
-        subj=subj,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1600,7 +1574,7 @@ pair(
 # ---------------------------------------------------------------------------
 
 
-def _katz3(d: str, e_src: str | None = None) -> str:
+def _katz3(d: str, de: str) -> str:
     # Katz with beta = 1/2 truncated at 3 hops: score(v) = sum_k beta^k
     # * (# directed walks of length k ending at v). Walk counts fold by
     # the recurrence c_k(v) = sum over in-edges (u, v) of c_{k-1}(u) —
@@ -1608,7 +1582,7 @@ def _katz3(d: str, e_src: str | None = None) -> str:
     # counts multiply by degree each hop). The dyadic beta makes the
     # score an EXACT multiple of 1/8: (4 c1 + 2 c2 + c3) / 8.
     return f"""
-    WITH de AS ({e_src if e_src is not None else _katz_edges(d)}),
+    WITH de AS ({de}),
     c1 AS (
         SELECT dst AS v, cast(count(*) as decimal(38,0)) AS w
         FROM de GROUP BY dst
@@ -1648,9 +1622,10 @@ def _katz_edges(d: str) -> str:
     """
 
 
-@register(
+pair(
     "graph_katz_power3",
-    oracle=_katz3(DUCK),
+    _katz3,
+    shared={"de": _katz_edges},
     tags=("graph",),
     doc="Katz centrality truncated at 3 hops with dyadic beta = 1/2 on "
     "the directed followed-by part graph (graph_edge_reciprocity's edge "
@@ -1662,9 +1637,6 @@ def _katz_edges(d: str) -> str:
     "walk counts multiply by degree each hop. The attenuated sibling of "
     "graph_pagerank_power3's normalized flow.",
 )
-def graph_katz_power3(spark, sf_dir):
-    e = spark.sql(_katz_edges(SPARK)).localCheckpoint()
-    return spark.sql(_katz3(SPARK, e_src="SELECT src, dst FROM {e}"), e=e)
 
 
 # ---------------------------------------------------------------------------

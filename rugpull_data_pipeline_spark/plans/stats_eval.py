@@ -254,14 +254,13 @@ def _lang_source_cell_core(d: str) -> str:
     """
 
 
-def _chi2(d: str, cell_src: str | None = None) -> str:
-    # ``cell_src`` lets the Spark builder checkpoint the contingency
-    # grid: inlined, rt/ct/tt/grid each re-ran the fact hash-agg
-    # (4 fact scans planned; mutual_info 8 — the round-11 registry-wide
-    # plan audit).
+def _chi2(d: str, cell: str) -> str:
+    # The contingency grid is a shared core: inlined, rt/ct/tt/grid
+    # each re-ran the fact hash-agg (4 fact scans planned; mutual_info
+    # 8 — the round-11 registry-wide plan audit).
     e = "(cast(rl as double) * cast(cs as double) / cast(n as double))"
     return f"""
-    WITH cell AS ({cell_src if cell_src is not None else _lang_source_cell_core(d)}),
+    WITH cell AS ({cell}),
     rt AS (SELECT lang, {S.isum('c', d)} AS rl FROM cell GROUP BY lang),
     ct AS (SELECT source, {S.isum('c', d)} AS cs FROM cell GROUP BY source),
     tt AS (SELECT {S.isum('c', d)} AS n FROM cell),
@@ -282,9 +281,10 @@ def _chi2(d: str, cell_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "agg_chi2_independence",
-    oracle=_chi2(DUCK),
+    _chi2,
+    shared={"cell": _lang_source_cell_core},
     tags=("profiling", "eval"),
     doc="Pearson chi-square test of lang × source independence over the "
     "documents corpus — the are-my-sources-language-balanced screen a "
@@ -296,12 +296,6 @@ def _chi2(d: str, cell_src: str | None = None) -> str:
     "The contingency grid is localCheckpointed so its consumers share "
     "ONE fact scan.",
 )
-def agg_chi2_independence(spark, sf_dir):
-    cell = spark.sql(_lang_source_cell_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _chi2(SPARK, cell_src="SELECT lang, source, c FROM {cell}"),
-        cell=cell,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -311,14 +305,16 @@ def agg_chi2_independence(spark, sf_dir):
 _AA_DEG_CAP = 32  # entities above this degree are skipped (hot-key guard)
 
 
-def _adamic_adar(d: str, ut_src: str | None = None) -> str:
-    # ``ut_src`` lets the Spark builder checkpoint the distinct edge
-    # table: inlined, deg and both sides of the adm self-join re-ran the
-    # fact distinct (4 fact scans planned — the round-11 registry-wide
-    # plan audit).
+def _aa_edges(d: str) -> str:
+    return "SELECT DISTINCT user_id, event_type FROM events"
+
+
+def _adamic_adar(d: str, ut: str) -> str:
+    # The distinct edge table is a shared core: inlined, deg and both
+    # sides of the adm self-join re-ran the fact distinct (4 fact scans
+    # planned — the round-11 registry-wide plan audit).
     return f"""
-    WITH ut AS ({ut_src if ut_src is not None
-                 else 'SELECT DISTINCT user_id, event_type FROM events'}),
+    WITH ut AS ({ut}),
     deg AS (
         SELECT user_id, count(*) AS dg FROM ut GROUP BY user_id
     ),
@@ -344,9 +340,10 @@ def _adamic_adar(d: str, ut_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "graph_adamic_adar",
-    oracle=_adamic_adar(DUCK),
+    _adamic_adar,
+    shared={"ut": _aa_edges},
     tags=("graph",),
     doc="Adamic-Adar link prediction between event types through shared "
     "users: score(a,b) = sum over common neighbors u of 1/ln(deg(u)), "
@@ -359,14 +356,6 @@ def _adamic_adar(d: str, ut_src: str | None = None) -> str:
     "distinct edge table is localCheckpointed so its consumers share "
     "ONE fact scan.",
 )
-def graph_adamic_adar(spark, sf_dir):
-    ut = spark.sql(
-        "SELECT DISTINCT user_id, event_type FROM events"
-    ).localCheckpoint()
-    return spark.sql(
-        _adamic_adar(SPARK, ut_src="SELECT user_id, event_type FROM {ut}"),
-        ut=ut,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -374,14 +363,15 @@ def graph_adamic_adar(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _naive_bayes(d: str, tr_src: str | None = None) -> str:
-    """``tr_src`` overrides the train-token CTE body (the Spark builder
-    passes a localCheckpointed DataFrame so the explode runs ONCE; the
-    oracle inlines it — DuckDB materializes CTEs referenced repeatedly)."""
+def _nb_train_tokens(d: str) -> str:
     train_docs = "SELECT doc_id, lang, text FROM documents WHERE doc_id % 2 = 0"
+    return _word_tokens(train_docs, d)
+
+
+def _naive_bayes(d: str, tr: str) -> str:
+    """The train-token table ``tr`` is a shared core, so the explode runs
+    ONCE on Spark; DuckDB materializes CTEs referenced repeatedly."""
     test_docs = "SELECT doc_id, lang, text FROM documents WHERE doc_id % 2 = 1"
-    if tr_src is None:
-        tr_src = _word_tokens(train_docs, d)
     ll = (
         "round(ln((cast(coalesce(tc.c, 0) as double) + cast(1 as double))"
         " / (cast(cl.tot as double) + cast(v.v as double))), 9)"
@@ -390,7 +380,7 @@ def _naive_bayes(d: str, tr_src: str | None = None) -> str:
         "round(ln(cast(cl.nd as double) / cast(nt.n as double)), 9)"
     )
     return f"""
-    WITH tr AS ({tr_src}),
+    WITH tr AS ({tr}),
     te AS ({_word_tokens(test_docs, d)}),
     tc AS (SELECT lang, tok, count(*) AS c FROM tr GROUP BY lang, tok),
     cl AS (
@@ -423,9 +413,10 @@ def _naive_bayes(d: str, tr_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "mlprep_naive_bayes",
-    oracle=_naive_bayes(DUCK),
+    _naive_bayes,
+    shared={"tr": _nb_train_tokens},
     tags=("mlprep", "text", "eval"),
     doc="Multinomial naive Bayes language ID trained on even doc_ids and "
     "evaluated on odd (output = the confusion matrix): Laplace-smoothed "
@@ -439,13 +430,6 @@ def _naive_bayes(d: str, tr_src: str | None = None) -> str:
     "re-aggregates on (doc, class); log terms quantized to 9 dp and "
     "decimal-summed so both engines fold identically.",
 )
-def mlprep_naive_bayes(spark, sf_dir):
-    train_docs = "SELECT doc_id, lang, text FROM documents WHERE doc_id % 2 = 0"
-    tr = spark.sql(_word_tokens(train_docs, SPARK)).localCheckpoint()
-    return spark.sql(
-        _naive_bayes(SPARK, tr_src="SELECT * FROM {tr}"),
-        tr=tr,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -900,13 +884,12 @@ pair(
 # ---------------------------------------------------------------------------
 
 
-def _mutual_info(d: str, cell_src: str | None = None) -> str:
+def _mutual_info(d: str, cell: str) -> str:
     # Only populated cells contribute (0 * ln 0 = 0), so no dimension
     # grid is needed — marginals attach by equi-join.
-    # ``cell_src`` lets the Spark builder checkpoint the lang x source
-    # contingency grid: inlined, rt/ct/tt/joined each re-ran the fact
-    # hash-agg (8 fact scans planned — the round-11 registry-wide plan
-    # audit).
+    # The lang x source contingency grid is a shared core: inlined,
+    # rt/ct/tt/joined each re-ran the fact hash-agg (8 fact scans
+    # planned — the round-11 registry-wide plan audit).
     pmi_term = (
         "(cast(c as double) / cast(n as double))"
         " * ln(cast(c as double) * cast(n as double)"
@@ -921,7 +904,7 @@ def _mutual_info(d: str, cell_src: str | None = None) -> str:
         " * ln(cast(n as double) / cast(cs as double))"
     )
     return f"""
-    WITH cell AS ({cell_src if cell_src is not None else _lang_source_cell_core(d)}),
+    WITH cell AS ({cell}),
     rt AS (SELECT lang, {S.isum('c', d)} AS rl FROM cell GROUP BY lang),
     ct AS (SELECT source, {S.isum('c', d)} AS cs FROM cell GROUP BY source),
     tt AS (SELECT {S.isum('c', d)} AS n FROM cell),
@@ -944,9 +927,10 @@ def _mutual_info(d: str, cell_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "agg_mutual_info",
-    oracle=_mutual_info(DUCK),
+    _mutual_info,
+    shared={"cell": _lang_source_cell_core},
     tags=("profiling", "eval"),
     doc="Mutual information between lang and source (nats) with marginal "
     "entropies and sqrt-normalized NMI — the effect-SIZE companion to "
@@ -956,12 +940,6 @@ def _mutual_info(d: str, cell_src: str | None = None) -> str:
     "terms decimal-quantized so the sums are order-free. The contingency "
     "grid is localCheckpointed so its consumers share ONE fact scan.",
 )
-def agg_mutual_info(spark, sf_dir):
-    cell = spark.sql(_lang_source_cell_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _mutual_info(SPARK, cell_src="SELECT lang, source, c FROM {cell}"),
-        cell=cell,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1091,10 +1069,8 @@ def _lpa_chain(d: str, edges_src: str) -> tuple[str, str]:
     return body, prev
 
 
-def _label_prop(d: str, edges_src: str | None = None) -> str:
-    if edges_src is None:
-        edges_src = _lpa_edges(d)
-    body, prev = _lpa_chain(d, edges_src)
+def _label_prop(d: str, edges: str) -> str:
+    body, prev = _lpa_chain(d, edges)
     return f"""
     WITH {body}
     SELECT label AS community, count(*) AS n_members
@@ -1105,9 +1081,10 @@ def _label_prop(d: str, edges_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "graph_label_prop2",
-    oracle=_label_prop(DUCK),
+    _label_prop,
+    shared={"edges": _lpa_edges},
     tags=("graph", "iterative"),
     doc="Community detection by 2 synchronous label-propagation rounds over "
     "the user co-occurrence graph (same capped edge build as "
@@ -1121,11 +1098,6 @@ def _label_prop(d: str, edges_src: str | None = None) -> str:
     "TakeOrderedAndProject. On rugpull data: wallet clusters acting in "
     "concert.",
 )
-def graph_label_prop2(spark, sf_dir):
-    edges = spark.sql(_lpa_edges(SPARK)).localCheckpoint()
-    return spark.sql(
-        _label_prop(SPARK, edges_src="SELECT u, v FROM {edges}"), edges=edges
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1702,8 +1674,20 @@ pair(
 # ---------------------------------------------------------------------------
 
 
-def _ndcg(d: str, scored_src: str | None = None) -> str:
+def _ndcg_scored(d: str) -> str:
+    """The per-doc relevance table: graded by distinct-vocabulary size."""
     toks = _word_tokens("SELECT doc_id, lang, text FROM documents", d)
+    return f"""
+        SELECT nv.doc_id, nv.lang, d.n_chars,
+            least(3, {S.idiv('nv.nvoc', '8', d)}) AS rel
+        FROM (
+            SELECT doc_id, lang, count(DISTINCT tok) AS nvoc
+            FROM ({toks}) t GROUP BY doc_id, lang
+        ) nv JOIN documents d ON d.doc_id = nv.doc_id
+    """
+
+
+def _ndcg(d: str, scored: str) -> str:
     # Each DCG term is quantized to 9 dp before the decimal sum, the repo's
     # standing transcendental discipline (ln accurate to ~1 ulp; a 1e-15
     # relative wobble cannot move a 9-dp rounding except on an exact
@@ -1712,19 +1696,11 @@ def _ndcg(d: str, scored_src: str | None = None) -> str:
         "round(cast(({g}) as double)"
         " * ln(cast(2 as double)) / ln(cast({p} + 1 as double)), 9)"
     )
-    # ``scored_src`` lets the Spark builder checkpoint the per-doc
-    # relevance table: inlined, the sys and ideal rankings each re-ran
-    # the token explode (4 fact scans planned — the round-11
-    # registry-wide plan audit).
+    # The per-doc relevance table is a shared core: inlined, the sys and
+    # ideal rankings each re-ran the token explode (4 fact scans planned
+    # — the round-11 registry-wide plan audit).
     return f"""
-    WITH scored AS ({scored_src if scored_src is not None else f'''
-        SELECT nv.doc_id, nv.lang, d.n_chars,
-            least(3, {S.idiv('nv.nvoc', '8', d)}) AS rel
-        FROM (
-            SELECT doc_id, lang, count(DISTINCT tok) AS nvoc
-            FROM ({toks}) t GROUP BY doc_id, lang
-        ) nv JOIN documents d ON d.doc_id = nv.doc_id
-    '''}),
+    WITH scored AS ({scored}),
     sys AS (
         SELECT lang, rel, row_number() OVER (PARTITION BY lang
             ORDER BY n_chars DESC, doc_id) AS pos
@@ -1752,9 +1728,10 @@ def _ndcg(d: str, scored_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "eval_ndcg_ranking",
-    oracle=_ndcg(DUCK),
+    _ndcg,
+    shared={"scored": _ndcg_scored},
     tags=("eval", "similarity"),
     doc="NDCG@10 per language for the ranking 'longer documents are "
     "richer': system order is n_chars DESC, graded relevance is the "
@@ -1767,22 +1744,6 @@ def _ndcg(d: str, scored_src: str | None = None) -> str:
     "relevance table is localCheckpointed so the token explode runs "
     "once.",
 )
-def eval_ndcg_ranking(spark, sf_dir):
-    toks = _word_tokens("SELECT doc_id, lang, text FROM documents", SPARK)
-    scored = spark.sql(
-        "SELECT nv.doc_id, nv.lang, d.n_chars,"
-        f" least(3, {S.idiv('nv.nvoc', '8', SPARK)}) AS rel"
-        " FROM (SELECT doc_id, lang, count(DISTINCT tok) AS nvoc"
-        f" FROM ({toks}) t GROUP BY doc_id, lang) nv"
-        " JOIN documents d ON d.doc_id = nv.doc_id"
-    ).localCheckpoint()
-    return spark.sql(
-        _ndcg(
-            SPARK,
-            scored_src="SELECT doc_id, lang, n_chars, rel FROM {scored}",
-        ),
-        scored=scored,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2381,14 +2342,12 @@ def _simpson_cells_core(d: str) -> str:
     """
 
 
-def _simpson(d: str, cells_src: str | None = None) -> str:
-    # ``cells_src`` lets the Spark builder checkpoint the conversion
-    # grid: inlined, wide's two UNION branches each re-ran the fact
-    # hash-agg (4 fact scans planned — the round-11 registry-wide plan
-    # audit).
+def _simpson(d: str, cells: str) -> str:
+    # The conversion grid is a shared core: inlined, wide's two UNION
+    # branches each re-ran the fact hash-agg (4 fact scans planned —
+    # the round-11 registry-wide plan audit).
     return f"""
-    WITH cells AS ({cells_src if cells_src is not None
-                    else _simpson_cells_core(d)}),
+    WITH cells AS ({cells}),
     wide AS (
         SELECT stratum,
             {S.isum("CASE WHEN arm = 'A' THEN n ELSE 0 END", d)} AS n_a,
@@ -2432,9 +2391,10 @@ def _simpson(d: str, cells_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "profile_simpson_paradox",
-    oracle=_simpson(DUCK),
+    _simpson,
+    shared={"cells": _simpson_cells_core},
     tags=("profiling", "eval"),
     doc="Simpson's-paradox screen on the A/B split (user parity) of "
     "purchase conversion, stratified by value band: per-stratum and "
@@ -2446,14 +2406,6 @@ def _simpson(d: str, cells_src: str | None = None) -> str:
     "the self-cross-join for the flag is metadata-scale. The conversion "
     "grid is localCheckpointed so its consumers share ONE fact scan.",
 )
-def profile_simpson_paradox(spark, sf_dir):
-    cells = spark.sql(_simpson_cells_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _simpson(
-            SPARK, cells_src="SELECT stratum, arm, n, conv FROM {cells}"
-        ),
-        cells=cells,
-    )
 
 # ---------------------------------------------------------------------------
 # Lead-lag cross-correlation between event-type value series
@@ -2541,7 +2493,7 @@ def _jsd_counts(d: str) -> str:
     )
 
 
-def _jsd_drift(d: str, sc_src: str | None = None) -> str:
+def _jsd_drift(d: str, sc: str) -> str:
     ln2 = "ln(cast(2 as double))"
     # term_p handles q = 0 naturally (ln(2p/p) = ln 2, no /0: p > 0 on
     # every (source, tok) row); term_q needs the q > 0 guard.
@@ -2552,7 +2504,7 @@ def _jsd_drift(d: str, sc_src: str | None = None) -> str:
         "ELSE cast(0 as double) END, 9)"
     )
     return f"""
-    WITH sc AS ({sc_src or _jsd_counts(d)}),
+    WITH sc AS ({sc}),
     corpus AS (
         SELECT tok, {S.isum('c', d)} AS ct FROM sc GROUP BY tok
     ),
@@ -2583,9 +2535,10 @@ def _jsd_drift(d: str, sc_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "profile_jsd_source_drift",
-    oracle=_jsd_drift(DUCK),
+    _jsd_drift,
+    shared={"sc": _jsd_counts},
     tags=("profiling", "text", "quality"),
     doc="Jensen-Shannon vocabulary drift, each source vs the REST of the "
     "corpus: the text-level complement of profile_drift_psi/ks (which "
@@ -2602,12 +2555,6 @@ def _jsd_drift(d: str, sc_src: str | None = None) -> str:
     "sums per the standing fp discipline; p and q are exact "
     "integer-ratio doubles.",
 )
-def profile_jsd_source_drift(spark, sf_dir):
-    sc = spark.sql(_jsd_counts(SPARK)).localCheckpoint()
-    return spark.sql(
-        _jsd_drift(SPARK, sc_src="SELECT * FROM {sc}"),
-        sc=sc,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2626,9 +2573,9 @@ def _mk_daily(d: str) -> str:
     )
 
 
-def _mann_kendall(d: str, daily_src: str | None = None) -> str:
+def _mann_kendall(d: str, daily: str) -> str:
     return f"""
-    WITH daily AS ({daily_src or _mk_daily(d)}),
+    WITH daily AS ({daily}),
     pairs AS (
         SELECT a.event_type,
             CASE WHEN b.v > a.v THEN 1 WHEN b.v < a.v THEN -1 ELSE 0 END
@@ -2675,9 +2622,10 @@ def _mann_kendall(d: str, daily_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "window_mann_kendall",
-    oracle=_mann_kendall(DUCK),
+    _mann_kendall,
+    shared={"daily": _mk_daily},
     tags=("window", "series", "eval"),
     doc="Mann-Kendall monotonic-trend test on each type's daily value "
     "series: S = sum of pair signs, tie-corrected Kendall tau-b, and the "
@@ -2691,11 +2639,6 @@ def _mann_kendall(d: str, daily_src: str | None = None) -> str:
     "that grid — bounded by the calendar domain, never raw rows, the "
     "same bounded-grid convention as window_theil_sen.",
 )
-def window_mann_kendall(spark, sf_dir):
-    daily = spark.sql(_mk_daily(SPARK)).localCheckpoint()
-    return spark.sql(
-        _mann_kendall(SPARK, daily_src="SELECT * FROM {daily}"), daily=daily
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -833,7 +833,7 @@ def _markov_p_core(d: str) -> str:
     """
 
 
-def _markov_stationary(d: str, p_src: str | None = None) -> str:
+def _markov_stationary(d: str, p: str) -> str:
     # Three power iterations x' = xP over the event-type transition matrix.
     # Each iteration is a join against the tiny (k x k) probability table —
     # the same broadcast-iteration shape as graph_pagerank_power3 — and the
@@ -844,12 +844,11 @@ def _markov_stationary(d: str, p_src: str | None = None) -> str:
             f"FROM {prev} JOIN p ON p.src = {prev}.state GROUP BY p.dst"
         )
 
-    # ``p_src`` lets the Spark builder checkpoint the k x k probability
-    # grid: inlined, each power step (and states) re-ran the fact lag
-    # window (5 fact scans planned — the round-11 registry-wide plan
-    # audit).
+    # The k x k probability grid is a shared core: inlined, each power
+    # step (and states) re-ran the fact lag window (5 fact scans
+    # planned — the round-11 registry-wide plan audit).
     return f"""
-    WITH p AS ({p_src if p_src is not None else _markov_p_core(d)}),
+    WITH p AS ({p}),
     states AS (SELECT DISTINCT src AS state FROM p),
     x0 AS (
         SELECT state,
@@ -864,9 +863,10 @@ def _markov_stationary(d: str, p_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "events_markov_stationary",
-    oracle=_markov_stationary(DUCK),
+    _markov_stationary,
+    shared={"p": _markov_p_core},
     tags=("events", "graph", "iterative"),
     doc="Stationary distribution of the per-user event-type transition "
     "chain: one lag window builds the transition counts, row-normalized "
@@ -879,12 +879,6 @@ def _markov_stationary(d: str, p_src: str | None = None) -> str:
     "partitionings agree exactly. The probability grid is "
     "localCheckpointed so the fact lag window runs once.",
 )
-def events_markov_stationary(spark, sf_dir):
-    p = spark.sql(_markov_p_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _markov_stationary(SPARK, p_src="SELECT src, dst, p FROM {p}"),
-        p=p,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1238,7 +1232,14 @@ def mlprep_logreg_gd3(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _km_survival(d: str, fv_src: str | None = None) -> str:
+def _km_first_view(d: str) -> str:
+    return f"""
+        SELECT user_id, min({S.epoch_s("ts", d)}) AS v
+        FROM events WHERE event_type = 'view' GROUP BY user_id
+    """
+
+
+def _km_survival(d: str, fv: str) -> str:
     # The KM product folds as exp(cumulative-sum(ln)), with each ln step
     # quantized to 9 dp and summed as exact decimal so the cumulative fold
     # is order- and engine-independent. d == n (everyone at risk converts)
@@ -1247,15 +1248,12 @@ def _km_survival(d: str, fv_src: str | None = None) -> str:
     # MINUTE-BUCKETED aggregate — bounded by calendar minutes, not input
     # rows, so the single-partition window is O(time-range) at any scale.
     ep = S.epoch_s("ts", d)
-    # ``fv_src`` lets the Spark builder checkpoint the first-view table:
-    # inlined, fp and subj each re-ran its fact hash-agg (4 fact scans
-    # planned - the round-11 registry-wide plan audit; the fp and mx
-    # passes are genuinely distinct filters, same class as the funnel).
+    # The first-view table is a shared core: inlined, fp and subj each
+    # re-ran its fact hash-agg (4 fact scans planned - the round-11
+    # registry-wide plan audit; the fp and mx passes are genuinely
+    # distinct filters, same class as the funnel).
     return f"""
-    WITH fv AS ({fv_src if fv_src is not None else f'''
-        SELECT user_id, min({ep}) AS v
-        FROM events WHERE event_type = 'view' GROUP BY user_id
-    '''}),
+    WITH fv AS ({fv}),
     fp AS (
         SELECT e.user_id, min({ep}) AS p
         FROM events e JOIN fv ON fv.user_id = e.user_id
@@ -1300,9 +1298,10 @@ def _km_survival(d: str, fv_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "events_survival_km",
-    oracle=_km_survival(DUCK),
+    _km_survival,
+    shared={"fv": _km_first_view},
     tags=("events", "mlprep"),
     doc="Kaplan-Meier survival of view→purchase conversion with honest "
     "right-censoring (users who never purchase are censored at the "
@@ -1315,16 +1314,6 @@ def _km_survival(d: str, fv_src: str | None = None) -> str:
     "sentinel for the d = n boundary so survival hits exactly 0. The "
     "first-view table is localCheckpointed so fp/subj share it.",
 )
-def events_survival_km(spark, sf_dir):
-    ep = S.epoch_s("ts", SPARK)
-    fv = spark.sql(
-        f"SELECT user_id, min({ep}) AS v FROM events"
-        " WHERE event_type = 'view' GROUP BY user_id"
-    ).localCheckpoint()
-    return spark.sql(
-        _km_survival(SPARK, fv_src="SELECT user_id, v FROM {fv}"),
-        fv=fv,
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -172,22 +172,19 @@ def test_suffix_prefix_overlap_directional(spark):
     assert got == [(1, 2)]  # directional: A's suffix -> B's prefix only
 
 
-def test_bigram_kneser_ney_handmade(spark):
+def test_bigram_kneser_ney_handmade(hand_views):
     import math
-    from rugpull_data_pipeline_spark.functions.scalars import SPARK
     from rugpull_data_pipeline_spark.plans import registry
-    from rugpull_data_pipeline_spark.plans.corpus_ops import _bigram_kn
 
+    spark = hand_views
     # bigrams: (a,b) x2, (a,c) x1 -> c1(a)=3, N1+(a.)=2, N1+(.b)=N1+(.c)=1,
     # T=2. P(b|a)=1.25/3+0.75*(2/3)*0.5=2/3; P(c|a)=0.25/3+0.25=1/3.
     spark.createDataFrame(
         [(1, "a b"), (2, "a b"), (3, "a c"), (4, "solo")],
         "doc_id long, text string",
     ).createOrReplaceTempView("documents")
-    try:
-        got = {r.doc_id: r for r in spark.sql(_bigram_kn(SPARK)).collect()}
-    finally:
-        registry._VIEWS_FOR.pop(id(spark), None)
+    got = {r.doc_id: r for r in registry.get("text_bigram_kneser_ney")
+                                .builder(spark, "unused").collect()}
     assert sorted(got) == [1, 2, 3]  # the 1-token doc has no bigrams
     assert got[1].n_bigrams == 1
     assert got[1].avg_nll_kn == pytest.approx(-math.log(2 / 3), abs=2e-6)

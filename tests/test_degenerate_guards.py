@@ -175,7 +175,7 @@ def test_kappa_unanimous_raters_null_both_engines(hand_views):
 
 
 def test_pmi_single_token_docs_empty_both_engines(hand_views):
-    from rugpull_data_pipeline_spark.plans.pipeline_ops import _pmi_collocations
+    from rugpull_data_pipeline_spark.plans import registry
 
     # single-token docs have no bigrams: Spark's sequence(1, 0) DESCENDS
     # and ANSI element_at threw on the out-of-bounds probe before the
@@ -190,8 +190,8 @@ def test_pmi_single_token_docs_empty_both_engines(hand_views):
         "documents",
         pd.DataFrame(docs, columns=["doc_id", "text", "lang", "source"]),
     )
-    srows = spark.sql(_pmi_collocations(SPARK)).collect()
-    drows = con.execute(_pmi_collocations(DUCK)).fetchall()
+    srows = registry.get("text_pmi_collocations").builder(spark, "unused").collect()
+    drows = con.execute(registry.get("text_pmi_collocations").oracle).fetchall()
     con.close()
     # the one bigram ('a','b') is below the min-count threshold -> empty,
     # identically, with no ANSI error on the single-token docs

@@ -7,10 +7,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
+from rugpull_data_pipeline_spark.plans import registry
 from rugpull_data_pipeline_spark.plans.feature_ops import (
     _completeness,
     _jl_project,
-    _rfm,
     _ridge,
 )
 
@@ -45,7 +45,8 @@ def test_rfm_three_users_get_distinct_terciles(hand_views):
     ]
     _mk_events(spark, rows)
     got = {(r.r_score, r.f_score, r.m_score): r.n_users
-           for r in spark.sql(_rfm(SPARK)).collect()}
+           for r in registry.get("events_rfm_segments")
+                    .builder(spark, "unused").collect()}
     assert got == {(1, 1, 1): 1, (2, 2, 2): 1, (3, 3, 3): 1}
 
 
@@ -128,12 +129,11 @@ def test_bootstrap_constant_values_collapse_interval(hand_views):
 
 def test_kcore_peels_pendant_but_keeps_triangle(hand_views):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.feature_ops import graph_kcore_peel
     # users 1,2,3 form a triangle (one shared hour); user 4 attaches to 1
     # only (separate hour) -> pendant peels, triangle survives at degree 2.
     rows = [(i, 100 + i, u, "a", 1.0, "{}") for i, u in enumerate([1, 2, 3])]
     rows += [(10 + i, 7200 + i, u, "b", 1.0, "{}") for i, u in enumerate([1, 4])]
     _mk_events(spark, rows)
     got = {r.user_id: r.core_degree
-           for r in graph_kcore_peel(spark, "unused").collect()}
+           for r in registry.get("graph_kcore_peel").builder(spark, "unused").collect()}
     assert got == {1: 2, 2: 2, 3: 2}

@@ -209,9 +209,9 @@ def test_bpe_round2_applies_greedy_leftmost_merge(hand_views):
     # doc 1 becomes [xy, xy] and doc 2 [xy, z]. The a-a-a-a doc proves
     # greedy non-overlap: round-1 counting sees (a,a) twice but (x,y) wins.
     _mk_docs(spark, [(1, "x y x y"), (2, "x y z")])
-    from rugpull_data_pipeline_spark.plans.mlprep_ops import _bpe_round2
+    from rugpull_data_pipeline_spark.plans import registry
 
-    rows = spark.sql(_bpe_round2(SPARK)).collect()
+    rows = registry.get("text_bpe_merge_round2").builder(spark, "unused").collect()
     assert rows[0].merge_applied == "xy"
     assert [(r.rank, r.pa, r.pb, r.n_occurrences) for r in rows] == [
         (1, "xy", "xy", 1),
@@ -224,9 +224,9 @@ def test_bpe_round2_merges_consecutive_runs_like_bpe(hand_views):
     # [a,a,a,a,a] under merge (a,a): greedy leftmost gives [aa,aa,a] —
     # a single-space join would have produced [aa,a,a].
     _mk_docs(spark, [(1, "a a a a a")])
-    from rugpull_data_pipeline_spark.plans.mlprep_ops import _bpe_round2
+    from rugpull_data_pipeline_spark.plans import registry
 
-    rows = spark.sql(_bpe_round2(SPARK)).collect()
+    rows = registry.get("text_bpe_merge_round2").builder(spark, "unused").collect()
     got = {(r.pa, r.pb): r.n_occurrences for r in rows}
     assert got == {("aa", "aa"): 1, ("aa", "a"): 1}
 

@@ -217,9 +217,9 @@ def test_mad_outliers_robust_to_the_outlier_itself(hand_views):
         "user_id", "event_type", "value",
     )
     df.createOrReplaceTempView("events")
-    from rugpull_data_pipeline_spark.plans.pipeline_ops import _mad_outliers
 
-    r = {x.event_type: x for x in spark.sql(_mad_outliers(SPARK)).collect()}["click"]
+    r = {x.event_type: x for x in registry.get("agg_mad_outliers")
+                                  .builder(spark, "unused").collect()}["click"]
     assert r.n == 10
     assert r.n_outliers == 1  # exactly the 1000.0
     assert 9.5 <= r.med <= 10.5  # median unmoved by the outlier
@@ -281,9 +281,8 @@ def test_pmi_min_count_and_ratio(hand_views):
     docs = [(i, "x y filler" + str(i)) for i in range(6)]
     docs += [(10, "p q"), (11, "p q")]
     _mk_docs(spark, docs)
-    from rugpull_data_pipeline_spark.plans.pipeline_ops import _pmi_collocations
 
-    rows = spark.sql(_pmi_collocations(SPARK)).collect()
+    rows = registry.get("text_pmi_collocations").builder(spark, "unused").collect()
     got = {(r.a, r.b): r for r in rows}
     assert ("x", "y") in got
     assert ("p", "q") not in got  # below the min-count threshold

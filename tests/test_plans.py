@@ -408,16 +408,13 @@ def test_scan_count_cap_registry_wide(spark):
     construction). The remaining exactly-4-scan plans are individually
     named and justified in PLANS.md ("plan-scan audit"); no allowlist is
     needed because the cap holds everywhere."""
-    import collections
-
-    from tools.scan_audit import _SCAN_RE, CAP, DIM_TABLES
+    from tools.scan_audit import CAP, fact_scan_counts
 
     offenders = {}
     for name in registry.all_queries():
         if name.startswith("stream_") or "replay" in name:
             continue  # streaming builders EXECUTE queries; plan-audit n/a
-        c = collections.Counter(_SCAN_RE.findall(_plan(spark, name)))
-        counts = {t: n for t, n in c.items() if t not in DIM_TABLES}
+        counts = fact_scan_counts(_plan(spark, name))
         worst = max(counts.values(), default=0)
         if worst > CAP:
             offenders[name] = counts
@@ -430,12 +427,15 @@ def test_scan_guard_detects_inlined_class(spark):
     checkpointed — 28 planned lineitem scans in round 11) must exceed the
     cap, proving the detector still sees the class the guard exists for."""
     from rugpull_data_pipeline_spark.functions.scalars import SPARK
-    from rugpull_data_pipeline_spark.plans.diagnostics_ops import _mad_screen
-    from tools.scan_audit import CAP, fact_scan_counts
+    from rugpull_data_pipeline_spark.plans.diagnostics_ops import (
+        _mad_grid_core,
+        _mad_screen,
+    )
+    from tools.scan_audit import CAP, executed_plan, fact_scan_counts
 
     registry._ensure_views(spark, SF)
-    bad = spark.sql(_mad_screen(SPARK))  # grid_src=None -> CTE inlined
-    counts = fact_scan_counts(bad)
+    bad = spark.sql(_mad_screen(SPARK, grid=_mad_grid_core(SPARK)))  # inlined
+    counts = fact_scan_counts(executed_plan(bad))
     assert max(counts.values(), default=0) > CAP, (
         f"known-bad inlined variant no longer detected: {counts}"
     )

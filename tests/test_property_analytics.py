@@ -320,7 +320,7 @@ def test_sequential_support_matches_bruteforce(hand_views, evs):
 )
 def test_dau_wau_mau_matches_bruteforce(hand_views, per_user):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.analytics_ops import _dau_wau_mau
+    from rugpull_data_pipeline_spark.plans import registry
 
     rows = []
     eid = 0
@@ -329,7 +329,8 @@ def test_dau_wau_mau_matches_bruteforce(hand_views, per_user):
             rows.append((eid, d * 86400 + 60, u, "click", 1.0))
             eid += 1
     _mk_events(spark, rows)
-    got = {r.day_idx: r for r in spark.sql(_dau_wau_mau(SPARK)).collect()}
+    got = {r.day_idx: r for r in registry.get("events_dau_wau_mau")
+                                 .builder(spark, "unused").collect()}
 
     days_present = sorted({d for ds in per_user.values() for d in ds})
     for d in days_present:

@@ -259,7 +259,7 @@ def test_ks_drift_matches_bruteforce(hand_views, pts):
 @pytest.mark.slow_property
 def test_rfm_segments_matches_bruteforce(hand_views, evts):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.feature_ops import _rfm
+    from rugpull_data_pipeline_spark.plans import registry
 
     rows = [
         (i, i * 40000, u, "click", c / 100.0) for i, (u, c) in enumerate(evts)
@@ -267,7 +267,7 @@ def test_rfm_segments_matches_bruteforce(hand_views, evts):
     _mk_events(spark, rows)
     got = {
         (r.r_score, r.f_score, r.m_score): r.n_users
-        for r in spark.sql(_rfm(SPARK)).collect()
+        for r in registry.get("events_rfm_segments").builder(spark, "unused").collect()
     }
 
     mx = (len(evts) - 1) * 40000
@@ -324,7 +324,7 @@ def test_rfm_segments_matches_bruteforce(hand_views, evts):
 )
 def test_survival_km_matches_bruteforce(hand_views, evts):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.traindata_ops import _km_survival
+    from rugpull_data_pipeline_spark.plans import registry
 
     evts = list(evts) + [(1, False, 100)]  # at least one view
     rows = [
@@ -332,7 +332,8 @@ def test_survival_km_matches_bruteforce(hand_views, evts):
         for i, (u, p, t) in enumerate(evts)
     ]
     _mk_events(spark, rows)
-    got = {r.t_minutes: r for r in spark.sql(_km_survival(SPARK)).collect()}
+    got = {r.t_minutes: r for r in registry.get("events_survival_km")
+                                   .builder(spark, "unused").collect()}
 
     mx = max(t for _, _, t in evts)
     fv: dict[int, int] = {}

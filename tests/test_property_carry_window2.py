@@ -69,13 +69,14 @@ def _floor_cents(c: int) -> int:
 )
 def test_markov_stationary_matches_bruteforce(hand_views, seq):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.traindata_ops import _markov_stationary
+    from rugpull_data_pipeline_spark.plans import registry
 
     seq = list(seq) + [(9, "a"), (9, "b")]  # at least one transition
     rows = [(i, 100 + i, u, et, 1.0) for i, (u, et) in enumerate(seq)]
     _mk_events(spark, rows)
     got = {r.event_type: r.stationary_w
-           for r in spark.sql(_markov_stationary(SPARK)).collect()}
+           for r in registry.get("events_markov_stationary")
+                    .builder(spark, "unused").collect()}
 
     # transitions per user in (ts, event_id) order
     per_user: dict[int, list] = {}
@@ -387,14 +388,15 @@ def test_zipf_fit_matches_bruteforce(hand_views, counts):
 @pytest.mark.slow_property
 def test_bigram_kneser_ney_matches_bruteforce(hand_views, docs):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.corpus_ops import _bigram_kn
+    from rugpull_data_pipeline_spark.plans import registry
 
     docs = docs + [["a", "b", "a", "c"]]  # at least one scorable doc
     _mk_docs(
         spark,
         [(i, " ".join(toks), "en", "s1") for i, toks in enumerate(docs)],
     )
-    got = {r.doc_id: r for r in spark.sql(_bigram_kn(SPARK)).collect()}
+    got = {r.doc_id: r for r in registry.get("text_bigram_kneser_ney")
+                                .builder(spark, "unused").collect()}
 
     # global bigram statistics over ' '-split tokens, docs with >= 2
     cb: dict[tuple, int] = {}

@@ -85,7 +85,7 @@ def _q4_brute(sorted_vals: list[int], q4: int) -> int:
 @pytest.mark.slow_property
 def test_mad_screen_matches_bruteforce(hand_views, rows):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.diagnostics_ops import _mad_screen
+    from rugpull_data_pipeline_spark.plans import registry
 
     spark.createDataFrame(
         [
@@ -98,7 +98,7 @@ def test_mad_screen_matches_bruteforce(hand_views, rows):
 
     got = {
         r["column_name"]: r
-        for r in spark.sql(_mad_screen(SPARK)).collect()
+        for r in registry.get("profile_mad_screen").builder(spark, "unused").collect()
     }
     cols = {
         "l_quantity": [q * 100 for q, _, _, _ in rows],
@@ -139,14 +139,14 @@ def test_mad_screen_matches_bruteforce(hand_views, rows):
 @pytest.mark.slow_property
 def test_kendall_tau_matches_bruteforce(hand_views, xy):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.diagnostics_ops import _kendall_tau
+    from rugpull_data_pipeline_spark.plans import registry
 
     series = {
         "view": [x for x, _ in xy],
         "purchase": [y for _, y in xy],
     }
     _mk_events(spark, _daily_rows(series))
-    row = spark.sql(_kendall_tau(SPARK)).collect()[0]
+    row = registry.get("eval_kendall_tau").builder(spark, "unused").collect()[0]
 
     nc = nd = tx = ty = 0
     for i in range(len(xy)):
@@ -311,14 +311,14 @@ def test_hhi_matches_bruteforce(hand_views, rows):
 )
 def test_hour_gof_matches_bruteforce(hand_views, hours):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.diagnostics_ops import _hour_gof
+    from rugpull_data_pipeline_spark.plans import registry
 
     rows = [
         (i, i * 86400 + h * 3600 + 5, 1, "click", 1.0)
         for i, h in enumerate(hours)
     ]
     _mk_events(spark, rows)
-    r = spark.sql(_hour_gof(SPARK)).collect()[0]
+    r = registry.get("events_hour_uniformity_gof").builder(spark, "unused").collect()[0]
 
     n = len(hours)
     counts = [hours.count(h) for h in range(24)]

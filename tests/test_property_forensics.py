@@ -15,6 +15,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
+from rugpull_data_pipeline_spark.plans import registry
 
 PROP = dict(
     max_examples=5,
@@ -54,7 +55,6 @@ def _mk_events(spark, rows):
 def test_mann_whitney_matches_bruteforce(hand_views, rows):
     spark = hand_views
     from rugpull_data_pipeline_spark.plans.forensics_ops import _r6u  # noqa: F401
-    from rugpull_data_pipeline_spark.plans.robustness_ops import _mwu
 
     _mk_events(
         spark,
@@ -63,7 +63,8 @@ def test_mann_whitney_matches_bruteforce(hand_views, rows):
             for i, (v, y) in enumerate(rows)
         ],
     )
-    out = {r["contrast_type"]: r for r in spark.sql(_mwu(SPARK)).collect()}
+    out = {r["contrast_type"]: r for r in registry.get("eval_mann_whitney_u")
+                                          .builder(spark, "unused").collect()}
     pos = [v * 100 for v, y in rows if y]
     neg = [v * 100 for v, y in rows if not y]
     gt = sum(1 for p in pos for n in neg if p > n)
@@ -137,7 +138,6 @@ def test_hill_tail_matches_bruteforce(hand_views, vals):
 @pytest.mark.slow_property
 def test_concordance_index_matches_bruteforce(hand_views, subs):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.robustness_ops import _cindex
 
     day = 86400
     horizon = 30 * day  # a late sentinel event pins the censor time
@@ -148,7 +148,7 @@ def test_concordance_index_matches_bruteforce(hand_views, subs):
             rows.append((u, "purchase", 1.0, delay * day))
         rows.extend((u, "click", 1.0, 1 + j) for j in range(clicks))
     _mk_events(spark, rows)
-    r = spark.sql(_cindex(SPARK)).collect()[0]
+    r = registry.get("eval_concordance_index").builder(spark, "unused").collect()[0]
 
     mc = max(c for _, _, c in subs)
     width = max(1, (mc + 1) // 10)
@@ -338,16 +338,14 @@ def test_pps_matches_bruteforce(hand_views, weights):
 @pytest.mark.slow_property
 def test_token_novelty_matches_bruteforce(hand_views, docs):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.robustness_ops import (
-        _token_novelty,
-    )
 
     spark.createDataFrame(
         [(i, " ".join(toks)) for i, toks in enumerate(docs)],
         "doc_id long, text string",
     ).createOrReplaceTempView("documents")
     out = {r["ingest_batch"]: r
-           for r in spark.sql(_token_novelty(SPARK)).collect()}
+           for r in registry.get("text_token_novelty")
+                    .builder(spark, "unused").collect()}
 
     mx = len(docs) - 1
     batch_of = {i: min(7, i * 8 // (mx + 1)) for i in range(len(docs))}

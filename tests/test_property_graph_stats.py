@@ -107,7 +107,7 @@ def test_triangle_count_matches_bruteforce(hand_views, edge_set):
 @given(_EDGES)
 def test_kcore_peel_matches_bruteforce(hand_views, edge_set):
     """One full k=2 peel round (degree, prune, re-degree) on random
-    graphs, injected straight through edges_src."""
+    graphs, injected straight through the edges argument."""
     spark = hand_views
     from rugpull_data_pipeline_spark.plans.feature_ops import _KCORE_K, _kcore
 
@@ -115,7 +115,7 @@ def test_kcore_peel_matches_bruteforce(hand_views, edge_set):
     vals = ", ".join(f"({u}, {v})" for u, v in edges)
     src = f"SELECT * FROM (VALUES {vals}) AS t(u, v)"
     got = {r.user_id: r.core_degree for r in spark.sql(
-        _kcore(SPARK, edges_src=src)).collect()}
+        _kcore(SPARK, src)).collect()}
 
     deg0: dict[int, int] = {}
     for u, v in edges:
@@ -181,10 +181,10 @@ _DOC_GRID = st.lists(
 @given(_DOC_GRID)
 def test_chi2_matches_bruteforce(hand_views, cells):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.stats_eval import _chi2
+    from rugpull_data_pipeline_spark.plans import registry
 
     _mk_docs(spark, [(i, "w", l, s) for i, (l, s) in enumerate(cells)])
-    got = spark.sql(_chi2(SPARK)).collect()[0]
+    got = registry.get("agg_chi2_independence").builder(spark, "unused").collect()[0]
 
     n = len(cells)
     obs: dict[tuple[str, str], int] = {}
@@ -209,10 +209,10 @@ def test_chi2_matches_bruteforce(hand_views, cells):
 @given(_DOC_GRID)
 def test_mutual_info_matches_bruteforce(hand_views, cells):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.stats_eval import _mutual_info
+    from rugpull_data_pipeline_spark.plans import registry
 
     _mk_docs(spark, [(i, "w", l, s) for i, (l, s) in enumerate(cells)])
-    got = spark.sql(_mutual_info(SPARK)).collect()[0]
+    got = registry.get("agg_mutual_info").builder(spark, "unused").collect()[0]
 
     n = len(cells)
     obs: dict[tuple[str, str], int] = {}

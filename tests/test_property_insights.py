@@ -157,7 +157,7 @@ def test_degree_gini_matches_bruteforce(hand_views, op_rows):
 )
 def test_user_overlap_matches_bruteforce(hand_views, tu):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.insights_ops import _user_overlap
+    from rugpull_data_pipeline_spark.plans import registry
 
     spark.createDataFrame(
         [(i, i, u, t, 1.0) for i, (t, u) in enumerate(tu)],
@@ -169,7 +169,8 @@ def test_user_overlap_matches_bruteforce(hand_views, tu):
 
     got = {
         (r["type_a"], r["type_b"]): r
-        for r in spark.sql(_user_overlap(SPARK)).collect()
+        for r in registry.get("events_user_overlap_types")
+                 .builder(spark, "unused").collect()
     }
     sets: dict[str, set[int]] = {}
     for t, u in tu:

@@ -80,7 +80,7 @@ def test_skyline_matches_bruteforce_dominance(hand_views, parts):
 )
 def test_isotonic_matches_pava(hand_views, pts):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.mining_ops import _isotonic
+    from rugpull_data_pipeline_spark.plans import registry
 
     rows = [
         (i, 1_700_000_000 + i, i % 7,
@@ -92,7 +92,8 @@ def test_isotonic_matches_pava(hand_views, pts):
     ).selectExpr(
         "event_id", "cast(t as timestamp) AS ts", "user_id", "event_type", "value"
     ).createOrReplaceTempView("events")
-    got = {r.bin: r for r in spark.sql(_isotonic(SPARK)).collect()}
+    got = {r.bin: r for r in registry.get("mlprep_isotonic_pava")
+                             .builder(spark, "unused").collect()}
 
     # classical weighted PAVA over the ordered bin grid
     grid = sorted({b for b, _ in pts})

@@ -130,7 +130,7 @@ _JSD_DOC = st.lists(
 @given(st.lists(st.tuples(st.integers(0, 2), _JSD_DOC), min_size=2, max_size=8))
 def test_jsd_drift_matches_bruteforce(hand_views, docs):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.stats_eval import _jsd_drift
+    from rugpull_data_pipeline_spark.plans import registry
 
     # two fixed docs guarantee >= 2 sources so the rest-corpus is nonempty
     docs = list(docs) + [(0, ["apple", "cat"]), (1, ["bird", "bird", "dog"])]
@@ -138,7 +138,8 @@ def test_jsd_drift_matches_bruteforce(hand_views, docs):
         spark,
         [(i, " ".join(toks), "en", f"s{src}") for i, (src, toks) in enumerate(docs)],
     )
-    got = {r.source: r for r in spark.sql(_jsd_drift(SPARK)).collect()}
+    got = {r.source: r for r in registry.get("profile_jsd_source_drift")
+                                .builder(spark, "unused").collect()}
 
     counts: dict[tuple, int] = {}
     for src, toks in docs:

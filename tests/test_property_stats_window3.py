@@ -196,13 +196,13 @@ def test_ljung_box_matches_bruteforce(hand_views, cents_list):
 @given(st.lists(st.integers(0, 8), min_size=5, max_size=14))
 def test_mann_kendall_matches_bruteforce(hand_views, small_cents):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.stats_eval import _mann_kendall
+    from rugpull_data_pipeline_spark.plans import registry
 
     # small value domain forces tie groups through the tie-correction path
     pairs = [(di, c * 100) for di, c in enumerate(small_cents)]
     rows, daily = _daily_from(pairs)
     _mk_events(spark, rows)
-    got = spark.sql(_mann_kendall(SPARK)).collect()
+    got = registry.get("window_mann_kendall").builder(spark, "unused").collect()
     assert len(got) == 1
     got = got[0]
 

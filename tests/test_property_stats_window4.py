@@ -213,7 +213,7 @@ def test_crosscorr_matches_bruteforce(hand_views, day_pairs):
 )
 def test_simpson_matches_bruteforce(hand_views, evts):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.stats_eval import _simpson
+    from rugpull_data_pipeline_spark.plans import registry
 
     # guarantee every (arm, stratum) cell is populated so no 0-denominator
     evts = list(evts) + [
@@ -224,7 +224,8 @@ def test_simpson_matches_bruteforce(hand_views, evts):
         for i, (u, c, buy) in enumerate(evts)
     ]
     _mk_events(spark, rows)
-    got = {r.stratum: r for r in spark.sql(_simpson(SPARK)).collect()}
+    got = {r.stratum: r for r in registry.get("profile_simpson_paradox")
+                                 .builder(spark, "unused").collect()}
 
     cells: dict[tuple, list] = {}
     for u, c, buy in evts:

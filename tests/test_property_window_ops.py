@@ -357,14 +357,14 @@ def test_pagerank_matches_bruteforce(hand_views, seq):
 )
 def test_adamic_adar_matches_bruteforce(hand_views, incidence):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.stats_eval import _adamic_adar
+    from rugpull_data_pipeline_spark.plans import registry
 
     incidence = set(incidence) | {(9, "a"), (9, "b")}  # one shared user
     rows = [(i, 10 * i, u, et, 1.0) for i, (u, et) in enumerate(sorted(incidence))]
     _mk_events(spark, rows)
     got = {
         (r.type_a, r.type_b): r
-        for r in spark.sql(_adamic_adar(SPARK)).collect()
+        for r in registry.get("graph_adamic_adar").builder(spark, "unused").collect()
     }
 
     deg: dict[int, int] = {}

@@ -13,11 +13,8 @@ from pyspark.sql import functions as F
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
 from rugpull_data_pipeline_spark.plans import registry
 from rugpull_data_pipeline_spark.plans.stats_eval import (
-    _adamic_adar,
     _auc,
-    _chi2,
     _ks_drift,
-    _naive_bayes,
     _stump,
     _zipf,
     sim_pca_power1,
@@ -119,7 +116,7 @@ def test_chi2_zero_for_independent_uniform_grid(hand_views):
                 rows.append((i, "w", lang, src))
                 i += 1
     _mk_docs(spark, rows)
-    row = spark.sql(_chi2(SPARK)).collect()[0]
+    row = registry.get("agg_chi2_independence").builder(spark, "unused").collect()[0]
     assert row.chi2 == 0.0 and row.dof == 1 and row.n_docs == 12
 
 
@@ -135,7 +132,7 @@ def test_adamic_adar_weights_and_degree_floor(hand_views):
         (5, 50, 3, "a", 1.0),
     ]
     _mk_events(spark, rows)
-    out = spark.sql(_adamic_adar(SPARK)).collect()
+    out = registry.get("graph_adamic_adar").builder(spark, "unused").collect()
     assert len(out) == 1
     r = out[0]
     assert (r.type_a, r.type_b, r.common_users) == ("a", "b", 2)
@@ -154,7 +151,8 @@ def test_naive_bayes_separable_vocab_gives_diagonal_confusion(hand_views):
         ],
     )
     got = {(r.actual_lang, r.pred_lang): r.n_docs
-           for r in spark.sql(_naive_bayes(SPARK)).collect()}
+           for r in registry.get("mlprep_naive_bayes")
+                    .builder(spark, "unused").collect()}
     assert got == {("en", "en"): 1, ("fr", "fr"): 1}
 
 
@@ -248,18 +246,17 @@ def test_quantile_bins_are_equal_frequency_and_tie_atomic(hand_views):
 
 def test_mutual_info_zero_when_independent_and_nmi_one_when_equal(hand_views):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.stats_eval import _mutual_info
     rows, i = [], 0
     for lang in ("en", "fr"):
         for src in ("s1", "s2"):
             rows.append((i, "w", lang, src)); i += 1
     _mk_docs(spark, rows)
-    row = spark.sql(_mutual_info(SPARK)).collect()[0]
+    row = registry.get("agg_mutual_info").builder(spark, "unused").collect()[0]
     assert row.mi_nats == 0.0 and row.nmi == 0.0
     # perfectly dependent: source determined by lang -> NMI = 1.
     _mk_docs(spark, [(0, "w", "en", "s1"), (1, "w", "en", "s1"),
                      (2, "w", "fr", "s2"), (3, "w", "fr", "s2")])
-    row = spark.sql(_mutual_info(SPARK)).collect()[0]
+    row = registry.get("agg_mutual_info").builder(spark, "unused").collect()[0]
     assert row.nmi == pytest.approx(1.0, abs=1e-6)
     assert row.mi_nats == pytest.approx(math.log(2), abs=1e-5)
 
@@ -281,13 +278,13 @@ def test_ab_ztest_zero_when_rates_equal(hand_views):
 
 def test_label_prop_merges_connected_clique_to_min_label(hand_views):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.stats_eval import _label_prop
     # users 1,2,3 co-occur in one (type, hour) group -> triangle; users
     # 8,9 in another. After 2 rounds each clique converges to its min id.
     rows = [(i, 100 + i, u, "a", 1.0) for i, u in enumerate([1, 2, 3])]
     rows += [(10 + i, 7200 + i, u, "b", 1.0) for i, u in enumerate([8, 9])]
     _mk_events(spark, rows)
-    got = {r.community: r.n_members for r in spark.sql(_label_prop(SPARK)).collect()}
+    got = {r.community: r.n_members for r in registry.get("graph_label_prop2")
+                                             .builder(spark, "unused").collect()}
     assert got == {1: 3, 8: 2}
 
 
@@ -402,7 +399,6 @@ def test_calibration_bins_diagonal(hand_views):
 
 def test_ndcg_perfect_vs_inverted(hand_views):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.stats_eval import _ndcg
     rich = " ".join(f"w{i}" for i in range(16))  # 16 distinct -> rel 2
     poor = "x x x x"  # 1 distinct -> rel 0
     # Length agrees with richness -> system order == ideal order -> NDCG 1.
@@ -410,14 +406,14 @@ def test_ndcg_perfect_vs_inverted(hand_views):
         spark,
         [(1, rich, "en", "s", 100), (2, poor, "en", "s", 10)],
     )
-    row = spark.sql(_ndcg(SPARK)).collect()[0]
+    row = registry.get("eval_ndcg_ranking").builder(spark, "unused").collect()[0]
     assert row.ndcg_at_10 == 1.0 and row.dcg_at_10 == row.idcg_at_10
     # Invert the lengths: the rel-2 doc now ranks second -> NDCG < 1.
     _mk_docs_nchars(
         spark,
         [(1, rich, "en", "s", 10), (2, poor, "en", "s", 100)],
     )
-    row = spark.sql(_ndcg(SPARK)).collect()[0]
+    row = registry.get("eval_ndcg_ranking").builder(spark, "unused").collect()[0]
     assert row.ndcg_at_10 < 1.0
     # hand value: dcg = 0/log2(2) + 3/log2(3), idcg = 3/log2(2) = 3.
     expect = (3 / math.log2(3)) / 3.0
@@ -763,7 +759,6 @@ def test_ljung_box_white_noise_vs_trending(hand_views):
 
 def test_simpson_flag_on_classic_reversal(hand_views):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.stats_eval import _simpson
     # classic construction: B beats A inside BOTH strata, but A's traffic
     # concentrates in the easy (high-rate) stratum, so the pooled rate
     # reverses. user parity: even ids = A, odd = B. cents >= 500 = 'high'.
@@ -783,7 +778,8 @@ def test_simpson_flag_on_classic_reversal(hand_views):
     add(2, 1.0, 20, 2)
     add(3, 1.0, 80, 16)
     _mk_events(spark, rows)
-    got = {r.stratum: r for r in spark.sql(_simpson(SPARK)).collect()}
+    got = {r.stratum: r for r in registry.get("profile_simpson_paradox")
+                                 .builder(spark, "unused").collect()}
     # B wins both strata...
     assert got["high"].dir == -1 and got["low"].dir == -1
     # ...but A wins the pooled comparison (62/100 vs 32/100).
@@ -824,7 +820,6 @@ def test_crosscorr_constant_series_nulls_not_errors(hand_views):
 
 def test_jsd_source_drift_matches_python_replica(hand_views):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.stats_eval import _jsd_drift
     import math
     _mk_docs(
         spark,
@@ -833,7 +828,8 @@ def test_jsd_source_drift_matches_python_replica(hand_views):
             (2, "a c c c", "en", "s2"),
         ],
     )
-    got = {r.source: r for r in spark.sql(_jsd_drift(SPARK)).collect()}
+    got = {r.source: r for r in registry.get("profile_jsd_source_drift")
+                                .builder(spark, "unused").collect()}
     # s1 vs rest: P = {a:2/3, b:1/3}, Q = (corpus - s1)/(7 - 3)
     p = {"a": 2 / 3, "b": 1 / 3}
     q = {"a": 1 / 4, "b": 0.0, "c": 3 / 4}
@@ -858,7 +854,6 @@ def test_jsd_source_drift_matches_python_replica(hand_views):
 
 def test_jsd_identical_distribution_is_zero(hand_views):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.stats_eval import _jsd_drift
     _mk_docs(
         spark,
         [
@@ -866,20 +861,21 @@ def test_jsd_identical_distribution_is_zero(hand_views):
             (2, "a b", "en", "s2"),
         ],
     )
-    got = {r.source: r for r in spark.sql(_jsd_drift(SPARK)).collect()}
+    got = {r.source: r for r in registry.get("profile_jsd_source_drift")
+                                .builder(spark, "unused").collect()}
     assert got["s1"].jsd_vs_rest == 0.0
     assert got["s2"].jsd_vs_rest == 0.0
 
 
 def test_mann_kendall_monotone_and_flat(hand_views):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.stats_eval import _mann_kendall
     # strictly increasing: S = n(n-1)/2, tau_b = 1
     rows = [(i, i * 86400, 1, "up", float(i + 1)) for i in range(10)]
     # constant: every pair tied -> tau_b NULL (zero variance), S = 0
     rows += [(100 + i, i * 86400, 1, "flat", 7.0) for i in range(10)]
     _mk_events(spark, rows)
-    got = {r.event_type: r for r in spark.sql(_mann_kendall(SPARK)).collect()}
+    got = {r.event_type: r for r in registry.get("window_mann_kendall")
+                                    .builder(spark, "unused").collect()}
     assert got["up"].s_stat == 45 and got["up"].tau_b == 1.0
     assert got["up"].z_mk > 3.0
     assert got["flat"].s_stat == 0 and got["flat"].tau_b is None
@@ -887,12 +883,11 @@ def test_mann_kendall_monotone_and_flat(hand_views):
 
 def test_mann_kendall_tie_correction_matches_replica(hand_views):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.stats_eval import _mann_kendall
     import math
     vals = [1.0, 2.0, 2.0, 3.0, 1.0, 4.0]
     rows = [(i, i * 86400, 1, "x", vals[i]) for i in range(len(vals))]
     _mk_events(spark, rows)
-    row = spark.sql(_mann_kendall(SPARK)).collect()[0]
+    row = registry.get("window_mann_kendall").builder(spark, "unused").collect()[0]
     v = [math.floor(x * 100) for x in vals]
     n = len(v)
     s = sum(
@@ -1127,14 +1122,13 @@ def test_auc_matches_bruteforce(hand_views, pts):
 )
 def test_ndcg_matches_bruteforce(hand_views, docs):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.stats_eval import _ndcg
 
     rows = [
         (i + 1, " ".join(f"w{j}" for j in range(k)), "en", "s", nc)
         for i, (k, nc) in enumerate(docs)
     ]
     _mk_docs_nchars(spark, rows)
-    row = spark.sql(_ndcg(SPARK)).collect()[0]
+    row = registry.get("eval_ndcg_ranking").builder(spark, "unused").collect()[0]
     scored = [(i + 1, min(3, k // 8), nc) for i, (k, nc) in enumerate(docs)]
 
     def dcg(order):

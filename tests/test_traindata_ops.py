@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
+from rugpull_data_pipeline_spark.plans import registry
 from rugpull_data_pipeline_spark.plans.traindata_ops import (
     _minhash_incremental,
     _skew_advisor,
@@ -16,7 +17,6 @@ from rugpull_data_pipeline_spark.plans.traindata_ops import (
     _category_encode,
     _group_holdout,
     _incremental,
-    _markov_stationary,
     _moments,
     _psi_drift,
     _rebalance,
@@ -193,7 +193,9 @@ def test_markov_stationary_power3_matches_hand_fold(hand_views):
     seq = ["a", "a", "a", "a", "b", "a"]
     rows = [(i, 10 * i, 1, t, 1.0) for i, t in enumerate(seq)]
     _mk_events(spark, rows)
-    got = {r.event_type: r.stationary_w for r in spark.sql(_markov_stationary(SPARK)).collect()}
+    got = {r.event_type: r.stationary_w
+           for r in registry.get("events_markov_stationary")
+                    .builder(spark, "unused").collect()}
     assert got["a"] == pytest.approx(0.8046875, abs=2e-6)
     assert got["b"] == pytest.approx(0.1953125, abs=2e-6)
 
@@ -344,9 +346,8 @@ def test_km_survival_with_censoring_hand_values(hand_views):
         (6, 120, 2, "purchase", 9.0),
     ]
     _mk_events(spark, rows)
-    from rugpull_data_pipeline_spark.plans.traindata_ops import _km_survival
-
-    got = {r.t_minutes: r for r in spark.sql(_km_survival(SPARK)).collect()}
+    got = {r.t_minutes: r for r in registry.get("events_survival_km")
+                                   .builder(spark, "unused").collect()}
     assert got[1].n_at_risk == 4 and got[1].n_events == 1
     assert got[1].km_survival == pytest.approx(0.75, abs=1e-6)
     assert got[2].n_at_risk == 3 and got[2].n_events == 1

@@ -1,12 +1,15 @@
-"""Interleaved A/B timing for one or more registered queries.
+"""Interleaved A/B timing for registered queries.
 
 Runs the named queries' noop-sink execution N times in an interleaved
 order (q1, q2, ..., q1, q2, ...) inside ONE session and reports
 median/min per query plus the CPU-steal fraction observed during the
 run — the honest way to compare plan variants on a co-tenant host where
-back-to-back blocks see different steal.
+back-to-back blocks see different steal. Only Spark plan execution is
+timed (what a cluster pays); tools/sweep.py covers build+oracle+compare.
 
-Usage: python tools/ab_time.py [--runs 7] sf_dir name1 name2 ...
+Usage: python tools/ab_time.py [--runs 7] sf_dir [name1 name2 ...]
+With no names: times the current driver window, the first
+registry.DRIVER_WINDOW queries in registry order.
 """
 
 from __future__ import annotations
@@ -30,7 +33,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--runs", type=int, default=7)
     ap.add_argument("sf_dir")
-    ap.add_argument("names", nargs="+")
+    ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
     from rugpull_data_pipeline_spark.plans import registry
@@ -38,16 +41,17 @@ def main() -> int:
 
     spark = get_spark(app_name="ab-time")
     qs = registry.all_queries()
-    # warm: session one-offs (use the first requested query so a rename of
+    names = args.names or list(qs)[: registry.DRIVER_WINDOW]
+    # warm: session one-offs (use the first timed query so a rename of
     # any specific query can't KeyError the tool — round-12 ADVICE)
-    qs[args.names[0]](spark, args.sf_dir).write.format("noop").mode(
+    qs[names[0]](spark, args.sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
 
-    times: dict[str, list[float]] = {n: [] for n in args.names}
+    times: dict[str, list[float]] = {n: [] for n in names}
     s0 = _stat()
     for _ in range(args.runs):
-        for n in args.names:
+        for n in names:
             spark.sparkContext.setJobDescription(f"ab:{n}")
             t0 = time.perf_counter()
             qs[n](spark, args.sf_dir).write.format("noop").mode(
@@ -57,7 +61,7 @@ def main() -> int:
     s1 = _stat()
     d = [b - a for a, b in zip(s0, s1)]
     steal_pct = 100.0 * (d[7] if len(d) > 7 else 0) / max(sum(d), 1)
-    for n in args.names:
+    for n in names:
         ts = times[n]
         print(
             f"{n}: median={statistics.median(ts):.3f} min={min(ts):.3f} "

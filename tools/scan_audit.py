@@ -11,7 +11,7 @@ any single fact table.
 
 Library use (the plan test imports these):
 
-    counts = fact_scan_counts(df)        # {table: planned parquet scans}
+    counts = fact_scan_counts(executed_plan(df))  # {table: planned scans}
     worst  = max(counts.values() or [0])
 
 CLI:
@@ -21,9 +21,10 @@ CLI:
                                            # the pre-refactor inlined class
 
 The ``--selfcheck`` builds the known-bad pre-refactor variant of
-``profile_mad_screen`` (its shared grid CTE inlined instead of
-checkpointed — 28 planned scans in round 11) and exits non-zero unless
-the audit flags it, so the guard itself cannot rot silently.
+``profile_mad_screen`` (its shared grid core passed inline as CTE text
+instead of checkpointed — 28 planned scans in round 11) and exits
+non-zero unless the audit flags it, so the guard itself cannot rot
+silently.
 """
 
 from __future__ import annotations
@@ -48,10 +49,13 @@ _SCAN_RE = re.compile(
 )
 
 
-def fact_scan_counts(df) -> dict[str, int]:
-    """Planned parquet scans per NON-DIM table in the executed plan."""
-    phys = df._jdf.queryExecution().executedPlan().toString()
-    c = collections.Counter(_SCAN_RE.findall(phys))
+def executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def fact_scan_counts(plan: str) -> dict[str, int]:
+    """Planned parquet scans per NON-DIM table in an executed-plan string."""
+    c = collections.Counter(_SCAN_RE.findall(plan))
     return {t: n for t, n in c.items() if t not in DIM_TABLES}
 
 
@@ -63,19 +67,22 @@ def audit_registry(spark, sf_dir: str):
     for name, spec in sorted(registry._REGISTRY.items()):
         if name.startswith("stream_") or "replay" in name:
             continue  # streaming builders EXECUTE queries; plan-audit n/a
-        yield name, fact_scan_counts(spec.builder(spark, sf_dir))
+        yield name, fact_scan_counts(executed_plan(spec.builder(spark, sf_dir)))
 
 
 def _selfcheck(spark, sf_dir: str) -> int:
     """Positive control: the pre-refactor inlined variant MUST be flagged."""
     from rugpull_data_pipeline_spark.functions.scalars import SPARK
     from rugpull_data_pipeline_spark.plans import registry
-    from rugpull_data_pipeline_spark.plans.diagnostics_ops import _mad_screen
+    from rugpull_data_pipeline_spark.plans.diagnostics_ops import (
+        _mad_grid_core,
+        _mad_screen,
+    )
 
     registry._load_plan_modules()
     registry._ensure_views(spark, sf_dir)
-    bad = spark.sql(_mad_screen(SPARK))  # grid_src=None -> CTE inlined
-    counts = fact_scan_counts(bad)
+    bad = spark.sql(_mad_screen(SPARK, grid=_mad_grid_core(SPARK)))  # inlined
+    counts = fact_scan_counts(executed_plan(bad))
     worst = max(counts.values(), default=0)
     print(f"selfcheck: inlined profile_mad_screen plans {counts}")
     if worst <= CAP:

@@ -6,7 +6,7 @@ was recreated in /tmp every round; committing it makes the round workflow
 reproducible:
 
     python tools/sweep.py                     # all queries at sf0.1
-    python tools/sweep.py --sf sf0.01 --window # first 50 (the driver window) at sf0.01
+    python tools/sweep.py --sf sf0.01 --window # the driver window at sf0.01
     python tools/sweep.py --start 120          # resume a long sweep mid-way
     python tools/sweep.py --only graph_ text_  # name-prefix filter
 
@@ -30,7 +30,9 @@ def main() -> int:
     ap.add_argument("--sf", default="sf0.1", help="testdata scale dir name (sf0.001/sf0.01/sf0.1)")
     ap.add_argument("--testdata", default="/root/testdata", help="testdata root")
     ap.add_argument("--start", type=int, default=0, help="skip the first N queries (resume)")
-    ap.add_argument("--window", action="store_true", help="only the first 50 (the driver window)")
+    ap.add_argument(
+        "--window", action="store_true", help="only the driver window (registry.DRIVER_WINDOW)"
+    )
     ap.add_argument("--only", nargs="*", default=None, help="name-prefix filters")
     args = ap.parse_args()
 
@@ -42,7 +44,7 @@ def main() -> int:
     names = list(registry.all_queries())
     total_registered = len(names)
     if args.window:
-        names = names[:50]
+        names = names[: registry.DRIVER_WINDOW]
     if args.only:
         names = [n for n in names if any(n.startswith(p) for p in args.only)]
     names = names[args.start:]
