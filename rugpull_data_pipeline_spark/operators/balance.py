@@ -5,7 +5,8 @@ Spark-first restatement of the reference's engine core (SURVEY.md §3.1):
     SIMD structural index + skip-map + FSM extractors     → JSON source at the scan, one
     (RECEIVER/stage1_simd.cpp:17-130,                        parse per block at a pruned
      stage2_processing.cpp:15-33,192-251)                   schema (batch and stream)
-    hot-address xxHash semi-join filter (J1, :358-364)    → arrays_overlap vs broadcast watchlist
+    hot-address xxHash semi-join filter (J1, :358-364)    → arrays_overlap vs the :watch array
+                                                            parameter (a driver-held value)
     index→address map + owner replacement (J2, :366-389,  → try_element_at on the concatenated
      applied :160-167)                                      key array + CASE precedence
     per-(owner,mint) pre/post hash agg (A1, :149-174)     → GROUP BY (signature, wallet, mint)
@@ -21,13 +22,20 @@ stay decimal *strings* end-to-end exactly like the reference (parsed to
 DecimalType only in math contexts) — crypto amounts exceed double precision.
 
 Scale design: the only wide operation is the final groupBy on
-(signature, wallet, mint) — partial aggregation runs map-side; the watchlist
-is broadcast (it is small by construction, like the reference's per-thread
-hash set); everything else is narrow (explode/filter/project) and fuses into
-one whole-stage-codegen span per stage.
+(signature, wallet, mint) — partial aggregation runs map-side. The watchlist
+is a value, not a relation: it is small by construction, like the
+reference's per-thread hash set (stage2_processing.cpp:358-364), so the
+driver holds it and binds it as one sorted array literal, which travels in
+each stage's task binary (broadcast once per stage) and costs no join, no
+collect job and no broadcast exchange. Everything else is narrow
+(explode/filter/project) and fuses into one whole-stage-codegen span per
+stage; an input that is one partition needs no exchange at all (see
+``streaming.pipelines``).
 """
 
 from __future__ import annotations
+
+from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -140,21 +148,17 @@ keyed AS (
 ),
 hot AS (
     -- J1: keep the tx iff any key is watchlisted (stage2_processing.cpp:
-    -- 358-364). The watchlist is one broadcast collect_set row, so the
+    -- 358-364). The watchlist is the :watch array parameter, so the
     -- filter is narrow and runs before any balance is exploded.
-    SELECT /*+ BROADCAST(w) */ keyed.*, w.watch
-    FROM keyed CROSS JOIN (
-        SELECT collect_set(address) AS watch FROM {watchlist}
-    ) w
-    WHERE arrays_overlap(all_keys, watch)
+    SELECT * FROM keyed WHERE arrays_overlap(all_keys, :watch)
 ),
 entries AS (
     -- The pre and post passes (stage2_processing.cpp:391-403) as ONE
     -- generator over phase-tagged elements: a UNION ALL of two explodes
     -- would plan the scan and the J1 filter twice.
-    SELECT ts, signature, all_keys, watch, e.phase AS phase, e.b AS b
+    SELECT ts, signature, all_keys, e.phase AS phase, e.b AS b
     FROM (
-        SELECT ts, signature, all_keys, watch,
+        SELECT ts, signature, all_keys,
             explode(concat(
                 transform(coalesce(pre, array()),
                     b -> struct('pre' AS phase, b AS b)),
@@ -170,7 +174,7 @@ resolved AS (
     -- try_element_at: ANSI element_at throws on an out-of-range index; a
     -- malformed tx must keep its owner instead.
     SELECT ts, signature, phase,
-        CASE WHEN array_contains(watch, try_element_at(all_keys, b.accountIndex + 1))
+        CASE WHEN array_contains(:watch, try_element_at(all_keys, b.accountIndex + 1))
              THEN try_element_at(all_keys, b.accountIndex + 1)
              ELSE b.owner END AS wallet,
         b.mint AS mint,
@@ -188,14 +192,31 @@ GROUP BY signature, wallet, mint
 """
 
 
-def extract_balance_changes(blocks: DataFrame, watchlist: DataFrame) -> DataFrame:
-    """Typed block rows (result.*) + watchlist(address) → balance changes.
+def watch_addresses(watchlist: DataFrame | Iterable[str]) -> list[str]:
+    """A watchlist → the addresses bound as ``:watch``: nulls dropped and
+    duplicates collapsed (``collect_set`` semantics), sorted so the bound
+    literal, and so the plan, is deterministic. An ``address`` DataFrame is
+    collected once on the driver. Spark rejects a null inside an array SQL
+    argument (INVALID_SQL_ARG), so the null must go before binding."""
+    if isinstance(watchlist, DataFrame):
+        watchlist = (r[0] for r in watchlist.select("address").collect())
+    return sorted(set(watchlist) - {None})
+
+
+def extract_balance_changes(
+    blocks: DataFrame, watchlist: DataFrame | Iterable[str]
+) -> DataFrame:
+    """Typed block rows (result.*) + watchlist → balance changes.
+
+    ``watchlist`` is a sequence of addresses or an ``address`` DataFrame,
+    which is collected here; a caller that extracts repeatedly against the
+    same dimension collects it once itself (``watch_addresses``).
 
     Keeps the reference's cheap-check-before-parse shape (SURVEY.md §4):
-    transactions are dropped by the broadcast watchlist filter *before*
-    the token-balance explode pays for itself. One parameterized statement,
+    transactions are dropped by the watchlist filter *before* the
+    token-balance explode pays for itself. One parameterized statement,
     so the plan is analysed once.
     """
     return blocks.sparkSession.sql(
-        _EXTRACT_SQL, blocks=blocks, watchlist=watchlist
+        _EXTRACT_SQL, {"watch": watch_addresses(watchlist)}, blocks=blocks
     )

@@ -131,10 +131,7 @@ def _balance_oracle(path: str | None = None) -> str:
 )
 def solana_balance_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks = _read_blocks(spark)
-    watch = spark.createDataFrame(
-        [(a,) for a in hot_addresses()], "address string"
-    )
-    out = extract_balance_changes(blocks, watch)
+    out = extract_balance_changes(blocks, hot_addresses())
     return out.select(
         "wallet",
         "signature",
@@ -239,10 +236,7 @@ def _ensure_xl_blocks() -> str:
 def solana_balance_extract_xl(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _ensure_xl_blocks()
     blocks = read_blocks(spark, f"{path}/blocks_*.json")
-    watch = spark.createDataFrame(
-        [(a,) for a in hot_addresses()], "address string"
-    )
-    out = extract_balance_changes(blocks, watch)
+    out = extract_balance_changes(blocks, hot_addresses())
     return out.select(
         "wallet",
         "signature",
@@ -305,10 +299,7 @@ def _enriched_oracle() -> str:
 )
 def solana_enriched_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks = _read_blocks(spark)
-    watch = spark.createDataFrame(
-        [(a,) for a in hot_addresses()], "address string"
-    )
-    balances = extract_balance_changes(blocks, watch)
+    balances = extract_balance_changes(blocks, hot_addresses())
 
     base_vaults, quote_vaults, prices = _enrich_dims()
     price_dim = spark.createDataFrame(prices, "vault string, usd double")
@@ -638,8 +629,7 @@ ORDER BY mint
 )
 def solana_rugpull_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks = _read_blocks(spark)
-    watch = spark.createDataFrame([(a,) for a in hot_addresses()], "address string")
-    bal = extract_balance_changes(blocks, watch)
+    bal = extract_balance_changes(blocks, hot_addresses())
     hot_arr = F.expr(_hot_literal(SPARK))
     vault = (
         bal.where(F.array_contains(hot_arr, F.col("wallet")))
@@ -711,10 +701,7 @@ def solana_balance_from_datasource(spark: SparkSession, sf_dir: str) -> DataFram
         .option("seed", _DS_SEED)
         .load()
     )
-    watch = spark.createDataFrame(
-        [(a,) for a in hot_addresses()], "address string"
-    )
-    out = extract_balance_changes(parse_blocks(raw, "payload"), watch)
+    out = extract_balance_changes(parse_blocks(raw, "payload"), hot_addresses())
     return out.select(
         "wallet",
         "signature",

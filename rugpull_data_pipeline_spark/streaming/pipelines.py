@@ -15,15 +15,29 @@ Design notes for scale:
   costs more in driver work than in bytes, so the batch does each step
   once: the JSON file source parses every block at the scan, at the same
   pruned schema as batch ``read_blocks`` (a text source + ``from_json``
-  re-parsed per consumer expression); the watchlist is read at its declared
-  schema, so no schema-inference job runs; and the extraction is one
+  re-parsed per consumer expression); and the extraction is one
   parameterized SQL statement, analysed once.
+
+- **One job per one-partition micro-batch.** The watchlist is bound into
+  the extraction as a driver-held array value, so a micro-batch runs no
+  collect_set job and no broadcast collect. A micro-batch that arrives as
+  one partition (a one-block batch always does) is ``coalesce(1)``'d
+  before extraction: its output is then a single partition, which already
+  satisfies the GROUP BY's distribution, so the aggregate and the sink
+  write run in one job with no Exchange and no AQE stage boundary. A
+  multi-partition micro-batch (backlog catch-up) keeps the exchange and
+  its parallel aggregate; the choice reads the batch's own partition
+  count and adds no option.
 
 - **Stream-static join refresh (ST5).** The reference re-fetches Redis
   watchlists per chunk (SERVER/flightWithRedis.py:81-84). The Spark analogue:
-  the dimension is a parquet directory re-read (its files re-listed) inside
-  ``foreachBatch`` each micro-batch, so dimension updates are visible to the
-  very next batch — the same visibility contract.
+  the dimension is a parquet directory whose files are re-listed inside
+  ``foreachBatch`` every micro-batch, and re-collected (at its declared
+  schema, so no schema-inference job runs) only when the listing's paths,
+  sizes or modification times differ from the last one. An overwrite, an
+  appended part file and an in-place rewrite all change the listing, so
+  dimension updates are visible to the very next batch — the same
+  visibility contract, without a collect per batch.
 
 - **Stateful price-change (ST4/P11).** The 10% threshold emitter
   (SERVER/ingest_prices.py:42-55) keeps last-emitted per pair — genuinely
@@ -44,7 +58,24 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.balance import extract_balance_changes, read_block_stream
+from ..operators.balance import (
+    extract_balance_changes,
+    read_block_stream,
+    watch_addresses,
+)
+
+
+def _listing(spark: SparkSession, path: str) -> list[tuple[str, int, int]]:
+    """(path, size, modification time) of every file under ``path``, via
+    the Hadoop file system the parquet reader itself lists with."""
+    sc = spark.sparkContext
+    jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    files = jpath.getFileSystem(sc._jsc.hadoopConfiguration()).listFiles(jpath, True)
+    out = []
+    while files.hasNext():
+        f = files.next()
+        out.append((f.getPath().toString(), f.getLen(), f.getModificationTime()))
+    return sorted(out)
 
 
 def stream_balance_pipeline(
@@ -57,22 +88,32 @@ def stream_balance_pipeline(
 ):
     """§3.1 as a stream: block JSON files → balance changes → ``sink``.
 
-    ``watchlist_dir`` is a parquet dimension directory re-read every
-    micro-batch (ST5 refresh semantics). ``checkpoint_dir`` defaults to a
-    subdir of ``blocks_dir`` (restart-from-offset recovery, ST6); pass a
-    fresh directory to force a from-scratch replay. Returns the started
-    query.
+    ``watchlist_dir`` is a parquet dimension directory re-listed every
+    micro-batch and re-collected when it changed (ST5 refresh semantics).
+    ``checkpoint_dir`` defaults to a subdir of ``blocks_dir``
+    (restart-from-offset recovery, ST6); pass a fresh directory to force a
+    from-scratch replay. Returns the started query.
     """
     blocks = read_block_stream(
         spark,
         f"{blocks_dir}/blocks_*.json",
         max_files_per_trigger=max_files_per_trigger,
     )
+    listing, watch = None, []
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        watch = batch_df.sparkSession.read.schema("address string").parquet(
-            watchlist_dir
-        )
+        nonlocal listing, watch
+        session = batch_df.sparkSession
+        # ST5: re-list every batch, re-collect only when the dimension changed
+        current = _listing(session, watchlist_dir)
+        if current != listing:
+            listing, watch = current, watch_addresses(
+                session.read.schema("address string").parquet(watchlist_dir)
+            )
+        # One partition in: a SinglePartition plan, so the GROUP BY needs no
+        # exchange and the whole micro-batch is one job.
+        if batch_df.rdd.getNumPartitions() == 1:
+            batch_df = batch_df.coalesce(1)
         sink(extract_balance_changes(batch_df, watch), epoch_id)
 
     return (

@@ -24,14 +24,6 @@ _NLJ_ALLOWED = {
     "sim_lsh_hyperplane_ann",
     "dedup_embedding_cosine",
     "dedup_simhash_neardup",
-    # 1-row broadcast of the collected watch set (the reference's broadcast
-    # hash set, RECEIVER/file_utils.cpp:3-36) — a cross join by syntax, a
-    # map-side lookup by execution.
-    "solana_balance_extract",
-    "solana_balance_extract_xl",
-    "solana_balance_from_datasource",
-    "solana_enriched_report",
-    "solana_rugpull_score",
     # 8-row centroid table broadcast against every vector — the IVF coarse
     # quantizer is definitionally an all-centroids probe.
     "sim_centroid_assign",

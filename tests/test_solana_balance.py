@@ -52,15 +52,19 @@ def python_oracle(blocks: list[dict], watch: set[str]) -> set[tuple]:
 
 
 @pytest.fixture(scope="module")
-def result_rows(spark, tmp_path_factory):
+def fixture_blocks(spark, tmp_path_factory):
     out_dir = str(tmp_path_factory.mktemp("solana"))
     write_blocks_json(out_dir, n_blocks=30, seed=7, files=4)
     raw = spark.read.text(f"{out_dir}/blocks_*.json")
-    blocks = parse_blocks(raw, "value")
+    return parse_blocks(raw, "value")
+
+
+@pytest.fixture(scope="module")
+def result_rows(spark, fixture_blocks):
     watch_df = spark.createDataFrame(
         [(a,) for a in hot_addresses()], "address string"
     )
-    df = extract_balance_changes(blocks, watch_df)
+    df = extract_balance_changes(fixture_blocks, watch_df)
     return df.collect()
 
 
@@ -109,6 +113,33 @@ def test_matches_python_oracle_many_seeds(spark, tmp_path_factory, seed):
     }
     assert got == expected
     assert len(got) > 0
+
+
+_HOT = hot_addresses()
+_DIRTY = _HOT + [None] + _HOT[:3]
+
+
+@pytest.mark.parametrize(
+    "watch, as_frame",
+    [
+        # the list form binds the same addresses as the DataFrame form
+        pytest.param(_HOT, False, id="list"),
+        # collect_set semantics: a null and duplicates change nothing
+        pytest.param(_DIRTY, False, id="list_null_and_duplicates"),
+        pytest.param(_DIRTY, True, id="dataframe_null_and_duplicates"),
+        # an empty watchlist keeps no transaction
+        pytest.param([], False, id="empty_list"),
+        pytest.param([], True, id="empty_dataframe"),
+    ],
+)
+def test_watchlist_forms_match_the_clean_set(
+    spark, fixture_blocks, result_rows, watch, as_frame
+):
+    expected = sorted(map(tuple, result_rows)) if watch else []
+    if as_frame:
+        watch = spark.createDataFrame([(a,) for a in watch], "address string")
+    rows = extract_balance_changes(fixture_blocks, watch).collect()
+    assert sorted(map(tuple, rows)) == expected
 
 
 def test_j2_owner_replacement_present(result_rows):

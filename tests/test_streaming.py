@@ -55,8 +55,10 @@ def test_stream_balance_matches_batch(spark, tmp_path):
 def test_stream_micro_batch_parses_once_and_filters_before_explode(spark, tmp_path):
     """A micro-batch of the balance stream parses each block once, at the
     JSON file source's scan (no from_json re-parse per consumer
-    expression), and its broadcast watchlist filter runs below the pre/post
-    explode, so only watchlisted transactions pay for the balances."""
+    expression), and its watchlist filter runs below the pre/post explode,
+    so only watchlisted transactions pay for the balances. A one-block
+    micro-batch arrives as one partition and aggregates in place: its plan
+    holds no exchange of any kind, so the batch is one Spark job."""
     blocks_dir = str(tmp_path / "blocks")
     watch_dir = str(tmp_path / "watch")
     write_blocks_json(blocks_dir, n_blocks=2, seed=7, files=2)
@@ -91,52 +93,87 @@ def test_stream_micro_batch_parses_once_and_filters_before_explode(spark, tmp_pa
     explode = next(
         i for i, ln in enumerate(lines) if "Generate explode(concat(transform" in ln
     )
-    join = next(
+    hot = next(
         i for i, ln in enumerate(lines)
-        if "Join Cross" in ln and "strategy=broadcast" in ln
+        if re.match(r"[ :+-]*Filter arrays_overlap\(", ln)
     )
-    # The join is in the Generate's subtree: printed after it, nested
-    # deeper, with nothing at the Generate's depth or shallower in between.
-    assert join > explode and depth(lines[join]) > depth(lines[explode])
-    assert all(depth(ln) > depth(lines[explode]) for ln in lines[explode + 1 : join])
+    # The watchlist filter is in the Generate's subtree: printed after it,
+    # nested deeper, with nothing at the Generate's depth or shallower in
+    # between.
+    assert hot > explode and depth(lines[hot]) > depth(lines[explode])
+    assert all(depth(ln) > depth(lines[explode]) for ln in lines[explode + 1 : hot])
+
+    # That micro-batch held both files as two partitions; one file per
+    # trigger gives one-block micro-batches.
+    executed = []
+
+    def one_block_sink(df, epoch_id):
+        executed.append(df._jdf.queryExecution().executedPlan().toString())
+
+    q = stream_balance_pipeline(
+        spark,
+        blocks_dir,
+        watch_dir,
+        one_block_sink,
+        max_files_per_trigger=1,
+        checkpoint_dir=str(tmp_path / "one_block_checkpoint"),
+    )
+    q.processAllAvailable()
+    q.stop()
+    assert len(executed) == 2
+    for plan in executed:
+        # neither a shuffle Exchange nor a BroadcastExchange
+        assert "Exchange" not in plan, plan
 
 
 def test_st5_dimension_refresh_next_batch(spark, tmp_path):
     """Watchlist updates must be visible to the next micro-batch — the
-    reference's per-chunk Redis re-fetch contract (ST5)."""
+    reference's per-chunk Redis re-fetch contract (ST5) — whether the
+    writer overwrites the dimension or appends a new part file to it."""
     blocks_dir = str(tmp_path / "blocks")
-    watch_dir = str(tmp_path / "watch")
     write_blocks_json(blocks_dir, n_blocks=12, seed=7, files=3)
-
     hot = hot_addresses()
-    # v1 watchlist: only half the hot addresses
-    spark.createDataFrame([(a,) for a in hot[:4]], "address string").write.mode(
-        "overwrite"
-    ).parquet(watch_dir)
 
-    seen_per_epoch: dict[int, set] = {}
+    for mode in ("overwrite", "append"):
+        watch_dir = str(tmp_path / f"watch_{mode}")
+        # v1 watchlist: only half the hot addresses
+        spark.createDataFrame(
+            [(a,) for a in hot[:4]], "address string"
+        ).write.mode("overwrite").parquet(watch_dir)
 
-    def sink(df, epoch_id):
-        seen_per_epoch[epoch_id] = {r.wallet for r in df.collect()}
-        # after the first batch, upgrade the dimension (out-of-band writer,
-        # like the pool-detector side pipeline S9)
-        if epoch_id == 0:
-            spark.createDataFrame(
-                [(a,) for a in hot], "address string"
-            ).write.mode("overwrite").parquet(watch_dir)
+        seen_per_epoch: dict[int, set] = {}
 
-    q = stream_balance_pipeline(
-        spark, blocks_dir, watch_dir, sink, max_files_per_trigger=1
-    )
-    q.processAllAvailable()
-    q.stop()
+        def sink(df, epoch_id):
+            seen_per_epoch[epoch_id] = {r.wallet for r in df.collect()}
+            # after the first batch, upgrade the dimension (out-of-band
+            # writer, like the pool-detector side pipeline S9): overwrite it
+            # with the whole set, or append the missing half as a new part
+            if epoch_id == 0:
+                spark.createDataFrame(
+                    [(a,) for a in (hot if mode == "overwrite" else hot[4:])],
+                    "address string",
+                ).write.mode(mode).parquet(watch_dir)
 
-    assert len(seen_per_epoch) >= 2
-    later_wallets = set().union(
-        *(s for e, s in seen_per_epoch.items() if e >= 1)
-    )
-    # the second half of the watchlist can only be tagged after the refresh
-    assert any(w in hot[4:] for w in later_wallets)
+        q = stream_balance_pipeline(
+            spark,
+            blocks_dir,
+            watch_dir,
+            sink,
+            max_files_per_trigger=1,
+            checkpoint_dir=str(tmp_path / f"checkpoint_{mode}"),
+        )
+        q.processAllAvailable()
+        q.stop()
+
+        assert len(seen_per_epoch) >= 2, mode
+        later_wallets = set().union(
+            *(s for e, s in seen_per_epoch.items() if e >= 1)
+        )
+        # the second half of the watchlist can only be tagged after the refresh
+        assert any(w in hot[4:] for w in later_wallets), mode
+        assert not any(w in hot[4:] for w in seen_per_epoch[0]), mode
+        # ... and the refresh is read by the very next batch
+        assert any(w in hot[4:] for w in seen_per_epoch[1]), mode
 
 
 def test_stateful_price_change_10pct(spark, tmp_path):

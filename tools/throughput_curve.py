@@ -56,12 +56,13 @@ def main() -> int:
         if f.startswith("blocks_")
     )
     spark = get_spark(app_name="throughput-curve")
-    watch = spark.createDataFrame([(a,) for a in hot_addresses()], "address string")
     times = []
     rows = None
     for i in range(args.runs):
         t0 = time.time()
-        out = extract_balance_changes(read_blocks(spark, f"{path}/blocks_*.json"), watch)
+        out = extract_balance_changes(
+            read_blocks(spark, f"{path}/blocks_*.json"), hot_addresses()
+        )
         rows = out.count()
         times.append(time.time() - t0)
         print(f"run {i + 1}: {times[-1]:.2f}s ({rows} rows)", flush=True)
