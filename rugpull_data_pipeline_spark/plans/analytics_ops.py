@@ -669,12 +669,19 @@ pair(
 # ---------------------------------------------------------------------------
 
 
+# Sort key putting every row whose gain is within 1e-9 of the best
+# (``mx``) first, so the threshold, not float noise, decides exact ties.
+_NEAR_BEST = "CASE WHEN gain >= mx - 1e-9 * greatest(mx, 1.0) THEN 0 ELSE 1 END"
+
+
 def _boosted_stumps(d: str) -> str:
     # Stage 1: exact best threshold on the cents grid for y ~ value
     # (variance-reduction split via integer cumulative sums). Stage 2: a
     # stump on hour-of-day fit to stage-1 residuals; residual sums are
-    # reconstructed EXACTLY from per-(hour, side) integer aggregates
-    # (sum r = sum y - n * side_mean), 9-dp quantized before accumulation.
+    # reconstructed EXACTLY from per-(hour, side) integer aggregates, scaled
+    # by nl*nr so they stay integers: nl*nr*(sum y - n*side_mean). Gains
+    # within 1e-9 of the best are floating-point ties, broken on the
+    # lowest threshold.
     return f"""
     WITH pts AS (
         SELECT {_cents('value')} AS s, cast(hour(ts) as bigint) AS hr,
@@ -707,45 +714,52 @@ def _boosted_stumps(d: str) -> str:
             1 AS k
         FROM (
             SELECT s, nl, yl, nr, yr, gain,
-                row_number() OVER (ORDER BY gain DESC, s) AS rn
-            FROM gain1
+                row_number() OVER (ORDER BY {_NEAR_BEST}, s) AS rn
+            FROM (SELECT *, max(gain) OVER () AS mx FROM gain1) m
         ) t WHERE rn = 1
     ),
     g2 AS (
         SELECT p.hr, CASE WHEN p.s <= t.s THEN 1 ELSE 0 END AS side,
             cast(count(*) as bigint) AS n2, {S.isum('p.y', d)} AS sy2,
-            max(t.ml) AS ml, max(t.mr) AS mr
+            max(t.nl) AS nl, max(t.yl) AS yl, max(t.nr) AS nr, max(t.yr) AS yr
         FROM (SELECT s, hr, y, 1 AS k FROM pts) p
         JOIN t1 t ON p.k = t.k
         GROUP BY p.hr, CASE WHEN p.s <= t.s THEN 1 ELSE 0 END
     ),
     rh AS (
         SELECT hr,
-            sum(cast(round(cast(sy2 as double)
-                - cast(n2 as double) * (CASE WHEN side = 1 THEN ml ELSE mr END),
-                9) as decimal(28,9))) AS rsum,
+            sum(cast(sy2 as decimal(38,0)) * nl * nr
+                - cast(n2 as decimal(38,0)) * (CASE WHEN side = 1
+                    THEN cast(yl as decimal(38,0)) * nr
+                    ELSE cast(yr as decimal(38,0)) * nl END)) AS rsum,
+            max(cast(nl as double) * cast(nr as double)) AS lz,
             {S.isum('n2', d)} AS nh
         FROM g2 GROUP BY hr
     ),
     c2 AS (
-        SELECT hr,
-            cast(sum(rsum) OVER (ORDER BY hr) as double) AS rl,
+        SELECT hr, lz,
+            sum(rsum) OVER (ORDER BY hr) AS rls,
             cast(sum(nh) OVER (ORDER BY hr) as bigint) AS nl2,
-            cast(sum(rsum) OVER () as double) AS rt,
+            sum(rsum) OVER () AS rts,
             cast(sum(nh) OVER () as bigint) AS nt2
         FROM rh
     ),
     gain2 AS (
-        SELECT hr, nl2, rl, nt2 - nl2 AS nr2, rt - rl AS rr,
-            rl * rl / cast(nl2 as double)
-            + (rt - rl) * (rt - rl) / cast(nt2 - nl2 as double) AS gain
-        FROM c2 WHERE nl2 > 0 AND nt2 - nl2 > 0
+        SELECT hr, nl2, nr2, rl, rr,
+            rl * rl / cast(nl2 as double) + rr * rr / cast(nr2 as double)
+                AS gain
+        FROM (
+            SELECT hr, nl2, nt2 - nl2 AS nr2,
+                cast(rls as double) / lz AS rl,
+                cast(rts - rls as double) / lz AS rr
+            FROM c2 WHERE nl2 > 0 AND nt2 - nl2 > 0
+        ) r
     ),
     t2 AS (
         SELECT hr, nl2, nr2, rl, rr, gain FROM (
             SELECT hr, nl2, nr2, rl, rr, gain,
-                row_number() OVER (ORDER BY gain DESC, hr) AS rn
-            FROM gain2
+                row_number() OVER (ORDER BY {_NEAR_BEST}, hr) AS rn
+            FROM (SELECT *, max(gain) OVER () AS mx FROM gain2) m
         ) t WHERE rn = 1
     )
     SELECT cast(1 as bigint) AS stage, 'value_cents' AS feature,
@@ -772,9 +786,10 @@ pair(
     "purchase label on the value-cents grid (integer cumulative sums, "
     "ties broken on the threshold); stage 2 fits an hour-of-day stump "
     "to stage-1 residuals, whose sums are reconstructed exactly from "
-    "per-(hour, side) INTEGER aggregates (sum r = sum y - n*mean) and "
-    "9-dp-quantized before decimal accumulation — no per-row residual "
-    "materialization, no float accumulation. The 1-row stage-1 model "
+    "per-(hour, side) INTEGER aggregates scaled by nl*nr "
+    "(nl*nr*(sum y - n*mean)) and accumulated as decimal(38,0) — no "
+    "per-row residual materialization, no float accumulation; gains "
+    "within 1e-9 of the best tie on the threshold. The 1-row stage-1 model "
     "meets the hour grid via an equi-join on a constant key (broadcast "
     "hash). All pairwise work rides bounded grids (cents, 24 hours).",
 )
