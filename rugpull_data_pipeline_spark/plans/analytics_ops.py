@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
-from .mining_ops import _daily_means, _day_idx
+from .mining_ops import _copurchase_pairs, _daily_means, _day_idx
 from .registry import pair, register, static_table
 
 
@@ -233,46 +233,17 @@ pair(
 _W_EDGE = "greatest(cast(1 as bigint), 11 - least(cast(10 as bigint), n_orders))"
 
 
-def _weighted_edges_sql() -> str:
-    """Weighted co-purchase edges: strong ties (many shared orders) are
-    CHEAP (w = max(1, 11 - min(10, n_orders))) — affinity distance."""
+def _weighted_edges_sql(pw: str) -> str:
+    """The co-purchase pair table ``pw`` (query text) plus its weighted
+    symmetric edges: strong ties (many shared orders) are CHEAP
+    (w = max(1, 11 - min(10, n_orders))) — affinity distance."""
     return f"""
-    op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    pw AS (
-        SELECT a.l_partkey AS src, b.l_partkey AS dst,
-            cast(count(*) as bigint) AS n_orders
-        FROM op a JOIN op b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY a.l_partkey, b.l_partkey
-    ),
+    pw AS ({pw}),
     wsym AS (
         SELECT src, dst, {_W_EDGE} AS w FROM pw
         UNION ALL SELECT dst AS src, src AS dst, {_W_EDGE} AS w FROM pw
     )
     """
-
-
-def _pw_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame twin of the ``pw`` CTE (localCheckpoint at the callers)."""
-    from pyspark.sql import functions as F
-
-    op = (
-        static_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = op.alias("a"), op.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst")
-        )
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-    )
 
 
 def _sssp_oracle() -> str:
@@ -289,7 +260,7 @@ def _sssp_oracle() -> str:
     )""")
         prev = f"r{h}"
     return f"""
-    WITH {_weighted_edges_sql()}, {', '.join(ctes)}
+    WITH {_weighted_edges_sql(_copurchase_pairs(DUCK))}, {', '.join(ctes)}
     SELECT rn, node, dist FROM (
         SELECT r3.node, r3.dist,
             cast(row_number() OVER (ORDER BY r3.dist, r3.node) as bigint) AS rn
@@ -316,7 +287,7 @@ def _sssp_oracle() -> str:
 def graph_sssp_bellman3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    pw = _pw_df(spark, sf_dir)
+    pw = spark.sql(_copurchase_pairs(SPARK))
     w = F.greatest(
         F.lit(1).cast("long"),
         F.lit(11).cast("long") - F.least(F.lit(10).cast("long"), F.col("n_orders")),
@@ -368,7 +339,7 @@ def graph_sssp_bellman3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _jaccard_oracle() -> str:
     return f"""
-    WITH {_weighted_edges_sql()},
+    WITH {_weighted_edges_sql(_copurchase_pairs(DUCK))},
     top AS (
         SELECT src AS a, dst AS b, n_orders FROM (
             SELECT src, dst, n_orders,
@@ -419,7 +390,7 @@ def graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    pw = _pw_df(spark, sf_dir).localCheckpoint()
+    pw = spark.sql(_copurchase_pairs(SPARK)).localCheckpoint()
     top = (
         pw.withColumn(
             "rn",
@@ -474,7 +445,7 @@ def graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _clustering_oracle() -> str:
     return f"""
-    WITH {_weighted_edges_sql()},
+    WITH {_weighted_edges_sql(_copurchase_pairs(DUCK))},
     sym AS (SELECT src, dst FROM pw UNION ALL SELECT dst, src FROM pw),
     deg AS (
         SELECT src AS node, cast(count(*) as bigint) AS deg FROM sym GROUP BY src
@@ -517,7 +488,9 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    pw = _pw_df(spark, sf_dir).select("src", "dst").localCheckpoint()
+    pw = (
+        spark.sql(_copurchase_pairs(SPARK)).select("src", "dst").localCheckpoint()
+    )
     sym = pw.unionByName(
         pw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -565,7 +538,7 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _powerlaw(d: str, pw_src: str | None = None) -> str:
+def _powerlaw(d: str, pw: str) -> str:
     # MLE alpha over the d >= 2 tail (alpha = 1 + n / sum ln(d/dmin)) plus
     # the OLS log-log slope of the degree pdf; ln values 9-dp quantized
     # before decimal accumulation (order-free), one division at the end.
@@ -577,17 +550,11 @@ def _powerlaw(d: str, pw_src: str | None = None) -> str:
            " * round(ln(cast(d as double)), 9), 12) as decimal(28,12))")
     ltail = ("cast(cnt as decimal(18,0)) * cast(round(ln(cast(d as double)"
              " / cast(2 as double)), 9) as decimal(18,9))")
-    # ``pw_src`` lets the Spark builder checkpoint the co-purchase pair
-    # table (shared _pw_df builder with graph_rich_club/degree_gini):
-    # inlined, the sym UNION re-derived the self-join (4 fact scans
-    # planned - the round-11 registry-wide plan audit).
-    edges = (
-        f"pw AS ({pw_src})"
-        if pw_src is not None
-        else _weighted_edges_sql()
-    )
+    # ``pw`` is shared: the sym UNION reads the co-purchase pair table
+    # twice, and inlined it re-derived the self-join (4 fact scans planned
+    # - the round-11 registry-wide plan audit).
     return f"""
-    WITH {edges},
+    WITH pw AS ({pw}),
     sym AS (SELECT src, dst FROM pw UNION ALL SELECT dst, src FROM pw),
     deg AS (
         SELECT src AS node, cast(count(*) as bigint) AS deg FROM sym GROUP BY src
@@ -616,9 +583,10 @@ def _powerlaw(d: str, pw_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "graph_degree_powerlaw",
-    oracle=_powerlaw(DUCK),
+    _powerlaw,
+    shared={"pw": _copurchase_pairs},
     tags=("graph", "stats"),
     doc="Degree-distribution power-law fit of the co-purchase graph: the "
     "discrete MLE alpha = 1 + n/sum(ln(d/dmin)) over the d>=2 tail plus "
@@ -628,9 +596,6 @@ def _powerlaw(d: str, pw_src: str | None = None) -> str:
     "decimal sums, one division per statistic at the end. The pair "
     "table is localCheckpointed so the co-purchase self-join runs once.",
 )
-def graph_degree_powerlaw(spark, sf_dir):
-    pw = _pw_df(spark, sf_dir).localCheckpoint()
-    return spark.sql(_powerlaw(SPARK, pw_src="SELECT src, dst FROM {pw}"), pw=pw)
 
 
 # ---------------------------------------------------------------------------

@@ -482,27 +482,30 @@ pair(
 # Event analytics: funnel + retention cohorts + deterministic sampling
 # ---------------------------------------------------------------------------
 
-_FUNNEL_V = """
+def _funnel_v(d: str) -> str:
+    return """
     SELECT user_id, min(ts) AS t1 FROM events
     WHERE event_type = 'view' GROUP BY user_id
 """
 
-_FUNNEL_C = """
+
+def _funnel_c(d: str, v: str) -> str:
+    return f"""
+    WITH v AS ({v})
     SELECT e.user_id, min(e.ts) AS t2 FROM events e
     JOIN v ON e.user_id = v.user_id AND e.ts > v.t1
     WHERE e.event_type = 'click' GROUP BY e.user_id
 """
 
 
-def _funnel(v_src: str | None = None, c_src: str | None = None) -> str:
-    # ``v_src``/``c_src`` let the Spark builder checkpoint the first two
-    # stage tables: inlined, each later stage (and each count) re-derived
-    # every earlier stage (6 fact scans planned — the round-11
-    # registry-wide plan audit; the three per-stage filters themselves
-    # are inherent).
+def _funnel(d: str, v: str, c: str) -> str:
+    # The first two stage tables are shared: inlined, each later stage (and
+    # each count) re-derived every earlier stage (6 fact scans planned —
+    # the round-11 registry-wide plan audit; the three per-stage filters
+    # themselves are inherent).
     return f"""
-WITH v AS ({v_src if v_src is not None else _FUNNEL_V}),
-c AS ({c_src if c_src is not None else _FUNNEL_C}),
+WITH v AS ({v}),
+c AS ({c}),
 p AS (
     SELECT e.user_id, min(e.ts) AS t3 FROM events e
     JOIN c ON e.user_id = c.user_id AND e.ts > c.t2
@@ -515,9 +518,10 @@ ORDER BY stage
 """
 
 
-@register(
+pair(
     "events_funnel_stages",
-    oracle=_funnel(),
+    _funnel,
+    shared={"v": _funnel_v, "c": _funnel_c},
     tags=("analytics",),
     doc="Ordered funnel (view -> click -> purchase): each stage requires an "
     "event strictly after the user's previous-stage entry. Three hash aggs "
@@ -527,19 +531,6 @@ ORDER BY stage
     "stage tables are localCheckpointed so later stages and the counts "
     "don't re-derive them.",
 )
-def events_funnel_stages(spark, sf_dir):
-    v = spark.sql(_FUNNEL_V).localCheckpoint()
-    c = spark.sql(
-        f"WITH v AS (SELECT user_id, t1 FROM {{v}}){_FUNNEL_C}", v=v
-    ).localCheckpoint()
-    return spark.sql(
-        _funnel(
-            v_src="SELECT user_id, t1 FROM {v}",
-            c_src="SELECT user_id, t2 FROM {c}",
-        ),
-        v=v,
-        c=c,
-    )
 
 
 def _retention(d: str) -> str:

@@ -30,12 +30,11 @@ the only fact-sized work is single hash-aggs with map-side combine.
 from __future__ import annotations
 
 from ..functions import scalars as S
-from ..functions.scalars import DUCK, SPARK
-from .analytics_ops import _pw_df
+from ..functions.scalars import SPARK
 from .diagnostics_ops import _dsum9, _r6u
 from .llm_ops import _emb_dims, _word_tokens_all
-from .mining_ops import _day_idx
-from .registry import pair, register
+from .mining_ops import _copurchase_pairs, _day_idx
+from .registry import pair
 
 
 def _cents(col: str) -> str:
@@ -675,24 +674,12 @@ pair(
 # ---------------------------------------------------------------------------
 
 
-def _degree_gini(d: str, pw_src: str | None = None) -> str:
-    # ``pw_src`` lets the Spark builder checkpoint the co-purchase pair
-    # table (shared with graph_rich_club's builder via _pw_df): inlined,
-    # the sym UNION re-derived the self-join (4 fact scans planned — the
-    # round-11 plan audit).
-    pw_body = (
-        pw_src
-        if pw_src is not None
-        else f"""
-        SELECT a.l_partkey AS src, b.l_partkey AS dst
-        FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) a
-        JOIN (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY a.l_partkey, b.l_partkey
-    """
-    )
+def _degree_gini(d: str, pw: str) -> str:
+    # ``pw`` is shared: the sym UNION reads the co-purchase pair table
+    # twice, and inlined it re-derived the self-join (4 fact scans planned
+    # — the round-11 plan audit).
     return f"""
-    WITH pw AS ({pw_body}),
+    WITH pw AS ({pw}),
     sym AS (SELECT src, dst FROM pw UNION ALL SELECT dst, src FROM pw),
     deg AS (
         SELECT src AS node, cast(count(*) as bigint) AS deg
@@ -715,9 +702,10 @@ def _degree_gini(d: str, pw_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "graph_degree_gini",
-    oracle=_degree_gini(DUCK),
+    _degree_gini,
+    shared={"pw": _copurchase_pairs},
     tags=("graph", "stats"),
     doc="Gini coefficient of the co-purchase degree distribution via the "
     "rank formula G = sum((2 r_i - n - 1) d_i) / (n sum(d)) — the "
@@ -727,12 +715,6 @@ def _degree_gini(d: str, pw_src: str | None = None) -> str:
     "the rank window rides it. Integer until the final ratio. The pair "
     "table is localCheckpointed so the co-purchase self-join runs once.",
 )
-def graph_degree_gini(spark, sf_dir):
-    pw = _pw_df(spark, sf_dir).localCheckpoint()
-    return spark.sql(
-        _degree_gini(SPARK, pw_src="SELECT src, dst FROM {pw}"),
-        pw=pw,
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -522,22 +522,18 @@ def dedup_ngram_jaccard(spark, sf_dir):
     )
 
 
-def _dedup_cluster(d: str, pairs_src: str | None = None) -> str:
+def _dedup_cluster(d: str, pairs: str) -> str:
     # Keep-one-per-cluster: near-dup pairs (Jaccard ≥ 0.2) are edges; the
     # cluster label is the min doc_id reachable in ≤2 hops — label
     # propagation unrolled twice. Full connected components iterates this
     # same join to a fixed point (each round is one shuffle on doc_id);
     # two rounds already collapse the chains the pair generator emits and
     # keep the query a fixed-depth plan both engines can hash-compare.
-    # ``pairs_src`` lets the Spark builder checkpoint the pair table:
-    # inlined, the edges/l1/l2 fan-out re-derived the whole shingle
+    # ``pairs`` is the pair table: the Spark builder passes its checkpoint
+    # of dedup_ngram_jaccard (a DataFrame-API core), the oracle the SQL
+    # text. Inlined, the edges/l1/l2 fan-out re-derived the whole shingle
     # pipeline (26 fact scans planned — the round-11 registry-wide plan
     # audit).
-    pairs = (
-        pairs_src
-        if pairs_src is not None
-        else _dedup_ngram_jaccard(d).replace("ORDER BY doc_a, doc_b", "")
-    )
     return f"""
     WITH pairs AS ({pairs}),
     edges AS (
@@ -571,7 +567,9 @@ def _dedup_cluster(d: str, pairs_src: str | None = None) -> str:
 
 @register(
     "dedup_cluster_neardup",
-    oracle=_dedup_cluster(DUCK),
+    oracle=_dedup_cluster(
+        DUCK, _dedup_ngram_jaccard(DUCK).replace("ORDER BY doc_a, doc_b", "")
+    ),
     tags=("dedup",),
     doc="Near-dup clustering: 2-hop min-label propagation over the Jaccard "
     "pair graph, emitting one keeper per multi-member cluster. Fixed-depth "
@@ -583,9 +581,7 @@ def _dedup_cluster(d: str, pairs_src: str | None = None) -> str:
 def dedup_cluster_neardup(spark, sf_dir):
     pairs = dedup_ngram_jaccard(spark, sf_dir).localCheckpoint()
     return spark.sql(
-        _dedup_cluster(
-            SPARK, pairs_src="SELECT doc_a, doc_b, jaccard FROM {pairs}"
-        ),
+        _dedup_cluster(SPARK, "SELECT doc_a, doc_b, jaccard FROM {pairs}"),
         pairs=pairs,
     )
 
@@ -633,73 +629,113 @@ _MINHASH_AB = _minhash_constants(_N_HASHES)
 _LSH_BUCKET_CAP = 32
 
 
-def _dedup_minhash_lsh(d: str) -> str:
+def _mh_sh_hashed(d: str) -> str:
+    """(doc_id, shh): each doc's distinct word-3-gram shingles as one
+    60-bit portable hash — the shared core of the MinHash family."""
     # MinHash over word-3-gram shingles (unigrams are degenerate on a small
     # vocabulary: every doc contains nearly the whole vocab, so every pair
     # collides in every band and LSH degrades to a cross join).
-    #
-    # One pass, no row explosion: a single 60-bit base hash per shingle, 16
-    # universal-hash variants as arithmetic expressions, and the 16 minimums
-    # as conditional aggregates of ONE groupBy(doc_id). The earlier shape
-    # (CROSS JOIN with a 16-row index sequence) shuffled 16× the shingle
-    # count and computed 16 md5s per shingle — at 100 TB that explosion is
-    # the bottleneck; this shape's only wide op is the one hash-agg.
-    shh = S.portable_hash64("sh", d)
+    return (
+        f"SELECT doc_id, {S.portable_hash64('sh', d)} AS shh "
+        f"FROM ({_ngram_shingles(d)}) raw"
+    )
+
+
+def _mh_bands(d: str, side: bool = False) -> str:
+    """CTE text ``sigs, bands, bands_capped`` over a ``sh_hashed(doc_id,
+    shh)`` CTE; ``side`` carries dedup_minhash_incremental's corpus side.
+
+    One pass, no row explosion: a single 60-bit base hash per shingle, 16
+    universal-hash variants as arithmetic expressions, and the 16 minimums
+    as conditional aggregates of ONE groupBy(doc_id). The earlier shape
+    (CROSS JOIN with a 16-row index sequence) shuffled 16× the shingle
+    count and computed 16 md5s per shingle — at 100 TB that explosion is
+    the bottleneck; this shape's only wide op is the one hash-agg."""
+    keep = "side, " if side else ""
     min_cols = ",\n            ".join(
         f"min(({a} * m + {b}) % {_MINHASH_P}) AS h{j}"
         for j, (a, b) in enumerate(_MINHASH_AB)
     )
     band_keys = ", ".join(
         "md5(concat_ws(',', "
-        + ", ".join(f"h{4 * band + r}" for r in range(_BAND_SIZE))
+        + ", ".join(f"h{_BAND_SIZE * band + r}" for r in range(_BAND_SIZE))
         + "))"
         for band in range(_N_HASHES // _BAND_SIZE)
     )
     if d == SPARK:
         bands = f"""
-        SELECT doc_id, band, band_key
+        SELECT doc_id, {keep}band, band_key
         FROM sigs
         LATERAL VIEW posexplode(array({band_keys})) AS band, band_key
         """
-        doc_sets = "SELECT doc_id, collect_set(shh) AS shs FROM sh_hashed GROUP BY doc_id"
-        n_inter = "size(array_intersect(sa.shs, sb.shs))"
-        n_a, n_b = "size(sa.shs)", "size(sb.shs)"
     else:
         bands = f"""
-        SELECT doc_id, i AS band, [{band_keys}][i + 1] AS band_key
+        SELECT doc_id, {keep}i AS band, [{band_keys}][i + 1] AS band_key
         FROM sigs, unnest(range(0, {_N_HASHES // _BAND_SIZE})) t(i)
         """
-        doc_sets = "SELECT doc_id, list(DISTINCT shh) AS shs FROM sh_hashed GROUP BY doc_id"
-        n_inter = "len(list_intersect(sa.shs, sb.shs))"
-        n_a, n_b = "len(sa.shs)", "len(sb.shs)"
-    jacc = f"cast({n_inter} as double) / ({n_a} + {n_b} - {n_inter})"
     return f"""
-    WITH sh_hashed AS (
-        SELECT doc_id, {shh} AS shh FROM ({_ngram_shingles(d)}) raw
-    ),
     sigs AS (
-        SELECT doc_id,
+        SELECT doc_id, {"max(side) AS side, " if side else ""}
             {min_cols}
-        FROM (SELECT doc_id, shh % {_MINHASH_P} AS m FROM sh_hashed) t
+        FROM (SELECT doc_id, {keep}shh % {_MINHASH_P} AS m FROM sh_hashed) t
         GROUP BY doc_id
     ),
     bands AS (
         {bands}
     ),
     bands_capped AS (
-        SELECT doc_id, band, band_key FROM (
-            SELECT doc_id, band, band_key,
+        SELECT doc_id, {keep}band, band_key FROM (
+            SELECT doc_id, {keep}band, band_key,
                 count(*) OVER (PARTITION BY band, band_key) AS bsz
             FROM bands
         ) f WHERE bsz <= {_LSH_BUCKET_CAP}
-    ),
+    )"""
+
+
+def _mh_jaccard(d: str) -> tuple[str, str]:
+    """(doc_sets query over the ``sh_hashed`` CTE, exact Jaccard of two of
+    its rows aliased ``sa``/``sb``)."""
+    if d == SPARK:
+        doc_sets = (
+            "SELECT doc_id, collect_set(shh) AS shs FROM sh_hashed GROUP BY doc_id"
+        )
+        n_inter = "size(array_intersect(sa.shs, sb.shs))"
+        n_a, n_b = "size(sa.shs)", "size(sb.shs)"
+    else:
+        doc_sets = (
+            "SELECT doc_id, list(DISTINCT shh) AS shs FROM sh_hashed GROUP BY doc_id"
+        )
+        n_inter = "len(list_intersect(sa.shs, sb.shs))"
+        n_a, n_b = "len(sa.shs)", "len(sb.shs)"
+    return doc_sets, f"cast({n_inter} as double) / ({n_a} + {n_b} - {n_inter})"
+
+
+def _mh_bands_capped(d: str, sh: str) -> str:
+    return f"""
+    WITH sh_hashed AS ({sh}),{_mh_bands(d)}
+    SELECT doc_id, band, band_key FROM bands_capped
+    """
+
+
+def _mh_doc_sets(d: str, sh: str) -> str:
+    return f"WITH sh_hashed AS ({sh}) {_mh_jaccard(d)[0]}"
+
+
+def _dedup_minhash_lsh(d: str, bc: str, ds: str) -> str:
+    # The hashed shingles (read by the bands and the doc sets), the capped
+    # band table (both self-join sides) and the doc sets (both probes) are
+    # shared: the inlined WITH-chain planned the full explode+md5 pipeline
+    # four times (Spark inlines CTEs per consumer).
+    jacc = _mh_jaccard(d)[1]
+    return f"""
+    WITH bands_capped AS ({bc}),
+    doc_sets AS ({ds}),
     candidates AS (
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM bands_capped a
         JOIN bands_capped b ON a.band = b.band AND a.band_key = b.band_key
             AND a.doc_id < b.doc_id
-    ),
-    doc_sets AS ({doc_sets})
+    )
     SELECT c.doc_a, c.doc_b, round({jacc}, 6) AS jaccard
     FROM candidates c
     JOIN doc_sets sa ON sa.doc_id = c.doc_a
@@ -709,72 +745,10 @@ def _dedup_minhash_lsh(d: str) -> str:
     """
 
 
-def _mh_lsh_pieces(d: str) -> dict[str, str]:
-    """The _dedup_minhash_lsh CTE bodies as standalone statements, so the
-    Spark builder can materialize the shared cores (round-11 checkpoint
-    contract) while the oracle keeps the single WITH-chain text. ``{sh}``,
-    ``{bc}`` and ``{ds}`` are the cores, passed to ``spark.sql`` as
-    DataFrame arguments."""
-    shh = S.portable_hash64("sh", d)
-    min_cols = ",\n            ".join(
-        f"min(({a} * m + {b}) % {_MINHASH_P}) AS h{j}"
-        for j, (a, b) in enumerate(_MINHASH_AB)
-    )
-    band_keys = ", ".join(
-        "md5(concat_ws(',', "
-        + ", ".join(f"h{4 * band + r}" for r in range(_BAND_SIZE))
-        + "))"
-        for band in range(_N_HASHES // _BAND_SIZE)
-    )
-    return {
-        "sh_hashed": (
-            f"SELECT doc_id, {shh} AS shh FROM ({_ngram_shingles(d)}) raw"
-        ),
-        "bands_capped": f"""
-            SELECT doc_id, band, band_key FROM (
-                SELECT doc_id, band, band_key,
-                    count(*) OVER (PARTITION BY band, band_key) AS bsz
-                FROM (
-                    SELECT doc_id, band, band_key
-                    FROM (
-                        SELECT doc_id, {min_cols}
-                        FROM (SELECT doc_id, shh % {_MINHASH_P} AS m
-                              FROM {{sh}}) t
-                        GROUP BY doc_id
-                    ) sigs
-                    LATERAL VIEW posexplode(array({band_keys}))
-                        AS band, band_key
-                ) bands
-            ) f WHERE bsz <= {_LSH_BUCKET_CAP}
-        """,
-        "doc_sets": (
-            "SELECT doc_id, collect_set(shh) AS shs FROM {sh} GROUP BY doc_id"
-        ),
-        "final": """
-            WITH candidates AS (
-                SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                FROM {bc} a
-                JOIN {bc} b ON a.band = b.band AND a.band_key = b.band_key
-                    AND a.doc_id < b.doc_id
-            )
-            SELECT c.doc_a, c.doc_b, round({jacc}, 6) AS jaccard
-            FROM candidates c
-            JOIN {ds} sa ON sa.doc_id = c.doc_a
-            JOIN {ds} sb ON sb.doc_id = c.doc_b
-            WHERE {jacc} >= 0.1
-            ORDER BY c.doc_a, c.doc_b
-        """.replace(
-            "{jacc}",
-            "cast(size(array_intersect(sa.shs, sb.shs)) as double) / "
-            "(size(sa.shs) + size(sb.shs) - "
-            "size(array_intersect(sa.shs, sb.shs)))",
-        ),
-    }
-
-
-@register(
+pair(
     "dedup_minhash_lsh",
-    oracle=_dedup_minhash_lsh(DUCK),
+    _dedup_minhash_lsh,
+    shared={"sh": _mh_sh_hashed, "bc": _mh_bands_capped, "ds": _mh_doc_sets},
     tags=("dedup",),
     doc="MinHash (16 portable hash fns) + LSH banding (4×4): candidate pairs "
     "only inside band buckets, then exact-Jaccard verification. The band "
@@ -786,12 +760,6 @@ def _mh_lsh_pieces(d: str) -> dict[str, str]:
     "once (round-11 checkpoint contract, same trade as "
     "dedup_minhash_incremental).",
 )
-def dedup_minhash_lsh(spark, sf_dir):
-    pieces = _mh_lsh_pieces(SPARK)
-    sh = spark.sql(pieces["sh_hashed"]).localCheckpoint()
-    bc = spark.sql(pieces["bands_capped"], sh=sh).localCheckpoint()
-    ds = spark.sql(pieces["doc_sets"], sh=sh).localCheckpoint()
-    return spark.sql(pieces["final"], bc=bc, ds=ds)
 
 
 def _dedup_simhash(d: str) -> str:
@@ -1072,58 +1040,55 @@ def _sim_ivf(d: str) -> str:
 _N_PLANES = 4
 
 
-def _sim_lsh_hyperplane(d: str, buckets_src: str | None = None) -> str:
-    # ``buckets_src`` lets the Spark builder checkpoint the (vec_id,
-    # bucket) table: inlined, queries and the candidate join each re-ran
-    # the hyperplane-hash pipeline (6 fact scans planned — the round-11
-    # registry-wide plan audit).
-    cos = _cosine(d, "q.embedding", "c.embedding")
-    jseq = (
-        f"SELECT explode(sequence(0, {_N_PLANES - 1})) AS j"
-        if d == SPARK
-        else f"SELECT unnest(range(0, {_N_PLANES})) AS j"
-    )
+def _lsh_buckets(d: str) -> str:
+    """(vec_id, bucket) — the hyperplane bucketing of sim_lsh_hyperplane_ann,
+    audited by audit_ann_recall / audit_multiprobe_recall. The Spark
+    builders run its one-agg DataFrame twin stats_eval._lsh_buckets_df."""
     # Deterministic pseudo-random hyperplane signs from the portable hash —
     # only n_planes × n_dims distinct values, computed once and broadcast.
     sign_h = S.portable_hash64(
         "concat('hp-', cast(j as string), ':', cast(dim as string))", d
     )
     if d == SPARK:
+        jseq = f"SELECT explode(sequence(0, {_N_PLANES - 1})) AS j"
         dimseq = (
             "SELECT explode(sequence(1, "
             "(SELECT max(size(embedding)) FROM embeddings))) AS dim"
         )
     else:
+        jseq = f"SELECT unnest(range(0, {_N_PLANES})) AS j"
         dimseq = (
             "SELECT unnest(range(1, "
             "(SELECT max(len(embedding)) FROM embeddings) + 1)) AS dim"
         )
-    bucket_body = (
-        buckets_src
-        if buckets_src is not None
-        else f"""
-        WITH emb_dims AS ({_emb_dims(d)}),
-        planes AS (
+    return f"""
+    SELECT vec_id,
+        cast(sum({S.shift_left('cast(bit as bigint)', 'j', d)}) as bigint)
+            AS bucket
+    FROM (
+        SELECT e.vec_id, p.j,
+            CASE WHEN sum(cast(e.v * p.s as decimal(38,9))) >= 0
+                 THEN 1 ELSE 0 END AS bit
+        FROM ({_emb_dims(d)}) e
+        JOIN (
             SELECT j, dim,
                 CASE WHEN {sign_h} % 2 = 1 THEN 1.0 ELSE -1.0 END AS s
-            FROM ({dimseq}) dims
-            CROSS JOIN ({jseq}) js
-        ),
-        bits AS (
-            SELECT e.vec_id, p.j,
-                CASE WHEN sum(cast(e.v * p.s as decimal(38,9))) >= 0
-                     THEN 1 ELSE 0 END AS bit
-            FROM emb_dims e JOIN planes p ON e.dim = p.dim
-            GROUP BY e.vec_id, p.j
-        )
-        SELECT vec_id,
-            cast(sum({S.shift_left('cast(bit as bigint)', 'j', d)}) as bigint)
-                AS bucket
-        FROM bits GROUP BY vec_id
+            FROM ({dimseq}) dims CROSS JOIN ({jseq}) js
+        ) p ON e.dim = p.dim
+        GROUP BY e.vec_id, p.j
+    ) bits GROUP BY vec_id
     """
-    )
+
+
+def _sim_lsh_hyperplane(d: str, buckets: str) -> str:
+    # ``buckets`` is the (vec_id, bucket) table: the Spark builder passes its
+    # checkpoint (stats_eval._lsh_buckets_df), the oracle its SQL twin
+    # _lsh_buckets. Inlined, queries and the candidate join each
+    # re-ran the hyperplane-hash pipeline (6 fact scans planned — the
+    # round-11 registry-wide plan audit).
+    cos = _cosine(d, "q.embedding", "c.embedding")
     return f"""
-    WITH buckets AS ({bucket_body}),
+    WITH buckets AS ({buckets}),
     queries AS (
         SELECT e.vec_id AS query_id, e.embedding, b.bucket
         FROM embeddings e JOIN buckets b ON b.vec_id = e.vec_id
@@ -1150,7 +1115,7 @@ def _sim_lsh_hyperplane(d: str, buckets_src: str | None = None) -> str:
 
 @register(
     "sim_lsh_hyperplane_ann",
-    oracle=_sim_lsh_hyperplane(DUCK),
+    oracle=_sim_lsh_hyperplane(DUCK, _lsh_buckets(DUCK)),
     tags=("similarity",),
     doc=f"Random-hyperplane (SimHash-for-vectors) ANN: {_N_PLANES} "
     "deterministic hyperplanes → sign bits → bucket id; candidates are only "
@@ -1164,10 +1129,7 @@ def sim_lsh_hyperplane_ann(spark, sf_dir):
 
     b = _lsh_buckets_df(spark, sf_dir).localCheckpoint()
     return spark.sql(
-        _sim_lsh_hyperplane(
-            SPARK, buckets_src="SELECT vec_id, bucket FROM {b}"
-        ),
-        b=b,
+        _sim_lsh_hyperplane(SPARK, "SELECT vec_id, bucket FROM {b}"), b=b
     )
 
 

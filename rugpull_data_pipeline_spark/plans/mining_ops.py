@@ -296,18 +296,24 @@ pair(
 # Co-purchase graph: bipartite projection, assortativity, BFS reach
 # ---------------------------------------------------------------------------
 
-_OP = "SELECT DISTINCT l_orderkey, l_partkey FROM lineitem"
+def _copurchase_pairs(d: str) -> str:
+    """The co-purchase pair table pw(src, dst, n_orders): part pairs
+    (src < dst) with the number of orders holding both. One self-join on
+    l_orderkey over DISTINCT (order, part): fan-out bounded by basket size."""
+    return """
+    WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
+    SELECT a.l_partkey AS src, b.l_partkey AS dst,
+        cast(count(*) as bigint) AS n_orders
+    FROM op a JOIN op b
+        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+    GROUP BY a.l_partkey, b.l_partkey
+    """
 
 
-def _copurchase_edges() -> str:
+def _copurchase_edges(d: str) -> str:
     """Directed-symmetric distinct co-purchase edges (both orientations)."""
     return f"""
-    op AS ({_OP}),
-    pe AS (
-        SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-        FROM op a JOIN op b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
+    pe AS (SELECT src, dst FROM ({_copurchase_pairs(d)}) pw),
     sym AS (
         SELECT src, dst FROM pe UNION ALL SELECT dst AS src, src AS dst FROM pe
     )
@@ -316,13 +322,9 @@ def _copurchase_edges() -> str:
 
 def _bipartite(d: str) -> str:
     return f"""
-    WITH op AS ({_OP}),
-    e AS (
-        SELECT a.l_partkey AS part_a, b.l_partkey AS part_b,
-            cast(count(*) as bigint) AS n_orders
-        FROM op a JOIN op b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY a.l_partkey, b.l_partkey
+    WITH e AS (
+        SELECT src AS part_a, dst AS part_b, n_orders
+        FROM ({_copurchase_pairs(d)}) pw
     )
     SELECT cast(rn as bigint) AS rn, part_a, part_b, n_orders
     FROM (
@@ -349,7 +351,7 @@ pair(
 
 def _assortativity(d: str) -> str:
     return f"""
-    WITH {_copurchase_edges()},
+    WITH {_copurchase_edges(d)},
     deg AS (
         SELECT src AS node, cast(count(DISTINCT dst) as bigint) AS deg
         FROM sym GROUP BY src
@@ -398,21 +400,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    op = (
-        static_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = op.alias("a"), op.alias("b")
-    pe = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .distinct()
-    )
+    pe = spark.sql(_copurchase_pairs(SPARK)).select("src", "dst")
     sym = pe.unionByName(
         pe.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint()
@@ -479,7 +467,7 @@ def _bfs_oracle(d: str) -> str:
             f" cast(count(*) as bigint) AS n_reached FROM {t}"
         )
     return (
-        f"WITH {_copurchase_edges()}, {', '.join(ctes)} "
+        f"WITH {_copurchase_edges(d)}, {', '.join(ctes)} "
         + " UNION ALL ".join(hops)
         + " ORDER BY hop"
     )
@@ -498,21 +486,7 @@ def _bfs_oracle(d: str) -> str:
 def graph_bfs_frontier3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    op = (
-        static_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = op.alias("a"), op.alias("b")
-    pe = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .distinct()
-    )
+    pe = spark.sql(_copurchase_pairs(SPARK)).select("src", "dst")
     sym = pe.unionByName(
         pe.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint()

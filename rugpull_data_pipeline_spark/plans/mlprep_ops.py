@@ -56,6 +56,7 @@ from __future__ import annotations
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
+from .llm_ops import _cosine, _mh_sh_hashed
 from .registry import pair, register, static_table
 
 
@@ -503,7 +504,18 @@ pair(
 # ---------------------------------------------------------------------------
 
 
-def _mmr_diversify(d: str, cand_src: str | None = None) -> str:
+def _mmr_pool(d: str) -> str:
+    """The 32-vector candidate pool with each member's relevance."""
+    rel = _cosine(d, "q.embedding", "c.embedding")
+    return f"""
+        SELECT c.vec_id, c.embedding, {rel} AS rel
+        FROM embeddings c,
+            (SELECT embedding FROM embeddings WHERE vec_id = 100) q
+        WHERE c.vec_id < 32
+    """
+
+
+def _mmr_diversify(d: str, cand: str) -> str:
     # MMR (Carbonell & Goldstein 1998): greedily pick argmax of
     # rel(c) - λ·max_{s∈selected} sim(c, s), λ=0.5, k=3, over a 32-vector
     # candidate pool (MMR is a RE-RANK step — the pool is the small output
@@ -512,28 +524,14 @@ def _mmr_diversify(d: str, cand_src: str | None = None) -> str:
     # the selected set against the pool, exactly like the reference's
     # in-process watch-set lookup. Cosines use the engine-identical
     # index-order fold (llm_ops._cosine), so the argmax ties break the same.
-    from .llm_ops import _cosine
-
-    # ``cand_src`` lets the Spark builder checkpoint the 32-row candidate
-    # pool: inlined, every greedy step (s1 thrice, r2/r3) re-planned the
-    # pool scan (14 fact scans planned — the round-11 registry-wide plan
-    # audit; each was filter-pruned to the pool, but 14 scans of anything
-    # is not the plan you'd want).
-    rel = _cosine(d, "q.embedding", "c.embedding")
+    # ``cand`` is shared: inlined, every greedy step (s1 thrice, r2/r3)
+    # re-planned the pool scan (14 fact scans planned — the round-11
+    # registry-wide plan audit; each was filter-pruned to the pool, but 14
+    # scans of anything is not the plan you'd want).
     cs1 = _cosine(d, "c.embedding", "a.embedding")
     cs2 = _cosine(d, "c.embedding", "b.embedding")
-    cand_body = (
-        cand_src
-        if cand_src is not None
-        else f"""
-        SELECT c.vec_id, c.embedding, {rel} AS rel
-        FROM embeddings c,
-            (SELECT embedding FROM embeddings WHERE vec_id = 100) q
-        WHERE c.vec_id < 32
-    """
-    )
     return f"""
-    WITH cand AS ({cand_body}),
+    WITH cand AS ({cand}),
     s1 AS (SELECT * FROM cand ORDER BY rel DESC, vec_id LIMIT 1),
     r2 AS (
         SELECT c.vec_id, c.embedding, c.rel,
@@ -560,9 +558,10 @@ def _mmr_diversify(d: str, cand_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "sim_mmr_diversify",
-    oracle=_mmr_diversify(DUCK),
+    _mmr_diversify,
+    shared={"cand": _mmr_pool},
     tags=("similarity", "mlprep"),
     doc="Maximal Marginal Relevance re-rank (Carbonell & Goldstein 1998): "
     "greedy k=3, λ=0.5 diversified selection over a 32-vector ANN "
@@ -572,22 +571,6 @@ def _mmr_diversify(d: str, cand_src: str | None = None) -> str:
     "the corpus — bounds every step). The pool is localCheckpointed so "
     "the retrieval scan runs once instead of per greedy step.",
 )
-def sim_mmr_diversify(spark, sf_dir):
-    from .llm_ops import _cosine
-
-    rel = _cosine(SPARK, "q.embedding", "c.embedding")
-    cand = spark.sql(
-        f"SELECT c.vec_id, c.embedding, {rel} AS rel"
-        " FROM embeddings c,"
-        " (SELECT embedding FROM embeddings WHERE vec_id = 100) q"
-        " WHERE c.vec_id < 32"
-    ).localCheckpoint()
-    return spark.sql(
-        _mmr_diversify(
-            SPARK, cand_src="SELECT vec_id, embedding, rel FROM {cand}"
-        ),
-        cand=cand,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1224,7 +1207,7 @@ def graph_hits_power3(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _minhash_audit(d: str, sh_src: str | None = None) -> str:
+def _minhash_audit(d: str, sh: str) -> str:
     # The dedup pipeline trusts the 16-hash MinHash signature to route
     # near-dup candidates; this audit measures what that trust costs. Both
     # the estimate (matching signature positions / 16) and the exact Jaccard
@@ -1233,77 +1216,19 @@ def _minhash_audit(d: str, sh_src: str | None = None) -> str:
     # bound used: 0.25 = 2 sigma worst-case). Everything is exact rational
     # arithmetic on the cross-engine portable hash, so the audit itself
     # hash-compares.
-    from .llm_ops import (
-        _BAND_SIZE,
-        _LSH_BUCKET_CAP,
-        _MINHASH_AB,
-        _MINHASH_P,
-        _N_HASHES,
-        _ngram_shingles,
-    )
+    from .llm_ops import _N_HASHES, _mh_bands, _mh_jaccard
 
-    shh = S.portable_hash64("sh", d)
-    min_cols = ",\n            ".join(
-        f"min(({a} * m + {b}) % {_MINHASH_P}) AS h{j}"
-        for j, (a, b) in enumerate(_MINHASH_AB)
-    )
-    band_keys = ", ".join(
-        "md5(concat_ws(',', "
-        + ", ".join(f"h{4 * band + r}" for r in range(_BAND_SIZE))
-        + "))"
-        for band in range(_N_HASHES // _BAND_SIZE)
-    )
     n_match = " + ".join(
         f"(case when a.h{j} = b.h{j} then 1 else 0 end)" for j in range(_N_HASHES)
     )
-    if d == SPARK:
-        bands = f"""
-        SELECT doc_id, band, band_key
-        FROM sigs
-        LATERAL VIEW posexplode(array({band_keys})) AS band, band_key
-        """
-        doc_sets = (
-            "SELECT doc_id, collect_set(shh) AS shs FROM sh_hashed GROUP BY doc_id"
-        )
-        n_inter = "size(array_intersect(sa.shs, sb.shs))"
-        n_a, n_b = "size(sa.shs)", "size(sb.shs)"
-    else:
-        bands = f"""
-        SELECT doc_id, i AS band, [{band_keys}][i + 1] AS band_key
-        FROM sigs, unnest(range(0, {_N_HASHES // _BAND_SIZE})) t(i)
-        """
-        doc_sets = (
-            "SELECT doc_id, list(DISTINCT shh) AS shs FROM sh_hashed GROUP BY doc_id"
-        )
-        n_inter = "len(list_intersect(sa.shs, sb.shs))"
-        n_a, n_b = "len(sa.shs)", "len(sb.shs)"
-    jacc = f"cast({n_inter} as double) / ({n_a} + {n_b} - {n_inter})"
+    doc_sets, jacc = _mh_jaccard(d)
     est = f"cast(({n_match}) as double) / {_N_HASHES}"
 
-    # ``sh_src`` lets the Spark builder checkpoint the hashed-shingle
-    # table: inlined, sigs (consumed 3x) and doc_sets each re-ran the
-    # shingle explode (6 fact scans planned - the round-11
-    # registry-wide plan audit).
+    # ``sh`` (the hashed-shingle table) is shared: inlined, sigs (consumed
+    # 3x) and doc_sets each re-ran the shingle explode (6 fact scans
+    # planned - the round-11 registry-wide plan audit).
     return f"""
-    WITH sh_hashed AS ({sh_src if sh_src is not None else f'''
-        SELECT doc_id, {shh} AS shh FROM ({_ngram_shingles(d)}) raw
-    '''}),
-    sigs AS (
-        SELECT doc_id,
-            {min_cols}
-        FROM (SELECT doc_id, shh % {_MINHASH_P} AS m FROM sh_hashed) t
-        GROUP BY doc_id
-    ),
-    bands AS (
-        {bands}
-    ),
-    bands_capped AS (
-        SELECT doc_id, band, band_key FROM (
-            SELECT doc_id, band, band_key,
-                count(*) OVER (PARTITION BY band, band_key) AS bsz
-            FROM bands
-        ) f WHERE bsz <= {_LSH_BUCKET_CAP}
-    ),
+    WITH sh_hashed AS ({sh}),{_mh_bands(d)},
     candidates AS (
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM bands_capped a
@@ -1331,9 +1256,10 @@ def _minhash_audit(d: str, sh_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "audit_minhash_estimate",
-    oracle=_minhash_audit(DUCK),
+    _minhash_audit,
+    shared={"sh": _mh_sh_hashed},
     tags=("dedup", "audit", "sketch"),
     doc="Sketch-accuracy audit: for every LSH candidate pair, the 16-hash "
     "MinHash Jaccard estimate (matching signature positions / 16) next to "
@@ -1346,17 +1272,6 @@ def _minhash_audit(d: str, sh_src: str | None = None) -> str:
     "audit hash-compares across engines. The hashed-shingle table is "
     "localCheckpointed so the explode runs once.",
 )
-def audit_minhash_estimate(spark, sf_dir):
-    from .llm_ops import _ngram_shingles
-
-    shh = S.portable_hash64("sh", SPARK)
-    sh = spark.sql(
-        f"SELECT doc_id, {shh} AS shh FROM ({_ngram_shingles(SPARK)}) raw"
-    ).localCheckpoint()
-    return spark.sql(
-        _minhash_audit(SPARK, sh_src="SELECT doc_id, shh FROM {sh}"),
-        sh=sh,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1414,8 +1329,6 @@ pair(
 
 
 def _knn_classify(d: str) -> str:
-    from .llm_ops import _cosine
-
     cos = _cosine(d, "q.embedding", "c.embedding")
     return f"""
     WITH queries AS (

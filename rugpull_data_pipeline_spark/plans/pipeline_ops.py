@@ -313,21 +313,31 @@ def _emb_dims(d: str, where: str = "") -> str:
     )
 
 
-def _ivfpq_topk(
-    d: str,
-    pv_src: str | None = None,
-    cb_src: str | None = None,
-    cents_src: str | None = None,
-) -> str:
-    # ``pv_src``/``cb_src``/``cents_src`` let the Spark builder checkpoint
-    # the subvector table, the PQ codebook, and the coarse centroids —
-    # the three index artifacts a real IVFADC build persists: inlined,
-    # their consumers re-ran the vector quantization per reference
-    # (6 fact scans planned — the round-11 registry-wide plan audit).
+def _ivfpq_subvectors(d: str) -> str:
+    """(vec_id, label, s, pv): each vector's _PQ_M fixed-point subvectors."""
     iv = S.int_vec("embedding", d)
     if d == SPARK:
         sub = f"slice(v, s * {_PQ_DSUB} + 1, {_PQ_DSUB})"
         lateral = f"LATERAL VIEW explode(sequence(0, {_PQ_M - 1})) t AS s"
+    else:
+        sub = f"v[s * {_PQ_DSUB} + 1 : (s + 1) * {_PQ_DSUB}]"
+        lateral = f", unnest(range(0, {_PQ_M})) t(s)"
+    return (
+        f"SELECT vec_id, label, s, {sub} AS pv"
+        f" FROM (SELECT vec_id, label, {iv} AS v FROM embeddings) iv {lateral}"
+    )
+
+
+def _ivfpq_topk(d: str, pv: str) -> str:
+    # ``pv`` (the subvector table, the index artifact a real IVFADC build
+    # persists) is shared: inlined, its consumers re-ran the vector
+    # quantization per reference (6 fact scans planned — the round-11
+    # registry-wide plan audit). The 32-row codebook (_PQ_K x _PQ_M)
+    # derives from it by filter; the coarse centroids have a single
+    # consumer (the coarse-routing join), so neither is shared (r13:
+    # checkpointing them cost two materialization jobs and bought nothing;
+    # interleaved median 1.421 -> 0.982 s at sf0.1, byte-identical output).
+    if d == SPARK:
         l2_pc = (
             "aggregate(zip_with(p.pv, c.cv, (x, y) -> (x - y) * (x - y)), "
             "cast(0 as bigint), (acc, e) -> acc + e)"
@@ -337,8 +347,6 @@ def _ivfpq_topk(
             "cast(0 as bigint), (acc, e) -> acc + e)"
         )
     else:
-        sub = f"v[s * {_PQ_DSUB} + 1 : (s + 1) * {_PQ_DSUB}]"
-        lateral = f", unnest(range(0, {_PQ_M})) t(s)"
         l2_pc = (
             "cast(list_sum(list_transform(list_zip(p.pv, c.cv), "
             "e -> (e[1] - e[2]) * (e[1] - e[2]))) as bigint)"
@@ -348,14 +356,11 @@ def _ivfpq_topk(
             "e -> (e[1] - e[2]) * (e[1] - e[2]))) as bigint)"
         )
     return f"""
-    WITH iv AS (SELECT vec_id, label, {iv} AS v FROM embeddings),
-    pv AS ({pv_src if pv_src is not None else f'''
-        SELECT vec_id, label, s, {sub} AS pv FROM iv {lateral}
-    '''}),
-    cb AS ({cb_src if cb_src is not None else f'''
-        SELECT vec_id AS cid, s, {sub} AS cv FROM iv {lateral.replace(' t AS ', ' tc AS ') if d == SPARK else lateral}
+    WITH pv AS ({pv}),
+    cb AS (
+        SELECT vec_id AS cid, s, pv AS cv FROM pv
         WHERE vec_id BETWEEN 1 AND {_PQ_K}
-    '''}),
+    ),
     code_d AS (
         SELECT p.vec_id, p.label, p.s, c.cid, {l2_pc} AS d2
         FROM pv p JOIN cb c ON p.s = c.s
@@ -368,11 +373,11 @@ def _ivfpq_topk(
             FROM code_d
         ) x WHERE rn = 1
     ),
-    centroids AS ({cents_src if cents_src is not None else f'''
+    centroids AS (
         SELECT label, dim,
             cast(sum(cast(v as decimal(38,9))) as double) / count(*) AS c
         FROM ({_emb_dims(d)}) emb_dims GROUP BY label, dim
-    '''}),
+    ),
     q_dims AS (
         SELECT vec_id AS query_id, dim, v
         FROM ({_emb_dims(d)}) e WHERE vec_id < 5
@@ -420,9 +425,10 @@ def _ivfpq_topk(
     """
 
 
-@register(
+pair(
     "sim_ivfpq_topk",
-    oracle=_ivfpq_topk(DUCK),
+    _ivfpq_topk,
+    shared={"pv": _ivfpq_subvectors},
     tags=("similarity",),
     doc="IVFADC — the combined IVF + PQ billion-scale ANN query (Jégou et "
     "al. 2011): the coarse quantizer (label-mean centroids, broadcast) "
@@ -439,34 +445,6 @@ def _ivfpq_topk(
     "— the three persisted index artifacts — so the quantization runs "
     "once, not per consumer.",
 )
-def sim_ivfpq_topk(spark, sf_dir):
-    # One checkpoint, not three (r13): the codebook is 32 rows
-    # (_PQ_K x _PQ_M) and derives from the checkpointed subvector table by
-    # filter — its own embeddings re-scan + explode + checkpoint job were
-    # pure overhead; the coarse centroids have a single consumer (the
-    # coarse-routing join), so checkpointing them bought nothing and cost a
-    # materialization job (the same single-consumer class as the r13
-    # minhash-incremental sigs fix). Interleaved median 1.421 -> 0.982 s
-    # at sf0.1, byte-identical output.
-    iv = S.int_vec("embedding", SPARK)
-    sub = f"slice(v, s * {_PQ_DSUB} + 1, {_PQ_DSUB})"
-    lateral = f"LATERAL VIEW explode(sequence(0, {_PQ_M - 1})) t AS s"
-    base = f"(SELECT vec_id, label, {iv} AS v FROM embeddings) iv"
-    pv = spark.sql(
-        f"SELECT vec_id, label, s, {sub} AS pv FROM {base} {lateral}"
-    ).localCheckpoint()
-    return spark.sql(
-        _ivfpq_topk(
-            SPARK,
-            pv_src="SELECT vec_id, label, s, pv FROM {pv}",
-            cb_src=(
-                "SELECT vec_id AS cid, s, pv AS cv FROM {pv}"
-                f" WHERE vec_id BETWEEN 1 AND {_PQ_K}"
-            ),
-            cents_src=None,
-        ),
-        pv=pv,
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -28,7 +28,7 @@ Scale notes:
 from __future__ import annotations
 
 from ..functions import scalars as S
-from ..functions.scalars import DUCK, SPARK
+from ..functions.scalars import SPARK
 from ..tmpdirs import scratch_dir
 from .registry import pair, register
 
@@ -152,8 +152,23 @@ pair(
 # ---------------------------------------------------------------------------
 
 
-def _semantic_dedup(d: str, iv_src: str | None = None) -> str:
-    iv = S.int_vec("embedding", d)
+def _semantic_iv(d: str) -> str:
+    """(vec_id, v, n2): each embedding as its fixed-point int vector and
+    squared norm — the one quantization pass."""
+    if d == SPARK:
+        nrm = (
+            "aggregate(transform(v, x -> x * x), "
+            "cast(0 as bigint), (acc, e) -> acc + e)"
+        )
+    else:
+        nrm = "cast(list_sum(list_transform(v, x -> x * x)) as bigint)"
+    return f"""
+        SELECT vec_id, v, {nrm} AS n2
+        FROM (SELECT vec_id, {S.int_vec("embedding", d)} AS v FROM embeddings) raw
+    """
+
+
+def _semantic_dedup(d: str, iv: str) -> str:
     if d == SPARK:
         l2 = (
             "aggregate(zip_with(p.v, c.cv, (x, y) -> (x - y) * (x - y)), "
@@ -161,10 +176,6 @@ def _semantic_dedup(d: str, iv_src: str | None = None) -> str:
         )
         dot = (
             "aggregate(zip_with(m.v, k.v, (x, y) -> x * y), "
-            "cast(0 as bigint), (acc, e) -> acc + e)"
-        )
-        nrm = (
-            "aggregate(transform({v}, x -> x * x), "
             "cast(0 as bigint), (acc, e) -> acc + e)"
         )
     else:
@@ -176,7 +187,6 @@ def _semantic_dedup(d: str, iv_src: str | None = None) -> str:
             "cast(list_sum(list_transform(list_zip(m.v, k.v), "
             "s -> s[1] * s[2])) as bigint)"
         )
-        nrm = "cast(list_sum(list_transform({v}, x -> x * x)) as bigint)"
     # nullif: a zero vector has a 0 norm — ANSI Spark THROWS on the
     # division where DuckDB returns NULL; the >= 0.95 CASE then lands in
     # ELSE (not-a-dup) identically on both engines.
@@ -185,15 +195,11 @@ def _semantic_dedup(d: str, iv_src: str | None = None) -> str:
         f"nullif(sqrt(cast(m.n2 as double)) * sqrt(cast(k.n2 as double)), "
         f"cast(0 as double)), 6)"
     )
-    # ``iv_src`` lets the Spark builder checkpoint the int-vector table:
-    # inlined, cents/assigned and the member/keeper join sides each
-    # re-ran the vector quantization (6 fact scans planned — the
+    # ``iv`` is shared: inlined, cents/assigned and the member/keeper join
+    # sides each re-ran the vector quantization (6 fact scans planned — the
     # round-11 registry-wide plan audit).
     return f"""
-    WITH iv AS ({iv_src if iv_src is not None else f'''
-        SELECT vec_id, v, {nrm.format(v='v')} AS n2
-        FROM (SELECT vec_id, {iv} AS v FROM embeddings) raw
-    '''}),
+    WITH iv AS ({iv}),
     cents AS (
         SELECT vec_id AS cid, v AS cv FROM iv WHERE vec_id < {_N_CENTROIDS}
     ),
@@ -280,9 +286,10 @@ pair(
 )
 
 
-@register(
+pair(
     "dedup_semantic_cluster",
-    oracle=_semantic_dedup(DUCK),
+    _semantic_dedup,
+    shared={"iv": _semantic_iv},
     tags=("dedup", "similarity"),
     doc="SemDeDup (Abbas et al. 2023): assign every embedding to its "
     "nearest of 8 fixed centroids (exact integer L2, deterministic "
@@ -293,22 +300,6 @@ pair(
     "hash-join plan holds. The int-vector table is localCheckpointed so "
     "the quantization pass runs once.",
 )
-def dedup_semantic_cluster(spark, sf_dir):
-    ivx = S.int_vec("embedding", SPARK)
-    nrm2 = (
-        "aggregate(transform(v, x -> x * x), "
-        "cast(0 as bigint), (acc, e) -> acc + e)"
-    )
-    ivdf = spark.sql(
-        f"SELECT vec_id, v, {nrm2} AS n2"
-        f" FROM (SELECT vec_id, {ivx} AS v FROM embeddings) raw"
-    ).localCheckpoint()
-    return spark.sql(
-        _semantic_dedup(
-            SPARK, iv_src="SELECT vec_id, v, n2 FROM {ivdf}"
-        ),
-        ivdf=ivdf,
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -10,6 +10,7 @@ SQL-expressible, a DuckDB oracle string over the same parquet tables.
 from __future__ import annotations
 
 import glob
+import inspect
 import json
 import os
 import re
@@ -114,7 +115,7 @@ def pair(
     q: Callable[..., str],
     tags: tuple[str, ...] = (),
     doc: str = "",
-    shared: dict[str, Callable[[str], str]] | None = None,
+    shared: dict[str, Callable[..., str]] | None = None,
 ) -> None:
     """Register ``q(dialect, **shared_cores) -> SQL text`` as its
     Spark/DuckDB pair.
@@ -124,22 +125,57 @@ def pair(
     ``WITH`` CTE once per consumer, so each core is built once and eagerly
     ``localCheckpoint``ed, and ``q`` reads it as ``SELECT * FROM {name}``.
     DuckDB materializes CTEs itself, so the oracle inlines ``core(DUCK)``.
-    This is the one place that policy lives."""
+    This is the one place that policy lives.
+
+    Cores may depend on each other: ``shared`` is ordered, and a core
+    ``core(dialect, **earlier)`` names the earlier cores it reads as
+    parameters after the dialect, receiving each as query text exactly like
+    ``q`` does. Spark checkpoints the cores in order, each reading the
+    earlier frames; the oracle nests the earlier ``core(DUCK)`` texts.
+    ``q`` too receives only the cores its signature names, so a core read
+    only by later cores stays out of ``q``. Naming an unknown or later core
+    raises at registration."""
     shared = shared or {}
     if not shared:
         sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
         return
-    text = q(SPARK, **{k: f"SELECT * FROM {{{k}}}" for k in shared})
+    names = list(shared)
+    reads = {
+        k: _reads(name, core, names[:i]) for i, (k, core) in enumerate(shared.items())
+    }
+    q_reads = _reads(name, q, names)
+    ref = {k: f"SELECT * FROM {{{k}}}" for k in names}
+    core_text = {
+        k: core(SPARK, **{e: ref[e] for e in reads[k]}) for k, core in shared.items()
+    }
+    text = q(SPARK, **{k: ref[k] for k in q_reads})
 
     def builder(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ensure_views(spark, sf_dir)
-        frames = {
-            k: spark.sql(core(SPARK)).localCheckpoint() for k, core in shared.items()
-        }
-        return spark.sql(text, **frames)
+        frames: dict[str, DataFrame] = {}
+        for k in names:
+            frames[k] = spark.sql(
+                core_text[k], **{e: frames[e] for e in reads[k]}
+            ).localCheckpoint()
+        return spark.sql(text, **{k: frames[k] for k in q_reads})
 
-    oracle = q(DUCK, **{k: core(DUCK) for k, core in shared.items()})
+    duck: dict[str, str] = {}
+    for k, core in shared.items():
+        duck[k] = core(DUCK, **{e: duck[e] for e in reads[k]})
+    oracle = q(DUCK, **{k: duck[k] for k in q_reads})
     _REGISTRY[name] = QuerySpec(name, builder, oracle, tags, doc)
+
+
+def _reads(name: str, fn: Callable[..., str], known: list[str]) -> list[str]:
+    """The shared cores ``fn(dialect, ...)`` reads: its parameters after the
+    dialect, each of which must name one of ``known``."""
+    params = list(inspect.signature(fn).parameters)[1:]
+    bad = [p for p in params if p not in known]
+    if bad:
+        raise ValueError(
+            f"{name}: {fn.__name__} reads {bad}, not among the cores before it {known}"
+        )
+    return params
 
 
 def get(name: str) -> QuerySpec:

@@ -27,11 +27,11 @@ from __future__ import annotations
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
-from .analytics_ops import _W_EDGE, _pw_df, _weighted_edges_sql
+from .analytics_ops import _weighted_edges_sql
 from .diagnostics_ops import _EV_CENTS, _cents, _r6u
 from .llm_ops import _word_tokens_all
-from .mining_ops import _day_idx
-from .registry import pair, register, sql_pair
+from .mining_ops import _copurchase_pairs, _day_idx
+from .registry import pair, sql_pair
 
 
 # ---------------------------------------------------------------------------
@@ -349,20 +349,13 @@ _QCASES = " ".join(
 
 # Shared exact side: cents grid -> cumulative counts -> per-(type, q)
 # bracketing order statistics at positions floor/ceil(q * (n - 1)).
-# ``g_src`` lets the Spark builder checkpoint the cents grid (the same
-# grid as _mwu_core): inlined, the exact side's consumers re-ran the
-# fact hash-agg (4 fact scans planned — the round-11 plan audit); the
-# GK sketch pass itself must eat raw rows, so ``sl`` stays.
-def _qsketch_exact(g_src: str | None = None) -> str:
+# ``g`` (the same grid as _mwu_core) is shared: inlined, the exact side's
+# consumers re-ran the fact hash-agg (4 fact scans planned — the round-11
+# plan audit); the GK sketch pass itself must eat raw rows, so the Spark
+# side keeps its own ``sl`` pass.
+def _qsketch_exact(g: str) -> str:
     return f"""
-    sl AS (
-        SELECT event_type, {_EV_CENTS} AS s
-        FROM events WHERE value IS NOT NULL AND value >= 0
-    ),
-    g AS ({g_src if g_src is not None else '''
-        SELECT event_type, s, cast(count(*) as bigint) AS c
-        FROM sl GROUP BY event_type, s
-    '''}),
+    g AS ({g}),
     cum AS (
         SELECT event_type, s, c,
             cast(sum(c) OVER (PARTITION BY event_type ORDER BY s)
@@ -394,10 +387,24 @@ def _qsketch_exact(g_src: str | None = None) -> str:
 """
 
 
-def _qsketch_spark(g_src: str | None = None) -> str:
+def _qsketch(d: str, g: str) -> str:
+    if d == DUCK:
+        return f"""
+    WITH {_qsketch_exact(g)}
+    SELECT event_type, cast(q_pct as bigint) AS q_pct, n,
+        cast(exact_lo as bigint) AS exact_lo_cents,
+        cast(exact_hi as bigint) AS exact_hi_cents,
+        1 AS within_bound
+    FROM exact
+    ORDER BY event_type, q_pct
+    """
     eps = "cast(10000 as double)"  # accuracy parameter -> eps = n/10000
     return f"""
-    WITH {_qsketch_exact(g_src)},
+    WITH sl AS (
+        SELECT event_type, {_EV_CENTS} AS s
+        FROM events WHERE value IS NOT NULL AND value >= 0
+    ),
+    {_qsketch_exact(g)},
     ap AS (
         SELECT event_type,
             approx_percentile(s, array(0.25D, 0.5D, 0.75D, 0.9D), 10000)
@@ -433,18 +440,6 @@ def _qsketch_spark(g_src: str | None = None) -> str:
     FROM exact e
     JOIN acnt ac ON ac.event_type = e.event_type AND ac.q_pct = e.q_pct
     ORDER BY e.event_type, q_pct
-    """
-
-
-def _qsketch_duck() -> str:
-    return f"""
-    WITH {_qsketch_exact()}
-    SELECT event_type, cast(q_pct as bigint) AS q_pct, n,
-        cast(exact_lo as bigint) AS exact_lo_cents,
-        cast(exact_hi as bigint) AS exact_hi_cents,
-        1 AS within_bound
-    FROM exact
-    ORDER BY event_type, q_pct
     """
 
 
@@ -488,9 +483,10 @@ def _dsketch_duck() -> str:
     """
 
 
-@register(
+pair(
     "audit_quantile_sketch",
-    oracle=_qsketch_duck(),
+    _qsketch,
+    shared={"g": _mwu_core},
     tags=("audit", "sketch"),
     doc="Sketch-vs-exact quantile audit: Spark's approx_percentile "
     "(GK summary, accuracy 10000) is rank-checked against the exact "
@@ -504,12 +500,6 @@ def _dsketch_duck() -> str:
     "parallelism. The cents grid is localCheckpointed so the exact "
     "side shares ONE fact scan (the GK pass keeps its own raw pass).",
 )
-def audit_quantile_sketch(spark, sf_dir):
-    g = spark.sql(_mwu_core(SPARK)).localCheckpoint()
-    return spark.sql(
-        _qsketch_spark(g_src="SELECT event_type, s, c FROM {g}"),
-        g=g,
-    )
 
 
 def _register_sketch_audits() -> None:
@@ -883,25 +873,15 @@ pair(
 # ---------------------------------------------------------------------------
 
 
-def _rich_club(d: str, pw_src: str | None = None) -> str:
-    # ``pw_src`` lets the Spark builder checkpoint the pair-weight edge
-    # table: inlined, deg/ed/nk/ek each re-derived the co-purchase
-    # self-join (14 lineitem scans planned — the round-11 plan audit's
-    # worst remaining offender after the first checkpoint pass).
+def _rich_club(d: str, pw: str) -> str:
+    # ``pw`` is shared: inlined, deg/ed/nk/ek each re-derived the
+    # co-purchase self-join (14 lineitem scans planned — the round-11 plan
+    # audit's worst remaining offender after the first checkpoint pass).
     ths = " UNION ALL ".join(
         f"SELECT cast({t} as bigint) AS thr, 1 AS k" for t in (1, 2, 4, 8, 16, 32)
     )
-    edges = (
-        f"""pw AS ({pw_src}),
-    wsym AS (
-        SELECT src, dst, {_W_EDGE} AS w FROM pw
-        UNION ALL SELECT dst AS src, src AS dst, {_W_EDGE} AS w FROM pw
-    )"""
-        if pw_src is not None
-        else _weighted_edges_sql()
-    )
     return f"""
-    WITH {edges},
+    WITH {_weighted_edges_sql(pw)},
     deg AS (
         SELECT src AS node, cast(count(*) as bigint) AS degree, 1 AS k
         FROM wsym GROUP BY src
@@ -938,9 +918,10 @@ def _rich_club(d: str, pw_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "graph_rich_club",
-    oracle=_rich_club(DUCK),
+    _rich_club,
+    shared={"pw": _copurchase_pairs},
     tags=("graph",),
     doc="Rich-club coefficient of the co-purchase graph at degree "
     "thresholds 1..32: R(k) = 2 E_k / (N_k (N_k - 1)) where N_k = nodes "
@@ -952,12 +933,6 @@ def _rich_club(d: str, pw_src: str | None = None) -> str:
     "is localCheckpointed so the co-purchase self-join runs once "
     "(inlined it ran 7x = 14 fact scans).",
 )
-def graph_rich_club(spark, sf_dir):
-    pw = _pw_df(spark, sf_dir).localCheckpoint()
-    return spark.sql(
-        _rich_club(SPARK, pw_src="SELECT src, dst, n_orders FROM {pw}"),
-        pw=pw,
-    )
 
 
 # ---------------------------------------------------------------------------

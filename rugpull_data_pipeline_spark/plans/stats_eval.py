@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
+from .llm_ops import _lsh_buckets
 from .registry import pair, register
 
 
@@ -663,17 +664,17 @@ def sim_pca_power1(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _ann_recall(d: str, buckets_src: str | None = None) -> str:
+def _ann_recall(d: str, buckets: str) -> str:
     from .llm_ops import _sim_lsh_hyperplane, _sim_topk
 
-    # ``buckets_src`` is threaded into the embedded ANN pipeline so the
-    # Spark builder's checkpointed bucket table serves both the audit's
-    # ANN side and its candidate join (8 fact scans planned inlined —
-    # the round-11 registry-wide plan audit; the brute-force exact side
-    # keeps its own self-join, which IS the ground truth being audited).
+    # ``buckets`` is threaded into the embedded ANN pipeline so the Spark
+    # builder's checkpointed bucket table serves both the audit's ANN side
+    # and its candidate join (8 fact scans planned inlined — the round-11
+    # registry-wide plan audit; the brute-force exact side keeps its own
+    # self-join, which IS the ground truth being audited).
     return f"""
     WITH exact AS ({_sim_topk(d)}),
-    ann AS ({_sim_lsh_hyperplane(d, buckets_src=buckets_src)}),
+    ann AS ({_sim_lsh_hyperplane(d, buckets)}),
     per AS (
         SELECT e.query_id, count(*) AS k_exact, count(a.vec_id) AS hits
         FROM exact e
@@ -691,7 +692,7 @@ def _ann_recall(d: str, buckets_src: str | None = None) -> str:
 
 @register(
     "audit_ann_recall",
-    oracle=_ann_recall(DUCK),
+    oracle=_ann_recall(DUCK, _lsh_buckets(DUCK)),
     tags=("similarity", "audit"),
     doc="ANN quality audit: recall@10 of sim_lsh_hyperplane_ann against the "
     "sim_cosine_topk_bruteforce ground truth, per query — the measurement "
@@ -705,12 +706,7 @@ def _ann_recall(d: str, buckets_src: str | None = None) -> str:
 )
 def audit_ann_recall(spark, sf_dir):
     b = _lsh_buckets_df(spark, sf_dir).localCheckpoint()
-    return spark.sql(
-        _ann_recall(
-            SPARK, buckets_src="SELECT vec_id, bucket FROM {b}"
-        ),
-        b=b,
-    )
+    return spark.sql(_ann_recall(SPARK, "SELECT vec_id, bucket FROM {b}"), b=b)
 
 
 # ---------------------------------------------------------------------------
@@ -1173,45 +1169,6 @@ def _lsh_buckets_df(spark, sf_dir):
     """, emb=emb)
 
 
-def _lsh_buckets(d: str) -> str:
-    """(vec_id, bucket) — identical construction to sim_lsh_hyperplane_ann
-    (llm_ops), so this audits exactly that operator's bucketing."""
-    from .llm_ops import _N_PLANES, _emb_dims
-
-    sign_h = S.portable_hash64(
-        "concat('hp-', cast(j as string), ':', cast(dim as string))", d
-    )
-    if d == SPARK:
-        jseq = f"SELECT explode(sequence(0, {_N_PLANES - 1})) AS j"
-        dimseq = (
-            "SELECT explode(sequence(1, "
-            "(SELECT max(size(embedding)) FROM embeddings))) AS dim"
-        )
-    else:
-        jseq = f"SELECT unnest(range(0, {_N_PLANES})) AS j"
-        dimseq = (
-            "SELECT unnest(range(1, "
-            "(SELECT max(len(embedding)) FROM embeddings) + 1)) AS dim"
-        )
-    return f"""
-    SELECT vec_id,
-        cast(sum({S.shift_left('cast(bit as bigint)', 'j', d)}) as bigint)
-            AS bucket
-    FROM (
-        SELECT e.vec_id, p.j,
-            CASE WHEN sum(cast(e.v * p.s as decimal(38,9))) >= 0
-                 THEN 1 ELSE 0 END AS bit
-        FROM ({_emb_dims(d)}) e
-        JOIN (
-            SELECT j, dim,
-                CASE WHEN {sign_h} % 2 = 1 THEN 1.0 ELSE -1.0 END AS s
-            FROM ({dimseq}) dims CROSS JOIN ({jseq}) js
-        ) p ON e.dim = p.dim
-        GROUP BY e.vec_id, p.j
-    ) bits GROUP BY vec_id
-    """
-
-
 def _multiprobe_queries_core(d: str) -> str:
     """The 5-row query table (id, embedding, home bucket)."""
     return """
@@ -1221,18 +1178,14 @@ def _multiprobe_queries_core(d: str) -> str:
     """
 
 
-def _multiprobe_recall(
-    d: str,
-    buckets_src: str | None = None,
-    queries_src: str | None = None,
-) -> str:
+def _multiprobe_recall(d: str, buckets: str, queries: str) -> str:
     from .llm_ops import _N_PLANES, _cosine, _sim_topk
 
-    # ``buckets_src``/``queries_src`` let the Spark builder checkpoint
-    # the bucket table (one row per vector) and the 5-row query table:
-    # inlined, the probes/cand/ranked fan-out re-derived the whole
-    # hyperplane-hash pipeline per consumer (26 fact scans planned — the
-    # round-11 registry-wide plan audit).
+    # ``buckets``/``queries`` are the bucket table (one row per vector) and
+    # the 5-row query table: the Spark builder passes its checkpoints, the
+    # oracle the SQL texts. Inlined, the probes/cand/ranked fan-out
+    # re-derived the whole hyperplane-hash pipeline per consumer (26 fact
+    # scans planned — the round-11 registry-wide plan audit).
     cos = _cosine(d, "q.embedding", "c.embedding")
     flip = S.bit_xor2("q.bucket", S.shift_left("cast(1 as bigint)", "i", d), d)
     probes = f"""
@@ -1244,9 +1197,8 @@ def _multiprobe_recall(
     """
     return f"""
     WITH exact AS ({_sim_topk(d)}),
-    buckets AS ({buckets_src if buckets_src is not None else _lsh_buckets(d)}),
-    queries AS ({queries_src if queries_src is not None
-                 else _multiprobe_queries_core(d)}),
+    buckets AS ({buckets}),
+    queries AS ({queries}),
     probes AS ({probes}),
     cand AS (
         SELECT DISTINCT p.query_id, p.embedding, cb.vec_id,
@@ -1297,7 +1249,9 @@ def _multiprobe_recall(
 
 @register(
     "audit_multiprobe_recall",
-    oracle=_multiprobe_recall(DUCK),
+    oracle=_multiprobe_recall(
+        DUCK, _lsh_buckets(DUCK), _multiprobe_queries_core(DUCK)
+    ),
     tags=("similarity", "audit"),
     doc="Multi-probe LSH audit (Lv et al. 2007): each query probes its home "
     "bucket PLUS the 4 Hamming-1 neighbor buckets (bucket XOR one plane "
@@ -1320,8 +1274,8 @@ def audit_multiprobe_recall(spark, sf_dir):
     return spark.sql(
         _multiprobe_recall(
             SPARK,
-            buckets_src="SELECT vec_id, bucket FROM {b}",
-            queries_src="SELECT query_id, embedding, bucket FROM {q}",
+            "SELECT vec_id, bucket FROM {b}",
+            "SELECT query_id, embedding, bucket FROM {q}",
         ),
         b=b,
         q=q,
@@ -2011,19 +1965,19 @@ pair(
 # ---------------------------------------------------------------------------
 
 
-def _modularity(
-    d: str, edges_src: str | None = None, labels_src: str | None = None
-) -> str:
-    if edges_src is None:
-        edges_src = _lpa_edges(d)
-    if labels_src is None:
-        body, prev = _lpa_chain(d, edges_src)
-    else:
-        # builder path: the LPA chain already ran and was materialized;
-        # the oracle path inlines the full chain instead.
-        body, prev = f"edges AS ({edges_src}), lfinal AS ({labels_src})", "lfinal"
+def _lpa_labels(d: str, edges: str) -> str:
+    """(node, label): the 2-round LPA assignment over the edge core."""
+    body, prev = _lpa_chain(d, edges)
+    return f"WITH {body} SELECT node, label FROM {prev}"
+
+
+def _modularity(d: str, edges: str, labels: str) -> str:
+    # ``edges`` and the final ``labels`` are shared: the label table's three
+    # consumers (intra x2, dsum) would each replay the two vote rounds
+    # otherwise (33 -> 12 Exchanges measured at sf0.1).
     return f"""
-    WITH {body},
+    WITH edges AS ({edges}),
+    lfinal AS ({labels}),
     deg AS (
         SELECT u AS node, cast(count(*) as bigint) AS dg
         FROM (SELECT u, v FROM edges
@@ -2034,8 +1988,8 @@ def _modularity(
     intra AS (
         SELECT lu.label AS community, cast(count(*) as bigint) AS m_c
         FROM edges e
-        JOIN {prev} lu ON lu.node = e.u
-        JOIN {prev} lv ON lv.node = e.v
+        JOIN lfinal lu ON lu.node = e.u
+        JOIN lfinal lv ON lv.node = e.v
         WHERE lu.label = lv.label
         GROUP BY lu.label
     ),
@@ -2043,7 +1997,7 @@ def _modularity(
         SELECT lab.label AS community,
             cast(count(*) as bigint) AS n_members,
             {S.isum('deg.dg', d)} AS d_c
-        FROM {prev} lab JOIN deg ON deg.node = lab.node
+        FROM lfinal lab JOIN deg ON deg.node = lab.node
         GROUP BY lab.label
     ),
     parts AS (
@@ -2071,9 +2025,10 @@ def _modularity(
     """
 
 
-@register(
+pair(
     "graph_community_modularity",
-    oracle=_modularity(DUCK),
+    _modularity,
+    shared={"edges": _lpa_edges, "labels": _lpa_labels},
     tags=("graph", "iterative", "eval"),
     doc="Newman modularity of the 2-round LPA communities — the quality "
     "score that says whether detected wallet clusters are real structure "
@@ -2088,22 +2043,6 @@ def _modularity(
     "would each replay the two vote rounds otherwise; 33 -> 12 "
     "Exchanges measured at sf0.1).",
 )
-def graph_community_modularity(spark, sf_dir):
-    edges = spark.sql(_lpa_edges(SPARK)).localCheckpoint()
-    edges_ref = "SELECT u, v FROM {edges}"
-    body, prev = _lpa_chain(SPARK, edges_ref)
-    labels = spark.sql(
-        f"WITH {body} SELECT node, label FROM {prev}", edges=edges
-    ).localCheckpoint()
-    return spark.sql(
-        _modularity(
-            SPARK,
-            edges_src=edges_ref,
-            labels_src="SELECT node, label FROM {labels}",
-        ),
-        edges=edges,
-        labels=labels,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2707,12 +2646,23 @@ def _heaps_tokens(d: str) -> str:
     return f"SELECT doc_id, unnest({toks}) AS tok FROM documents"
 
 
-def _heaps_fit(
-    d: str,
-    tok_src: str | None = None,
-    doc_src: str | None = None,
-    first_src: str | None = None,
-) -> str:
+def _heaps_doc_m(d: str, tok: str) -> str:
+    return (
+        f"WITH tok AS ({tok}) "
+        "SELECT doc_id, cast(count(*) as bigint) AS m FROM tok GROUP BY doc_id"
+    )
+
+
+def _heaps_first(d: str, tok: str) -> str:
+    return (
+        f"WITH tok AS ({tok}) "
+        "SELECT tok, cast(min(doc_id) as bigint) AS fd FROM tok GROUP BY tok"
+    )
+
+
+def _heaps_fit(d: str, doc_m: str, first: str) -> str:
+    # Shared: the token table (read by both aggs), doc_m (three consumers)
+    # and first_occ (the vocab side of the vocab x checkpoint cross join).
     x = "round(ln(cast(cum_n as double)), 9)"
     y = "round(ln(cast(cum_v as double)), 9)"
     n = "cast(count(*) as double)"
@@ -2722,10 +2672,7 @@ def _heaps_fit(
     sxx = S.dsum(f"round(({x}) * ({x}), 9)", d)
     slope = f"(({n} * {sxy} - {sx} * {sy}) / nullif({n} * {sxx} - {sx} * {sx}, cast(0 as double)))"
     return f"""
-    WITH tok AS ({tok_src or _heaps_tokens(d)}),
-    doc_m AS ({doc_src or
-        "SELECT doc_id, cast(count(*) as bigint) AS m FROM tok GROUP BY doc_id"
-    }),
+    WITH doc_m AS ({doc_m}),
     ordered AS (
         SELECT doc_id, m,
             row_number() OVER (ORDER BY doc_id) AS rk,
@@ -2739,9 +2686,7 @@ def _heaps_fit(
         FROM ordered o CROSS JOIN dtot
         WHERE o.rk % {S.idiv('dtot.nd + 7', '8', d)} = 0
     ),
-    first_occ AS ({first_src or
-        "SELECT tok, cast(min(doc_id) as bigint) AS fd FROM tok GROUP BY tok"
-    }),
+    first_occ AS ({first}),
     vgrid AS (
         -- vocab x 8-row checkpoint grid: V(prefix) = tokens first seen in it
         SELECT c.rk, c.cum_n,
@@ -2758,9 +2703,10 @@ def _heaps_fit(
     """
 
 
-@register(
+pair(
     "profile_heaps_law",
-    oracle=_heaps_fit(DUCK),
+    _heaps_fit,
+    shared={"tok": _heaps_tokens, "doc_m": _heaps_doc_m, "first": _heaps_first},
     tags=("profiling", "text"),
     doc="Heaps'-law fit V(N) = K*N^beta of vocabulary growth against "
     "corpus size — the second corpus law next to text_zipf_fit: healthy "
@@ -2778,27 +2724,6 @@ def _heaps_fit(
     "first-occurrence trick is what removes the O(N) cumulative-distinct "
     "scan, which is the part that cannot scale).",
 )
-def profile_heaps_law(spark, sf_dir):
-    tok = spark.sql(_heaps_tokens(SPARK)).localCheckpoint()
-    doc_m = spark.sql(
-        "SELECT doc_id, cast(count(*) as bigint) AS m FROM {tok} GROUP BY doc_id",
-        tok=tok,
-    ).localCheckpoint()
-    first = spark.sql(
-        "SELECT tok, cast(min(doc_id) as bigint) AS fd FROM {tok} GROUP BY tok",
-        tok=tok,
-    ).localCheckpoint()
-    return spark.sql(
-        _heaps_fit(
-            SPARK,
-            tok_src="SELECT * FROM {tok}",
-            doc_src="SELECT * FROM {doc_m}",
-            first_src="SELECT * FROM {first}",
-        ),
-        tok=tok,
-        doc_m=doc_m,
-        first=first,
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -1269,9 +1269,11 @@ _PSI_N_BATCHES = 4
 def _psi_prefix_sql(d: str, where: str, batch_id: int) -> str:
     """profile_drift_psi's algebra evaluated over an event-id-sliced prefix
     of the stream, tagged with the micro-batch id that completed it."""
-    from .traindata_ops import _psi_drift
+    from .traindata_ops import _psi_counts, _psi_drift
 
-    body = _psi_drift(d).replace("FROM events", f"FROM events WHERE {where}")
+    body = _psi_drift(d, _psi_counts(d)).replace(
+        "FROM events", f"FROM events WHERE {where}"
+    )
     body = body.rsplit("ORDER BY", 1)[0]
     return f"SELECT cast({batch_id} as int) AS batch_id, q.* FROM ({body}) q"
 
@@ -1309,9 +1311,11 @@ def stream_psi_drift_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     def apply(batch: DataFrame, bid: int) -> None:
         batch.write.mode("append").parquet(acc_dir)
         s = batch.sparkSession
-        from .traindata_ops import _psi_drift
+        from .traindata_ops import _psi_counts, _psi_drift
 
-        body = _psi_drift(SPARK).replace("FROM events", "FROM {acc}")
+        body = _psi_drift(SPARK, _psi_counts(SPARK)).replace(
+            "FROM events", "FROM {acc}"
+        )
         body = body.rsplit("ORDER BY", 1)[0]
         s.sql(
             f"SELECT cast({bid} as int) AS batch_id, q.* FROM ({body}) q",

@@ -321,34 +321,37 @@ def _tri_edges(d: str) -> str:
     """
 
 
-def _tri_orient(edges: str) -> str:
-    """Degree-ordered orientation over an edge table/CTE named ``edges``.
+def _tri_orient(d: str, edges: str) -> str:
+    """Degree-ordered orientation of the edge core ``edges``.
 
     Each edge points from the lower-(degree, id) endpoint: every triangle
     keeps exactly ONE acyclic orientation, and the wedge join's fan-out per
     node drops from deg^2 to outdeg^2, where outdeg is bounded by ~sqrt(2m)
     on skewed graphs — the standard exact hardening against hub detonation.
     ``deg`` is inlined twice; both consumers aggregate the (materialized)
-    edge table, never the raw events."""
+    edge table, never the raw events. Multi-consumer CTEs are MATERIALIZED
+    on the DuckDB side (the HITS-oracle convention)."""
+    mat = "MATERIALIZED " if d == DUCK else ""
     deg = (
         "SELECT node, cast(count(*) as bigint) AS dg "
-        f"FROM (SELECT u AS node FROM {edges} "
-        f"      UNION ALL SELECT v AS node FROM {edges}) s "
+        "FROM (SELECT u AS node FROM edges "
+        "      UNION ALL SELECT v AS node FROM edges) s "
         "GROUP BY node"
     )
     return f"""
+    WITH edges AS {mat}({edges})
     SELECT CASE WHEN du.dg < dv.dg OR (du.dg = dv.dg AND e.u < e.v)
                 THEN e.u ELSE e.v END AS u,
            CASE WHEN du.dg < dv.dg OR (du.dg = dv.dg AND e.u < e.v)
                 THEN e.v ELSE e.u END AS v
-    FROM {edges} e
+    FROM edges e
     JOIN ({deg}) du ON du.node = e.u
     JOIN ({deg}) dv ON dv.node = e.v
     """
 
 
-def _tri_corners(d: str, oriented: str, lead: str = "WITH ") -> str:
-    """Per-corner triangle participation counts over ``oriented``.
+def _triangles(d: str, oriented: str) -> str:
+    """Per-corner triangle participation counts over the oriented edges.
 
     Spark: ONE wedge join; the three corners explode from an inline
     3-array straight into a partial-aggregating hash-agg — the triangle
@@ -361,16 +364,18 @@ def _tri_corners(d: str, oriented: str, lead: str = "WITH ") -> str:
     the three per-role count tables are summed — trivially the same
     multiset: every triangle contributes exactly once per corner role.
 
-    ``lead`` lets the caller splice the CTE into an existing WITH-clause
-    list (the single-statement oracle form)."""
+    Both the edge table and the oriented table are shared: raw CTE
+    inlining re-evaluated the edge build combinatorially (90 scans / 274
+    exchanges at sf0.01, ~90 s at sf0.1)."""
     wedge = (
-        f"FROM {oriented} e1 "
-        f"JOIN {oriented} e2 ON e2.u = e1.v "
-        f"JOIN {oriented} e3 ON e3.u = e1.u AND e3.v = e2.v"
+        "FROM oriented e1 "
+        "JOIN oriented e2 ON e2.u = e1.v "
+        "JOIN oriented e3 ON e3.u = e1.u AND e3.v = e2.v"
     )
     if d == SPARK:
         return f"""
-    {lead}tri AS (
+    WITH oriented AS ({oriented}),
+    tri AS (
         SELECT e1.u AS na, e1.v AS nb, e2.v AS nc
         {wedge}
     )
@@ -381,7 +386,8 @@ def _tri_corners(d: str, oriented: str, lead: str = "WITH ") -> str:
     LIMIT 20
     """
     return f"""
-    {lead}corner_counts AS (
+    WITH oriented AS MATERIALIZED ({oriented}),
+    corner_counts AS (
         SELECT e1.u AS user_id, count(*) AS c {wedge} GROUP BY e1.u
         UNION ALL
         SELECT e1.v AS user_id, count(*) AS c {wedge} GROUP BY e1.v
@@ -396,24 +402,10 @@ def _tri_corners(d: str, oriented: str, lead: str = "WITH ") -> str:
     """
 
 
-def _triangles(d: str) -> str:
-    """Single-statement form: the DuckDB oracle and the hand-fixture unit
-    test. Multi-consumer CTEs are MATERIALIZED on the DuckDB side (the
-    HITS-oracle convention). The Spark builder NEVER runs this form — raw
-    CTE inlining re-evaluated the edge build combinatorially (90 scans /
-    274 exchanges at sf0.01, ~90 s at sf0.1); it stages through
-    localCheckpoints instead (graph_triangle_count below)."""
-    mat = "MATERIALIZED " if d == DUCK else ""
-    return f"""
-    WITH edges AS {mat}({_tri_edges(d)}),
-    oriented AS {mat}({_tri_orient("edges")})
-    {_tri_corners(d, "oriented", lead=", ")}
-    """
-
-
-@register(
+pair(
     "graph_triangle_count",
-    oracle=_triangles(DUCK),
+    _triangles,
+    shared={"edges": _tri_edges, "oriented": _tri_orient},
     tags=("graph",),
     doc="Triangle counting over the user co-occurrence graph (users active "
     "in the same event_type within the same hour are adjacent). Edges are "
@@ -429,10 +421,6 @@ def _triangles(d: str) -> str:
     "from one array so the triangle set is scanned once; top-20 by "
     "TakeOrderedAndProject.",
 )
-def graph_triangle_count(spark, sf_dir):
-    edges = spark.sql(_tri_edges(SPARK)).localCheckpoint()
-    oriented = spark.sql(_tri_orient("{edges}"), edges=edges).localCheckpoint()
-    return spark.sql(_tri_corners(SPARK, "{oriented}"), oriented=oriented)
 
 
 # ---------------------------------------------------------------------------
@@ -443,9 +431,22 @@ _PSI_BINS = 10
 _PSI_PRIOR = 0.5  # Laplace smoothing per bin
 
 
-def _psi_drift(d: str, counts_src: str | None = None) -> str:
+def _psi_counts(d: str) -> str:
+    """The (event_type, half, bin) count grid — the ONE pass over facts."""
     day = "cast(floor(" + S.epoch_s("ts", d) + " / 86400) as bigint)"
     bin_expr = "least(9, greatest(0, cast(floor(value / 10) as int)))"
+    return f"""
+        SELECT event_type, half, bin, count(*) AS c
+        FROM (
+            SELECT event_type,
+                CASE WHEN {day} % 2 = 0 THEN 'A' ELSE 'B' END AS half,
+                {bin_expr} AS bin
+            FROM events
+        ) binned GROUP BY event_type, half, bin
+    """
+
+
+def _psi_drift(d: str, counts: str) -> str:
     # Every operand forced to DOUBLE before the division: a bare 0.5/5.0
     # literal is DECIMAL in both engines, and Spark's and DuckDB's
     # decimal-DIVISION scale rules differ (~1e-9 in the quotient — enough
@@ -460,21 +461,12 @@ def _psi_drift(d: str, counts_src: str | None = None) -> str:
         f"((cast(grid.cb as double) + {_PSI_PRIOR})"
         f" / (cast(tot.tb as double) + {smooth_tot}))"
     )
-    # ``counts_src`` lets the Spark builder checkpoint the type x half x
-    # bin grid: inlined, grid/types/tot each re-ran the fact hash-agg
-    # (4 fact scans planned - the round-11 registry-wide plan audit).
-    # types derives from counts (binned has no row filter, so every
-    # event type present in events is present in counts).
+    # ``counts`` is shared: inlined, grid/types/tot each re-ran the fact
+    # hash-agg (4 fact scans planned - the round-11 registry-wide plan
+    # audit). types derives from counts (binned has no row filter, so
+    # every event type present in events is present in counts).
     return f"""
-    WITH counts AS ({counts_src if counts_src is not None else f'''
-        SELECT event_type, half, bin, count(*) AS c
-        FROM (
-            SELECT event_type,
-                CASE WHEN {day} % 2 = 0 THEN 'A' ELSE 'B' END AS half,
-                {bin_expr} AS bin
-            FROM events
-        ) binned GROUP BY event_type, half, bin
-    '''}),
+    WITH counts AS ({counts}),
     types AS (SELECT DISTINCT event_type FROM counts),
     grid AS (
         SELECT t.event_type, b.bin,
@@ -499,9 +491,10 @@ def _psi_drift(d: str, counts_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "profile_drift_psi",
-    oracle=_psi_drift(DUCK),
+    _psi_drift,
+    shared={"counts": _psi_counts},
     tags=("profiling", "mlprep"),
     doc="Population Stability Index between even- and odd-day event halves, "
     "per event_type over 10 fixed value bins with Laplace-smoothed "
@@ -513,21 +506,6 @@ def _psi_drift(d: str, counts_src: str | None = None) -> str:
     "on the tiny grid. The grid is localCheckpointed so its consumers "
     "share ONE fact scan.",
 )
-def profile_drift_psi(spark, sf_dir):
-    day = "cast(floor(" + S.epoch_s("ts", SPARK) + " / 86400) as bigint)"
-    bin_expr = "least(9, greatest(0, cast(floor(value / 10) as int)))"
-    counts = spark.sql(
-        "SELECT event_type, half, bin, count(*) AS c FROM ("
-        f"SELECT event_type, CASE WHEN {day} % 2 = 0 THEN 'A' ELSE 'B'"
-        f" END AS half, {bin_expr} AS bin FROM events"
-        ") binned GROUP BY event_type, half, bin"
-    ).localCheckpoint()
-    return spark.sql(
-        _psi_drift(
-            SPARK, counts_src="SELECT event_type, half, bin, c FROM {counts}"
-        ),
-        counts=counts,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -571,12 +549,55 @@ pair(
 # ---------------------------------------------------------------------------
 
 
-def _minhash_incremental(
-    d: str,
-    sh_src: str | None = None,
-    sigs_src: str | None = None,
-    bands_src: str | None = None,
-) -> str:
+_SIDE = "CASE WHEN length(source) = 4 THEN 'base' ELSE 'inc' END"
+
+
+def _mhi_shingles(d: str) -> str:
+    """(doc_id, side, shh): dedup_minhash_lsh's hashed shingles, each
+    tagged with its document's corpus side (src0..src9 are 'base')."""
+    from .llm_ops import _ngram_shingles
+
+    shh = S.portable_hash64("sh", d)
+    if d == SPARK:
+        # ``side`` rides through the shingle explode (one tiny string per
+        # shingle row) instead of re-scanning documents for a join back
+        # onto the signature aggregate — the join cost a second fact scan
+        # plus a broadcast probe per signature row (r13; guide §2.2
+        # shuffle fewer bytes beats re-deriving them).
+        return f"""
+        SELECT doc_id, side, {shh} AS shh FROM (
+            SELECT doc_id, side, explode(array_distinct(transform(
+                sequence(1, size(toks) - 2),
+                i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1),
+                            ' ', element_at(toks, i + 2))
+            ))) AS sh
+            FROM (SELECT /*+ REPARTITION */ doc_id, {_SIDE} AS side,
+                  {S.toks(SPARK)} AS toks FROM documents) t
+            WHERE size(toks) >= 3
+        ) raw
+        """
+    return f"""
+        SELECT raw.doc_id, t.side, {shh} AS shh
+        FROM ({_ngram_shingles(d)}) raw
+        JOIN (SELECT doc_id, {_SIDE} AS side FROM documents) t
+            ON t.doc_id = raw.doc_id
+    """
+
+
+def _mhi_bands_capped(d: str, sh: str) -> str:
+    # The signature aggregate is NOT shared on its own — its only consumer
+    # is this bands build, so the r12 sigs checkpoint was a pure extra
+    # materialization job (r13 interleaved: 1.780 -> 1.468 s median with
+    # it folded in here).
+    from .llm_ops import _mh_bands
+
+    return f"""
+    WITH sh_hashed AS ({sh}),{_mh_bands(d, side=True)}
+    SELECT doc_id, side, band, band_key FROM bands_capped
+    """
+
+
+def _minhash_incremental(d: str, sh: str, bc: str) -> str:
     # Same signature/banding machinery as dedup_minhash_lsh (16 portable
     # minhashes over word-3-gram shingles, 4x4 banding, bucket cap), but the
     # candidate join is CROSS-CORPUS ONLY: incoming bands (src10..src19)
@@ -584,84 +605,17 @@ def _minhash_incremental(
     # never form — the daily-ingest shape where yesterday's corpus is the
     # reference, re-signing nothing (at scale the base signatures are a
     # materialized table; here they derive in the same query).
-    from .llm_ops import (
-        _BAND_SIZE,
-        _LSH_BUCKET_CAP,
-        _MINHASH_AB,
-        _MINHASH_P,
-        _N_HASHES,
-        _ngram_shingles,
-    )
+    # ``sh`` and ``bc`` are shared: inlined, sigs/doc_sets and the two
+    # band-probe sides re-ran the shingle explode (6 fact scans planned -
+    # the round-11 registry-wide plan audit), and both probe sides re-ran
+    # the posexplode + count-over-window bucket cap (round-12 pass, same
+    # trade as dedup_minhash_lsh).
+    from .llm_ops import _mh_jaccard
 
-    shh = S.portable_hash64("sh", d)
-    min_cols = ",\n            ".join(
-        f"min(({a} * m + {b}) % {_MINHASH_P}) AS h{j}"
-        for j, (a, b) in enumerate(_MINHASH_AB)
-    )
-    band_keys = ", ".join(
-        "md5(concat_ws(',', "
-        + ", ".join(f"h{_BAND_SIZE * band + r}" for r in range(_BAND_SIZE))
-        + "))"
-        for band in range(_N_HASHES // _BAND_SIZE)
-    )
-    if d == SPARK:
-        bands = f"""
-        SELECT doc_id, side, band, band_key
-        FROM sigs
-        LATERAL VIEW posexplode(array({band_keys})) AS band, band_key
-        """
-        doc_sets = (
-            "SELECT doc_id, collect_set(shh) AS shs FROM sh_hashed GROUP BY doc_id"
-        )
-        n_inter = "size(array_intersect(sa.shs, sb.shs))"
-        n_a, n_b = "size(sa.shs)", "size(sb.shs)"
-    else:
-        bands = f"""
-        SELECT doc_id, side, i AS band, [{band_keys}][i + 1] AS band_key
-        FROM sigs, unnest(range(0, {_N_HASHES // _BAND_SIZE})) t(i)
-        """
-        doc_sets = (
-            "SELECT doc_id, list(DISTINCT shh) AS shs FROM sh_hashed GROUP BY doc_id"
-        )
-        n_inter = "len(list_intersect(sa.shs, sb.shs))"
-        n_a, n_b = "len(sa.shs)", "len(sb.shs)"
-    jacc = f"cast({n_inter} as double) / ({n_a} + {n_b} - {n_inter})"
-    # ``sh_src``/``sigs_src`` let the Spark builder checkpoint the hashed
-    # shingles and the signature table (at scale: the materialized base
-    # signatures the doc itself promises): inlined, sigs/doc_sets and the
-    # two band-probe sides re-ran the shingle explode (6 fact scans
-    # planned - the round-11 registry-wide plan audit).
-    # When the builder supplies a pre-materialized bands_src, the sigs and
-    # bands CTEs would be dead text (Spark prunes unused CTEs, but there is
-    # no reason to emit them); only the default path derives them here.
-    sigs_and_bands = f"""
-    sigs AS ({sigs_src if sigs_src is not None else f'''
-        SELECT s.doc_id, max(t.side) AS side,
-            {min_cols}
-        FROM (SELECT doc_id, shh % {_MINHASH_P} AS m FROM sh_hashed) s
-        JOIN tagged t ON t.doc_id = s.doc_id
-        GROUP BY s.doc_id
-    '''}),
-    bands AS (
-        {bands}
-    ),""" if bands_src is None else ""
+    doc_sets, jacc = _mh_jaccard(d)
     return f"""
-    WITH tagged AS (
-        SELECT doc_id, text,
-            CASE WHEN length(source) = 4 THEN 'base' ELSE 'inc' END AS side
-        FROM documents
-    ),
-    sh_hashed AS ({sh_src if sh_src is not None else f'''
-        SELECT doc_id, {shh} AS shh
-        FROM ({_ngram_shingles(d).replace('documents', 'tagged')}) raw
-    '''}),{sigs_and_bands}
-    bands_capped AS ({bands_src if bands_src is not None else f'''
-        SELECT doc_id, side, band, band_key FROM (
-            SELECT doc_id, side, band, band_key,
-                count(*) OVER (PARTITION BY band, band_key) AS bsz
-            FROM bands
-        ) f WHERE bsz <= {_LSH_BUCKET_CAP}
-    '''}),
+    WITH sh_hashed AS ({sh}),
+    bands_capped AS ({bc}),
     candidates AS (
         SELECT DISTINCT a.doc_id AS inc_doc, b.doc_id AS base_doc
         FROM bands_capped a
@@ -678,9 +632,10 @@ def _minhash_incremental(
     """
 
 
-@register(
+pair(
     "dedup_minhash_incremental",
-    oracle=_minhash_incremental(DUCK),
+    _minhash_incremental,
+    shared={"sh": _mhi_shingles, "bc": _mhi_bands_capped},
     tags=("dedup", "etl"),
     doc="Cross-corpus near-dup: the incoming snapshot (src10..src19) LSH-"
     "probes the existing corpus (src0..src9) through the same 16-minhash / "
@@ -694,76 +649,6 @@ def _minhash_incremental(
     "hashed shingles and signature table are localCheckpointed - the "
     "same materialization, in-query - so the explode runs once.",
 )
-def dedup_minhash_incremental(spark, sf_dir):
-    from .llm_ops import _MINHASH_AB, _MINHASH_P
-
-    # ``side`` rides through the shingle explode (one tiny string per
-    # shingle row) instead of re-scanning documents for a join back onto
-    # the signature aggregate — the join cost a second fact scan plus a
-    # broadcast probe per signature row (r13; guide §2.2 shuffle fewer
-    # bytes beats re-deriving them).
-    shh = S.portable_hash64("sh", SPARK)
-    sh = spark.sql(
-        f"""
-        SELECT doc_id, side, {shh} AS shh FROM (
-            SELECT doc_id, side, explode(array_distinct(transform(
-                sequence(1, size(toks) - 2),
-                i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1),
-                            ' ', element_at(toks, i + 2))
-            ))) AS sh
-            FROM (SELECT /*+ REPARTITION */ doc_id,
-                  CASE WHEN length(source) = 4 THEN 'base' ELSE 'inc' END AS side,
-                  {S.toks(SPARK)} AS toks FROM documents) t
-            WHERE size(toks) >= 3
-        ) raw
-        """
-    ).localCheckpoint()
-    min_cols = ", ".join(
-        f"min(({a} * m + {b}) % {_MINHASH_P}) AS h{j}"
-        for j, (a, b) in enumerate(_MINHASH_AB)
-    )
-    from .llm_ops import _BAND_SIZE, _LSH_BUCKET_CAP, _N_HASHES
-
-    band_keys = ", ".join(
-        "md5(concat_ws(',', "
-        + ", ".join(f"h{_BAND_SIZE * band + r}" for r in range(_BAND_SIZE))
-        + "))"
-        for band in range(_N_HASHES // _BAND_SIZE)
-    )
-    # bands_capped materialized once: inlined, BOTH candidate probe sides
-    # re-ran the posexplode + count-over-window bucket cap (round-12 pass,
-    # same trade as dedup_minhash_lsh). The signature aggregate is NOT
-    # separately checkpointed — its only consumer is this bands build, so
-    # the r12 sigs checkpoint was a pure extra materialization job
-    # (r13 interleaved: 1.780 -> 1.468 s median with it folded in here).
-    bc = spark.sql(
-        f"""
-        SELECT doc_id, side, band, band_key FROM (
-            SELECT doc_id, side, band, band_key,
-                count(*) OVER (PARTITION BY band, band_key) AS bsz
-            FROM (
-                SELECT doc_id, side, band, band_key
-                FROM (
-                    SELECT doc_id, max(side) AS side, {min_cols}
-                    FROM (SELECT doc_id, side, shh % {_MINHASH_P} AS m
-                          FROM {{sh}}) s
-                    GROUP BY doc_id
-                ) sigs
-                LATERAL VIEW posexplode(array({band_keys})) AS band, band_key
-            ) bands
-        ) f WHERE bsz <= {_LSH_BUCKET_CAP}
-        """,
-        sh=sh,
-    ).localCheckpoint()
-    return spark.sql(
-        _minhash_incremental(
-            SPARK,
-            sh_src="SELECT doc_id, shh FROM {sh}",
-            bands_src="SELECT doc_id, side, band, band_key FROM {bc}",
-        ),
-        sh=sh,
-        bc=bc,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1371,27 +1256,53 @@ _DSIR_BUCKETS = 128
 _DSIR_TOPK = 20
 
 
-def _dsir_selection(d: str, hashed_src: str | None = None) -> str:
-    if d == SPARK:
-        occ = (
-            "SELECT doc_id, lang, explode({t}) AS tok "
-            "FROM documents"
-        ).format(t=S.toks(d))
-    else:
-        occ = (
-            "SELECT doc_id, lang, unnest({t}) AS tok FROM documents"
-        ).format(t=S.toks(d))
+def _dsir_hashed(d: str) -> str:
+    """(doc_id, lang, bkt): one row per token occurrence, hashed to its
+    feature bucket — the persisted hashed-ngram table the DSIR paper's
+    estimator is built from."""
+    unnest = "explode" if d == SPARK else "unnest"
     b = f"{S.portable_hash64('tok', d)} % {_DSIR_BUCKETS}"
-    # ``hashed_src`` lets the Spark builder checkpoint the token-bucket
-    # table: inlined, tgt/src/tots and the per-doc fold each re-ran the
-    # token explode (5 fact scans planned — the round-11 registry-wide
-    # plan audit). At scale this is the persisted hashed-ngram table the
-    # DSIR paper's estimator is built from.
-    return f"""
-    WITH occ AS ({occ}),
-    hashed AS ({hashed_src if hashed_src is not None else f'''
-        SELECT doc_id, lang, {b} AS bkt FROM occ
-    '''}),
+    return (
+        f"SELECT doc_id, lang, {b} AS bkt FROM (SELECT doc_id, lang,"
+        f" {unnest}({S.toks(d)}) AS tok FROM documents) occ"
+    )
+
+
+def _dsir_selection(d: str, hashed: str) -> str:
+    # ``hashed`` is shared: inlined, tgt/src/tots and the per-doc fold each
+    # re-ran the token explode (5 fact scans planned — the round-11
+    # registry-wide plan audit).
+    if d == SPARK:
+        # Folded bucket stats (r13, guide §2.2): the oracle's tgt/src/tots/
+        # distinct-bkt CTEs are four separate full passes over the
+        # token-bucket table; one conditional-sum groupBy(bkt) yields all of
+        # them (ct=0 rows reproduce the oracle's coalesce(tgt.c, 0) LEFT
+        # JOIN exactly, and sum(ct)/sum(cs) over the 128-row grid ARE the
+        # totals). Checkpoint reads 5 -> 2; at 100 TB the hashed table is
+        # the persisted DSIR estimator input, so three saved passes are
+        # three saved table scans. Interleaved median 1.405 -> 1.348 s at
+        # sf0.1, byte-identical top-k.
+        weights = f"""
+    g AS (
+        SELECT bkt,
+            cast(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) as bigint) AS ct,
+            cast(sum(CASE WHEN lang <> 'en' THEN 1 ELSE 0 END) as bigint) AS cs
+        FROM hashed GROUP BY bkt
+    ),
+    tots AS (
+        SELECT cast(sum(ct) as bigint) AS nt, cast(sum(cs) as bigint) AS ns
+        FROM g
+    ),
+    w AS (
+        SELECT g.bkt,
+            round(ln(cast(g.ct + 1 as double)
+                     / cast(tots.nt + {_DSIR_BUCKETS} as double))
+                - ln(cast(g.cs + 1 as double)
+                     / cast(tots.ns + {_DSIR_BUCKETS} as double)), 9) AS lw
+        FROM g CROSS JOIN tots
+    )"""
+    else:
+        weights = f"""
     tgt AS (
         SELECT bkt, cast(count(*) as bigint) AS c FROM hashed
         WHERE lang = 'en' GROUP BY bkt
@@ -1420,7 +1331,9 @@ def _dsir_selection(d: str, hashed_src: str | None = None) -> str:
         LEFT JOIN tgt ON tgt.bkt = b.bkt
         LEFT JOIN src ON src.bkt = b.bkt
         CROSS JOIN tots
-    ),
+    )"""
+    return f"""
+    WITH hashed AS ({hashed}),{weights},
     scored AS (
         SELECT h.doc_id, max(h.lang) AS lang,
             {S.dsum('w.lw', d)} AS importance
@@ -1435,9 +1348,10 @@ def _dsir_selection(d: str, hashed_src: str | None = None) -> str:
     """
 
 
-@register(
+pair(
     "sample_dsir_selection",
-    oracle=_dsir_selection(DUCK),
+    _dsir_selection,
+    shared={"hashed": _dsir_hashed},
     tags=("sampling", "text", "mlprep"),
     doc="DSIR-style data selection (Xie et al. 2023, 'Data Selection for "
     "Language Models via Importance Resampling'): hashed token features "
@@ -1451,50 +1365,3 @@ def _dsir_selection(d: str, hashed_src: str | None = None) -> str:
     "is touched once however large it is. The token-bucket table is "
     "localCheckpointed so the explode runs once.",
 )
-def sample_dsir_selection(spark, sf_dir):
-    b = f"{S.portable_hash64('tok', SPARK)} % {_DSIR_BUCKETS}"
-    hashed = spark.sql(
-        f"SELECT doc_id, lang, {b} AS bkt FROM (SELECT doc_id, lang,"
-        f" explode({S.toks(SPARK)}) AS tok FROM documents) occ"
-    ).localCheckpoint()
-    # Folded bucket stats (r13, guide §2.2): the oracle's tgt/src/tots/
-    # distinct-bkt CTEs are four separate full passes over the token-bucket
-    # table; one conditional-sum groupBy(bkt) yields all of them (ct=0 rows
-    # reproduce the oracle's coalesce(tgt.c, 0) LEFT JOIN exactly, and
-    # sum(ct)/sum(cs) over the 128-row grid ARE the totals). Checkpoint
-    # reads 5 -> 2; at 100 TB the hashed table is the persisted DSIR
-    # estimator input, so three saved passes are three saved table scans.
-    # Interleaved median 1.405 -> 1.348 s at sf0.1, byte-identical top-k.
-    return spark.sql(f"""
-    WITH g AS (
-        SELECT bkt,
-            cast(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) as bigint) AS ct,
-            cast(sum(CASE WHEN lang <> 'en' THEN 1 ELSE 0 END) as bigint) AS cs
-        FROM {{hashed}} GROUP BY bkt
-    ),
-    tots AS (
-        SELECT cast(sum(ct) as bigint) AS nt, cast(sum(cs) as bigint) AS ns
-        FROM g
-    ),
-    w AS (
-        SELECT g.bkt,
-            round(ln(cast(g.ct + 1 as double)
-                     / cast(tots.nt + {_DSIR_BUCKETS} as double))
-                - ln(cast(g.cs + 1 as double)
-                     / cast(tots.ns + {_DSIR_BUCKETS} as double)), 9) AS lw
-        FROM g CROSS JOIN tots
-    ),
-    scored AS (
-        SELECT h.doc_id, max(h.lang) AS lang,
-            {S.dsum('w.lw', SPARK)} AS importance
-        FROM {{hashed}} h JOIN w ON w.bkt = h.bkt
-        WHERE h.lang <> 'en'
-        GROUP BY h.doc_id
-    )
-    SELECT doc_id, lang, round(importance, 6) AS importance
-    FROM scored
-    ORDER BY importance DESC, doc_id
-    LIMIT {_DSIR_TOPK}
-    """,
-        hashed=hashed,
-    )

@@ -194,9 +194,9 @@ def test_mmr_prefers_diverse_over_redundant(hand_views):
     spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     ).createOrReplaceTempView("embeddings")
-    from rugpull_data_pipeline_spark.plans.mlprep_ops import _mmr_diversify
+    from rugpull_data_pipeline_spark.plans import registry
 
-    got = spark.sql(_mmr_diversify(SPARK)).collect()
+    got = registry.get("sim_mmr_diversify").builder(spark, "unused").collect()
     assert [(r.rnk, r.vec_id) for r in got] == [(1, 0), (2, 1), (3, 2)]
     assert got[0].mmr_score == pytest.approx(1.0)
     assert got[1].mmr_score == pytest.approx(0.4)

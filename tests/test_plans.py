@@ -431,3 +431,44 @@ def test_scan_guard_detects_inlined_class(spark):
     assert max(counts.values(), default=0) > CAP, (
         f"known-bad inlined variant no longer detected: {counts}"
     )
+
+
+def test_no_inline_or_checkpoint_fork():
+    """Shared cores register through registry.pair(..., shared=...), the one
+    place the materialization policy lives. A plan function that takes an
+    optional ``*_src`` text (inline the core when None, read the builder's
+    checkpoint otherwise) is a second copy of that policy."""
+    import importlib
+    import inspect
+    import pkgutil
+
+    from rugpull_data_pipeline_spark import plans
+
+    forks = []
+    for mod_info in pkgutil.iter_modules(plans.__path__):
+        mod = importlib.import_module(f"{plans.__name__}.{mod_info.name}")
+        for fname, fn in vars(mod).items():
+            if not inspect.isfunction(fn) or fn.__module__ != mod.__name__:
+                continue
+            forks += [
+                f"{mod_info.name}.{fname}({p.name}=None)"
+                for p in inspect.signature(fn).parameters.values()
+                if p.name.endswith("_src") and p.default is None
+            ]
+    assert not forks, f"inline-or-checkpoint forks: {forks}"
+
+
+@pytest.mark.parametrize(
+    "shared",
+    [
+        {"a": lambda d, b: "SELECT 1 AS x"},  # unknown core
+        {"a": lambda d, b: "SELECT 1 AS x", "b": lambda d: "SELECT 1 AS x"},  # later
+    ],
+    ids=["unknown", "later"],
+)
+def test_shared_core_must_read_an_earlier_core(shared):
+    """A dependent core names the earlier cores it reads; naming an unknown
+    or a later one fails at registration, before any builder runs."""
+    with pytest.raises(ValueError, match="reads \\['b'\\]"):
+        registry.pair("_bad_core_order", lambda d, a: "SELECT * FROM a", shared=shared)
+    assert "_bad_core_order" not in registry._REGISTRY

@@ -81,7 +81,7 @@ def test_triangle_count_matches_bruteforce(hand_views, edge_set):
     against O(n^3) enumeration — exercises the degree-ordered orientation
     on graphs that are NOT unions of cliques."""
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.traindata_ops import _triangles
+    from rugpull_data_pipeline_spark.plans import registry
 
     rows, eid = [], 0
     for k, (u, v) in enumerate(sorted(edge_set)):
@@ -89,7 +89,9 @@ def test_triangle_count_matches_bruteforce(hand_views, edge_set):
         rows.append((eid, 2 * k, u, f"e{k}", 1.0)); eid += 1
         rows.append((eid, 2 * k + 1, v, f"e{k}", 1.0)); eid += 1
     _mk_events(spark, rows)
-    got = {r.user_id: r.n_triangles for r in spark.sql(_triangles(SPARK)).collect()}
+    got = {r.user_id: r.n_triangles
+           for r in registry.get("graph_triangle_count")
+                    .builder(spark, "unused").collect()}
 
     edges = set(edge_set)
     nodes = sorted({n for e in edges for n in e})

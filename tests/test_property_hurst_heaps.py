@@ -214,13 +214,13 @@ _HEAPS_DOC = st.lists(
 @given(st.lists(_HEAPS_DOC, min_size=2, max_size=12))
 def test_heaps_fit_matches_bruteforce(hand_views, docs):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.stats_eval import _heaps_fit
+    from rugpull_data_pipeline_spark.plans import registry
 
     spark.createDataFrame(
         [(i, " ".join(toks), "en", "s0") for i, toks in enumerate(docs)],
         "doc_id long, text string, lang string, source string",
     ).createOrReplaceTempView("documents")
-    got = spark.sql(_heaps_fit(SPARK)).collect()[0]
+    got = registry.get("profile_heaps_law").builder(spark, "unused").collect()[0]
 
     nd = len(docs)
     step = (nd + 7) // 8

@@ -108,14 +108,14 @@ def test_lorenz_deciles_match_bruteforce(hand_views, bals):
 )
 def test_degree_gini_matches_bruteforce(hand_views, op_rows):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.insights_ops import _degree_gini
+    from rugpull_data_pipeline_spark.plans import registry
 
     spark.createDataFrame(
         [(o, p) for o, p in op_rows],
         "l_orderkey long, l_partkey long",
     ).createOrReplaceTempView("lineitem")
 
-    out = spark.sql(_degree_gini(SPARK)).collect()
+    out = registry.get("graph_degree_gini").builder(spark, "unused").collect()
     op = sorted(set(op_rows))
     edges = set()
     for i in range(len(op)):

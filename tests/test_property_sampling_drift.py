@@ -73,15 +73,15 @@ def test_psi_drift_matches_bruteforce(hand_views, pts):
     from rugpull_data_pipeline_spark.plans.traindata_ops import (
         _PSI_BINS,
         _PSI_PRIOR,
-        _psi_drift,
     )
+    from rugpull_data_pipeline_spark.plans import registry
 
     rows = [
         (i, day * 86400 + i, 1, "click", c / 100.0)
         for i, (day, c) in enumerate(pts)
     ]
     _mk_events(spark, rows)
-    got = spark.sql(_psi_drift(SPARK)).collect()
+    got = registry.get("profile_drift_psi").builder(spark, "unused").collect()
     assert len(got) == 1
     got = got[0]
 

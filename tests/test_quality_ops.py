@@ -11,6 +11,7 @@ from rugpull_data_pipeline_spark.plans.quality_ops import (
     _bpe_pairs,
     _repetition,
     _semantic_dedup,
+    _semantic_iv,
 )
 from rugpull_data_pipeline_spark.sources.tables import register_views
 
@@ -83,7 +84,7 @@ def test_semantic_dedup_handcrafted(spark, crafted_views):
     rows.append((9, v9))
     set_embs(rows)
 
-    out = {r["vec_id"]: r for r in spark.sql(_semantic_dedup(SPARK)).collect()}
+    out = {r["vec_id"]: r for r in spark.sql(_semantic_dedup(SPARK, _semantic_iv(SPARK))).collect()}
     # Vectors 0..7 are each their own cluster keeper -> excluded.
     assert set(out) == {8, 9}
     assert out[8]["centroid_id"] == 0 and out[8]["keep_id"] == 0

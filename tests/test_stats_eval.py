@@ -499,13 +499,13 @@ def test_cohens_kappa_bounds_and_perfect_agreement(hand_views):
 
 def test_modularity_two_cliques(hand_views):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.stats_eval import _modularity
+    from rugpull_data_pipeline_spark.plans.stats_eval import _lpa_labels, _modularity
 
     # Two disjoint triangles via an explicit edge list: LPA labels each
     # clique by its smallest node; modularity of the perfect split is
     # Q = 2 * (3/6 - (6/12)^2) = 0.5.
     edges = "SELECT * FROM (VALUES (1, 2), (1, 3), (2, 3), (10, 11), (10, 12), (11, 12)) AS t(u, v)"
-    rows = spark.sql(_modularity(SPARK, edges_src=edges)).collect()
+    rows = spark.sql(_modularity(SPARK, edges, _lpa_labels(SPARK, edges))).collect()
     assert len(rows) == 2
     for r in rows:
         assert r.n_members == 3
@@ -668,12 +668,12 @@ def test_modularity_matches_definition(hand_views, edge_set):
     """Q from the SQL must equal the textbook definition computed in Python
     on the SAME label assignment (2 deterministic LPA rounds, replicated)."""
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.stats_eval import _modularity
+    from rugpull_data_pipeline_spark.plans.stats_eval import _lpa_labels, _modularity
 
     edges = sorted(edge_set)
     vals = ", ".join(f"({u}, {v})" for u, v in edges)
     src = f"SELECT * FROM (VALUES {vals}) AS t(u, v)"
-    rows = spark.sql(_modularity(SPARK, edges_src=src)).collect()
+    rows = spark.sql(_modularity(SPARK, src, _lpa_labels(SPARK, src))).collect()
 
     # python replica: 2 synchronous LPA rounds, majority label, min tie
     nodes = sorted({n for e in edges for n in e})
@@ -932,14 +932,14 @@ def test_mcnemar_counts_discordant_pairs(hand_views):
 
 def test_heaps_law_matches_python_replica(hand_views):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.stats_eval import profile_heaps_law
+    from rugpull_data_pipeline_spark.plans import registry
     import math
     # doc i = "a t{i}": after i docs N = 2i tokens, V = i + 1 types.
     _mk_docs(
         spark,
         [(i, f"a t{i}", "en", "s1") for i in range(1, 9)],
     )
-    row = profile_heaps_law(spark, "unused").collect()[0]
+    row = registry.get("profile_heaps_law").builder(spark, "unused").collect()[0]
     pts = [(math.log(2 * i), math.log(i + 1)) for i in range(1, 9)]
     xs = [round(x, 9) for x, _ in pts]
     ys = [round(y, 9) for _, y in pts]

@@ -11,18 +11,15 @@ from pyspark.sql import functions as F
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
 from rugpull_data_pipeline_spark.plans import registry
 from rugpull_data_pipeline_spark.plans.traindata_ops import (
-    _minhash_incremental,
     _skew_advisor,
     _boilerplate,
     _category_encode,
     _group_holdout,
     _incremental,
     _moments,
-    _psi_drift,
     _rebalance,
     _running_distinct,
     _target_encode,
-    _triangles,
 )
 
 
@@ -115,7 +112,9 @@ def test_triangles_counted_once_and_hot_group_is_capped_out(hand_views):
     rows += [(10 + i, 20 + i, u, "buy", 1.0) for i, u in enumerate([4, 5])]
     rows += [(100 + i, 30 + i, 1000 + i, "view", 1.0) for i in range(41)]
     _mk_events(spark, rows)
-    got = {r.user_id: r.n_triangles for r in spark.sql(_triangles(SPARK)).collect()}
+    got = {r.user_id: r.n_triangles
+           for r in registry.get("graph_triangle_count")
+                    .builder(spark, "unused").collect()}
     assert got == {1: 1, 2: 1, 3: 1}
 
 
@@ -134,7 +133,8 @@ def test_psi_zero_for_identical_halves_and_positive_for_shift(hand_views):
         eid += 1
         rows.append((eid, 86400 * day + eid, 1, "shift", v))
     _mk_events(spark, rows)
-    got = {r.event_type: r for r in spark.sql(_psi_drift(SPARK)).collect()}
+    got = {r.event_type: r for r in registry.get("profile_drift_psi")
+                                    .builder(spark, "unused").collect()}
     assert got["same"].psi == pytest.approx(0.0)
     assert got["shift"].psi > 0.5
     assert got["shift"].n_even_days == 2 and got["shift"].n_odd_days == 2
@@ -165,7 +165,9 @@ def test_minhash_incremental_pairs_cross_corpus_only(hand_views):
             (13, t2, "src12"),  # no cross-corpus pair may form
         ],
     )
-    got = [(r.inc_doc, r.base_doc, r.jaccard) for r in spark.sql(_minhash_incremental(SPARK)).collect()]
+    got = [(r.inc_doc, r.base_doc, r.jaccard)
+           for r in registry.get("dedup_minhash_incremental")
+                    .builder(spark, "unused").collect()]
     assert got == [(11, 1, 1.0)]
 
 
@@ -387,8 +389,6 @@ def test_dataset_card_dup_rate_and_ttr(hand_views):
 
 def test_dsir_prefers_target_like_docs(hand_views):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.traindata_ops import _dsir_selection
-
     # target (en) speaks {alpha, beta}; raw pool speaks {gamma, delta}.
     # The candidate written in target-ish words must outrank the raw-ish one.
     docs = [
@@ -400,7 +400,7 @@ def test_dsir_prefers_target_like_docs(hand_views):
         (6, "gamma delta gamma delta", "fr", "s", 20),  # raw-like candidate
     ]
     _mk_docs_full(spark, docs)
-    rows = spark.sql(_dsir_selection(SPARK)).collect()
+    rows = registry.get("sample_dsir_selection").builder(spark, "unused").collect()
     ranks = {r.doc_id: i for i, r in enumerate(rows)}
     # all four non-en docs scored; doc 5 strictly above doc 6.
     assert set(ranks) == {3, 4, 5, 6}
