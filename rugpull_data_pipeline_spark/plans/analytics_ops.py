@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
-from .mining_ops import _copurchase_pairs, _daily_means, _day_idx
+from .mining_ops import _copurchase_pairs, _daily_means, _day_idx, _pw_sym
 from .registry import pair, register, static_table
 
 
@@ -246,21 +246,28 @@ def _weighted_edges_sql(pw: str) -> str:
     """
 
 
-def _sssp_oracle() -> str:
-    ctes = [f"r0 AS (SELECT DISTINCT p_partkey AS node,"
-            f" cast(0 as bigint) AS dist FROM part WHERE p_size = 1)"]
-    prev = "r0"
-    for h in (1, 2, 3):
-        ctes.append(f"""r{h} AS (
-        SELECT node, min(dist) AS dist FROM (
-            SELECT e.dst AS node, p.dist + e.w AS dist
-            FROM wsym e JOIN {prev} p ON p.node = e.src
-            UNION ALL SELECT node, dist FROM {prev}
-        ) t GROUP BY node
-    )""")
-        prev = f"r{h}"
+def _sssp_wsym(d: str) -> str:
+    return f"WITH {_weighted_edges_sql(_copurchase_pairs(d))} SELECT src, dst, w FROM wsym"
+
+
+def _sssp_round(wsym: str, prev: str) -> str:
+    """One Bellman-Ford relaxation of the (node, dist) table ``prev``. The
+    dist table is node-domain-bounded and broadcast (the checkpoint's size
+    estimate inherits the edge self-join's), so the edge set never
+    shuffles across rounds."""
     return f"""
-    WITH {_weighted_edges_sql(_copurchase_pairs(DUCK))}, {', '.join(ctes)}
+    WITH wsym AS ({wsym}), p AS ({prev})
+    SELECT node, min(dist) AS dist FROM (
+        SELECT /*+ BROADCAST(p) */ e.dst AS node, p.dist + e.w AS dist
+        FROM wsym e JOIN p ON p.node = e.src
+        UNION ALL SELECT node, dist FROM p
+    ) t GROUP BY node
+    """
+
+
+def _sssp(d: str, wsym: str, r0: str, r2: str) -> str:
+    return f"""
+    WITH r0 AS ({r0}), r3 AS ({_sssp_round(wsym, r2)})
     SELECT rn, node, dist FROM (
         SELECT r3.node, r3.dist,
             cast(row_number() OVER (ORDER BY r3.dist, r3.node) as bigint) AS rn
@@ -270,84 +277,32 @@ def _sssp_oracle() -> str:
     """
 
 
-@register(
+pair(
     "graph_sssp_bellman3",
-    oracle=_sssp_oracle(),
+    _sssp,
+    shared={
+        "wsym": _sssp_wsym,
+        "r0": lambda d: "SELECT DISTINCT p_partkey AS node,"
+        " cast(0 as bigint) AS dist FROM part WHERE p_size = 1",
+        "r1": lambda d, wsym, r0: _sssp_round(wsym, r0),
+        "r2": lambda d, wsym, r1: _sssp_round(wsym, r1),
+    },
     tags=("graph", "iterative"),
     doc="Bounded weighted shortest path (3 Bellman-Ford rounds) over the "
     "co-purchase graph from the p_size=1 seed set; edge cost = "
     "max(1, 11 - min(10, shared orders)) so strong affinity is cheap. "
     "The 20 nearest non-seed parts by (dist, node). Each round is one "
-    "equi-join + min-agg (the distributed Bellman-Ford step); the dist "
-    "frontier is node-domain-bounded and broadcast, the "
-    "localCheckpointed edge set never re-shuffles across rounds (the "
-    "graph_bfs_frontier3 pattern). Oracle: the identical rounds "
-    "unrolled as chained CTEs.",
+    "equi-join + min-agg (the distributed Bellman-Ford step) against the "
+    "node-domain-bounded dist table; the weighted edge set, the seeds and "
+    "each dist table the next round reads twice are localCheckpointed, "
+    "so the edge set never re-shuffles across rounds (the "
+    "graph_bfs_frontier3 pattern).",
 )
-def graph_sssp_bellman3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    pw = spark.sql(_copurchase_pairs(SPARK))
-    w = F.greatest(
-        F.lit(1).cast("long"),
-        F.lit(11).cast("long") - F.least(F.lit(10).cast("long"), F.col("n_orders")),
-    )
-    wsym = (
-        pw.select("src", "dst", w.alias("w"))
-        .unionByName(
-            pw.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), w.alias("w")
-            )
-        )
-        .localCheckpoint()
-    )
-    seeds = (
-        static_table(spark, sf_dir, "part")
-        .where(F.col("p_size") == 1)
-        .select(F.col("p_partkey").alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("long"))
-        .localCheckpoint()
-    )
-    dist = seeds
-    for _ in range(3):
-        relaxed = (
-            wsym.join(F.broadcast(dist), wsym.src == dist.node)
-            .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
-            .unionByName(dist.select("node", "dist"))
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
-        )
-        dist = relaxed
-    from pyspark.sql import Window
-
-    out = (
-        dist.join(F.broadcast(seeds.select("node")), "node", "left_anti")
-        .withColumn(
-            "rn",
-            F.row_number()
-            .over(Window.orderBy(F.col("dist"), F.col("node")))
-            .cast("long"),
-        )
-        .where(F.col("rn") <= 20)
-        .select("rn", "node", "dist")
-        .orderBy("rn")
-    )
-    return out
 
 
-def _jaccard_oracle() -> str:
+def _jaccard(d: str, pw: str, top: str) -> str:
     return f"""
-    WITH {_weighted_edges_sql(_copurchase_pairs(DUCK))},
-    top AS (
-        SELECT src AS a, dst AS b, n_orders FROM (
-            SELECT src, dst, n_orders,
-                row_number() OVER (ORDER BY n_orders DESC, src, dst) AS rn
-            FROM pw
-        ) t WHERE rn <= 20
-    ),
-    sym AS (SELECT src, dst FROM pw UNION ALL SELECT dst, src FROM pw),
+    WITH top AS ({top}), sym AS ({_pw_sym(pw)}),
     deg AS (
         SELECT src AS node, cast(count(*) as bigint) AS deg FROM sym GROUP BY src
     ),
@@ -373,90 +328,55 @@ def _jaccard_oracle() -> str:
     """
 
 
-@register(
+def _jaccard_top(d: str, pw: str) -> str:
+    return f"""
+    SELECT src AS a, dst AS b, n_orders FROM (
+        SELECT src, dst, n_orders,
+            row_number() OVER (ORDER BY n_orders DESC, src, dst) AS rn
+        FROM ({pw}) pw
+    ) t WHERE rn <= 20
+    """
+
+
+pair(
     "graph_neighbor_jaccard",
-    oracle=_jaccard_oracle(),
+    _jaccard,
+    shared={"pw": _copurchase_pairs, "top": _jaccard_top},
     tags=("graph", "similarity"),
     doc="Neighborhood Jaccard similarity of the top-20 co-purchase pairs "
     "(by shared-order weight): |N(a) n N(b)| / |N(a) u N(b)| over the "
     "symmetric edge set (neighborhoods include the partner — the pairs "
     "are adjacent by construction). The link-prediction sibling of "
-    "graph_adamic_adar. The pair table is localCheckpointed ONCE; the "
-    "20-pair probe and the degree table are dimension-sized broadcasts, "
-    "and the intersection meet is a pure equi-join chain (src, then "
-    "(src, dst)) — never quadratic in edges.",
+    "graph_adamic_adar. The pair table and the 20-pair probe are "
+    "localCheckpointed ONCE each; the probe and the degree table are "
+    "dimension-sized, and the intersection meet is a pure equi-join chain "
+    "(src, then (src, dst)) — never quadratic in edges.",
 )
-def graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    pw = spark.sql(_copurchase_pairs(SPARK)).localCheckpoint()
-    top = (
-        pw.withColumn(
-            "rn",
-            F.row_number().over(
-                Window.orderBy(F.col("n_orders").desc(), "src", "dst")
-            ),
-        )
-        .where(F.col("rn") <= 20)
-        .select(F.col("src").alias("a"), F.col("dst").alias("b"), "n_orders")
-        .localCheckpoint()
-    )
-    sym = pw.select("src", "dst").unionByName(
-        pw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    deg = sym.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    s1 = sym.select(F.col("src").alias("a"), F.col("dst").alias("x"))
-    s2 = sym.select(F.col("src").alias("b2"), F.col("dst").alias("x2"))
-    inter = (
-        F.broadcast(top)
-        .join(s1, "a")
-        .join(s2, (F.col("b") == F.col("b2")) & (F.col("x") == F.col("x2")))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    da = F.broadcast(deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a")))
-    db = F.broadcast(deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b")))
-    uni = F.col("deg_a") + F.col("deg_b") - F.col("n_inter")
-    return (
-        top.join(da, "a")
-        .join(db, "b")
-        .join(inter.withColumnRenamed("a", "ia").withColumnRenamed("b", "ib"),
-              (F.col("a") == F.col("ia")) & (F.col("b") == F.col("ib")), "left")
-        .select(
-            F.col("a").alias("part_a"), F.col("b").alias("part_b"), "n_orders",
-            "deg_a", "deg_b",
-            F.coalesce(F.col("n_inter"), F.lit(0)).cast("long").alias("n_inter"),
-        )
-        .withColumn("n_union", uni)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter").cast("double")
-                / F.nullif(F.col("n_union"), F.lit(0)).cast("double"),
-                6,
-            ),
-        )
-        .orderBy("part_a", "part_b")
-    )
 
 
-def _clustering_oracle() -> str:
+def _clustering_hubs(d: str, pw: str) -> str:
     return f"""
-    WITH {_weighted_edges_sql(_copurchase_pairs(DUCK))},
-    sym AS (SELECT src, dst FROM pw UNION ALL SELECT dst, src FROM pw),
+    WITH sym AS ({_pw_sym(pw)}),
     deg AS (
         SELECT src AS node, cast(count(*) as bigint) AS deg FROM sym GROUP BY src
-    ),
-    hubs AS (
-        SELECT node, deg FROM (
-            SELECT node, deg, row_number() OVER (ORDER BY deg DESC, node) AS rn
-            FROM deg
-        ) t WHERE rn <= 10
-    ),
-    nb AS (SELECT h.node, s.dst AS x FROM hubs h JOIN sym s ON s.src = h.node),
+    )
+    SELECT node, deg FROM (
+        SELECT node, deg, row_number() OVER (ORDER BY deg DESC, node) AS rn
+        FROM deg
+    ) t WHERE rn <= 10
+    """
+
+
+def _clustering_nb(d: str, pw: str, hubs: str) -> str:
+    return f"""
+    WITH sym AS ({_pw_sym(pw)}), hubs AS ({hubs})
+    SELECT h.node, s.dst AS x FROM hubs h JOIN sym s ON s.src = h.node
+    """
+
+
+def _clustering(d: str, pw: str, hubs: str, nb: str) -> str:
+    return f"""
+    WITH pw AS ({pw}), hubs AS ({hubs}), nb AS ({nb}),
     tri AS (
         SELECT n1.node, cast(count(*) as bigint) AS n_tri
         FROM nb n1
@@ -472,70 +392,20 @@ def _clustering_oracle() -> str:
     """
 
 
-@register(
+pair(
     "graph_local_clustering",
-    oracle=_clustering_oracle(),
+    _clustering,
+    shared={"pw": _copurchase_pairs, "hubs": _clustering_hubs, "nb": _clustering_nb},
     tags=("graph", "stats"),
     doc="Local clustering coefficient of the 10 highest-degree co-purchase "
     "hubs: triangles through each hub / C(deg, 2) — the per-node "
     "complement of graph_triangle_count's global census. The one "
     "quadratic step (pairs among a hub's neighbors) is bounded to the "
     "top-10 hub neighborhoods by construction (documented; production "
-    "caps or samples hub neighborhoods); the pair probe meets the "
-    "localCheckpointed edge set through a plain (src, dst) equi-join.",
+    "caps or samples hub neighborhoods); the pair table, the hub table "
+    "and the hub neighborhoods are localCheckpointed, and the pair probe "
+    "meets the edge set through a plain (src, dst) equi-join.",
 )
-def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    pw = (
-        spark.sql(_copurchase_pairs(SPARK)).select("src", "dst").localCheckpoint()
-    )
-    sym = pw.unionByName(
-        pw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    deg = sym.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    hubs = (
-        deg.withColumn(
-            "rn", F.row_number().over(Window.orderBy(F.col("deg").desc(), "node"))
-        )
-        .where(F.col("rn") <= 10)
-        .select("node", "deg")
-        .localCheckpoint()
-    )
-    nb = (
-        sym.join(F.broadcast(hubs.select("node")), sym.src == F.col("node"))
-        .select("node", F.col("dst").alias("x"))
-        .localCheckpoint()
-    )
-    n1 = nb.select("node", F.col("x").alias("x1"))
-    n2 = nb.select(F.col("node").alias("node2"), F.col("x").alias("x2"))
-    tri = (
-        n1.join(n2, (F.col("node") == F.col("node2")) & (F.col("x1") < F.col("x2")))
-        .join(pw, (pw.src == F.col("x1")) & (pw.dst == F.col("x2")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("n_tri"))
-    )
-    return (
-        hubs.join(tri, "node", "left")
-        .select(
-            "node", "deg",
-            F.coalesce(F.col("n_tri"), F.lit(0)).cast("long").alias("n_tri"),
-        )
-        .withColumn(
-            "clustering",
-            F.round(
-                (F.lit(2) * F.col("n_tri")).cast("double")
-                / F.nullif(F.col("deg") * (F.col("deg") - 1), F.lit(0)).cast(
-                    "double"
-                ),
-                6,
-            ),
-        )
-        .orderBy(F.col("deg").desc(), "node")
-    )
 
 
 def _powerlaw(d: str, pw: str) -> str:
@@ -1407,7 +1277,7 @@ def _vocab_coverage_summary_sql(d: str) -> str:
     """
 
 
-def _vocab_coverage_oracle() -> str:
+def _vocab_coverage(d: str, summ: str) -> str:
     branches = []
     for k in _COVERAGE_KS:
         branches.append(f"""
@@ -1418,44 +1288,24 @@ def _vocab_coverage_oracle() -> str:
         FROM summ
         """)
     return (
-        f"WITH summ AS ({_vocab_coverage_summary_sql(DUCK)}) "
+        f"WITH summ AS ({summ}) "
         + " UNION ALL ".join(branches)
         + " ORDER BY vocab_k"
     )
 
 
-@register(
+pair(
     "text_vocab_coverage",
-    oracle=_vocab_coverage_oracle(),
+    _vocab_coverage,
+    shared={"summ": _vocab_coverage_summary_sql},
     tags=("text", "quality"),
     doc="Vocabulary coverage curve: the share of all token occurrences "
     "covered by the top-10/100/1000 vocabulary, and the vocabulary size "
     "needed for 90%% coverage — the tokenizer-sizing diagnostic "
-    "(text_oov_rate's aggregate view). The Spark builder computes the "
-    "one-row grid summary distributed (token grid + two windows) and "
-    "collects ONLY that row (O(1) to the driver), emitting the 3-row "
-    "curve locally; the oracle unions three selects from the same "
-    "summary CTE.",
+    "(text_oov_rate's aggregate view). The one-row grid summary (token "
+    "grid + two windows) is computed distributed and localCheckpointed; "
+    "the three curve rows are selects from that one row.",
 )
-def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    row = spark.sql(_vocab_coverage_summary_sql(SPARK)).first()
-    total = None if row is None else row["total_tokens"]
-    out = []
-    for k in _COVERAGE_KS:
-        cov = None if row is None else row[f"c{k}"]
-        ratio = (
-            None
-            if cov is None or not total
-            else round(float(cov) / float(total), 6)
-        )
-        out.append(
-            (k, cov, ratio, total, None if row is None else row["ranks_for_90pct"])
-        )
-    return spark.createDataFrame(
-        out,
-        "vocab_k bigint, covered_tokens bigint, coverage double, "
-        "total_tokens bigint, ranks_for_90pct bigint",
-    ).orderBy("vocab_k")
 
 
 # ---------------------------------------------------------------------------

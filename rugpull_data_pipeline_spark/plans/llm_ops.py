@@ -641,9 +641,10 @@ def _mh_sh_hashed(d: str) -> str:
     )
 
 
-def _mh_bands(d: str, side: bool = False) -> str:
-    """CTE text ``sigs, bands, bands_capped`` over a ``sh_hashed(doc_id,
-    shh)`` CTE; ``side`` carries dedup_minhash_incremental's corpus side.
+def _mh_sigs(side: bool = False) -> str:
+    """The per-doc 16-minhash signature (doc_id, h0..h15) over a
+    ``sh_hashed(doc_id, shh)`` CTE; ``side`` carries
+    dedup_minhash_incremental's corpus side.
 
     One pass, no row explosion: a single 60-bit base hash per shingle, 16
     universal-hash variants as arithmetic expressions, and the 16 minimums
@@ -656,6 +657,18 @@ def _mh_bands(d: str, side: bool = False) -> str:
         f"min(({a} * m + {b}) % {_MINHASH_P}) AS h{j}"
         for j, (a, b) in enumerate(_MINHASH_AB)
     )
+    return f"""
+        SELECT doc_id, {"max(side) AS side, " if side else ""}
+            {min_cols}
+        FROM (SELECT doc_id, {keep}shh % {_MINHASH_P} AS m FROM sh_hashed) t
+        GROUP BY doc_id
+    """
+
+
+def _mh_band_ctes(d: str, side: bool = False) -> str:
+    """CTE text ``bands, bands_capped`` over a ``sigs`` CTE: 4 md5 band
+    keys per doc, buckets over the size cap dropped."""
+    keep = "side, " if side else ""
     band_keys = ", ".join(
         "md5(concat_ws(',', "
         + ", ".join(f"h{_BAND_SIZE * band + r}" for r in range(_BAND_SIZE))
@@ -674,12 +687,6 @@ def _mh_bands(d: str, side: bool = False) -> str:
         FROM sigs, unnest(range(0, {_N_HASHES // _BAND_SIZE})) t(i)
         """
     return f"""
-    sigs AS (
-        SELECT doc_id, {"max(side) AS side, " if side else ""}
-            {min_cols}
-        FROM (SELECT doc_id, {keep}shh % {_MINHASH_P} AS m FROM sh_hashed) t
-        GROUP BY doc_id
-    ),
     bands AS (
         {bands}
     ),
@@ -690,6 +697,14 @@ def _mh_bands(d: str, side: bool = False) -> str:
             FROM bands
         ) f WHERE bsz <= {_LSH_BUCKET_CAP}
     )"""
+
+
+def _mh_bands(d: str, side: bool = False) -> str:
+    """CTE text ``sigs, bands, bands_capped`` over a ``sh_hashed(doc_id,
+    shh)`` CTE (``_mh_sigs``, then ``_mh_band_ctes``)."""
+    return f"""
+    sigs AS ({_mh_sigs(side).rstrip()}
+    ),{_mh_band_ctes(d, side)}"""
 
 
 def _mh_jaccard(d: str) -> tuple[str, str]:

@@ -110,10 +110,16 @@ pair(
 # ---------------------------------------------------------------------------
 
 
-def _cooccurrence_oracle() -> str:
-    return """
-    WITH ut AS (SELECT DISTINCT user_id, event_type FROM events),
-    n AS (SELECT cast(count(DISTINCT user_id) as bigint) AS n_users FROM events),
+def _cooccurrence_ut(d: str) -> str:
+    return "SELECT DISTINCT user_id, event_type FROM events"
+
+
+def _cooccurrence(d: str, ut: str) -> str:
+    # The user total is a 1-row scalar subquery over the distinct table, so
+    # the lift algebra needs no cross join.
+    nu = "cast((SELECT count(DISTINCT user_id) FROM ut) as double)"
+    return f"""
+    WITH ut AS ({ut}),
     ta AS (SELECT event_type, cast(count(*) as bigint) AS c FROM ut GROUP BY event_type),
     pairs AS (
         SELECT a.event_type AS type_a, b.event_type AS type_b,
@@ -123,71 +129,27 @@ def _cooccurrence_oracle() -> str:
         GROUP BY a.event_type, b.event_type
     )
     SELECT p.type_a, p.type_b, p.n_both, ca.c AS n_a, cb.c AS n_b,
-        round(cast(p.n_both as double) / cast(n.n_users as double), 6) AS support,
-        round(cast(p.n_both as double) * cast(n.n_users as double)
+        round(cast(p.n_both as double) / {nu}, 6) AS support,
+        round(cast(p.n_both as double) * {nu}
             / (cast(ca.c as double) * cast(cb.c as double)), 6) AS lift
     FROM pairs p
     JOIN ta ca ON ca.event_type = p.type_a
     JOIN ta cb ON cb.event_type = p.type_b
-    CROSS JOIN n
     ORDER BY type_a, type_b
     """
 
 
-@register(
+pair(
     "events_cooccurrence_lift",
-    oracle=_cooccurrence_oracle(),
+    _cooccurrence,
+    shared={"ut": _cooccurrence_ut},
     tags=("events", "mining"),
     doc="Market-basket association: per-user distinct event-type sets, "
-    "pair support and lift. DataFrame builder, not CTE SQL: Spark does "
-    "not materialize CTEs, so the SQL form scanned events FIVE times "
-    "(pairs twice + per-type + the user total) — localCheckpointing the "
-    "distinct (user, type) table makes it ONE fact scan, with the pair "
-    "self-equi-join (fan-out bounded by the type domain) and both count "
-    "shapes reusing the materialized distinct set. The 1-row user total "
-    "is a broadcast.",
+    "pair support and lift. The distinct (user, type) table is the one "
+    "fact scan, localCheckpointed and read by the pair self-equi-join "
+    "(fan-out bounded by the type domain), the per-type counts and the "
+    "1-row user total (a scalar subquery).",
 )
-def events_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    ut = (
-        static_table(spark, sf_dir, "events")
-        .select("user_id", "event_type")
-        .distinct()
-        .localCheckpoint()
-    )
-    n_users = ut.select("user_id").distinct().count()  # O(1) scalar to driver
-    ta = ut.groupBy("event_type").agg(F.count(F.lit(1)).alias("c"))
-    a, b = ut.alias("a"), ut.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.user_id") == F.col("b.user_id"))
-            & (F.col("a.event_type") < F.col("b.event_type")),
-        )
-        .groupBy(
-            F.col("a.event_type").alias("type_a"),
-            F.col("b.event_type").alias("type_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_both"))
-    )
-    ca = F.broadcast(ta.select(F.col("event_type").alias("type_a"), F.col("c").alias("n_a")))
-    cb = F.broadcast(ta.select(F.col("event_type").alias("type_b"), F.col("c").alias("n_b")))
-    nu = F.lit(float(n_users))
-    return (
-        pairs.join(ca, "type_a")
-        .join(cb, "type_b")
-        .select(
-            "type_a", "type_b", "n_both", "n_a", "n_b",
-            F.round(F.col("n_both").cast("double") / nu, 6).alias("support"),
-            F.round(
-                F.col("n_both").cast("double") * nu
-                / (F.col("n_a").cast("double") * F.col("n_b").cast("double")),
-                6,
-            ).alias("lift"),
-        )
-        .orderBy("type_a", "type_b")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -310,14 +272,18 @@ def _copurchase_pairs(d: str) -> str:
     """
 
 
-def _copurchase_edges(d: str) -> str:
-    """Directed-symmetric distinct co-purchase edges (both orientations)."""
-    return f"""
-    pe AS (SELECT src, dst FROM ({_copurchase_pairs(d)}) pw),
-    sym AS (
-        SELECT src, dst FROM pe UNION ALL SELECT dst AS src, src AS dst FROM pe
+def _pw_sym(pw: str) -> str:
+    """Directed-symmetric edges (src, dst) of the pair table ``pw`` (query
+    text): each pair in both orientations."""
+    return (
+        f"WITH pw AS ({pw}) "
+        "SELECT src, dst FROM pw UNION ALL SELECT dst, src FROM pw"
     )
-    """
+
+
+def _copurchase_sym(d: str) -> str:
+    """Directed-symmetric distinct co-purchase edges."""
+    return _pw_sym(_copurchase_pairs(d))
 
 
 def _bipartite(d: str) -> str:
@@ -349,9 +315,9 @@ pair(
 )
 
 
-def _assortativity(d: str) -> str:
+def _assortativity(d: str, sym: str) -> str:
     return f"""
-    WITH {_copurchase_edges(d)},
+    WITH sym AS ({sym}),
     deg AS (
         SELECT src AS node, cast(count(DISTINCT dst) as bigint) AS deg
         FROM sym GROUP BY src
@@ -381,136 +347,68 @@ def _assortativity(d: str) -> str:
     """
 
 
-@register(
+pair(
     "graph_degree_assortativity",
-    oracle=_assortativity(DUCK),
+    _assortativity,
+    shared={"sym": _copurchase_sym},
     tags=("graph", "stats"),
     doc="Degree assortativity of the co-purchase graph: Pearson r of "
     "endpoint degrees over directed-symmetric edges. Every moment is an "
     "exact integer sum (degrees are ints); one sqrt + division at the "
-    "end — order- and engine-independent. DataFrame builder, not CTE "
-    "SQL: the edge CTE is referenced three times (two degree joins + "
-    "the edge scan), and Spark's non-materialized CTEs recomputed the "
-    "pair self-join six-fold (12 fact scans at sf0.1); localCheckpointing "
-    "the symmetric edge set makes it one pair build, with the bounded "
-    "degree table broadcast onto both endpoints.",
+    "end — order- and engine-independent. The symmetric edge set is read "
+    "three times (the degree table, twice through the endpoint joins, "
+    "and the edge scan), so it is localCheckpointed: one pair build, with "
+    "the bounded degree table joined onto both endpoints.",
 )
-def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import math
-
-    from pyspark.sql import functions as F
-
-    pe = spark.sql(_copurchase_pairs(SPARK)).select("src", "dst")
-    sym = pe.unionByName(
-        pe.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
-    deg = sym.groupBy(F.col("src").alias("node")).agg(
-        F.countDistinct("dst").alias("deg")
-    )
-    ed = (
-        sym.join(
-            F.broadcast(deg.select(F.col("node").alias("src"), F.col("deg").alias("x"))),
-            "src",
-        )
-        .join(
-            F.broadcast(deg.select(F.col("node").alias("dst"), F.col("deg").alias("y"))),
-            "dst",
-        )
-    )
-    m = ed.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").cast("bigint").alias("sx"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("bigint").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("bigint").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("bigint").alias("syy"),
-    ).first()
-    n = int(m["n"])
-    if n == 0:
-        return spark.createDataFrame(
-            [(0, None)], "n_directed_edges bigint, assortativity double"
-        )
-    num = float(n) * float(m["sxy"]) - float(m["sx"]) * float(m["sy"])
-    den = math.sqrt(
-        (float(n) * float(m["sxx"]) - float(m["sx"]) * float(m["sx"]))
-        * (float(n) * float(m["syy"]) - float(m["sy"]) * float(m["sy"]))
-    )
-    r = None if den == 0.0 else num / den
-    out = spark.createDataFrame(
-        [(n, r)], "n_directed_edges bigint, assortativity double"
-    )
-    return out.select(
-        "n_directed_edges", F.round("assortativity", 6).alias("assortativity")
-    )
 
 
 _BFS_SEED = "SELECT DISTINCT p_partkey AS node FROM part WHERE p_size = 1"
 
 
-def _bfs_oracle(d: str) -> str:
-    hops = []
-    prev = "h0"
-    ctes = [f"h0 AS ({_BFS_SEED})"]
-    for h in (1, 2, 3):
-        ctes.append(
-            f"""c{h} AS (
-        SELECT DISTINCT node FROM (
-            SELECT e.dst AS node FROM sym e JOIN {prev} r ON r.node = e.src
-            UNION ALL SELECT node FROM {prev}
-        ) t
-    )"""
-        )
-        prev = f"c{h}"
-    for h, t in ((0, "h0"), (1, "c1"), (2, "c2"), (3, "c3")):
-        hops.append(
-            f"SELECT cast({h} as bigint) AS hop,"
-            f" cast(count(*) as bigint) AS n_reached FROM {t}"
-        )
-    return (
-        f"WITH {_copurchase_edges(d)}, {', '.join(ctes)} "
-        + " UNION ALL ".join(hops)
-        + " ORDER BY hop"
+def _bfs_hop(sym: str, prev: str) -> str:
+    """One cumulative BFS round: the nodes one edge from ``prev``, plus
+    ``prev`` itself. The reached set is node-domain-bounded and broadcast,
+    so each expansion is a map-side probe of the edge table."""
+    return f"""
+    WITH sym AS ({sym}), r AS ({prev})
+    SELECT DISTINCT node FROM (
+        SELECT /*+ BROADCAST(r) */ e.dst AS node FROM sym e JOIN r ON r.node = e.src
+        UNION ALL SELECT node FROM r
+    ) t
+    """
+
+
+def _bfs(d: str, sym: str, h0: str, c1: str, c2: str) -> str:
+    counts = " UNION ALL ".join(
+        f"SELECT cast({h} as bigint) AS hop, cast(count(*) as bigint) AS n_reached"
+        f" FROM {t}"
+        for h, t in ((0, "h0"), (1, "c1"), (2, "c2"), (3, "c3"))
     )
+    return f"""
+    WITH h0 AS ({h0}), c1 AS ({c1}), c2 AS ({c2}),
+    c3 AS ({_bfs_hop(sym, "SELECT node FROM c2")})
+    {counts}
+    ORDER BY hop
+    """
 
 
-@register(
+pair(
     "graph_bfs_frontier3",
-    oracle=_bfs_oracle(DUCK),
+    _bfs,
+    shared={
+        "sym": _copurchase_sym,
+        "h0": lambda d: _BFS_SEED,
+        "c1": lambda d, sym, h0: _bfs_hop(sym, h0),
+        "c2": lambda d, sym, c1: _bfs_hop(sym, c1),
+    },
     tags=("graph", "iterative"),
     doc="3-hop BFS reachability over the co-purchase graph from the "
     "p_size=1 seed set: cumulative frontier expansion, one equi-join + "
-    "DISTINCT per hop (the standard distributed BFS round), only one "
-    "count scalar per hop reaches the driver. Oracle: the same expansion "
-    "unrolled as chained CTEs.",
+    "DISTINCT per hop (the standard distributed BFS round). The symmetric "
+    "edge set and every reached set a later hop reads are "
+    "localCheckpointed, so the edge set never re-shuffles across hops; "
+    "the four per-hop counts run in the query itself.",
 )
-def graph_bfs_frontier3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    pe = spark.sql(_copurchase_pairs(SPARK)).select("src", "dst")
-    sym = pe.unionByName(
-        pe.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
-    reached = (
-        static_table(spark, sf_dir, "part")
-        .where(F.col("p_size") == 1)
-        .select(F.col("p_partkey").alias("node"))
-        .distinct()
-        .localCheckpoint()
-    )
-    rows = [(0, reached.count())]
-    for hop in (1, 2, 3):
-        # Broadcast the reached set (bounded by the node domain) so each
-        # expansion is a map-side semi-probe of the big edge table — the
-        # edge set never shuffles across hops.
-        reached = (
-            sym.join(F.broadcast(reached), sym.src == reached.node)
-            .select(F.col("dst").alias("node"))
-            .unionByName(reached.select("node"))
-            .distinct()
-            .localCheckpoint()
-        )
-        rows.append((hop, reached.count()))
-    return spark.createDataFrame(rows, "hop bigint, n_reached bigint").orderBy("hop")
 
 
 # ---------------------------------------------------------------------------

@@ -56,7 +56,7 @@ from __future__ import annotations
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
-from .llm_ops import _cosine, _mh_sh_hashed
+from .llm_ops import _cosine, _mh_sh_hashed, _mh_sigs
 from .registry import pair, register, static_table
 
 
@@ -927,7 +927,27 @@ _PR_D = 0.85
 _PR_ITERS = 3
 
 
-def _pagerank_oracle(d: str) -> str:
+def _pagerank_edges(d: str) -> str:
+    """Row-normalized event-transition edges (src, dst, w)."""
+    return """
+    WITH edges_raw AS (
+        SELECT prev AS src, event_type AS dst, count(*) AS c
+        FROM (
+            SELECT event_type,
+                lag(event_type) OVER (
+                    PARTITION BY user_id ORDER BY ts, event_id) AS prev
+            FROM events
+        ) t
+        WHERE prev IS NOT NULL
+        GROUP BY prev, event_type
+    ),
+    outs AS (SELECT src, sum(c) AS tot FROM edges_raw GROUP BY src)
+    SELECT e.src, e.dst, cast(e.c as double) / o.tot AS w
+    FROM edges_raw e JOIN outs o ON o.src = e.src
+    """
+
+
+def _pagerank(d: str, edges: str, nodes: str) -> str:
     # Unrolled power iteration, one CTE per step; per-step contribution sums
     # are DECIMAL-quantized so the fold is order-independent (the scores
     # feed the next iteration unrounded). Dangling-mass redistribution is
@@ -944,23 +964,8 @@ def _pagerank_oracle(d: str) -> str:
         GROUP BY n.node
     """
     return f"""
-    WITH edges_raw AS (
-        SELECT prev AS src, event_type AS dst, count(*) AS c
-        FROM (
-            SELECT event_type,
-                lag(event_type) OVER (
-                    PARTITION BY user_id ORDER BY ts, event_id) AS prev
-            FROM events
-        ) t
-        WHERE prev IS NOT NULL
-        GROUP BY prev, event_type
-    ),
-    nodes AS (SELECT DISTINCT event_type AS node FROM events),
-    outs AS (SELECT src, sum(c) AS tot FROM edges_raw GROUP BY src),
-    edges AS (
-        SELECT e.src, e.dst, cast(e.c as double) / o.tot AS w
-        FROM edges_raw e JOIN outs o ON o.src = e.src
-    ),
+    WITH edges AS ({edges}),
+    nodes AS ({nodes}),
     nn AS (SELECT cast(count(*) as double) AS n FROM nodes),
     r0 AS (SELECT node, cast(1 as double) / {nn} AS score FROM nodes),
     r1 AS ({step("r0")}),
@@ -972,66 +977,24 @@ def _pagerank_oracle(d: str) -> str:
     """
 
 
-@register(
+pair(
     "graph_pagerank_power3",
-    oracle=_pagerank_oracle(DUCK),
+    _pagerank,
+    shared={
+        "edges": _pagerank_edges,
+        "nodes": lambda d: "SELECT DISTINCT event_type AS node FROM events",
+    },
     tags=("graph", "iterative"),
     doc="PageRank (d=0.85, 3 power iterations) over the event-transition "
     "graph — on production rugpull data the nodes are wallets and the "
     "edges token transfers, ranking influence in the flow graph; the "
     "fixture's event-type transition graph stands in. The edge table "
-    "(one window pass + row normalization) is built ONCE and "
-    "localCheckpoint'd — the kmeans/cc_fixpoint iteration pattern — and "
-    "each iteration is a broadcast-sized join against it, per-step sums "
-    "DECIMAL-quantized so both engines fold identically. The oracle "
-    "unrolls the same three steps as chained CTEs.",
+    "(one window pass + row normalization) and the node table are built "
+    "ONCE and localCheckpoint'd; the three steps are chained CTEs, each a "
+    "broadcast-sized join against the edge table with per-step sums "
+    "DECIMAL-quantized so both engines fold identically, and the node "
+    "count is a 1-row scalar subquery.",
 )
-def graph_pagerank_power3(spark, sf_dir):
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    ev = static_table(spark, sf_dir, "events")
-    prev = F.lag("event_type").over(
-        Window.partitionBy("user_id").orderBy("ts", "event_id")
-    )
-    edges_raw = (
-        ev.select("event_type", prev.alias("prev"))
-        .where(F.col("prev").isNotNull())
-        .groupBy(F.col("prev").alias("src"), F.col("event_type").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    outs = edges_raw.groupBy("src").agg(F.sum("c").alias("tot"))
-    edges = (
-        edges_raw.join(outs, "src")
-        .select("src", "dst", (F.col("c").cast("double") / F.col("tot")).alias("w"))
-        .localCheckpoint()
-    )
-    nodes = ev.select(F.col("event_type").alias("node")).distinct().localCheckpoint()
-    n = float(nodes.count())  # metadata-sized scalar, like kmeans' k
-    if n == 0:
-        # empty slice: no graph, no ranks — not a ZeroDivisionError
-        return spark.createDataFrame([], "event_type string, pagerank double")
-    r = nodes.withColumn("score", F.lit(1.0 / n))
-    for _ in range(_PR_ITERS):
-        contrib = (
-            edges.join(r, edges.src == r.node)
-            .groupBy("dst")
-            .agg(
-                F.sum((F.col("score") * F.col("w")).cast("decimal(38,18)"))
-                .cast("double")
-                .alias("contrib")
-            )
-        )
-        r = nodes.join(contrib, nodes.node == contrib.dst, "left").select(
-            "node",
-            (
-                F.lit((1.0 - _PR_D) / n)
-                + F.lit(_PR_D) * F.coalesce(F.col("contrib"), F.lit(0.0))
-            ).alias("score"),
-        )
-    return r.select(
-        F.col("node").alias("event_type"), F.round("score", 6).alias("pagerank")
-    ).orderBy(F.desc("pagerank"), "event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -1207,7 +1170,11 @@ def graph_hits_power3(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _minhash_audit(d: str, sh: str) -> str:
+def _minhash_sigs(d: str, sh: str) -> str:
+    return f"WITH sh_hashed AS ({sh}) {_mh_sigs()}"
+
+
+def _minhash_audit(d: str, sh: str, sigs: str) -> str:
     # The dedup pipeline trusts the 16-hash MinHash signature to route
     # near-dup candidates; this audit measures what that trust costs. Both
     # the estimate (matching signature positions / 16) and the exact Jaccard
@@ -1216,7 +1183,7 @@ def _minhash_audit(d: str, sh: str) -> str:
     # bound used: 0.25 = 2 sigma worst-case). Everything is exact rational
     # arithmetic on the cross-engine portable hash, so the audit itself
     # hash-compares.
-    from .llm_ops import _N_HASHES, _mh_bands, _mh_jaccard
+    from .llm_ops import _N_HASHES, _mh_band_ctes, _mh_jaccard
 
     n_match = " + ".join(
         f"(case when a.h{j} = b.h{j} then 1 else 0 end)" for j in range(_N_HASHES)
@@ -1224,11 +1191,13 @@ def _minhash_audit(d: str, sh: str) -> str:
     doc_sets, jacc = _mh_jaccard(d)
     est = f"cast(({n_match}) as double) / {_N_HASHES}"
 
-    # ``sh`` (the hashed-shingle table) is shared: inlined, sigs (consumed
-    # 3x) and doc_sets each re-ran the shingle explode (6 fact scans
-    # planned - the round-11 registry-wide plan audit).
+    # ``sh`` (the hashed-shingle table) is shared: inlined, sigs and
+    # doc_sets each re-ran the shingle explode (6 fact scans planned - the
+    # round-11 registry-wide plan audit). So is ``sigs``: read by both
+    # band self-join sides and both estimate joins, it re-ran the
+    # signature aggregate four times.
     return f"""
-    WITH sh_hashed AS ({sh}),{_mh_bands(d)},
+    WITH sh_hashed AS ({sh}), sigs AS ({sigs}),{_mh_band_ctes(d)},
     candidates AS (
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM bands_capped a
@@ -1259,7 +1228,7 @@ def _minhash_audit(d: str, sh: str) -> str:
 pair(
     "audit_minhash_estimate",
     _minhash_audit,
-    shared={"sh": _mh_sh_hashed},
+    shared={"sh": _mh_sh_hashed, "sigs": _minhash_sigs},
     tags=("dedup", "audit", "sketch"),
     doc="Sketch-accuracy audit: for every LSH candidate pair, the 16-hash "
     "MinHash Jaccard estimate (matching signature positions / 16) next to "
@@ -1269,8 +1238,9 @@ pair(
     "oracle, applied to the dedup family). Same one-pass signature "
     "aggregation and capped band join as dedup_minhash_lsh; everything "
     "is exact rational arithmetic on the portable hash, so even the "
-    "audit hash-compares across engines. The hashed-shingle table is "
-    "localCheckpointed so the explode runs once.",
+    "audit hash-compares across engines. The hashed-shingle table and "
+    "the signature table are localCheckpointed, so the explode and the "
+    "signature aggregate each run once.",
 )
 
 

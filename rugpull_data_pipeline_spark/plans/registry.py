@@ -38,23 +38,28 @@ def _ensure_views(spark: SparkSession, sf_dir: str) -> None:
         _VIEWS_FOR[key] = sf_dir
 
 
-def static_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """View-first gated fixture-table load for DataFrame builders.
+def views_valid(spark: SparkSession, sf_dir: str, name: str) -> bool:
+    """True iff the session's temp view ``name`` is registered for THIS
+    sf_dir, as this registry's view cache records it.
 
-    The registered temp view is used ONLY when this registry's view cache
-    says the session's views point at THIS sf_dir; otherwise the table is
-    loaded straight from the requested directory. Registered builders always
-    run behind ``_ensure_views`` so the view path is the common case — the
-    gate exists for DIRECT callers (tests importing a builder function)
-    whose session may hold views for a different directory, which once made
-    a builder silently compute against a stale fixture (round-7 ADVICE on
-    ``_flagship_e2e``; generalized here per the round-8 verdict so no
-    DataFrame builder reads ``spark.table`` bare)."""
+    Registered builders always run behind ``_ensure_views``, so the view
+    is the common case. The gate exists for DIRECT callers (tests
+    importing a builder function, streaming jobs deciding their source)
+    whose session may hold views for a different directory, which once
+    made a builder silently compute against a stale fixture. A failed
+    catalog probe counts as "not valid": the caller loads the table."""
     try:
-        if _VIEWS_FOR.get(id(spark)) == sf_dir and spark.catalog.tableExists(name):
-            return spark.table(name)
+        return _VIEWS_FOR.get(id(spark)) == sf_dir and spark.catalog.tableExists(name)
     except Exception:  # noqa: BLE001 - catalog probe must never mask the load
-        pass
+        return False
+
+
+def static_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """View-first gated fixture-table load for DataFrame builders: the
+    registered temp view when ``views_valid``, else the table loaded
+    straight from ``sf_dir``."""
+    if views_valid(spark, sf_dir, name):
+        return spark.table(name)
     from ..sources.tables import load_tables
 
     return load_tables(spark, sf_dir, (name,))[name]

@@ -514,149 +514,79 @@ def _pca_xv(d: str) -> str:
     )
 
 
-def _pca_cte_chain() -> str:
-    # Rounds unrolled as chained CTEs (the kmeans/logreg oracle
-    # convention). v0 = 1/8 in every coordinate (unit norm for 64 dims);
-    # each matvec y = X v, c = X^T y runs as decimal-exact sums with the
-    # 64 components re-quantized to 6 dp between rounds — mirroring the
-    # Spark builder's collect → round → literal-rebroadcast exactly.
-    # Ends with a ``loading`` CTE (dm, l) so compositions (the whitened
-    # re-rank) can extend the chain.
-    # AS MATERIALIZED on every re-referenced CTE: DuckDB inlines plain
-    # CTEs, and xv is referenced by every round (see the kmeans oracle's
-    # r9 fix — inlining re-expands the chain and detonated at the
-    # giant-payload surface's 10,048 dims).
-    parts = [f"WITH xv AS MATERIALIZED ({_pca_xv(DUCK)})"]
+def _pca_comp(d: str, xv: str) -> str:
+    # Rounds unrolled as chained CTEs (the kmeans/logreg convention).
+    # v0 = 1/8 in every coordinate (unit norm for 64 dims); each matvec
+    # y = X v, c = X^T y runs as decimal-exact sums with the components
+    # re-quantized to 6 dp between rounds. Returns the last round's
+    # UNnormalized component (dm, m).
+    # AS MATERIALIZED on every re-referenced DuckDB CTE: DuckDB inlines
+    # plain CTEs, and the element table el is read by every round (see the
+    # kmeans oracle's r9 fix — inlining re-expands the chain and detonated
+    # at the giant-payload surface's 10,048 dims).
+    mat = "MATERIALIZED " if d == DUCK else ""
+    parts = [f"WITH el AS {mat}({xv})"]
     prev_v = None  # CTE name holding (dm, m)
     for r in range(1, _PCA_ROUNDS + 1):
         if prev_v is None:
             y_src = (
                 f"SELECT vec_id, "
-                f"{S.dsum('x * cast(0.125 as double)', DUCK)} AS y "
-                f"FROM xv GROUP BY vec_id"
+                f"{S.dsum('x * cast(0.125 as double)', d)} AS y "
+                f"FROM el GROUP BY vec_id"
             )
         else:
             y_src = (
-                f"SELECT xv.vec_id, {S.dsum('xv.x * v.m', DUCK)} AS y "
-                f"FROM xv JOIN {prev_v} v ON xv.dm = v.dm GROUP BY xv.vec_id"
+                f"SELECT el.vec_id, {S.dsum('el.x * v.m', d)} AS y "
+                f"FROM el JOIN {prev_v} v ON el.dm = v.dm GROUP BY el.vec_id"
             )
-        parts.append(f"y{r} AS MATERIALIZED ({y_src})")
+        parts.append(f"y{r} AS {mat}({y_src})")
         parts.append(
-            f"c{r} AS MATERIALIZED (SELECT xv.dm, "
-            f"round({S.dsum('y{r}.y * xv.x'.format(r=r), DUCK)}, 6) AS m "
-            f"FROM xv JOIN y{r} ON xv.vec_id = y{r}.vec_id GROUP BY xv.dm)"
+            f"c{r} AS {mat}(SELECT el.dm, "
+            f"round({S.dsum(f'y{r}.y * el.x', d)}, 6) AS m "
+            f"FROM el JOIN y{r} ON el.vec_id = y{r}.vec_id GROUP BY el.dm)"
         )
         prev_v = f"c{r}"
-    last = prev_v
-    chain = (
-        ",\n".join(parts)
-        + f""",
-    nrm AS (
-        SELECT sqrt({S.dsum('m * m', DUCK)}) AS nr FROM {last}
-    ),
-    loading AS MATERIALIZED (
-        SELECT {last}.dm, round({last}.m / nrm.nr, 6) AS l
-        FROM {last}, nrm
-    )"""
-    )
-    return chain
+    return ",\n".join(parts) + f"\nSELECT dm, m FROM {prev_v}"
 
 
-def _pca_oracle() -> str:
-    return (
-        _pca_cte_chain()
-        + """
+def _pca_loading(d: str, comp: str) -> str:
+    """The normalized component (dm, l). nullif: all-zero embeddings give
+    a 0-norm component, whose loadings are NULL rather than an ANSI
+    division error. The component is read twice: MATERIALIZED on DuckDB,
+    which would otherwise run the power rounds once per read."""
+    mat = "MATERIALIZED " if d == DUCK else ""
+    return f"""
+    WITH comp AS {mat}({comp}),
+    nrm AS (SELECT sqrt({S.dsum('m * m', d)}) AS nr FROM comp)
+    SELECT comp.dm, round(comp.m / nullif(nrm.nr, cast(0 as double)), 6) AS l
+    FROM comp, nrm
+    """
+
+
+def _pca_power1(d: str, comp: str) -> str:
+    return f"""
+    WITH loading AS ({_pca_loading(d, comp)})
     SELECT dm AS dim, l AS loading FROM loading ORDER BY dim
     """
-    )
 
 
-def _round_half_up6(x: float) -> float:
-    import decimal
-
-    return float(
-        decimal.Decimal(repr(x)).quantize(
-            decimal.Decimal("0.000001"), rounding=decimal.ROUND_HALF_UP
-        )
-    )
-
-
-def _pca_power_components(spark) -> tuple[DataFrame, list[float] | None]:
-    """Run the 2-round power iteration; return the checkpointed
-    (vec_id, dm, x) element table with the 6-dp-quantized UNnormalized
-    second-round component vector (matches the oracle's c2), or None for
-    the vector when the embedding table is empty (no component rows).
-
-    The dimension count is DERIVED from the table (max dim + 1), never
-    hardcoded: a fixed 64 crashed with IndexError the moment the
-    giant-payload sweep inflated the embeddings to 10,048 dims (r9). The
-    fixed 0.125 init stays — power iteration only needs a nonzero start,
-    and both engines share the constant so the 6-dp quantization chain
-    stays bit-identical at any dimensionality."""
-    xv = spark.sql(_pca_xv(SPARK)).localCheckpoint()
-    ndims_row = spark.sql("SELECT max(dm) + 1 AS n FROM {xv}", xv=xv).first()
-    ndims = ndims_row["n"] if ndims_row else None
-    if not ndims:
-        return xv, None  # empty input: no component rows at all
-    v = [0.125] * ndims
-    for _ in range(_PCA_ROUNDS):
-        vals = ", ".join(
-            f"({i}, cast({v[i]!r} as double))" for i in range(ndims)
-        )
-        comp = spark.sql(
-            f"""
-            WITH vt AS (SELECT * FROM VALUES {vals} AS t(dm, m)),
-            y AS (
-                SELECT xv.vec_id, {S.dsum('xv.x * vt.m', SPARK)} AS y
-                FROM {{xv}} xv JOIN vt ON xv.dm = vt.dm GROUP BY xv.vec_id
-            )
-            SELECT xv.dm, round({S.dsum('y.y * xv.x', SPARK)}, 6) AS m
-            FROM {{xv}} xv JOIN y ON xv.vec_id = y.vec_id GROUP BY xv.dm
-            """,
-            xv=xv,
-        ).collect()
-        if not comp:
-            return xv, None  # empty input: no component rows at all
-        nxt = [0.0] * ndims
-        for row in comp:
-            nxt[row["dm"]] = _round_half_up6(row["m"])
-        v = nxt
-    return xv, v
-
-
-@register(
+pair(
     "sim_pca_power1",
-    oracle=_pca_oracle(),
+    _pca_power1,
+    shared={"xv": _pca_xv, "comp": _pca_comp},
     tags=("similarity", "iterative"),
     doc="Top principal direction of the embedding table by 2 rounds of "
     "power iteration on the (uncentered) Gram matrix — the whitening / "
     "anisotropy probe an embedding-dedup stage runs before trusting "
     "cosine thresholds (dominant-direction removal à la all-but-the-top). "
-    "Each round is two co-partitioned hash-aggs against a 64-row "
-    "broadcast vector (y = Xv then c = X^T y); only 64 floats reach the "
-    "driver per round, re-quantized to 6 dp before rebroadcast (the "
-    "kmeans/pagerank/logreg broadcast-iteration contract), with "
-    "normalization deferred to one final 64-row SQL step so no driver fp "
-    "enters the result. Oracle = the rounds unrolled as chained CTEs "
-    "over decimal-exact sums.",
+    "Each round is two co-partitioned hash-aggs against the previous "
+    "round's 64-row component table (y = Xv then c = X^T y), re-quantized "
+    "to 6 dp between rounds; the long-format element table and the final "
+    "component are localCheckpointed, and normalization is one 64-row "
+    "step, so no driver fp enters the result. The dimension count is "
+    "whatever the element table holds (the giant-payload sweep runs "
+    "10,048 dims).",
 )
-def sim_pca_power1(spark, sf_dir):
-    _, v = _pca_power_components(spark)
-    if v is None:
-        # empty slice: mirror the oracle's 0-row answer
-        return spark.createDataFrame([], "dim int, loading double")
-    vals = ", ".join(f"({i}, cast({v[i]!r} as double))" for i in range(len(v)))
-    # nullif: all-zero embeddings give a 0-norm component — the oracle's
-    # division returns NULL loadings on its 64-row grid, not an ANSI error
-    return spark.sql(
-        f"""
-        WITH ct AS (SELECT * FROM VALUES {vals} AS t(dm, m)),
-        nrm AS (SELECT sqrt({S.dsum('m * m', SPARK)}) AS nr FROM ct)
-        SELECT ct.dm AS dim,
-            round(ct.m / nullif(nrm.nr, cast(0 as double)), 6) AS loading
-        FROM ct, nrm ORDER BY dim
-        """
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1290,8 +1220,7 @@ def audit_multiprobe_recall(spark, sf_dir):
 def _whiten_body(d: str) -> str:
     """From CTEs ``xv`` (vec_id, dm, x) and ``loading`` (dm, l): deflate
     every vector by its top-PC projection and rank cosine top-5 for the
-    5 query vectors. Appended after the PCA chain (oracle) or literal
-    loading CTEs (Spark builder). On the DuckDB side the re-referenced
+    5 query vectors. On the DuckDB side the re-referenced
     CTEs are MATERIALIZED (defl is read three times; plain-CTE inlining
     re-expanded the whole xv-join prefix per reference and timed out on
     the giant-payload surface's 10k dims, r9)."""
@@ -1338,13 +1267,18 @@ def _whiten_body(d: str) -> str:
     """
 
 
-def _whiten_oracle() -> str:
-    return _pca_cte_chain() + ",\n" + _whiten_body(DUCK)
+def _whiten(d: str, xv: str, loading: str) -> str:
+    mat = "MATERIALIZED " if d == DUCK else ""
+    return f"""
+    WITH xv AS {mat}({xv}), loading AS {mat}({loading}),
+    {_whiten_body(d)}
+    """
 
 
-@register(
+pair(
     "sim_whiten_rerank",
-    oracle=_whiten_oracle(),
+    _whiten,
+    shared={"xv": _pca_xv, "comp": _pca_comp, "loading": _pca_loading},
     tags=("similarity", "iterative"),
     doc="All-but-the-top whitened retrieval (Mu & Viswanath 2018): every "
     "embedding is deflated by its projection onto the corpus's top "
@@ -1353,36 +1287,11 @@ def _whiten_oracle() -> str:
     "common direction that inflates all similarities and hides true "
     "neighbors. Top-5 per query over the deflated vectors; projections "
     "9-dp-quantized and all sums decimal-exact, so the whole "
-    "PCA-then-rerank composition hash-matches the unrolled oracle. The "
-    "deflation is a map-side subtraction once the 64-float direction "
-    "broadcasts — at 100 TB it rides the same scan as the ranking.",
+    "PCA-then-rerank composition hash-matches its oracle. The element "
+    "table, the component and the 64-row loading table are "
+    "localCheckpointed; the deflation is a map-side subtraction against "
+    "the loading table — at 100 TB it rides the same scan as the ranking.",
 )
-def sim_whiten_rerank(spark, sf_dir):
-    xv, comp = _pca_power_components(spark)
-    if comp is None:
-        # empty slice: mirror the oracle's 0-row answer
-        return spark.createDataFrame(
-            [], "query_id long, vec_id long, cosine double, rnk int"
-        )
-    vals = ", ".join(
-        f"({i}, cast({comp[i]!r} as double))" for i in range(len(comp))
-    )
-    # nullif: all-zero embeddings give a 0-norm direction — loadings go
-    # NULL, the deflated norms go NULL, and the nrm2 > 0 filter drops
-    # every pair identically on both engines (no ANSI error)
-    return spark.sql(
-        f"""
-        WITH xv AS (SELECT * FROM {{xv}}),
-        ct AS (SELECT * FROM VALUES {vals} AS t(dm, m)),
-        nrm AS (SELECT sqrt({S.dsum('m * m', SPARK)}) AS nr FROM ct),
-        loading AS (SELECT ct.dm,
-                        round(ct.m / nullif(nrm.nr, cast(0 as double)), 6)
-                            AS l
-                    FROM ct, nrm),
-        {_whiten_body(SPARK)}
-        """,
-        xv=xv,
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -54,7 +54,7 @@ from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
 from ..sources.tables import load_tables
 from ..tmpdirs import scratch_dir
-from .registry import register
+from .registry import register, static_table, views_valid
 
 _WM_DELAY = "30 minutes"
 _GUARD_N = 2000
@@ -85,46 +85,21 @@ def _events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _static_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """The ``_events_table`` view-first contract generalized to any fixture
-    table the composed streaming jobs read (lineitem/supplier/part/...):
-    the registered temp view is used ONLY when the registry's view cache
-    says the session's views point at THIS sf_dir; otherwise load the
-    table straight from the requested directory. Keeps direct callers
-    whose session holds views for a different directory from silently
-    computing against the wrong fixture (round-7 ADVICE on
-    _flagship_e2e's unconditional spark.table reads)."""
-    try:
-        from .registry import _VIEWS_FOR
+    """``registry.static_table`` for the fixture tables the composed
+    streaming jobs read (lineitem/supplier/part/...), with the session
+    tuned on the view path too (the parquet path tunes in load_tables).
 
-        if _VIEWS_FOR.get(id(spark)) == sf_dir and spark.catalog.tableExists(name):
-            from ..session import tune_session
-
-            tune_session(spark)
-            return spark.table(name)
-    except Exception:  # noqa: BLE001 - catalog probe must never mask the load
-        pass
-    return load_tables(spark, sf_dir, (name,))[name]
-
-
-def _views_valid(spark: SparkSession, sf_dir: str, name: str) -> bool:
-    """True iff the session's registered temp views point at ``sf_dir`` —
-    the _static_table gate, exposed so STREAMING code can decide the source
-    ONCE at stream-build time on the OUTER session. foreachBatch bodies
-    must NOT call _static_table on the batch session: its parquet fallback
-    runs load_tables -> tune_session on the micro-batch-cloned session,
-    and re-setting spark.sql.adaptive.enabled there re-enables AQE inside
-    a stateful micro-batch plan (the engine disables it), which breaks
+    Never call it inside a foreachBatch body: on the micro-batch-cloned
+    session, re-setting spark.sql.adaptive.enabled re-enables AQE inside a
+    stateful micro-batch plan (the engine disables it), which breaks
     state-store commit accounting (STATE_STORE_COMMIT_VALIDATION_FAILED,
-    'Expected 8 commits but got 0' — found by the empty-input sweep on
-    the composed flagship)."""
-    try:
-        from .registry import _VIEWS_FOR
+    'Expected 8 commits but got 0' — found by the empty-input sweep on the
+    composed flagship). Streaming code decides its source ONCE on the
+    outer session with ``registry.views_valid`` instead."""
+    from ..session import tune_session
 
-        return _VIEWS_FOR.get(id(spark)) == sf_dir and spark.catalog.tableExists(
-            name
-        )
-    except Exception:  # noqa: BLE001
-        return False
+    tune_session(spark)
+    return static_table(spark, sf_dir, name)
 
 
 def _events_src(spark: SparkSession, sf_dir: str, cols: list[str]) -> DataFrame:
@@ -1773,14 +1748,14 @@ def _flagship_e2e(
             )
 
     # Decide the per-batch part source ONCE, on the OUTER session (see
-    # _views_valid: calling _static_table on the batch session corrupts
+    # _static_table: calling it on the batch session corrupts
     # stateful micro-batch execution). View-first keeps the sweep's input
     # substitution reaching the stream; the fallback DataFrame is built
     # here but re-reads its parquet at every batch action, so ST5's
     # per-batch re-resolution holds either way.
     part_dim = (
         None
-        if _views_valid(spark, sf_dir, "part")
+        if views_valid(spark, sf_dir, "part")
         else load_tables(spark, sf_dir, ("part",))["part"]
     )
 

@@ -45,7 +45,7 @@ from __future__ import annotations
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
-from .registry import pair, register
+from .registry import pair
 
 
 # ---------------------------------------------------------------------------
@@ -998,118 +998,92 @@ def _lr_z(w: list[str]) -> str:
     )
 
 
-def _lr_grad_cols(d: str, z: str) -> list[str]:
-    p = f"(cast(1 as double) / (cast(1 as double) + exp(-{z})))"
+def _lr_grad_cols(d: str) -> list[str]:
+    """The 4 gradient columns over rows carrying the prediction ``p``."""
     xs = ["cast(1 as double)", "x1", "x2", "x3"]
     return [
-        f"{S.dsum(f'(y - {p}) * {x}', d)} / cast(count(*) as double) AS g{j}"
+        f"{S.dsum(f'(y - p) * {x}', d)} / cast(count(*) as double) AS g{j}"
         for j, x in enumerate(xs)
     ]
 
 
-def _lr_oracle() -> str:
-    # The 3 gradient-descent rounds UNROLLED as chained 1-row CTEs (the
-    # pagerank/kmeans oracle convention): each round aggregates the exact
-    # decimal gradient over the feature table, updates the quantized
-    # weights, and the next round's z references them via a cross join.
-    parts = [f"WITH feats AS ({_lr_feats(DUCK)})"]
-    w_cols = ["w0", "w1", "w2", "w3"]
-    prev = None
-    for it in range(1, _LR_ITERS + 1):
-        if prev is None:
-            z = _lr_z(["0", "0", "0", "0"])
-            src = "feats"
-        else:
-            z = _lr_z([f"{prev}.{c}" for c in w_cols])
-            src = f"feats, {prev}"
-        gcols = ", ".join(_lr_grad_cols(DUCK, z))
-        parts.append(f"g{it} AS (SELECT {gcols} FROM {src})")
-        upd = ", ".join(
-            f"round(coalesce({prev}.{c} + 0, 0) + cast({_LR_RATE} as double)"
-            f" * g{it}.g{j}, 6) AS {c}"
-            if prev
-            else f"round(cast({_LR_RATE} as double) * g{it}.g{j}, 6) AS {c}"
-            for j, c in enumerate(w_cols)
-        )
-        frm = f"g{it}, {prev}" if prev else f"g{it}"
-        parts.append(f"wr{it} AS (SELECT {upd} FROM {frm})")
-        prev = f"wr{it}"
-    zf = _lr_z([f"{prev}.{c}" for c in w_cols])
-    return (
-        ",\n".join(parts).replace("WITH feats AS", "WITH feats AS", 1)
-        + f"""
-    SELECT {prev}.w0, {prev}.w1, {prev}.w2, {prev}.w3,
-        round({S.isum(f'CASE WHEN ({zf} > 0) = (y = 1) THEN 1 ELSE 0 END', DUCK)}
-            / cast(count(*) as double), 6) AS train_accuracy,
+def _lr_wv(d: str, table: str) -> str:
+    """The weights of the 1-row table ``table`` as ONE struct-valued scalar
+    subquery, so each round reads its predecessor once and the inlined
+    rounds nest linearly (a subquery per weight multiplied the plan by 4
+    at every round)."""
+    if d == SPARK:
+        fields = ", ".join(f"'w{j}', w{j}" for j in range(4))
+        return f"(SELECT named_struct({fields}) FROM {table})"
+    fields = ", ".join(f"w{j} := w{j}" for j in range(4))
+    return f"(SELECT struct_pack({fields}) FROM {table})"
+
+
+def _lr_round(d: str, prev: str | None) -> str:
+    """One full-batch gradient-descent round over ``feats``: the exact
+    decimal gradient, then the 6-dp (half-up) update of the weights in the
+    previous round's 1-row table ``prev`` (None: all zero)."""
+    if prev is None:
+        rows = "SELECT y, x1, x2, x3 FROM feats"
+        z = _lr_z(["0"] * 4)
+        carry = ""
+        upd = [f"round(cast({_LR_RATE} as double) * g{j}, 6)" for j in range(4)]
+    else:
+        rows = f"SELECT y, x1, x2, x3, {_lr_wv(d, prev)} AS wv FROM feats"
+        z = _lr_z([f"wv.w{j}" for j in range(4)])
+        carry = "".join(f", max(wv.w{j}) AS pw{j}" for j in range(4))
+        upd = [
+            f"round(coalesce(pw{j} + 0, 0) + cast({_LR_RATE} as double) * g{j}, 6)"
+            for j in range(4)
+        ]
+    p = f"cast(1 as double) / (cast(1 as double) + exp(-{z}))"
+    return f"""
+        SELECT {", ".join(f"{u} AS w{j}" for j, u in enumerate(upd))} FROM (
+            SELECT {", ".join(_lr_grad_cols(d))}{carry}
+            FROM (SELECT *, {p} AS p FROM ({rows}) r) t
+        ) g"""
+
+
+def _lr_fit(d: str, feats: str) -> str:
+    # The rounds unrolled as chained 1-row CTEs; the final accuracy reads
+    # the last round's weights. HAVING keeps an empty feature table a
+    # 0-row answer (no fit). DuckDB materializes the feature table, which
+    # every round reads.
+    mat = "MATERIALIZED " if d == DUCK else ""
+    rounds = ",\n".join(
+        f"wr{k} AS ({_lr_round(d, f'wr{k - 1}' if k > 1 else None)})"
+        for k in range(1, _LR_ITERS + 1)
+    )
+    zf = _lr_z([f"wv.w{j}" for j in range(4)])
+    hit = f"CASE WHEN ({zf} > 0) = (y = 1) THEN 1 ELSE 0 END"
+    return f"""
+    WITH feats AS {mat}({feats}),
+    {rounds}
+    SELECT {", ".join(f"max(wv.w{j}) AS w{j}" for j in range(4))},
+        round({S.isum(hit, d)} / cast(count(*) as double), 6) AS train_accuracy,
         cast(count(*) as bigint) AS n_rows
-    FROM feats, {prev}
-    GROUP BY {prev}.w0, {prev}.w1, {prev}.w2, {prev}.w3
+    FROM (SELECT y, x1, x2, x3, {_lr_wv(d, f"wr{_LR_ITERS}")} AS wv FROM feats) t
+    HAVING count(*) > 0
     """
-    )
 
 
-def _round_half_up6(x: float) -> float:
-    import decimal
-
-    return float(
-        decimal.Decimal(repr(x)).quantize(
-            decimal.Decimal("0.000001"), rounding=decimal.ROUND_HALF_UP
-        )
-    )
-
-
-@register(
+pair(
     "mlprep_logreg_gd3",
-    oracle=_lr_oracle(),
+    _lr_fit,
+    shared={"feats": _lr_feats},
     tags=("mlprep", "iterative"),
     doc="Logistic regression (is-English from 3 document stats) trained by "
     "3 rounds of FULL-BATCH gradient descent — the model-in-the-pipeline "
     "quality-classifier shape (FineWeb/CCNet train exactly such gates): "
     "each round is ONE map-side-combinable aggregation of per-row "
-    "gradient contributions (exact decimal sums), and only the 4-float "
-    "gradient reaches the driver — the kmeans/pagerank broadcast-"
-    "iteration contract. Weights quantize to 6 dp (SQL half-up, mirrored "
-    "driver-side with decimal ROUND_HALF_UP) so both engines fold "
-    "identically; the final accuracy tests z > 0, not sigmoid > 0.5, "
-    "keeping the decision boundary exp()-free and exact. Oracle = the 3 "
-    "rounds unrolled as chained 1-row CTEs.",
+    "gradient contributions (exact decimal sums) into a 1-row weight "
+    "table, which the next round reads as one scalar subquery. The "
+    "feature table is localCheckpointed; the rounds are chained CTEs, and "
+    "nothing reaches the driver. Weights quantize to 6 dp (SQL half-up) "
+    "so both engines fold identically; the final accuracy tests z > 0, "
+    "not sigmoid > 0.5, keeping the decision boundary exp()-free and "
+    "exact.",
 )
-def mlprep_logreg_gd3(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    feats = spark.sql(_lr_feats(SPARK)).localCheckpoint()
-    n = feats.count()
-    if n == 0:
-        # empty slice: no fit — mirror the oracle's 0-row answer instead
-        # of a None-gradient TypeError (or an ANSI 0-count division)
-        return spark.createDataFrame(
-            [],
-            "w0 double, w1 double, w2 double, w3 double,"
-            " train_accuracy double, n_rows bigint",
-        )
-    w = ["0", "0", "0", "0"]
-    for _ in range(_LR_ITERS):
-        z = _lr_z(w)
-        row = feats.agg(
-            *[F.expr(c.split(" AS ")[0]).alias(f"g{j}")
-              for j, c in enumerate(_lr_grad_cols(SPARK, z))]
-        ).collect()[0]
-        w = [
-            repr(_round_half_up6(float(w[j]) + float(_LR_RATE) * row[f"g{j}"]))
-            for j in range(4)
-        ]
-    zf = _lr_z(w)
-    return feats.agg(
-        F.expr(f"cast({w[0]} as double)").alias("w0"),
-        F.expr(f"cast({w[1]} as double)").alias("w1"),
-        F.expr(f"cast({w[2]} as double)").alias("w2"),
-        F.expr(f"cast({w[3]} as double)").alias("w3"),
-        F.expr(
-            f"round({S.isum(f'CASE WHEN ({zf} > 0) = (y = 1) THEN 1 ELSE 0 END', SPARK)}"
-            " / cast(count(*) as double), 6)"
-        ).alias("train_accuracy"),
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
+from rugpull_data_pipeline_spark.plans import registry
 from rugpull_data_pipeline_spark.plans.mlprep_ops import (
     _acf_lags,
     _feature_hash,
@@ -345,9 +346,10 @@ def test_pagerank_hand_graph(hand_views):
             (4, 10, 2, "a", None), (5, 20, 2, "b", None), (6, 30, 2, "a", None),
         ],
     )
-    from rugpull_data_pipeline_spark.plans.mlprep_ops import graph_pagerank_power3
-
-    got = {r.event_type: r.pagerank for r in graph_pagerank_power3(spark, "unused").collect()}
+    got = {
+        r.event_type: r.pagerank
+        for r in registry.get("graph_pagerank_power3").builder(spark, "unused").collect()
+    }
     assert got["a"] == pytest.approx(0.339430, abs=1e-6)
     assert got["b"] == pytest.approx(0.660570, abs=1e-6)
 

@@ -472,3 +472,62 @@ def test_shared_core_must_read_an_earlier_core(shared):
     with pytest.raises(ValueError, match="reads \\['b'\\]"):
         registry.pair("_bad_core_order", lambda d, a: "SELECT * FROM a", shared=shared)
     assert "_bad_core_order" not in registry._REGISTRY
+
+
+# Build-time Spark jobs (sf0.001) of the iterative and driver-scalar queries
+# when each was a hand-written DataFrame builder that looped on the driver
+# (count/first/collect per round, an eager localCheckpoint per frame). Run
+# as registry.pair chains, their unrolled rounds are checkpointed cores and
+# plain CTEs, so a build may not start more jobs than that.
+_HAND_BUILDER_JOBS = {
+    "graph_bfs_frontier3": 23,
+    "graph_degree_assortativity": 10,
+    "events_cooccurrence_lift": 5,
+    "graph_sssp_bellman3": 15,
+    "graph_neighbor_jaccard": 5,
+    "graph_local_clustering": 8,
+    "text_vocab_coverage": 3,
+    "graph_pagerank_power3": 9,
+    "mlprep_logreg_gd3": 9,
+    "sim_pca_power1": 13,
+    "sim_whiten_rerank": 13,
+}
+
+
+def _build_jobs(spark, name: str) -> int:
+    """Spark jobs started while ``name``'s builder constructs its frame."""
+    sc = spark.sparkContext
+    registry._ensure_views(spark, SF)
+    group = f"build:{name}"
+    sc.setJobGroup(group, group)
+    try:
+        registry.get(name).builder(spark, SF)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("name", sorted(_HAND_BUILDER_JOBS))
+def test_unrolled_pair_builds_start_no_more_jobs(spark, name):
+    jobs = _build_jobs(spark, name)
+    assert jobs <= _HAND_BUILDER_JOBS[name], f"{name}: {jobs} build jobs"
+    if name == "graph_bfs_frontier3":
+        # its per-hop counts run in the query, not in the build
+        assert jobs < _HAND_BUILDER_JOBS[name]
+
+
+def test_concurrent_pair_builds_match_sequential(spark):
+    """Two threads building the same checkpointed-core chain in one session
+    get the sequential answer: the cores are per-build DataFrames, never
+    session-wide names one build could read from the other."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def build():
+        return registry.get("graph_bfs_frontier3").builder(spark, SF).collect()
+
+    registry._ensure_views(spark, SF)
+    want = build()
+    with ThreadPoolExecutor(2) as pool:
+        got = [f.result() for f in [pool.submit(build) for _ in range(2)]]
+    assert got == [want, want]

@@ -15,6 +15,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
+from rugpull_data_pipeline_spark.plans import registry
 
 PROP = dict(
     max_examples=5,
@@ -111,8 +112,6 @@ def test_t_closeness_matches_bruteforce(hand_views, rows):
 )
 def test_sssp_matches_bruteforce(hand_views, pairs, seeds):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.analytics_ops import graph_sssp_bellman3
-
     li = [
         (o, p, i, 1, 1.0, 1.0, 0.0, 0.0, "N", "O", 1_700_000_000 + i)
         for i, (o, p) in enumerate(pairs)
@@ -131,7 +130,10 @@ def test_sssp_matches_bruteforce(hand_views, pairs, seeds):
         "p_partkey long, p_name string, p_brand string, p_type string, "
         "p_size int, p_retailprice double",
     ).createOrReplaceTempView("part")
-    got = [(r.rn, r.node, r.dist) for r in graph_sssp_bellman3(spark, "unused").collect()]
+    got = [
+        (r.rn, r.node, r.dist)
+        for r in registry.get("graph_sssp_bellman3").builder(spark, "unused").collect()
+    ]
 
     by_order: dict[int, set[int]] = {}
     for o, p in pairs:

@@ -13,6 +13,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
+from rugpull_data_pipeline_spark.plans import registry
 
 PROP = dict(
     max_examples=5,
@@ -69,12 +70,10 @@ def _copurchase_sym(pairs):
 )
 def test_assortativity_matches_bruteforce(hand_views, pairs):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.mining_ops import (
-        graph_degree_assortativity,
-    )
-
     _mk_lineitem(spark, pairs)
-    row = graph_degree_assortativity(spark, "unused").collect()[0]
+    row = (
+        registry.get("graph_degree_assortativity").builder(spark, "unused").collect()[0]
+    )
 
     edges = _copurchase_sym(pairs)
     deg: dict[int, int] = {}
@@ -117,8 +116,6 @@ def test_assortativity_matches_bruteforce(hand_views, pairs):
 @pytest.mark.slow_property
 def test_bfs_frontier_matches_bruteforce(hand_views, pairs, seeds):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.mining_ops import graph_bfs_frontier3
-
     _mk_lineitem(spark, pairs)
     all_parts = sorted({p for _, p in pairs} | seeds)
     spark.createDataFrame(
@@ -129,7 +126,10 @@ def test_bfs_frontier_matches_bruteforce(hand_views, pairs, seeds):
         "p_partkey long, p_name string, p_brand string, p_type string, "
         "p_size int, p_retailprice double",
     ).createOrReplaceTempView("part")
-    got = {r.hop: r.n_reached for r in graph_bfs_frontier3(spark, "unused").collect()}
+    got = {
+        r.hop: r.n_reached
+        for r in registry.get("graph_bfs_frontier3").builder(spark, "unused").collect()
+    }
 
     edges = _copurchase_sym(pairs)
     adj: dict[int, set[int]] = {}
@@ -194,10 +194,6 @@ def test_bitmap_distinct_matches_sets(hand_views, evs):
 )
 def test_cooccurrence_lift_matches_bruteforce(hand_views, evs):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.mining_ops import (
-        events_cooccurrence_lift,
-    )
-
     rows = [
         (i, 1_700_000_000 + i, u, t, 1.0) for i, (u, t) in enumerate(evs)
     ]
@@ -208,7 +204,7 @@ def test_cooccurrence_lift_matches_bruteforce(hand_views, evs):
     ).createOrReplaceTempView("events")
     got = {
         (r.type_a, r.type_b): r
-        for r in events_cooccurrence_lift(spark, "unused").collect()
+        for r in registry.get("events_cooccurrence_lift").builder(spark, "unused").collect()
     }
 
     users = {u for u, _ in evs}

@@ -14,6 +14,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
+from rugpull_data_pipeline_spark.plans import registry
 
 PROP = dict(
     max_examples=5,
@@ -305,15 +306,13 @@ def test_ridge_closed_form_matches_bruteforce(hand_views, docs):
 @pytest.mark.slow_property
 def test_pagerank_matches_bruteforce(hand_views, seq):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.mlprep_ops import (
-        _PR_D, _PR_ITERS, graph_pagerank_power3,
-    )
+    from rugpull_data_pipeline_spark.plans.mlprep_ops import _PR_D, _PR_ITERS
 
     seq = list(seq) + [(9, "a"), (9, "b")]  # at least one edge
     rows = [(i, 100 + i, u, et, 1.0) for i, (u, et) in enumerate(seq)]
     _mk_events(spark, rows)
     got = {r.event_type: r.pagerank
-           for r in graph_pagerank_power3(spark, "unused").collect()}
+           for r in registry.get("graph_pagerank_power3").builder(spark, "unused").collect()}
 
     per_user: dict[int, list] = {}
     for i, (u, et) in enumerate(seq):

@@ -17,7 +17,6 @@ from rugpull_data_pipeline_spark.plans.stats_eval import (
     _ks_drift,
     _stump,
     _zipf,
-    sim_pca_power1,
 )
 
 
@@ -173,7 +172,10 @@ def test_pca_single_varying_dim_gets_unit_loading(hand_views):
     spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     ).createOrReplaceTempView("embeddings")
-    res = {r.dim: r.loading for r in sim_pca_power1(spark, "unused").collect()}
+    res = {
+        r.dim: r.loading
+        for r in registry.get("sim_pca_power1").builder(spark, "unused").collect()
+    }
     assert res[0] == pytest.approx(1.0, abs=1e-6)
     assert all(abs(res[d]) < 1e-9 for d in range(1, 64))
 
@@ -303,7 +305,6 @@ def test_multiprobe_recall_dominates_home_bucket(spark):
 
 def test_whiten_rerank_removes_common_direction(hand_views):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.stats_eval import sim_whiten_rerank
     # All vectors share a big component on dim 0 (the anisotropic common
     # direction) plus a small id-specific signal on dim 1+vec_id%2.
     # Raw cosine would rank everything ~1; after deflating the top PC the
@@ -316,7 +317,7 @@ def test_whiten_rerank_removes_common_direction(hand_views):
     spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     ).createOrReplaceTempView("embeddings")
-    out = sim_whiten_rerank(spark, "unused").collect()
+    out = registry.get("sim_whiten_rerank").builder(spark, "unused").collect()
     by_q = {}
     for r in out:
         by_q.setdefault(r.query_id, []).append(r)

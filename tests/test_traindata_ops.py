@@ -288,13 +288,9 @@ def test_logreg_gd3_matches_python_replica(hand_views):
         rows, "doc_id long, text string, lang string, n_chars long"
     ).createOrReplaceTempView("documents")
 
-    from rugpull_data_pipeline_spark.plans.traindata_ops import (
-        _LR_ITERS,
-        _round_half_up6,
-        mlprep_logreg_gd3,
-    )
+    from rugpull_data_pipeline_spark.plans.traindata_ops import _LR_ITERS
 
-    got = mlprep_logreg_gd3(spark, "unused").collect()[0]
+    got = registry.get("mlprep_logreg_gd3").builder(spark, "unused").collect()[0]
 
     # Python replica of the exact quantized fold.
     import decimal
@@ -326,7 +322,7 @@ def test_logreg_gd3_matches_python_replica(hand_views):
             p = 1.0 / (1.0 + math.exp(-z))
             for j, x in enumerate((1.0, x1, x2, x3)):
                 sums[j] += q6((y - p) * x)
-        w = [_round_half_up6(w[j] + float(sums[j]) / 8.0) for j in range(4)]
+        w = [float(q6(w[j] + float(sums[j]) / 8.0)) for j in range(4)]
     assert [got.w0, got.w1, got.w2, got.w3] == w
     # separation direction: longer docs are 'en', so the length weights
     # must come out positive and the distinct-ratio weight negative

@@ -1,11 +1,12 @@
 """Interleaved A/B timing for registered queries.
 
-Runs the named queries' noop-sink execution N times in an interleaved
-order (q1, q2, ..., q1, q2, ...) inside ONE session and reports
-median/min per query plus the CPU-steal fraction observed during the
-run — the honest way to compare plan variants on a co-tenant host where
-back-to-back blocks see different steal. Only Spark plan execution is
-timed (what a cluster pays); tools/sweep.py covers build+oracle+compare.
+Runs the named queries N times in an interleaved order (q1, q2, ..., q1,
+q2, ...) inside ONE session and reports median/min per query plus the
+CPU-steal fraction observed during the run — the honest way to compare
+plan variants on a co-tenant host where back-to-back blocks see
+different steal. Each timed run is build + execute: the builder call
+(including any eager checkpoint jobs it runs) and the noop-sink write of
+the frame it returns. tools/sweep.py covers build+oracle+compare.
 
 Usage: python tools/ab_time.py [--runs 7] sf_dir [name1 name2 ...]
 With no names: times the current driver window, the first
