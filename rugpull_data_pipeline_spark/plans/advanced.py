@@ -843,17 +843,37 @@ _BLOOM_BITS = 1024
 _BLOOM_SEEDS = ("b1", "b2", "b3")
 
 
-def _bloom_prefilter(d: str) -> str:
+def _bloom_hot(d: str) -> str:
+    """(user_id): the build side, high-spend purchasers."""
     cents = "cast(floor(value * cast(100 as double)) as bigint)"
-    uid = "cast(user_id as string)"
-    probe_hits = " + ".join(
-        f"CASE WHEN b{i}.pos IS NOT NULL THEN 1 ELSE 0 END"
-        for i in range(len(_BLOOM_SEEDS))
-    )
+    return f"""
+    SELECT user_id FROM events
+    WHERE event_type = 'purchase' AND value IS NOT NULL
+    GROUP BY user_id
+    HAVING sum({cents}) > 50000
+    """
+
+
+def _bloom_bits(d: str, hot: str) -> str:
+    """(pos): the filter itself, the set-bit positions of the hot keys."""
     build_pos = " UNION ".join(  # UNION (distinct): the filter's bit SET
         f"SELECT {S.portable_hash64('cast(user_id as string)', d, seed=repr(s))}"
         f" % {_BLOOM_BITS} AS pos FROM hot"
         for s in _BLOOM_SEEDS
+    )
+    return f"""
+    WITH hot AS ({hot})
+    SELECT DISTINCT pos FROM ({build_pos}) p
+    """
+
+
+def _bloom_prefilter(d: str, hot: str, bits: str) -> str:
+    # The probe scans events once. The bit-position and membership joins
+    # carry BROADCAST hints: a checkpointed core keeps its pre-checkpoint
+    # size estimate, so unhinted they could plan as sort-merge joins.
+    probe_hits = " + ".join(
+        f"CASE WHEN b{i}.pos IS NOT NULL THEN 1 ELSE 0 END"
+        for i in range(len(_BLOOM_SEEDS))
     )
     probe_joins = "\n        ".join(
         f"LEFT JOIN bits b{i} ON b{i}.pos = "
@@ -861,18 +881,12 @@ def _bloom_prefilter(d: str) -> str:
         f" % {_BLOOM_BITS}"
         for i, s in enumerate(_BLOOM_SEEDS)
     )
+    hinted = ", ".join(f"b{i}" for i in range(len(_BLOOM_SEEDS)))
     return f"""
-    WITH hot AS (
-        SELECT user_id FROM events
-        WHERE event_type = 'purchase' AND value IS NOT NULL
-        GROUP BY user_id
-        HAVING sum({cents}) > 50000
-    ),
-    bits AS (
-        SELECT DISTINCT pos FROM ({build_pos}) p
-    ),
+    WITH hot AS ({hot}),
+    bits AS ({bits}),
     probed AS (
-        SELECT e.event_type,
+        SELECT /*+ BROADCAST({hinted}, hot) */ e.event_type,
             CASE WHEN hot.user_id IS NOT NULL THEN 1 ELSE 0 END AS is_member,
             CASE WHEN ({probe_hits}) = {len(_BLOOM_SEEDS)}
                  THEN 1 ELSE 0 END AS bloom_pass
@@ -894,9 +908,10 @@ def _bloom_prefilter(d: str) -> str:
     """
 
 
-@register(
+pair(
     "join_bloom_prefilter",
-    oracle=_bloom_prefilter(DUCK),
+    _bloom_prefilter,
+    shared={"hot": _bloom_hot, "bits": _bloom_bits},
     tags=("join", "sketch", "audit"),
     doc="Runtime Bloom-filter join prefilter, built by hand and AUDITED: "
     "the hot-user build side (high-spend purchasers) hashes each key "
@@ -915,75 +930,3 @@ def _bloom_prefilter(d: str) -> str:
     "events once, with all three bit-position joins and the membership "
     "join explicitly broadcast.",
 )
-def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cents = "cast(floor(value * cast(100 as double)) as bigint)"
-    ev = static_table(spark, sf_dir, "events")
-    hot = (
-        ev.where((F.col("event_type") == "purchase") & F.col("value").isNotNull())
-        .groupBy("user_id")
-        .agg(F.expr(f"sum({cents})").alias("spend"))
-        .where(F.col("spend") > 50000)
-        .select("user_id")
-        .localCheckpoint()  # O(hot users): the build side, computed once
-    )
-    pos_cols = [
-        (
-            F.expr(S.portable_hash64("cast(user_id as string)", SPARK, seed=repr(s)))
-            % _BLOOM_BITS
-        ).alias(f"p{i}")
-        for i, s in enumerate(_BLOOM_SEEDS)
-    ]
-    bits = (
-        hot.select(*pos_cols)
-        .select(
-            F.explode(
-                F.array(*[F.col(f"p{i}") for i in range(len(_BLOOM_SEEDS))])
-            ).alias("pos")
-        )
-        .distinct()
-        .localCheckpoint()  # <= _BLOOM_BITS rows: the filter itself
-    )
-    probe = ev.select("user_id", "event_type", *pos_cols)
-    for i in range(len(_BLOOM_SEEDS)):
-        probe = probe.join(
-            F.broadcast(bits.withColumnRenamed("pos", f"hit{i}")),
-            probe[f"p{i}"] == F.col(f"hit{i}"),
-            "left",
-        )
-    probe = probe.join(
-        F.broadcast(hot.withColumnRenamed("user_id", "hot_uid")),
-        probe["user_id"] == F.col("hot_uid"),
-        "left",
-    )
-    is_member = F.when(F.col("hot_uid").isNotNull(), 1).otherwise(0)
-    bloom_pass = F.when(
-        sum(
-            F.when(F.col(f"hit{i}").isNotNull(), 1).otherwise(0)
-            for i in range(len(_BLOOM_SEEDS))
-        )
-        == len(_BLOOM_SEEDS),
-        1,
-    ).otherwise(0)
-    tagged = probe.select(
-        "event_type",
-        is_member.alias("is_member"),
-        bloom_pass.alias("bloom_pass"),
-    )
-    n_false = F.sum(F.col("bloom_pass") * (1 - F.col("is_member"))).cast("bigint")
-    n_nonmem = F.sum(1 - F.col("is_member")).cast("bigint")
-    return (
-        tagged.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.sum("is_member").cast("bigint").alias("n_true_member"),
-            F.sum("bloom_pass").cast("bigint").alias("n_bloom_pass"),
-            n_false.alias("n_false_pos"),
-            F.round(
-                F.when(n_nonmem == 0, F.lit(0.0)).otherwise(
-                    n_false.cast("double") / n_nonmem.cast("double")
-                ),
-                6,
-            ).alias("fp_rate"),
-        )
-        .orderBy("event_type")
-    )

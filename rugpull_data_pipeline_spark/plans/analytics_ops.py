@@ -49,12 +49,10 @@ Scale notes (1000 executors / 100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
 from ..functions import scalars as S
-from ..functions.scalars import DUCK, SPARK
+from ..functions.scalars import SPARK
 from .mining_ops import _copurchase_pairs, _daily_means, _day_idx, _pw_sym
-from .registry import pair, register, static_table
+from .registry import pair
 
 
 # Decimal-cast cents quantization (NOT floor(double*100), which lands one
@@ -1313,7 +1311,8 @@ pair(
 # ---------------------------------------------------------------------------
 
 
-def _vocab_overlap_sql(d: str) -> str:
+def _vocab_overlap_sv(d: str) -> str:
+    """(source, tok): the top-50 tokens of each of the 5 largest sources."""
     toks = S.split_ws("text", d)
     if d == SPARK:
         occ = (f"SELECT source, explode({toks}) AS tok FROM documents "
@@ -1329,17 +1328,21 @@ def _vocab_overlap_sql(d: str) -> str:
                 row_number() OVER (ORDER BY count(*) DESC, source) AS rn
             FROM documents GROUP BY source
         ) t WHERE rn <= 5
-    ),
-    sv AS (
-        SELECT t.source, t.tok FROM (
-            SELECT tok.source, tok.tok,
-                row_number() OVER (
-                    PARTITION BY tok.source ORDER BY count(*) DESC, tok.tok
-                ) AS rn
-            FROM tok JOIN top_src s ON s.source = tok.source
-            GROUP BY tok.source, tok.tok
-        ) t WHERE t.rn <= 50
-    ),
+    )
+    SELECT t.source, t.tok FROM (
+        SELECT /*+ BROADCAST(s) */ tok.source, tok.tok,
+            row_number() OVER (
+                PARTITION BY tok.source ORDER BY count(*) DESC, tok.tok
+            ) AS rn
+        FROM tok JOIN top_src s ON s.source = tok.source
+        GROUP BY tok.source, tok.tok
+    ) t WHERE t.rn <= 50
+    """
+
+
+def _vocab_overlap_sql(d: str, sv: str) -> str:
+    return f"""
+    WITH sv AS ({sv}),
     sz AS (
         SELECT source, cast(count(*) as bigint) AS sz FROM sv GROUP BY source
     ),
@@ -1361,80 +1364,19 @@ def _vocab_overlap_sql(d: str) -> str:
     """
 
 
-@register(
+pair(
     "profile_source_vocab_overlap",
-    oracle=_vocab_overlap_sql(DUCK),
+    _vocab_overlap_sql,
+    shared={"sv": _vocab_overlap_sv},
     tags=("profiling", "text"),
     doc="Pairwise top-50 vocabulary Jaccard between the 5 largest sources "
     "— the corpus-mix redundancy diagnostic (two sources with identical "
     "head vocabularies add less diversity than their row counts "
-    "suggest). The Spark builder localCheckpoints the <=250-row "
-    "per-source top-token set once, so the size/intersection joins "
-    "reuse it instead of re-running the token aggregation three times "
-    "(Spark does not materialize CTEs); the sz x sz pair frame is a "
-    "5-row self-join.",
+    "suggest). The <=250-row per-source top-token set is a shared core "
+    "(localCheckpointed once), so the size and intersection joins reuse "
+    "it instead of each re-running the token aggregation; the sz x sz "
+    "pair frame is a 5-row self-join.",
 )
-def profile_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    docs = static_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    )
-    top_src = (
-        static_table(spark, sf_dir, "documents")
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn(
-            "rn", F.row_number().over(Window.orderBy(F.col("n").desc(), "source"))
-        )
-        .where(F.col("rn") <= 5)
-        .select("source")
-    )
-    tok = docs.select(
-        "source", F.explode(F.split(F.col("text"), " ")).alias("tok")
-    ).join(F.broadcast(top_src), "source")
-    sv = (
-        tok.groupBy("source", "tok")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("source").orderBy(F.col("c").desc(), "tok")
-            ),
-        )
-        .where(F.col("rn") <= 50)
-        .select("source", "tok")
-        .localCheckpoint()
-    )
-    sz = sv.groupBy("source").agg(F.count(F.lit(1)).alias("sz"))
-    a = sv.select(F.col("source").alias("source_a"), "tok")
-    b = sv.select(F.col("source").alias("source_b"), F.col("tok").alias("tok_b"))
-    inter = (
-        a.join(b, (F.col("tok") == F.col("tok_b"))
-               & (F.col("source_a") < F.col("source_b")))
-        .groupBy("source_a", "source_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sz.select(F.col("source").alias("source_a"), F.col("sz").alias("size_a"))
-    sb = sz.select(F.col("source").alias("source_b"), F.col("sz").alias("size_b"))
-    uni = F.col("size_a") + F.col("size_b") - F.col("n_inter")
-    return (
-        sa.join(sb, F.col("source_a") < F.col("source_b"))
-        .join(inter, ["source_a", "source_b"], "left")
-        .withColumn(
-            "n_inter", F.coalesce(F.col("n_inter"), F.lit(0)).cast("long")
-        )
-        .select(
-            "source_a", "source_b", "size_a", "size_b", "n_inter",
-            F.round(
-                F.col("n_inter").cast("double")
-                / F.nullif(uni, F.lit(0)).cast("double"),
-                6,
-            ).alias("jaccard"),
-        )
-        .orderBy("source_a", "source_b")
-    )
 
 
 # ---------------------------------------------------------------------------

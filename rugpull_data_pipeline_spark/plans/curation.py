@@ -413,9 +413,9 @@ def _cc_oracle() -> str:
     via any path', which the closure computes declaratively. Component
     sizes in the near-dup graph are small, so the closure's
     (node x reachable-label) working set stays bounded."""
-    from .llm_ops import _dedup_ngram_jaccard
+    from .llm_ops import _jaccard_pairs, _sh_capped_sized
 
-    pairs = _dedup_ngram_jaccard(DUCK).replace("ORDER BY doc_a, doc_b", "")
+    pairs = _jaccard_pairs(DUCK, _sh_capped_sized(DUCK))
     return f"""
     WITH RECURSIVE pairs AS ({pairs}),
     edges AS (

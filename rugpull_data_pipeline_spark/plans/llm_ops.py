@@ -22,8 +22,8 @@ Every numeric output goes through the decimal-sum / rounding discipline in
 from __future__ import annotations
 
 from ..functions import scalars as S
-from ..functions.scalars import DUCK, SPARK
-from .registry import pair, register
+from ..functions.scalars import SPARK
+from .registry import pair
 
 
 # ---------------------------------------------------------------------------
@@ -405,11 +405,26 @@ def _ngram_shingles(d: str) -> str:
 _JACCARD_DF_CAP = 50  # drop shingles present in more than this many docs
 
 
-def _dedup_ngram_jaccard(d: str) -> str:
-    # The inverted-index self-join runs on the 60-bit shingle hash, not the
-    # shingle string: the shuffle moves 8-byte keys instead of ~20-byte
-    # strings, and the join compares integers. Same result (both engines use
-    # the same hash; a 60-bit collision over ~1M distinct shingles has
+def _mh_sh_hashed(d: str) -> str:
+    """(doc_id, shh): each doc's distinct word-3-gram shingles as one
+    60-bit portable hash — the shared core of the MinHash family."""
+    # MinHash over word-3-gram shingles (unigrams are degenerate on a small
+    # vocabulary: every doc contains nearly the whole vocab, so every pair
+    # collides in every band and LSH degrades to a cross join).
+    return (
+        f"SELECT doc_id, {S.portable_hash64('sh', d)} AS shh "
+        f"FROM ({_ngram_shingles(d)}) raw"
+    )
+
+
+def _sh_capped(d: str) -> str:
+    """(doc_id, shh): each doc's shingle hashes with document frequency
+    <= _JACCARD_DF_CAP — the inverted-index table of the Jaccard /
+    containment family."""
+    # The self-joins run on the 60-bit shingle hash, not the shingle
+    # string: the shuffle moves 8-byte keys instead of ~20-byte strings,
+    # and the join compares integers. Same result (both engines use the
+    # same hash; a 60-bit collision over ~1M distinct shingles has
     # probability ~1e-7 and would have to collide identically in both).
     #
     # Stop-shingle frequency cap: a shingle appearing in k docs contributes
@@ -418,41 +433,64 @@ def _dedup_ngram_jaccard(d: str) -> str:
     # dropped from BOTH the intersection and the union (Jaccard over the
     # capped sets) — one count-over-window on the shingle hash, no extra
     # join. Per-doc shingles are already distinct, so count(*) = doc freq.
-    shh = S.portable_hash64("sh", d)
     return f"""
-    WITH hashed AS (
-        SELECT doc_id, {shh} AS shh FROM ({_ngram_shingles(d)}) raw
-    ),
-    shingles AS (
-        SELECT doc_id, shh FROM (
-            SELECT doc_id, shh,
-                count(*) OVER (PARTITION BY shh) AS df
-            FROM hashed
-        ) f WHERE df <= {_JACCARD_DF_CAP}
-    ),
-    doc_sizes AS (
-        SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id
-    ),
-    pair_inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-        FROM shingles a
-        JOIN shingles b ON a.shh = b.shh AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT doc_a, doc_b,
-        round(cast(n_inter as double)
-              / (sa.n_sh + sb.n_sh - n_inter), 6) AS jaccard
-    FROM pair_inter
-    JOIN doc_sizes sa ON sa.doc_id = doc_a
-    JOIN doc_sizes sb ON sb.doc_id = doc_b
-    WHERE cast(n_inter as double) / (sa.n_sh + sb.n_sh - n_inter) >= 0.2
-    ORDER BY doc_a, doc_b
+    SELECT doc_id, shh FROM (
+        SELECT doc_id, shh, count(*) OVER (PARTITION BY shh) AS df
+        FROM ({_mh_sh_hashed(d)}) hashed
+    ) f WHERE df <= {_JACCARD_DF_CAP}
     """
 
 
-@register(
+def _sh_sized(capped: str) -> str:
+    """(doc_id, shh, n_sh) over a ``_sh_capped`` table: each row carries
+    its doc's capped set size, so the pair aggregations take the sizes
+    along (``max(n_sh)``) instead of joining a size aggregate back onto
+    the pair table, the query's biggest intermediate (r13: interleaved
+    median 1.603 -> 1.448 s at sf0.1)."""
+    return f"""
+    SELECT doc_id, shh, count(*) OVER (PARTITION BY doc_id) AS n_sh
+    FROM ({capped}) capped
+    """
+
+
+def _sh_capped_sized(d: str) -> str:
+    """(doc_id, shh, n_sh): ``_sh_capped`` with its set sizes."""
+    return _sh_sized(_sh_capped(d))
+
+
+def _jaccard_pairs(d: str, sh: str) -> str:
+    """(doc_a, doc_b, jaccard), unordered: every doc pair sharing a capped
+    shingle whose capped-set Jaccard is >= 0.2."""
+    # Round-12 note: an inverted-index rewrite (two-phase hot filter +
+    # per-shingle sorted doc lists + in-row combination explode) was built,
+    # oracle-verified and interleaved-benchmarked — it shuffles the shingle
+    # table once instead of three times, but the nested array slicing of the
+    # in-row pair generator cost ~2x the self-join's wall at bench scale
+    # (median 4.9 s vs 3.9 s interleaved), so the self-join stays.
+    return f"""
+    WITH sh AS ({sh}),
+    pair_inter AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter,
+            max(a.n_sh) AS n_a, max(b.n_sh) AS n_b
+        FROM sh a
+        JOIN sh b ON a.shh = b.shh AND a.doc_id < b.doc_id
+        GROUP BY a.doc_id, b.doc_id
+    )
+    SELECT doc_a, doc_b,
+        round(cast(n_inter as double) / (n_a + n_b - n_inter), 6) AS jaccard
+    FROM pair_inter
+    WHERE cast(n_inter as double) / (n_a + n_b - n_inter) >= 0.2
+    """
+
+
+def _dedup_ngram_jaccard(d: str, sh: str) -> str:
+    return f"{_jaccard_pairs(d, sh)}ORDER BY doc_a, doc_b\n"
+
+
+pair(
     "dedup_ngram_jaccard",
-    oracle=_dedup_ngram_jaccard(DUCK),
+    _dedup_ngram_jaccard,
+    shared={"sh": _sh_capped_sized},
     tags=("dedup",),
     doc="Near-dup via word-3-gram Jaccard: inverted-index join on shared "
     "shingles (shuffle key = shingle), never a cross join. Shingles with "
@@ -464,62 +502,6 @@ def _dedup_ngram_jaccard(d: str) -> str:
     "table; at scale this is the persisted inverted-index table, not "
     "three recomputations of the explode.",
 )
-def dedup_ngram_jaccard(spark, sf_dir):
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    # Stop-shingle cap before the self-join — see _dedup_ngram_jaccard.
-    # Round-12 note: an inverted-index rewrite (two-phase hot filter +
-    # per-shingle sorted doc lists + in-row combination explode) was built,
-    # oracle-verified and interleaved-benchmarked — it shuffles the shingle
-    # table once instead of three times, but the nested array slicing of the
-    # in-row pair generator cost ~2x the self-join's wall at bench scale
-    # (median 4.9 s vs 3.9 s interleaved), so the measured shape stays.
-    # r13: the capped per-doc set size rides IN the checkpointed table
-    # (one window by doc_id in the build) so the pair aggregation carries
-    # n_a/n_b itself — both doc_sizes joins against the pair table (the
-    # query's biggest intermediate) and the separate size aggregate are
-    # gone. Interleaved median 1.603 -> 1.448 s at sf0.1, identical pairs.
-    sh = (
-        spark.sql(
-            f"SELECT doc_id, {S.portable_hash64('sh', SPARK)} AS shh "
-            f"FROM ({_ngram_shingles(SPARK)}) raw"
-        )
-        .withColumn(
-            "df", F.count(F.lit(1)).over(Window.partitionBy("shh"))
-        )
-        .where(F.col("df") <= _JACCARD_DF_CAP)
-        .drop("df")
-        .withColumn(
-            "n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
-        )
-        .localCheckpoint()
-    )
-
-    a, b = sh.alias("a"), sh.alias("b")
-    pair_inter = (
-        a.join(
-            b,
-            (F.col("a.shh") == F.col("b.shh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_inter"),
-            F.max(F.col("a.n_sh")).alias("n_a"),
-            F.max(F.col("b.n_sh")).alias("n_b"),
-        )
-    )
-    jacc = F.col("n_inter").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    )
-    return (
-        pair_inter.where(jacc >= 0.2)
-        .select("doc_a", "doc_b", F.round(jacc, 6).alias("jaccard"))
-        .orderBy("doc_a", "doc_b")
-    )
 
 
 def _dedup_cluster(d: str, pairs: str) -> str:
@@ -529,11 +511,9 @@ def _dedup_cluster(d: str, pairs: str) -> str:
     # same join to a fixed point (each round is one shuffle on doc_id);
     # two rounds already collapse the chains the pair generator emits and
     # keep the query a fixed-depth plan both engines can hash-compare.
-    # ``pairs`` is the pair table: the Spark builder passes its checkpoint
-    # of dedup_ngram_jaccard (a DataFrame-API core), the oracle the SQL
-    # text. Inlined, the edges/l1/l2 fan-out re-derived the whole shingle
-    # pipeline (26 fact scans planned — the round-11 registry-wide plan
-    # audit).
+    # ``pairs`` is the shared pair table: inlined, the edges/l1/l2 fan-out
+    # re-derived the whole shingle pipeline (26 fact scans planned — the
+    # round-11 registry-wide plan audit).
     return f"""
     WITH pairs AS ({pairs}),
     edges AS (
@@ -565,25 +545,19 @@ def _dedup_cluster(d: str, pairs: str) -> str:
     """
 
 
-@register(
+pair(
     "dedup_cluster_neardup",
-    oracle=_dedup_cluster(
-        DUCK, _dedup_ngram_jaccard(DUCK).replace("ORDER BY doc_a, doc_b", "")
-    ),
+    _dedup_cluster,
+    shared={"sh": _sh_capped_sized, "pairs": _jaccard_pairs},
     tags=("dedup",),
     doc="Near-dup clustering: 2-hop min-label propagation over the Jaccard "
     "pair graph, emitting one keeper per multi-member cluster. Fixed-depth "
     "unrolling of the connected-components iteration (each extra hop is one "
-    "more shuffle round at scale). The pair table is localCheckpointed "
-    "(reusing dedup_ngram_jaccard's builder) so the shingle pipeline "
-    "runs once instead of per edges/l1/l2 consumer.",
+    "more shuffle round at scale). The capped shingle table and the pair "
+    "table (dedup_ngram_jaccard's text, unordered) are localCheckpointed "
+    "so the shingle pipeline runs once instead of per edges/l1/l2 "
+    "consumer.",
 )
-def dedup_cluster_neardup(spark, sf_dir):
-    pairs = dedup_ngram_jaccard(spark, sf_dir).localCheckpoint()
-    return spark.sql(
-        _dedup_cluster(SPARK, "SELECT doc_a, doc_b, jaccard FROM {pairs}"),
-        pairs=pairs,
-    )
 
 
 def _word_tokens(d: str) -> str:
@@ -627,18 +601,6 @@ _MINHASH_AB = _minhash_constants(_N_HASHES)
 # verification. Measured on a clone-heavy 32k-doc stress corpus (every doc
 # x64): 23.2 s -> 3.4 s with results identical at production densities.
 _LSH_BUCKET_CAP = 32
-
-
-def _mh_sh_hashed(d: str) -> str:
-    """(doc_id, shh): each doc's distinct word-3-gram shingles as one
-    60-bit portable hash — the shared core of the MinHash family."""
-    # MinHash over word-3-gram shingles (unigrams are degenerate on a small
-    # vocabulary: every doc contains nearly the whole vocab, so every pair
-    # collides in every band and LSH degrades to a cross join).
-    return (
-        f"SELECT doc_id, {S.portable_hash64('sh', d)} AS shh "
-        f"FROM ({_ngram_shingles(d)}) raw"
-    )
 
 
 def _mh_sigs(side: bool = False) -> str:
@@ -1057,50 +1019,62 @@ _N_PLANES = 4
 
 def _lsh_buckets(d: str) -> str:
     """(vec_id, bucket) — the hyperplane bucketing of sim_lsh_hyperplane_ann,
-    audited by audit_ann_recall / audit_multiprobe_recall. The Spark
-    builders run its one-agg DataFrame twin stats_eval._lsh_buckets_df."""
-    # Deterministic pseudo-random hyperplane signs from the portable hash —
-    # only n_planes × n_dims distinct values, computed once and broadcast.
-    sign_h = S.portable_hash64(
-        "concat('hp-', cast(j as string), ':', cast(dim as string))", d
+    audited by audit_ann_recall / audit_multiprobe_recall.
+
+    The hyperplane signs are pure md5 arithmetic over (plane, dim) with no
+    data dependency, so they are generated as a tiny ndims-row side table
+    (one row per dim, one sign COLUMN per plane — no (plane, dim) fan-out)
+    and broadcast-hash-joined onto the exploded elements; the bucket build
+    is ONE group-by vec_id with a ``sum(cast(v * s as decimal(38,9)))``
+    per plane (null elements skipped, all-null → NULL → bit 0, empty
+    embedding absent). ndims rides in-plan as a ``max(size(embedding))``
+    scalar subquery — the r12 form computed it with a SEPARATE driver
+    ``first()`` pre-job, the one >10% driver-measured regression of that
+    round (audit_ann_recall 1.36→1.99 s). Measured interleaved at sf0.1
+    against the (plane, dim)-row sign table: build+checkpoint 1.063 s →
+    0.865 s median; a per-element in-plan md5 sign variant was measured
+    too and REJECTED (1.68 s — 4 md5s per element cost more than the join
+    probe)."""
+    def sign(j: int) -> str:
+        h = S.portable_hash64(f"concat('hp-{j}:', cast(dim as string))", d)
+        return (
+            f"CASE WHEN {h} % 2 = 1 THEN cast(1.0 as double)"
+            f" ELSE cast(-1.0 as double) END AS s{j}"
+        )
+
+    scols = ",\n            ".join(sign(j) for j in range(_N_PLANES))
+    sums = ",\n            ".join(
+        f"sum(cast(e.v * p.s{j} as decimal(38,9))) AS s{j}"
+        for j in range(_N_PLANES)
+    )
+    bits = " + ".join(
+        f"(case when s{j} >= 0 then 1 else 0 end) * {1 << j}"
+        for j in range(_N_PLANES)
     )
     if d == SPARK:
-        jseq = f"SELECT explode(sequence(0, {_N_PLANES - 1})) AS j"
         dimseq = (
             "SELECT explode(sequence(1, "
             "(SELECT max(size(embedding)) FROM embeddings))) AS dim"
         )
     else:
-        jseq = f"SELECT unnest(range(0, {_N_PLANES})) AS j"
         dimseq = (
             "SELECT unnest(range(1, "
             "(SELECT max(len(embedding)) FROM embeddings) + 1)) AS dim"
         )
     return f"""
-    SELECT vec_id,
-        cast(sum({S.shift_left('cast(bit as bigint)', 'j', d)}) as bigint)
-            AS bucket
-    FROM (
-        SELECT e.vec_id, p.j,
-            CASE WHEN sum(cast(e.v * p.s as decimal(38,9))) >= 0
-                 THEN 1 ELSE 0 END AS bit
+    SELECT vec_id, cast({bits} as bigint) AS bucket FROM (
+        SELECT /*+ BROADCAST(p) */ e.vec_id, {sums}
         FROM ({_emb_dims(d)}) e
-        JOIN (
-            SELECT j, dim,
-                CASE WHEN {sign_h} % 2 = 1 THEN 1.0 ELSE -1.0 END AS s
-            FROM ({dimseq}) dims CROSS JOIN ({jseq}) js
-        ) p ON e.dim = p.dim
-        GROUP BY e.vec_id, p.j
-    ) bits GROUP BY vec_id
+        JOIN (SELECT dim, {scols} FROM ({dimseq}) dims) p ON e.dim = p.dim
+        GROUP BY e.vec_id
+    ) sums
     """
 
 
 def _sim_lsh_hyperplane(d: str, buckets: str) -> str:
-    # ``buckets`` is the (vec_id, bucket) table: the Spark builder passes its
-    # checkpoint (stats_eval._lsh_buckets_df), the oracle its SQL twin
-    # _lsh_buckets. Inlined, queries and the candidate join each
-    # re-ran the hyperplane-hash pipeline (6 fact scans planned — the
-    # round-11 registry-wide plan audit).
+    # ``buckets`` is the shared (vec_id, bucket) table. Inlined, queries and
+    # the candidate join each re-ran the hyperplane-hash pipeline (6 fact
+    # scans planned — the round-11 registry-wide plan audit).
     cos = _cosine(d, "q.embedding", "c.embedding")
     return f"""
     WITH buckets AS ({buckets}),
@@ -1128,9 +1102,10 @@ def _sim_lsh_hyperplane(d: str, buckets: str) -> str:
     """
 
 
-@register(
+pair(
     "sim_lsh_hyperplane_ann",
-    oracle=_sim_lsh_hyperplane(DUCK, _lsh_buckets(DUCK)),
+    _sim_lsh_hyperplane,
+    shared={"buckets": _lsh_buckets},
     tags=("similarity",),
     doc=f"Random-hyperplane (SimHash-for-vectors) ANN: {_N_PLANES} "
     "deterministic hyperplanes → sign bits → bucket id; candidates are only "
@@ -1139,13 +1114,6 @@ def _sim_lsh_hyperplane(d: str, buckets: str) -> str:
     "The bucket table is localCheckpointed (at scale: the persisted "
     "index) so the hash pipeline runs once, not per probe-side consumer.",
 )
-def sim_lsh_hyperplane_ann(spark, sf_dir):
-    from .stats_eval import _lsh_buckets_df
-
-    b = _lsh_buckets_df(spark, sf_dir).localCheckpoint()
-    return spark.sql(
-        _sim_lsh_hyperplane(SPARK, "SELECT vec_id, bucket FROM {b}"), b=b
-    )
 
 
 pair(

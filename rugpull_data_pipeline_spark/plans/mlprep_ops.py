@@ -56,7 +56,14 @@ from __future__ import annotations
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
-from .llm_ops import _cosine, _mh_sh_hashed, _mh_sigs
+from .llm_ops import (
+    _cosine,
+    _mh_jaccard,
+    _mh_sh_hashed,
+    _mh_sigs,
+    _sh_capped,
+    _sh_sized,
+)
 from .registry import pair, register, static_table
 
 
@@ -358,47 +365,36 @@ pair(
 # ---------------------------------------------------------------------------
 
 
-def _containment(d: str) -> str:
+def _containment(d: str, sh: str) -> str:
     # Containment C(src→dst) = |S(src) ∩ S(dst)| / |S(src)| is ASYMMETRIC:
     # a short doc fully embedded in a long one scores ~1.0 in that direction
     # while Jaccard (|∩|/|∪|) is diluted by the long doc's size and misses
-    # it. Same inverted-index join + stop-shingle df-cap machinery as
-    # dedup_ngram_jaccard (llm_ops), same 60-bit hash keys.
-    from .llm_ops import _JACCARD_DF_CAP, _ngram_shingles
-
-    shh = S.portable_hash64("sh", d)
+    # it. Same capped inverted-index table (llm_ops._sh_capped: 60-bit hash
+    # keys, stop-shingle df-cap) and self-join as dedup_ngram_jaccard. The
+    # set sizes are its _sh_sized window, run in the query rather than in
+    # the checkpointed core: there, the window's doc_id shuffle would add a
+    # job to every build.
     return f"""
-    WITH hashed AS (
-        SELECT doc_id, {shh} AS shh FROM ({_ngram_shingles(d)}) raw
-    ),
-    shingles AS (
-        SELECT doc_id, shh FROM (
-            SELECT doc_id, shh,
-                count(*) OVER (PARTITION BY shh) AS df
-            FROM hashed
-        ) f WHERE df <= {_JACCARD_DF_CAP}
-    ),
-    doc_sizes AS (
-        SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id
-    ),
+    WITH sh AS ({_sh_sized(sh)}),
     pair_inter AS (
-        SELECT a.doc_id AS src_doc, b.doc_id AS dst_doc, count(*) AS n_inter
-        FROM shingles a
-        JOIN shingles b ON a.shh = b.shh AND a.doc_id <> b.doc_id
+        SELECT a.doc_id AS src_doc, b.doc_id AS dst_doc, count(*) AS n_inter,
+            max(a.n_sh) AS n_src
+        FROM sh a
+        JOIN sh b ON a.shh = b.shh AND a.doc_id <> b.doc_id
         GROUP BY a.doc_id, b.doc_id
     )
     SELECT src_doc, dst_doc,
-        round(cast(n_inter as double) / sa.n_sh, 6) AS containment
+        round(cast(n_inter as double) / n_src, 6) AS containment
     FROM pair_inter
-    JOIN doc_sizes sa ON sa.doc_id = src_doc
-    WHERE cast(n_inter as double) / sa.n_sh >= 0.5
+    WHERE cast(n_inter as double) / n_src >= 0.5
     ORDER BY src_doc, dst_doc
     """
 
 
-@register(
+pair(
     "dedup_containment_ngram",
-    oracle=_containment(DUCK),
+    _containment,
+    shared={"sh": _sh_capped},
     tags=("dedup",),
     doc="Asymmetric shingle containment |A∩B|/|A| — catches a short doc "
     "embedded inside a longer one, which symmetric Jaccard dilutes away "
@@ -406,50 +402,12 @@ def _containment(d: str) -> str:
     "df-capped inverted-index equi-join: the shuffle key is the shingle "
     "hash, pair candidates only form where shingles actually collide, and "
     "hot boilerplate shingles are dropped before the self-join. The capped "
-    "shingle table is materialized ONCE (localCheckpoint, same as "
-    "dedup_ngram_jaccard) and reused by the self-join's both sides and the "
-    "size aggregate — the pure-SQL CTE form recomputed the explode+hash "
-    "three times (measured 3.1 s → 2.6 s at sf0.1).",
+    "shingle table (dedup_ngram_jaccard's, without the per-doc size "
+    "window) is materialized ONCE (localCheckpoint) and read by both "
+    "self-join sides and the size window — the pure-SQL CTE form "
+    "recomputed the explode+hash three times (measured 3.1 s → 2.6 s at "
+    "sf0.1).",
 )
-def dedup_containment_ngram(spark, sf_dir):
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from .llm_ops import _JACCARD_DF_CAP, _ngram_shingles
-
-    sh = (
-        spark.sql(
-            f"SELECT doc_id, {S.portable_hash64('sh', SPARK)} AS shh "
-            f"FROM ({_ngram_shingles(SPARK)}) raw"
-        )
-        .withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("shh")))
-        .where(F.col("df") <= _JACCARD_DF_CAP)
-        .drop("df")
-        .localCheckpoint()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    pair_inter = (
-        a.join(
-            b,
-            (F.col("a.shh") == F.col("b.shh"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("src_doc"), F.col("b.doc_id").alias("dst_doc")
-        )
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(
-        F.col("doc_id").alias("src_doc"), F.col("n_sh").alias("n_src")
-    )
-    cont = F.col("n_inter").cast("double") / F.col("n_src")
-    return (
-        pair_inter.join(sa, "src_doc")
-        .where(cont >= 0.5)
-        .select("src_doc", "dst_doc", F.round(cont, 6).alias("containment"))
-        .orderBy("src_doc", "dst_doc")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1867,7 +1825,7 @@ def _lsh_configs() -> list[tuple[int, int, str, float]]:
     return out
 
 
-def _lsh_flags_query(d: str) -> str:
+def _lsh_flags(d: str) -> str:
     # dedup_minhash_lsh fixes (b=4, r=4) over the 16-hash signature; this
     # audit measures what THAT choice trades away, by re-partitioning the
     # same signatures into every (b, r) factorization — (16,1), (8,2),
@@ -1881,21 +1839,10 @@ def _lsh_flags_query(d: str) -> str:
     # two signatures alone, with NO extra join: one 16-band capped
     # equi-join builds the universe, plain boolean algebra does the rest
     # (the audit_minhash_estimate machinery, re-aimed at parameter choice).
-    # Returns the per-pair flag table (is_true + m0..m15); the aggregation
-    # over it differs per engine — see audit_lsh_band_sensitivity.
-    from .llm_ops import (
-        _LSH_BUCKET_CAP,
-        _MINHASH_AB,
-        _MINHASH_P,
-        _N_HASHES,
-        _ngram_shingles,
-    )
+    # Returns the per-pair flag table (is_true + m0..m15).
+    from .llm_ops import _LSH_BUCKET_CAP, _N_HASHES
 
-    shh = S.portable_hash64("sh", d)
-    min_cols = ",\n            ".join(
-        f"min(({a} * m + {b}) % {_MINHASH_P}) AS h{j}"
-        for j, (a, b) in enumerate(_MINHASH_AB)
-    )
+    doc_sets, jacc = _mh_jaccard(d)
     if d == SPARK:
         hash_arr = "array(" + ", ".join(f"h{j}" for j in range(_N_HASHES)) + ")"
         bands = f"""
@@ -1903,38 +1850,18 @@ def _lsh_flags_query(d: str) -> str:
         FROM sigs
         LATERAL VIEW posexplode({hash_arr}) AS band, band_key
         """
-        doc_sets = (
-            "SELECT doc_id, collect_set(shh) AS shs FROM sh_hashed GROUP BY doc_id"
-        )
-        n_inter = "size(array_intersect(sa.shs, sb.shs))"
-        n_a, n_b = "size(sa.shs)", "size(sb.shs)"
     else:
         hash_arr = "[" + ", ".join(f"h{j}" for j in range(_N_HASHES)) + "]"
         bands = f"""
         SELECT doc_id, i AS band, {hash_arr}[i + 1] AS band_key
         FROM sigs, unnest(range(0, {_N_HASHES})) t(i)
         """
-        doc_sets = (
-            "SELECT doc_id, list(DISTINCT shh) AS shs FROM sh_hashed GROUP BY doc_id"
-        )
-        n_inter = "len(list_intersect(sa.shs, sb.shs))"
-        n_a, n_b = "len(sa.shs)", "len(sb.shs)"
-    jacc = f"cast({n_inter} as double) / ({n_a} + {n_b} - {n_inter})"
-
     match_bits = ",\n            ".join(
         f"a.h{j} = b.h{j} AS m{j}" for j in range(_N_HASHES)
     )
-
     return f"""
-    WITH sh_hashed AS (
-        SELECT doc_id, {shh} AS shh FROM ({_ngram_shingles(d)}) raw
-    ),
-    sigs AS (
-        SELECT doc_id,
-            {min_cols}
-        FROM (SELECT doc_id, shh % {_MINHASH_P} AS m FROM sh_hashed) t
-        GROUP BY doc_id
-    ),
+    WITH sh_hashed AS ({_mh_sh_hashed(d)}),
+    sigs AS ({_mh_sigs()}),
     bands AS (
         {bands}
     ),
@@ -1963,30 +1890,46 @@ def _lsh_flags_query(d: str) -> str:
     """
 
 
-def _lsh_oracle() -> str:
-    # DuckDB materializes a multiply-referenced CTE once, so the pure-SQL
-    # UNION-of-aggregates form is already single-pass there.
-    branches = "\n    UNION ALL\n".join(
-        f"""
-    SELECT 'b{b:02d}r{r}' AS config, {b} AS n_bands, {r} AS rows_per_band,
-        {S.isum(f'CASE WHEN {collide} THEN 1 ELSE 0 END', DUCK)} AS n_candidates,
-        {S.isum(f'CASE WHEN ({collide}) AND is_true THEN 1 ELSE 0 END', DUCK)}
-            AS n_true_captured,
-        {S.isum('CASE WHEN is_true THEN 1 ELSE 0 END', DUCK)} AS n_true_universe,
-        cast({theo} as double) AS theo_p_at_05
-    FROM flags"""
-        for b, r, collide, theo in _lsh_configs()
-    )
+def _lsh_sensitivity(d: str, flags: str) -> str:
+    # ALL four configs aggregate in ONE pass over the flag table (a 1-row
+    # result), and UNPIVOT turns its per-config column groups into the
+    # four config rows — no per-config re-scan, no cross join with a grid.
+    # INCLUDE NULLS: an empty universe still reports its four configs (with
+    # NULL counts, as a 1-row aggregate over no rows gives).
+    cols, groups = [], []
+    for b, r, collide, theo in _lsh_configs():
+        cols += [
+            f"{S.isum(f'CASE WHEN {collide} THEN 1 ELSE 0 END', d)} AS c{b}",
+            S.isum(f"CASE WHEN ({collide}) AND is_true THEN 1 ELSE 0 END", d)
+            + f" AS t{b}",
+            f"{b} AS nb{b}, {r} AS rb{b}, cast({theo} as double) AS p{b}",
+        ]
+        groups.append(f"(c{b}, t{b}, nb{b}, rb{b}, p{b}) AS b{b:02d}r{r}")
+    cols_sql = ",\n            ".join(cols)
+    groups_sql = ",\n            ".join(groups)
     return f"""
-    WITH flags AS ({_lsh_flags_query(DUCK)})
-    SELECT * FROM ({branches}) c
+    WITH flags AS ({flags}),
+    one AS (
+        SELECT {cols_sql},
+            {S.isum('CASE WHEN is_true THEN 1 ELSE 0 END', d)} AS n_true_universe
+        FROM flags
+    )
+    SELECT config, n_bands, rows_per_band, n_candidates, n_true_captured,
+        n_true_universe, theo_p_at_05
+    FROM one UNPIVOT INCLUDE NULLS (
+        (n_candidates, n_true_captured, n_bands, rows_per_band, theo_p_at_05)
+        FOR config IN (
+            {groups_sql}
+        )
+    ) u
     ORDER BY config
     """
 
 
-@register(
+pair(
     "audit_lsh_band_sensitivity",
-    oracle=_lsh_oracle(),
+    _lsh_sensitivity,
+    shared={"flags": _lsh_flags},
     tags=("dedup", "audit", "sketch"),
     doc="LSH parameter-sensitivity audit: the production (b=4, r=4) banding "
     "of the 16-hash MinHash signature, re-evaluated against every other "
@@ -1997,38 +1940,9 @@ def _lsh_oracle() -> str:
     "Per config: surfaced candidate pairs, true near-dups captured (exact "
     "Jaccard ≥ 0.5), and the theoretical S-curve value 1−(1−0.5^r)^b — "
     "the measured evidence behind the banding choice, refreshable at any "
-    "scale for the cost of one LSH pass. Spark side: the flag table is "
-    "materialized ONCE (localCheckpoint — Spark inlines multiply-"
-    "referenced CTEs, so the pure-SQL UNION form re-ran the whole "
-    "shingle→minhash→join pipeline 4×: 24 file scans, measured 2.7 s → "
-    "0.9 s at sf0.1), then ALL four configs aggregate in a single pass "
-    "and stack() unpivots the one-row result.",
+    "scale for the cost of one LSH pass. The flag table is materialized "
+    "ONCE (localCheckpoint — a per-config UNION form re-ran the whole "
+    "shingle→minhash→join pipeline 4× on Spark: 24 file scans, measured "
+    "2.7 s → 0.9 s at sf0.1), then ALL four configs aggregate in a single "
+    "pass and UNPIVOT turns the one-row result into the config rows.",
 )
-def audit_lsh_band_sensitivity(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    flags = spark.sql(_lsh_flags_query(SPARK)).localCheckpoint()
-    aggs = []
-    for b, r, collide, _theo in _lsh_configs():
-        aggs.append(
-            F.expr(S.isum(f"CASE WHEN {collide} THEN 1 ELSE 0 END", SPARK)).alias(
-                f"c_{b}"
-            )
-        )
-        aggs.append(
-            F.expr(
-                S.isum(f"CASE WHEN ({collide}) AND is_true THEN 1 ELSE 0 END", SPARK)
-            ).alias(f"t_{b}")
-        )
-    aggs.append(
-        F.expr(S.isum("CASE WHEN is_true THEN 1 ELSE 0 END", SPARK)).alias("tu")
-    )
-    one = flags.agg(*aggs)
-    stack_args = ", ".join(
-        f"'b{b:02d}r{r}', {b}, {r}, c_{b}, t_{b}, tu, cast({theo} as double)"
-        for b, r, _collide, theo in _lsh_configs()
-    )
-    return one.selectExpr(
-        f"stack(4, {stack_args}) AS (config, n_bands, rows_per_band, "
-        "n_candidates, n_true_captured, n_true_universe, theo_p_at_05)"
-    ).orderBy("config")

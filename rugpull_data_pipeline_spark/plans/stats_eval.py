@@ -49,12 +49,10 @@ Scale notes (each op, at 1000 executors / 100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
 from .llm_ops import _lsh_buckets
-from .registry import pair, register
+from .registry import pair
 
 
 def _word_tokens(table_sql: str, d: str) -> str:
@@ -597,11 +595,11 @@ pair(
 def _ann_recall(d: str, buckets: str) -> str:
     from .llm_ops import _sim_lsh_hyperplane, _sim_topk
 
-    # ``buckets`` is threaded into the embedded ANN pipeline so the Spark
-    # builder's checkpointed bucket table serves both the audit's ANN side
-    # and its candidate join (8 fact scans planned inlined — the round-11
-    # registry-wide plan audit; the brute-force exact side keeps its own
-    # self-join, which IS the ground truth being audited).
+    # ``buckets`` is the shared bucket table, threaded into the embedded ANN
+    # pipeline so it serves both the audit's ANN side and its candidate
+    # join (8 fact scans planned inlined — the round-11 registry-wide plan
+    # audit; the brute-force exact side keeps its own self-join, which IS
+    # the ground truth being audited).
     return f"""
     WITH exact AS ({_sim_topk(d)}),
     ann AS ({_sim_lsh_hyperplane(d, buckets)}),
@@ -620,9 +618,10 @@ def _ann_recall(d: str, buckets: str) -> str:
     """
 
 
-@register(
+pair(
     "audit_ann_recall",
-    oracle=_ann_recall(DUCK, _lsh_buckets(DUCK)),
+    _ann_recall,
+    shared={"buckets": _lsh_buckets},
     tags=("similarity", "audit"),
     doc="ANN quality audit: recall@10 of sim_lsh_hyperplane_ann against the "
     "sim_cosine_topk_bruteforce ground truth, per query — the measurement "
@@ -634,9 +633,6 @@ def _ann_recall(d: str, buckets: str) -> str:
     "is localCheckpointed and threaded into the ANN side so the hash "
     "pipeline runs once.",
 )
-def audit_ann_recall(spark, sf_dir):
-    b = _lsh_buckets_df(spark, sf_dir).localCheckpoint()
-    return spark.sql(_ann_recall(SPARK, "SELECT vec_id, bucket FROM {b}"), b=b)
 
 
 # ---------------------------------------------------------------------------
@@ -1031,77 +1027,10 @@ pair(
 # ---------------------------------------------------------------------------
 
 
-def _lsh_buckets_df(spark, sf_dir):
-    """(vec_id, bucket) as a one-agg DataFrame — the Spark-side twin of
-    ``_lsh_buckets``.
-
-    The hyperplane signs are pure md5 arithmetic over (plane, dim) with no
-    data dependency, so they are generated as a tiny ndims-row side table
-    (one row per dim, one sign COLUMN per plane — no (plane, dim) fan-out)
-    and broadcast-hash-joined onto the exploded elements; the bucket build
-    stays ONE groupBy(vec_id) with the same
-    ``sum(cast(v * s as decimal(38,9)))`` aggregate the oracle runs (null
-    elements skipped, all-null → NULL → bit 0, empty embedding absent), so
-    buckets are bit-identical. ndims rides in-plan as the oracle's own
-    ``max(size(embedding))`` scalar subquery — the r12 form computed it
-    with a SEPARATE driver ``first()`` pre-job (an extra full embeddings
-    scan + a driver round-trip before the consumers' checkpoint), the one
-    >10% driver-measured regression of that round (audit_ann_recall
-    1.36→1.99 s). Measured interleaved at sf0.1: build+checkpoint
-    1.063 s → 0.865 s median, pre-job (0.08 s) gone; a per-element
-    in-plan md5 sign variant was measured too and REJECTED (1.68 s —
-    4 md5s per element cost more than the join probe). The r12 literal
-    ``element_at`` fold stays out: this form beats it while keeping the
-    same single shuffle, and adds back no per-(vec, plane) second agg."""
-    from .llm_ops import _N_PLANES
-    from .registry import static_table
-
-    # View-gated source (direct test callers may hold views for a
-    # different sf_dir — the static_table contract).
-    emb = static_table(spark, sf_dir, "embeddings")
-
-    def psign(j: int) -> str:
-        h = (
-            f"cast(conv(substring(md5(concat('hp-{j}:', "
-            "cast(dim as string))), 1, 15), 16, 10) as bigint)"
-        )
-        return (
-            f"CASE WHEN {h} % 2 = 1 THEN cast(1.0 as double)"
-            f" ELSE cast(-1.0 as double) END AS s{j}"
-        )
-
-    scols = ",\n            ".join(psign(j) for j in range(_N_PLANES))
-    sums = ",\n            ".join(
-        f"sum(cast(e.v * p.s{j} as decimal(38,9))) AS s{j}"
-        for j in range(_N_PLANES)
-    )
-    bits = " + ".join(
-        f"(case when s{j} >= 0 then 1 else 0 end) * {1 << j}"
-        for j in range(_N_PLANES)
-    )
-    return spark.sql(f"""
-    WITH planes AS (
-        SELECT dim, {scols}
-        FROM (SELECT explode(sequence(1,
-            (SELECT max(size(embedding)) FROM {{emb}}))) AS dim)
-    ),
-    ed AS (
-        SELECT vec_id, pos + 1 AS dim, cast(col as double) AS v
-        FROM (SELECT /*+ REPARTITION */ vec_id, embedding FROM {{emb}}) e
-        LATERAL VIEW posexplode(embedding) t AS pos, col
-    ),
-    sums AS (
-        SELECT /*+ BROADCAST(p) */ e.vec_id, {sums}
-        FROM ed e JOIN planes p ON e.dim = p.dim
-        GROUP BY e.vec_id
-    )
-    SELECT vec_id, cast({bits} as bigint) AS bucket FROM sums
-    """, emb=emb)
-
-
-def _multiprobe_queries_core(d: str) -> str:
+def _multiprobe_queries_core(d: str, buckets: str) -> str:
     """The 5-row query table (id, embedding, home bucket)."""
-    return """
+    return f"""
+        WITH buckets AS ({buckets})
         SELECT e.vec_id AS query_id, e.embedding, b.bucket
         FROM embeddings e JOIN buckets b ON b.vec_id = e.vec_id
         WHERE e.vec_id < 5
@@ -1111,11 +1040,11 @@ def _multiprobe_queries_core(d: str) -> str:
 def _multiprobe_recall(d: str, buckets: str, queries: str) -> str:
     from .llm_ops import _N_PLANES, _cosine, _sim_topk
 
-    # ``buckets``/``queries`` are the bucket table (one row per vector) and
-    # the 5-row query table: the Spark builder passes its checkpoints, the
-    # oracle the SQL texts. Inlined, the probes/cand/ranked fan-out
-    # re-derived the whole hyperplane-hash pipeline per consumer (26 fact
-    # scans planned — the round-11 registry-wide plan audit).
+    # ``buckets``/``queries`` are the shared bucket table (one row per
+    # vector) and the 5-row query table read from it. Inlined, the
+    # probes/cand/ranked fan-out re-derived the whole hyperplane-hash
+    # pipeline per consumer (26 fact scans planned — the round-11
+    # registry-wide plan audit).
     cos = _cosine(d, "q.embedding", "c.embedding")
     flip = S.bit_xor2("q.bucket", S.shift_left("cast(1 as bigint)", "i", d), d)
     probes = f"""
@@ -1177,11 +1106,10 @@ def _multiprobe_recall(d: str, buckets: str, queries: str) -> str:
     """
 
 
-@register(
+pair(
     "audit_multiprobe_recall",
-    oracle=_multiprobe_recall(
-        DUCK, _lsh_buckets(DUCK), _multiprobe_queries_core(DUCK)
-    ),
+    _multiprobe_recall,
+    shared={"buckets": _lsh_buckets, "queries": _multiprobe_queries_core},
     tags=("similarity", "audit"),
     doc="Multi-probe LSH audit (Lv et al. 2007): each query probes its home "
     "bucket PLUS the 4 Hamming-1 neighbor buckets (bucket XOR one plane "
@@ -1194,22 +1122,6 @@ def _multiprobe_recall(d: str, buckets: str, queries: str) -> str:
     "The bucket table and the 5-row query table are localCheckpointed "
     "so the hyperplane-hash pipeline runs once.",
 )
-def audit_multiprobe_recall(spark, sf_dir):
-    b = _lsh_buckets_df(spark, sf_dir).localCheckpoint()
-    q = spark.sql(
-        "WITH buckets AS (SELECT vec_id, bucket FROM {b})"
-        f"{_multiprobe_queries_core(SPARK)}",
-        b=b,
-    ).localCheckpoint()
-    return spark.sql(
-        _multiprobe_recall(
-            SPARK,
-            "SELECT vec_id, bucket FROM {b}",
-            "SELECT query_id, embedding, bucket FROM {q}",
-        ),
-        b=b,
-        q=q,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1225,13 +1137,20 @@ def _whiten_body(d: str) -> str:
     re-expanded the whole xv-join prefix per reference and timed out on
     the giant-payload surface's 10k dims, r9)."""
     mat = "MATERIALIZED " if d == DUCK else ""
+    # The BROADCAST hints keep the element table xv on the probe side: the
+    # checkpointed xv carries its pre-checkpoint size estimate (the
+    # embeddings scan, before the per-dim explode), so unhinted Spark
+    # broadcast all of it — 5M rows on the giant-payload surface's 10,048
+    # dims, which ran the 4 GB driver out of broadcast memory.
     return f"""
     proj AS {mat}(
-        SELECT xv.vec_id, round({S.dsum('xv.x * ld.l', d)}, 9) AS p
+        SELECT /*+ BROADCAST(ld) */ xv.vec_id,
+            round({S.dsum('xv.x * ld.l', d)}, 9) AS p
         FROM xv JOIN loading ld ON xv.dm = ld.dm GROUP BY xv.vec_id
     ),
     defl AS {mat}(
-        SELECT xv.vec_id, xv.dm, xv.x - proj.p * ld.l AS xd
+        SELECT /*+ BROADCAST(proj, ld) */ xv.vec_id, xv.dm,
+            xv.x - proj.p * ld.l AS xd
         FROM xv
         JOIN proj ON proj.vec_id = xv.vec_id
         JOIN loading ld ON ld.dm = xv.dm

@@ -160,9 +160,7 @@ def test_containment_is_asymmetric(hand_views):
             (3, "x1 x2 x3"),  # disjoint doc pairs with nobody
         ],
     )
-    from rugpull_data_pipeline_spark.plans.mlprep_ops import _containment
-
-    rows = spark.sql(_containment(SPARK)).collect()
+    rows = registry.get("dedup_containment_ngram").builder(spark, "unused").collect()
     assert [(r.src_doc, r.dst_doc, r.containment) for r in rows] == [(1, 2, 1.0)]
 
 

@@ -6,10 +6,10 @@ on, independently of the (slower, registry-level) oracle gate:
 1. The fused pre/post explode in ``extract_balance_changes`` must produce
    the same relation as the old union-of-two-explodes on every edge the
    union handled row-by-row (null arrays, empty arrays, null elements).
-2. ``_lsh_buckets_df`` (plane signs folded in as literals, one agg) must
-   equal the SQL twin ``_lsh_buckets`` the oracle runs — including on a
-   degenerate corpus with empty embeddings, null elements and an
-   all-null vector.
+2. The hyperplane bucketing text ``_lsh_buckets`` (plane signs as one
+   column per plane, one agg) must give the same buckets on Spark and on
+   DuckDB, the engine its oracle runs on — including on a degenerate
+   corpus with empty embeddings, null elements and an all-null vector.
 """
 
 from __future__ import annotations
@@ -81,54 +81,61 @@ def test_fused_phase_explode_matches_union(spark):
     assert old.schema == new.schema
 
 
+def _duck_buckets(create_embeddings: str) -> list[tuple]:
+    import duckdb
+
+    from rugpull_data_pipeline_spark.functions.scalars import DUCK
+    from rugpull_data_pipeline_spark.plans.llm_ops import _lsh_buckets
+
+    con = duckdb.connect()
+    con.execute(create_embeddings)
+    return sorted(map(tuple, con.execute(_lsh_buckets(DUCK)).fetchall()))
+
+
 def test_lsh_buckets_df_matches_sql_twin(spark, sf_dir):
-    from rugpull_data_pipeline_spark.plans import registry
-    from rugpull_data_pipeline_spark.plans.stats_eval import (
-        _lsh_buckets,
-        _lsh_buckets_df,
-    )
     from rugpull_data_pipeline_spark.functions.scalars import SPARK
+    from rugpull_data_pipeline_spark.plans import registry
+    from rugpull_data_pipeline_spark.plans.llm_ops import _lsh_buckets
 
     registry._ensure_views(spark, sf_dir)
-    sql_rows = sorted(map(tuple, spark.sql(_lsh_buckets(SPARK)).collect()))
-    df_rows = sorted(map(tuple, _lsh_buckets_df(spark, sf_dir).collect()))
-    assert sql_rows == df_rows
-    assert len(sql_rows) > 0
+    spark_rows = sorted(map(tuple, spark.sql(_lsh_buckets(SPARK)).collect()))
+    duck_rows = _duck_buckets(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{sf_dir}/embeddings.parquet')"
+    )
+    assert spark_rows == duck_rows
+    assert len(spark_rows) > 0
 
 
-def test_lsh_buckets_df_matches_sql_twin_degenerate(spark):
+def test_lsh_buckets_df_matches_sql_twin_degenerate(hand_views):
     # empty embedding (absent from buckets), null elements (skipped by SUM),
     # all-null vector (NULL sums -> bit 0 on every plane), plus a normal row
-    from rugpull_data_pipeline_spark.plans.stats_eval import (
-        _lsh_buckets,
-        _lsh_buckets_df,
-    )
     from rugpull_data_pipeline_spark.functions.scalars import SPARK
-    from rugpull_data_pipeline_spark.plans import registry
+    from rugpull_data_pipeline_spark.plans.llm_ops import _lsh_buckets
 
-    df = spark.createDataFrame(
-        [
-            (1, [0.5, -0.25, 1.0], 0),
-            (2, [], 0),
-            (3, [None, 2.0, None], 0),
-            (4, [None, None], 0),
-            (5, [-1e-9, 1e-9], 0),
-        ],
-        "vec_id long, embedding array<float>, label int",
+    spark = hand_views
+    rows = [
+        (1, [0.5, -0.25, 1.0], 0),
+        (2, [], 0),
+        (3, [None, 2.0, None], 0),
+        (4, [None, None], 0),
+        (5, [-1e-9, 1e-9], 0),
+    ]
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).createOrReplaceTempView("embeddings")
+    spark_rows = sorted(map(tuple, spark.sql(_lsh_buckets(SPARK)).collect()))
+
+    def lit(v):
+        return "NULL" if v is None else repr(v)
+
+    values = ", ".join(
+        f"({i}, [{', '.join(map(lit, e))}]::FLOAT[], {lab})" for i, e, lab in rows
     )
-    df.createOrReplaceTempView("embeddings")
-    # direct the view-gated loader at the temp view we just registered
-    registry._VIEWS_FOR[id(spark)] = "__opt_r12_degenerate__"
-    try:
-        sql_rows = sorted(map(tuple, spark.sql(_lsh_buckets(SPARK)).collect()))
-        df_rows = sorted(
-            map(
-                tuple,
-                _lsh_buckets_df(spark, "__opt_r12_degenerate__").collect(),
-            )
-        )
-    finally:
-        registry._VIEWS_FOR.pop(id(spark), None)
-    assert sql_rows == df_rows
+    duck_rows = _duck_buckets(
+        "CREATE TABLE embeddings AS SELECT vec_id::BIGINT AS vec_id, embedding, "
+        f"label::INT AS label FROM (VALUES {values}) t(vec_id, embedding, label)"
+    )
+    assert spark_rows == duck_rows
     # vec 2 absent (no exploded rows), vecs 1/3/4/5 present
-    assert [r[0] for r in df_rows] == [1, 3, 4, 5]
+    assert [r[0] for r in spark_rows] == [1, 3, 4, 5]

@@ -358,15 +358,14 @@ def test_kcenter_farthest_point_traversal(hand_views):
 
 def test_bloom_prefilter_no_false_negatives(hand_views):
     spark = hand_views
-    from rugpull_data_pipeline_spark.plans.advanced import join_bloom_prefilter
-
     # user 7 spends 600.00 on purchases (member); users 1..5 never qualify.
     rows = [(0, 100, 7, "purchase", 600.0)]
     rows += [(i, 200 + i, i, "click", 1.0) for i in range(1, 6)]
     rows += [(10, 300, 7, "view", 2.0)]
     _mk_events_valued(spark, rows)
     got = {
-        r.event_type: r for r in join_bloom_prefilter(spark, "unused").collect()
+        r.event_type: r
+        for r in registry.get("join_bloom_prefilter").builder(spark, "unused").collect()
     }
     # every true member row passes the bloom (no false negatives):
     for r in got.values():

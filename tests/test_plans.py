@@ -458,6 +458,49 @@ def test_no_inline_or_checkpoint_fork():
     assert not forks, f"inline-or-checkpoint forks: {forks}"
 
 
+# The builders that may still call localCheckpoint themselves, besides
+# registry.pair (the one materialization policy for shared SQL cores).
+_CHECKPOINT_ALLOWED = {
+    "curation.dedup_cc_fixpoint": "fixpoint loop: its round count depends on the data",
+    "mlprep_ops.graph_hits_power3": "power loop with measured lazy checkpoints (r13)",
+    "pipeline_ops.sample_kcenter_coreset": "greedy loop with a measured lazy checkpoint",
+    "multimodal_q.multimodal_phash_neardup": "mapInPandas kernel: no SQL text to share",
+    "spark4_features.spark4_sql_scripting": "the SQL-scripting surface is the query",
+    "stream_infra._flagship_e2e": "streaming: per-batch state, not a query core",
+    "stream_infra._price_maint_e2e": "streaming: per-batch state, not a query core",
+    "stream_infra.stream_watchlist_feedback": "streaming: per-batch state, not a query core",
+}
+
+
+def test_local_checkpoint_only_in_pair_and_allowlisted_builders():
+    """localCheckpoint( appears in plans/ only inside registry.pair and the
+    named builders above: a shared core written as a DataFrame builder with
+    its own checkpoint is a second materialization policy (and a second
+    copy of its oracle text)."""
+    import ast
+    import pathlib
+
+    from rugpull_data_pipeline_spark import plans
+
+    found = set()
+    for path in sorted(pathlib.Path(plans.__path__[0]).glob("*.py")):
+        src = path.read_text()
+        tree = ast.parse(src)
+        outside = src
+        for node in tree.body:
+            if not isinstance(node, ast.FunctionDef):
+                continue
+            seg = ast.get_source_segment(src, node)
+            outside = outside.replace(seg, "")
+            if "localCheckpoint(" in seg:
+                found.add(f"{path.stem}.{node.name}")
+        if "localCheckpoint(" in outside:
+            found.add(f"{path.stem}:<module>")
+    allowed = set(_CHECKPOINT_ALLOWED) | {"registry.pair"}
+    assert found - allowed == set(), f"checkpoints outside pair: {found - allowed}"
+    assert allowed - found == set(), f"stale allow-list entries: {allowed - found}"
+
+
 @pytest.mark.parametrize(
     "shared",
     [
@@ -474,11 +517,13 @@ def test_shared_core_must_read_an_earlier_core(shared):
     assert "_bad_core_order" not in registry._REGISTRY
 
 
-# Build-time Spark jobs (sf0.001) of the iterative and driver-scalar queries
-# when each was a hand-written DataFrame builder that looped on the driver
-# (count/first/collect per round, an eager localCheckpoint per frame). Run
-# as registry.pair chains, their unrolled rounds are checkpointed cores and
-# plain CTEs, so a build may not start more jobs than that.
+# Build-time Spark jobs (sf0.001) of queries that were hand-written
+# DataFrame builders: first the iterative and driver-scalar queries that
+# looped on the driver (count/first/collect per round, an eager
+# localCheckpoint per frame), then the shingle / LSH / prefilter queries
+# that rewrote their oracle text in the DataFrame API. Run as registry.pair
+# chains, their checkpointed cores and plain CTEs may not start more jobs
+# than that.
 _HAND_BUILDER_JOBS = {
     "graph_bfs_frontier3": 23,
     "graph_degree_assortativity": 10,
@@ -491,6 +536,15 @@ _HAND_BUILDER_JOBS = {
     "mlprep_logreg_gd3": 9,
     "sim_pca_power1": 13,
     "sim_whiten_rerank": 13,
+    "dedup_ngram_jaccard": 4,
+    "dedup_cluster_neardup": 9,
+    "dedup_containment_ngram": 3,
+    "sim_lsh_hyperplane_ann": 6,
+    "audit_ann_recall": 6,
+    "audit_multiprobe_recall": 8,
+    "audit_lsh_band_sensitivity": 11,
+    "profile_source_vocab_overlap": 5,
+    "join_bloom_prefilter": 4,
 }
 
 
