@@ -36,6 +36,26 @@ def pct_change(new: pd.Series, old: pd.Series) -> pd.Series:
     return ((new - old).abs() / old.abs()).where(old != 0.0)
 
 
+def ordered_python_stage(
+    df: DataFrame, kernel: Callable[[DataFrame], DataFrame], *order: str
+) -> DataFrame:
+    """Run a Python kernel over every worker and return its output globally
+    ordered by ``order``, with the kernel executed once.
+
+    A global ``orderBy`` directly on a Python node plans a range exchange
+    over it, and the range partitioner's sampling job computes the
+    exchange's child a second time: the kernel would run twice per
+    execution.
+    Range-partitioning the kernel's INPUT on the leading key instead points
+    the sampling job at the cheap JVM scan. Range partitions are ordered,
+    so sorting each one makes the output globally ordered. For a grouped
+    kernel keyed on ``order[0]`` the range partitioning also satisfies the
+    grouping's clustering, so the group-by adds no hash shuffle.
+    """
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return kernel(df.repartitionByRange(n, order[0])).sortWithinPartitions(*order)
+
+
 def groupwise_minmax_scale(df: DataFrame, key_col: str, value_col: str) -> DataFrame:
     """Grouped-map UDF (``applyInPandas``): per-key min-max scaling of
     ``value_col`` to [0, 1].
@@ -44,9 +64,11 @@ def groupwise_minmax_scale(df: DataFrame, key_col: str, value_col: str) -> DataF
     one subtraction, one division) so the result is bit-identical to the SQL
     window form regardless of row order or partitioning — which is what lets
     a DuckDB oracle verify the grouped-map plumbing exactly. Groups shuffle
-    once on the key; each group materializes as one pandas frame, so the
-    operator is for keys whose group fits an executor (per-user, per-pair
-    state — the reference's chunk shapes), not whole-table groups.
+    once on the key (not at all when the input is already partitioned on
+    it, see ``ordered_python_stage``); each group materializes as one pandas
+    frame, so the operator is for keys whose group fits an executor
+    (per-user, per-pair state — the reference's chunk shapes), not
+    whole-table groups.
     """
     from ..session import ship_package
 

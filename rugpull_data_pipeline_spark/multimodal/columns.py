@@ -14,6 +14,14 @@ Scale notes: payloads never pass through the driver; each ``mapInPandas``
 batch holds ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, so
 executor memory bounds batch size × payload size. Feature vectors are
 fixed-size arrays → columnar, shuffle-friendly.
+
+The kernels run on the partitioning they are given. A single-file scan is
+one partition, which would run a kernel serially on one worker, so callers
+spread the input first: range-partitioned on ``doc_id`` through
+``functions.udfs.ordered_python_stage`` when the output is read in
+``doc_id`` order (the kernel then runs once, and a per-partition sort
+replaces the global one), round-robin when the output only feeds joins or
+group-bys.
 """
 
 from __future__ import annotations
@@ -112,10 +120,7 @@ def decode_image_features(df: DataFrame, use_stub: bool = True) -> DataFrame:
                 }
             )
 
-    # Repartition before the Python stage: a single-file scan is one
-    # partition, which would run the decode kernel serially on one worker.
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return df.select("doc_id", "blob").repartition(n).mapInPandas(mapper, schema)
+    return df.select("doc_id", "blob").mapInPandas(mapper, schema)
 
 
 def sample_frames(df: DataFrame, every_n_bytes: int = 64, use_stub: bool = True) -> DataFrame:
@@ -161,8 +166,7 @@ def sample_frames(df: DataFrame, every_n_bytes: int = 64, use_stub: bool = True)
                     )
             yield pd.DataFrame(out)
 
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return df.select("doc_id", "blob").repartition(n).mapInPandas(mapper, schema)
+    return df.select("doc_id", "blob").mapInPandas(mapper, schema)
 
 
 def resize_blobs(df: DataFrame, target_bytes: int = 32, use_stub: bool = True) -> DataFrame:
@@ -214,8 +218,7 @@ def resize_blobs(df: DataFrame, target_bytes: int = 32, use_stub: bool = True) -
                 }
             )
 
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return df.select("doc_id", "blob").repartition(n).mapInPandas(mapper, schema)
+    return df.select("doc_id", "blob").mapInPandas(mapper, schema)
 
 
 def window_energy(df: DataFrame, window_bytes: int = 32, use_stub: bool = True) -> DataFrame:
@@ -253,8 +256,7 @@ def window_energy(df: DataFrame, window_bytes: int = 32, use_stub: bool = True) 
                     out["energy"].append(sum(b * b for b in win))
             yield pd.DataFrame(out)
 
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return df.select("doc_id", "blob").repartition(n).mapInPandas(mapper, schema)
+    return df.select("doc_id", "blob").mapInPandas(mapper, schema)
 
 
 _PHASH_BITS = 64
@@ -319,5 +321,4 @@ def phash_words(df: DataFrame, use_stub: bool = True) -> DataFrame:
                     out["wv"].append(wv)
             yield pd.DataFrame(out)
 
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return df.select("doc_id", "blob").repartition(n).mapInPandas(mapper, schema)
+    return df.select("doc_id", "blob").mapInPandas(mapper, schema)

@@ -399,11 +399,12 @@ ORDER BY user_id, event_id
     "Arrow plumbing exactly (SURVEY.md §2.9 applyInPandas surface).",
 )
 def udf_groupmap_minmax_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.udfs import groupwise_minmax_scale
+    from ..functions.udfs import groupwise_minmax_scale, ordered_python_stage
 
     ev = static_table(spark, sf_dir, "events").where(F.col("event_type") == "purchase")
-    return groupwise_minmax_scale(ev, "user_id", "value").orderBy(
-        "user_id", "event_id"
+    return ordered_python_stage(
+        ev, lambda e: groupwise_minmax_scale(e, "user_id", "value"),
+        "user_id", "event_id",
     )
 
 
@@ -794,9 +795,11 @@ ORDER BY vec_id
     "mapInPandas / mapInArrow).",
 )
 def udf_arrowmap_vecsum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.udfs import arrow_vec_fixedpoint_sum
+    from ..functions.udfs import arrow_vec_fixedpoint_sum, ordered_python_stage
 
-    return arrow_vec_fixedpoint_sum(static_table(spark, sf_dir, "embeddings")).orderBy("vec_id")
+    return ordered_python_stage(
+        static_table(spark, sf_dir, "embeddings"), arrow_vec_fixedpoint_sum, "vec_id"
+    )
 
 
 # ---------------------------------------------------------------------------

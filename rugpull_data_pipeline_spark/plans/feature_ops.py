@@ -382,6 +382,7 @@ def window_holt_linear(spark, sf_dir):
     import pandas as pd
     from pyspark.sql import types as T
 
+    from ..functions.udfs import ordered_python_stage
     from ..session import ship_package
 
     ship_package(spark)
@@ -421,16 +422,18 @@ def window_holt_linear(spark, sf_dir):
         out["forecast_next"] = out["level"] + out["trend"]
         return out
 
-    folded = buckets.groupBy("event_type").applyInPandas(fold, schema)
-    return spark.sql(
-        """
-        SELECT event_type, hr, round(level, 6) AS level,
-            round(trend, 6) AS trend,
-            round(forecast_next, 6) AS forecast_next
-        FROM {folded} ORDER BY event_type, hr
-        """,
-        folded=folded,
-    )
+    def kernel(b):
+        return spark.sql(
+            """
+            SELECT event_type, hr, round(level, 6) AS level,
+                round(trend, 6) AS trend,
+                round(forecast_next, 6) AS forecast_next
+            FROM {folded}
+            """,
+            folded=b.groupBy("event_type").applyInPandas(fold, schema),
+        )
+
+    return ordered_python_stage(buckets, kernel, "event_type", "hr")
 
 
 # ---------------------------------------------------------------------------

@@ -731,6 +731,13 @@ def _hill_tail(d: str) -> str:
     # cents grid: each grid row contributes min(c, remaining-top-slots)
     # copies of its 9-dp-quantized ln; x_(51) comes from the cumulative
     # top-down counts. xi = mean(ln x_i) - ln x_51 over the top 50.
+    # xi is an exact decimal (a multiple of 2e-11), so it can sit exactly on
+    # a 6-dp half boundary, where two double paths round to different
+    # sides. Both engines therefore keep it exact and round it half-up as a
+    # decimal: the copy count is a decimal(4,0) (a bigint factor would widen
+    # the product past 38 digits and Spark would cut it to 7 dp), and the
+    # mean multiplies by 0.02, since DuckDB turns a decimal division into a
+    # double.
     lnv = "round(ln(cast(v as double)), 9)"
     return f"""
     WITH sl AS (
@@ -751,9 +758,9 @@ def _hill_tail(d: str) -> str:
     ),
     top AS (
         SELECT event_type, max(n) AS n,
-            cast(sum(greatest(cast(0 as bigint),
-                least(c, 50 - (cum_top - c)))
-                * cast({lnv} as decimal(19,9))) as double) AS ln_top_sum,
+            cast(sum(cast(greatest(cast(0 as bigint),
+                least(c, 50 - (cum_top - c))) as decimal(4,0))
+                * cast({lnv} as decimal(19,9))) as decimal(20,9)) AS ln_top_sum,
             max(CASE WHEN cum_top >= 51 THEN v END) AS x51
         FROM cumt GROUP BY event_type
     )
@@ -764,9 +771,9 @@ def _hill_tail(d: str) -> str:
             AS tail_alpha
     FROM (
         SELECT event_type, n, x51,
-            {_r6u('ln_top_sum / cast(50 as double) '
-                  '- cast(round(ln(cast(x51 as double)), 9) as double)')}
-                AS xi
+            cast(round(ln_top_sum * cast(0.02 as decimal(3,2))
+                - cast(round(ln(cast(x51 as double)), 9) as decimal(19,9)),
+                6) as double) AS xi
         FROM top WHERE n >= 51 AND x51 > 0
     ) fin
     ORDER BY event_type

@@ -12,7 +12,12 @@ batch transfer, UDF signatures, flatMap row fan-out — not just the plan shape.
 Scale notes: payloads never visit the driver; ``mapInPandas`` batches are
 bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch`` × payload size;
 feature vectors are fixed-width so every downstream shuffle moves small
-columnar data, never the blobs.
+columnar data, never the blobs. The one shuffle of payloads is the spread of
+the scan ahead of the kernel: the ordered queries range-partition it on
+``doc_id`` (``ordered_python_stage``), so the range sampling job reads the
+scan instead of re-running the kernel, and each partition is sorted after
+it; the near-dup and VAD queries, whose kernel output feeds joins and
+group-bys, spread it round-robin.
 """
 
 from __future__ import annotations
@@ -20,11 +25,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.udfs import ordered_python_stage
 from ..multimodal.columns import (
     attach_blob_column,
     decode_image_features,
     extract_blob_metadata,
+    resize_blobs,
     sample_frames,
+    window_energy,
 )
 from .registry import register, static_table
 
@@ -73,10 +81,13 @@ _FEAT_ORACLE = "SELECT doc_id,\n" + ",\n".join(
 )
 def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = static_table(spark, sf_dir, "documents")
-    feats = decode_image_features(attach_blob_column(docs))
-    return feats.select(
-        "doc_id", *[F.col("features")[i].alias(f"f{i}") for i in range(8)]
-    ).orderBy("doc_id")
+    return ordered_python_stage(
+        attach_blob_column(docs),
+        lambda blobs: decode_image_features(blobs).select(
+            "doc_id", *[F.col("features")[i].alias(f"f{i}") for i in range(8)]
+        ),
+        "doc_id",
+    )
 
 
 # --- video-style frame sampling (flatMap-shaped mapInPandas) ----------------
@@ -117,8 +128,12 @@ ORDER BY doc_id, frame_idx
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = static_table(spark, sf_dir, "documents")
-    frames = sample_frames(attach_blob_column(docs), every_n_bytes=64)
-    return frames.orderBy("doc_id", "frame_idx")
+    return ordered_python_stage(
+        attach_blob_column(docs),
+        lambda blobs: sample_frames(blobs, every_n_bytes=64),
+        "doc_id",
+        "frame_idx",
+    )
 
 
 # --- binary-file landing zone (binaryFile source vs read_blob oracle) -------
@@ -244,12 +259,12 @@ ORDER BY k.doc_id
     "downstream stages never shuffle blobs.",
 )
 def multimodal_resize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..multimodal.columns import resize_blobs
-
     docs = static_table(spark, sf_dir, "documents")
-    return resize_blobs(
-        attach_blob_column(docs), target_bytes=_RESIZE_TARGET
-    ).orderBy("doc_id")
+    return ordered_python_stage(
+        attach_blob_column(docs),
+        lambda blobs: resize_blobs(blobs, target_bytes=_RESIZE_TARGET),
+        "doc_id",
+    )
 
 
 # --- audio-style windowed energy (flatMap + per-window integer reduce) ------
@@ -301,12 +316,19 @@ ORDER BY doc_id, win_idx
     "resize / frame-sample / window-reduce kernel set.",
 )
 def multimodal_window_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..multimodal.columns import attach_blob_column, window_energy
-
     docs = static_table(spark, sf_dir, "documents")
-    return window_energy(attach_blob_column(docs), window_bytes=32).orderBy(
-        "doc_id", "win_idx"
+    return ordered_python_stage(
+        attach_blob_column(docs),
+        lambda blobs: window_energy(blobs, window_bytes=32),
+        "doc_id",
+        "win_idx",
     )
+
+
+def _spread(blobs: DataFrame) -> DataFrame:
+    """Round-robin a blob frame over every worker ahead of a kernel whose
+    output only feeds joins and group-bys (no global order to keep)."""
+    return blobs.repartition(blobs.sparkSession.sparkContext.defaultParallelism)
 
 
 # --- perceptual-hash near-dup (aHash words + pigeonhole join) ---------------
@@ -399,10 +421,10 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from ..multimodal.columns import attach_blob_column, phash_words
+    from ..multimodal.columns import phash_words
 
     docs = static_table(spark, sf_dir, "documents")
-    words = phash_words(attach_blob_column(docs)).localCheckpoint()
+    words = phash_words(_spread(attach_blob_column(docs))).localCheckpoint()
     capped = (
         words.withColumn(
             "bsz", F.count("*").over(Window.partitionBy("w", "wv"))
@@ -512,10 +534,8 @@ ORDER BY doc_id, seg_start
 def multimodal_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from ..multimodal.columns import attach_blob_column, window_energy
-
     docs = static_table(spark, sf_dir, "documents")
-    en = window_energy(attach_blob_column(docs), window_bytes=32)
+    en = window_energy(_spread(attach_blob_column(docs)), window_bytes=32)
     tot = en.groupBy("doc_id").agg(
         F.sum("energy").cast("bigint").alias("te"),
         F.count(F.lit(1)).cast("bigint").alias("nw"),

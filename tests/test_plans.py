@@ -216,11 +216,15 @@ def test_no_accidental_nested_loop_joins(spark):
 
 def test_flagship_is_all_broadcast(spark):
     """The flagship chain joins facts only against broadcastable dims — at
-    sf0.* it must plan zero SortMergeJoins (the watchlist semi-join and both
-    enrichment joins broadcast, like the reference's per-thread hash set)."""
+    sf0.* it must plan zero SortMergeJoins (the watchlist join and the price
+    enrichment broadcast, like the reference's per-thread hash set). The
+    watchlist chain is planned once (one region scan), and the supplier
+    name rides as a grouping key, never a string aggregation buffer."""
     plan = _plan(spark, "flagship_balance_report")
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") >= 3
+    assert plan.count("/region.parquet") == 1
+    assert "SortAggregate" not in plan
 
 
 def test_q01_scan_pushdown_and_pruning(spark):
@@ -278,6 +282,14 @@ def test_broadcast_dims_survive_aqe(spark, name):
     assert "BroadcastHashJoin" in plan
 
 
+def test_q03_groups_by_order_attributes(spark):
+    """Q3 groups by the order's date and priority, as TPC-H does: a max()
+    over those strings would force a SortAggregate and its sorts."""
+    plan = _plan(spark, "q03_shipping_priority")
+    assert "HashAggregate" in plan
+    assert "SortAggregate" not in plan
+
+
 def test_bucketed_join_is_shuffle_free(spark):
     """The bucketed fact-fact join must plan a SortMergeJoin with ZERO
     exchanges on either join side — the only shuffles in the whole plan are
@@ -306,6 +318,68 @@ def test_lookup_enrich_prunes_columns_into_python(spark):
     plan = _plan(spark, "lookup_batched_mapinpandas")
     assert "MapInPandas" in plan
     assert "ReadSchema: struct<user_id:bigint,value:double>" in plan
+
+
+# The Python-stage queries with a documented global order, and that order.
+_ORDERED_PYTHON_STAGES = {
+    "multimodal_decode_features": ("doc_id",),
+    "multimodal_frame_sample": ("doc_id", "frame_idx"),
+    "multimodal_resize_batch": ("doc_id",),
+    "multimodal_window_energy": ("doc_id", "win_idx"),
+    "udf_groupmap_minmax_scale": ("user_id", "event_id"),
+    "udf_arrowmap_vecsum": ("vec_id",),
+    "window_holt_linear": ("event_type", "hr"),
+}
+
+
+def _python_under_range_exchange(df) -> list[str]:
+    """Python nodes of ``df``'s executed final plan that sit under a range
+    exchange with no exchange or query stage in between."""
+    found = []
+
+    def walk(node, under_range):
+        cls = node.getClass().getName()
+        simple = cls.rsplit(".", 1)[-1]
+        if simple == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan(), False)
+        if simple.endswith("QueryStageExec"):
+            return walk(node.plan(), False)
+        if simple == "ShuffleExchangeExec":
+            part = node.outputPartitioning().getClass().getName()
+            under_range = part.endswith("RangePartitioning")
+        elif "Exchange" in simple:
+            under_range = False
+        if under_range and cls.startswith("org.apache.spark.sql.execution.python."):
+            found.append(simple)
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i), under_range)
+
+    walk(df._jdf.queryExecution().executedPlan(), False)
+    return found
+
+
+def test_python_stages_run_once_under_a_global_order(spark):
+    """A global sort directly on a Python node makes the range partitioner's
+    sampling job run the kernel a second time. No udf/multimodal query may
+    plan one; the ordered ones range-partition the kernel's input and sort
+    each partition, and still return their rows in their documented order."""
+    offenders, unordered = {}, []
+    for name, spec in sorted(registry._REGISTRY.items()):
+        if not {"udf", "multimodal"} & set(spec.tags):
+            continue
+        df = spec.builder(spark, SF)
+        rows = df.collect()
+        nodes = _python_under_range_exchange(df)
+        if nodes:
+            offenders[name] = nodes
+        keys = _ORDERED_PYTHON_STAGES.get(name)
+        if keys:
+            got = [tuple(r[k] for k in keys) for r in rows]
+            if not rows or got != sorted(got):
+                unordered.append(name)
+    assert not offenders, f"Python nodes under a range exchange: {offenders}"
+    assert not unordered, f"not in their documented order: {unordered}"
 
 
 def test_chunking_is_map_only(spark):

@@ -9,9 +9,10 @@ from __future__ import annotations
 
 import hashlib
 import math
+from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
@@ -96,6 +97,9 @@ def test_mann_whitney_matches_bruteforce(hand_views, rows):
 @given(
     st.lists(st.integers(1, 400), min_size=51, max_size=120),
 )
+# Exact xi = 0.5765385, on the 6-dp half boundary: a float sum of the logs
+# reads ...5000000043, a decimal sum divided in double ...4999999998.
+@example(vals=[259, 263, 331, 377, 389] + [1] * 102)
 def test_hill_tail_matches_bruteforce(hand_views, vals):
     spark = hand_views
     from rugpull_data_pipeline_spark.plans.forensics_ops import _hill_tail
@@ -104,18 +108,19 @@ def test_hill_tail_matches_bruteforce(hand_views, vals):
     rows = spark.sql(_hill_tail(SPARK)).collect()
     cents = sorted((v * 100 for v in vals), reverse=True)
     top50, x51 = cents[:50], cents[50]
-    xi = sum(round(math.log(v), 9) for v in top50) / 50 - round(
-        math.log(x51), 9
-    )
+
+    def ln9(v):
+        return Decimal(str(round(math.log(v), 9)))
+
+    xi = sum(ln9(v) for v in top50) / 50 - ln9(x51)
     assert len(rows) == 1
     r = rows[0]
     assert r["x_k1_cents"] == x51
     assert r["n_values"] == len(vals)
-    assert r["hill_xi"] == pytest.approx(xi, abs=2e-6)
-    if abs(xi) > 1e-9:
-        assert r["tail_alpha"] == pytest.approx(
-            1.0 / (math.floor(xi * 1e6 + 0.5) / 1e6), abs=2e-6
-        )
+    assert r["hill_xi"] == pytest.approx(float(xi), abs=2e-6)
+    if xi != 0:
+        xi6 = xi.quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP)
+        assert r["tail_alpha"] == pytest.approx(1.0 / float(xi6), abs=2e-6)
 
 
 # ---------------------------------------------------------------------------
