@@ -26,10 +26,6 @@ from .registry import register
 
 _N_BLOCKS, _SEED, _FILES = 40, 11, 4
 
-# The oracle SQL strings read these directories directly — materialize them
-# at import time (idempotent, seeded) so the DuckDB side works even if the
-# driver runs an oracle BEFORE its Spark twin.
-
 
 def _parity_dir() -> str:
     return os.path.join(
@@ -48,7 +44,7 @@ def _hot_literal(d: str) -> str:
 
 
 def _read_blocks(spark: SparkSession, with_logs: bool = False) -> DataFrame:
-    path = _ensure_blocks()
+    path = _parity_dir()
     # JSON datasource, not text+from_json: one parse per line at the scan
     # (the from_json form re-parsed per collapsed consumer expression).
     return read_blocks(spark, f"{path}/blocks_*.json", with_logs=with_logs)
@@ -123,6 +119,7 @@ def _balance_oracle(path: str | None = None) -> str:
 @register(
     "solana_balance_extract",
     oracle=_balance_oracle(),
+    inputs=(_ensure_blocks,),
     tags=("flagship", "json", "domain"),
     doc="The full reference chain (SURVEY.md §3.1) on generated getBlock "
     "JSON, oracle-checked by DuckDB reading the same files: schema-pruned "
@@ -145,6 +142,7 @@ def solana_balance_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "solana_balance_stream",
     oracle=_balance_oracle(),
+    inputs=(_ensure_blocks,),
     tags=("flagship", "json", "domain", "streaming"),
     doc="The SAME §3.1 chain run through Structured Streaming (file source "
     "→ foreachBatch micro-batches → per-batch watchlist refresh, ST1/ST5) "
@@ -157,7 +155,7 @@ def solana_balance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.pipelines import stream_balance_pipeline
 
-    blocks_dir = _ensure_blocks()
+    blocks_dir = _parity_dir()
     # No leading underscore: Spark's file listing classifies `_`-prefixed
     # paths as hidden metadata and logs a WARN per micro-batch re-read.
     watch_dir = os.path.join(blocks_dir, "watch_dim")
@@ -226,6 +224,7 @@ def _ensure_xl_blocks() -> str:
 @register(
     "solana_balance_extract_xl",
     oracle=_balance_oracle(_xl_dir()),
+    inputs=(_ensure_xl_blocks,),
     tags=("flagship", "json", "domain", "throughput"),
     doc="The §3.1 extraction chain at reference byte scale: ~115 MB of "
     "block JSON (hundreds of txs per block) through schema-pruned "
@@ -234,7 +233,7 @@ def _ensure_xl_blocks() -> str:
     "anchor (BASELINE.md); same DuckDB oracle template as the small corpus.",
 )
 def solana_balance_extract_xl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _ensure_xl_blocks()
+    path = _xl_dir()
     blocks = read_blocks(spark, f"{path}/blocks_*.json")
     out = extract_balance_changes(blocks, hot_addresses())
     return out.select(
@@ -289,6 +288,7 @@ def _enriched_oracle() -> str:
 @register(
     "solana_enriched_report",
     oracle=_enriched_oracle(),
+    inputs=(_ensure_blocks,),
     tags=("flagship", "json", "domain"),
     doc="The COMPLETE §3.1 chain including the Flight-server enrichment "
     "stage: balance extraction, then P10 watchlist tagging (base/quote "
@@ -477,6 +477,7 @@ def _pool_oracle() -> str:
 @register(
     "solana_pool_detection",
     oracle=_pool_oracle(),
+    inputs=(_ensure_blocks,),
     tags=("json", "domain"),
     doc="New-pool detection prefilter (SURVEY.md §3.2): P8 instruction-log "
     "regex over array_join(logMessages) + P9 recency predicate + key "
@@ -532,6 +533,7 @@ ORDER BY ts_epoch
     oracle=_HOTCOUNT_ORACLE_TEMPLATE.format(
         tx_cte=_duck_tx_cte(), hot="{hot}"
     ).replace("{hot}", _hot_literal(DUCK)),
+    inputs=(_ensure_blocks,),
     tags=("json", "domain", "agg"),
     doc="A3 per-block matched-transaction counter "
     "(RECEIVER/parser_main.cpp:121,133) as a per-block aggregate.",
@@ -619,6 +621,7 @@ ORDER BY mint
     oracle=_RUGPULL_ORACLE_TEMPLATE.format(
         tx_cte=_duck_tx_cte(), hot="{hot}"
     ).replace("{hot}", _hot_literal(DUCK)),
+    inputs=(_ensure_blocks,),
     tags=("json", "domain", "agg", "flagship"),
     doc="The detection composite the whole reference pipeline exists to "
     "feed (its stages end at the enriched balance table; the rug signal is "
@@ -680,6 +683,7 @@ def _ensure_ds_blocks() -> str:
     oracle=_BALANCE_ORACLE_TEMPLATE.format(
         tx_cte=_duck_tx_cte(_ds_dir()), hot=_hot_literal(DUCK)
     ),
+    inputs=(_ensure_ds_blocks,),
     tags=("flagship", "source", "domain"),
     doc="S1 re-expressed as a Spark Python DataSource: batch read of the "
     "`solana_blocks` custom source (worker shards = slot % n_workers, "
@@ -689,7 +693,6 @@ def _ensure_ds_blocks() -> str:
 def solana_balance_from_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.block_datasource import register_block_datasource
 
-    _ensure_ds_blocks()  # the oracle reads these files
     register_block_datasource(spark)
     raw = (
         spark.read.format("solana_blocks")
@@ -710,10 +713,3 @@ def solana_balance_from_datasource(spark: SparkSession, sf_dir: str) -> DataFram
         "post_balance",
         F.unix_timestamp("ts").alias("ts_epoch"),
     ).orderBy("signature", "wallet", "mint")
-
-
-# Materialize the generated corpora now (see note at top): oracle SQL must
-# be runnable before any Spark builder has executed.
-_ensure_blocks()
-_ensure_xl_blocks()
-_ensure_ds_blocks()

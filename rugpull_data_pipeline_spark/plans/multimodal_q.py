@@ -155,18 +155,19 @@ def _ensure_blobs() -> str:
     import os
     import random
 
+    from ..tmpdirs import published_dir
+
     d = _blob_dir()
-    marker = os.path.join(d, ".done")
-    if os.path.exists(marker):
+    if os.path.exists(os.path.join(d, ".done")):
         return d
-    os.makedirs(d, exist_ok=True)
     rng = random.Random(_BLOB_SEED)
-    for i in range(_N_BLOBS):
-        payload = bytes(rng.randrange(256) for _ in range(rng.randint(32, 512)))
-        with open(os.path.join(d, f"blob_{i:03d}.bin"), "wb") as fh:
-            fh.write(payload)
-    with open(marker, "w") as fh:
-        fh.write("ok")
+    with published_dir(d) as tmp:
+        for i in range(_N_BLOBS):
+            payload = bytes(rng.randrange(256) for _ in range(rng.randint(32, 512)))
+            with open(os.path.join(tmp, f"blob_{i:03d}.bin"), "wb") as fh:
+                fh.write(payload)
+        with open(os.path.join(tmp, ".done"), "w") as fh:
+            fh.write("ok")
     return d
 
 
@@ -182,8 +183,8 @@ ORDER BY fname
 
 @register(
     "multimodal_binary_ingest",
-    # materialized at import so the oracle path is readable either side
-    oracle=_BINARY_INGEST_ORACLE_TEMPLATE.format(d=_ensure_blobs()),
+    oracle=_BINARY_INGEST_ORACLE_TEMPLATE.format(d=_blob_dir()),
+    inputs=(_ensure_blobs,),
     tags=("multimodal",),
     doc="Media landing zone: Spark's binaryFile source over a blob "
     "directory (sources/io.read_binary_files), checksummed row-per-file — "
@@ -195,8 +196,7 @@ ORDER BY fname
 def multimodal_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.io import read_binary_files
 
-    d = _ensure_blobs()
-    df = read_binary_files(spark, d, glob="*.bin")
+    df = read_binary_files(spark, _blob_dir(), glob="*.bin")
     hx = F.hex(F.col("content"))
     return (
         df.select(

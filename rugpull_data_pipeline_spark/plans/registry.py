@@ -23,6 +23,7 @@ from ..functions.scalars import DUCK, SPARK
 from ..sources.tables import register_views
 
 BuilderFn = Callable[[SparkSession, str], DataFrame]
+InputFn = Callable[[], object]
 
 _REGISTRY: dict[str, "QuerySpec"] = {}
 
@@ -72,6 +73,11 @@ class QuerySpec:
     oracle: str | None = None
     tags: tuple[str, ...] = field(default_factory=tuple)
     doc: str = ""
+    inputs: tuple[InputFn, ...] = ()
+
+    def generate_inputs(self) -> None:
+        for gen in self.inputs:
+            gen()
 
 
 def register(
@@ -79,15 +85,24 @@ def register(
     oracle: str | None = None,
     tags: tuple[str, ...] = (),
     doc: str = "",
+    inputs: tuple[InputFn, ...] = (),
 ) -> Callable[[BuilderFn], BuilderFn]:
-    """Decorator: register a python builder (DataFrame-API query)."""
+    """Decorator: register a python builder (DataFrame-API query).
+
+    ``inputs`` are the query's input generators: idempotent, seeded
+    functions that write the files its builder and oracle read. The
+    builder, ``get`` and ``all_oracles`` run them on first use, so importing
+    the registry writes nothing and an oracle still runs in a fresh
+    DuckDB-only process before its Spark twin."""
 
     def deco(fn: BuilderFn) -> BuilderFn:
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             _ensure_views(spark, sf_dir)
+            spec.generate_inputs()
             return fn(spark, sf_dir)
 
-        _REGISTRY[name] = QuerySpec(name, wrapped, oracle, tags, doc or fn.__doc__ or "")
+        spec = QuerySpec(name, wrapped, oracle, tags, doc or fn.__doc__ or "", inputs)
+        _REGISTRY[name] = spec
         return fn
 
     return deco
@@ -185,7 +200,9 @@ def _reads(name: str, fn: Callable[..., str], known: list[str]) -> list[str]:
 
 def get(name: str) -> QuerySpec:
     _load_plan_modules()
-    return _REGISTRY[name]
+    spec = _REGISTRY[name]
+    spec.generate_inputs()
+    return spec
 
 
 # The grading driver verifies the FIRST DRIVER_WINDOW queries in `queries()`
@@ -239,9 +256,10 @@ def all_queries() -> dict[str, BuilderFn]:
 
 
 def all_oracles() -> dict[str, str]:
-    return {
-        name: spec.oracle for name, spec in _ordered() if spec.oracle is not None
-    }
+    specs = [(name, spec) for name, spec in _ordered() if spec.oracle is not None]
+    for _, spec in specs:
+        spec.generate_inputs()
+    return {name: spec.oracle for name, spec in specs}
 
 
 _LOADED = False

@@ -53,7 +53,9 @@ from pyspark.sql import functions as F
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
 from ..sources.tables import load_tables
-from ..tmpdirs import scratch_dir
+from ..tmpdirs import published_dir, scratch_dir
+from .domain import _ensure_blocks, _parity_dir
+from .relational import FLAGSHIP_ORACLE
 from .registry import register, static_table, views_valid
 
 _WM_DELAY = "30 minutes"
@@ -583,7 +585,6 @@ def _ensure_guard_corpus() -> str:
     file = os.path.join(path, "docs.jsonl")
     if os.path.exists(file):
         return file
-    os.makedirs(path, exist_ok=True)
     lines = []
     for i in range(_GUARD_N):
         if i % 97 == 0:
@@ -592,10 +593,9 @@ def _ensure_guard_corpus() -> str:
             lines.append(json.dumps({"doc_id": i, "text": "x" * (_GUARD_MAX_BYTES + 64)}))
         else:
             lines.append(json.dumps({"doc_id": i, "text": ("tok-%d " % i) * (1 + i % 7)}))
-    tmp = file + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    os.replace(tmp, file)
+    with published_dir(path) as tmp:
+        with open(os.path.join(tmp, "docs.jsonl"), "w") as fh:
+            fh.write("\n".join(lines) + "\n")
     return file
 
 
@@ -624,6 +624,7 @@ ORDER BY status
 @register(
     "json_size_guard_quarantine",
     oracle=_GUARD_ORACLE,
+    inputs=(_ensure_guard_corpus,),
     tags=("source", "guard"),
     doc="P12 ingestion guards (RECEIVER/parser_main.cpp:92-97): raw lines "
     "classified BEFORE parsing — oversize by byte cap, corrupt by parse "
@@ -632,8 +633,7 @@ ORDER BY status
     "Python in the path.",
 )
 def json_size_guard_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    file = _ensure_guard_corpus()
-    raw = spark.read.text(file)
+    raw = spark.read.text(os.path.join(_guard_corpus_path(), "docs.jsonl"))
     doc_id = F.get_json_object(F.col("value"), "$.doc_id").cast("bigint")
     status = (
         F.when(F.length("value") > _GUARD_MAX_BYTES, "oversize")
@@ -649,11 +649,6 @@ def json_size_guard_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("status")
     )
-
-
-# Materialize the guard corpus at import so the oracle runs standalone in a
-# fresh DuckDB process, before (or without) any Spark builder.
-_ensure_guard_corpus()
 
 
 # ---------------------------------------------------------------------------
@@ -1118,11 +1113,9 @@ def _ensure_ctrl_corpus() -> str:
     file = os.path.join(path, "control.txt")
     if os.path.exists(file):
         return file
-    os.makedirs(path, exist_ok=True)
-    tmp = file + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write("\n".join(_CTRL_LINES) + "\n")
-    os.replace(tmp, file)
+    with published_dir(path) as tmp:
+        with open(os.path.join(tmp, "control.txt"), "w") as fh:
+            fh.write("\n".join(_CTRL_LINES) + "\n")
     return file
 
 
@@ -1162,6 +1155,7 @@ ORDER BY r.residue
 @register(
     "stream_control_gated_replay",
     oracle=_CTRL_ORACLE,
+    inputs=(_ensure_ctrl_corpus,),
     tags=("streaming", "control"),
     doc="S10 pub/sub control source (SERVER/subscriber.py:143-185): a "
     "control file of start-signal messages — tri-format-parsed JVM-side "
@@ -1176,7 +1170,7 @@ ORDER BY r.residue
     "is O(signals) and broadcast; the gate costs no shuffle.",
 )
 def stream_control_gated_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ctrl_file = _ensure_ctrl_corpus()
+    ctrl_file = os.path.join(_ctrl_corpus_path(), "control.txt")
     line = F.col("value")
     slot = F.expr(
         _CTRL_SLOT_SQL.format(
@@ -1228,10 +1222,6 @@ def stream_control_gated_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("n_batches", F.lit(len(batch_ids)).cast("bigint"))
         .orderBy("residue")
     )
-
-
-# Materialize the control corpus at import so the oracle runs standalone.
-_ensure_ctrl_corpus()
 
 
 # ---------------------------------------------------------------------------
@@ -1642,7 +1632,9 @@ def console_head10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_flagship_e2e_replay",
-    oracle=None,  # set below: the BATCH flagship's oracle, verbatim
+    # One SQL grades both engines AND both execution modes: the streaming
+    # composition's sink must hash-match the batch flagship's oracle.
+    oracle=FLAGSHIP_ORACLE,
     tags=("streaming", "flagship", "e2e"),
     doc="The reference's WHOLE §3.1 pipeline as ONE streaming job under one "
     "checkpoint — every stage previously verified alone (ST1 pacing, J1 "
@@ -1800,17 +1792,6 @@ def _flagship_e2e(
     )
 
 
-def _set_flagship_stream_oracle() -> None:
-    # One SQL grades both engines AND both execution modes: the streaming
-    # composition's sink must hash-match the batch flagship's oracle.
-    from .relational import FLAGSHIP_ORACLE
-
-    _REGISTRY["stream_flagship_e2e_replay"].oracle = FLAGSHIP_ORACLE
-
-
-from .registry import _REGISTRY  # noqa: E402
-
-
 # ---------------------------------------------------------------------------
 # End-to-end streaming compositions of §3.2 (pool detection), §3.3 (price
 # maintenance), the ST7 fan-out of both pipelines off ONE landing zone, and
@@ -1884,6 +1865,7 @@ def _pool_e2e_oracle() -> str:
 @register(
     "stream_pool_detect_e2e",
     oracle=_pool_e2e_oracle(),
+    inputs=(_ensure_blocks,),
     tags=("streaming", "e2e", "domain"),
     doc="The reference's WHOLE §3.2 pool-detection chain as ONE "
     "checkpointed streaming job: paced block-JSON replay "
@@ -1902,9 +1884,9 @@ def _pool_e2e_oracle() -> str:
 def stream_pool_detect_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.udfs import lookup_enrich
     from ..sources.io import upsert_dimension
-    from .domain import _N_BLOCKS, _ensure_blocks, _hot_literal
+    from .domain import _N_BLOCKS, _hot_literal
 
-    path = _ensure_blocks()
+    path = _parity_dir()
     min_bt = 1_700_000_000 + (_N_BLOCKS - 8) * 400
     pools = _pool_rows(
         _tx_stream(spark, f"{path}/blocks_*.json"), min_bt, F.expr(_hot_literal(SPARK))
@@ -2170,6 +2152,7 @@ def _fanout_oracle() -> str:
 @register(
     "stream_fanout_composed",
     oracle=_fanout_oracle(),
+    inputs=(_ensure_blocks,),
     tags=("streaming", "e2e", "fanout"),
     doc="ST7 fan-out of the TWO composed pipelines off ONE landing zone "
     "(SERVER/combined_subscriber.py:200-227: each fetched block feeds "
@@ -2185,10 +2168,10 @@ def _fanout_oracle() -> str:
 def stream_fanout_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.io import upsert_dimension
     from ..streaming.pipelines import stream_balance_pipeline
-    from .domain import _N_BLOCKS, _ensure_blocks, _hot_literal
+    from .domain import _N_BLOCKS, _hot_literal
     from ..sources.solana import hot_addresses
 
-    blocks_dir = _ensure_blocks()
+    blocks_dir = _parity_dir()
     watch_dir = os.path.join(blocks_dir, "watch_dim")
     if not os.path.isdir(watch_dir):
         spark.createDataFrame(
@@ -2301,6 +2284,7 @@ def _feedback_oracle() -> str:
 @register(
     "stream_watchlist_feedback",
     oracle=_feedback_oracle(),
+    inputs=(_ensure_blocks,),
     tags=("streaming", "e2e", "feedback"),
     doc="The §3.2→§3.1 feedback loop: the pool detector WRITES the "
     "watchlist the flagship READS (combined_subscriber.py:86-98 -> "
@@ -2390,5 +2374,3 @@ def stream_watchlist_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(out_dir).select(
         "signature", "ts_epoch", "slice", "tagged"
     ).orderBy("signature")
-
-_set_flagship_stream_oracle()

@@ -62,6 +62,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # One pass of the 41 headline queries generates more classes than
+        # the default cache of 100 holds, so every warm pass recompiled
+        # ≈905 of them (sf0.01); 1000 keeps a pass's classes cached.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -17,6 +17,8 @@ import json
 import os
 import random
 
+from ..tmpdirs import published_dir
+
 N_HOT = 8
 N_COLD = 40
 
@@ -141,20 +143,20 @@ def write_blocks_json(
     (→ ``files`` source partitions, the slot-sharding analogue of
     ``SERVER/subscriber.py:111``). Idempotent for a given (n_blocks, seed).
     ``file_offset`` names files starting at that index so a later batch can
-    land NEW files next to existing ones (file-stream arrival semantics)."""
-    os.makedirs(out_dir, exist_ok=True)
-    marker = os.path.join(
-        out_dir, f".done_{n_blocks}_{seed}_{files}_{file_offset}_{tx_scale}"
-    )
-    if os.path.exists(marker):
+    land NEW files next to existing ones (file-stream arrival semantics).
+    The files are published atomically (``tmpdirs.published_dir``), the
+    marker last, so concurrent first users never read a partial file."""
+    marker = f".done_{n_blocks}_{seed}_{files}_{file_offset}_{tx_scale}"
+    if os.path.exists(os.path.join(out_dir, marker)):
         return out_dir
     blocks = generate_blocks(n_blocks, seed, tx_scale)
-    for f in range(files):
-        path = os.path.join(out_dir, f"blocks_{f + file_offset:02d}.json")
-        with open(path, "w") as fh:
-            for i, blk in enumerate(blocks):
-                if i % files == f:
-                    fh.write(json.dumps(blk, separators=(",", ":")) + "\n")
-    with open(marker, "w") as fh:
-        fh.write("ok")
+    with published_dir(out_dir) as tmp:
+        for f in range(files):
+            path = os.path.join(tmp, f"blocks_{f + file_offset:02d}.json")
+            with open(path, "w") as fh:
+                for i, blk in enumerate(blocks):
+                    if i % files == f:
+                        fh.write(json.dumps(blk, separators=(",", ":")) + "\n")
+        with open(os.path.join(tmp, marker), "w") as fh:
+            fh.write("ok")
     return out_dir

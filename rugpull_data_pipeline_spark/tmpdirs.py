@@ -17,6 +17,7 @@ Deliberately NOT swept: the content-keyed cached corpora
 ``rugpull_bucketed_*``, the shipped package zip). Those carry their
 parameters in the name, are reused across runs, and rebuilding them is the
 expensive part — exactly the cache-key convention the rest of the repo uses.
+``published_dir`` writes them so that a reader never sees a partial file.
 """
 
 from __future__ import annotations
@@ -25,6 +26,9 @@ import errno
 import os
 import shutil
 import tempfile
+import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 _MAX_AGE_S = 6 * 3600
 _SWEPT = False
@@ -86,3 +90,29 @@ def scratch_dir(prefix: str = "tmp_") -> str:
     exits, so repeated runs cannot grow ``$TMPDIR`` unboundedly.
     """
     return tempfile.mkdtemp(prefix=prefix, dir=scratch_root())
+
+
+@contextmanager
+def published_dir(out_dir: str) -> Iterator[str]:
+    """Yield a fresh hidden sibling directory of ``out_dir`` to write into;
+    on success publish its files at ``out_dir``.
+
+    An absent or empty ``out_dir`` is replaced by the whole directory in one
+    rename. An existing one (a later batch landing next to earlier files)
+    takes each file by ``os.replace``, ``.done*`` markers last. Either way a
+    reader sees each file whole or not at all, and a concurrent writer of
+    the same seeded content swaps in identical bytes without truncating a
+    file another reader has open."""
+    parent, base = os.path.split(os.path.abspath(out_dir))
+    os.makedirs(parent, exist_ok=True)
+    tmp = os.path.join(parent, f".{base}.{uuid.uuid4().hex}")
+    os.mkdir(tmp)  # not mkdtemp: keep the umask's mode for the published dir
+    try:
+        yield tmp
+        try:
+            os.rename(tmp, out_dir)
+        except OSError:
+            for name in sorted(os.listdir(tmp), key=lambda n: n.startswith(".done")):
+                os.replace(os.path.join(tmp, name), os.path.join(out_dir, name))
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)

@@ -112,8 +112,7 @@ def test_driver_window_rotation_survives_fresh_grade():
 def test_every_oracle_runs_standalone_in_duckdb(sf_dir):
     """The driver may execute oracle SQL BEFORE any Spark builder runs, in a
     fresh process. Every oracle must therefore be valid, runnable DuckDB SQL
-    on its own (generated corpora are materialized at plan-module import,
-    which this test exercises by importing the registry first)."""
+    on its own (``all_oracles`` writes the generated corpora they read)."""
     import duckdb
 
     from rugpull_data_pipeline_spark.sources.tables import TABLES

@@ -659,3 +659,94 @@ def test_concurrent_pair_builds_match_sequential(spark):
     with ThreadPoolExecutor(2) as pool:
         got = [f.result() for f in [pool.submit(build) for _ in range(2)]]
     assert got == [want, want]
+
+
+def _fresh_tmpdir_python(code: str, tmp: str, timeout: int = 600) -> None:
+    """Run ``code`` in a new interpreter at the repository root whose
+    ``TMPDIR`` is the empty directory ``tmp``."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, TMPDIR=tmp, PYTHONPATH=repo)
+    proc = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, env=env, capture_output=True,
+        text=True, timeout=timeout,
+    )
+    assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-4000:]
+
+
+def test_fresh_import_writes_nothing_and_oracles_run_duckdb_only():
+    """Importing the registry writes no file; ``oracle_sql()`` then writes
+    every generated corpus an oracle reads, so each oracle runs in a
+    DuckDB-only process before its Spark twin. A query whose oracle reads
+    a generated path declares the generator as one of its ``inputs``."""
+    import tempfile
+
+    from tests.conftest import SF_ORACLE
+
+    code = f"""
+import os, tempfile
+import __spark_entry__ as e
+from pyspark import SparkContext
+from rugpull_data_pipeline_spark.plans import registry
+from tests.oracle_harness import run_oracle
+
+tmp = tempfile.gettempdir()
+assert len(e.queries()) > 400
+assert os.listdir(tmp) == [], os.listdir(tmp)
+oracles = e.oracle_sql()
+reading = sorted(n for n, sql in oracles.items() if tmp in sql)
+assert len(reading) == 14, reading
+undeclared = [n for n in reading if not registry._REGISTRY[n].inputs]
+assert not undeclared, undeclared
+for name in reading:
+    if name == "solana_balance_extract_xl":
+        from rugpull_data_pipeline_spark.plans.domain import _xl_dir
+        assert [f for f in os.listdir(_xl_dir()) if f.startswith(".done")]
+        continue
+    got = run_oracle(oracles[name], {SF_ORACLE!r})
+    assert len(got.columns) > 0, name
+assert SparkContext._active_spark_context is None
+"""
+    with tempfile.TemporaryDirectory() as tmp:
+        _fresh_tmpdir_python(code, tmp)
+
+
+def test_concurrent_first_use_of_a_generated_corpus():
+    """Two threads that use ``solana_balance_extract`` first, at once, on an
+    empty corpus directory, each get the sequential answer from both
+    engines: the corpus is published whole, never read half written."""
+    import tempfile
+
+    code = f"""
+import os, threading
+from concurrent.futures import ThreadPoolExecutor
+from rugpull_data_pipeline_spark.plans import domain, registry
+from rugpull_data_pipeline_spark.session import get_spark
+from tests.oracle_harness import run_oracle
+
+registry._load_plan_modules()
+assert not os.path.exists(domain._parity_dir())
+spark = get_spark(master="local[2]")
+
+def use(start=None):
+    if start is not None:
+        start.wait()
+    spec = registry.get("solana_balance_extract")
+    duck = run_oracle(spec.oracle, {SF!r}).values.tolist()
+    return duck, [tuple(r) for r in spec.builder(spark, {SF!r}).collect()]
+
+start = threading.Barrier(2)
+with ThreadPoolExecutor(2) as pool:
+    got = [f.result() for f in [pool.submit(use, start) for _ in range(2)]]
+want = use()
+assert want[0] and want[1], want
+assert got == [want, want]
+parent = os.path.dirname(domain._parity_dir())
+assert not [n for n in os.listdir(parent) if n.startswith(".rugpull_solana")]
+spark.stop()
+"""
+    with tempfile.TemporaryDirectory() as tmp:
+        _fresh_tmpdir_python(code, tmp)
