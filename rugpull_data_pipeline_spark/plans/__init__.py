@@ -1,1 +1,1 @@
-from .registry import QuerySpec, all_queries, all_oracles, get, register, sql_pair  # noqa: F401
+from .registry import QuerySpec, all_queries, all_oracles, get, pair, register  # noqa: F401

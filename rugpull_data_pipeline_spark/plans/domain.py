@@ -139,6 +139,19 @@ def solana_balance_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("signature", "wallet", "mint")
 
 
+def _watch_dir(spark: SparkSession, blocks_dir: str) -> str:
+    """The parquet watchlist dimension beside the parity blocks, written on
+    first use. No leading underscore: Spark's file listing classifies
+    `_`-prefixed paths as hidden metadata and logs a WARN per micro-batch
+    re-read."""
+    watch_dir = os.path.join(blocks_dir, "watch_dim")
+    if not os.path.isdir(watch_dir):
+        spark.createDataFrame(
+            [(a,) for a in hot_addresses()], "address string"
+        ).write.mode("overwrite").parquet(watch_dir)
+    return watch_dir
+
+
 @register(
     "solana_balance_stream",
     oracle=_balance_oracle(),
@@ -151,18 +164,9 @@ def solana_balance_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "provably equivalent to the batch plan.",
 )
 def solana_balance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..streaming.pipelines import stream_balance_pipeline
 
     blocks_dir = _parity_dir()
-    # No leading underscore: Spark's file listing classifies `_`-prefixed
-    # paths as hidden metadata and logs a WARN per micro-batch re-read.
-    watch_dir = os.path.join(blocks_dir, "watch_dim")
-    if not os.path.isdir(watch_dir):
-        spark.createDataFrame(
-            [(a,) for a in hot_addresses()], "address string"
-        ).write.mode("overwrite").parquet(watch_dir)
 
     # Sink each micro-batch to a parquet table CLUSTER-side (the S5 Flight
     # sink role) — nothing is collected to the driver; the registered query
@@ -177,7 +181,7 @@ def solana_balance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = stream_balance_pipeline(
         spark,
         blocks_dir,
-        watch_dir,
+        _watch_dir(spark, blocks_dir),
         sink,
         max_files_per_trigger=1,  # force multiple micro-batches
         checkpoint_dir=scratch_dir(prefix="rugpull_stream_ckpt_"),
@@ -400,50 +404,10 @@ ORDER BY w.pair, ts_epoch
     "tests/test_streaming.py::test_stateful_price_change_10pct.",
 )
 def price_change_stateful_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from .stream_infra import _events_table
+    from .stream_infra import _landed, _prices, _to_memory
     from ..streaming.pipelines import price_change_events
 
-    # Deterministic price stream derived from the events fixture: pair =
-    # user bucket, base/quote prices from value.
-    ev = _events_table(spark, sf_dir)
-    prices = ev.select(
-        F.concat(F.lit("pair-"), (F.col("user_id") % 5).cast("string")).alias("pair"),
-        "ts",
-        # event_id rides along purely as the fold's duplicate-timestamp
-        # tiebreaker (streaming/pipelines._fold_keys) — the oracle walks
-        # ORDER BY ts, event_id.
-        "event_id",
-        (F.col("value") + F.lit(1.0)).alias("base_price"),
-        (F.col("value") / F.lit(1.5) + F.lit(1.0)).alias("quote_price"),
-    )
-    src_dir = scratch_dir(prefix="rugpull_price_src_")
-    prices.repartition(2).write.mode("overwrite").parquet(src_dir)
-    stream = spark.readStream.schema(prices.schema).parquet(src_dir)
-    out = price_change_events(stream)
-    name = "price_events_sink_" + os.path.basename(src_dir)[-8:]
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", scratch_dir(prefix="rugpull_price_ckpt_")
-        )
-        .start()
-    )
-    # awaitTermination(timeout) returns False when the query is STILL
-    # RUNNING at the deadline — a hung availableNow replay must fail
-    # loudly, not grade a truncated memory table (round-10 verdict).
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "price-change stateful replay still running after 300 s"
-        )
-    from .stream_infra import _sink_rows
-
-    emitted = _sink_rows(spark, name)
+    emitted = _to_memory(price_change_events(_landed(_prices(spark, sf_dir))), "append")
     return emitted.select(
         "pair",
         F.unix_timestamp("ts").alias("ts_epoch"),

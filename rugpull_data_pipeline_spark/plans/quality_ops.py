@@ -421,23 +421,14 @@ ORDER BY user_id, session_start
     "every session flushes deterministically).",
 )
 def stream_session_windows(spark, sf_dir):
-    import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
-    from .stream_infra import _events_table
+    from .stream_infra import _landed, _static_table, _to_memory
 
-    ev = _events_table(spark, sf_dir)
-    src = ev.select("user_id", "ts")
-    src_dir = scratch_dir(prefix="rugpull_sess_src_")
-    src.repartition(2).write.mode("overwrite").parquet(src_dir)
-
-    stream = spark.readStream.schema(src.schema).parquet(src_dir)
+    src = _static_table(spark, sf_dir, "events").select("user_id", "ts")
     agg = (
-        stream.groupBy(
-            F.session_window("ts", "1 hour").alias("w"), "user_id"
-        )
+        _landed(src)
+        .groupBy(F.session_window("ts", "1 hour").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",
@@ -446,30 +437,7 @@ def stream_session_windows(spark, sf_dir):
             "n_events",
         )
     )
-    name = "sess_win_sink_" + os.path.basename(src_dir)[-8:]
-    from .stream_infra import _sink_rows, _state_partitions
-
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                scratch_dir(prefix="rugpull_sess_ckpt_"),
-            )
-            .start()
-        )
-        # awaitTermination(timeout) returns False when the query is STILL
-        # RUNNING at the deadline — a hung availableNow replay must fail
-        # loudly, not grade a truncated memory table (round-10 verdict).
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "sessionization replay still running after 300 s"
-            )
-    return _sink_rows(spark, name).orderBy("user_id", "session_start")
+    return _to_memory(agg, "complete").orderBy("user_id", "session_start")
 
 
 # ---------------------------------------------------------------------------

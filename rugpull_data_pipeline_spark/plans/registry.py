@@ -108,28 +108,6 @@ def register(
     return deco
 
 
-def sql_pair(
-    name: str,
-    spark_sql: str,
-    duck_sql: str | None = None,
-    tags: tuple[str, ...] = (),
-    doc: str = "",
-) -> None:
-    """Register a query given as Spark SQL text + DuckDB oracle text.
-
-    When ``duck_sql`` is None the spark text is reused verbatim (the dialects
-    agree for plain ANSI).
-    """
-
-    def builder(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _ensure_views(spark, sf_dir)
-        return spark.sql(spark_sql)
-
-    _REGISTRY[name] = QuerySpec(
-        name, builder, duck_sql if duck_sql is not None else spark_sql, tags, doc
-    )
-
-
 def pair(
     name: str,
     q: Callable[..., str],
@@ -156,9 +134,6 @@ def pair(
     only by later cores stays out of ``q``. Naming an unknown or later core
     raises at registration."""
     shared = shared or {}
-    if not shared:
-        sql_pair(name, q(SPARK), q(DUCK), tags=tags, doc=doc)
-        return
     names = list(shared)
     reads = {
         k: _reads(name, core, names[:i]) for i, (k, core) in enumerate(shared.items())

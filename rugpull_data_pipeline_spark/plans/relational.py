@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
-from .registry import pair, register, sql_pair, static_table
+from .registry import pair, register, static_table
 
 
 # ---------------------------------------------------------------------------
@@ -751,10 +751,9 @@ def _pivot_duck() -> str:
     """
 
 
-sql_pair(
+pair(
     "pivot_status_quantity",
-    _pivot_spark(),
-    _pivot_duck(),
+    lambda d: _pivot_spark() if d == SPARK else _pivot_duck(),
     tags=("agg", "pivot"),
     doc="PIVOT: per-returnflag quantities fanned into one column per status "
     "(Spark PIVOT syntax; oracle as conditional aggregation).",
@@ -791,10 +790,9 @@ def _unpivot_duck() -> str:
     """
 
 
-sql_pair(
+pair(
     "unpivot_status_quantity",
-    _unpivot_spark(),
-    _unpivot_duck(),
+    lambda d: _unpivot_spark() if d == SPARK else _unpivot_duck(),
     tags=("agg", "pivot"),
     doc="UNPIVOT via stack(): wide per-status columns back to rows.",
 )

@@ -31,7 +31,7 @@ from .analytics_ops import _weighted_edges_sql
 from .diagnostics_ops import _EV_CENTS, _cents, _r6u
 from .llm_ops import _word_tokens_all
 from .mining_ops import _copurchase_pairs, _day_idx
-from .registry import pair, sql_pair
+from .registry import pair
 
 
 # ---------------------------------------------------------------------------
@@ -503,10 +503,9 @@ pair(
 
 
 def _register_sketch_audits() -> None:
-    sql_pair(
+    pair(
         "audit_distinct_sketch",
-        _dsketch_spark(),
-        _dsketch_duck(),
+        lambda d: _dsketch_spark() if d == SPARK else _dsketch_duck(),
         tags=("audit", "sketch"),
         doc="Sketch-vs-exact cardinality audit: approx_count_distinct "
         "(HyperLogLog++, rsd 5%) against exact count(DISTINCT) per event "

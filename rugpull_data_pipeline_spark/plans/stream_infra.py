@@ -34,6 +34,24 @@ DuckDB oracle can hash-match. What each one PROVES:
   and parse guards): raw lines classified oversize / corrupt / ok BEFORE
   parsing, over a generated corpus with known-bad lines.
 
+Run path: every replay in plans/ lands, drains and sinks through three
+helpers here. ``_landed(src, slices)`` lands its source in a fresh scratch
+directory — ``slices`` mtime-stamped files the read takes one per
+micro-batch, or two files it takes in one — and returns the streaming
+read. ``_drain(writer, checkpoint)`` runs the query under ``availableNow``
+with ``spark.sql.shuffle.partitions`` pinned to ``_STATE_PARTITIONS`` (state
+partitioning is frozen at first checkpoint creation and AQE never
+coalesces it, so a session at the 200 default would run 200 state tasks
+per micro-batch), and stops the query and raises ``TimeoutError`` if it
+still runs at ``_DRAIN_DEADLINE_S``: ``awaitTermination`` returns False
+then, and a hung replay must fail, not grade a partial sink. Without a
+checkpoint it drains from a fresh one; restart runs pass the same one to
+both drains and stage their later arrivals with ``_write_slices``.
+``_to_memory(out, mode)`` drains into a uniquely named memory sink and
+returns its rows. The one exception is the balance pipeline's own started
+query (``solana_balance_stream``, subscriber 1 of
+``stream_fanout_composed``), which runs until ``processAllAvailable``.
+
 Scale notes: every replay keeps the stream→sink path distributed (memory /
 parquet sinks, no driver collect of data rows); driver-side state is bounded
 to batch ids and scalar counts. The dimension upsert rewrites a dim whose
@@ -45,10 +63,12 @@ from __future__ import annotations
 import json
 import os
 import tempfile
-from contextlib import ExitStack, contextmanager
+import uuid
+from contextlib import contextmanager, nullcontext
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
@@ -63,33 +83,19 @@ _GUARD_N = 2000
 _GUARD_MAX_BYTES = 4096
 
 
-def _events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events source for the streaming replays, VIEW-FIRST: when an
-    `events` temp view is registered (the registry wrapper always
-    registers one before a builder runs) read through it, so harness-level
-    input substitution — the degenerate-input sweeps swap the view for an
-    empty / all-NULL / single-row variant — reaches the landing-zone
-    replays instead of being silently bypassed by a direct parquet read
-    (the round-6 sweeps classified these queries `rows-diff
-    self-sourced`; this removes the artifact class entirely). Falls back
-    to the parquet loader for direct callers that never registered views.
-
-    View-first requires the registry's view cache to say the registered
-    views point at THIS sf_dir — not bare `tableExists`, and not a cache
-    hit for some other directory: tests register hand-data temp views
-    (tearing down only the cache) and also call raw builders against
-    private tmp dirs while the session still holds real views for the
-    fixture dir; either stale source leaked into later tests when the
-    gate was looser (order-dependent failures in test_streaming_windows,
-    round 7). The wrapper and sweep paths always set the cache to the
-    sf_dir they pass, so they keep the view-first behavior."""
-    return _static_table(spark, sf_dir, "events")
-
-
 def _static_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """``registry.static_table`` for the fixture tables the composed
-    streaming jobs read (lineitem/supplier/part/...), with the session
-    tuned on the view path too (the parquet path tunes in load_tables).
+    """``registry.static_table`` for the fixture tables the streaming replays
+    read, with the session tuned on the view path too (the parquet path
+    tunes in load_tables).
+
+    View-first: when the registry's view cache says the registered views
+    point at THIS sf_dir, the table is read through its temp view, so the
+    degenerate-input sweeps' substituted ``events`` (empty / all-NULL /
+    single-row) reaches the landing-zone replays instead of being bypassed
+    by a direct parquet read. A cache for another directory (tests that
+    register hand-data views, or call builders against private tmp dirs)
+    falls back to the parquet loader, so no stale source leaks into later
+    tests.
 
     Never call it inside a foreachBatch body: on the micro-batch-cloned
     session, re-setting spark.sql.adaptive.enabled re-enables AQE inside a
@@ -104,102 +110,141 @@ def _static_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return static_table(spark, sf_dir, name)
 
 
-def _events_src(spark: SparkSession, sf_dir: str, cols: list[str]) -> DataFrame:
-    return _events_table(spark, sf_dir).select(*cols)
-
-
 # Epoch base for slice mtime stamping; any fixed past instant works (the
 # file source only compares mtimes relative to each other).
 _SLICE_MTIME_BASE = 1_700_000_000
 
-
-def _stamp_slice_mtimes(path: str, seen: set[str], slice_idx: int) -> None:
-    """Pin every file the slice just landed to a DISTINCT, strictly
-    increasing mtime (base + slice index, whole seconds). FileStreamSource
-    orders the files of one listing by modification time and breaks ties
-    arbitrarily — two slices appended within the filesystem's mtime
-    granularity could replay out of order and diverge a stateful fold from
-    its event-time oracle (round-9 ADVICE on _price_maint_e2e). ``seen``
-    carries across calls so a later slice never re-stamps an earlier one."""
-    t = _SLICE_MTIME_BASE + slice_idx
-    for name in sorted(os.listdir(path)):
-        p = os.path.join(path, name)
-        if p in seen or not os.path.isfile(p):
-            continue
-        os.utime(p, (t, t))
-        seen.add(p)
+# The run path's two constants: how long one availableNow replay may run
+# before it is stopped and fails, and the state-store partition count
+# every replay pins.
+_DRAIN_DEADLINE_S = 300
+_STATE_PARTITIONS = 8
 
 
 def _write_slices(
     df: DataFrame,
     path: str,
     n: int,
-    slice_col: str = "event_id",
+    slice_col: "str | Column" = "event_id",
     indices: "range | None" = None,
-    seen_files: "set[str] | None" = None,
 ) -> None:
-    """Write ``df`` as exactly ``n`` parquet files (one sequential append per
-    slice) so ``maxFilesPerTrigger=1`` paces the replay into ``n`` batches,
-    each slice mtime-stamped so the file source replays them in landing
-    order even on coarse-granularity filesystems. ``indices`` restricts to
-    a subset of the n slices, letting a caller stage arrivals across stream
-    restarts (file-stream landing semantics); such callers pass one
-    ``seen_files`` set across calls so re-staged slices keep later stamps."""
-    seen = seen_files if seen_files is not None else set()
+    """Append ``df`` to ``path`` as ``n`` parquet files, slice ``i`` holding
+    the rows whose ``slice_col % n == i``, so a paced read replays it as
+    ``n`` micro-batches. Each slice's files are pinned to a distinct,
+    strictly increasing mtime (base + slice index): FileStreamSource orders
+    one listing by modification time and breaks ties arbitrarily, so two
+    slices appended within the filesystem's mtime granularity could replay
+    out of order and diverge a stateful fold from its event-time oracle.
+    ``indices`` lands a subset of the slices, letting a restart run stage
+    the rest while its job is down; files already in ``path`` keep their
+    stamps."""
+    key = F.col(slice_col) if isinstance(slice_col, str) else slice_col
+    seen = {os.path.join(path, f) for f in os.listdir(path)} if os.path.isdir(path) else set()
     for i in indices if indices is not None else range(n):
-        (
-            df.where(F.col(slice_col) % n == i)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(path)
+        df.where(key % n == i).coalesce(1).write.mode("append").parquet(path)
+        t = _SLICE_MTIME_BASE + i
+        for name in sorted(os.listdir(path)):
+            p = os.path.join(path, name)
+            if p not in seen and os.path.isfile(p):
+                os.utime(p, (t, t))
+                seen.add(p)
+
+
+def _landed(
+    src: DataFrame, slices: int | None = None, path: str | None = None
+) -> DataFrame:
+    """Land ``src`` as parquet files in a fresh ``scratch_dir`` and return
+    the streaming read of them. With ``slices`` it lands that many
+    mtime-stamped files (``_write_slices``) and the read takes one file per
+    micro-batch; without, it lands two files the read takes in one batch.
+    Given ``path``, nothing lands: the caller stages its own arrivals there
+    with ``_write_slices`` (a restart lands the later ones while its job is
+    down) and ``slices`` only paces the read."""
+    if path is None:
+        path = scratch_dir(prefix="rugpull_land_")
+        if slices:
+            _write_slices(src, path, slices)
+        else:
+            src.repartition(2).write.mode("overwrite").parquet(path)
+    reader = src.sparkSession.readStream.schema(src.schema)
+    if slices:
+        reader = reader.option("maxFilesPerTrigger", 1)
+    return reader.parquet(path)
+
+
+@contextmanager
+def _state_partitions(spark: SparkSession):
+    """Pin ``spark.sql.shuffle.partitions`` to ``_STATE_PARTITIONS`` for one
+    replay, restoring the session value afterwards."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(_STATE_PARTITIONS))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def _drain(writer, checkpoint: str | None = None) -> StreamingQuery:
+    """Run ``writer``'s query to completion under ``availableNow`` and
+    return the finished query. ``checkpoint`` is a fresh directory unless a
+    restart run passes the one its earlier run used."""
+    # DataStreamWriter keeps its session only in this attribute.
+    with _state_partitions(writer._spark):
+        q = (
+            writer.trigger(availableNow=True)
+            .option("checkpointLocation", checkpoint or scratch_dir(prefix="rugpull_ckpt_"))
+            .start()
         )
-        _stamp_slice_mtimes(path, seen, i)
+        if not q.awaitTermination(_DRAIN_DEADLINE_S):
+            q.stop()
+            raise TimeoutError(
+                f"streaming replay still running after {_DRAIN_DEADLINE_S} s"
+                " (availableNow)"
+            )
+    return q
 
 
-def _run_available_now(writer) -> None:
-    q = writer.trigger(availableNow=True).start()
-    # awaitTermination(timeout) returns False when the query is STILL
-    # RUNNING at the deadline — ignoring that silently truncated the
-    # result (round-9 ADVICE). A hung replay must fail loudly, not grade
-    # a partial sink.
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "streaming replay still running after 300 s (availableNow)"
-        )
-
-
-def _sink_rows(spark: SparkSession, name: str) -> DataFrame:
-    """The rows of the memory sink ``name``, with its session-wide view
-    dropped: the returned plan holds the sink itself, so the build leaves
-    no named state behind."""
+def _to_memory(out: DataFrame, mode: str) -> DataFrame:
+    """Drain ``out`` into a memory sink under a unique name and return the
+    sink's rows. The sink's session-wide view is dropped: the returned plan
+    holds the sink itself, so the build leaves no named state behind."""
+    spark = out.sparkSession
+    name = f"replay_sink_{uuid.uuid4().hex}"
+    _drain(out.writeStream.format("memory").queryName(name).outputMode(mode))
     rows = spark.table(name)
     spark.catalog.dropTempView(name)
     return rows
 
 
-@contextmanager
-def _state_partitions(spark: SparkSession, n: int = 8):
-    """Pin the state-store partition count for a stateful replay.
+def _prices(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The deterministic price stream of the P11 replays, derived from the
+    events fixture: pair = user bucket, base/quote prices from value.
+    event_id rides along as the fold's duplicate-timestamp tiebreaker
+    (streaming/pipelines._fold_keys); the oracle walks ORDER BY ts,
+    event_id."""
+    return _static_table(spark, sf_dir, "events").select(
+        F.concat(F.lit("pair-"), (F.col("user_id") % 5).cast("string")).alias("pair"),
+        "ts",
+        "event_id",
+        (F.col("value") + F.lit(1.0)).alias("base_price"),
+        (F.col("value") / F.lit(1.5) + F.lit(1.0)).alias("quote_price"),
+    )
 
-    Streaming state partitioning is fixed by ``spark.sql.shuffle.partitions``
-    at FIRST checkpoint creation and AQE never coalesces it — in a session
-    that keeps the 200 default, a replay over a few thousand keys would run
-    200 state tasks per micro-batch. Production sizes this knob to the
-    cluster; the replays pin a small count to match their key space. The
-    session value is restored afterwards (batch queries are unaffected
-    either way — AQE re-coalesces those)."""
-    old = None
-    try:
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-    except Exception:  # pragma: no cover
-        pass
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        if old is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+
+def _micro_units(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, ts, event_id, v) of every valued event, v the value in
+    micro-units. The fixed-point scaling happens JVM-side, so a Python
+    kernel and its oracle fold over the identical longs."""
+    return (
+        _static_table(spark, sf_dir, "events")
+        .where(F.col("value").isNotNull())
+        .select(
+            "event_type",
+            "ts",
+            "event_id",
+            F.floor(F.col("value") * F.lit(1000000.0)).cast("long").alias("v"),
+        )
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -231,30 +276,18 @@ def stream_dim_upsert_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.io import upsert_dimension
 
     src = (
-        _events_table(spark, sf_dir)
+        _static_table(spark, sf_dir, "events")
         .where(F.col("event_type") == "purchase")
         .select("user_id", "ts", "event_id", "value")
     )
-    src_dir = scratch_dir(prefix="rugpull_dim_src_")
-    _write_slices(src, src_dir, 4)
     dim_dir = os.path.join(scratch_dir(prefix="rugpull_dim_out_"), "dim")
-
-    stream = (
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
 
     def apply(batch: DataFrame, _bid: int) -> None:
         upsert_dimension(
             batch.sparkSession, batch, dim_dir, ["user_id"], order_by=["ts", "event_id"]
         )
 
-    _run_available_now(
-        stream.writeStream.foreachBatch(apply).option(
-            "checkpointLocation", scratch_dir(prefix="rugpull_dim_ckpt_")
-        )
-    )
+    _drain(_landed(src, 4).writeStream.foreachBatch(apply))
     return (
         spark.read.parquet(dim_dir)
         .select(
@@ -291,26 +324,22 @@ ORDER BY user_id
 )
 def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = (
-        _events_table(spark, sf_dir)
+        _static_table(spark, sf_dir, "events")
         .where(F.col("event_type") == "click")
         .select("user_id", "event_id", "value")
     )
     src_dir = scratch_dir(prefix="rugpull_ckpt_src_")
     out_dir = os.path.join(scratch_dir(prefix="rugpull_ckpt_out_"), "out")
     ckpt = scratch_dir(prefix="rugpull_ckpt_log_")
-
-    def run_once() -> None:
-        stream = spark.readStream.schema(src.schema).parquet(src_dir)
-        _run_available_now(
-            stream.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
+    stream = _landed(src, path=src_dir)
+    # Each run lands one half, then drains a FRESH query from the shared
+    # checkpoint.
+    for half in range(2):
+        _write_slices(src, src_dir, 2, indices=range(half, half + 1))
+        _drain(
+            stream.writeStream.format("parquet").option("path", out_dir),
+            checkpoint=ckpt,
         )
-
-    src.where(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(src_dir)
-    run_once()
-    src.where(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src_dir)
-    run_once()
 
     return (
         spark.read.parquet(out_dir)
@@ -347,9 +376,7 @@ ORDER BY bucket
     "equals the batch answer.",
 )
 def stream_backpressure_paced(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = _events_src(spark, sf_dir, ["event_id", "user_id"])
-    src_dir = scratch_dir(prefix="rugpull_paced_src_")
-    _write_slices(src, src_dir, 4)
+    src = _static_table(spark, sf_dir, "events").select("event_id", "user_id")
     out_dir = os.path.join(scratch_dir(prefix="rugpull_paced_out_"), "out")
 
     batch_ids: list[int] = []
@@ -358,16 +385,7 @@ def stream_backpressure_paced(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_ids.append(bid)
         batch.write.mode("append").parquet(out_dir)
 
-    stream = (
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    _run_available_now(
-        stream.writeStream.foreachBatch(apply).option(
-            "checkpointLocation", scratch_dir(prefix="rugpull_paced_ckpt_")
-        )
-    )
+    _drain(_landed(src, 4).writeStream.foreachBatch(apply))
     return (
         spark.read.parquet(out_dir)
         .groupBy((F.col("user_id") % 4).cast("bigint").alias("bucket"))
@@ -407,9 +425,9 @@ ORDER BY user_id
     "the full-outer join of the two sinks must equal the batch fan-out.",
 )
 def stream_fanout_two_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = _events_src(spark, sf_dir, ["event_id", "user_id", "event_type", "value"])
-    src_dir = scratch_dir(prefix="rugpull_fan_src_")
-    _write_slices(src, src_dir, 2)
+    src = _static_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "event_type", "value"
+    )
     sink_a = os.path.join(scratch_dir(prefix="rugpull_fan_a_"), "clicks")
     sink_b = os.path.join(scratch_dir(prefix="rugpull_fan_b_"), "purchases")
 
@@ -419,16 +437,7 @@ def stream_fanout_two_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
             sink_b
         )
 
-    stream = (
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    _run_available_now(
-        stream.writeStream.foreachBatch(apply).option(
-            "checkpointLocation", scratch_dir(prefix="rugpull_fan_ckpt_")
-        )
-    )
+    _drain(_landed(src, 2).writeStream.foreachBatch(apply))
     clicks = (
         spark.read.parquet(sink_a)
         .groupBy("user_id")
@@ -463,6 +472,17 @@ ORDER BY window_start
 """
 
 
+def _with_sentinel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, ts) of every event plus one sentinel row 2 days past
+    max(ts), whose watermark advance finalizes every real window."""
+    ev = _static_table(spark, sf_dir, "events")
+    sentinel = ev.groupBy().agg(
+        F.lit(-1).cast("long").alias("user_id"),
+        (F.max("ts") + F.expr("INTERVAL 2 DAYS")).alias("ts"),
+    )
+    return ev.select("user_id", "ts").unionByName(sentinel)
+
+
 @register(
     "stream_watermark_append",
     oracle=_WM_ORACLE,
@@ -475,35 +495,16 @@ ORDER BY window_start
     "the sentinel's own window stays unemitted in state.",
 )
 def stream_watermark_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events_table(spark, sf_dir)
-    src = ev.select("user_id", "ts")
-    sentinel = ev.groupBy().agg(
-        F.lit(-1).cast("long").alias("user_id"),
-        (F.max("ts") + F.expr("INTERVAL 2 DAYS")).alias("ts"),
-    )
-    src_dir = scratch_dir(prefix="rugpull_wm_src_")
-    src.unionByName(sentinel).repartition(2).write.mode("overwrite").parquet(src_dir)
-
-    stream = spark.readStream.schema(src.schema).parquet(src_dir)
     agg = (
-        stream.withWatermark("ts", _WM_DELAY)
+        _landed(_with_sentinel(spark, sf_dir))
+        .withWatermark("ts", _WM_DELAY)
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
         .select(F.unix_timestamp(F.col("w.start")).alias("window_start"), "n_events")
     )
-    name = "wm_append_sink_" + os.path.basename(src_dir)[-8:]
-    with _state_partitions(spark):
-        _run_available_now(
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option(
-                "checkpointLocation", scratch_dir(prefix="rugpull_wm_ckpt_")
-            )
-        )
     # The sentinel's own (still-open) window never emits; every real window
     # is past the final watermark and appears exactly once.
-    return _sink_rows(spark, name).orderBy("window_start")
+    return _to_memory(agg, "append").orderBy("window_start")
 
 
 # ---------------------------------------------------------------------------
@@ -546,7 +547,7 @@ ORDER BY pool_id
 def lookup_batched_mapinpandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.udfs import lookup_enrich
 
-    base = _events_src(spark, sf_dir, ["user_id", "value"]).select(
+    base = _static_table(spark, sf_dir, "events").select(
         F.concat(F.lit("pool-"), (F.col("user_id") % 50).cast("string")).alias(
             "pool_id"
         ),
@@ -683,39 +684,32 @@ ORDER BY user_id
 )
 def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = (
-        _events_table(spark, sf_dir)
+        _static_table(spark, sf_dir, "events")
         .where(F.col("event_type") == "view")
         .select("event_id", "ts", "user_id", "value")
     )
+    # Originals land as slices 0-2 (non-multiples of 3 split by parity,
+    # multiples as slice 2); the SAME multiples-of-3 rows land again as
+    # slice 3, so every duplicate arrives in a LATER micro-batch than its
+    # original (one file per batch, in slice order).
+    eid = F.col("event_id")
+    tagged = src.withColumn(
+        "slice", F.when(eid % 3 == 0, F.lit(2)).otherwise(eid % 2)
+    ).unionByName(src.where(eid % 3 == 0).withColumn("slice", F.lit(3)))
     src_dir = scratch_dir(prefix="rugpull_sdedup_src_")
-    # Originals land in files 1-3 (non-multiples sliced into 2, multiples of
-    # 3 as the 3rd); the SAME multiples-of-3 rows append again as the 4th
-    # file, so every duplicate arrives in a LATER micro-batch than its
-    # original (maxFilesPerTrigger=1 => one file per batch, in file order).
-    _write_slices(src.where(F.col("event_id") % 3 != 0), src_dir, 2)
-    src.where(F.col("event_id") % 3 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-    src.where(F.col("event_id") % 3 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
+    _write_slices(tagged, src_dir, 4, slice_col="slice")
     out_dir = os.path.join(scratch_dir(prefix="rugpull_sdedup_out_"), "rows")
 
-    stream = (
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+    deduped = (
+        _landed(tagged, 4, path=src_dir)
+        .withWatermark("ts", "3650 days")
+        .dropDuplicates(["event_id"])
     )
-    deduped = stream.withWatermark("ts", "3650 days").dropDuplicates(["event_id"])
-    with _state_partitions(spark):
-        _run_available_now(
-            deduped.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option(
-                "checkpointLocation", scratch_dir(prefix="rugpull_sdedup_ckpt_")
-            )
-            .outputMode("append")
-        )
+    _drain(
+        deduped.writeStream.format("parquet")
+        .option("path", out_dir)
+        .outputMode("append")
+    )
     return (
         spark.read.parquet(out_dir)
         .groupBy("user_id")
@@ -759,34 +753,24 @@ ORDER BY click_id, purchase_id
     "batch interval join row-for-row.",
 )
 def stream_stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events_table(spark, sf_dir)
-    clicks = ev.where(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-    )
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-    )
-    c_dir = scratch_dir(prefix="rugpull_ssj_c_")
-    p_dir = scratch_dir(prefix="rugpull_ssj_p_")
-    _write_slices(clicks, c_dir, 2, slice_col="click_id")
-    _write_slices(purchases, p_dir, 2, slice_col="purchase_id")
+    ev = _static_table(spark, sf_dir, "events")
 
-    cs = (
-        spark.readStream.schema(clicks.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(c_dir)
-        .withWatermark("c_ts", "2 hours")
-    )
-    ps = (
-        spark.readStream.schema(purchases.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(p_dir)
-        .withWatermark("p_ts", "2 hours")
-    )
+    def side(event_type: str, id_name: str, p: str) -> DataFrame:
+        rows = ev.where(F.col("event_type") == event_type).select(
+            "event_id", "user_id", "ts"
+        )
+        return (
+            _landed(rows, 2)
+            .select(
+                F.col("event_id").alias(id_name),
+                F.col("user_id").alias(f"{p}_user"),
+                F.col("ts").alias(f"{p}_ts"),
+            )
+            .withWatermark(f"{p}_ts", "2 hours")
+        )
+
+    cs = side("click", "click_id", "c")
+    ps = side("purchase", "purchase_id", "p")
     joined = cs.join(
         ps,
         F.expr(
@@ -801,15 +785,11 @@ def stream_stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_timestamp("p_ts") - F.unix_timestamp("c_ts")).alias("lag_s"),
     )
     out_dir = os.path.join(scratch_dir(prefix="rugpull_ssj_out_"), "rows")
-    with _state_partitions(spark):
-        _run_available_now(
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option(
-                "checkpointLocation", scratch_dir(prefix="rugpull_ssj_ckpt_")
-            )
-            .outputMode("append")
-        )
+    _drain(
+        joined.writeStream.format("parquet")
+        .option("path", out_dir)
+        .outputMode("append")
+    )
     return spark.read.parquet(out_dir).orderBy("click_id", "purchase_id")
 
 
@@ -864,33 +844,8 @@ ORDER BY event_type, ts_epoch, v_micro
 def stream_bollinger_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.pipelines import bollinger_alerts
 
-    src = (
-        _events_src(spark, sf_dir, ["event_type", "ts", "event_id", "value"])
-        .where(F.col("value").isNotNull())
-        .select(
-            "event_type",
-            "ts",
-            "event_id",
-            # Fixed-point scaling happens JVM-side so the Python kernel and
-            # the oracle fold over the identical longs.
-            F.floor(F.col("value") * F.lit(1000000.0)).cast("long").alias("v"),
-        )
-    )
-    src_dir = scratch_dir(prefix="rugpull_boll_src_")
-    src.repartition(2).write.mode("overwrite").parquet(src_dir)
-    stream = spark.readStream.schema(src.schema).parquet(src_dir)
-    with _state_partitions(spark, 8):
-        out = bollinger_alerts(stream)
-        name = "boll_sink_" + os.path.basename(src_dir)[-8:]
-        _run_available_now(
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option(
-                "checkpointLocation", scratch_dir(prefix="rugpull_boll_ckpt_")
-            )
-        )
-    return _sink_rows(spark, name).orderBy("event_type", "ts_epoch", "v_micro")
+    alerts = bollinger_alerts(_landed(_micro_units(spark, sf_dir)))
+    return _to_memory(alerts, "append").orderBy("event_type", "ts_epoch", "v_micro")
 
 
 # ---------------------------------------------------------------------------
@@ -939,28 +894,16 @@ ORDER BY event_id
 def stream_attribution_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.pipelines import attribution_events
 
-    src = _events_src(
-        spark, sf_dir, ["user_id", "ts", "event_id", "event_type", "value"]
-    ).withColumn(
-        "kind",
-        F.when(F.col("event_type") == "purchase", F.lit(1)).otherwise(F.lit(0)),
-    )
-    src_dir = scratch_dir(prefix="rugpull_attr_src_")
-    src.repartition(2).write.mode("overwrite").parquet(src_dir)
-    stream = spark.readStream.schema(src.schema).parquet(src_dir)
-    with _state_partitions(spark, 8):
-        out = attribution_events(stream)
-        name = "attr_sink_" + os.path.basename(src_dir)[-8:]
-        _run_available_now(
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option(
-                "checkpointLocation", scratch_dir(prefix="rugpull_attr_ckpt_")
-            )
+    src = (
+        _static_table(spark, sf_dir, "events")
+        .select("user_id", "ts", "event_id", "event_type", "value")
+        .withColumn(
+            "kind",
+            F.when(F.col("event_type") == "purchase", F.lit(1)).otherwise(F.lit(0)),
         )
+    )
     return (
-        _sink_rows(spark, name)
+        _to_memory(attribution_events(_landed(src)), "append")
         .select(
             "event_id",
             "user_id",
@@ -1040,31 +983,8 @@ ORDER BY w.event_type, ts_epoch, v_micro
 def stream_cusum_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.pipelines import cusum_alerts
 
-    src = (
-        _events_src(spark, sf_dir, ["event_type", "ts", "event_id", "value"])
-        .where(F.col("value").isNotNull())
-        .select(
-            "event_type",
-            "ts",
-            "event_id",
-            F.floor(F.col("value") * F.lit(1000000.0)).cast("long").alias("v"),
-        )
-    )
-    src_dir = scratch_dir(prefix="rugpull_cusum_src_")
-    src.repartition(2).write.mode("overwrite").parquet(src_dir)
-    stream = spark.readStream.schema(src.schema).parquet(src_dir)
-    with _state_partitions(spark, 8):
-        out = cusum_alerts(stream)
-        name = "cusum_sink_" + os.path.basename(src_dir)[-8:]
-        _run_available_now(
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option(
-                "checkpointLocation", scratch_dir(prefix="rugpull_cusum_ckpt_")
-            )
-        )
-    return _sink_rows(spark, name).orderBy("event_type", "ts_epoch", "v_micro")
+    alerts = cusum_alerts(_landed(_micro_units(spark, sf_dir)))
+    return _to_memory(alerts, "append").orderBy("event_type", "ts_epoch", "v_micro")
 
 
 # ---------------------------------------------------------------------------
@@ -1185,9 +1105,7 @@ def stream_control_gated_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
 
-    src = _events_src(spark, sf_dir, ["event_id", "value"])
-    src_dir = scratch_dir(prefix="rugpull_ctrl_src_")
-    _write_slices(src, src_dir, _CTRL_WORKERS)
+    src = _static_table(spark, sf_dir, "events").select("event_id", "value")
     out_dir = os.path.join(scratch_dir(prefix="rugpull_ctrl_out_"), "out")
 
     batch_ids: list[int] = []
@@ -1196,22 +1114,12 @@ def stream_control_gated_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_ids.append(bid)
         batch.write.mode("append").parquet(out_dir)
 
-    stream = (
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     gated = (
-        stream.withColumn(
-            "residue", F.pmod(F.col("event_id"), F.lit(_CTRL_WORKERS))
-        )
+        _landed(src, _CTRL_WORKERS)
+        .withColumn("residue", F.pmod(F.col("event_id"), F.lit(_CTRL_WORKERS)))
         .join(F.broadcast(residues), "residue", "inner")
     )
-    _run_available_now(
-        gated.writeStream.foreachBatch(apply).option(
-            "checkpointLocation", scratch_dir(prefix="rugpull_ctrl_ckpt_")
-        )
-    )
+    _drain(gated.writeStream.foreachBatch(apply))
     return (
         spark.read.parquet(out_dir)
         .groupBy(F.col("residue").cast("bigint").alias("residue"))
@@ -1267,9 +1175,9 @@ _PSI_STREAM_ORACLE = (
     "few-hundred-row grid), and the emitted history is append-only.",
 )
 def stream_psi_drift_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = _events_src(spark, sf_dir, ["event_id", "ts", "event_type", "value"])
-    src_dir = scratch_dir(prefix="rugpull_psi_src_")
-    _write_slices(src, src_dir, _PSI_N_BATCHES)
+    src = _static_table(spark, sf_dir, "events").select(
+        "event_id", "ts", "event_type", "value"
+    )
     acc_dir = os.path.join(scratch_dir(prefix="rugpull_psi_acc_"), "acc")
     res_dir = os.path.join(scratch_dir(prefix="rugpull_psi_res_"), "res")
 
@@ -1287,16 +1195,7 @@ def stream_psi_drift_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             acc=s.read.parquet(acc_dir),
         ).write.mode("append").parquet(res_dir)
 
-    stream = (
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    _run_available_now(
-        stream.writeStream.foreachBatch(apply).option(
-            "checkpointLocation", scratch_dir(prefix="rugpull_psi_ckpt_")
-        )
-    )
+    _drain(_landed(src, _PSI_N_BATCHES).writeStream.foreachBatch(apply))
     return spark.read.parquet(res_dir).orderBy("batch_id", "event_type")
 
 
@@ -1387,9 +1286,7 @@ def _cms_stream_oracle() -> str:
     "executors sketch independently and combine.",
 )
 def stream_cms_topk_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = _events_src(spark, sf_dir, ["event_id", "user_id"])
-    src_dir = scratch_dir(prefix="rugpull_cms_src_")
-    _write_slices(src, src_dir, _CMS_N_BATCHES)
+    src = _static_table(spark, sf_dir, "events").select("event_id", "user_id")
     sk_dir = os.path.join(scratch_dir(prefix="rugpull_cms_state_"), "sketch")
     key_dir = os.path.join(scratch_dir(prefix="rugpull_cms_state_"), "keys")
     res_dir = os.path.join(scratch_dir(prefix="rugpull_cms_res_"), "res")
@@ -1411,16 +1308,7 @@ def stream_cms_topk_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             keys=s.read.parquet(key_dir),
         ).write.mode("append").parquet(res_dir)
 
-    stream = (
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    _run_available_now(
-        stream.writeStream.foreachBatch(apply).option(
-            "checkpointLocation", scratch_dir(prefix="rugpull_cms_ckpt_")
-        )
-    )
+    _drain(_landed(src, _CMS_N_BATCHES).writeStream.foreachBatch(apply))
     return spark.read.parquet(res_dir).orderBy("batch_id", "rnk")
 
 
@@ -1462,33 +1350,16 @@ ORDER BY window_start
     "of stream length.",
 )
 def stream_hopping_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events_table(spark, sf_dir)
-    src = ev.select("user_id", "ts")
-    sentinel = ev.groupBy().agg(
-        F.lit(-1).cast("long").alias("user_id"),
-        (F.max("ts") + F.expr("INTERVAL 2 DAYS")).alias("ts"),
-    )
-    src_dir = scratch_dir(prefix="rugpull_hop_src_")
-    src.unionByName(sentinel).repartition(2).write.mode("overwrite").parquet(src_dir)
-
-    stream = spark.readStream.schema(src.schema).parquet(src_dir)
     agg = (
-        stream.withWatermark("ts", _WM_DELAY)
+        _landed(_with_sentinel(spark, sf_dir))
+        .withWatermark("ts", _WM_DELAY)
         .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
         .select(
             F.unix_timestamp(F.col("w.start")).alias("window_start"), "n_events"
         )
     )
-    name = "hop_sink_" + os.path.basename(src_dir)[-8:]
-    with _state_partitions(spark):
-        _run_available_now(
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", scratch_dir(prefix="rugpull_hop_ckpt_"))
-        )
-    return _sink_rows(spark, name).orderBy("window_start")
+    return _to_memory(agg, "append").orderBy("window_start")
 
 
 # ---------------------------------------------------------------------------
@@ -1559,33 +1430,9 @@ ORDER BY w.event_type, ts_epoch, filtered, innovation
 def stream_kalman_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.pipelines import kalman_filtered
 
-    src = (
-        _events_src(spark, sf_dir, ["event_type", "ts", "event_id", "value"])
-        .where(F.col("value").isNotNull())
-        .select(
-            "event_type",
-            "ts",
-            "event_id",
-            F.floor(F.col("value") * F.lit(1000000.0)).cast("long").alias("v"),
-        )
-    )
-    src_dir = scratch_dir(prefix="rugpull_kalman_src_")
-    src.repartition(2).write.mode("overwrite").parquet(src_dir)
-    stream = spark.readStream.schema(src.schema).parquet(src_dir)
-    with _state_partitions(spark, 8):
-        out = kalman_filtered(stream)
-        name = "kalman_sink_" + os.path.basename(src_dir)[-8:]
-        _run_available_now(
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option(
-                "checkpointLocation",
-                scratch_dir(prefix="rugpull_kalman_ckpt_"),
-            )
-        )
+    filtered = kalman_filtered(_landed(_micro_units(spark, sf_dir)))
     return (
-        _sink_rows(spark, name)
+        _to_memory(filtered, "append")
         .select(
             "event_type",
             "ts_epoch",
@@ -1619,7 +1466,8 @@ ORDER BY ts, event_id
 )
 def console_head10(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _events_src(spark, sf_dir, ["ts", "event_id", "user_id", "event_type", "value"])
+        _static_table(spark, sf_dir, "events")
+        .select("ts", "event_id", "user_id", "event_type", "value")
         .orderBy("ts", "event_id")
         .limit(10)
     )
@@ -1683,9 +1531,7 @@ def _flagship_e2e(
     )
     src_dir = scratch_dir(prefix="rugpull_flag_src_")
     first = n_slices if restart_after is None else restart_after
-    landed: set[str] = set()
-    _write_slices(lineitem, src_dir, n_slices, slice_col="l_orderkey",
-                  indices=range(first), seen_files=landed)
+    _write_slices(lineitem, src_dir, n_slices, "l_orderkey", range(first))
     dim_dir = os.path.join(scratch_dir(prefix="rugpull_flag_out_"), "report")
     ckpt_dir = scratch_dir(prefix="rugpull_flag_ckpt_")
 
@@ -1711,33 +1557,20 @@ def _flagship_e2e(
         .localCheckpoint()
     )
 
-    def run_stream() -> None:
-        # Rebuilt per run: a restart constructs a FRESH query against the
-        # same checkpoint, exactly how a recovered production job does.
-        stream = (
-            spark.readStream.schema(lineitem.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        # J1 inside the stream: stream-static broadcast semi-join, then the
-        # A1 conditional aggregation as UPDATE-mode keyed state.
-        hot = stream.join(
-            F.broadcast(watch.select("s_suppkey")),
-            stream["l_suppkey"] == F.col("s_suppkey"),
-            "left_semi",
-        )
-        agg = hot.groupBy("l_suppkey", "l_partkey").agg(
-            F.expr(S.dsum("case when l_returnflag = 'R' then l_quantity end")).alias("pre_qty"),
-            F.expr(S.dsum("case when l_returnflag <> 'R' then l_quantity end")).alias("post_qty"),
-            F.count(F.lit(1)).alias("n_moves"),
-            F.max("l_shipdate").alias("last_ship_ts"),
-        )
-        with _state_partitions(spark, 8):
-            _run_available_now(
-                agg.writeStream.outputMode("update")
-                .foreachBatch(apply)
-                .option("checkpointLocation", ckpt_dir)
-            )
+    # J1 inside the stream: stream-static broadcast semi-join, then the A1
+    # conditional aggregation as UPDATE-mode keyed state.
+    stream = _landed(lineitem, n_slices, path=src_dir)
+    hot = stream.join(
+        F.broadcast(watch.select("s_suppkey")),
+        stream["l_suppkey"] == F.col("s_suppkey"),
+        "left_semi",
+    )
+    agg = hot.groupBy("l_suppkey", "l_partkey").agg(
+        F.expr(S.dsum("case when l_returnflag = 'R' then l_quantity end")).alias("pre_qty"),
+        F.expr(S.dsum("case when l_returnflag <> 'R' then l_quantity end")).alias("post_qty"),
+        F.count(F.lit(1)).alias("n_moves"),
+        F.max("l_shipdate").alias("last_ship_ts"),
+    )
 
     # Decide the per-batch part source ONCE, on the OUTER session (see
     # _static_table: calling it on the batch session corrupts
@@ -1779,13 +1612,14 @@ def _flagship_e2e(
             sp, enriched, dim_dir, ["suppkey", "partkey"], order_by=["n_moves"]
         )
 
-    run_stream()
+    # Each drain starts a FRESH query against the same checkpoint, exactly
+    # how a recovered production job does.
+    _drain(agg.writeStream.outputMode("update").foreachBatch(apply), ckpt_dir)
     if restart_after is not None:
         # The rest of the corpus lands while the job is DOWN; the restart
         # must resume from checkpointed state, not from scratch.
-        _write_slices(lineitem, src_dir, n_slices, slice_col="l_orderkey",
-                      indices=range(first, n_slices), seen_files=landed)
-        run_stream()
+        _write_slices(lineitem, src_dir, n_slices, "l_orderkey", range(first, n_slices))
+        _drain(agg.writeStream.outputMode("update").foreachBatch(apply), ckpt_dir)
     return spark.read.parquet(dim_dir).select(
         "suppkey", "partkey", "supplier_name", "pre_qty", "post_qty",
         "n_moves", "last_ship_day", "usd_price",
@@ -1892,7 +1726,6 @@ def stream_pool_detect_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         _tx_stream(spark, f"{path}/blocks_*.json"), min_bt, F.expr(_hot_literal(SPARK))
     )
     dim_dir = os.path.join(scratch_dir(prefix="rugpull_poold_out_"), "pools")
-    ckpt = scratch_dir(prefix="rugpull_poold_ckpt_")
 
     def apply(batch: DataFrame, _bid: int) -> None:
         def fetch(keys: list[str]) -> dict[str, dict]:
@@ -1906,11 +1739,7 @@ def stream_pool_detect_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             order_by=["ts_epoch"],
         )
 
-    _run_available_now(
-        pools.writeStream.outputMode("append")
-        .foreachBatch(apply)
-        .option("checkpointLocation", ckpt)
-    )
+    _drain(pools.writeStream.outputMode("append").foreachBatch(apply))
     if not os.path.isdir(dim_dir):
         # Zero matching blocks -> no upsert ever ran -> no dim directory;
         # an unguarded read raised AnalysisException (round-9 ADVICE).
@@ -2027,14 +1856,7 @@ def _price_maint_e2e(
 
     fold = price_change_events if kernel == "apips" else price_change_events_tws
 
-    ev = _events_table(spark, sf_dir)
-    prices = ev.select(
-        F.concat(F.lit("pair-"), (F.col("user_id") % 5).cast("string")).alias("pair"),
-        "ts",
-        "event_id",
-        (F.col("value") + F.lit(1.0)).alias("base_price"),
-        (F.col("value") / F.lit(1.5) + F.lit(1.0)).alias("quote_price"),
-    )
+    prices = _prices(spark, sf_dir)
     # Land the replay as 4 CONTIGUOUS TIME slices (the priceAPIfiller's
     # chronological poll order): the stateful fold's cross-batch order
     # must equal event-time order for the oracle's global walk to grade it.
@@ -2046,30 +1868,12 @@ def _price_maint_e2e(
     lo, hi = (bounds["lo"] or 0), (bounds["hi"] or 0)
     n_slices = 4
     step = max(1, (hi - lo) // n_slices + 1)
-    slice_col = F.least(
+    time_slice = F.least(
         F.lit(n_slices - 1), ((F.unix_timestamp("ts") - F.lit(lo)) / F.lit(step))
         .cast("long"),
     )
-    staged = prices.withColumn("slice", slice_col)
-
-    landed: set[str] = set()
-
-    def land(indices: range) -> None:
-        for i in indices:
-            (
-                staged.where(F.col("slice") == i)
-                .drop("slice")
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(src_dir)
-            )
-            # Distinct increasing mtimes per slice: the fold's cross-batch
-            # order must equal event-time order, and FileStreamSource
-            # breaks mtime ties arbitrarily (round-9 ADVICE).
-            _stamp_slice_mtimes(src_dir, landed, i)
-
     first = n_slices if restart_after is None else restart_after
-    land(range(first))
+    _write_slices(prices, src_dir, n_slices, time_slice, range(first))
     vault_dim = (
         prices.select("pair")
         .distinct()
@@ -2096,30 +1900,19 @@ def _price_maint_e2e(
             order_by=["ts_epoch", "base_price", "quote_price"],
         )
 
+    emitted = fold(_landed(prices, n_slices, path=src_dir))
+
     def run_stream() -> None:
-        # Rebuilt per run: a restart constructs a FRESH query against the
-        # same checkpoint, exactly how a recovered production job does.
-        stream = (
-            spark.readStream.schema(prices.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        emitted = fold(stream)
-        with ExitStack() as scopes:
-            scopes.enter_context(_state_partitions(spark, 8))
-            if kernel == "tws":
-                scopes.enter_context(_rocksdb_state(spark))
-            _run_available_now(
-                emitted.writeStream.outputMode("append")
-                .foreachBatch(apply)
-                .option("checkpointLocation", ckpt)
-            )
+        # Each run starts a FRESH query against the same checkpoint,
+        # exactly how a recovered production job does.
+        with _rocksdb_state(spark) if kernel == "tws" else nullcontext():
+            _drain(emitted.writeStream.outputMode("append").foreachBatch(apply), ckpt)
 
     run_stream()
     if restart_after is not None:
         # The rest of the price history lands while the job is DOWN; the
         # restart must resume from the checkpointed per-pair fold state.
-        land(range(first, n_slices))
+        _write_slices(prices, src_dir, n_slices, time_slice, range(first, n_slices))
         run_stream()
     if not os.path.isdir(dim_dir):
         return spark.createDataFrame(
@@ -2168,16 +1961,9 @@ def _fanout_oracle() -> str:
 def stream_fanout_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.io import upsert_dimension
     from ..streaming.pipelines import stream_balance_pipeline
-    from .domain import _N_BLOCKS, _hot_literal
-    from ..sources.solana import hot_addresses
+    from .domain import _N_BLOCKS, _hot_literal, _watch_dir
 
     blocks_dir = _parity_dir()
-    watch_dir = os.path.join(blocks_dir, "watch_dim")
-    if not os.path.isdir(watch_dir):
-        spark.createDataFrame(
-            [(a,) for a in hot_addresses()], "address string"
-        ).write.mode("overwrite").parquet(watch_dir)
-
     bal_dir = scratch_dir(prefix="rugpull_fan_bal_")
     pool_dir = os.path.join(scratch_dir(prefix="rugpull_fan_pool_"), "pools")
 
@@ -2189,13 +1975,13 @@ def stream_fanout_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
     q1 = stream_balance_pipeline(
         spark,
         blocks_dir,
-        watch_dir,
+        _watch_dir(spark, blocks_dir),
         bal_sink,
         max_files_per_trigger=1,
         checkpoint_dir=scratch_dir(prefix="rugpull_fan_ckpt1_"),
     )
     # Subscriber 2: the §3.2 pool detector over the SAME landing zone,
-    # its own checkpoint — started while subscriber 1 is running.
+    # its own checkpoint — drained while subscriber 1 is running.
     min_bt = 1_700_000_000 + (_N_BLOCKS - 8) * 400
     pools = _pool_rows(
         _tx_stream(spark, f"{blocks_dir}/blocks_*.json"),
@@ -2209,24 +1995,11 @@ def stream_fanout_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
             order_by=["ts_epoch"],
         )
 
-    q2 = (
-        pools.writeStream.outputMode("append")
-        .foreachBatch(pool_apply)
-        .option("checkpointLocation", scratch_dir(prefix="rugpull_fan_ckpt2_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q1.processAllAvailable()
-    q1.stop()
-    # awaitTermination(timeout) returns False while the query is STILL
-    # RUNNING — a hung pool branch must fail loudly, not grade a
-    # truncated fanout result (round-9 verdict residue; the same guard
-    # _run_available_now grew in commit 422b4ea).
-    if not q2.awaitTermination(300):
-        q2.stop()
-        raise TimeoutError(
-            "fanout pool branch still running after 300 s (availableNow)"
-        )
+    try:
+        _drain(pools.writeStream.outputMode("append").foreachBatch(pool_apply))
+        q1.processAllAvailable()
+    finally:
+        q1.stop()
 
     bal = spark.read.parquet(bal_dir).select(
         F.lit("balance").alias("sink"),
@@ -2329,7 +2102,6 @@ def stream_watchlist_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dim_dir = os.path.join(scratch_dir(prefix="rugpull_fb_dim_"), "watch")
     out_dir = scratch_dir(prefix="rugpull_fb_out_")
-    ckpt = scratch_dir(prefix="rugpull_fb_ckpt_")
 
     def apply(batch: DataFrame, _bid: int) -> None:
         sp = batch.sparkSession
@@ -2366,11 +2138,7 @@ def stream_watchlist_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         upsert_dimension(sp, pool_keys, dim_dir, ["k"], order_by=["neg_slice"])
 
-    _run_available_now(
-        tx.writeStream.outputMode("append")
-        .foreachBatch(apply)
-        .option("checkpointLocation", ckpt)
-    )
+    _drain(tx.writeStream.outputMode("append").foreachBatch(apply))
     return spark.read.parquet(out_dir).select(
         "signature", "ts_epoch", "slice", "tagged"
     ).orderBy("signature")

@@ -11,10 +11,10 @@ from __future__ import annotations
 
 import os
 import pathlib
-import tempfile
-import zipfile
 
 from pyspark.sql import SparkSession
+
+from .tmpdirs import scratch_zip
 
 
 def get_spark(
@@ -93,28 +93,6 @@ def _quiet_noisy_loggers(spark: SparkSession) -> None:
 # a collected session's id could alias a new one and silently skip the
 # ship (round-9 ADVICE class, fixed here and in _vendor.ensure_protobuf).
 _SHIPPED: set[str] = set()
-_PKG_ZIP: str | None = None
-
-
-def _package_zip(pkg_dir: pathlib.Path) -> str:
-    """Zip the package once per process at an mkstemp (unpredictable,
-    O_EXCL-fresh) path — never a fixed name in the shared temp dir that a
-    symlink or concurrent writer could race (round-9 ADVICE class)."""
-    global _PKG_ZIP
-    if _PKG_ZIP is not None and os.path.exists(_PKG_ZIP):
-        return _PKG_ZIP
-    fd, zip_path = tempfile.mkstemp(prefix="rugpull_pipeline_pkg_", suffix=".zip")
-    with os.fdopen(fd, "wb") as fh:
-        with zipfile.ZipFile(fh, "w") as z:
-            for p in sorted(pkg_dir.rglob("*.py")):
-                z.write(
-                    p,
-                    arcname=str(
-                        pathlib.Path(pkg_dir.name) / p.relative_to(pkg_dir)
-                    ),
-                )
-    _PKG_ZIP = zip_path
-    return zip_path
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -129,7 +107,9 @@ def ship_package(spark: SparkSession) -> None:
     if key in _SHIPPED:
         return
     pkg_dir = pathlib.Path(__file__).resolve().parent
-    spark.sparkContext.addPyFile(_package_zip(pkg_dir))
+    spark.sparkContext.addPyFile(
+        scratch_zip(pkg_dir, "rugpull_pipeline_pkg_", arc_root=pkg_dir.name)
+    )
     # addPyFile covers TASK workers (python includes land on their sys.path)
     # but NOT StreamingPythonRunner workers — the transformWithState
     # PRE-INIT driver worker unpickles the StatefulProcessor closure in a

@@ -156,6 +156,39 @@ def _fold_keys(pdf: pd.DataFrame) -> list:
     return ["ts", "event_id"] if "event_id" in pdf.columns else ["ts"]
 
 
+def _merged(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame:
+    """One group's rows as one frame. A group arrives as MULTIPLE Arrow
+    chunks once it exceeds maxRecordsPerBatch, and sorting per chunk would
+    fold out of event-time order (caught by the sf0.1 oracle run), so every
+    kernel concatenates and sorts ONCE."""
+    chunks = [pdf for pdf in pdfs if len(pdf)]
+    return pd.concat(chunks, ignore_index=True) if chunks else pd.DataFrame()
+
+
+def _price_fold(pair: str, pdfs: Iterator[pd.DataFrame], last) -> tuple:
+    """The P11 rule over one pair's rows, shared by both stateful APIs: emit
+    a row when base or quote moved >10% vs the LAST EMITTED value — exactly
+    SERVER/ingest_prices.py:42-55 (state advances only on emission).
+    Returns the new (last_base, last_quote) and the emitted frame or None."""
+    last_base, last_quote = last
+    rows = []
+    merged = _merged(pdfs)
+    if len(merged):
+        for r in merged.sort_values(_fold_keys(merged)).itertuples():
+            base, quote = float(r.base_price), float(r.quote_price)
+            if last_base is None:
+                emit, bc, qc = True, None, None
+            else:
+                bc = abs(base - last_base) / last_base if last_base else None
+                qc = abs(quote - last_quote) / last_quote if last_quote else None
+                emit = (bc is not None and bc > 0.10) or (qc is not None and qc > 0.10)
+            if emit:
+                rows.append((pair, r.ts, base, quote, bc, qc))
+                last_base, last_quote = base, quote
+    frame = pd.DataFrame(rows, columns=PRICE_EVENT_OUT.fieldNames()) if rows else None
+    return (last_base, last_quote), frame
+
+
 def _make_price_change_fn(ttl_ms: int | None):
     """Build the stateful kernel with the TTL captured in the closure
     (cloudpickle ships closures by value, so the executor-side function sees
@@ -166,51 +199,22 @@ def _make_price_change_fn(ttl_ms: int | None):
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        """Emit a row when base or quote moved >10% vs the LAST EMITTED
-        value — exactly SERVER/ingest_prices.py:42-55 (state updates only on
-        emission). With a TTL, an idle pair's state is evicted on timeout —
-        the bounded-state guard the reference lacks (its price map lives
-        forever, SERVER/ingest_prices.py:8); after eviction the next price
-        is first-seen and emits unconditionally."""
+        """``_price_fold`` with the last emission in GroupState. With a TTL,
+        an idle pair's state is evicted on timeout — the bounded-state guard
+        the reference lacks (its price map lives forever,
+        SERVER/ingest_prices.py:8); after eviction the next price is
+        first-seen and emits unconditionally."""
         if state.hasTimedOut:
             state.remove()
             return
-        (last_base, last_quote) = state.get if state.exists else (None, None)
-        rows = []
-        # A group's rows arrive as MULTIPLE Arrow chunks once they exceed
-        # maxRecordsPerBatch; sorting per chunk would fold out of event-time
-        # order (caught by the sf0.1 oracle run). Concatenate, sort ONCE.
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        merged = (
-            pd.concat(chunks, ignore_index=True) if chunks else pd.DataFrame()
+        last, frame = _price_fold(
+            key[0], pdfs, state.get if state.exists else (None, None)
         )
-        if len(merged):
-            for r in merged.sort_values(_fold_keys(merged)).itertuples():
-                base, quote = float(r.base_price), float(r.quote_price)
-                if last_base is None:
-                    emit, bc, qc = True, None, None
-                else:
-                    bc = abs(base - last_base) / last_base if last_base else None
-                    qc = abs(quote - last_quote) / last_quote if last_quote else None
-                    emit = (bc is not None and bc > 0.10) or (qc is not None and qc > 0.10)
-                if emit:
-                    rows.append((key[0], r.ts, base, quote, bc, qc))
-                    last_base, last_quote = base, quote
-        state.update((last_base, last_quote))
+        state.update(last)
         if ttl_ms is not None:
             state.setTimeoutDuration(ttl_ms)
-        if rows:
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "pair",
-                    "ts",
-                    "base_price",
-                    "quote_price",
-                    "base_change",
-                    "quote_change",
-                ],
-            )
+        if frame is not None:
+            yield frame
 
     return _price_change_fn
 
@@ -247,66 +251,101 @@ _BOLL_OUT = T.StructType(
 _BOLL_STATE = T.StructType(
     [
         T.StructField("vals", T.ArrayType(T.LongType())),
-        # Ordering guard: last folded (ts ns, event_id) — see _bollinger_fn.
+        # Ordering guard: last folded (ts ns, event_id) — see _guarded_fold.
         T.StructField("last_ts", T.LongType()),
         T.StructField("last_eid", T.LongType()),
     ]
 )
 
 
-def _bollinger_fn(
-    key: Tuple[str],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-    drops=None,
-) -> Iterator[pd.DataFrame]:
-    """Streaming Bollinger-band breakout: per key, keep a ring buffer of the
-    last 7 fixed-point values; a row whose 8-row frame satisfies
-    |v - mean| > 2·sample_sd emits an alert. The test is evaluated in EXACT
-    integer arithmetic — (n-1)·(n·v - s)² > 4·n·(n·s2 - s²) over micro-unit
-    longs — so the emitted row set is bit-identical to the SQL window oracle
-    (a float sd near the threshold could flip the flag between engines).
-    State is ≤7 longs plus the last folded (ts, event_id) per key, bounded
-    regardless of stream length (ST4).
+def _guarded_fold(step, init, order, columns, key, pdfs, state, drops):
+    """The skeleton of every ordered stateful fold below: read (or
+    initialise to ``init``) the kernel's carry and its fold frontier — the
+    last folded ``order`` key, kept in state after the carry — concatenate
+    the group's chunks, sort ONCE by ``order``, fold each row through
+    ``step(carry, row, mark, key) -> (carry, output row or None)`` where
+    ``mark`` is the row's ``order`` key (ts in ns), and store the advanced
+    state. Outputs become one frame with ``columns``.
 
-    ORDERING CONTRACT: the fold is only correct when rows arrive in
-    event-time order ACROSS micro-batches (within a batch the kernel sorts).
-    A late file that regresses event time cannot be folded retroactively —
-    the ring buffer has already advanced — so such rows are DROPPED, guarded
-    by the last-folded key kept in state: the same drop-late-data policy the
-    watermark-based operators apply, made explicit here because
-    applyInPandasWithState has no watermark of its own."""
-    if state.exists:
-        (stored, last_ts, last_eid) = state.get
-        buf = list(stored)
-    else:
-        buf, last_ts, last_eid = [], None, None
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    merged = pd.concat(chunks, ignore_index=True) if chunks else pd.DataFrame()
+    ORDERING CONTRACT: a fold is only correct when rows arrive in
+    event-time order ACROSS micro-batches (within a batch it sorts). A late
+    file that regresses event time cannot be folded retroactively — the
+    carry has already advanced — so a row at or behind the frontier is
+    DROPPED and counted in ``drops`` when given: the watermark operators'
+    drop-late-data policy, made explicit because applyInPandasWithState has
+    no watermark of its own."""
+    n = len(init)
+    stored = tuple(state.get) if state.exists else init + (None,) * len(order)
+    carry, frontier = stored[:n], stored[n:]
     rows = []
+    merged = _merged(pdfs)
     if len(merged):
-        # Same multi-chunk hazard as the price kernel: concatenate, sort ONCE
-        # by the oracle's (ts, event_id) total order.
-        for r in merged.sort_values(["ts", "event_id"]).itertuples():
-            ts_ns = int(r.ts.value)
-            eid = int(r.event_id)
-            if last_ts is not None and (ts_ns, eid) <= (last_ts, last_eid):
+        for r in merged.sort_values(order).itertuples():
+            mark = tuple(
+                int(r.ts.value) if c == "ts" else int(getattr(r, c)) for c in order
+            )
+            if frontier[0] is not None and mark <= frontier:
                 if drops is not None:
                     drops.add(1)
                 continue  # regressed behind the fold frontier: late, dropped
-            v = int(r.v)
-            frame = buf[-7:] + [v]
-            n = len(frame)
-            if n == 8:
-                s = sum(frame)
-                s2 = sum(x * x for x in frame)
-                if (n - 1) * (n * v - s) ** 2 > 4 * n * (n * s2 - s * s):
-                    rows.append((key[0], ts_ns // 1_000_000_000, v))
-            buf = frame[-7:]
-            last_ts, last_eid = ts_ns, eid
-    state.update((buf, last_ts, last_eid))
+            carry, out = step(carry, r, mark, key)
+            if out is not None:
+                rows.append(out)
+            frontier = mark
+    state.update(carry + frontier)
     if rows:
-        yield pd.DataFrame(rows, columns=["event_type", "ts_epoch", "v_micro"])
+        yield pd.DataFrame(rows, columns=columns)
+
+
+def _ordered_fold(
+    df: DataFrame,
+    group: str,
+    name: str,
+    step,
+    init: tuple,
+    order: list[str],
+    out: T.StructType,
+    state_schema: T.StructType,
+    late_drops,
+) -> DataFrame:
+    """``_guarded_fold`` of ``step`` per ``group`` key as an append-mode
+    applyInPandasWithState. The input is observed as ``<name>_rows_in``
+    under ``<name>_guard`` — per batch in every StreamingQueryProgress, the
+    denominator of the drop rate ``late_drops`` (see ``late_drop_counter``)
+    counts."""
+    from ..session import ship_package
+
+    ship_package(df.sparkSession)
+    columns = out.fieldNames()
+
+    def fn(key, pdfs, state):
+        return _guarded_fold(step, init, order, columns, key, pdfs, state, late_drops)
+
+    src = df.observe(f"{name}_guard", F.count(F.lit(1)).alias(f"{name}_rows_in"))
+    return src.groupBy(group).applyInPandasWithState(
+        fn, out, state_schema, "append", GroupStateTimeout.NoTimeout
+    )
+
+
+def _bollinger_step(carry, r, mark, key):
+    """Bollinger-band breakout: the carry is a ring buffer of the last 7
+    fixed-point values; a row whose 8-row frame satisfies |v - mean| >
+    2·sample_sd emits an alert. The test is evaluated in EXACT integer
+    arithmetic — (n-1)·(n·v - s)² > 4·n·(n·s2 - s²) over micro-unit longs —
+    so the emitted row set is bit-identical to the SQL window oracle (a
+    float sd near the threshold could flip the flag between engines).
+    State is ≤7 longs plus the frontier per key (ST4)."""
+    (buf,) = carry
+    v = int(r.v)
+    frame = list(buf[-7:]) + [v]
+    n = len(frame)
+    alert = None
+    if n == 8:
+        s = sum(frame)
+        s2 = sum(x * x for x in frame)
+        if (n - 1) * (n * v - s) ** 2 > 4 * n * (n * s2 - s * s):
+            alert = (key[0], mark[0] // 1_000_000_000, v)
+    return (frame[-7:],), alert
 
 
 def bollinger_alerts(values: DataFrame, late_drops=None) -> DataFrame:
@@ -317,25 +356,15 @@ def bollinger_alerts(values: DataFrame, late_drops=None) -> DataFrame:
     ring buffer, so total state is O(active keys), never O(stream).
 
     Requires event-time-monotonic arrival across micro-batches; rows that
-    regress behind a key's fold frontier are dropped (see _bollinger_fn).
+    regress behind a key's fold frontier are dropped (see _guarded_fold).
     OBSERVABILITY: pass ``late_drops`` (an accumulator from
     ``late_drop_counter``) to count those silent drops — a production
     deployment pages on drops/rows_in, where rows_in is the per-batch
     ``bollinger_rows_in`` metric ``observe()`` emits in every
     StreamingQueryProgress event."""
-    from ..session import ship_package
-
-    ship_package(values.sparkSession)
-    fn = _bollinger_fn if late_drops is None else (
-        lambda key, pdfs, state: _bollinger_fn(key, pdfs, state, late_drops)
-    )
-    src = values.observe("bollinger_guard", F.count(F.lit(1)).alias("bollinger_rows_in"))
-    return src.groupBy("event_type").applyInPandasWithState(
-        fn,
-        _BOLL_OUT,
-        _BOLL_STATE,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _ordered_fold(
+        values, "event_type", "bollinger", _bollinger_step, ([],),
+        ["ts", "event_id"], _BOLL_OUT, _BOLL_STATE, late_drops,
     )
 
 
@@ -389,48 +418,12 @@ def price_change_events_tws(
             )
 
         def handleInputRows(self, key, rows, timerValues):
-            last = self._last.get() if self._last.exists() else (None, None)
-            last_base, last_quote = last
-            out = []
-            # Same multi-chunk hazard as the applyInPandasWithState kernel:
-            # concatenate the group's chunks and sort ONCE.
-            chunks = [pdf for pdf in rows if len(pdf)]
-            merged = (
-                pd.concat(chunks, ignore_index=True)
-                if chunks
-                else pd.DataFrame()
+            last, frame = _price_fold(
+                key[0], rows, self._last.get() if self._last.exists() else (None, None)
             )
-            if len(merged):
-                for r in merged.sort_values(_fold_keys(merged)).itertuples():
-                    base, quote = float(r.base_price), float(r.quote_price)
-                    if last_base is None:
-                        emit, bc, qc = True, None, None
-                    else:
-                        bc = abs(base - last_base) / last_base if last_base else None
-                        qc = (
-                            abs(quote - last_quote) / last_quote
-                            if last_quote
-                            else None
-                        )
-                        emit = (bc is not None and bc > 0.10) or (
-                            qc is not None and qc > 0.10
-                        )
-                    if emit:
-                        out.append((key[0], r.ts, base, quote, bc, qc))
-                        last_base, last_quote = base, quote
-            self._last.update((last_base, last_quote))
-            if out:
-                yield pd.DataFrame(
-                    out,
-                    columns=[
-                        "pair",
-                        "ts",
-                        "base_price",
-                        "quote_price",
-                        "base_change",
-                        "quote_change",
-                    ],
-                )
+            self._last.update(last)
+            if frame is not None:
+                yield frame
 
         def close(self) -> None:
             pass
@@ -615,56 +608,23 @@ _ATTR_STATE = T.StructType(
 _ATTR_LOOKBACK_S = 3600
 
 
-def _attribution_fn(
-    key: Tuple[int],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-    drops=None,
-) -> Iterator[pd.DataFrame]:
-    """Streaming last-touch attribution: state per user is ONE (epoch-sec,
-    type) pair — the most recent non-purchase touch; each purchase emits its
+def _attribution_step(carry, r, mark, key):
+    """Last-touch attribution: the carry is ONE (epoch-sec, type) pair — the
+    user's most recent non-purchase touch; each purchase emits its
     attributed channel ('direct' when the touch is absent or older than the
     lookback). Rows fold in (ts, kind, event_id) order so a same-instant
     touch lands before the purchase that credits it, mirroring the batch
-    window's kind-ordered carry exactly.
-
-    ORDERING CONTRACT: correctness across micro-batches requires
-    event-time-monotonic arrival — a purchase folded before a LATER batch
-    delivers an earlier touch has already been attributed and emitted
-    (append mode cannot retract it). Rows that regress behind the last
-    folded (ts, kind, event_id) key held in state are therefore DROPPED,
-    the explicit analogue of the watermark operators' late-data policy."""
-    (t_sec, t_type, last_ts, last_kind, last_eid) = (
-        state.get if state.exists else (None, None, None, None, None)
-    )
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    merged = pd.concat(chunks, ignore_index=True) if chunks else pd.DataFrame()
-    rows = []
-    if len(merged):
-        for r in merged.sort_values(["ts", "kind", "event_id"]).itertuples():
-            ts_ns, kind, eid = int(r.ts.value), int(r.kind), int(r.event_id)
-            if last_ts is not None and (ts_ns, kind, eid) <= (
-                last_ts,
-                last_kind,
-                last_eid,
-            ):
-                if drops is not None:
-                    drops.add(1)
-                continue  # regressed behind the fold frontier: late, dropped
-            sec = ts_ns // 1_000_000_000
-            if kind == 0:
-                t_sec, t_type = sec, r.event_type
-            else:
-                recent = t_sec is not None and sec - t_sec <= _ATTR_LOOKBACK_S
-                channel = t_type if recent else "direct"
-                val = None if pd.isna(r.value) else float(r.value)
-                rows.append((eid, key[0], channel, val))
-            last_ts, last_kind, last_eid = ts_ns, kind, eid
-    state.update((t_sec, t_type, last_ts, last_kind, last_eid))
-    if rows:
-        yield pd.DataFrame(
-            rows, columns=["event_id", "user_id", "channel", "purchase_value"]
-        )
+    window's kind-ordered carry exactly; a purchase already emitted cannot
+    be retracted in append mode, which is why late rows are dropped."""
+    t_sec, t_type = carry
+    ts_ns, kind, eid = mark
+    sec = ts_ns // 1_000_000_000
+    if kind == 0:
+        return (sec, r.event_type), None
+    recent = t_sec is not None and sec - t_sec <= _ATTR_LOOKBACK_S
+    channel = t_type if recent else "direct"
+    val = None if pd.isna(r.value) else float(r.value)
+    return carry, (eid, key[0], channel, val)
 
 
 def attribution_events(events: DataFrame, late_drops=None) -> DataFrame:
@@ -674,25 +634,13 @@ def attribution_events(events: DataFrame, late_drops=None) -> DataFrame:
     events_attribution_last_touch rollup.
 
     Requires event-time-monotonic arrival across micro-batches; rows that
-    regress behind a user's fold frontier are dropped (see _attribution_fn);
+    regress behind a user's fold frontier are dropped (see _guarded_fold);
     pass ``late_drops`` (see ``late_drop_counter``) to count them, and read
     the per-batch ``attribution_rows_in`` observe() metric for the rate
     denominator."""
-    from ..session import ship_package
-
-    ship_package(events.sparkSession)
-    fn = _attribution_fn if late_drops is None else (
-        lambda key, pdfs, state: _attribution_fn(key, pdfs, state, late_drops)
-    )
-    src = events.observe(
-        "attribution_guard", F.count(F.lit(1)).alias("attribution_rows_in")
-    )
-    return src.groupBy("user_id").applyInPandasWithState(
-        fn,
-        _ATTR_OUT,
-        _ATTR_STATE,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _ordered_fold(
+        events, "user_id", "attribution", _attribution_step, (None, None),
+        ["ts", "kind", "event_id"], _ATTR_OUT, _ATTR_STATE, late_drops,
     )
 
 
@@ -719,50 +667,21 @@ _CUSUM_WARMUP = 20
 _CUSUM_H_MULT = 5  # alert when s > 5 * sum20
 
 
-def _cusum_fn(
-    key: Tuple[str],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-    drops=None,
-) -> Iterator[pd.DataFrame]:
+def _cusum_step(carry, r, mark, key):
     """CUSUM changepoint detector (one-sided, upper): after a 20-sample
     warm-up fixes the baseline sum, fold s = max(0, s + 20·v − sum20) and
     alert (then reset) when s exceeds 5·sum20 — sustained upward drift the
     reference's single-step ±10% predicate cannot see. The whole recursion
     is EXACT integer arithmetic over micro-unit longs, so the replay
-    hash-matches the recursive-CTE oracle; state is five longs per key.
-
-    ORDERING CONTRACT: the recursion consumes rows in (ts, event_id) order
-    and cannot be rewound once folded, so correctness across micro-batches
-    requires event-time-monotonic arrival; rows regressing behind the
-    last folded key held in state are DROPPED (the watermark operators'
-    late-data policy, made explicit)."""
-    (s, n_warm, sum20, last_ts, last_eid) = (
-        state.get if state.exists else (0, 0, 0, None, None)
-    )
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    merged = pd.concat(chunks, ignore_index=True) if chunks else pd.DataFrame()
-    rows = []
-    if len(merged):
-        for r in merged.sort_values(["ts", "event_id"]).itertuples():
-            ts_ns, eid = int(r.ts.value), int(r.event_id)
-            if last_ts is not None and (ts_ns, eid) <= (last_ts, last_eid):
-                if drops is not None:
-                    drops.add(1)
-                continue  # regressed behind the fold frontier: late, dropped
-            last_ts, last_eid = ts_ns, eid
-            v = int(r.v)
-            if n_warm < _CUSUM_WARMUP:
-                sum20 += v
-                n_warm += 1
-                continue
-            s = max(0, s + _CUSUM_WARMUP * v - sum20)
-            if s > _CUSUM_H_MULT * sum20:
-                rows.append((key[0], ts_ns // 1_000_000_000, v))
-                s = 0
-    state.update((s, n_warm, sum20, last_ts, last_eid))
-    if rows:
-        yield pd.DataFrame(rows, columns=["event_type", "ts_epoch", "v_micro"])
+    hash-matches the recursive-CTE oracle; state is five longs per key."""
+    s, n_warm, sum20 = carry
+    v = int(r.v)
+    if n_warm < _CUSUM_WARMUP:
+        return (s, n_warm + 1, sum20 + v), None
+    s = max(0, s + _CUSUM_WARMUP * v - sum20)
+    if s > _CUSUM_H_MULT * sum20:
+        return (0, n_warm, sum20), (key[0], mark[0] // 1_000_000_000, v)
+    return (s, n_warm, sum20), None
 
 
 def cusum_alerts(values: DataFrame, late_drops=None) -> DataFrame:
@@ -770,22 +689,13 @@ def cusum_alerts(values: DataFrame, late_drops=None) -> DataFrame:
     alerts. State per key is five longs — O(active keys), never O(stream).
 
     Requires event-time-monotonic arrival across micro-batches; rows that
-    regress behind a key's fold frontier are dropped (see _cusum_fn); pass
-    ``late_drops`` (see ``late_drop_counter``) to count them, and read the
-    per-batch ``cusum_rows_in`` observe() metric for the rate denominator."""
-    from ..session import ship_package
-
-    ship_package(values.sparkSession)
-    fn = _cusum_fn if late_drops is None else (
-        lambda key, pdfs, state: _cusum_fn(key, pdfs, state, late_drops)
-    )
-    src = values.observe("cusum_guard", F.count(F.lit(1)).alias("cusum_rows_in"))
-    return src.groupBy("event_type").applyInPandasWithState(
-        fn,
-        _CUSUM_OUT,
-        _CUSUM_STATE,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    regress behind a key's fold frontier are dropped (see _guarded_fold);
+    pass ``late_drops`` (see ``late_drop_counter``) to count them, and read
+    the per-batch ``cusum_rows_in`` observe() metric for the rate
+    denominator."""
+    return _ordered_fold(
+        values, "event_type", "cusum", _cusum_step, (0, 0, 0),
+        ["ts", "event_id"], _CUSUM_OUT, _CUSUM_STATE, late_drops,
     )
 
 
@@ -814,66 +724,31 @@ _KALMAN_Q = 1.0e10  # process (level drift) variance per step
 _KALMAN_R = 1.0e12  # observation variance
 
 
-def _kalman_fn(
-    key: Tuple[str],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-    drops=None,
-) -> Iterator[pd.DataFrame]:
+def _kalman_step(carry, r, mark, key):
     """1-D Kalman filter, local-level model: predict p_n = p + Q, gain
     k = p_n / (p_n + R), update x += k·(z − x), p = (1 − k)·p_n — the
     optimal recursive smoother the reference's ±10% single-step predicate
     and the Bollinger ring buffer both approximate. First observation
     initializes (x = z, p = R) and emits innovation 0. State per key is
-    TWO doubles (+ the ordering guard) — O(active keys).
+    TWO doubles (+ the frontier) — O(active keys).
 
     DETERMINISM: the fold is plain IEEE double +, ·, / in a fixed
     expression order over micro-unit observations, so the DuckDB
     recursive-CTE oracle that performs the identical expression tree
-    reproduces it bit-for-bit; emitted values are RAW doubles — the
-    registered replay rounds via SQL round() on both engines.
-
-    ORDERING CONTRACT: consumes rows in (ts, event_id) order; rows that
-    regress behind the fold frontier are dropped (see _cusum_fn)."""
-    (x, p, last_ts, last_eid) = (
-        state.get if state.exists else (None, None, None, None)
-    )
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    merged = pd.concat(chunks, ignore_index=True) if chunks else pd.DataFrame()
-    rows = []
-    if len(merged):
-        for r in merged.sort_values(["ts", "event_id"]).itertuples():
-            ts_ns, eid = int(r.ts.value), int(r.event_id)
-            if last_ts is not None and (ts_ns, eid) <= (last_ts, last_eid):
-                if drops is not None:
-                    drops.add(1)
-                continue  # regressed behind the fold frontier: late, dropped
-            last_ts, last_eid = ts_ns, eid
-            z = float(int(r.v))
-            if x is None:
-                x, p = z, _KALMAN_R
-                innov = 0.0
-            else:
-                pn = p + _KALMAN_Q
-                k = pn / (pn + _KALMAN_R)
-                innov = z - x
-                x = x + k * innov
-                p = (1.0 - k) * pn
-            # emit RAW unit-scaled doubles; the registered replay rounds
-            # via SQL round() so both engines share one rounding rule.
-            rows.append(
-                (
-                    key[0],
-                    ts_ns // 1_000_000_000,
-                    x / 1000000.0,
-                    innov / 1000000.0,
-                )
-            )
-    state.update((x, p, last_ts, last_eid))
-    if rows:
-        yield pd.DataFrame(
-            rows, columns=["event_type", "ts_epoch", "filtered", "innovation"]
-        )
+    reproduces it bit-for-bit; emitted values are RAW unit-scaled doubles —
+    the registered replay rounds via SQL round() on both engines."""
+    x, p = carry
+    z = float(int(r.v))
+    if x is None:
+        x, p = z, _KALMAN_R
+        innov = 0.0
+    else:
+        pn = p + _KALMAN_Q
+        k = pn / (pn + _KALMAN_R)
+        innov = z - x
+        x = x + k * innov
+        p = (1.0 - k) * pn
+    return (x, p), (key[0], mark[0] // 1_000_000_000, x / 1000000.0, innov / 1000000.0)
 
 
 def kalman_filtered(values: DataFrame, late_drops=None) -> DataFrame:
@@ -882,22 +757,13 @@ def kalman_filtered(values: DataFrame, late_drops=None) -> DataFrame:
     keys), never O(stream).
 
     Requires event-time-monotonic arrival across micro-batches; rows that
-    regress behind a key's fold frontier are dropped (see _kalman_fn); pass
-    ``late_drops`` (see ``late_drop_counter``) to count them, and read the
-    per-batch ``kalman_rows_in`` observe() metric for the rate denominator."""
-    from ..session import ship_package
-
-    ship_package(values.sparkSession)
-    fn = _kalman_fn if late_drops is None else (
-        lambda key, pdfs, state: _kalman_fn(key, pdfs, state, late_drops)
-    )
-    src = values.observe("kalman_guard", F.count(F.lit(1)).alias("kalman_rows_in"))
-    return src.groupBy("event_type").applyInPandasWithState(
-        fn,
-        _KALMAN_OUT,
-        _KALMAN_STATE,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    regress behind a key's fold frontier are dropped (see _guarded_fold);
+    pass ``late_drops`` (see ``late_drop_counter``) to count them, and read
+    the per-batch ``kalman_rows_in`` observe() metric for the rate
+    denominator."""
+    return _ordered_fold(
+        values, "event_type", "kalman", _kalman_step, (None, None),
+        ["ts", "event_id"], _KALMAN_OUT, _KALMAN_STATE, late_drops,
     )
 
 

@@ -12,26 +12,33 @@ longer exist (liveness-checked via ``os.kill(pid, 0)``), plus any older
 than ``_MAX_AGE_S`` as a backstop for pid reuse — so a fresh test run
 leaves ``$TMPDIR`` no larger than it found it.
 
+The zips shipped to Spark's Python workers (the package and the
+miniproto shim, ``scratch_zip``) live in the scratch root too, so they go
+with their process's root.
+
 Deliberately NOT swept: the content-keyed cached corpora
 (``rugpull_guard_corpus_*``, ``rugpull_solana_*``, ``rugpull_blobs_*``,
-``rugpull_bucketed_*``, the shipped package zip). Those carry their
-parameters in the name, are reused across runs, and rebuilding them is the
-expensive part — exactly the cache-key convention the rest of the repo uses.
-``published_dir`` writes them so that a reader never sees a partial file.
+``rugpull_bucketed_*``). Those carry their parameters in the name, are
+reused across runs, and rebuilding them is the expensive part — exactly the
+cache-key convention the rest of the repo uses. ``published_dir`` writes
+them so that a reader never sees a partial file.
 """
 
 from __future__ import annotations
 
 import errno
 import os
+import pathlib
 import shutil
 import tempfile
 import uuid
+import zipfile
 from collections.abc import Iterator
 from contextlib import contextmanager
 
 _MAX_AGE_S = 6 * 3600
 _SWEPT = False
+_ZIPS: dict[str, str] = {}
 
 
 def _pid_alive(pid: int) -> bool:
@@ -90,6 +97,22 @@ def scratch_dir(prefix: str = "tmp_") -> str:
     exits, so repeated runs cannot grow ``$TMPDIR`` unboundedly.
     """
     return tempfile.mkdtemp(prefix=prefix, dir=scratch_root())
+
+
+def scratch_zip(src: pathlib.Path, prefix: str, arc_root: str = "") -> str:
+    """A zip of the ``*.py`` files under ``src`` (archived under
+    ``arc_root``), written once per process under the scratch root at an
+    mkstemp path — unpredictable and O_EXCL-fresh, never a fixed name in the
+    shared temp dir that a symlink or concurrent writer could race."""
+    zip_path = _ZIPS.get(str(src))
+    if zip_path is not None and os.path.exists(zip_path):
+        return zip_path
+    fd, zip_path = tempfile.mkstemp(prefix=prefix, suffix=".zip", dir=scratch_root())
+    with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as z:
+        for p in sorted(src.rglob("*.py")):
+            z.write(p, arcname=str(pathlib.Path(arc_root) / p.relative_to(src)))
+    _ZIPS[str(src)] = zip_path
+    return zip_path
 
 
 @contextmanager

@@ -575,6 +575,101 @@ def test_local_checkpoint_only_in_pair_and_allowlisted_builders():
     assert allowed - found == set(), f"stale allow-list entries: {allowed - found}"
 
 
+def _replay_steps(node) -> list[str]:
+    """The streaming run-path steps ``node`` spells out itself."""
+    import ast
+
+    def const(n, value) -> bool:
+        return isinstance(n, ast.Constant) and n.value == value
+
+    if isinstance(node, ast.Constant) and node.value == "checkpointLocation":
+        return ["checkpointLocation"]
+    if (
+        isinstance(node, ast.Attribute)
+        and node.attr == "write"
+        and isinstance(node.value, ast.Call)
+        and getattr(node.value.func, "attr", None) == "repartition"
+        and node.value.args
+        and const(node.value.args[0], 2)
+    ):
+        return ["repartition(2).write"]
+    if not isinstance(node, ast.Call):
+        return []
+    func, args = node.func, node.args
+    name = getattr(func, "attr", None) or getattr(func, "id", None)
+    first = args[0] if args else None
+    return [
+        step
+        for step, hit in (
+            ("awaitTermination", name == "awaitTermination"),
+            ("trigger(availableNow)", name == "trigger"
+             and any(k.arg == "availableNow" for k in node.keywords)),
+            ('format("memory")', name == "format" and const(first, "memory")),
+            ("maxFilesPerTrigger", name == "option" and const(first, "maxFilesPerTrigger")),
+            ("_state_partitions", name == "_state_partitions"),
+        )
+        if hit
+    ]
+
+
+def test_streaming_run_path_lives_in_three_helpers():
+    """Every replay in plans/ lands, drains and sinks through
+    stream_infra's _landed / _drain / _to_memory. Each step below appears
+    exactly once in plans/, inside its helper: a builder that spells one
+    out itself is a second copy of the run policy (deadline, checkpoint,
+    pacing, state-partition pinning)."""
+    import ast
+    import pathlib
+    from collections import Counter
+
+    from rugpull_data_pipeline_spark import plans
+
+    found = Counter()
+    for path in sorted(pathlib.Path(plans.__path__[0]).glob("*.py")):
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            where = (
+                f"{path.stem}.{top.name}"
+                if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef))
+                else f"{path.stem}:<module>"
+            )
+            for node in ast.walk(top):
+                found.update((step, where) for step in _replay_steps(node))
+            names = {getattr(n, "id", None) or getattr(n, "name", None) for n in ast.walk(top)}
+            gone = names & {"_events_src", "_events_table", "_run_available_now", "sql_pair"}
+            assert not gone, f"{where} still uses {gone}"
+    assert found == Counter({
+        ("awaitTermination", "stream_infra._drain"): 1,
+        ("trigger(availableNow)", "stream_infra._drain"): 1,
+        ("checkpointLocation", "stream_infra._drain"): 1,
+        ("_state_partitions", "stream_infra._drain"): 1,
+        ('format("memory")', "stream_infra._to_memory"): 1,
+        ("maxFilesPerTrigger", "stream_infra._landed"): 1,
+        ("repartition(2).write", "stream_infra._landed"): 1,
+    }), sorted(found.items())
+
+
+def test_drain_stops_a_replay_at_its_deadline(spark, monkeypatch):
+    """A replay still running at the deadline is stopped and fails with
+    TimeoutError instead of grading a partial sink; the session's shuffle
+    partition count is restored."""
+    import time
+
+    from rugpull_data_pipeline_spark.plans import stream_infra
+
+    monkeypatch.setattr(stream_infra, "_DRAIN_DEADLINE_S", 1)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    stream = stream_infra._landed(spark.range(4).withColumnRenamed("id", "event_id"), 2)
+
+    def slow(_batch, _bid):
+        time.sleep(4)
+
+    with pytest.raises(TimeoutError):
+        stream_infra._drain(stream.writeStream.foreachBatch(slow))
+    assert spark.streams.active == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
 @pytest.mark.parametrize(
     "shared",
     [
@@ -750,3 +845,25 @@ spark.stop()
 """
     with tempfile.TemporaryDirectory() as tmp:
         _fresh_tmpdir_python(code, tmp)
+
+
+def test_shipped_zips_stay_under_the_scratch_root():
+    """The package zip and the miniproto shim zip shipped to the Python
+    workers are written under the process's scratch root, which the next
+    process's sweep reclaims, never at the top level of ``TMPDIR``."""
+    import os
+    import tempfile
+
+    code = """
+from rugpull_data_pipeline_spark._vendor import ensure_protobuf
+from rugpull_data_pipeline_spark.session import get_spark, ship_package
+
+spark = get_spark(master="local[1]")
+ship_package(spark)
+ensure_protobuf(spark)
+spark.stop()
+"""
+    with tempfile.TemporaryDirectory() as tmp:
+        _fresh_tmpdir_python(code, tmp)
+        top = [n for n in os.listdir(tmp) if n.startswith("rugpull_") and n.endswith(".zip")]
+        assert not top, top

@@ -6,14 +6,15 @@ and requires the held counts to equal the batch ground truth."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
+
+from rugpull_data_pipeline_spark.plans.stream_infra import _drain
+from rugpull_data_pipeline_spark.tmpdirs import scratch_dir
 
 
 def test_statestore_holds_batch_truth(spark):
-    src_dir = tempfile.mkdtemp(prefix="rugpull_ss_src_")
-    ckpt = tempfile.mkdtemp(prefix="rugpull_ss_ckpt_")
+    src_dir = scratch_dir(prefix="rugpull_ss_src_")
+    ckpt = scratch_dir(prefix="rugpull_ss_ckpt_")
     data = spark.range(200).select(
         (F.col("id") % 7).alias("k"),
         F.timestamp_seconds(F.col("id") + 1700000000).alias("ts"),
@@ -26,15 +27,8 @@ def test_statestore_holds_batch_truth(spark):
         .groupBy("k")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("ss_reader_probe")
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    # The state store is the result under test; the sink only drives it.
+    _drain(agg.writeStream.format("noop").outputMode("complete"), checkpoint=ckpt)
 
     state = spark.read.format("statestore").load(ckpt)
     # schema: key struct, value struct, partition_id

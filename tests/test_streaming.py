@@ -15,6 +15,12 @@ from rugpull_data_pipeline_spark.operators.balance import (
     extract_balance_changes,
     parse_blocks,
 )
+from rugpull_data_pipeline_spark.plans.stream_infra import (
+    _drain,
+    _landed,
+    _to_memory,
+    _write_slices,
+)
 from rugpull_data_pipeline_spark.sources.solana import (
     hot_addresses,
     write_blocks_json,
@@ -25,6 +31,13 @@ from rugpull_data_pipeline_spark.streaming.pipelines import (
     stream_balance_pipeline,
     watermarked_dedup,
 )
+
+
+def _two_batches(df, later: str, src: str):
+    """``df`` as a paced stream of two micro-batches: the rows where
+    ``later`` is false, then the rest (mtime-stamped, so in that order)."""
+    _write_slices(df, src, 2, F.expr(later).cast("int"))
+    return _landed(df, 2, path=src)
 
 
 def test_stream_balance_matches_batch(spark, tmp_path):
@@ -528,26 +541,8 @@ def test_bollinger_state_survives_batch_boundary(spark, tmp_path):
         "event_id",
         F.col("raw").alias("v"),
     )
-    src = str(tmp_path / "src")
-    df.where("event_id <= 6").coalesce(1).write.mode("append").parquet(src)
-    df.where("event_id > 6").coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        bollinger_alerts(stream)
-        .writeStream.format("memory")
-        .queryName("boll_boundary")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("boll_boundary").orderBy("ts_epoch").toPandas()
+    stream = _two_batches(df, "event_id > 6", str(tmp_path / "src"))
+    got = _to_memory(bollinger_alerts(stream), "append").orderBy("ts_epoch").toPandas()
     # exactly the spike emits (quiet jitter stays inside the envelope), and
     # it is only detectable because rows 5..11 were retained in state.
     assert list(got["v_micro"]) == [5000]
@@ -581,26 +576,9 @@ def test_attribution_state_survives_batch_boundary(spark, tmp_path):
         "value",
         "kind",
     )
-    src = str(tmp_path / "src")
-    df.where("t <= 500").coalesce(1).write.mode("append").parquet(src)
-    df.where("t > 500").coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        attribution_events(stream)
-        .writeStream.format("memory")
-        .queryName("attr_boundary")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r.event_id: r for r in spark.table("attr_boundary").collect()}
+    stream = _two_batches(df, "t > 500", str(tmp_path / "src"))
+    rows = _to_memory(attribution_events(stream), "append").collect()
+    got = {r.event_id: r for r in rows}
     assert got[10].channel == "click" and got[10].purchase_value == 10.0
     assert got[11].channel == "direct"
 
@@ -621,26 +599,8 @@ def test_cusum_state_survives_batch_boundary(spark, tmp_path):
     ).select(
         "event_type", F.col("t").cast("timestamp").alias("ts"), "event_id", "v"
     )
-    src = str(tmp_path / "src")
-    df.where("event_id <= 20").coalesce(1).write.mode("append").parquet(src)
-    df.where("event_id > 20").coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        cusum_alerts(stream)
-        .writeStream.format("memory")
-        .queryName("cusum_boundary")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("cusum_boundary").orderBy("ts_epoch").collect()
+    stream = _two_batches(df, "event_id > 20", str(tmp_path / "src"))
+    got = _to_memory(cusum_alerts(stream), "append").orderBy("ts_epoch").collect()
     # exactly one alert, on the 3rd drifted sample (event 23, t=230)
     assert [(r.ts_epoch, r.v_micro) for r in got] == [(230, 3_000_000)]
 
@@ -666,26 +626,8 @@ def test_bollinger_drops_event_time_regression(spark, tmp_path):
         "event_id",
         F.col("raw").alias("v"),
     )
-    src = str(tmp_path / "src")
-    df.where("event_id <= 12").coalesce(1).write.mode("append").parquet(src)
-    df.where("event_id > 12").coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        bollinger_alerts(stream)
-        .writeStream.format("memory")
-        .queryName("boll_regress")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("boll_regress").orderBy("ts_epoch").toPandas()
+    stream = _two_batches(df, "event_id > 12", str(tmp_path / "src"))
+    got = _to_memory(bollinger_alerts(stream), "append").orderBy("ts_epoch").toPandas()
     # only the in-order breakout; both regressed rows were dropped
     assert list(got["v_micro"]) == [5000]
 
@@ -704,26 +646,8 @@ def test_cusum_drops_event_time_regression(spark, tmp_path):
     ).select(
         "event_type", F.col("t").cast("timestamp").alias("ts"), "event_id", "v"
     )
-    src = str(tmp_path / "src")
-    df.where("event_id <= 22").coalesce(1).write.mode("append").parquet(src)
-    df.where("event_id > 22").coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        cusum_alerts(stream)
-        .writeStream.format("memory")
-        .queryName("cusum_regress")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("cusum_regress").collect()
+    stream = _two_batches(df, "event_id > 22", str(tmp_path / "src"))
+    got = _to_memory(cusum_alerts(stream), "append").collect()
     # two drifted samples reach s = 80e6 < 100e6 threshold → no alert; the
     # dropped 50e6 samples would have tripped it instantly if folded
     assert got == []
@@ -773,25 +697,8 @@ def test_kalman_state_survives_batch_boundary(spark, tmp_path):
     ).select(
         "event_type", F.col("t").cast("timestamp").alias("ts"), "event_id", "v"
     )
-    src = str(tmp_path / "src")
-    df.where("event_id <= 2").coalesce(1).write.mode("append").parquet(src)
-    df.where("event_id > 2").coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        kalman_filtered(stream)
-        .writeStream.format("memory")
-        .queryName("kalman_boundary")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("kalman_boundary").orderBy("ts_epoch").collect()
+    stream = _two_batches(df, "event_id > 2", str(tmp_path / "src"))
+    got = _to_memory(kalman_filtered(stream), "append").orderBy("ts_epoch").collect()
     assert len(got) == 4
 
     # single-pass replica of the fold (identical expression tree)
@@ -838,27 +745,16 @@ def test_late_drop_counter_counts_frontier_drops(spark, tmp_path):
         "event_id",
         F.col("raw").alias("v"),
     )
-    src = str(tmp_path / "src")
-    df.where("event_id <= 12").coalesce(1).write.mode("append").parquet(src)
-    df.where("event_id > 12").coalesce(1).write.mode("append").parquet(src)
-
     drops = late_drop_counter(spark)
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
+    stream = _two_batches(df, "event_id > 12", str(tmp_path / "src"))
+    q = _drain(
         bollinger_alerts(stream, late_drops=drops)
         .writeStream.format("memory")
         .queryName("boll_drop_count")
         .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
     )
-    q.awaitTermination(120)
     got = spark.table("boll_drop_count").toPandas()
+    spark.catalog.dropTempView("boll_drop_count")
     assert list(got["v_micro"]) == [5000]
     assert drops.value == 2
     # the observe() metric surfaced per-batch rows_in in the progress log

@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from rugpull_data_pipeline_spark.plans.stream_infra import _to_memory
 from rugpull_data_pipeline_spark.streaming.pipelines import (
     session_windowed_counts,
     stream_stream_asof_purchases,
@@ -35,24 +36,11 @@ def _stream(spark, events_dir):
     return spark.readStream.schema(schema).parquet(events_dir)
 
 
-def _run_to_memory(df, name, mode):
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return q
-
-
 def test_windowed_counts_match_batch(spark, events_dir):
     stream = _stream(spark, events_dir)
-    _run_to_memory(windowed_counts(stream, "6 hours"), "win_counts", "append")
     got = {
         (r.win_start, r.event_type): r.n_events
-        for r in spark.table("win_counts").collect()
+        for r in _to_memory(windowed_counts(stream, "6 hours"), "append").collect()
     }
     batch = (
         spark.read.parquet(events_dir)
@@ -72,8 +60,7 @@ def test_windowed_counts_match_batch(spark, events_dir):
 
 def test_session_windows_bounded_and_exact(spark, events_dir):
     stream = _stream(spark, events_dir)
-    _run_to_memory(session_windowed_counts(stream, "1 hour"), "sess_counts", "append")
-    rows = spark.table("sess_counts").collect()
+    rows = _to_memory(session_windowed_counts(stream, "1 hour"), "append").collect()
     assert rows, "no sessions emitted"
     # Every emitted session's span must be consistent: end - start >= 0 and
     # events within a session are > 1 hour apart from the next session.
@@ -95,10 +82,7 @@ def test_stream_stream_interval_join_matches_batch(spark, events_dir):
     purchases = ev.where(F.col("event_type") == "purchase")
     views = ev.where(F.col("event_type") == "view")
     joined = stream_stream_asof_purchases(purchases, views, "1 hour")
-    _run_to_memory(joined, "ss_join", "append")
-    got = {
-        (r.p_event_id, r.v_ts) for r in spark.table("ss_join").collect()
-    }
+    got = {(r.p_event_id, r.v_ts) for r in _to_memory(joined, "append").collect()}
 
     b = spark.read.parquet(events_dir)
     bp = b.where(F.col("event_type") == "purchase").select(
@@ -132,8 +116,7 @@ def test_stream_stream_left_outer_join_null_pads(spark, events_dir):
     purchases = ev.where(F.col("event_type") == "purchase")
     views = ev.where(F.col("event_type") == "view")
     joined = stream_stream_left_outer_purchases(purchases, views, "1 hour")
-    _run_to_memory(joined, "ss_left_join", "append")
-    rows = spark.table("ss_left_join").collect()
+    rows = _to_memory(joined, "append").collect()
 
     b = spark.read.parquet(events_dir)
     bp = b.where(F.col("event_type") == "purchase").select(
