@@ -19,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from rugpull_data_pipeline_spark.plans import registry
 from rugpull_data_pipeline_spark.session import get_spark
-from tools.plan_fingerprint import fingerprint
+from tools.plan_fingerprint import plan_fp
 
 # Representative of every operator family: flagship chain, heavy aggregation,
 # multi-join, window, JSON extraction, dedup sketches, similarity search.
@@ -98,19 +98,6 @@ HEADLINE = [
 
 def run_noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
-
-
-def plan_fp(df) -> str:
-    """12-hex-char hash of the executed plan's operator-count fingerprint
-    (tools/plan_fingerprint.py). Recorded per headline query so every BENCH
-    artifact self-certifies whether its plans changed vs the prior round —
-    the round-8 +21% driver-bench drift was provably environmental only
-    because the diff happened to touch zero headline files; the fingerprint
-    makes that proof automatic (round-8 verdict item 3)."""
-    import hashlib
-
-    fp = fingerprint(df)
-    return hashlib.md5(json.dumps(fp, sort_keys=True).encode()).hexdigest()[:12]
 
 
 def main() -> None:

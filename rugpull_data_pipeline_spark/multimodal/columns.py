@@ -4,11 +4,10 @@ A 100 TB training-data pipeline treats media as binary payloads with a typed
 metadata struct; decode / feature-extract / resize / frame-sample run as
 Arrow-batched Pandas UDFs over ``mapInPandas``. The Spark-side plumbing here
 (schemas, partition-sized batching, UDF signatures, deterministic outputs)
-is real and tested; the actual codecs (PIL/ffmpeg/torchaudio) are NOT in
-this container, so the decode kernels are STUBS — a deterministic
-hash-derived fake behind ``use_stub=True`` (the default) and a clearly
-marked ``NotImplementedError`` otherwise. Swapping in a real codec changes
-only the inner function, never the plan shape.
+is real and tested; the actual codecs (PIL/ffmpeg/torchaudio) are not
+dependencies of this package, so the decode kernels are STUBS — a
+deterministic hash-derived fake. Swapping in a real codec changes only the
+inner function, never the plan shape.
 
 Scale notes: payloads never pass through the driver; each ``mapInPandas``
 batch holds ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, so
@@ -89,7 +88,7 @@ def _stub_features(payload: bytes, dim: int = _FEATURE_DIM) -> list[float]:
     ]
 
 
-def decode_image_features(df: DataFrame, use_stub: bool = True) -> DataFrame:
+def decode_image_features(df: DataFrame) -> DataFrame:
     """blob → fixed-size feature vector via mapInPandas (Arrow batches).
 
     The partition-parallel batch shape (pdf of N rows in, pdf of N rows out,
@@ -108,11 +107,6 @@ def decode_image_features(df: DataFrame, use_stub: bool = True) -> DataFrame:
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not use_stub:
-                raise NotImplementedError(
-                    "real image decode requires PIL/torchvision — not in this "
-                    "container; run with use_stub=True"
-                )
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -123,7 +117,7 @@ def decode_image_features(df: DataFrame, use_stub: bool = True) -> DataFrame:
     return df.select("doc_id", "blob").mapInPandas(mapper, schema)
 
 
-def sample_frames(df: DataFrame, every_n_bytes: int = 64, use_stub: bool = True) -> DataFrame:
+def sample_frames(df: DataFrame, every_n_bytes: int = 64) -> DataFrame:
     """Video frame-sampling plumbing: one input row → K frame rows
     (flatMap-shaped mapInPandas). The stub emits one 'frame' per
     ``every_n_bytes`` chunk with its offset; a real ffmpeg kernel would emit
@@ -141,10 +135,6 @@ def sample_frames(df: DataFrame, every_n_bytes: int = 64, use_stub: bool = True)
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not use_stub:
-                raise NotImplementedError(
-                    "real frame sampling requires ffmpeg — not in this container"
-                )
             out = {"doc_id": [], "frame_idx": [], "frame_hash": []}
             for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
                 for i in range(0, max(len(blob), 1), every_n_bytes):
@@ -169,7 +159,7 @@ def sample_frames(df: DataFrame, every_n_bytes: int = 64, use_stub: bool = True)
     return df.select("doc_id", "blob").mapInPandas(mapper, schema)
 
 
-def resize_blobs(df: DataFrame, target_bytes: int = 32, use_stub: bool = True) -> DataFrame:
+def resize_blobs(df: DataFrame, target_bytes: int = 32) -> DataFrame:
     """Image-resize plumbing: blob in, smaller blob out (mapInPandas).
 
     The stub 'resample' keeps every k-th byte (k = ceil(n/target)) — the
@@ -204,11 +194,6 @@ def resize_blobs(df: DataFrame, target_bytes: int = 32, use_stub: bool = True) -
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not use_stub:
-                raise NotImplementedError(
-                    "real image resize requires PIL — not in this container; "
-                    "run with use_stub=True"
-                )
             out = pdf["blob"].map(_resize)
             yield pd.DataFrame(
                 {
@@ -221,7 +206,7 @@ def resize_blobs(df: DataFrame, target_bytes: int = 32, use_stub: bool = True) -
     return df.select("doc_id", "blob").mapInPandas(mapper, schema)
 
 
-def window_energy(df: DataFrame, window_bytes: int = 32, use_stub: bool = True) -> DataFrame:
+def window_energy(df: DataFrame, window_bytes: int = 32) -> DataFrame:
     """Audio windowed-energy plumbing: blob in → one row per fixed-size
     window with its energy (sum of squared byte values, exact integer) —
     the frame-energy/VAD shape every audio pipeline starts with. A real
@@ -242,10 +227,6 @@ def window_energy(df: DataFrame, window_bytes: int = 32, use_stub: bool = True) 
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not use_stub:
-                raise NotImplementedError(
-                    "real frame energy requires an audio decoder — not in this container"
-                )
             out = {"doc_id": [], "win_idx": [], "win_len": [], "energy": []}
             for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
                 for i in range(0, max(len(blob), 1), window_bytes):
@@ -263,7 +244,7 @@ _PHASH_BITS = 64
 _PHASH_WORDS = 4  # 4 x 16-bit words (pigeonhole blocks for the near-dup join)
 
 
-def phash_words(df: DataFrame, use_stub: bool = True) -> DataFrame:
+def phash_words(df: DataFrame) -> DataFrame:
     """Perceptual-hash plumbing: blob → 64-bit average-hash as FOUR 16-bit
     words, long-form (doc_id, w, wv) — one row per word.
 
@@ -308,11 +289,6 @@ def phash_words(df: DataFrame, use_stub: bool = True) -> DataFrame:
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not use_stub:
-                raise NotImplementedError(
-                    "real perceptual hashing requires an image decoder — "
-                    "not in this container; run with use_stub=True"
-                )
             out = {"doc_id": [], "w": [], "wv": []}
             for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
                 for w, wv in enumerate(_words(blob)):

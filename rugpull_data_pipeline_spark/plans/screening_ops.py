@@ -32,7 +32,7 @@ facts aggregate to a bounded grid FIRST; pair counting rides cumulative
 windows over grids (never an n x n row join); exact bigint/decimal until
 the final statistic; ``_r6u`` half-up roundings; shared cores
 localCheckpointed so no query plans > 4 fact scans (the committed
-tools/scan_audit.py cap); constant fan-outs join on a literal key.
+tools/plan_fingerprint.py cap); constant fan-outs join on a literal key.
 """
 
 from __future__ import annotations

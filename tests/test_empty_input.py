@@ -9,10 +9,11 @@ The full classification sweep lives in tools/empty_sweep.py."""
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 
 from rugpull_data_pipeline_spark.plans import registry
-from rugpull_data_pipeline_spark.sources.tables import TABLES, register_views
+from tools.empty_sweep import apply_surface
 
 SF = "/root/testdata/sf0.001"
 
@@ -30,13 +31,12 @@ CASES = [
 
 @pytest.fixture
 def empty_views(spark):
-    """Real schemas (incl. event-time normalization), zero rows; the
-    registry view cache is pinned so builders don't re-register, and
-    popped afterwards so other tests get the real views back."""
-    register_views(spark, SF)
-    for t in TABLES:
-        spark.table(t).limit(0).createOrReplaceTempView(t)
-    registry._VIEWS_FOR[id(spark)] = SF
+    """The sweep's ``empty`` surface: real schemas (incl. event-time
+    normalization), zero rows, with the registry view cache pinned so
+    builders don't re-register; popped afterwards so other tests get the
+    real views back."""
+    with duckdb.connect() as con:
+        apply_surface(spark, con, SF, "empty")
     yield spark
     registry._VIEWS_FOR.pop(id(spark), None)
 

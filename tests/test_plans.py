@@ -11,6 +11,7 @@ import pytest
 from rugpull_data_pipeline_spark.plans import registry
 from rugpull_data_pipeline_spark.sources.tables import TABLES
 from tests.conftest import session_views
+from tools.plan_fingerprint import CAP, executed_plan, fact_scan_counts
 
 SF = "/root/testdata/sf0.001"
 
@@ -174,7 +175,7 @@ def _plan(spark, name: str) -> str:
     if name not in _PLAN_CACHE:
         before = session_views(spark)
         df = registry.get(name).builder(spark, SF)
-        _PLAN_CACHE[name] = df._jdf.queryExecution().executedPlan().toString()
+        _PLAN_CACHE[name] = executed_plan(df)
         left = session_views(spark) - before - set(TABLES)
         if left:
             _LEFT_VIEWS[name] = sorted(left)
@@ -474,8 +475,6 @@ def test_scan_count_cap_registry_wide(spark):
     construction). The remaining exactly-4-scan plans are individually
     named and justified in PLANS.md ("plan-scan audit"); no allowlist is
     needed because the cap holds everywhere."""
-    from tools.scan_audit import CAP, fact_scan_counts
-
     offenders = {}
     for name in registry.all_queries():
         if name.startswith("stream_") or "replay" in name:
@@ -497,7 +496,6 @@ def test_scan_guard_detects_inlined_class(spark):
         _mad_grid_core,
         _mad_screen,
     )
-    from tools.scan_audit import CAP, executed_plan, fact_scan_counts
 
     registry._ensure_views(spark, SF)
     bad = spark.sql(_mad_screen(SPARK, grid=_mad_grid_core(SPARK)))  # inlined

@@ -74,13 +74,6 @@ def test_decode_features_deterministic(spark, sf_dir):
     assert all(len(v) == 8 and all(0 <= x < 1 for x in v) for v in a.values())
 
 
-def test_decode_without_stub_raises(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(2)
-    blobs = attach_blob_column(docs)
-    with pytest.raises(Exception, match="NotImplementedError|real image decode"):
-        decode_image_features(blobs, use_stub=False).collect()
-
-
 def test_sample_frames_flatmap_shape(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(5)
     blobs = attach_blob_column(docs)
@@ -109,14 +102,6 @@ def test_resize_blobs_target_and_determinism(spark, sf_dir):
         k = max(1, -(-n_bytes[doc_id] // 32))
         assert out == -(-n_bytes[doc_id] // k)
         assert len(h) == 32  # md5 hex
-
-
-def test_resize_without_stub_raises(spark, sf_dir):
-    from rugpull_data_pipeline_spark.multimodal.columns import resize_blobs
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(2)
-    with pytest.raises(Exception, match="NotImplementedError|real image resize"):
-        resize_blobs(attach_blob_column(docs), use_stub=False).collect()
 
 
 def test_multimodal_oracles_byte_exact_on_non_ascii(spark):

@@ -1,5 +1,5 @@
-"""Empty-input robustness sweep: every registered query run against
-EMPTY tables, on both engines.
+"""Degenerate-input robustness sweep: every registered query run against
+one degenerate table surface, on both engines.
 
 At 100 TB some slice is always empty — a day partition with no events, a
 source with no documents after filtering. The round-6 divergence audit
@@ -24,21 +24,18 @@ Spark yields NaN/NULL). This sweep classifies every query:
     duck-err   DuckDB throws, Spark runs   (oracle landmine)
     both-err   both throw
 
-Modes (one per degenerate surface; default is empty tables):
+One mode per degenerate surface; `--help` lists each with what it found:
 
-    python tools/empty_sweep.py                  # zero-row tables
-    python tools/empty_sweep.py --null-values    # events.value all NULL
-    python tools/empty_sweep.py --zero-vectors   # embeddings all-zero
-    python tools/empty_sweep.py --empty-text     # documents.text all ''
-    python tools/empty_sweep.py --single-row     # min-key row per table
-    python tools/empty_sweep.py --hot-key        # all events on ONE user
-    python tools/empty_sweep.py --single-type    # all events one type
-    python tools/empty_sweep.py --constant-time  # all events.ts identical
-    python tools/empty_sweep.py --negative-values # events.value all < 0
-    python tools/empty_sweep.py --skewed-duplicates # Zipf keys x tied ts x tied values
-    python tools/empty_sweep.py --giant-payloads # 1 MB doc, 10^4-dim vectors, nested props
-    python tools/empty_sweep.py --unicode-text   # multilingual gauntlet on every doc
-    python tools/empty_sweep.py --duplicate-storm # every row of every table x8
+    python tools/empty_sweep.py                          # zero-row tables
+    python tools/empty_sweep.py --mode null-values       # events.value all NULL
+    python tools/empty_sweep.py --mode giant-payloads --only sim_ text_
+    python tools/empty_sweep.py --mode single-row --sf sf0.01 --start 120
+
+Each surface is written once, in SURFACES: per substituted table, one
+SELECT in dialect ``d`` over the table's source relation.
+``apply_surface`` renders it as the Spark temp view and as the DuckDB view,
+so both engines read the same rows by construction
+(tests/test_sweep_surfaces.py checks it for every mode).
 
 Exit 0 iff every query is `ok` or `explained`. (The round-6 self-sourced
 streaming-replay artifact class no longer exists: the replays read the
@@ -51,427 +48,306 @@ from __future__ import annotations
 import argparse
 import os
 import sys
+import textwrap
 import time
+from dataclasses import dataclass
+from typing import Callable
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SF = os.environ.get("SPARK_GRAFT_EMPTY_SF", "/root/testdata/sf0.001")
+from rugpull_data_pipeline_spark.functions.scalars import (  # noqa: E402
+    DUCK,
+    SPARK,
+    explode_seq,
+    idiv,
+    json_get,
+)
+from rugpull_data_pipeline_spark.sources.tables import TABLES  # noqa: E402
+
+# Per-engine watchdog: seconds one query may run before it is cancelled.
+DEADLINE_S = 420
+
+# One table's view under a surface: ``view(d, src, cols)`` is a SELECT in
+# dialect ``d`` over the relation ``src``, whose columns are ``cols``.
+View = Callable[[str, str, list], str]
+
+
+@dataclass(frozen=True)
+class Surface:
+    reason: str
+    views: dict[str, View]
+    checkpoint: tuple[str, ...] = ()  # Spark views pinned by localCheckpoint
+
+
+def _select(cols: list, src: str, tail: str = "", **replace: str) -> str:
+    """Every column of ``src`` in table order, ``replace``'s columns
+    swapped for their expressions: DuckDB's ``SELECT * REPLACE``, spelled
+    out because Spark has none."""
+    items = ", ".join(f"{replace[c]} AS {c}" if c in replace else c for c in cols)
+    return f"SELECT {items} FROM {src}{tail}"
+
+
+def _swap(table: str, **replace: str) -> dict[str, View]:
+    """One table with dialect-free column replacements."""
+    return {table: lambda d, src, cols: _select(cols, src, **replace)}
+
+
+def _retext(text: Callable[[str], str]) -> dict[str, View]:
+    """documents with a new ``text(d)`` and ``n_chars`` re-derived from it."""
+    return {
+        "documents": lambda d, src, cols: _select(
+            cols,
+            f"({_select(cols, src, text=text(d))}) t",
+            n_chars="cast(length(text) as bigint)",
+        )
+    }
+
+
+def _storm(key: str | None) -> View:
+    """Every row x8 with ``key`` offset per copy, far above every sf's key
+    domain (integer-exact in both engines)."""
+    replace = {} if key is None else {key: f"{key} + i * 1000000000000"}
+    return lambda d, src, cols: _select(
+        cols, src, " " + explode_seq("i", "0", "7", d), **replace
+    )
+
+
+_TS = "TIMESTAMP '2024-01-01 00:00:00'"
+_MIN_KEYS = {
+    "region": "r_regionkey", "nation": "n_nationkey",
+    "customer": "c_custkey", "supplier": "s_suppkey",
+    "part": "p_partkey", "orders": "o_orderkey",
+    "lineitem": "l_orderkey, l_linenumber", "events": "event_id",
+    "documents": "doc_id", "embeddings": "vec_id",
+}
+# Pinned code points from python escapes, inlined as one UTF-8 literal in
+# both dialects (DuckDB forbids bound params in CREATE VIEW); it holds no
+# quote or backslash by construction. ASCII-space separated so tokenizers
+# see ordinary tokens. No NULs or lone surrogates: those are not valid
+# parquet/UTF-8 payloads, not an engine-divergence class.
+_GAUNTLET = (
+    "caf\u00e9 cafe\u0301 "  # precomposed vs combining acute
+    "\U0001f9ea\U0001f600 "  # non-BMP emoji (4-byte UTF-8)
+    "漢字 "  # CJK
+    "Στίγμας "  # Greek, final sigma
+    "слово "  # Cyrillic
+    "שלום "  # RTL Hebrew
+    "İstanbul ß "  # dotted-I + eszett case traps
+    "１２３"  # full-width digits
+)
+
+SURFACES: dict[str, Surface] = {
+    "empty": Surface(
+        "every table with its real schema (incl. the event-time "
+        "normalization) and zero rows (the round-6 surface: every "
+        "driver-side collect()-seeded iteration crashed on it, and "
+        "x / count(*) throws on ANSI Spark where DuckDB returns NULL)",
+        {t: lambda d, src, cols: _select(cols, src, " WHERE 1 = 0") for t in TABLES},
+    ),
+    "null-values": Surface(
+        "real tables but events.value all NULL (count(*) > 0 while "
+        "count(value) = 0 — a different degenerate surface; found the EWMA "
+        "weight-sum ANSI divide)",
+        _swap("events", value="cast(NULL as double)"),
+    ),
+    "zero-vectors": Surface(
+        "real tables but every embedding all-zero (0-norm cosine surface; "
+        "found 10 unguarded cosine divisions in the similarity family)",
+        {"embeddings": lambda d, src, cols: _select(cols, src, embedding=(
+            "transform" if d == SPARK else "list_transform"
+        ) + "(embedding, x -> cast(0.0 as float))")},
+    ),
+    "empty-text": Surface(
+        "real tables but documents.text all '' (single-empty-token "
+        "surface; found the PMI descending-sequence ANSI element_at and "
+        "the 1-term Zipf-fit divide)",
+        _swap("documents", text="''", n_chars="0"),
+    ),
+    "single-row": Surface(
+        "every table cut to its min-key row (single-point statistics "
+        "surface; found 7 single-class/empty-arm ANSI divides: AUC, "
+        "threshold sweep, Brier skill, ridge R2, KS, Simpson rates, "
+        "1-centroid kmeans least())",
+        {
+            t: lambda d, src, cols, k=k: _select(cols, src, f" ORDER BY {k} LIMIT 1")
+            for t, k in _MIN_KEYS.items()
+        },
+        checkpoint=TABLES,
+    ),
+    "hot-key": Surface(
+        "real tables but every event on ONE user_id (the maximal-skew "
+        "surface: a single giant per-user window partition, one group in "
+        "user-keyed aggs, one graph node fan-in; durable form of the "
+        "round-6 hot-key probes)",
+        _swap("events", user_id="cast(1 as bigint)"),
+    ),
+    "single-type": Surface(
+        "real tables but every event_type 'click' (single-category "
+        "surface: no transition diversity for Markov/graph edges, one "
+        "stratum for samplers, one class for evals; durable form of the "
+        "round-6 single-type probes)",
+        _swap("events", event_type="'click'"),
+    ),
+    "constant-time": Surface(
+        "real tables but every events.ts the SAME instant (zero time "
+        "spread: every daily/hourly grid collapses to one bucket, "
+        "interarrival gaps are 0, window spans are a point — the "
+        "constant-TIME complement of the constant-value surfaces)",
+        _swap("events", ts=_TS),
+    ),
+    "negative-values": Surface(
+        "real tables but every events.value strictly negative "
+        "(-abs(value)-1): drives every signed-division, sqrt-of-sum and "
+        "ln(value) path corpus-wide — DuckDB THROWS on sqrt/ln of negatives "
+        "where Spark yields NaN/NULL, the r6 divergence matrix's other half)",
+        _swap("events", value="-abs(value) - 1.0"),
+    ),
+    "skewed-duplicates": Surface(
+        "Zipf-distributed duplicate KEYS with tied timestamps AND tied "
+        "values — hot-key x constant-time x constant-value combined "
+        "(user_id = 1000 // (1 + event_id % 1000): key 1 carries ~half "
+        "the rows, harmonic tail; one shared ts instant; one shared "
+        "value). Targets order-dependent tie-breaks in top-k/rank/argmax/"
+        "fold queries: with every ordering column tied, any "
+        "nondeterministic winner diverges between engines (the surface "
+        "class that caught the r7 price-fold emission bug)",
+        {"events": lambda d, src, cols: _select(
+            cols, src,
+            user_id=idiv("1000", "1 + (event_id % 1000)", d),
+            ts=_TS,
+            value="cast(7.5 as double)",
+        )},
+    ),
+    "giant-payloads": Surface(
+        "pathological per-row PAYLOAD sizes — doc_id 42's text inflated "
+        "past 1 MB (token-preserving repeat; exactly ONE giant so the "
+        "length-bucketed Levenshtein block can never meet two megabyte "
+        "strings), EVERY embedding repeated to 10,048 elements (uniform "
+        "dim — mixed dims would probe engine zip padding, not a real "
+        "corpus shape), and a 12-level JSON subtree hung next to "
+        "events.props' $.k (queries hard-cast $.k, so the surface tests "
+        "parser depth and row width, not a schema break). The ten prior "
+        "surfaces stress keys/values/time; none stressed per-row payload "
+        "size — the remaining 100 TB corpus hazard class (a giant-row OOM "
+        "or a quadratic per-row array op hides at sf0.01)",
+        {
+            **_retext(lambda d: (
+                "CASE WHEN doc_id = 42 AND length(text) > 0 THEN repeat("
+                f"text || ' ', cast(1 + {idiv('1048576', 'length(text) + 1', d)}"
+                " as int)) ELSE text END"
+            )),
+            "embeddings": lambda d, src, cols: _select(cols, src, embedding=(
+                "flatten(array_repeat(embedding, 157))" if d == SPARK
+                else "flatten(list_transform(range(157), x -> embedding))"
+            )),
+            "events": lambda d, src, cols: _select(cols, src, props=(
+                "'{\"k\": ' || coalesce(" + json_get("props", "k", d)
+                + ", 'null') || ', \"nest\": ' || repeat('{\"a\":', 12)"
+                " || '1' || repeat('}', 12) || '}'"
+            )),
+        },
+        checkpoint=("documents",),
+    ),
+    "unicode-text": Surface(
+        "every documents.text prefixed with a fixed multilingual gauntlet "
+        "— combining marks vs precomposed (cafe\\u0301 vs caf\\u00e9), "
+        "4-byte non-BMP emoji (surrogate pairs in UTF-16 engines), CJK, "
+        "Greek, Cyrillic, RTL Hebrew, Turkish dotted-I and German eszett "
+        "(the classic case-mapping traps), full-width digits — the eleven "
+        "prior surfaces stress keys/values/time/payload-SIZE; none "
+        "stressed payload CONTENT encoding, where code-point vs byte vs "
+        "grapheme length, case mapping, and regex word-class semantics can "
+        "silently diverge between engines over a real multilingual 100 TB "
+        "corpus",
+        _retext(lambda d: f"'{_GAUNTLET} ' || text"),
+        checkpoint=("documents",),
+    ),
+    "duplicate-storm": Surface(
+        "every row of the FACT/corpus tables (lineitem, events, documents, "
+        "embeddings) duplicated 8x with byte-identical CONTENT but FRESH "
+        "surrogate ids (event_id/doc_id/vec_id offset per copy) — the real "
+        "crawled-corpus multiplicity scenario: the same document, event, "
+        "or vector arriving many times under different identities. "
+        "Identity columns must stay unique because ~23 operators carry key "
+        "contracts on them (dedup fixpoints, winnowing, stateful replays, "
+        "blob fixtures keyed by doc_id) and a COLLIDING duplicate makes "
+        "builder-vs-oracle algebra legitimately disagree — that tests the "
+        "surface, not the engines. Dims keep their primary keys for the "
+        "same reason (agg-then-join vs join-then-agg multiplicity, seen on "
+        "the flagship builder). Targets: count-sensitive statistics with "
+        "x8 multiplicities, dedup operators on exact-duplicate CONTENT (the "
+        "thing they exist for), rank/top-k with >k content-identical "
+        "candidates, and self-join fan-out guards (8x rows -> 64x "
+        "candidate pairs; caps and DISTINCT-first pair builds must absorb "
+        "it)",
+        {
+            "lineitem": _storm(None),
+            "events": _storm("event_id"),
+            "documents": _storm("doc_id"),
+            "embeddings": _storm("vec_id"),
+        },
+    ),
+}
+
+
+def apply_surface(spark, con, sf_dir: str, mode: str) -> None:
+    """Register surface ``mode`` of the ``sf_dir`` tables on both engines:
+    Spark temp views over the real views, DuckDB views over the parquet
+    files. Pins the registry's view cache to ``sf_dir`` so builders read
+    the substituted views instead of re-registering the real ones."""
+    from rugpull_data_pipeline_spark.plans import registry
+    from rugpull_data_pipeline_spark.sources.tables import register_views
+
+    surface = SURFACES[mode]
+    register_views(spark, sf_dir)
+    for t in TABLES:
+        src = f"read_parquet('{sf_dir}/{t}.parquet')"
+        view = surface.views.get(t)
+        if view is None:
+            con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM {src}")
+            continue
+        cols = spark.table(t).columns
+        con.execute(f"CREATE OR REPLACE VIEW {t} AS {view(DUCK, src, cols)}")
+        df = spark.sql(view(SPARK, t, cols))
+        if t in surface.checkpoint:
+            df = df.localCheckpoint()
+        df.createOrReplaceTempView(t)
+    registry._VIEWS_FOR[id(spark)] = sf_dir
+
+
+def _parser() -> argparse.ArgumentParser:
+    modes = "\n".join(
+        textwrap.fill(f"{m}: {s.reason}", 78, initial_indent="  ", subsequent_indent="    ")
+        for m, s in SURFACES.items()
+    )
+    ap = argparse.ArgumentParser(
+        description=__doc__,
+        epilog="modes:\n" + modes,
+        formatter_class=argparse.RawDescriptionHelpFormatter,
+    )
+    ap.add_argument("--mode", choices=list(SURFACES), default="empty",
+                    help="degenerate surface (see modes below)")
+    ap.add_argument("--sf", default="sf0.001",
+                    help="testdata scale dir name, or a path")
+    ap.add_argument("--only", nargs="*", default=None, help="name-prefix filter")
+    ap.add_argument("--start", type=int, default=0)
+    return ap
 
 
 def main() -> int:
-    ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("--only", nargs="*", default=None, help="name-prefix filter")
-    ap.add_argument("--start", type=int, default=0)
-    ap.add_argument(
-        "--null-values",
-        action="store_true",
-        help="instead of empty tables: real tables but events.value all NULL "
-        "(count(*) > 0 while count(value) = 0 — a different degenerate "
-        "surface; found the EWMA weight-sum ANSI divide)",
-    )
-    ap.add_argument(
-        "--zero-vectors",
-        action="store_true",
-        help="instead of empty tables: real tables but every embedding "
-        "all-zero (0-norm cosine surface; found 10 unguarded cosine "
-        "divisions in the similarity family)",
-    )
-    ap.add_argument(
-        "--empty-text",
-        action="store_true",
-        help="instead of empty tables: real tables but documents.text all "
-        "'' (single-empty-token surface; found the PMI descending-"
-        "sequence ANSI element_at and the 1-term Zipf-fit divide)",
-    )
-    ap.add_argument(
-        "--single-row",
-        action="store_true",
-        help="instead of empty tables: every table cut to its min-key row "
-        "(single-point statistics surface; found 7 single-class/empty-"
-        "arm ANSI divides: AUC, threshold sweep, Brier skill, ridge R2, "
-        "KS, Simpson rates, 1-centroid kmeans least())",
-    )
-    ap.add_argument(
-        "--hot-key",
-        action="store_true",
-        help="instead of empty tables: real tables but every event on ONE "
-        "user_id (the maximal-skew surface: a single giant per-user "
-        "window partition, one group in user-keyed aggs, one graph node "
-        "fan-in; durable form of the round-6 hot-key probes)",
-    )
-    ap.add_argument(
-        "--single-type",
-        action="store_true",
-        help="instead of empty tables: real tables but every event_type "
-        "'click' (single-category surface: no transition diversity for "
-        "Markov/graph edges, one stratum for samplers, one class for "
-        "evals; durable form of the round-6 single-type probes)",
-    )
-    ap.add_argument(
-        "--constant-time",
-        action="store_true",
-        help="instead of empty tables: real tables but every events.ts the "
-        "SAME instant (zero time spread: every daily/hourly grid collapses "
-        "to one bucket, interarrival gaps are 0, window spans are a point "
-        "— the constant-TIME complement of the constant-value surfaces)",
-    )
-    ap.add_argument(
-        "--negative-values",
-        action="store_true",
-        help="instead of empty tables: real tables but every events.value "
-        "strictly negative (-abs(value)-1): drives every signed-division, "
-        "sqrt-of-sum and ln(value) path corpus-wide — DuckDB THROWS on "
-        "sqrt/ln of negatives where Spark yields NaN/NULL, the r6 "
-        "divergence matrix's other half)",
-    )
-    ap.add_argument(
-        "--skewed-duplicates",
-        action="store_true",
-        help="instead of empty tables: Zipf-distributed duplicate KEYS with "
-        "tied timestamps AND tied values — hot-key x constant-time x "
-        "constant-value combined (user_id = 1000 // (1 + event_id %% "
-        "1000): key 1 carries ~half the rows, harmonic tail; one shared "
-        "ts instant; one shared value). Targets order-dependent "
-        "tie-breaks in top-k/rank/argmax/fold queries: with every "
-        "ordering column tied, any nondeterministic winner diverges "
-        "between engines (the surface class that caught the r7 "
-        "price-fold emission bug)",
-    )
-    ap.add_argument(
-        "--giant-payloads",
-        action="store_true",
-        help="instead of empty tables: pathological per-row PAYLOAD sizes — "
-        "doc_id 42's text inflated past 1 MB (token-preserving repeat; "
-        "exactly ONE giant so the length-bucketed Levenshtein block can "
-        "never meet two megabyte strings), EVERY embedding repeated to "
-        "10,048 elements (uniform dim — mixed dims would probe engine "
-        "zip padding, not a real corpus shape), and events.props wrapped "
-        "in 10 levels of JSON nesting. The ten prior surfaces stress "
-        "keys/values/time; none stressed per-row payload size — the "
-        "remaining 100 TB corpus hazard class (a giant-row OOM or a "
-        "quadratic per-row array op hides at sf0.01)",
-    )
-    ap.add_argument(
-        "--unicode-text",
-        action="store_true",
-        help="instead of empty tables: every documents.text prefixed with a "
-        "fixed multilingual gauntlet — combining marks vs precomposed "
-        "(cafe\\u0301 vs caf\\u00e9), 4-byte non-BMP emoji (surrogate "
-        "pairs in UTF-16 engines), CJK, Greek, Cyrillic, RTL Hebrew, "
-        "Turkish dotted-I and German eszett (the classic case-mapping "
-        "traps), full-width digits — the eleven prior surfaces stress "
-        "keys/values/time/payload-SIZE; none stressed payload CONTENT "
-        "encoding, where code-point vs byte vs grapheme length, case "
-        "mapping, and regex word-class semantics can silently diverge "
-        "between engines over a real multilingual 100 TB corpus",
-    )
-    ap.add_argument(
-        "--duplicate-storm",
-        action="store_true",
-        help="instead of empty tables: every row of the FACT/corpus "
-        "tables (lineitem, events, documents, embeddings) duplicated 8x "
-        "with byte-identical CONTENT but FRESH surrogate ids (event_id/"
-        "doc_id/vec_id offset per copy) — the real crawled-corpus "
-        "multiplicity scenario: the same document, event, or vector "
-        "arriving many times under different identities. Identity "
-        "columns must stay unique because ~23 operators carry key "
-        "contracts on them (dedup fixpoints, winnowing, stateful "
-        "replays, blob fixtures keyed by doc_id) and a COLLIDING "
-        "duplicate makes builder-vs-oracle algebra legitimately "
-        "disagree — that tests the surface, not the engines. Dims keep "
-        "their primary keys for the same reason (agg-then-join vs "
-        "join-then-agg multiplicity, seen on the flagship builder). "
-        "Targets: count-sensitive statistics with x8 multiplicities, "
-        "dedup operators on exact-duplicate CONTENT (the thing they "
-        "exist for), rank/top-k with >k content-identical candidates, "
-        "and self-join fan-out guards (8x rows -> 64x candidate pairs; "
-        "caps and DISTINCT-first pair builds must absorb it)",
-    )
-    args = ap.parse_args()
+    args = _parser().parse_args()
 
     import duckdb
 
     import __spark_entry__ as e
     from rugpull_data_pipeline_spark.plans import registry
     from rugpull_data_pipeline_spark.session import get_spark
-    from rugpull_data_pipeline_spark.sources.tables import TABLES, register_views
 
-    from pyspark.sql import functions as F
-
+    sf_dir = os.path.join("/root/testdata", args.sf)
     spark = get_spark(app_name="empty-sweep")
-    # real schemas (incl. the event-time normalization), zero rows; then pin
-    # the registry's view cache so builders don't re-register the full views
-    register_views(spark, SF)
     con = duckdb.connect()
-    if args.duplicate_storm:
-        # 8x content duplication with fresh surrogate ids on BOTH
-        # engines (see the --duplicate-storm help). Offsets are far
-        # above every sf's key domain, integer-exact in both engines.
-        id_col = {"events": "event_id", "documents": "doc_id",
-                  "embeddings": "vec_id", "lineitem": None}
-        for t in TABLES:
-            if t not in id_col:
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM"
-                    f" read_parquet('{SF}/{t}.parquet')"
-                )
-                continue
-            key = id_col[t]
-            dup = spark.table(t).withColumn(
-                "_dup", F.explode(F.expr("sequence(0, 7)"))
-            )
-            if key is not None:
-                dup = dup.withColumn(
-                    key,
-                    F.col(key) + F.col("_dup") * F.lit(10**12).cast("long"),
-                )
-            dup.drop("_dup").createOrReplaceTempView(t)
-            if key is None:
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT t.* FROM"
-                    f" read_parquet('{SF}/{t}.parquet') t,"
-                    " range(8) AS d(i)"
-                )
-            else:
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT t.* REPLACE"
-                    f" (t.{key} + d.i * 1000000000000 AS {key}) FROM"
-                    f" read_parquet('{SF}/{t}.parquet') t,"
-                    " range(8) AS d(i)"
-                )
-    elif args.skewed_duplicates:
-        # All three tie surfaces at once: Zipf-skewed duplicate keys,
-        # one shared timestamp, one shared value. Integer-only key math so
-        # both engines derive the identical distribution.
-        spark.table("events").withColumns(
-            {
-                "user_id": F.expr("1000 div (1 + (event_id % 1000))"),
-                "ts": F.lit("2024-01-01 00:00:00").cast("timestamp"),
-                "value": F.lit(7.5),
-            }
-        ).createOrReplaceTempView("events")
-        for t in TABLES:
-            if t == "events":
-                con.execute(
-                    "CREATE VIEW events AS SELECT * REPLACE ("
-                    "1000 // (1 + (event_id % 1000)) AS user_id, "
-                    "TIMESTAMP '2024-01-01 00:00:00' AS ts, "
-                    "7.5 AS value)"
-                    f" FROM read_parquet('{SF}/events.parquet')"
-                )
-            else:
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM"
-                    f" read_parquet('{SF}/{t}.parquet')"
-                )
-    elif args.giant_payloads:
-        # Token-preserving inflation: text || ' ' repeated until >= 1 MiB.
-        # Integer-only repeat-count math (div) so both engines build the
-        # byte-identical string; n_chars re-derived from the new text.
-        rep = "cast(1 + (1048576 div (length(text) + 1)) as int)"
-        spark.table("documents").withColumn(
-            "text",
-            F.expr(
-                "CASE WHEN doc_id = 42 AND length(text) > 0 "
-                f"THEN repeat(concat(text, ' '), {rep}) ELSE text END"
-            ),
-        ).withColumn("n_chars", F.length("text").cast("long")).localCheckpoint(
-        ).createOrReplaceTempView("documents")
-        spark.table("embeddings").withColumn(
-            "embedding", F.expr("flatten(array_repeat(embedding, 157))")
-        ).createOrReplaceTempView("embeddings")
-        # Keep the corpus's $.k contract intact (queries hard-cast it) and
-        # hang a 12-level subtree NEXT to it — the surface tests parser
-        # depth and row width, not a schema break.
-        spark.table("events").withColumn(
-            "props",
-            F.expr(
-                "concat('{\"k\": ',"
-                " coalesce(get_json_object(props, '$.k'), 'null'),"
-                " ', \"nest\": ', repeat('{\"a\":', 12), '1',"
-                " repeat('}', 12), '}')"
-            ),
-        ).createOrReplaceTempView("events")
-        for t in TABLES:
-            if t == "documents":
-                con.execute(
-                    "CREATE VIEW documents AS SELECT * REPLACE"
-                    " (cast(length(text) as bigint) AS n_chars) FROM ("
-                    "SELECT * REPLACE (CASE WHEN doc_id = 42 AND length(text) > 0"
-                    " THEN repeat(text || ' ',"
-                    " cast(1 + (1048576 // (length(text) + 1)) as int))"
-                    " ELSE text END AS text)"
-                    f" FROM read_parquet('{SF}/documents.parquet')) t"
-                )
-            elif t == "embeddings":
-                con.execute(
-                    "CREATE VIEW embeddings AS SELECT vec_id,"
-                    " flatten(list_transform(range(157), x -> embedding))"
-                    " AS embedding, label"
-                    f" FROM read_parquet('{SF}/embeddings.parquet')"
-                )
-            elif t == "events":
-                con.execute(
-                    "CREATE VIEW events AS SELECT * REPLACE"
-                    " ('{\"k\": ' ||"
-                    " coalesce(json_extract_string(props, '$.k'), 'null') ||"
-                    " ', \"nest\": ' || repeat('{\"a\":', 12) || '1' ||"
-                    " repeat('}', 12) || '}' AS props)"
-                    f" FROM read_parquet('{SF}/events.parquet')"
-                )
-            else:
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM"
-                    f" read_parquet('{SF}/{t}.parquet')"
-                )
-    elif args.unicode_text:
-        # One fixed gauntlet prefixed to EVERY document, built from python
-        # escapes so the exact code points are pinned in source; passed to
-        # both engines as a parameter/UTF-8 literal so the bytes are
-        # identical by construction. ASCII-space separated so tokenizers
-        # see it as ordinary tokens. No NULs or lone surrogates: those are
-        # not valid parquet/UTF-8 payloads, not an engine-divergence class.
-        gauntlet = (
-            "caf\u00e9 cafe\u0301 "  # precomposed vs combining acute
-            "\U0001f9ea\U0001f600 "  # non-BMP emoji (4-byte UTF-8)
-            "漢字 "  # CJK
-            "Στίγμας "  # Greek, final sigma
-            "слово "  # Cyrillic
-            "שלום "  # RTL Hebrew
-            "İstanbul ß "  # dotted-I + eszett case traps
-            "１２３"  # full-width digits
-        )
-        spark.table("documents").withColumn(
-            "text", F.concat(F.lit(gauntlet + " "), F.col("text"))
-        ).withColumn("n_chars", F.length("text").cast("long")).localCheckpoint(
-        ).createOrReplaceTempView("documents")
-        for t in TABLES:
-            if t == "documents":
-                # Inline literal (DuckDB forbids bound params in CREATE
-                # VIEW); the gauntlet contains no quotes by construction.
-                con.execute(
-                    "CREATE VIEW documents AS SELECT * REPLACE"
-                    " (cast(length(text) as bigint) AS n_chars) FROM ("
-                    f"SELECT * REPLACE ('{gauntlet} ' || text AS text)"
-                    f" FROM read_parquet('{SF}/documents.parquet')) t"
-                )
-            else:
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM"
-                    f" read_parquet('{SF}/{t}.parquet')"
-                )
-    elif (args.hot_key or args.single_type or args.constant_time
-            or args.negative_values):
-        if args.hot_key:
-            col, lit_spark, lit_duck = (
-                "user_id", F.lit(1).cast("long"), "cast(1 as bigint) AS user_id"
-            )
-        elif args.single_type:
-            col, lit_spark, lit_duck = (
-                "event_type", F.lit("click"), "'click' AS event_type"
-            )
-        elif args.negative_values:
-            col, lit_spark, lit_duck = (
-                "value",
-                -F.abs(F.col("value")) - F.lit(1.0),
-                "-abs(value) - 1.0 AS value",
-            )
-        else:
-            col, lit_spark, lit_duck = (
-                "ts",
-                F.lit("2024-01-01 00:00:00").cast("timestamp"),
-                "TIMESTAMP '2024-01-01 00:00:00' AS ts",
-            )
-        spark.table("events").withColumn(col, lit_spark).createOrReplaceTempView(
-            "events"
-        )
-        for t in TABLES:
-            if t == "events":
-                con.execute(
-                    f"CREATE VIEW events AS SELECT * REPLACE ({lit_duck})"
-                    f" FROM read_parquet('{SF}/events.parquet')"
-                )
-            else:
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM"
-                    f" read_parquet('{SF}/{t}.parquet')"
-                )
-    elif args.null_values:
-        spark.table("events").withColumn(
-            "value", F.lit(None).cast("double")
-        ).createOrReplaceTempView("events")
-        for t in TABLES:
-            if t == "events":
-                con.execute(
-                    "CREATE VIEW events AS SELECT * REPLACE"
-                    " (cast(NULL as double) AS value)"
-                    f" FROM read_parquet('{SF}/events.parquet')"
-                )
-            else:
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM"
-                    f" read_parquet('{SF}/{t}.parquet')"
-                )
-    elif args.single_row:
-        keys = {
-            "region": "r_regionkey", "nation": "n_nationkey",
-            "customer": "c_custkey", "supplier": "s_suppkey",
-            "part": "p_partkey", "orders": "o_orderkey",
-            "lineitem": "l_orderkey, l_linenumber", "events": "event_id",
-            "documents": "doc_id", "embeddings": "vec_id",
-        }
-        for t in TABLES:
-            spark.sql(
-                f"SELECT * FROM {t} ORDER BY {keys[t]} LIMIT 1"
-            ).localCheckpoint().createOrReplaceTempView(t)
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM"
-                f" read_parquet('{SF}/{t}.parquet')"
-                f" ORDER BY {keys[t]} LIMIT 1"
-            )
-    elif args.empty_text:
-        spark.table("documents").withColumn("text", F.lit("")).withColumn(
-            "n_chars", F.lit(0)
-        ).createOrReplaceTempView("documents")
-        for t in TABLES:
-            if t == "documents":
-                con.execute(
-                    "CREATE VIEW documents AS SELECT * REPLACE"
-                    " ('' AS text, 0 AS n_chars)"
-                    f" FROM read_parquet('{SF}/documents.parquet')"
-                )
-            else:
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM"
-                    f" read_parquet('{SF}/{t}.parquet')"
-                )
-    elif args.zero_vectors:
-        spark.table("embeddings").withColumn(
-            "embedding", F.expr("transform(embedding, x -> cast(0.0 as float))")
-        ).createOrReplaceTempView("embeddings")
-        for t in TABLES:
-            if t == "embeddings":
-                con.execute(
-                    "CREATE VIEW embeddings AS SELECT vec_id,"
-                    " list_transform(embedding, x -> cast(0.0 as float))"
-                    " AS embedding, label"
-                    f" FROM read_parquet('{SF}/embeddings.parquet')"
-                )
-            else:
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM"
-                    f" read_parquet('{SF}/{t}.parquet')"
-                )
-    else:
-        for t in TABLES:
-            spark.table(t).limit(0).createOrReplaceTempView(t)
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM"
-                f" read_parquet('{SF}/{t}.parquet') WHERE 1 = 0"
-            )
-    registry._VIEWS_FOR[id(spark)] = SF
+    apply_surface(spark, con, sf_dir, args.mode)
 
     qs, osql = e.queries(), e.oracle_sql()
     names = [
@@ -479,6 +355,8 @@ def main() -> int:
         for n in qs
         if args.only is None or any(n.startswith(p) for p in args.only)
     ][args.start :]
+
+    print(f"mode {args.mode}: {len(names)} queries over {sf_dir}", flush=True)
 
     sys.path.insert(0, os.path.join(REPO, "tests"))
     from oracle_harness import compare as _value_compare
@@ -488,8 +366,6 @@ def main() -> int:
     # not block the whole sweep. DuckDB honors con.interrupt() from
     # another thread; Spark honors cancelJobGroup.
     import threading
-
-    deadline_s = int(os.environ.get("SPARK_GRAFT_SWEEP_TIMEOUT", "420"))
 
     def _with_deadline(run, cancel, drain=None):
         # Round-9 ADVICE race fix: the timer callback checks a done flag
@@ -513,7 +389,7 @@ def main() -> int:
                 except Exception:  # noqa: BLE001 - watchdog must not raise
                     pass
 
-        timer = threading.Timer(deadline_s, _cancel)
+        timer = threading.Timer(DEADLINE_S, _cancel)
         timer.start()
         try:
             result, err = run(), None
@@ -530,7 +406,7 @@ def main() -> int:
                     drain()
                 except Exception:  # noqa: BLE001 - swallowing the poison
                     pass
-            err = f"TIMEOUT>{deadline_s}s: " + (err or "cancelled")
+            err = f"TIMEOUT>{DEADLINE_S}s: " + (err or "cancelled")
             result = None
         return result, err
 
@@ -540,7 +416,7 @@ def main() -> int:
         group = f"sweep-{name}"
         spark.sparkContext.setJobGroup(group, name, interruptOnCancel=True)
         s_pdf, s_err = _with_deadline(
-            lambda: qs[name](spark, SF).toPandas(),
+            lambda: qs[name](spark, sf_dir).toPandas(),
             lambda: spark.sparkContext.cancelJobGroup(group),
         )
         d_pdf = d_err = None
@@ -585,7 +461,7 @@ def main() -> int:
             flush=True,
         )
 
-    print("\nEMPTY SWEEP SUMMARY")
+    print(f"\nEMPTY SWEEP SUMMARY (mode {args.mode})")
     for kind in ("ok", "explained", "val-diff", "rows-diff",
                  "spark-err", "duck-err", "both-err"):
         if kind in tallies:

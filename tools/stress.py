@@ -47,10 +47,6 @@ _REPLICATED = {
 # and a stale _DONE marker would silently reuse a copy missing the newly
 # replicated table.
 _LAYOUT_V = 2
-_ALL_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
 
 
 def build_stress_dir(sf_dir: str, factor: int) -> str:
@@ -64,9 +60,11 @@ def build_stress_dir(sf_dir: str, factor: int) -> str:
         return out
     import duckdb
 
+    from rugpull_data_pipeline_spark.sources.tables import TABLES
+
     os.makedirs(out, exist_ok=True)
     con = duckdb.connect()
-    for name in _ALL_TABLES:
+    for name in TABLES:
         src = os.path.join(sf_dir, f"{name}.parquet")
         dst = os.path.join(out, f"{name}.parquet")
         if os.path.lexists(dst):
@@ -107,7 +105,7 @@ def main() -> int:
     ap.add_argument("--testdata", default="/root/testdata")
     ap.add_argument("--factor", type=int, default=64)
     ap.add_argument("--runs", type=int, default=2, help="best-of runs per scale")
-    ap.add_argument("--window", action="store_true", help="first 50 (driver window)")
+    ap.add_argument("--window", action="store_true", help="first registry.DRIVER_WINDOW queries")
     ap.add_argument("--only", nargs="*", default=None, help="name-prefix filters")
     ap.add_argument("--names", nargs="*", default=None, help="exact query names")
     ap.add_argument("--skip-base", action="store_true", help="skip the 1x timing")
@@ -120,7 +118,7 @@ def main() -> int:
     sf_dir = os.path.join(args.testdata, args.sf)
     names = list(registry.all_queries())
     if args.window:
-        names = names[:50]
+        names = names[: registry.DRIVER_WINDOW]
     if args.only:
         names = [n for n in names if any(n.startswith(p) for p in args.only)]
     if args.names:
