@@ -122,15 +122,22 @@ def read_block_stream(
     return reader.json(path_glob).select("result.*")
 
 
+# A transaction ``tx``'s key sequence (the ``keyed`` CTE below says how it
+# is indexed), written once for the extraction chain and ``transactions``.
+_KEYS = """concat(
+            coalesce(tx.transaction.message.accountKeys, array()),
+            coalesce(tx.meta.loadedAddresses.readonly, array()),
+            coalesce(tx.meta.loadedAddresses.writable, array()))"""
+
 # The DuckDB oracle's CTE chain as one Spark SQL statement, analysed once.
 # Built from DataFrame and Column calls, the same plan takes ~90 py4j round
 # trips that each re-analyse the growing plan, which on a one-block stream
 # micro-batch costs more than the scan.
-_EXTRACT_SQL = """
+_EXTRACT_SQL = f"""
 WITH tx AS (
     SELECT to_timestamp(from_unixtime(blockTime)) AS ts,
         explode(transactions) AS tx
-    FROM {blocks}
+    FROM {{blocks}}
 ),
 keyed AS (
     -- One concatenated key sequence with continuous indexing:
@@ -138,10 +145,7 @@ keyed AS (
     -- (stage2_processing.cpp:366-389).
     SELECT ts,
         tx.transaction.signatures[0] AS signature,
-        concat(
-            coalesce(tx.transaction.message.accountKeys, array()),
-            coalesce(tx.meta.loadedAddresses.readonly, array()),
-            coalesce(tx.meta.loadedAddresses.writable, array())) AS all_keys,
+        {_KEYS} AS all_keys,
         tx.meta.preTokenBalances AS pre,
         tx.meta.postTokenBalances AS post
     FROM tx
@@ -190,6 +194,25 @@ SELECT wallet, signature, mint,
 FROM resolved
 GROUP BY signature, wallet, mint
 """
+
+
+def transactions(blocks: DataFrame) -> DataFrame:
+    """Typed block rows (batch or stream) → one row per transaction:
+    ``signature``, ``block_time``, the key sequence ``all_keys`` and, when
+    the scan declared logMessages (``with_logs=True``), the space-joined
+    instruction log ``logs``. The per-transaction input of the pool
+    detector and the matched-transaction counter."""
+    tx = blocks.select(
+        F.col("blockTime").alias("block_time"), F.explode("transactions").alias("tx")
+    )
+    cols = [
+        "tx.transaction.signatures[0] AS signature",
+        "block_time",
+        f"{_KEYS} AS all_keys",
+    ]
+    if "logMessages" in tx.schema["tx"].dataType["meta"].dataType.names:
+        cols.append("array_join(tx.meta.logMessages, ' ') AS logs")
+    return tx.selectExpr(*cols)
 
 
 def watch_addresses(watchlist: DataFrame | Iterable[str]) -> list[str]:

@@ -3,8 +3,13 @@ deterministically generated Solana-shaped block JSON and oracle-checked with
 DuckDB's JSON reader on the SAME files.
 
 This is the strongest parity evidence in the registry: the full §3.1 chain
-(from_json → explode → watchlist semi-join → owner-replacement → pre/post
-merge) hash-compared against an independent engine, end to end.
+(JSON source parsing each line once at the scan → explode → watchlist
+semi-join → owner-replacement → pre/post merge) hash-compared against an
+independent engine, end to end. Each step is written once per engine: the
+Spark side is ``operators.balance`` (``_EXTRACT_SQL``, ``transactions``)
+plus ``_pools`` here, bound to the watchlist through ``watch_addresses``;
+the DuckDB side is ``_duck_tx_cte`` plus the balance and pool oracle texts,
+which every other Solana oracle nests.
 
 Generation is idempotent and seeded (sources/solana.py), so whichever side
 runs first materializes identical bytes.
@@ -18,13 +23,28 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.scalars import DUCK, SPARK
-from ..operators.balance import extract_balance_changes, parse_blocks, read_blocks
+from ..operators.balance import (
+    extract_balance_changes,
+    parse_blocks,
+    read_blocks,
+    transactions,
+    watch_addresses,
+)
 from ..sources.solana import hot_addresses, write_blocks_json
 from ..tmpdirs import scratch_dir
 from .registry import register
 
 _N_BLOCKS, _SEED, _FILES = 40, 11, 4
+
+# The Spark watchlist, bound as one sorted array everywhere it is read.
+_WATCH = watch_addresses(hot_addresses())
+
+# P9 recency filter restated deterministically: keep pools from the most
+# recent 300 s of generated block time (blocks span n_blocks*400 s).
+_MIN_BT = 1_700_000_000 + (_N_BLOCKS - 8) * 400
+
+# P8: the instruction log of a pool-initializing transaction.
+_INIT2 = r"Instruction: initialize2\b"
 
 
 def _parity_dir() -> str:
@@ -38,9 +58,9 @@ def _ensure_blocks() -> str:
     return write_blocks_json(_parity_dir(), _N_BLOCKS, _SEED, _FILES)
 
 
-def _hot_literal(d: str) -> str:
-    addrs = ", ".join(f"'{a}'" for a in hot_addresses())
-    return f"[{addrs}]" if d == DUCK else f"array({addrs})"
+def _hot_literal() -> str:
+    """The watchlist as a DuckDB list literal, for the oracles."""
+    return "[" + ", ".join(f"'{a}'" for a in hot_addresses()) + "]"
 
 
 def _read_blocks(spark: SparkSession, with_logs: bool = False) -> DataFrame:
@@ -112,7 +132,19 @@ ORDER BY signature, wallet, mint
 
 def _balance_oracle(path: str | None = None) -> str:
     return _BALANCE_ORACLE_TEMPLATE.format(
-        tx_cte=_duck_tx_cte(path), hot=_hot_literal(DUCK)
+        tx_cte=_duck_tx_cte(path), hot=_hot_literal()
+    )
+
+
+def _balance_rows(out: DataFrame) -> DataFrame:
+    """The extraction chain's output in the oracle's six columns."""
+    return out.select(
+        "wallet",
+        "signature",
+        "mint",
+        "pre_balance",
+        "post_balance",
+        F.unix_timestamp("ts").alias("ts_epoch"),
     )
 
 
@@ -122,21 +154,14 @@ def _balance_oracle(path: str | None = None) -> str:
     inputs=(_ensure_blocks,),
     tags=("flagship", "json", "domain"),
     doc="The full reference chain (SURVEY.md §3.1) on generated getBlock "
-    "JSON, oracle-checked by DuckDB reading the same files: schema-pruned "
-    "from_json, J1 watchlist semi-join, J2 positional owner replacement, "
-    "A1 pre/post merge, W1 block-time stamping.",
+    "JSON, oracle-checked by DuckDB reading the same files: each line "
+    "parsed once at the JSON source's scan at a pruned schema, J1 "
+    "watchlist semi-join, J2 positional owner replacement, A1 pre/post "
+    "merge, W1 block-time stamping.",
 )
 def solana_balance_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    blocks = _read_blocks(spark)
-    out = extract_balance_changes(blocks, hot_addresses())
-    return out.select(
-        "wallet",
-        "signature",
-        "mint",
-        "pre_balance",
-        "post_balance",
-        F.unix_timestamp("ts").alias("ts_epoch"),
-    ).orderBy("signature", "wallet", "mint")
+    out = extract_balance_changes(_read_blocks(spark), _WATCH)
+    return _balance_rows(out).orderBy("signature", "wallet", "mint")
 
 
 def _watch_dir(spark: SparkSession, blocks_dir: str) -> str:
@@ -190,14 +215,7 @@ def solana_balance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.stop()
 
     out = spark.read.parquet(out_dir)
-    return out.select(
-        "wallet",
-        "signature",
-        "mint",
-        "pre_balance",
-        "post_balance",
-        F.unix_timestamp("ts").alias("ts_epoch"),
-    ).orderBy("signature", "wallet", "mint")
+    return _balance_rows(out).orderBy("signature", "wallet", "mint")
 
 
 # XL corpus: ~115 MB of multi-hundred-tx blocks — the byte scale the
@@ -231,23 +249,15 @@ def _ensure_xl_blocks() -> str:
     inputs=(_ensure_xl_blocks,),
     tags=("flagship", "json", "domain", "throughput"),
     doc="The §3.1 extraction chain at reference byte scale: ~115 MB of "
-    "block JSON (hundreds of txs per block) through schema-pruned "
-    "from_json → semi-join → owner replacement → pre/post merge. The bench "
+    "block JSON (hundreds of txs per block), each line parsed once at the "
+    "JSON source's scan at a pruned schema → semi-join → owner replacement "
+    "→ pre/post merge. The bench "
     "entry for parse+filter+agg throughput vs the reference's ≈25 MB/s "
     "anchor (BASELINE.md); same DuckDB oracle template as the small corpus.",
 )
 def solana_balance_extract_xl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _xl_dir()
-    blocks = read_blocks(spark, f"{path}/blocks_*.json")
-    out = extract_balance_changes(blocks, hot_addresses())
-    return out.select(
-        "wallet",
-        "signature",
-        "mint",
-        "pre_balance",
-        "post_balance",
-        F.unix_timestamp("ts").alias("ts_epoch"),
-    )
+    blocks = read_blocks(spark, f"{_xl_dir()}/blocks_*.json")
+    return _balance_rows(extract_balance_changes(blocks, _WATCH))
 
 
 def _enrich_dims() -> tuple[list[str], list[str], list[tuple[str, float]]]:
@@ -262,7 +272,7 @@ def _enrich_dims() -> tuple[list[str], list[str], list[tuple[str, float]]]:
 
 
 _ENRICHED_ORACLE_TEMPLATE = """
-WITH balances AS ({balance_cte}),
+WITH balances AS (SELECT * FROM ({balance}) t),
 prices(vault, usd) AS (VALUES {price_rows})
 SELECT b.wallet, b.signature, b.mint,
     b.pre_balance, b.post_balance,
@@ -278,11 +288,8 @@ ORDER BY b.signature, b.wallet, b.mint
 
 def _enriched_oracle() -> str:
     base_vaults, quote_vaults, prices = _enrich_dims()
-    balance_cte = _balance_oracle().replace(
-        "ORDER BY signature, wallet, mint", ""
-    )
     return _ENRICHED_ORACLE_TEMPLATE.format(
-        balance_cte=balance_cte,
+        balance=_balance_oracle(),
         price_rows=", ".join(f"('{v}', {p})" for v, p in prices),
         base_list=", ".join(f"'{a}'" for a in base_vaults),
         quote_list=", ".join(f"'{a}'" for a in quote_vaults),
@@ -302,8 +309,7 @@ def _enriched_oracle() -> str:
     "shape, oracle-checked end to end.",
 )
 def solana_enriched_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    blocks = _read_blocks(spark)
-    balances = extract_balance_changes(blocks, hot_addresses())
+    balances = extract_balance_changes(_read_blocks(spark), _WATCH)
 
     base_vaults, quote_vaults, prices = _enrich_dims()
     price_dim = spark.createDataFrame(prices, "vault string, usd double")
@@ -430,11 +436,25 @@ ORDER BY signature
 
 
 def _pool_oracle() -> str:
-    # P9 recency filter restated deterministically: keep pools from the most
-    # recent 300 s of generated block time (blocks span n_blocks*400 s).
-    min_bt = 1_700_000_000 + (_N_BLOCKS - 8) * 400
     return _POOL_ORACLE_TEMPLATE.format(
-        tx_cte=_duck_tx_cte(), hot=_hot_literal(DUCK), min_bt=min_bt
+        tx_cte=_duck_tx_cte(), hot=_hot_literal(), min_bt=_MIN_BT
+    )
+
+
+def _pools(tx: DataFrame) -> DataFrame:
+    """P8 instruction-log regex + P9 recency + key-stat projection over
+    ``transactions`` rows: the pool-detection predicate chain
+    (SERVER/combined_subscriber.py:120-147, 62-65), the one pool query of
+    the batch detector and of both streaming pool jobs."""
+    return tx.where(
+        F.col("logs").rlike(_INIT2) & (F.col("block_time") >= F.lit(_MIN_BT))
+    ).select(
+        "signature",
+        F.col("block_time").cast("long").alias("ts_epoch"),
+        F.size("all_keys").cast("long").alias("n_keys"),
+        F.size(F.array_intersect("all_keys", F.lit(_WATCH)))
+        .cast("long")
+        .alias("n_hot_keys"),
     )
 
 
@@ -448,36 +468,8 @@ def _pool_oracle() -> str:
     "projection for the Raydium lookup (S8, mocked).",
 )
 def solana_pool_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    blocks = _read_blocks(spark, with_logs=True)
-    min_bt = 1_700_000_000 + (_N_BLOCKS - 8) * 400
-    hot_arr = F.expr(_hot_literal(SPARK))
-    tx = blocks.select(
-        F.col("blockTime").alias("block_time"), F.explode("transactions").alias("t")
-    ).select(
-        F.col("t.transaction.signatures")[0].alias("signature"),
-        F.col("block_time"),
-        F.concat(
-            F.coalesce(F.col("t.transaction.message.accountKeys"), F.array()),
-            F.coalesce(F.col("t.meta.loadedAddresses.readonly"), F.array()),
-            F.coalesce(F.col("t.meta.loadedAddresses.writable"), F.array()),
-        ).alias("all_keys"),
-        F.array_join(F.col("t.meta.logMessages"), " ").alias("logs"),
-    )
-    return (
-        tx.where(
-            F.col("logs").rlike(r"Instruction: initialize2\b")
-            & (F.col("block_time") >= F.lit(min_bt))
-        )
-        .select(
-            "signature",
-            F.col("block_time").cast("long").alias("ts_epoch"),
-            F.size("all_keys").cast("long").alias("n_keys"),
-            F.size(F.array_intersect(F.col("all_keys"), hot_arr))
-            .cast("long")
-            .alias("n_hot_keys"),
-        )
-        .orderBy("signature")
-    )
+    tx = transactions(_read_blocks(spark, with_logs=True))
+    return _pools(tx).orderBy("signature")
 
 
 _HOTCOUNT_ORACLE_TEMPLATE = """
@@ -495,33 +487,22 @@ ORDER BY ts_epoch
 @register(
     "solana_hot_tx_count",
     oracle=_HOTCOUNT_ORACLE_TEMPLATE.format(
-        tx_cte=_duck_tx_cte(), hot="{hot}"
-    ).replace("{hot}", _hot_literal(DUCK)),
+        tx_cte=_duck_tx_cte(), hot=_hot_literal()
+    ),
     inputs=(_ensure_blocks,),
     tags=("json", "domain", "agg"),
     doc="A3 per-block matched-transaction counter "
     "(RECEIVER/parser_main.cpp:121,133) as a per-block aggregate.",
 )
 def solana_hot_tx_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    blocks = _read_blocks(spark)
-    hot_arr = F.expr(_hot_literal(SPARK))
-    tx = blocks.select(
-        F.col("blockTime").alias("block_time"), F.explode("transactions").alias("t")
-    ).select(
-        "block_time",
-        F.concat(
-            F.coalesce(F.col("t.transaction.message.accountKeys"), F.array()),
-            F.coalesce(F.col("t.meta.loadedAddresses.readonly"), F.array()),
-            F.coalesce(F.col("t.meta.loadedAddresses.writable"), F.array()),
-        ).alias("all_keys"),
-    )
+    tx = transactions(_read_blocks(spark))
     return (
         tx.groupBy(F.col("block_time").cast("long").alias("ts_epoch"))
         .agg(
             F.count(F.lit(1)).alias("n_tx"),
             F.sum(
                 F.when(
-                    F.size(F.array_intersect(F.col("all_keys"), hot_arr)) > 0, 1
+                    F.size(F.array_intersect("all_keys", F.lit(_WATCH))) > 0, 1
                 ).otherwise(0)
             )
             .cast("long")
@@ -532,33 +513,7 @@ def solana_hot_tx_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _RUGPULL_ORACLE_TEMPLATE = """
-WITH {tx_cte},
-hot_tx AS (
-    SELECT * FROM keyed
-    WHERE len(list_intersect(all_keys, {hot})) > 0
-),
-entries AS (
-    SELECT signature, all_keys, 'pre' AS phase, unnest(pre) AS b FROM hot_tx
-    UNION ALL
-    SELECT signature, all_keys, 'post' AS phase, unnest(post) AS b FROM hot_tx
-),
-resolved AS (
-    SELECT signature, phase,
-        CASE WHEN list_contains({hot}, all_keys[cast(b.accountIndex as int) + 1])
-             THEN all_keys[cast(b.accountIndex as int) + 1]
-             ELSE b.owner END AS wallet,
-        b.mint AS mint,
-        b.uiTokenAmount.uiAmountString AS amount
-    FROM entries
-    WHERE b IS NOT NULL
-),
-bal AS (
-    SELECT wallet, signature, mint,
-        max(CASE WHEN phase = 'pre' THEN amount END) AS pre_balance,
-        max(CASE WHEN phase = 'post' THEN amount END) AS post_balance
-    FROM resolved
-    GROUP BY wallet, signature, mint
-),
+WITH bal AS (SELECT * FROM ({balance}) t),
 vault AS (
     SELECT mint,
         cast(count(*) as bigint) AS n_rows,
@@ -583,8 +538,8 @@ ORDER BY mint
 @register(
     "solana_rugpull_score",
     oracle=_RUGPULL_ORACLE_TEMPLATE.format(
-        tx_cte=_duck_tx_cte(), hot="{hot}"
-    ).replace("{hot}", _hot_literal(DUCK)),
+        balance=_balance_oracle(), hot=_hot_literal()
+    ),
     inputs=(_ensure_blocks,),
     tags=("json", "domain", "agg", "flagship"),
     doc="The detection composite the whole reference pipeline exists to "
@@ -595,11 +550,9 @@ ORDER BY mint
     "One groupBy(mint) shuffle over the extraction chain at any scale.",
 )
 def solana_rugpull_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    blocks = _read_blocks(spark)
-    bal = extract_balance_changes(blocks, hot_addresses())
-    hot_arr = F.expr(_hot_literal(SPARK))
+    bal = extract_balance_changes(_read_blocks(spark), _WATCH)
     vault = (
-        bal.where(F.array_contains(hot_arr, F.col("wallet")))
+        bal.where(F.array_contains(F.lit(_WATCH), F.col("wallet")))
         .groupBy("mint")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -644,9 +597,7 @@ def _ensure_ds_blocks() -> str:
 
 @register(
     "solana_balance_from_datasource",
-    oracle=_BALANCE_ORACLE_TEMPLATE.format(
-        tx_cte=_duck_tx_cte(_ds_dir()), hot=_hot_literal(DUCK)
-    ),
+    oracle=_balance_oracle(_ds_dir()),
     inputs=(_ensure_ds_blocks,),
     tags=("flagship", "source", "domain"),
     doc="S1 re-expressed as a Spark Python DataSource: batch read of the "
@@ -668,12 +619,5 @@ def solana_balance_from_datasource(spark: SparkSession, sf_dir: str) -> DataFram
         .option("seed", _DS_SEED)
         .load()
     )
-    out = extract_balance_changes(parse_blocks(raw, "payload"), hot_addresses())
-    return out.select(
-        "wallet",
-        "signature",
-        "mint",
-        "pre_balance",
-        "post_balance",
-        F.unix_timestamp("ts").alias("ts_epoch"),
-    ).orderBy("signature", "wallet", "mint")
+    out = extract_balance_changes(parse_blocks(raw, "payload"), _WATCH)
+    return _balance_rows(out).orderBy("signature", "wallet", "mint")

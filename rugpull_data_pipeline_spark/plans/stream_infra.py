@@ -72,9 +72,21 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
+from ..operators.balance import read_block_stream, transactions
 from ..sources.tables import load_tables
 from ..tmpdirs import published_dir, scratch_dir
-from .domain import _ensure_blocks, _parity_dir
+from .domain import (
+    _INIT2,
+    _N_BLOCKS,
+    _SEED,
+    _balance_oracle,
+    _duck_tx_cte,
+    _ensure_blocks,
+    _parity_dir,
+    _pool_oracle,
+    _pools,
+    _watch_dir,
+)
 from .relational import FLAGSHIP_ORACLE
 from .registry import register, static_table, views_valid
 
@@ -1635,63 +1647,20 @@ def _flagship_e2e(
 
 
 def _tx_stream(spark: SparkSession, src_glob: str) -> DataFrame:
-    """Streaming per-transaction rows from a block-JSON landing zone: the
-    in-stream twin of domain._read_blocks + the P3/P4/P5 projections —
-    the JSON file source parsing each block once at the scan, transaction
-    explode, continuous key indexing (accountKeys ‖ readonly ‖ writable),
-    log join. Shared by the composed §3.2 / fan-out / feedback jobs."""
-    from ..operators.balance import read_block_stream
-
-    blocks = read_block_stream(
-        spark, src_glob, with_logs=True, max_files_per_trigger=1
-    )
-    return blocks.select(
-        F.col("blockTime").alias("block_time"),
-        F.explode("transactions").alias("t"),
-    ).select(
-        F.col("t.transaction.signatures")[0].alias("signature"),
-        F.col("block_time"),
-        F.concat(
-            F.coalesce(F.col("t.transaction.message.accountKeys"), F.array()),
-            F.coalesce(F.col("t.meta.loadedAddresses.readonly"), F.array()),
-            F.coalesce(F.col("t.meta.loadedAddresses.writable"), F.array()),
-        ).alias("all_keys"),
-        F.array_join(F.col("t.meta.logMessages"), " ").alias("logs"),
-    )
-
-
-def _pool_rows(tx: DataFrame, min_bt: int, hot_arr) -> DataFrame:
-    """P8 instruction-log regex + P9 recency + key-stat projection — the
-    pool-detection predicate chain (SERVER/combined_subscriber.py:120-147,
-    62-65) applied INSIDE the stream."""
-    return tx.where(
-        F.col("logs").rlike(r"Instruction: initialize2\b")
-        & (F.col("block_time") >= F.lit(min_bt))
-    ).select(
-        "signature",
-        F.col("block_time").cast("long").alias("ts_epoch"),
-        F.size("all_keys").cast("long").alias("n_keys"),
-        F.size(F.array_intersect(F.col("all_keys"), hot_arr))
-        .cast("long")
-        .alias("n_hot_keys"),
+    """Streaming ``transactions`` rows (logs included) from a block-JSON
+    landing zone, one file per micro-batch. Shared by the composed §3.2 /
+    fan-out / feedback jobs."""
+    return transactions(
+        read_block_stream(spark, src_glob, with_logs=True, max_files_per_trigger=1)
     )
 
 
 def _pool_e2e_oracle() -> str:
-    from .domain import _N_BLOCKS, _duck_tx_cte, _hot_literal
-
-    min_bt = 1_700_000_000 + (_N_BLOCKS - 8) * 400
     return f"""
-    WITH {_duck_tx_cte()}
-    SELECT signature,
-        cast(block_time as bigint) AS ts_epoch,
-        len(all_keys) AS n_keys,
-        len(list_intersect(all_keys, {_hot_literal(DUCK)})) AS n_hot_keys,
+    SELECT *,
         cast(cast(('0x' || substring(md5(signature), 1, 15)) as bigint)
             % 10000 as double) / 100.0 AS pool_price
-    FROM keyed
-    WHERE regexp_matches(logs, 'Instruction: initialize2\\b')
-      AND block_time >= {min_bt}
+    FROM ({_pool_oracle()}) t
     ORDER BY signature
     """
 
@@ -1718,13 +1687,8 @@ def _pool_e2e_oracle() -> str:
 def stream_pool_detect_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.udfs import lookup_enrich
     from ..sources.io import upsert_dimension
-    from .domain import _N_BLOCKS, _hot_literal
 
-    path = _parity_dir()
-    min_bt = 1_700_000_000 + (_N_BLOCKS - 8) * 400
-    pools = _pool_rows(
-        _tx_stream(spark, f"{path}/blocks_*.json"), min_bt, F.expr(_hot_literal(SPARK))
-    )
+    pools = _pools(_tx_stream(spark, f"{_parity_dir()}/blocks_*.json"))
     dim_dir = os.path.join(scratch_dir(prefix="rugpull_poold_out_"), "pools")
 
     def apply(batch: DataFrame, _bid: int) -> None:
@@ -1925,8 +1889,6 @@ def _price_maint_e2e(
 
 
 def _fanout_oracle() -> str:
-    from .domain import _balance_oracle
-
     return f"""
     WITH bal AS (SELECT * FROM ({_balance_oracle()}) t),
     pool AS (SELECT * FROM ({_pool_e2e_oracle()}) t)
@@ -1961,7 +1923,6 @@ def _fanout_oracle() -> str:
 def stream_fanout_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.io import upsert_dimension
     from ..streaming.pipelines import stream_balance_pipeline
-    from .domain import _N_BLOCKS, _hot_literal, _watch_dir
 
     blocks_dir = _parity_dir()
     bal_dir = scratch_dir(prefix="rugpull_fan_bal_")
@@ -1982,12 +1943,7 @@ def stream_fanout_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Subscriber 2: the §3.2 pool detector over the SAME landing zone,
     # its own checkpoint — drained while subscriber 1 is running.
-    min_bt = 1_700_000_000 + (_N_BLOCKS - 8) * 400
-    pools = _pool_rows(
-        _tx_stream(spark, f"{blocks_dir}/blocks_*.json"),
-        min_bt,
-        F.expr(_hot_literal(SPARK)),
-    )
+    pools = _pools(_tx_stream(spark, f"{blocks_dir}/blocks_*.json"))
 
     def pool_apply(batch: DataFrame, _bid: int) -> None:
         upsert_dimension(
@@ -2025,8 +1981,6 @@ _FEEDBACK_SLICES = 4
 
 
 def _feedback_oracle() -> str:
-    from .domain import _N_BLOCKS, _duck_tx_cte
-
     per_slice = _N_BLOCKS // _FEEDBACK_SLICES
     return f"""
     WITH {_duck_tx_cte()},
@@ -2078,7 +2032,6 @@ def stream_watchlist_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.io import upsert_dimension
     from ..sources.solana import generate_blocks
-    from .domain import _N_BLOCKS, _SEED
 
     per_slice = _N_BLOCKS // _FEEDBACK_SLICES
     # Time-chunked landing zone: slice i holds blocks [i*k, (i+1)*k), files
@@ -2130,7 +2083,7 @@ def stream_watchlist_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
         # watchlist dimension (SADD semantics; first_slice kept via the
         # negated-order LWW so re-discovery never advances it).
         pool_keys = (
-            batch.where(F.col("logs").rlike(r"Instruction: initialize2\b"))
+            batch.where(F.col("logs").rlike(_INIT2))
             .select(F.explode("all_keys").alias("k"), "slice")
             .groupBy("k")
             .agg(F.min("slice").alias("first_slice"))

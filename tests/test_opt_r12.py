@@ -17,12 +17,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
-def _old_entries(tx):
+def _union_entries(tx):
     """The pre-round-12 union-of-two-explodes phase expansion."""
 
     def _phase(col, tag):
         return tx.select(
-            "ts",
             "signature",
             F.lit(tag).alias("phase"),
             F.explode_outer(F.col(col)).alias("b"),
@@ -31,54 +30,70 @@ def _old_entries(tx):
     return _phase("pre", "pre").unionByName(_phase("post", "post"))
 
 
-def _new_entries(tx):
-    """The fused single-generator phase expansion (operators/balance.py)."""
-
-    def _tagged(col, tag):
-        return F.transform(
-            F.coalesce(F.col(col), F.array()),
-            lambda b: F.struct(F.lit(tag).alias("phase"), b.alias("b")),
-        )
-
-    return (
-        tx.select(
-            "ts",
-            "signature",
-            F.explode(
-                F.concat(_tagged("pre", "pre"), _tagged("post", "post"))
-            ).alias("e"),
-        )
-        .where(F.col("e.b").isNotNull())
-        .select(
-            "ts", "signature", F.col("e.phase").alias("phase"), F.col("e.b").alias("b")
-        )
-    )
-
-
 def test_fused_phase_explode_matches_union(spark):
-    bal = "array<struct<accountIndex:int,mint:string,owner:string>>"
-    rows = [
+    """``extract_balance_changes`` (whose ``entries`` CTE is the fused
+    explode) against the union-of-two-explodes expectation, on block rows
+    carrying every edge the union handled row by row. Every balance indexes
+    a non-watchlisted key, so the wallet is the owner."""
+    import json
+
+    from rugpull_data_pipeline_spark.operators.balance import (
+        extract_balance_changes,
+        parse_blocks,
+    )
+
+    def bal(i, mint, owner, amount):
+        return {"accountIndex": i, "mint": mint, "owner": owner,
+                "uiTokenAmount": {"uiAmountString": amount}}
+
+    def tx(sig, pre, post):
+        return {
+            "transaction": {"signatures": [sig],
+                            "message": {"accountKeys": ["hot", "k1", "k2", "k3"]}},
+            "meta": {"loadedAddresses": {"readonly": [], "writable": []},
+                     "preTokenBalances": pre, "postTokenBalances": post},
+        }
+
+    txs = [
         # both sides populated
-        ("s1", [(0, "m1", "o1"), (1, "m2", "o2")], [(0, "m1", "o1")]),
+        tx("s1", [bal(1, "m1", "o1", "1.0"), bal(2, "m2", "o2", "2.0")],
+           [bal(1, "m1", "o1", "0.5")]),
         # null pre, empty post
-        ("s2", None, []),
-        # null element inside the array (explode_outer emits then filter drops)
-        ("s3", [None, (2, "m3", "o3")], None),
+        tx("s2", None, []),
+        # null element inside the array (explode_outer emits, filter drops)
+        tx("s3", [None, bal(3, "m3", "o3", "3.0")], None),
         # empty both
-        ("s4", [], []),
+        tx("s4", [], []),
     ]
-    tx = spark.createDataFrame(
-        [(None, s, p, q) for (s, p, q) in rows],
-        f"ts timestamp, signature string, pre {bal}, post {bal}",
+    block = {"result": {"blockTime": 1_700_000_000, "transactions": txs}}
+    blocks = parse_blocks(spark.createDataFrame([(json.dumps(block),)], "value string"))
+
+    got = extract_balance_changes(blocks, ["hot"]).select(
+        "wallet", "signature", "mint", "pre_balance", "post_balance"
     )
-    old = _old_entries(tx).selectExpr(
-        "signature", "phase", "b.accountIndex", "b.mint", "b.owner"
+    per_tx = blocks.selectExpr("explode(transactions) AS tx").selectExpr(
+        "tx.transaction.signatures[0] AS signature",
+        "tx.meta.preTokenBalances AS pre",
+        "tx.meta.postTokenBalances AS post",
     )
-    new = _new_entries(tx).selectExpr(
-        "signature", "phase", "b.accountIndex", "b.mint", "b.owner"
+    amount = F.col("b.uiTokenAmount.uiAmountString")
+    expected = (
+        _union_entries(per_tx)
+        .groupBy(
+            F.col("b.owner").alias("wallet"), "signature", F.col("b.mint").alias("mint")
+        )
+        .agg(
+            F.max(F.when(F.col("phase") == "pre", amount)).alias("pre_balance"),
+            F.max(F.when(F.col("phase") == "post", amount)).alias("post_balance"),
+        )
     )
-    assert sorted(map(tuple, old.collect())) == sorted(map(tuple, new.collect()))
-    assert old.schema == new.schema
+    rows = sorted(map(tuple, expected.collect()), key=str)
+    assert rows == sorted(map(tuple, got.collect()), key=str)
+    assert rows == [
+        ("o1", "s1", "m1", "1.0", "0.5"),
+        ("o2", "s1", "m2", "2.0", None),
+        ("o3", "s3", "m3", "3.0", None),
+    ]
 
 
 def _duck_buckets(create_embeddings: str) -> list[tuple]:

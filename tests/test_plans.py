@@ -505,6 +505,31 @@ def test_scan_guard_detects_inlined_class(spark):
     )
 
 
+def test_plan_diff_reads_wrapped_artifacts(tmp_path, capsys):
+    """``plan_fingerprint --diff`` reads the fingerprints of a wrapped BENCH
+    artifact (nested under ``parsed``) as well as of a bare bench line, and
+    fails instead of passing vacuously when a file has none."""
+    import json
+
+    from tools.plan_fingerprint import diff
+
+    def artifact(name, body):
+        path = tmp_path / name
+        path.write_text(json.dumps(body))
+        return str(path)
+
+    nested = artifact("nested.json", {"parsed": {"plan_fp": {"q1": "a", "q2": "b"}}})
+    flat = artifact("flat.json", {"plan_fp": {"q1": "a", "q2": "c"}})
+    empty = artifact("empty.json", {"rc": 0, "parsed": {"metric": "x"}})
+
+    assert diff(nested, nested) == 0
+    assert "fp-diff empty over 2 shared queries" in capsys.readouterr().out
+    assert diff(nested, flat) == 1
+    assert "CHANGED q2: b -> c" in capsys.readouterr().out
+    assert diff(nested, empty) == 1
+    assert diff(empty, flat) == 1
+
+
 def test_no_inline_or_checkpoint_fork():
     """Shared cores register through registry.pair(..., shared=...), the one
     place the materialization policy lives. A plan function that takes an
@@ -645,6 +670,48 @@ def test_streaming_run_path_lives_in_three_helpers():
         ("maxFilesPerTrigger", "stream_infra._landed"): 1,
         ("repartition(2).write", "stream_infra._landed"): 1,
     }), sorted(found.items())
+
+
+def test_solana_chain_is_written_once_per_engine():
+    """The Solana key sequence is spelled once per engine: Spark's in
+    operators/balance.py (interpolated by the extraction chain and the
+    per-transaction projection), DuckDB's in domain._duck_tx_cte (nested by
+    every oracle). The Spark watchlist is never the DuckDB literal, and the
+    P9 recency bound is defined once."""
+    import ast
+    import pathlib
+    from collections import Counter
+
+    from rugpull_data_pipeline_spark import operators, plans
+
+    readonly, hot_spark, min_bt = Counter(), [], []
+    for pkg in (operators, plans):
+        for path in sorted(pathlib.Path(pkg.__path__[0]).glob("*.py")):
+            for top in ast.parse(path.read_text()).body:
+                where = (
+                    f"{path.stem}.{top.name}"
+                    if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    else f"{path.stem}:<module>"
+                )
+                for node in ast.walk(top):
+                    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                        readonly[where] += node.value.count("loadedAddresses.readonly")
+                    elif (
+                        isinstance(node, ast.Call)
+                        and getattr(node.func, "id", "") == "_hot_literal"
+                        and any(getattr(a, "id", "") == "SPARK" for a in node.args)
+                    ):
+                        hot_spark.append(where)
+                    elif isinstance(node, ast.arg) or (
+                        isinstance(node, ast.Name) and isinstance(node.ctx, ast.Store)
+                    ):
+                        name = node.arg if isinstance(node, ast.arg) else node.id
+                        if name.lower().lstrip("_") == "min_bt":
+                            min_bt.append(where)
+    readonly = +readonly  # drops the zero counts
+    assert readonly == Counter({"balance:<module>": 1, "domain._duck_tx_cte": 1}), readonly
+    assert hot_spark == [], f"Spark watchlist bound as a DuckDB literal in {hot_spark}"
+    assert min_bt == ["domain:<module>"], f"min_bt defined in {min_bt}"
 
 
 def test_drain_stops_a_replay_at_its_deadline(spark, monkeypatch):

@@ -25,8 +25,11 @@ The one module that knows what an executed plan says about a query:
 ``--diff A B`` prints the headline queries whose ``plan_fp`` changed
 between two BENCH artifacts (or appear in only one), and exits 0 iff
 nothing changed among queries present in both. A bench delta with an empty
-diff is environmental by construction. Artifacts from rounds before
-fingerprints (no "plan_fp" key) compare as all-absent.
+diff is environmental by construction. The fingerprints are read from the
+bench line's top-level ``plan_fp`` or, in a wrapped artifact such as
+``BENCH_r13.json``, from the ``parsed`` bench line it wraps. A file with no fingerprints (a round before
+they existed) or a pair sharing no query exits 1: an empty diff over
+nothing proves nothing.
 
 ``--dump SUFFIX`` writes each query's ``explain("formatted")`` to
 ``plans/<sf>/<name>_<SUFFIX>.txt`` (``--bench`` set when no names are
@@ -92,16 +95,20 @@ def fact_scan_counts(plan: str) -> dict[str, int]:
 
 def _plan_fps(path: str) -> dict[str, str]:
     with open(path) as fh:
-        return json.load(fh).get("plan_fp", {})
+        art = json.load(fh)
+    return art.get("plan_fp") or (art.get("parsed") or {}).get("plan_fp") or {}
 
 
 def diff(path_a: str, path_b: str) -> int:
     fa, fb = _plan_fps(path_a), _plan_fps(path_b)
-    if not fa:
-        print(f"{path_a}: no plan_fp key (pre-fingerprint artifact)")
-    if not fb:
-        print(f"{path_b}: no plan_fp key (pre-fingerprint artifact)")
-    changed = sorted(n for n in set(fa) & set(fb) if fa[n] != fb[n])
+    for path, fps in ((path_a, fa), (path_b, fb)):
+        if not fps:
+            print(f"{path}: no plan_fp (pre-fingerprint artifact)")
+    shared = set(fa) & set(fb)
+    if not shared:
+        print("no shared queries to compare")
+        return 1
+    changed = sorted(n for n in shared if fa[n] != fb[n])
     for n in changed:
         print(f"CHANGED {n}: {fa[n]} -> {fb[n]}")
     for n in sorted(set(fa) - set(fb)):
@@ -109,7 +116,7 @@ def diff(path_a: str, path_b: str) -> int:
     for n in sorted(set(fb) - set(fa)):
         print(f"ONLY-IN-{path_b} {n}")
     if not changed:
-        print(f"fp-diff empty over {len(set(fa) & set(fb))} shared queries")
+        print(f"fp-diff empty over {len(shared)} shared queries")
     return 1 if changed else 0
 
 
