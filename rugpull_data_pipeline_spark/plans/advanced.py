@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
-from .registry import pair, register, static_table
+from .registry import pair, register
 
 
 # ---------------------------------------------------------------------------
@@ -65,7 +65,7 @@ ORDER BY p.event_id
     "DuckDB's native ASOF LEFT JOIN — two independent implementations.",
 )
 def join_asof_last_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = static_table(spark, sf_dir, "events")
+    ev = spark.table("events")
     views = ev.where(F.col("event_type") == "view").select(
         "user_id",
         "ts",
@@ -134,7 +134,7 @@ ORDER BY e.event_id
     "naive inequality join produces; oracle runs that naive join.",
 )
 def join_range_time_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = static_table(spark, sf_dir, "events")
+    ev = spark.table("events")
     us = F.unix_micros(F.col("ts"))
     bucket = F.floor(us / F.lit(_RANGE_US))
 
@@ -254,10 +254,10 @@ _N_SALTS = 8
     "over 8 reducers. Result provably identical to the plain join (oracle).",
 )
 def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = static_table(spark, sf_dir, "lineitem").withColumn(
+    li = spark.table("lineitem").withColumn(
         "salt", F.pmod(F.col("l_linenumber"), F.lit(_N_SALTS)).cast("int")
     )
-    orders = static_table(spark, sf_dir, "orders").withColumn(
+    orders = spark.table("orders").withColumn(
         "salt", F.explode(F.array(*[F.lit(i) for i in range(_N_SALTS)]))
     )
     # Both equi keys live in the join condition so Catalyst hashes on
@@ -401,7 +401,7 @@ ORDER BY user_id, event_id
 def udf_groupmap_minmax_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.udfs import groupwise_minmax_scale, ordered_python_stage
 
-    ev = static_table(spark, sf_dir, "events").where(F.col("event_type") == "purchase")
+    ev = spark.table("events").where(F.col("event_type") == "purchase")
     return ordered_python_stage(
         ev, lambda e: groupwise_minmax_scale(e, "user_id", "value"),
         "user_id", "event_id",
@@ -798,7 +798,7 @@ def udf_arrowmap_vecsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.udfs import arrow_vec_fixedpoint_sum, ordered_python_stage
 
     return ordered_python_stage(
-        static_table(spark, sf_dir, "embeddings"), arrow_vec_fixedpoint_sum, "vec_id"
+        spark.table("embeddings"), arrow_vec_fixedpoint_sum, "vec_id"
     )
 
 

@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
-from .registry import pair, register, static_table
+from .registry import pair, register
 
 
 # ---------------------------------------------------------------------------
@@ -446,11 +446,6 @@ def _zval(a: str, b: str, d: str, bits: int = 8) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def zorder_key_sql(a: str, b: str, d: str = SPARK, bits: int = 8) -> str:
-    """Public helper: the Morton key used by the layout writer and tests."""
-    return _zval(a, b, d, bits)
-
-
 def _zorder(d: str) -> str:
     za = "cast(l_partkey % 256 as bigint)"
     zb = "cast(l_suppkey % 256 as bigint)"
@@ -776,7 +771,7 @@ def kmeans_lloyd_fit(spark, sf_dir):
     from pyspark.sql import functions as F
 
     k, iters = 8, 4
-    emb = static_table(spark, sf_dir, "embeddings").select(
+    emb = spark.table("embeddings").select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )

@@ -36,7 +36,7 @@ from __future__ import annotations
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
-from .registry import pair, register, static_table
+from .registry import pair, register
 
 
 def _str(expr: str, d: str) -> str:
@@ -472,7 +472,7 @@ def dedup_cc_fixpoint(spark, sf_dir):
         )
         .localCheckpoint()
     )
-    docs = static_table(spark, sf_dir, "documents").select("doc_id")
+    docs = spark.table("documents").select("doc_id")
     labels = docs.select("doc_id", F.col("doc_id").alias("label"))
     # Min-label propagation: each round pulls the smallest label reachable in
     # one hop. The pair generator's chains are short, but the loop runs until

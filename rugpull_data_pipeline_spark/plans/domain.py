@@ -413,7 +413,7 @@ def price_change_stateful_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .stream_infra import _landed, _prices, _to_memory
     from ..streaming.pipelines import price_change_events
 
-    emitted = _to_memory(price_change_events(_landed(_prices(spark, sf_dir))), "append")
+    emitted = _to_memory(price_change_events(_landed(_prices(spark))), "append")
     return emitted.select(
         "pair",
         F.unix_timestamp("ts").alias("ts_epoch"),

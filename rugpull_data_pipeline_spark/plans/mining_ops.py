@@ -59,7 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
 from .llm_ops import _cosine
-from .registry import pair, register, static_table
+from .registry import pair, register
 
 
 def _day_idx(d: str) -> str:
@@ -1057,7 +1057,7 @@ def skyline_pareto_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    pp = static_table(spark, sf_dir, "part").select(
+    pp = spark.table("part").select(
         "p_partkey",
         (F.col("p_retailprice").cast("decimal(18,2)") * F.lit(100))
         .cast("long")

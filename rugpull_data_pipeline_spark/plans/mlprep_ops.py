@@ -64,7 +64,7 @@ from .llm_ops import (
     _sh_capped,
     _sh_sized,
 )
-from .registry import pair, register, static_table
+from .registry import pair, register
 
 
 _W = "PARTITION BY event_type ORDER BY ts, event_id"
@@ -818,7 +818,7 @@ def events_attribution_last_touch(spark, sf_dir):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    ev = static_table(spark, sf_dir, "events")
+    ev = spark.table("events")
     touches = ev.where(F.col("event_type") != "purchase").select(
         "user_id",
         "ts",
@@ -1045,7 +1045,7 @@ def graph_hits_power3(spark, sf_dir):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    ev = static_table(spark, sf_dir, "events")
+    ev = spark.table("events")
     prev = F.lag("event_type").over(
         Window.partitionBy("user_id").orderBy("ts", "event_id")
     )
@@ -1701,7 +1701,7 @@ def join_asof_next_view(spark, sf_dir):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    ev = static_table(spark, sf_dir, "events")
+    ev = spark.table("events")
     # kind 0 = purchase, 1 = view: at equal ts the purchase row precedes
     # the views, so the FOLLOWING frame includes same-instant views —
     # matching the oracle's v.ts >= p.ts.

@@ -34,7 +34,7 @@ from ..multimodal.columns import (
     sample_frames,
     window_energy,
 )
-from .registry import register, static_table
+from .registry import register
 
 # --- blob + typed metadata (fully JVM-side) --------------------------------
 
@@ -58,7 +58,7 @@ ORDER BY doc_id
     "JVM-side (no UDF): the scan/partition layer of the multimodal pipeline.",
 )
 def multimodal_blob_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = static_table(spark, sf_dir, "documents")
+    docs = spark.table("documents")
     return extract_blob_metadata(attach_blob_column(docs)).orderBy("doc_id")
 
 
@@ -80,7 +80,7 @@ _FEAT_ORACLE = "SELECT doc_id,\n" + ",\n".join(
     "oracle checks the full UDF plumbing bit-for-bit).",
 )
 def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = static_table(spark, sf_dir, "documents")
+    docs = spark.table("documents")
     return ordered_python_stage(
         attach_blob_column(docs),
         lambda blobs: decode_image_features(blobs).select(
@@ -127,7 +127,7 @@ ORDER BY doc_id, frame_idx
     "verifying the fan-out exactly even on multibyte corpora.",
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = static_table(spark, sf_dir, "documents")
+    docs = spark.table("documents")
     return ordered_python_stage(
         attach_blob_column(docs),
         lambda blobs: sample_frames(blobs, every_n_bytes=64),
@@ -259,7 +259,7 @@ ORDER BY k.doc_id
     "downstream stages never shuffle blobs.",
 )
 def multimodal_resize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = static_table(spark, sf_dir, "documents")
+    docs = spark.table("documents")
     return ordered_python_stage(
         attach_blob_column(docs),
         lambda blobs: resize_blobs(blobs, target_bytes=_RESIZE_TARGET),
@@ -316,7 +316,7 @@ ORDER BY doc_id, win_idx
     "resize / frame-sample / window-reduce kernel set.",
 )
 def multimodal_window_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = static_table(spark, sf_dir, "documents")
+    docs = spark.table("documents")
     return ordered_python_stage(
         attach_blob_column(docs),
         lambda blobs: window_energy(blobs, window_bytes=32),
@@ -423,7 +423,7 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..multimodal.columns import phash_words
 
-    docs = static_table(spark, sf_dir, "documents")
+    docs = spark.table("documents")
     words = phash_words(_spread(attach_blob_column(docs))).localCheckpoint()
     capped = (
         words.withColumn(
@@ -534,7 +534,7 @@ ORDER BY doc_id, seg_start
 def multimodal_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    docs = static_table(spark, sf_dir, "documents")
+    docs = spark.table("documents")
     en = window_energy(_spread(attach_blob_column(docs)), window_bytes=32)
     tot = en.groupBy("doc_id").agg(
         F.sum("energy").cast("bigint").alias("te"),

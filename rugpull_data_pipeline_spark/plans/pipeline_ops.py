@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
-from .registry import pair, register, static_table
+from .registry import pair, register
 
 
 # ---------------------------------------------------------------------------
@@ -1440,7 +1440,7 @@ def _kcenter_coreset(d: str) -> str:
     "the traversal chain combinatorially — 45 scans at k=4.)",
 )
 def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    iv = static_table(spark, sf_dir, "embeddings").selectExpr(
+    iv = spark.table("embeddings").selectExpr(
         "vec_id", f"{S.int_vec('embedding', SPARK)} AS v"
     )
     # eager=False: every consumer is a SEQUENTIAL driver action (seed

@@ -423,9 +423,9 @@ ORDER BY user_id, session_start
 def stream_session_windows(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from .stream_infra import _landed, _static_table, _to_memory
+    from .stream_infra import _landed, _to_memory
 
-    src = _static_table(spark, sf_dir, "events").select("user_id", "ts")
+    src = spark.table("events").select("user_id", "ts")
     agg = (
         _landed(src)
         .groupBy(F.session_window("ts", "1 hour").alias("w"), "user_id")

@@ -5,6 +5,10 @@ here as a named query: a builder ``(spark, sf_dir) -> DataFrame`` and, when
 SQL-expressible, a DuckDB oracle string over the same parquet tables.
 ``__spark_entry__.py`` re-exports this registry as ``queries()`` /
 ``oracle_sql()``.
+
+A builder reads the fixture tables only as session views
+(``spark.table(name)``, or by name in SQL), which ``bind_views`` binds to
+its ``sf_dir`` before every registered build.
 """
 
 from __future__ import annotations
@@ -15,7 +19,7 @@ import json
 import os
 import re
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Callable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -27,43 +31,36 @@ InputFn = Callable[[], object]
 
 _REGISTRY: dict[str, "QuerySpec"] = {}
 
-# Track which sf_dir the current session's temp views point at, so repeated
-# query invocations don't re-read parquet metadata needlessly.
+# The sf_dir each session's fixture-table views are bound to. Only
+# ``bind_views``/``unbind_views`` read or write it.
 _VIEWS_FOR: dict[int, str] = {}
 
 
-def _ensure_views(spark: SparkSession, sf_dir: str) -> None:
+def bind_views(
+    spark: SparkSession, sf_dir: str, tables: Mapping[str, DataFrame] | None = None
+) -> None:
+    """Bind the session's fixture-table views to ``sf_dir``.
+
+    Without ``tables``, the parquet tables of ``sf_dir`` are registered
+    unless the session is already bound to it, so repeated builds don't
+    re-read parquet metadata. ``tables`` (view name -> DataFrame) replaces
+    those views with the given frames and records the session as bound to
+    ``sf_dir``, so registered builders called with it read the substituted
+    tables (hand-made test tables, the degenerate-input sweep surfaces)."""
     key = id(spark)
-    if _VIEWS_FOR.get(key) != sf_dir:
-        register_views(spark, sf_dir)
-        _VIEWS_FOR[key] = sf_dir
+    if tables is None:
+        if _VIEWS_FOR.get(key) != sf_dir:
+            register_views(spark, sf_dir)
+    else:
+        for name, df in tables.items():
+            df.createOrReplaceTempView(name)
+    _VIEWS_FOR[key] = sf_dir
 
 
-def views_valid(spark: SparkSession, sf_dir: str, name: str) -> bool:
-    """True iff the session's temp view ``name`` is registered for THIS
-    sf_dir, as this registry's view cache records it.
-
-    Registered builders always run behind ``_ensure_views``, so the view
-    is the common case. The gate exists for DIRECT callers (tests
-    importing a builder function, streaming jobs deciding their source)
-    whose session may hold views for a different directory, which once
-    made a builder silently compute against a stale fixture. A failed
-    catalog probe counts as "not valid": the caller loads the table."""
-    try:
-        return _VIEWS_FOR.get(id(spark)) == sf_dir and spark.catalog.tableExists(name)
-    except Exception:  # noqa: BLE001 - catalog probe must never mask the load
-        return False
-
-
-def static_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """View-first gated fixture-table load for DataFrame builders: the
-    registered temp view when ``views_valid``, else the table loaded
-    straight from ``sf_dir``."""
-    if views_valid(spark, sf_dir, name):
-        return spark.table(name)
-    from ..sources.tables import load_tables
-
-    return load_tables(spark, sf_dir, (name,))[name]
+def unbind_views(spark: SparkSession) -> None:
+    """Forget the session's binding, so the next ``bind_views`` registers
+    the parquet tables again over any substituted views."""
+    _VIEWS_FOR.pop(id(spark), None)
 
 
 @dataclass
@@ -97,7 +94,7 @@ def register(
 
     def deco(fn: BuilderFn) -> BuilderFn:
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            _ensure_views(spark, sf_dir)
+            bind_views(spark, sf_dir)
             spec.generate_inputs()
             return fn(spark, sf_dir)
 
@@ -146,7 +143,7 @@ def pair(
     text = q(SPARK, **{k: ref[k] for k in q_reads})
 
     def builder(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _ensure_views(spark, sf_dir)
+        bind_views(spark, sf_dir)
         frames: dict[str, DataFrame] = {}
         for k in names:
             frames[k] = spark.sql(

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
-from .registry import pair, register, static_table
+from .registry import pair, register
 
 
 # ---------------------------------------------------------------------------
@@ -866,7 +866,7 @@ pair(
     "published error hash-mismatches.",
 )
 def agg_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = static_table(spark, sf_dir, "lineitem")
+    li = spark.table("lineitem")
     agg = li.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").alias("exact_parts"),
         F.approx_count_distinct("l_partkey", rsd=0.01).alias("approx_parts"),

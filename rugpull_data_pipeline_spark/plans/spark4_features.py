@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalars import SPARK
-from .registry import pair, register, static_table
+from .registry import pair, register
 
 
 # ---------------------------------------------------------------------------
@@ -336,7 +336,7 @@ ORDER BY lang_ci
 def spark4_collated_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    docs = static_table(spark, sf_dir, "documents")
+    docs = spark.table("documents")
     ci = F.expr(
         "CASE WHEN doc_id % 2 = 0 THEN upper(lang) ELSE lang END "
         "COLLATE UTF8_LCASE"
@@ -405,7 +405,7 @@ ORDER BY w.thr LIMIT 1
 )
 def spark4_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid = (
-        static_table(spark, sf_dir, "events")
+        spark.table("events")
         .where(F.col("value").isNotNull())
         .selectExpr("cast(floor(value * cast(100 as double)) as bigint) AS s")
         .groupBy("s")

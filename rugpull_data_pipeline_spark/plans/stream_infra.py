@@ -73,7 +73,6 @@ from pyspark.sql.streaming import StreamingQuery
 from ..functions import scalars as S
 from ..functions.scalars import DUCK, SPARK
 from ..operators.balance import read_block_stream, transactions
-from ..sources.tables import load_tables
 from ..tmpdirs import published_dir, scratch_dir
 from .domain import (
     _INIT2,
@@ -88,38 +87,11 @@ from .domain import (
     _watch_dir,
 )
 from .relational import FLAGSHIP_ORACLE
-from .registry import register, static_table, views_valid
+from .registry import register
 
 _WM_DELAY = "30 minutes"
 _GUARD_N = 2000
 _GUARD_MAX_BYTES = 4096
-
-
-def _static_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """``registry.static_table`` for the fixture tables the streaming replays
-    read, with the session tuned on the view path too (the parquet path
-    tunes in load_tables).
-
-    View-first: when the registry's view cache says the registered views
-    point at THIS sf_dir, the table is read through its temp view, so the
-    degenerate-input sweeps' substituted ``events`` (empty / all-NULL /
-    single-row) reaches the landing-zone replays instead of being bypassed
-    by a direct parquet read. A cache for another directory (tests that
-    register hand-data views, or call builders against private tmp dirs)
-    falls back to the parquet loader, so no stale source leaks into later
-    tests.
-
-    Never call it inside a foreachBatch body: on the micro-batch-cloned
-    session, re-setting spark.sql.adaptive.enabled re-enables AQE inside a
-    stateful micro-batch plan (the engine disables it), which breaks
-    state-store commit accounting (STATE_STORE_COMMIT_VALIDATION_FAILED,
-    'Expected 8 commits but got 0' — found by the empty-input sweep on the
-    composed flagship). Streaming code decides its source ONCE on the
-    outer session with ``registry.views_valid`` instead."""
-    from ..session import tune_session
-
-    tune_session(spark)
-    return static_table(spark, sf_dir, name)
 
 
 # Epoch base for slice mtime stamping; any fixed past instant works (the
@@ -228,13 +200,13 @@ def _to_memory(out: DataFrame, mode: str) -> DataFrame:
     return rows
 
 
-def _prices(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _prices(spark: SparkSession) -> DataFrame:
     """The deterministic price stream of the P11 replays, derived from the
     events fixture: pair = user bucket, base/quote prices from value.
     event_id rides along as the fold's duplicate-timestamp tiebreaker
     (streaming/pipelines._fold_keys); the oracle walks ORDER BY ts,
     event_id."""
-    return _static_table(spark, sf_dir, "events").select(
+    return spark.table("events").select(
         F.concat(F.lit("pair-"), (F.col("user_id") % 5).cast("string")).alias("pair"),
         "ts",
         "event_id",
@@ -243,12 +215,12 @@ def _prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _micro_units(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _micro_units(spark: SparkSession) -> DataFrame:
     """(event_type, ts, event_id, v) of every valued event, v the value in
     micro-units. The fixed-point scaling happens JVM-side, so a Python
     kernel and its oracle fold over the identical longs."""
     return (
-        _static_table(spark, sf_dir, "events")
+        spark.table("events")
         .where(F.col("value").isNotNull())
         .select(
             "event_type",
@@ -288,7 +260,7 @@ def stream_dim_upsert_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.io import upsert_dimension
 
     src = (
-        _static_table(spark, sf_dir, "events")
+        spark.table("events")
         .where(F.col("event_type") == "purchase")
         .select("user_id", "ts", "event_id", "value")
     )
@@ -336,7 +308,7 @@ ORDER BY user_id
 )
 def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = (
-        _static_table(spark, sf_dir, "events")
+        spark.table("events")
         .where(F.col("event_type") == "click")
         .select("user_id", "event_id", "value")
     )
@@ -388,7 +360,7 @@ ORDER BY bucket
     "equals the batch answer.",
 )
 def stream_backpressure_paced(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = _static_table(spark, sf_dir, "events").select("event_id", "user_id")
+    src = spark.table("events").select("event_id", "user_id")
     out_dir = os.path.join(scratch_dir(prefix="rugpull_paced_out_"), "out")
 
     batch_ids: list[int] = []
@@ -437,7 +409,7 @@ ORDER BY user_id
     "the full-outer join of the two sinks must equal the batch fan-out.",
 )
 def stream_fanout_two_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = _static_table(spark, sf_dir, "events").select(
+    src = spark.table("events").select(
         "event_id", "user_id", "event_type", "value"
     )
     sink_a = os.path.join(scratch_dir(prefix="rugpull_fan_a_"), "clicks")
@@ -484,10 +456,10 @@ ORDER BY window_start
 """
 
 
-def _with_sentinel(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _with_sentinel(spark: SparkSession) -> DataFrame:
     """(user_id, ts) of every event plus one sentinel row 2 days past
     max(ts), whose watermark advance finalizes every real window."""
-    ev = _static_table(spark, sf_dir, "events")
+    ev = spark.table("events")
     sentinel = ev.groupBy().agg(
         F.lit(-1).cast("long").alias("user_id"),
         (F.max("ts") + F.expr("INTERVAL 2 DAYS")).alias("ts"),
@@ -508,7 +480,7 @@ def _with_sentinel(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_watermark_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = (
-        _landed(_with_sentinel(spark, sf_dir))
+        _landed(_with_sentinel(spark))
         .withWatermark("ts", _WM_DELAY)
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
@@ -559,7 +531,7 @@ ORDER BY pool_id
 def lookup_batched_mapinpandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.udfs import lookup_enrich
 
-    base = _static_table(spark, sf_dir, "events").select(
+    base = spark.table("events").select(
         F.concat(F.lit("pool-"), (F.col("user_id") % 50).cast("string")).alias(
             "pool_id"
         ),
@@ -695,8 +667,10 @@ ORDER BY user_id
     "keeping state O(keys within the watermark), not O(stream).",
 )
 def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..streaming.pipelines import watermarked_dedup
+
     src = (
-        _static_table(spark, sf_dir, "events")
+        spark.table("events")
         .where(F.col("event_type") == "view")
         .select("event_id", "ts", "user_id", "value")
     )
@@ -712,10 +686,8 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     _write_slices(tagged, src_dir, 4, slice_col="slice")
     out_dir = os.path.join(scratch_dir(prefix="rugpull_sdedup_out_"), "rows")
 
-    deduped = (
-        _landed(tagged, 4, path=src_dir)
-        .withWatermark("ts", "3650 days")
-        .dropDuplicates(["event_id"])
+    deduped = watermarked_dedup(
+        _landed(tagged, 4, path=src_dir), ["event_id"], delay="3650 days"
     )
     _drain(
         deduped.writeStream.format("parquet")
@@ -765,7 +737,7 @@ ORDER BY click_id, purchase_id
     "batch interval join row-for-row.",
 )
 def stream_stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _static_table(spark, sf_dir, "events")
+    ev = spark.table("events")
 
     def side(event_type: str, id_name: str, p: str) -> DataFrame:
         rows = ev.where(F.col("event_type") == event_type).select(
@@ -856,7 +828,7 @@ ORDER BY event_type, ts_epoch, v_micro
 def stream_bollinger_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.pipelines import bollinger_alerts
 
-    alerts = bollinger_alerts(_landed(_micro_units(spark, sf_dir)))
+    alerts = bollinger_alerts(_landed(_micro_units(spark)))
     return _to_memory(alerts, "append").orderBy("event_type", "ts_epoch", "v_micro")
 
 
@@ -907,7 +879,7 @@ def stream_attribution_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.pipelines import attribution_events
 
     src = (
-        _static_table(spark, sf_dir, "events")
+        spark.table("events")
         .select("user_id", "ts", "event_id", "event_type", "value")
         .withColumn(
             "kind",
@@ -995,7 +967,7 @@ ORDER BY w.event_type, ts_epoch, v_micro
 def stream_cusum_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.pipelines import cusum_alerts
 
-    alerts = cusum_alerts(_landed(_micro_units(spark, sf_dir)))
+    alerts = cusum_alerts(_landed(_micro_units(spark)))
     return _to_memory(alerts, "append").orderBy("event_type", "ts_epoch", "v_micro")
 
 
@@ -1117,7 +1089,7 @@ def stream_control_gated_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
 
-    src = _static_table(spark, sf_dir, "events").select("event_id", "value")
+    src = spark.table("events").select("event_id", "value")
     out_dir = os.path.join(scratch_dir(prefix="rugpull_ctrl_out_"), "out")
 
     batch_ids: list[int] = []
@@ -1187,7 +1159,7 @@ _PSI_STREAM_ORACLE = (
     "few-hundred-row grid), and the emitted history is append-only.",
 )
 def stream_psi_drift_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = _static_table(spark, sf_dir, "events").select(
+    src = spark.table("events").select(
         "event_id", "ts", "event_type", "value"
     )
     acc_dir = os.path.join(scratch_dir(prefix="rugpull_psi_acc_"), "acc")
@@ -1298,7 +1270,7 @@ def _cms_stream_oracle() -> str:
     "executors sketch independently and combine.",
 )
 def stream_cms_topk_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = _static_table(spark, sf_dir, "events").select("event_id", "user_id")
+    src = spark.table("events").select("event_id", "user_id")
     sk_dir = os.path.join(scratch_dir(prefix="rugpull_cms_state_"), "sketch")
     key_dir = os.path.join(scratch_dir(prefix="rugpull_cms_state_"), "keys")
     res_dir = os.path.join(scratch_dir(prefix="rugpull_cms_res_"), "res")
@@ -1363,7 +1335,7 @@ ORDER BY window_start
 )
 def stream_hopping_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = (
-        _landed(_with_sentinel(spark, sf_dir))
+        _landed(_with_sentinel(spark))
         .withWatermark("ts", _WM_DELAY)
         .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
@@ -1442,7 +1414,7 @@ ORDER BY w.event_type, ts_epoch, filtered, innovation
 def stream_kalman_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.pipelines import kalman_filtered
 
-    filtered = kalman_filtered(_landed(_micro_units(spark, sf_dir)))
+    filtered = kalman_filtered(_landed(_micro_units(spark)))
     return (
         _to_memory(filtered, "append")
         .select(
@@ -1478,7 +1450,7 @@ ORDER BY ts, event_id
 )
 def console_head10(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _static_table(spark, sf_dir, "events")
+        spark.table("events")
         .select("ts", "event_id", "user_id", "event_type", "value")
         .orderBy("ts", "event_id")
         .limit(10)
@@ -1537,7 +1509,7 @@ def _flagship_e2e(
       it), converging to the same answer as the uninterrupted run."""
     from ..sources.io import upsert_dimension
 
-    lineitem = _static_table(spark, sf_dir, "lineitem").select(
+    lineitem = spark.table("lineitem").select(
         "l_orderkey", "l_suppkey", "l_partkey", "l_returnflag",
         "l_quantity", "l_shipdate",
     )
@@ -1549,13 +1521,13 @@ def _flagship_e2e(
 
     # Watchlist: ASIA suppliers (the hot-address file, file_utils.cpp:3-36).
     watch = (
-        _static_table(spark, sf_dir, "supplier")
+        spark.table("supplier")
         .join(
             F.broadcast(
-                _static_table(spark, sf_dir, "nation")
+                spark.table("nation")
                 .join(
                     F.broadcast(
-                        _static_table(spark, sf_dir, "region").where(
+                        spark.table("region").where(
                             F.col("r_name") == "ASIA"
                         )
                     ),
@@ -1584,29 +1556,13 @@ def _flagship_e2e(
         F.max("l_shipdate").alias("last_ship_ts"),
     )
 
-    # Decide the per-batch part source ONCE, on the OUTER session (see
-    # _static_table: calling it on the batch session corrupts
-    # stateful micro-batch execution). View-first keeps the sweep's input
-    # substitution reaching the stream; the fallback DataFrame is built
-    # here but re-reads its parquet at every batch action, so ST5's
-    # per-batch re-resolution holds either way.
-    part_dim = (
-        None
-        if views_valid(spark, sf_dir, "part")
-        else load_tables(spark, sf_dir, ("part",))["part"]
-    )
-
     def apply(batch: DataFrame, _bid: int) -> None:
         sp = batch.sparkSession
         # ST5: dims re-resolved per micro-batch (the server re-reads Redis
         # per request); enrichment rides the updated keys only.
         enriched = (
             batch.join(
-                F.broadcast(
-                    (sp.table("part") if part_dim is None else part_dim).select(
-                        "p_partkey", "p_retailprice"
-                    )
-                ),
+                F.broadcast(sp.table("part").select("p_partkey", "p_retailprice")),
                 batch["l_partkey"] == F.col("p_partkey"),
                 "left",
             )
@@ -1820,7 +1776,7 @@ def _price_maint_e2e(
 
     fold = price_change_events if kernel == "apips" else price_change_events_tws
 
-    prices = _prices(spark, sf_dir)
+    prices = _prices(spark)
     # Land the replay as 4 CONTIGUOUS TIME slices (the priceAPIfiller's
     # chronological poll order): the stateful fold's cross-batch order
     # must equal event-time order for the oracle's global walk to grade it.

@@ -56,20 +56,21 @@ def session_views(spark) -> set[str]:
 
 @pytest.fixture
 def hand_views(spark):
-    """For tests that register hand-made fixture tables as temp views and
-    call builders directly with the sentinel sf_dir ``"unused"``: the
-    registry's view cache is pinned to that sentinel, so the gated
-    ``registry.static_table`` reads the hand views. Afterwards the views
-    the test registered (every fixture-table name and anything new) are
-    dropped and the cache cleared, so the next build re-registers the real
-    tables and no hand rows leak into view-first readers."""
+    """For tests that bind hand-made fixture tables (``tests.helpers``) and
+    call builders with the sf_dir ``HAND``: the session is bound to
+    ``HAND`` from the start, so registered builders read the hand tables.
+    Afterwards the views the test registered (every fixture-table name and
+    anything new) are dropped and the session unbound, so the next build
+    registers the real tables again and no hand rows leak into later tests."""
     from rugpull_data_pipeline_spark.plans import registry
     from rugpull_data_pipeline_spark.sources.tables import TABLES
 
+    from .helpers import HAND
+
     before = session_views(spark)
-    registry._VIEWS_FOR[id(spark)] = "unused"
+    registry.bind_views(spark, HAND, {})
     yield spark
     after = session_views(spark)
     for v in (after - before) | (after & set(TABLES)):
         spark.catalog.dropTempView(v)
-    registry._VIEWS_FOR.pop(id(spark), None)
+    registry.unbind_views(spark)

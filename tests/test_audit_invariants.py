@@ -21,7 +21,7 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture
 def views(spark):
     yield spark
-    registry._VIEWS_FOR.pop(id(spark), None)
+    registry.unbind_views(spark)
 
 
 def test_lsh_band_sensitivity_nesting_and_scurve(views):

@@ -12,7 +12,8 @@ from pyspark.sql import functions as F
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
 from rugpull_data_pipeline_spark.plans import registry
-from rugpull_data_pipeline_spark.plans.corpus_ops import zorder_key_sql
+from rugpull_data_pipeline_spark.plans.corpus_ops import _zval
+from tests.helpers import DOC_TEXT, _mk_docs
 
 
 def test_kmeans_matches_numpy_replica(spark, sf_dir):
@@ -53,7 +54,7 @@ def test_zorder_layout_bounds_both_dims(spark, sf_dir, tmp_path):
             F.pmod(F.xxhash64("l_orderkey"), F.lit(256)).alias("a"),
             F.pmod(F.xxhash64("l_partkey", F.lit(999)), F.lit(256)).alias("b"),
         )
-        .withColumn("z", F.expr(zorder_key_sql("a", "b", SPARK)))
+        .withColumn("z", F.expr(_zval("a", "b", SPARK)))
     )
     zpath, lpath = str(tmp_path / "zorder"), str(tmp_path / "linear")
     base.repartitionByRange(32, "z").sortWithinPartitions("z").write.parquet(zpath)
@@ -126,20 +127,14 @@ def test_substring_dedup_flags_cross_doc_windows(spark, sf_dir):
         assert (df["n_dup_windows"] > 0).sum() >= 2
 
 
-def test_bm25_scores_handmade(spark):
+def test_bm25_scores_handmade(hand_views):
     import math
     from rugpull_data_pipeline_spark.functions.scalars import SPARK
-    from rugpull_data_pipeline_spark.plans import registry
     from rugpull_data_pipeline_spark.plans.llm_ops import _bm25
 
-    spark.createDataFrame(
-        [(1, "table table x y"), (2, "table z")],
-        "doc_id long, text string",
-    ).createOrReplaceTempView("documents")
-    try:
-        rows = spark.sql(_bm25(SPARK)).collect()
-    finally:
-        registry._VIEWS_FOR.pop(id(spark), None)
+    spark = hand_views
+    _mk_docs(spark, [(1, "table table x y"), (2, "table z")], DOC_TEXT)
+    rows = spark.sql(_bm25(SPARK)).collect()
     # N=2, ntok=6, df(table)=2 -> idf = ln(1.2); dl1=4, dl2=2, avgdl=3.
     idf = math.log(1.2)
     s1 = idf * 2 * 2.2 / (2 + 1.2 * (0.25 + 0.75 * 4 / 3))
@@ -150,25 +145,17 @@ def test_bm25_scores_handmade(spark):
     assert rows[0].n_terms_hit == 1
 
 
-def test_suffix_prefix_overlap_directional(spark):
+def test_suffix_prefix_overlap_directional(hand_views):
     from rugpull_data_pipeline_spark.functions.scalars import SPARK
-    from rugpull_data_pipeline_spark.plans import registry
     from rugpull_data_pipeline_spark.plans.llm_ops import _suffix_prefix_overlap
 
     shared = "s1 s2 s3 s4 s5 s6 s7 s8"
     a = "x1 x2 " + shared          # ends with the shared window
     b = shared + " y1 y2"          # starts with it
     c = "z1 z2 z3 z4 z5 z6 z7 z8"  # unrelated
-    spark.createDataFrame(
-        [(1, a), (2, b), (3, c)], "doc_id long, text string"
-    ).createOrReplaceTempView("documents")
-    try:
-        got = [
-            (r.doc_a, r.doc_b)
-            for r in spark.sql(_suffix_prefix_overlap(SPARK)).collect()
-        ]
-    finally:
-        registry._VIEWS_FOR.pop(id(spark), None)
+    spark = hand_views
+    _mk_docs(spark, [(1, a), (2, b), (3, c)], DOC_TEXT)
+    got = [(r.doc_a, r.doc_b) for r in spark.sql(_suffix_prefix_overlap(SPARK)).collect()]
     assert got == [(1, 2)]  # directional: A's suffix -> B's prefix only
 
 
@@ -179,10 +166,11 @@ def test_bigram_kneser_ney_handmade(hand_views):
     spark = hand_views
     # bigrams: (a,b) x2, (a,c) x1 -> c1(a)=3, N1+(a.)=2, N1+(.b)=N1+(.c)=1,
     # T=2. P(b|a)=1.25/3+0.75*(2/3)*0.5=2/3; P(c|a)=0.25/3+0.25=1/3.
-    spark.createDataFrame(
+    _mk_docs(
+        spark,
         [(1, "a b"), (2, "a b"), (3, "a c"), (4, "solo")],
-        "doc_id long, text string",
-    ).createOrReplaceTempView("documents")
+        DOC_TEXT,
+    )
     got = {r.doc_id: r for r in registry.get("text_bigram_kneser_ney")
                                 .builder(spark, "unused").collect()}
     assert sorted(got) == [1, 2, 3]  # the 1-token doc has no bigrams

@@ -15,6 +15,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from rugpull_data_pipeline_spark.functions.scalars import DUCK, SPARK
+from tests.helpers import hand_table, _mk_docs, _mk_embeddings, _mk_events
 
 
 def _both(spark, events_rows, builder):
@@ -23,16 +24,7 @@ def _both(spark, events_rows, builder):
     pdf = pd.DataFrame(
         events_rows, columns=["event_id", "t", "user_id", "event_type", "value"]
     )
-    sdf = spark.createDataFrame(
-        pdf, "event_id long, t long, user_id long, event_type string, value double"
-    ).select(
-        "event_id",
-        F.col("t").cast("timestamp").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-    )
-    sdf.createOrReplaceTempView("events")
+    _mk_events(spark, pdf)
     con = duckdb.connect()
     dpdf = pdf.assign(ts=pd.to_datetime(pdf["t"], unit="s")).drop(columns=["t"])
     con.register("events", dpdf)
@@ -157,10 +149,12 @@ def test_kappa_unanimous_raters_null_both_engines(hand_views):
     # expected agreement is 1 and kappa undefined — NULL on both engines
     docs = [(i, "tiny", "en", "s0") for i in range(4)]
     spark = hand_views
-    spark.createDataFrame(
-        docs, "doc_id long, text string, lang string, source string"
-    ).withColumn("n_chars", F.length("text")).createOrReplaceTempView(
-        "documents"
+    hand_table(
+        spark,
+        "documents",
+        spark.createDataFrame(
+            docs, "doc_id long, text string, lang string, source string"
+        ).withColumn("n_chars", F.length("text")),
     )
     con = duckdb.connect()
     pdf = pd.DataFrame(docs, columns=["doc_id", "text", "lang", "source"])
@@ -182,9 +176,7 @@ def test_pmi_single_token_docs_empty_both_engines(hand_views):
     # size >= 2 prefilter; DuckDB's empty range() always skipped them
     docs = [(i, t, "en", "s0") for i, t in enumerate(["", "solo", "a b"])]
     spark = hand_views
-    spark.createDataFrame(
-        docs, "doc_id long, text string, lang string, source string"
-    ).createOrReplaceTempView("documents")
+    _mk_docs(spark, docs)
     con = duckdb.connect()
     con.register(
         "documents",
@@ -203,9 +195,7 @@ def test_zipf_single_term_null_both_engines(hand_views):
 
     docs = [(0, "word", "en", "s0"), (1, "word", "en", "s0")]
     spark = hand_views
-    spark.createDataFrame(
-        docs, "doc_id long, text string, lang string, source string"
-    ).createOrReplaceTempView("documents")
+    _mk_docs(spark, docs)
     con = duckdb.connect()
     con.register(
         "documents",
@@ -233,9 +223,7 @@ def test_cosine_zero_vector_null_both_engines(hand_views):
         (3, [1.0, 1.0, 1.0, 1.0], 1),
     ]
     spark = hand_views
-    spark.createDataFrame(
-        vecs, "vec_id long, embedding array<float>, label int"
-    ).createOrReplaceTempView("embeddings")
+    _mk_embeddings(spark, vecs)
     con = duckdb.connect()
     con.register(
         "embeddings",
@@ -300,13 +288,7 @@ def test_hits_edgeless_graph_null_scores_both_engines(hand_views):
     pdf = pd.DataFrame(
         rows, columns=["event_id", "t", "user_id", "event_type", "value"]
     )
-    sdf = spark.createDataFrame(
-        pdf, "event_id long, t long, user_id long, event_type string, value double"
-    ).select(
-        "event_id", F.col("t").cast("timestamp").alias("ts"),
-        "user_id", "event_type", "value",
-    )
-    sdf.createOrReplaceTempView("events")
+    _mk_events(spark, pdf)
     srows = mlprep_ops.graph_hits_power3(spark, "unused").collect()
 
     con = _duckdb.connect()
@@ -332,7 +314,7 @@ def test_higher_order_funcs_empty_text_csv_empty_string_both_engines(hand_views)
 
     spark = hand_views
     pdf = pd.DataFrame({"doc_id": [1, 2], "text": ["", "tiny words only"]})
-    spark.createDataFrame(pdf).createOrReplaceTempView("documents")
+    hand_table(spark, "documents", pdf)
     srows = spark.sql(_higher_order(SPARK)).collect()
 
     con = _duckdb.connect()

@@ -32,13 +32,13 @@ CASES = [
 @pytest.fixture
 def empty_views(spark):
     """The sweep's ``empty`` surface: real schemas (incl. event-time
-    normalization), zero rows, with the registry view cache pinned so
-    builders don't re-register; popped afterwards so other tests get the
-    real views back."""
+    normalization), zero rows, bound to ``SF`` so builders don't
+    re-register; unbound afterwards so other tests get the real views
+    back."""
     with duckdb.connect() as con:
         apply_surface(spark, con, SF, "empty")
     yield spark
-    registry._VIEWS_FOR.pop(id(spark), None)
+    registry.unbind_views(spark)
 
 
 @pytest.mark.parametrize("name,expected_rows", CASES)

@@ -4,7 +4,6 @@ operators (oracle parity is covered by test_correctness_oracle)."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
 from rugpull_data_pipeline_spark.plans import registry
@@ -13,22 +12,9 @@ from rugpull_data_pipeline_spark.plans.feature_ops import (
     _jl_project,
     _ridge,
 )
+from tests.helpers import DOCS_N, EVENTS, _mk_docs, _mk_embeddings, _mk_events
 
-
-def _mk_events(spark, rows):
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, t long, user_id long, event_type string, "
-        "value double, props string",
-    ).select(
-        "event_id",
-        F.col("t").cast("timestamp").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    )
-    df.createOrReplaceTempView("events")
+_EVENTS = EVENTS + ", props string"
 
 
 def test_rfm_three_users_get_distinct_terciles(hand_views):
@@ -43,7 +29,7 @@ def test_rfm_three_users_get_distinct_terciles(hand_views):
         (5, 86400 * 10 + 10, 3, "click", 50.0, "{}"),
         (6, 86400 * 10 + 20, 3, "click", 50.0, "{}"),
     ]
-    _mk_events(spark, rows)
+    _mk_events(spark, rows, _EVENTS)
     got = {(r.r_score, r.f_score, r.m_score): r.n_users
            for r in registry.get("events_rfm_segments")
                     .builder(spark, "unused").collect()}
@@ -57,9 +43,7 @@ def test_ridge_recovers_strong_linear_signal_with_mild_shrinkage(hand_views):
     # shrinkage negligible.
     rows = [(i, " ".join(["tok"] * (i + 1)), "en", "s", 3 + 2 * (i + 1))
             for i in range(40)]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).createOrReplaceTempView("documents")
+    _mk_docs(spark, rows, DOCS_N)
     row = spark.sql(_ridge(SPARK)).collect()[0]
     assert row.w1 == pytest.approx(2.0, abs=0.01)
     assert row.intercept == pytest.approx(3.0, abs=0.5)
@@ -75,7 +59,7 @@ def test_completeness_counts_nulls_per_column(hand_views):
         (3, 30, 1, "view", None, None),
         (4, 40, 1, "view", 2.0, "{}"),
     ]
-    _mk_events(spark, rows)
+    _mk_events(spark, rows, _EVENTS)
     got = {r.col_name: r for r in spark.sql(_completeness(SPARK)).collect()}
     assert len(got) == 6 and all(r.n_rows == 4 for r in got.values())
     assert got["value"].n_null == 2 and got["value"].null_frac == 0.5
@@ -88,9 +72,7 @@ def test_jl_projection_is_linear(hand_views):
     spark = hand_views
     v = [float((i * 7) % 5 - 2) for i in range(64)]
     rows = [(0, v, 0), (1, [2 * x for x in v], 0)]
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).createOrReplaceTempView("embeddings")
+    _mk_embeddings(spark, rows)
     out = spark.sql(_jl_project(SPARK)).collect()
     p0 = {r.out_dim: r.pv for r in out if r.vec_id == 0}
     p1 = {r.out_dim: r.pv for r in out if r.vec_id == 1}
@@ -109,7 +91,7 @@ def test_holt_fold_matches_hand_computation(hand_views):
         (2, 3700, 1, "click", 8.0, "{}"),
         (3, 7300, 1, "click", 16.0, "{}"),
     ]
-    _mk_events(spark, rows)
+    _mk_events(spark, rows, _EVENTS)
     got = [(r.level, r.trend, r.forecast_next)
            for r in window_holt_linear(spark, "unused").collect()]
     assert got == [(4.0, 0.0, 4.0), (6.0, 1.0, 7.0), (11.5, 3.25, 14.75)]
@@ -120,7 +102,7 @@ def test_bootstrap_constant_values_collapse_interval(hand_views):
     from rugpull_data_pipeline_spark.plans.feature_ops import _bootstrap
     # constant value -> every resample mean equals it exactly: the CI
     # collapses to a point and the bootstrap sd is 0.
-    _mk_events(spark, [(i, 10 * i, 1, "click", 7.0, "{}") for i in range(20)])
+    _mk_events(spark, [(i, 10 * i, 1, "click", 7.0, "{}") for i in range(20)], _EVENTS)
     row = spark.sql(_bootstrap(SPARK)).collect()[0]
     assert row.mean_value == 7.0
     assert row.boot_lo == 7.0 and row.boot_hi == 7.0 and row.boot_sd == 0.0
@@ -133,7 +115,7 @@ def test_kcore_peels_pendant_but_keeps_triangle(hand_views):
     # only (separate hour) -> pendant peels, triangle survives at degree 2.
     rows = [(i, 100 + i, u, "a", 1.0, "{}") for i, u in enumerate([1, 2, 3])]
     rows += [(10 + i, 7200 + i, u, "b", 1.0, "{}") for i, u in enumerate([1, 4])]
-    _mk_events(spark, rows)
+    _mk_events(spark, rows, _EVENTS)
     got = {r.user_id: r.core_degree
            for r in registry.get("graph_kcore_peel").builder(spark, "unused").collect()}
     assert got == {1: 2, 2: 2, 3: 2}

@@ -9,7 +9,6 @@ import hashlib
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
 from rugpull_data_pipeline_spark.plans import registry
@@ -21,26 +20,11 @@ from rugpull_data_pipeline_spark.plans.mlprep_ops import (
     _word_entropy,
     _ws_normalize,
 )
+from tests.helpers import DOC_TEXT, _mk_docs, _mk_embeddings, _mk_events
+
+_EVENTS = "event_id long, t long, event_type string, value double"
 
 DAY0 = 1704067200  # 2024-01-01T00:00:00Z — the linreg day-index anchor
-
-
-def _mk_events(spark, rows):
-    df = spark.createDataFrame(
-        rows, "event_id long, t long, event_type string, value double"
-    ).select(
-        "event_id",
-        F.col("t").cast("timestamp").alias("ts"),
-        "event_type",
-        "value",
-    )
-    df.createOrReplaceTempView("events")
-
-
-def _mk_docs(spark, rows):
-    spark.createDataFrame(rows, "doc_id long, text string").createOrReplaceTempView(
-        "documents"
-    )
 
 
 def test_rolling_median_interpolates_and_skips_nulls(hand_views):
@@ -54,6 +38,7 @@ def test_rolling_median_interpolates_and_skips_nulls(hand_views):
             (4, 40, "a", 3.0),  # median{1,100,3} = 3
             (5, 10, "b", 7.0),  # other series unaffected
         ],
+        _EVENTS,
     )
     got = {r.event_id: r.roll_median_5 for r in spark.sql(_rolling_median(SPARK)).collect()}
     assert got[1] == pytest.approx(1.0)
@@ -69,7 +54,7 @@ def test_acf_signs_on_constructed_series(hand_views):
     # series "alt": +1,-1,... -> lag1 = -1, lag2 = +1, lag3 = -1
     rows = [(i, 10 * i, "ramp", float(i)) for i in range(1, 7)]
     rows += [(100 + i, 10 * i, "alt", (-1.0) ** i) for i in range(1, 7)]
-    _mk_events(spark, rows)
+    _mk_events(spark, rows, _EVENTS)
     got = {(r.event_type, r.lag_k): r for r in spark.sql(_acf_lags(SPARK)).collect()}
     for k in (1, 2, 3):
         assert got[("ramp", k)].acf == pytest.approx(1.0)
@@ -92,7 +77,7 @@ def test_linreg_recovers_exact_line_and_needs_two_days(hand_views):
             eid += 1
             rows.append((eid, DAY0 + 86400 * day + 60 * eid, "line", y + dv))
     rows.append((99, DAY0, "one", 42.0))
-    _mk_events(spark, rows)
+    _mk_events(spark, rows, _EVENTS)
     got = {r.event_type: r for r in spark.sql(_linreg_daily(SPARK)).collect()}
     assert got["line"].slope_per_day == pytest.approx(2.0)
     assert got["line"].intercept == pytest.approx(5.0)
@@ -109,6 +94,7 @@ def test_word_entropy_bounds(hand_views):
             (2, "a b c d"),  # uniform over 4 -> ln 4
             (3, "a a b b"),  # uniform over 2 -> ln 2
         ],
+        DOC_TEXT,
     )
     got = {r.doc_id: r for r in spark.sql(_word_entropy(SPARK)).collect()}
     assert got[1].token_entropy_nats == pytest.approx(0.0)
@@ -126,6 +112,7 @@ def test_whitespace_normalize_collapses_controls(hand_views):
             (2, "abc"),  # untouched
             (3, "  x  "),  # trim only
         ],
+        DOC_TEXT,
     )
     got = {r.doc_id: r for r in spark.sql(_ws_normalize(SPARK)).collect()}
     assert got[1].raw_len == 6 and got[1].clean_len == 5 and got[1].collapsed
@@ -139,7 +126,7 @@ def _expected_bucket(tok: str) -> int:
 
 def test_feature_hash_buckets_match_portable_hash(hand_views):
     spark = hand_views
-    _mk_docs(spark, [(1, "cat dog cat"), (2, "dog")])
+    _mk_docs(spark, [(1, "cat dog cat"), (2, "dog")], DOC_TEXT)
     got = {(r.doc_id, r.bucket): r.tf for r in spark.sql(_feature_hash(SPARK)).collect()}
     cat, dog = _expected_bucket("cat"), _expected_bucket("dog")
     if cat == dog:  # collision: counts merge (by design for the hashing trick)
@@ -159,6 +146,7 @@ def test_containment_is_asymmetric(hand_views):
             (2, "w1 w2 w3 w4 w5 w6 w7 w8"),
             (3, "x1 x2 x3"),  # disjoint doc pairs with nobody
         ],
+        DOC_TEXT,
     )
     rows = registry.get("dedup_containment_ngram").builder(spark, "unused").collect()
     assert [(r.src_doc, r.dst_doc, r.containment) for r in rows] == [(1, 2, 1.0)]
@@ -167,7 +155,7 @@ def test_containment_is_asymmetric(hand_views):
 def test_bollinger_flags_spike_and_never_nulls_breakout(hand_views):
     spark = hand_views
     rows = [(i, 10 * i, "a", 1.0) for i in range(1, 8)] + [(8, 80, "a", 30.0)]
-    _mk_events(spark, rows)
+    _mk_events(spark, rows, _EVENTS)
     from rugpull_data_pipeline_spark.plans.mlprep_ops import _bollinger
 
     got = {r.event_id: r for r in spark.sql(_bollinger(SPARK)).collect()}
@@ -190,9 +178,7 @@ def test_mmr_prefers_diverse_over_redundant(hand_views):
         (1, [0.8, 0.6], 0),    # rel 0.8, sim-to-0 0.8 -> mmr 0.4
         (2, [0.0, 1.0], 0),    # rel 0.0, sim-to-1 0.6 -> mmr -0.3
     ]
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).createOrReplaceTempView("embeddings")
+    _mk_embeddings(spark, rows)
     from rugpull_data_pipeline_spark.plans import registry
 
     got = registry.get("sim_mmr_diversify").builder(spark, "unused").collect()
@@ -207,7 +193,7 @@ def test_bpe_round2_applies_greedy_leftmost_merge(hand_views):
     # round 1 top pair is (x,y) with 3 occurrences; after applying it,
     # doc 1 becomes [xy, xy] and doc 2 [xy, z]. The a-a-a-a doc proves
     # greedy non-overlap: round-1 counting sees (a,a) twice but (x,y) wins.
-    _mk_docs(spark, [(1, "x y x y"), (2, "x y z")])
+    _mk_docs(spark, [(1, "x y x y"), (2, "x y z")], DOC_TEXT)
     from rugpull_data_pipeline_spark.plans import registry
 
     rows = registry.get("text_bpe_merge_round2").builder(spark, "unused").collect()
@@ -222,7 +208,7 @@ def test_bpe_round2_merges_consecutive_runs_like_bpe(hand_views):
     spark = hand_views
     # [a,a,a,a,a] under merge (a,a): greedy leftmost gives [aa,aa,a] —
     # a single-space join would have produced [aa,a,a].
-    _mk_docs(spark, [(1, "a a a a a")])
+    _mk_docs(spark, [(1, "a a a a a")], DOC_TEXT)
     from rugpull_data_pipeline_spark.plans import registry
 
     rows = registry.get("text_bpe_merge_round2").builder(spark, "unused").collect()
@@ -230,22 +216,9 @@ def test_bpe_round2_merges_consecutive_runs_like_bpe(hand_views):
     assert got == {("aa", "aa"): 1, ("aa", "a"): 1}
 
 
-def _mk_user_events(spark, rows):
-    df = spark.createDataFrame(
-        rows, "event_id long, t long, user_id long, event_type string, value double"
-    ).select(
-        "event_id",
-        F.col("t").cast("timestamp").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-    )
-    df.createOrReplaceTempView("events")
-
-
 def test_pit_join_is_leakage_free_and_cardinality_preserving(hand_views):
     spark = hand_views
-    _mk_user_events(
+    _mk_events(
         spark,
         [
             (1, 100, 1, "purchase", 10.0),
@@ -285,6 +258,7 @@ def test_filter_gate_verdicts(hand_views):
             (3, " ".join(["spam"] * 30)),   # distinct/dup3 rules
             (4, " ".join(f"verylongword{i:02d}" for i in range(30))),  # no stopwords, too-long tokens
         ],
+        DOC_TEXT,
     )
     from rugpull_data_pipeline_spark.plans.mlprep_ops import _filter_gate
 
@@ -299,7 +273,7 @@ def test_filter_gate_verdicts(hand_views):
 
 def test_attribution_last_touch_semantics(hand_views):
     spark = hand_views
-    _mk_user_events(
+    _mk_events(
         spark,
         [
             # user 1: click 100 s before purchase -> attributed to click
@@ -337,7 +311,7 @@ def test_pagerank_hand_graph(hand_views):
     # 3 damped iterations from (0.5, 0.5), hand-computed:
     #   r1 = (0.2875, 0.7125); r2 = (0.377813, 0.622188)
     #   r3 = (0.339430, 0.660570)
-    _mk_user_events(
+    _mk_events(
         spark,
         [
             (1, 10, 1, "a", None), (2, 20, 1, "b", None), (3, 30, 1, "b", None),
@@ -359,7 +333,7 @@ def test_rsi_frame_fill_and_direction(hand_views):
     # (G+L = 0 guard).
     rows = [(i, 10 * i, "up", float(i)) for i in range(1, 16)]
     rows += [(100 + i, 10 * i, "flat", 5.0) for i in range(1, 16)]
-    _mk_events(spark, rows)
+    _mk_events(spark, rows, _EVENTS)
     from rugpull_data_pipeline_spark.plans.mlprep_ops import _rsi14
 
     got = {r.event_id: r.rsi_14 for r in spark.sql(_rsi14(SPARK)).collect()}
@@ -372,7 +346,7 @@ def test_hhi_two_equal_holders(hand_views):
     spark = hand_views
     # two users with equal value -> shares 0.5/0.5 -> HHI 0.5, top 0.5;
     # a monopolist type -> HHI 1.0. Zero/negative values are excluded.
-    _mk_user_events(
+    _mk_events(
         spark,
         [
             (1, 10, 1, "dual", 30.0),
@@ -399,9 +373,7 @@ def test_knn_majority_vote_with_tiebreak(hand_views):
         rows.append((20 + i, [1.0, 0.001 * i], 1))
     for i in range(4):
         rows.append((40 + i, [0.9, 0.3 + 0.001 * i], 0))
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).createOrReplaceTempView("embeddings")
+    _mk_embeddings(spark, rows)
     from rugpull_data_pipeline_spark.plans.mlprep_ops import _knn_classify
 
     got = spark.sql(_knn_classify(SPARK)).collect()
@@ -415,7 +387,7 @@ def test_temporal_split_cutoff_and_no_overlap(hand_views):
     spark = hand_views
     # 10 samples at t=1..10: the exact 80th percentile is 8.2, so train
     # holds t<=8 (8 rows) and test t>=9 (2 rows) — max(train) < min(test).
-    _mk_events(spark, [(i, i, "a", 1.0) for i in range(1, 11)])
+    _mk_events(spark, [(i, i, "a", 1.0) for i in range(1, 11)], _EVENTS)
     from rugpull_data_pipeline_spark.plans.mlprep_ops import _temporal_split
 
     got = {(r.event_type, r.split): r for r in spark.sql(_temporal_split(SPARK)).collect()}
@@ -439,6 +411,7 @@ def test_time_rollup_levels(hand_views):
             (4, D, "purchase", 8.0),
             (5, 0, "click", 99.0),
         ],
+        _EVENTS,
     )
     from rugpull_data_pipeline_spark.plans.mlprep_ops import _time_rollup
 
@@ -464,6 +437,7 @@ def test_seasonal_baseline_deviation(hand_views):
             (2, 60, "a", 3.0),
             (3, 3600, "a", 7.0),
         ],
+        _EVENTS,
     )
     from rugpull_data_pipeline_spark.plans.mlprep_ops import _seasonal_baseline
 
@@ -483,9 +457,11 @@ def test_token_budget_mixture_greedy_prefix(hand_views):
         (2, " ".join(f"u{i}" for i in range(500))),          # ratio 1.0
         (3, " ".join(f"v{i % 150}" for i in range(300))),    # ratio 0.5
     ]
-    spark.createDataFrame(
-        [(d, t, "s0") for d, t in docs], "doc_id long, text string, source string"
-    ).createOrReplaceTempView("documents")
+    _mk_docs(
+        spark,
+        [(d, t, "s0") for d, t in docs],
+        "doc_id long, text string, source string",
+    )
     from rugpull_data_pipeline_spark.plans.mlprep_ops import _token_budget_mixture
 
     rows = spark.sql(_token_budget_mixture(SPARK)).collect()
@@ -495,7 +471,7 @@ def test_token_budget_mixture_greedy_prefix(hand_views):
 def test_hits_hand_graph_matches_replica(hand_views):
     spark = hand_views
     # u1: a->b, b->b ; u2: a->b, b->a  =>  w(a->b)=2, w(b->b)=1, w(b->a)=1
-    _mk_user_events(
+    _mk_events(
         spark,
         [
             (1, 10, 1, "a", None), (2, 20, 1, "b", None), (3, 30, 1, "b", None),

@@ -15,6 +15,7 @@ on, independently of the (slower, registry-level) oracle gate:
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from tests.helpers import _mk_embeddings
 
 
 def _union_entries(tx):
@@ -112,7 +113,7 @@ def test_lsh_buckets_df_matches_sql_twin(spark, sf_dir):
     from rugpull_data_pipeline_spark.plans import registry
     from rugpull_data_pipeline_spark.plans.llm_ops import _lsh_buckets
 
-    registry._ensure_views(spark, sf_dir)
+    registry.bind_views(spark, sf_dir)
     spark_rows = sorted(map(tuple, spark.sql(_lsh_buckets(SPARK)).collect()))
     duck_rows = _duck_buckets(
         "CREATE VIEW embeddings AS SELECT * FROM "
@@ -136,9 +137,7 @@ def test_lsh_buckets_df_matches_sql_twin_degenerate(hand_views):
         (4, [None, None], 0),
         (5, [-1e-9, 1e-9], 0),
     ]
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).createOrReplaceTempView("embeddings")
+    _mk_embeddings(spark, rows)
     spark_rows = sorted(map(tuple, spark.sql(_lsh_buckets(SPARK)).collect()))
 
     def lit(v):

@@ -6,7 +6,6 @@ could only reveal indirectly)."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
 from rugpull_data_pipeline_spark.plans import registry
@@ -17,25 +16,9 @@ from rugpull_data_pipeline_spark.plans.pipeline_ops import (
     _interval_overlap,
     _transition_matrix,
 )
+from tests.helpers import DOC_TEXT, PROP, _mk_docs, _mk_embeddings, _mk_events
 
-
-def _mk_events(spark, rows):
-    df = spark.createDataFrame(
-        [(eid, t, uid, et) for eid, t, uid, et in rows],
-        "event_id long, t long, user_id long, event_type string",
-    ).select(
-        "event_id",
-        F.col("t").cast("timestamp").alias("ts"),
-        "user_id",
-        "event_type",
-    )
-    df.createOrReplaceTempView("events")
-
-
-def _mk_docs(spark, rows):
-    spark.createDataFrame(rows, "doc_id long, text string").createOrReplaceTempView(
-        "documents"
-    )
+_EVENTS = "event_id long, t long, user_id long, event_type string"
 
 
 def test_chunking_boundaries(hand_views):
@@ -47,6 +30,7 @@ def test_chunking_boundaries(hand_views):
             (2, " ".join(f"t{i}" for i in range(32))),  # exact chunk size
             (3, " ".join(f"t{i}" for i in range(33))),  # one token past
         ],
+        DOC_TEXT,
     )
     rows = spark.sql(_chunk_sliding(SPARK)).collect()
     by_doc = {}
@@ -83,6 +67,7 @@ def test_asof_tolerance_semantics(hand_views):
             (50, 899, 5, "click"),
             (51, 901, 5, "purchase"),
         ],
+        _EVENTS,
     )
     got = {r.click_id: (r.purchase_id, r.dt_s) for r in spark.sql(
         _asof_tolerance(SPARK)
@@ -110,6 +95,7 @@ def test_interval_overlap_semantics(hand_views):
             (30, 0, 3, "signup"),
             (31, 3000, 3, "error"),
         ],
+        _EVENTS,
     )
     rows = spark.sql(_interval_overlap(SPARK)).collect()
     got = {(r.signup_id, r.error_id): r.overlap_s for r in rows}
@@ -133,6 +119,7 @@ def test_transition_matrix_rows_normalize(hand_views):
             (5, 100, 2, "view"),
             (6, 200, 2, "click"),
         ],
+        _EVENTS,
     )
     rows = spark.sql(_transition_matrix(SPARK)).collect()
     got = {(r.prev_type, r.next_type): (r.n, r.p) for r in rows}
@@ -162,6 +149,7 @@ def test_chunk_decontaminate_flags_embedded_eval_span(hand_views):
             (30, "x1 x2 x3 x4 " + eval_span + " y1 y2 y3 y4"),
             (40, " ".join(f"z{i}" for i in range(16))),  # clean train doc
         ],
+        DOC_TEXT,
     )
     rows = spark.sql(_chunk_decontaminate(SPARK)).collect()
     by_doc = {r.doc_id: r for r in rows}
@@ -186,13 +174,7 @@ def test_twap_weights_by_holding_time(hand_views):
         (5, 500, 1, "view", 7.0),
         (6, 600, 1, "view", 1.0),
     ]
-    df = spark.createDataFrame(
-        rows, "event_id long, t long, user_id long, event_type string, value double"
-    ).select(
-        "event_id", F.col("t").cast("timestamp").alias("ts"),
-        "user_id", "event_type", "value",
-    )
-    df.createOrReplaceTempView("events")
+    _mk_events(spark, rows)
     from rugpull_data_pipeline_spark.plans.pipeline_ops import _twap_irregular
 
     got = {r.event_type: r for r in spark.sql(_twap_irregular(SPARK)).collect()}
@@ -210,13 +192,7 @@ def test_mad_outliers_robust_to_the_outlier_itself(hand_views):
     # stats would be dragged by the outlier — MAD must not be
     vals = [9.0, 9.5, 10.0, 10.0, 10.0, 10.5, 11.0, 9.8, 10.2, 1000.0]
     rows = [(i, i * 60, 1, "click", v) for i, v in enumerate(vals)]
-    df = spark.createDataFrame(
-        rows, "event_id long, t long, user_id long, event_type string, value double"
-    ).select(
-        "event_id", F.col("t").cast("timestamp").alias("ts"),
-        "user_id", "event_type", "value",
-    )
-    df.createOrReplaceTempView("events")
+    _mk_events(spark, rows)
 
     r = {x.event_type: x for x in registry.get("agg_mad_outliers")
                                   .builder(spark, "unused").collect()}["click"]
@@ -232,7 +208,7 @@ def test_importance_sampling_threshold_is_exact(hand_views):
         (1, "a b c d e f g h", "en"),        # all-distinct: q = 1 -> u < 1e6 always kept
         (2, "a a a a a a a a", "en"),         # q = 1/8 -> kept iff u < 15625
     ]
-    spark.createDataFrame(docs, "doc_id long, text string, lang string").createOrReplaceTempView("documents")
+    _mk_docs(spark, docs, "doc_id long, text string, lang string")
     from rugpull_data_pipeline_spark.plans.pipeline_ops import _importance_sample
 
     rows = {r.doc_id: r for r in spark.sql(_importance_sample(SPARK)).collect()}
@@ -253,6 +229,7 @@ def test_winnowing_guarantee_and_short_doc_exclusion(hand_views):
             (3, "c1 c2 c3 c4 c5"),  # 5 tokens < 6 -> no fingerprints at all
             (4, " ".join(f"d{i}" for i in range(12))),  # unrelated
         ],
+        DOC_TEXT,
     )
     from rugpull_data_pipeline_spark.plans.pipeline_ops import (
         _winnow_fingerprint,
@@ -280,7 +257,7 @@ def test_pmi_min_count_and_ratio(hand_views):
     # bigram "x y" appears 6 times; "p q" only twice (below min count 5)
     docs = [(i, "x y filler" + str(i)) for i in range(6)]
     docs += [(10, "p q"), (11, "p q")]
-    _mk_docs(spark, docs)
+    _mk_docs(spark, docs, DOC_TEXT)
 
     rows = registry.get("text_pmi_collocations").builder(spark, "unused").collect()
     got = {(r.a, r.b): r for r in rows}
@@ -290,19 +267,6 @@ def test_pmi_min_count_and_ratio(hand_views):
     assert r.n_ab == 6
     # PMI ratio must exceed 1 (x and y co-occur far above independence)
     assert r.pmi_ratio > 1.0
-
-
-def _mk_events_valued(spark, rows):
-    df = spark.createDataFrame(
-        rows, "event_id long, t long, user_id long, event_type string, value double"
-    ).select(
-        "event_id",
-        F.col("t").cast("timestamp").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-    )
-    df.createOrReplaceTempView("events")
 
 
 def test_manifest_prune_zone_maps(hand_views):
@@ -317,7 +281,7 @@ def test_manifest_prune_zone_maps(hand_views):
         (1, 200, 2, "click", 1.50),
         (2, 3 * 3600, 42, "click", 9.50),
     ]
-    _mk_events_valued(spark, rows)
+    _mk_events(spark, rows)
     got = {r.probe: r for r in spark.sql(_manifest_prune(SPARK)).collect()}
     # top_value_band (cents >= 900): file 0 zone [100,150] misses -> skipped.
     assert (got["top_value_band"].n_files, got["top_value_band"].n_skipped) == (2, 1)
@@ -337,7 +301,8 @@ def test_kcenter_farthest_point_traversal(hand_views):
         sample_kcenter_coreset,
     )
 
-    spark.createDataFrame(
+    _mk_embeddings(
+        spark,
         [
             (0, [0.0, 0.0]),
             (1, [8.0, 0.0]),
@@ -345,7 +310,7 @@ def test_kcenter_farthest_point_traversal(hand_views):
             (3, [1.0, 1.0]),
         ],
         "vec_id long, embedding array<float>",
-    ).createOrReplaceTempView("embeddings")
+    )
     rows = sample_kcenter_coreset(spark, "unused").collect()
     # greedy: seed 0, then the farthest-point order 1 (64), 2 (36), 3 (2);
     # distances are micro-scaled so 8.0 -> 8e6, squared 64e12.
@@ -362,7 +327,7 @@ def test_bloom_prefilter_no_false_negatives(hand_views):
     rows = [(0, 100, 7, "purchase", 600.0)]
     rows += [(i, 200 + i, i, "click", 1.0) for i in range(1, 6)]
     rows += [(10, 300, 7, "view", 2.0)]
-    _mk_events_valued(spark, rows)
+    _mk_events(spark, rows)
     got = {
         r.event_type: r
         for r in registry.get("join_bloom_prefilter").builder(spark, "unused").collect()
@@ -390,7 +355,7 @@ def test_sql_scripting_threshold_walk(hand_views):
     # one doubling to thr=2 leaves only the spike (1 of 101 <= 1%).
     rows = [(i, i, 1, "click", 0.01) for i in range(100)]
     rows.append((100, 200, 1, "purchase", 10.0))
-    _mk_events_valued(spark, rows)
+    _mk_events(spark, rows)
     row = spark4_sql_scripting(spark, "unused").collect()[0]
     assert (row.threshold_cents, row.n_above, row.n_total, row.n_iters) == (
         2, 1, 101, 1,
@@ -400,14 +365,10 @@ def test_sql_scripting_threshold_walk(hand_views):
 def _kcenter_property(spark_session):
     """Hypothesis-driven: the Spark traversal must equal the pure-Python
     Gonzalez greedy on random small vector sets."""
-    from hypothesis import HealthCheck, given, settings
+    from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    @settings(
-        max_examples=5,
-        deadline=None,
-        suppress_health_check=[HealthCheck.function_scoped_fixture],
-    )
+    @settings(**PROP)
     @given(
         st.lists(
             st.tuples(st.integers(-50, 50), st.integers(-50, 50)),
@@ -418,20 +379,16 @@ def _kcenter_property(spark_session):
     )
     def inner(pts):
         spark = spark_session
-        from rugpull_data_pipeline_spark.plans import registry
         from rugpull_data_pipeline_spark.plans.pipeline_ops import (
             sample_kcenter_coreset,
         )
 
-        spark.createDataFrame(
+        _mk_embeddings(
+            spark,
             [(i, [float(x), float(y)]) for i, (x, y) in enumerate(pts)],
             "vec_id long, embedding array<float>",
-        ).createOrReplaceTempView("embeddings")
-        registry._VIEWS_FOR[id(spark)] = "unused"  # static_table reads the view
-        try:
-            rows = sample_kcenter_coreset(spark, "unused").collect()
-        finally:
-            registry._VIEWS_FOR.pop(id(spark), None)
+        )
+        rows = sample_kcenter_coreset(spark, "unused").collect()
         # python replica on the micro-quantized integers
         import math
         iv = [
@@ -459,8 +416,8 @@ def _kcenter_property(spark_session):
     return inner
 
 
-def test_kcenter_matches_bruteforce_greedy(spark):
-    _kcenter_property(spark)()
+def test_kcenter_matches_bruteforce_greedy(hand_views):
+    _kcenter_property(hand_views)()
 
 
 def test_vacuum_plan_flags_expired_and_superseded(hand_views):
@@ -477,7 +434,7 @@ def test_vacuum_plan_flags_expired_and_superseded(hand_views):
     rows += [(10, 86400 + 6 * 3600, 3, "click")]
     # Superseded: day 20, slot 1, 3 rows (192 B < 2400) but retained.
     rows += [(20 + i, 20 * 86400 + 3 * 3600 + i, 4, "click") for i in range(3)]
-    _mk_events(spark, rows)
+    _mk_events(spark, rows, _EVENTS)
     got = [
         (r.day, r.reason, r.n_files, r.reclaim_bytes, r.first_slot, r.last_slot)
         for r in spark.sql(_vacuum_plan(SPARK)).collect()

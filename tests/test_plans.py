@@ -12,6 +12,7 @@ from rugpull_data_pipeline_spark.plans import registry
 from rugpull_data_pipeline_spark.sources.tables import TABLES
 from tests.conftest import session_views
 from tools.plan_fingerprint import CAP, executed_plan, fact_scan_counts
+from tests.helpers import _mk_events
 
 SF = "/root/testdata/sf0.001"
 
@@ -442,9 +443,7 @@ def test_runtime_bloom_filter_prunes_fact_shuffle(spark):
         restore[k] = spark.conf.get(k)
         spark.conf.set(k, v)
     try:
-        from rugpull_data_pipeline_spark.sources.tables import register_views
-
-        register_views(spark, SF)
+        registry.bind_views(spark, SF)
         plan = (
             spark.sql(
                 """
@@ -497,7 +496,7 @@ def test_scan_guard_detects_inlined_class(spark):
         _mad_screen,
     )
 
-    registry._ensure_views(spark, SF)
+    registry.bind_views(spark, SF)
     bad = spark.sql(_mad_screen(SPARK, grid=_mad_grid_core(SPARK)))  # inlined
     counts = fact_scan_counts(executed_plan(bad))
     assert max(counts.values(), default=0) > CAP, (
@@ -714,6 +713,57 @@ def test_solana_chain_is_written_once_per_engine():
     assert min_bt == ["domain:<module>"], f"min_bt defined in {min_bt}"
 
 
+def test_fixture_tables_are_read_one_way():
+    """A builder reads a fixture table only as its registered view: no
+    parquet fallback in plans/, and the view cache is read and written by
+    plans/registry.py alone (``bind_views``/``unbind_views``). Hand-made
+    test tables go through the one helper in tests/helpers.py."""
+    import ast
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+
+    def names(path):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Name):
+                yield node.id
+            elif isinstance(node, ast.Attribute):
+                yield node.attr
+            elif isinstance(node, ast.alias):
+                yield node.name
+            elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield "def " + node.name
+
+    plans = repo / "rugpull_data_pipeline_spark" / "plans"
+    fallback = {"static_table", "views_valid", "load_tables", "_static_table"}
+    found = [
+        f"{p.name}: {n}"
+        for p in sorted(plans.glob("*.py"))
+        for n in names(p)
+        if n.removeprefix("def ") in fallback
+    ]
+    assert found == [], found
+    sources = [*repo.glob("*.py")] + [
+        p
+        for d in ("rugpull_data_pipeline_spark", "tools", "tests", "perfbench")
+        for p in (repo / d).rglob("*.py")
+    ]
+    private = {"_VIEWS_FOR", "_ensure_views"}
+    pokes = [
+        f"{p.relative_to(repo)}: {n}"
+        for p in sorted(sources)
+        if p != plans / "registry.py"
+        for n in names(p)
+        if n in private
+    ]
+    assert pokes == [], pokes
+    mk_events = [
+        p.name for p in sorted((repo / "tests").glob("*.py")) for n in names(p)
+        if n == "def _mk_events"
+    ]
+    assert mk_events == ["helpers.py"], mk_events
+
+
 def test_drain_stops_a_replay_at_its_deadline(spark, monkeypatch):
     """A replay still running at the deadline is stopped and fails with
     TimeoutError instead of grading a partial sink; the session's shuffle
@@ -785,7 +835,7 @@ _HAND_BUILDER_JOBS = {
 def _build_jobs(spark, name: str) -> int:
     """Spark jobs started while ``name``'s builder constructs its frame."""
     sc = spark.sparkContext
-    registry._ensure_views(spark, SF)
+    registry.bind_views(spark, SF)
     group = f"build:{name}"
     sc.setJobGroup(group, group)
     try:
@@ -814,7 +864,7 @@ def test_concurrent_pair_builds_match_sequential(spark):
     def build():
         return registry.get("graph_bfs_frontier3").builder(spark, SF).collect()
 
-    registry._ensure_views(spark, SF)
+    registry.bind_views(spark, SF)
     want = build()
     with ThreadPoolExecutor(2) as pool:
         got = [f.result() for f in [pool.submit(build) for _ in range(2)]]

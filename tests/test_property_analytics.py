@@ -8,40 +8,24 @@ run against hand temp views (the test_property_* convention)."""
 
 from __future__ import annotations
 
-from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
 from rugpull_data_pipeline_spark.plans import registry
-
-PROP = dict(
-    max_examples=5,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-
-
-def _round6(x: float) -> float:
-    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
-
-
-def _mk_events(spark, rows):
-    spark.createDataFrame(
-        rows, "event_id long, t long, user_id long, event_type string, value double"
-    ).selectExpr(
-        "event_id", "cast(t as timestamp) AS ts", "user_id", "event_type", "value"
-    ).createOrReplaceTempView("events")
+from tests.helpers import PROP, hand_table, _mk_events, _mk_lineitem, _round6
 
 
 def _mk_customer(spark, rows):
-    spark.createDataFrame(
+    hand_table(
+        spark,
+        "customer",
         [(i, f"c{i}", nat, bal, seg) for i, (nat, seg, bal) in enumerate(rows)],
         "c_custkey long, c_name string, c_nationkey int, c_acctbal double, "
         "c_mktsegment string",
-    ).createOrReplaceTempView("customer")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -116,20 +100,15 @@ def test_sssp_matches_bruteforce(hand_views, pairs, seeds):
         (o, p, i, 1, 1.0, 1.0, 0.0, 0.0, "N", "O", 1_700_000_000 + i)
         for i, (o, p) in enumerate(pairs)
     ]
-    spark.createDataFrame(
-        li,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int, "
-        "l_quantity double, l_extendedprice double, l_discount double, "
-        "l_tax double, l_returnflag string, l_linestatus string, t long",
-    ).selectExpr("*", "cast(t as timestamp) AS l_shipdate").drop(
-        "t"
-    ).createOrReplaceTempView("lineitem")
+    _mk_lineitem(spark, li)
     all_parts = sorted({p for _, p in pairs} | seeds)
-    spark.createDataFrame(
+    hand_table(
+        spark,
+        "part",
         [(p, f"p{p}", "B", "T", 1 if p in seeds else 2, 10.0) for p in all_parts],
         "p_partkey long, p_name string, p_brand string, p_type string, "
         "p_size int, p_retailprice double",
-    ).createOrReplaceTempView("part")
+    )
     got = [
         (r.rn, r.node, r.dist)
         for r in registry.get("graph_sssp_bellman3").builder(spark, "unused").collect()
@@ -363,11 +342,13 @@ def test_nearest_value_matches_bruteforce(hand_views, cat, probes):
     spark = hand_views
     from rugpull_data_pipeline_spark.plans.analytics_ops import _nearest_value
 
-    spark.createDataFrame(
+    hand_table(
+        spark,
+        "part",
         [(k, f"p{k}", "B", "T", 1, c / 100.0) for k, c in enumerate(cat)],
         "p_partkey long, p_name string, p_brand string, p_type string, "
         "p_size int, p_retailprice double",
-    ).createOrReplaceTempView("part")
+    )
     rows = [
         ((i + 1) * 500, 1_700_000_000 + i, i, "click", c / 100.0)
         for i, c in enumerate(probes)

@@ -6,53 +6,22 @@ Good-Turing frequency-of-frequencies, and the Zipf fit."""
 from __future__ import annotations
 
 import math
-from decimal import ROUND_HALF_UP, Decimal
+from decimal import Decimal
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
-
-PROP = dict(
-    max_examples=5,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
+from tests.helpers import (
+    PROP,
+    _dec,
+    _floor_cents,
+    hand_table,
+    _mk_docs,
+    _mk_events,
+    _q9_then_dec6,
 )
-
-
-def _mk_events(spark, rows):
-    df = spark.createDataFrame(
-        rows, "event_id long, t long, user_id long, event_type string, value double"
-    ).select(
-        "event_id",
-        F.col("t").cast("timestamp").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-    )
-    df.createOrReplaceTempView("events")
-
-
-def _mk_docs(spark, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string"
-    ).createOrReplaceTempView("documents")
-
-
-def _dec(x: float, scale: str) -> Decimal:
-    return Decimal(repr(x)).quantize(Decimal(scale), ROUND_HALF_UP)
-
-
-def _q9_then_dec6(x: float) -> Decimal:
-    """round(double, 9) then cast decimal(38,6), both HALF_UP."""
-    t9 = float(_dec(x, "1e-9"))
-    return _dec(t9, "1e-6")
-
-
-def _floor_cents(c: int) -> int:
-    return math.floor((c / 100.0) * 100.0)
 
 
 # ---------------------------------------------------------------------------
@@ -157,7 +126,9 @@ def test_completeness_matches_bruteforce(hand_views, flags):
     spark = hand_views
     from rugpull_data_pipeline_spark.plans.feature_ops import _completeness
 
-    spark.createDataFrame(
+    hand_table(
+        spark,
+        "events",
         [
             (
                 i,
@@ -171,7 +142,7 @@ def test_completeness_matches_bruteforce(hand_views, flags):
         ],
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
-    ).createOrReplaceTempView("events")
+    )
     got = {r.col_name: r for r in spark.sql(_completeness(SPARK)).collect()}
 
     n = len(flags)

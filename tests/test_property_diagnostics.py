@@ -12,20 +12,11 @@ from __future__ import annotations
 from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
-
-PROP = dict(
-    max_examples=5,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-
-
-def _round6(x: float) -> float:
-    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+from tests.helpers import PROP, hand_table, _mk_events, _round6
 
 
 def _dm(vals: list[int]) -> Decimal:
@@ -33,16 +24,6 @@ def _dm(vals: list[int]) -> Decimal:
     then cast to decimal(18,6)."""
     mean = float(sum(vals)) / len(vals)
     return Decimal(repr(mean)).quantize(Decimal("1e-6"), ROUND_HALF_UP)
-
-
-def _mk_events(spark, rows):
-    spark.createDataFrame(
-        rows,
-        "event_id long, t long, user_id long, event_type string, value double",
-    ).selectExpr(
-        "event_id", "cast(t as timestamp) AS ts", "user_id", "event_type",
-        "value",
-    ).createOrReplaceTempView("events")
 
 
 def _daily_rows(series: dict[str, list[int]]):
@@ -87,14 +68,16 @@ def test_mad_screen_matches_bruteforce(hand_views, rows):
     spark = hand_views
     from rugpull_data_pipeline_spark.plans import registry
 
-    spark.createDataFrame(
+    hand_table(
+        spark,
+        "lineitem",
         [
             (i, i, i % 3, float(q), ep / 100.0, dc / 100.0, tx / 100.0)
             for i, (q, ep, dc, tx) in enumerate(rows)
         ],
         "l_orderkey long, l_partkey long, l_suppkey long, l_quantity double,"
         " l_extendedprice double, l_discount double, l_tax double",
-    ).createOrReplaceTempView("lineitem")
+    )
 
     got = {
         r["column_name"]: r
@@ -267,18 +250,22 @@ def test_hhi_matches_bruteforce(hand_views, rows):
     spark = hand_views
     from rugpull_data_pipeline_spark.plans.diagnostics_ops import _hhi
 
-    spark.createDataFrame(
+    hand_table(
+        spark,
+        "lineitem",
         [
             (i, b, s, float(p), 0.0)
             for i, (b, s, p) in enumerate(rows)
         ],
         "l_orderkey long, l_partkey long, l_suppkey long,"
         " l_extendedprice double, l_discount double",
-    ).createOrReplaceTempView("lineitem")
-    spark.createDataFrame(
+    )
+    hand_table(
+        spark,
+        "part",
         [(b, f"Brand#{b}") for b in {b for b, _, _ in rows}],
         "p_partkey long, p_brand string",
-    ).createOrReplaceTempView("part")
+    )
 
     got = {r["p_brand"]: r for r in spark.sql(_hhi(SPARK)).collect()}
     from collections import defaultdict

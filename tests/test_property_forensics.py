@@ -12,32 +12,17 @@ import math
 from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
-from hypothesis import HealthCheck, example, given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
 from rugpull_data_pipeline_spark.plans import registry
-
-PROP = dict(
-    max_examples=5,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
+from tests.helpers import DOC_TEXT, PROP, hand_table, _mk_docs, _mk_events
 
 
-def _mk_events(spark, rows):
+def _user_events(spark, rows):
     """rows: list of (user_id, event_type, value, epoch_seconds)."""
-    spark.createDataFrame(
-        [
-            (i, t, u, ty, float(v))
-            for i, (u, ty, v, t) in enumerate(rows)
-        ],
-        "event_id long, t long, user_id long, event_type string,"
-        " value double",
-    ).selectExpr(
-        "event_id", "cast(t as timestamp) AS ts", "user_id", "event_type",
-        "value",
-    ).createOrReplaceTempView("events")
+    _mk_events(spark, [(i, t, u, ty, float(v)) for i, (u, ty, v, t) in enumerate(rows)])
 
 
 # ---------------------------------------------------------------------------
@@ -57,7 +42,7 @@ def test_mann_whitney_matches_bruteforce(hand_views, rows):
     spark = hand_views
     from rugpull_data_pipeline_spark.plans.forensics_ops import _r6u  # noqa: F401
 
-    _mk_events(
+    _user_events(
         spark,
         [
             (1, "purchase" if y else "click", v, i)
@@ -104,7 +89,7 @@ def test_hill_tail_matches_bruteforce(hand_views, vals):
     spark = hand_views
     from rugpull_data_pipeline_spark.plans.forensics_ops import _hill_tail
 
-    _mk_events(spark, [(1, "click", v, i) for i, v in enumerate(vals)])
+    _user_events(spark, [(1, "click", v, i) for i, v in enumerate(vals)])
     rows = spark.sql(_hill_tail(SPARK)).collect()
     cents = sorted((v * 100 for v in vals), reverse=True)
     top50, x51 = cents[:50], cents[50]
@@ -152,7 +137,7 @@ def test_concordance_index_matches_bruteforce(hand_views, subs):
         if ev:
             rows.append((u, "purchase", 1.0, delay * day))
         rows.extend((u, "click", 1.0, 1 + j) for j in range(clicks))
-    _mk_events(spark, rows)
+    _user_events(spark, rows)
     r = registry.get("eval_concordance_index").builder(spark, "unused").collect()[0]
 
     mc = max(c for _, _, c in subs)
@@ -200,13 +185,15 @@ def test_rbo_matches_bruteforce(hand_views, parts):
     spark = hand_views
     from rugpull_data_pipeline_spark.plans.robustness_ops import _rbo
 
-    spark.createDataFrame(
+    hand_table(
+        spark,
+        "lineitem",
         [
             (pk, float(q), p / 100.0)
             for pk, (q, p) in enumerate(parts)
         ],
         "l_partkey long, l_quantity double, l_extendedprice double",
-    ).createOrReplaceTempView("lineitem")
+    )
     r = spark.sql(_rbo(SPARK)).collect()[0]
 
     qty = {pk: q for pk, (q, _) in enumerate(parts)}
@@ -251,7 +238,7 @@ def test_anova_matches_bruteforce(hand_views, rows):
     spark = hand_views
     from rugpull_data_pipeline_spark.plans.forensics_ops import _anova
 
-    _mk_events(spark, [(1, g, v, i) for i, (g, v) in enumerate(rows)])
+    _user_events(spark, [(1, g, v, i) for i, (g, v) in enumerate(rows)])
     out = spark.sql(_anova(SPARK)).collect()
     groups: dict[str, list[int]] = {}
     for g, v in rows:
@@ -288,10 +275,12 @@ def test_pps_matches_bruteforce(hand_views, weights):
     spark = hand_views
     from rugpull_data_pipeline_spark.plans.robustness_ops import _pps
 
-    spark.createDataFrame(
+    hand_table(
+        spark,
+        "part",
         [(pk, w / 100.0) for pk, w in enumerate(weights)],
         "p_partkey long, p_retailprice double",
-    ).createOrReplaceTempView("part")
+    )
     out = {r["p_partkey"]: r for r in spark.sql(_pps(SPARK)).collect()}
 
     def h(pk: int) -> int:
@@ -344,10 +333,7 @@ def test_pps_matches_bruteforce(hand_views, weights):
 def test_token_novelty_matches_bruteforce(hand_views, docs):
     spark = hand_views
 
-    spark.createDataFrame(
-        [(i, " ".join(toks)) for i, toks in enumerate(docs)],
-        "doc_id long, text string",
-    ).createOrReplaceTempView("documents")
+    _mk_docs(spark, [(i, " ".join(toks)) for i, toks in enumerate(docs)], DOC_TEXT)
     out = {r["ingest_batch"]: r
            for r in registry.get("text_token_novelty")
                     .builder(spark, "unused").collect()}

@@ -15,36 +15,11 @@ import math
 from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
-
-PROP = dict(
-    max_examples=5,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-
-
-def _mk_events(spark, rows):
-    df = spark.createDataFrame(
-        rows, "event_id long, t long, user_id long, event_type string, value double"
-    ).select(
-        "event_id",
-        F.col("t").cast("timestamp").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-    )
-    df.createOrReplaceTempView("events")
-
-
-def _mk_docs(spark, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string"
-    ).createOrReplaceTempView("documents")
+from tests.helpers import PROP, _floor_cents, hand_table, _mk_docs, _mk_events
 
 
 def _dec6(x: float) -> Decimal:
@@ -55,11 +30,6 @@ def _dec6(x: float) -> Decimal:
 
 def _dec9(x: float) -> Decimal:
     return Decimal(repr(x)).quantize(Decimal("1e-9"), ROUND_HALF_UP)
-
-
-def _floor_cents(c: int) -> int:
-    """The SQL sees floor((c/100.0) * 100.0) — replicate the double trip."""
-    return math.floor((c / 100.0) * 100.0)
 
 
 # ---------------------------------------------------------------------------
@@ -340,10 +310,12 @@ def test_k_anonymity_matches_bruteforce(hand_views, custs):
     spark = hand_views
     from rugpull_data_pipeline_spark.plans.quality_ops import _k_anonymity
 
-    spark.createDataFrame(
+    hand_table(
+        spark,
+        "customer",
         [(i, n, s, float(b)) for i, (n, s, b) in enumerate(custs)],
         "c_custkey long, c_nationkey int, c_mktsegment string, c_acctbal double",
-    ).createOrReplaceTempView("customer")
+    )
     got = {r.k: r for r in spark.sql(_k_anonymity(SPARK)).collect()}
 
     grp: dict[tuple, int] = {}

@@ -5,46 +5,14 @@ rescaled-range exponent, and the Heaps'-law vocabulary-growth fit."""
 from __future__ import annotations
 
 import math
-from decimal import ROUND_HALF_UP, Decimal
+from decimal import Decimal
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
-
-PROP = dict(
-    max_examples=5,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-
-
-def _mk_events(spark, rows):
-    df = spark.createDataFrame(
-        rows, "event_id long, t long, user_id long, event_type string, value double"
-    ).select(
-        "event_id",
-        F.col("t").cast("timestamp").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-    )
-    df.createOrReplaceTempView("events")
-
-
-def _dec(x: float, scale: str) -> Decimal:
-    return Decimal(repr(x)).quantize(Decimal(scale), ROUND_HALF_UP)
-
-
-def _q9_then_dec6(x: float) -> Decimal:
-    t9 = float(_dec(x, "1e-9"))
-    return _dec(t9, "1e-6")
-
-
-def _floor_cents(c: int) -> int:
-    return math.floor((c / 100.0) * 100.0)
+from tests.helpers import PROP, _dec, _floor_cents, _mk_docs, _mk_events, _q9_then_dec6
 
 
 # ---------------------------------------------------------------------------
@@ -216,10 +184,7 @@ def test_heaps_fit_matches_bruteforce(hand_views, docs):
     spark = hand_views
     from rugpull_data_pipeline_spark.plans import registry
 
-    spark.createDataFrame(
-        [(i, " ".join(toks), "en", "s0") for i, toks in enumerate(docs)],
-        "doc_id long, text string, lang string, source string",
-    ).createOrReplaceTempView("documents")
+    _mk_docs(spark, [(i, " ".join(toks), "en", "s0") for i, toks in enumerate(docs)])
     got = registry.get("profile_heaps_law").builder(spark, "unused").collect()[0]
 
     nd = len(docs)

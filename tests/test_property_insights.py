@@ -6,16 +6,11 @@ compare alone can't explain (the test_property_* convention)."""
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
-
-PROP = dict(
-    max_examples=5,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
+from tests.helpers import PROP, hand_table, _mk_events
 
 
 # ---------------------------------------------------------------------------
@@ -35,16 +30,13 @@ def test_cliffs_delta_matches_bruteforce(hand_views, rows):
     spark = hand_views
     from rugpull_data_pipeline_spark.plans.insights_ops import _cliffs_delta
 
-    spark.createDataFrame(
+    _mk_events(
+        spark,
         [
             (i, i, 1, "purchase" if y else "click", float(v))
             for i, (v, y) in enumerate(rows)
         ],
-        "event_id long, t long, user_id long, event_type string, value double",
-    ).selectExpr(
-        "event_id", "cast(t as timestamp) AS ts", "user_id", "event_type",
-        "value",
-    ).createOrReplaceTempView("events")
+    )
 
     r = spark.sql(_cliffs_delta(SPARK)).collect()[0]
     pos = [v * 100 for v, y in rows if y]
@@ -70,11 +62,13 @@ def test_lorenz_deciles_match_bruteforce(hand_views, bals):
     spark = hand_views
     from rugpull_data_pipeline_spark.plans.insights_ops import _lorenz
 
-    spark.createDataFrame(
+    hand_table(
+        spark,
+        "customer",
         [(i, f"c{i}", 0, bals[i] / 100.0, "SEG") for i in range(len(bals))],
         "c_custkey long, c_name string, c_nationkey int, c_acctbal double,"
         " c_mktsegment string",
-    ).createOrReplaceTempView("customer")
+    )
 
     got = {r["decile"]: r for r in spark.sql(_lorenz(SPARK)).collect()}
     ordered = sorted(
@@ -110,10 +104,12 @@ def test_degree_gini_matches_bruteforce(hand_views, op_rows):
     spark = hand_views
     from rugpull_data_pipeline_spark.plans import registry
 
-    spark.createDataFrame(
+    hand_table(
+        spark,
+        "lineitem",
         [(o, p) for o, p in op_rows],
         "l_orderkey long, l_partkey long",
-    ).createOrReplaceTempView("lineitem")
+    )
 
     out = registry.get("graph_degree_gini").builder(spark, "unused").collect()
     op = sorted(set(op_rows))
@@ -159,13 +155,7 @@ def test_user_overlap_matches_bruteforce(hand_views, tu):
     spark = hand_views
     from rugpull_data_pipeline_spark.plans import registry
 
-    spark.createDataFrame(
-        [(i, i, u, t, 1.0) for i, (t, u) in enumerate(tu)],
-        "event_id long, t long, user_id long, event_type string, value double",
-    ).selectExpr(
-        "event_id", "cast(t as timestamp) AS ts", "user_id", "event_type",
-        "value",
-    ).createOrReplaceTempView("events")
+    _mk_events(spark, [(i, i, u, t, 1.0) for i, (t, u) in enumerate(tu)])
 
     got = {
         (r["type_a"], r["type_b"]): r

@@ -4,31 +4,17 @@ normalization, and the deterministic hash bootstrap."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 import re
-from decimal import ROUND_HALF_UP, Decimal
+from decimal import Decimal
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
-
-PROP = dict(
-    max_examples=5,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-
-
-def _dec(x: float, scale: str) -> Decimal:
-    return Decimal(repr(x)).quantize(Decimal(scale), ROUND_HALF_UP)
-
-
-def _h60(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+from tests.helpers import PROP, _dec, _h60, hand_table, _mk_docs, _mk_events
 
 
 # ---------------------------------------------------------------------------
@@ -53,9 +39,11 @@ def test_dataset_card_matches_bruteforce(hand_views, docs):
         (i, " ".join(toks), lang, src, len(" ".join(toks)))
         for i, (lang, src, toks) in enumerate(docs)
     ]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars int"
-    ).createOrReplaceTempView("documents")
+    _mk_docs(
+        spark,
+        rows,
+        "doc_id long, text string, lang string, source string, n_chars int",
+    )
     got = {
         (r.lang, r.source): r for r in spark.sql(_dataset_card(SPARK)).collect()
     }
@@ -95,9 +83,13 @@ def test_skew_advisor_matches_bruteforce(hand_views, pts):
     from rugpull_data_pipeline_spark.plans.traindata_ops import _skew_advisor
 
     rows = [(f"2024-0{m}-0{d}",) for m, d in pts]
-    spark.createDataFrame(rows, "ship string").select(
-        F.col("ship").cast("date").alias("l_shipdate")
-    ).createOrReplaceTempView("lineitem")
+    hand_table(
+        spark,
+        "lineitem",
+        spark.createDataFrame(rows, "ship string").select(
+            F.col("ship").cast("date").alias("l_shipdate")
+        ),
+    )
     got = {r.part_month: r for r in spark.sql(_skew_advisor(SPARK)).collect()}
 
     per_month: dict[str, int] = {}
@@ -134,9 +126,7 @@ def test_whitespace_normalize_matches_bruteforce(hand_views, texts):
     from rugpull_data_pipeline_spark.plans.mlprep_ops import _ws_normalize
 
     rows = [(i, t, "en", "s0") for i, t in enumerate(texts)]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string"
-    ).createOrReplaceTempView("documents")
+    _mk_docs(spark, rows)
     got = {r.doc_id: r for r in spark.sql(_ws_normalize(SPARK)).collect()}
 
     for i, t in enumerate(texts):
@@ -160,19 +150,6 @@ def test_bootstrap_matches_bruteforce(hand_views, cents_list):
         _POIS_CDF,
         _bootstrap,
     )
-
-    def _mk_events(spark, rows):
-        df = spark.createDataFrame(
-            rows,
-            "event_id long, t long, user_id long, event_type string, value double",
-        ).select(
-            "event_id",
-            F.col("t").cast("timestamp").alias("ts"),
-            "user_id",
-            "event_type",
-            "value",
-        )
-        df.createOrReplaceTempView("events")
 
     # six fixed rows (ids 1000..1005) guarantee every replicate draws a
     # nonzero total Poisson weight (verified: min replicate weight is 3)

@@ -7,23 +7,13 @@ run against hand temp views (the test_property_* convention)."""
 
 from __future__ import annotations
 
-from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
-
-PROP = dict(
-    max_examples=5,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-
-
-def _round6(x: float) -> float:
-    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+from tests.helpers import PROP, hand_table, _mk_events, _mk_lineitem, _round6
 
 
 # ---------------------------------------------------------------------------
@@ -45,11 +35,13 @@ def test_skyline_matches_bruteforce_dominance(hand_views, parts):
     from rugpull_data_pipeline_spark.plans.mining_ops import skyline_pareto_parts
 
     rows = [(i, pc / 100.0, sz) for i, (pc, sz) in enumerate(parts)]
-    spark.createDataFrame(
+    hand_table(
+        spark,
+        "part",
         [(k, f"part{k}", "B", "T", sz, pr) for k, pr, sz in rows],
         "p_partkey long, p_name string, p_brand string, p_type string, "
         "p_size int, p_retailprice double",
-    ).createOrReplaceTempView("part")
+    )
     got = {r.p_partkey for r in skyline_pareto_parts(spark, "unused").collect()}
 
     def dominated(i):
@@ -87,11 +79,7 @@ def test_isotonic_matches_pava(hand_views, pts):
          "purchase" if y else "click", b * 25.0 + 1.0)
         for i, (b, y) in enumerate(pts)
     ]
-    spark.createDataFrame(
-        rows, "event_id long, t long, user_id long, event_type string, value double"
-    ).selectExpr(
-        "event_id", "cast(t as timestamp) AS ts", "user_id", "event_type", "value"
-    ).createOrReplaceTempView("events")
+    _mk_events(spark, rows)
     got = {r.bin: r for r in registry.get("mlprep_isotonic_pava")
                              .builder(spark, "unused").collect()}
 
@@ -152,14 +140,7 @@ def test_weighted_median_matches_bruteforce(hand_views, items):
          1_700_000_000 + i)
         for i, (f, pc, q) in enumerate(items)
     ]
-    spark.createDataFrame(
-        rows,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int, "
-        "l_quantity double, l_extendedprice double, l_discount double, "
-        "l_tax double, l_returnflag string, l_linestatus string, t long",
-    ).selectExpr("*", "cast(t as timestamp) AS l_shipdate").drop(
-        "t"
-    ).createOrReplaceTempView("lineitem")
+    _mk_lineitem(spark, rows)
     got = {r.flag: r for r in spark.sql(_weighted_median(SPARK)).collect()}
 
     flags = {f for f, _, _ in items}
@@ -207,11 +188,7 @@ def test_gaps_islands_matches_bruteforce(hand_views, per_user):
             for _ in range(1 + (d % 2)):
                 rows.append((eid, d * 86400 + eid % 3600, u, "click", 1.0))
                 eid += 1
-    spark.createDataFrame(
-        rows, "event_id long, t long, user_id long, event_type string, value double"
-    ).selectExpr(
-        "event_id", "cast(t as timestamp) AS ts", "user_id", "event_type", "value"
-    ).createOrReplaceTempView("events")
+    _mk_events(spark, rows)
     got = {r.user_id: r for r in spark.sql(_gaps_islands(SPARK)).collect()}
 
     for u, days in per_user.items():

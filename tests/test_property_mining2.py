@@ -6,39 +6,22 @@ degree assortativity, bitmap distinct counting, co-occurrence lift,
 from __future__ import annotations
 
 import math
-from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
 from rugpull_data_pipeline_spark.plans import registry
-
-PROP = dict(
-    max_examples=5,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
+from tests.helpers import PROP, hand_table, _mk_events, _mk_lineitem, _round6
 
 
-def _round6(x: float) -> float:
-    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
-
-
-def _mk_lineitem(spark, pairs):
+def _mk_order_pairs(spark, pairs):
     rows = [
         (o, p, i, 1, 1.0, 1.0, 0.0, 0.0, "N", "O", 1_700_000_000 + i)
         for i, (o, p) in enumerate(pairs)
     ]
-    spark.createDataFrame(
-        rows,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int, "
-        "l_quantity double, l_extendedprice double, l_discount double, "
-        "l_tax double, l_returnflag string, l_linestatus string, t long",
-    ).selectExpr("*", "cast(t as timestamp) AS l_shipdate").drop(
-        "t"
-    ).createOrReplaceTempView("lineitem")
+    _mk_lineitem(spark, rows)
 
 
 def _copurchase_sym(pairs):
@@ -70,7 +53,7 @@ def _copurchase_sym(pairs):
 )
 def test_assortativity_matches_bruteforce(hand_views, pairs):
     spark = hand_views
-    _mk_lineitem(spark, pairs)
+    _mk_order_pairs(spark, pairs)
     row = (
         registry.get("graph_degree_assortativity").builder(spark, "unused").collect()[0]
     )
@@ -116,16 +99,18 @@ def test_assortativity_matches_bruteforce(hand_views, pairs):
 @pytest.mark.slow_property
 def test_bfs_frontier_matches_bruteforce(hand_views, pairs, seeds):
     spark = hand_views
-    _mk_lineitem(spark, pairs)
+    _mk_order_pairs(spark, pairs)
     all_parts = sorted({p for _, p in pairs} | seeds)
-    spark.createDataFrame(
+    hand_table(
+        spark,
+        "part",
         [
             (p, f"part{p}", "B", "T", 1 if p in seeds else 5, 1.0)
             for p in all_parts
         ],
         "p_partkey long, p_name string, p_brand string, p_type string, "
         "p_size int, p_retailprice double",
-    ).createOrReplaceTempView("part")
+    )
     got = {
         r.hop: r.n_reached
         for r in registry.get("graph_bfs_frontier3").builder(spark, "unused").collect()
@@ -163,11 +148,7 @@ def test_bitmap_distinct_matches_sets(hand_views, evs):
     rows = [
         (i, 1_700_000_000 + i, u, t, 1.0) for i, (t, u) in enumerate(evs)
     ]
-    spark.createDataFrame(
-        rows, "event_id long, t long, user_id long, event_type string, value double"
-    ).selectExpr(
-        "event_id", "cast(t as timestamp) AS ts", "user_id", "event_type", "value"
-    ).createOrReplaceTempView("events")
+    _mk_events(spark, rows)
     got = {r.event_type: r for r in spark.sql(_bitmap_distinct(SPARK)).collect()}
 
     for t in {t for t, _ in evs}:
@@ -197,11 +178,7 @@ def test_cooccurrence_lift_matches_bruteforce(hand_views, evs):
     rows = [
         (i, 1_700_000_000 + i, u, t, 1.0) for i, (u, t) in enumerate(evs)
     ]
-    spark.createDataFrame(
-        rows, "event_id long, t long, user_id long, event_type string, value double"
-    ).selectExpr(
-        "event_id", "cast(t as timestamp) AS ts", "user_id", "event_type", "value"
-    ).createOrReplaceTempView("events")
+    _mk_events(spark, rows)
     got = {
         (r.type_a, r.type_b): r
         for r in registry.get("events_cooccurrence_lift").builder(spark, "unused").collect()
@@ -255,11 +232,15 @@ def test_oov_rate_matches_bruteforce(hand_views, docs):
     spark = hand_views
     from rugpull_data_pipeline_spark.plans.mining_ops import _OOV_TOP_K, _oov
 
-    spark.createDataFrame(
-        [(i, " ".join(toks), "en", src) for i, (src, toks) in enumerate(docs)],
-        "doc_id long, text string, lang string, source string",
-    ).selectExpr("doc_id", "text", "lang", "source", "length(text) AS n_chars"
-    ).createOrReplaceTempView("documents")
+    hand_table(
+        spark,
+        "documents",
+        spark.createDataFrame(
+            [(i, " ".join(toks), "en", src) for i, (src, toks) in enumerate(docs)],
+            "doc_id long, text string, lang string, source string",
+        ).selectExpr("doc_id", "text", "lang", "source", "length(text) AS n_chars"
+        ),
+    )
     got = {r.source: r for r in spark.sql(_oov(SPARK)).collect()}
 
     counts: dict[str, int] = {}

@@ -7,31 +7,13 @@ exact ntile semantics."""
 from __future__ import annotations
 
 import hashlib
-from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
-
-PROP = dict(
-    max_examples=5,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-
-
-def _round6(x: float) -> float:
-    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
-
-
-def _mk_events(spark, rows):
-    spark.createDataFrame(
-        rows, "event_id long, t long, user_id long, event_type string, value double"
-    ).selectExpr(
-        "event_id", "cast(t as timestamp) AS ts", "user_id", "event_type", "value"
-    ).createOrReplaceTempView("events")
+from tests.helpers import PROP, hand_table, _mk_events, _mk_lineitem, _round6
 
 
 def _hash60(s: str) -> int:
@@ -91,11 +73,13 @@ def test_l_diversity_matches_bruteforce(hand_views, custs):
     spark = hand_views
     from rugpull_data_pipeline_spark.plans.mining_ops import _l_diversity
 
-    spark.createDataFrame(
+    hand_table(
+        spark,
+        "customer",
         [(i, f"c{i}", nk, float(ab), seg) for i, (nk, seg, ab) in enumerate(custs)],
         "c_custkey long, c_name string, c_nationkey int, c_acctbal double, "
         "c_mktsegment string",
-    ).createOrReplaceTempView("customer")
+    )
     row = spark.sql(_l_diversity(SPARK)).collect()[0]
 
     groups: dict[tuple, list[int]] = {}
@@ -133,14 +117,7 @@ def test_bipartite_top20_matches_bruteforce(hand_views, pairs):
         (o, p, i, 1, 1.0, 1.0, 0.0, 0.0, "N", "O", 1_700_000_000 + i)
         for i, (o, p) in enumerate(pairs)
     ]
-    spark.createDataFrame(
-        rows,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int, "
-        "l_quantity double, l_extendedprice double, l_discount double, "
-        "l_tax double, l_returnflag string, l_linestatus string, t long",
-    ).selectExpr("*", "cast(t as timestamp) AS l_shipdate").drop(
-        "t"
-    ).createOrReplaceTempView("lineitem")
+    _mk_lineitem(spark, rows)
     got = [(r.rn, r.part_a, r.part_b, r.n_orders)
            for r in spark.sql(_bipartite(SPARK)).collect()]
 

@@ -10,16 +10,11 @@ import math
 from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
-
-PROP = dict(
-    max_examples=5,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
+from tests.helpers import PROP, hand_table, _mk_events
 
 
 def _q(x: float, scale: str) -> Decimal:
@@ -45,14 +40,16 @@ def test_woe_iv_matches_bruteforce(hand_views, custs):
     spark = hand_views
     from rugpull_data_pipeline_spark.plans.mining_ops import _woe_iv
 
-    spark.createDataFrame(
+    hand_table(
+        spark,
+        "customer",
         [
             (i, f"c{i}", 0, -10.0 if neg else 10.0, seg)
             for i, (seg, neg) in enumerate(custs)
         ],
         "c_custkey long, c_name string, c_nationkey int, c_acctbal double, "
         "c_mktsegment string",
-    ).createOrReplaceTempView("customer")
+    )
     got = {r.segment: r for r in spark.sql(_woe_iv(SPARK)).collect()}
 
     segs = sorted({s for s, _ in custs})
@@ -106,11 +103,15 @@ def test_ttr_matches_bruteforce(hand_views, docs):
     spark = hand_views
     from rugpull_data_pipeline_spark.plans.mining_ops import _ttr
 
-    spark.createDataFrame(
-        [(i, " ".join(toks), lang, "s1") for i, (lang, toks) in enumerate(docs)],
-        "doc_id long, text string, lang string, source string",
-    ).selectExpr("doc_id", "text", "lang", "source", "length(text) AS n_chars"
-    ).createOrReplaceTempView("documents")
+    hand_table(
+        spark,
+        "documents",
+        spark.createDataFrame(
+            [(i, " ".join(toks), lang, "s1") for i, (lang, toks) in enumerate(docs)],
+            "doc_id long, text string, lang string, source string",
+        ).selectExpr("doc_id", "text", "lang", "source", "length(text) AS n_chars"
+        ),
+    )
     got = {r.lang: r for r in spark.sql(_ttr(SPARK)).collect()}
 
     for lang in {l for l, _ in docs}:
@@ -149,11 +150,7 @@ def test_stl_matches_bruteforce(hand_views, series):
         (i, d * 86400 + 10, 0, "click", float(v))
         for i, (d, v) in enumerate(enumerate(series))
     ]
-    spark.createDataFrame(
-        rows, "event_id long, t long, user_id long, event_type string, value double"
-    ).selectExpr(
-        "event_id", "cast(t as timestamp) AS ts", "user_id", "event_type", "value"
-    ).createOrReplaceTempView("events")
+    _mk_events(spark, rows)
     got = {r.dow: r for r in spark.sql(_stl(SPARK)).collect()}
 
     # one event per day, integer value -> dm = value exactly

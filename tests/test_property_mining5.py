@@ -7,16 +7,11 @@ from __future__ import annotations
 from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
-
-PROP = dict(
-    max_examples=5,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
+from tests.helpers import PROP, _mk_embeddings, _mk_events
 
 
 def _q(x: float, scale: str) -> Decimal:
@@ -49,10 +44,10 @@ def test_range_search_matches_bruteforce(hand_views, vecs):
         _range_search,
     )
 
-    spark.createDataFrame(
+    _mk_embeddings(
+        spark,
         [(i, [float(x) for x in v], i % 3) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>, label int",
-    ).createOrReplaceTempView("embeddings")
+    )
     got = {
         (r.query_id, r.vec_id): r.cosine
         for r in spark.sql(_range_search(SPARK)).collect()
@@ -102,11 +97,7 @@ def test_ma_crossover_matches_bruteforce(hand_views, series):
         (i, d * 86400 + 5, 0, "click", float(v))
         for i, (d, v) in enumerate(enumerate(series))
     ]
-    spark.createDataFrame(
-        rows, "event_id long, t long, user_id long, event_type string, value double"
-    ).selectExpr(
-        "event_id", "cast(t as timestamp) AS ts", "user_id", "event_type", "value"
-    ).createOrReplaceTempView("events")
+    _mk_events(spark, rows)
     row = spark.sql(_ma_crossover(SPARK)).collect()[0]
 
     # one integer value per day -> dm exact; both windows need full frames

@@ -4,55 +4,15 @@ drift, hash class rebalancing, and the group-aware holdout."""
 
 from __future__ import annotations
 
-import hashlib
 import math
-from decimal import ROUND_HALF_UP, Decimal
+from decimal import Decimal
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
-
-PROP = dict(
-    max_examples=5,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-
-
-def _mk_events(spark, rows):
-    df = spark.createDataFrame(
-        rows, "event_id long, t long, user_id long, event_type string, value double"
-    ).select(
-        "event_id",
-        F.col("t").cast("timestamp").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-    )
-    df.createOrReplaceTempView("events")
-
-
-def _mk_docs(spark, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string"
-    ).createOrReplaceTempView("documents")
-
-
-def _dec(x: float, scale: str) -> Decimal:
-    return Decimal(repr(x)).quantize(Decimal(scale), ROUND_HALF_UP)
-
-
-def _q9_then_dec6(x: float) -> Decimal:
-    t9 = float(_dec(x, "1e-9"))
-    return _dec(t9, "1e-6")
-
-
-def _h60(s: str) -> int:
-    """The portable 60-bit hash (md5 first 15 hex chars), python side."""
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+from tests.helpers import PROP, _dec, _h60, _mk_docs, _mk_events, _q9_then_dec6
 
 
 # ---------------------------------------------------------------------------

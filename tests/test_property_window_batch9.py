@@ -5,53 +5,23 @@ label propagation."""
 
 from __future__ import annotations
 
-import hashlib
 import math
-from decimal import ROUND_HALF_UP, Decimal
+from decimal import Decimal
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
-
-PROP = dict(
-    max_examples=5,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
+from tests.helpers import (
+    PROP,
+    _dec,
+    _floor_cents,
+    _h60,
+    _mk_docs,
+    _mk_embeddings,
+    _mk_events,
 )
-
-
-def _mk_events(spark, rows):
-    df = spark.createDataFrame(
-        rows, "event_id long, t long, user_id long, event_type string, value double"
-    ).select(
-        "event_id",
-        F.col("t").cast("timestamp").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-    )
-    df.createOrReplaceTempView("events")
-
-
-def _mk_docs(spark, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string"
-    ).createOrReplaceTempView("documents")
-
-
-def _dec(x: float, scale: str) -> Decimal:
-    return Decimal(repr(x)).quantize(Decimal(scale), ROUND_HALF_UP)
-
-
-def _h60(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-
-def _floor_cents(c: int) -> int:
-    return math.floor((c / 100.0) * 100.0)
 
 
 # ---------------------------------------------------------------------------
@@ -102,10 +72,7 @@ def test_random_projection_matches_bruteforce(hand_views, vecs):
 
     # quarter-unit floats are exact in float32, so the double cast is exact
     emb = [[q / 4.0 for q in v] for v in vecs]
-    spark.createDataFrame(
-        [(i, e, 0) for i, e in enumerate(emb)],
-        "vec_id long, embedding array<float>, label int",
-    ).createOrReplaceTempView("embeddings")
+    _mk_embeddings(spark, [(i, e, 0) for i, e in enumerate(emb)])
     got = {
         (r.vec_id, r.out_dim): r.pv
         for r in spark.sql(_jl_project(SPARK)).collect()

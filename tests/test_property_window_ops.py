@@ -6,46 +6,23 @@ stump, and the ridge closed-form solve."""
 from __future__ import annotations
 
 import math
-from decimal import ROUND_HALF_UP, Decimal
+from decimal import Decimal
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
 from rugpull_data_pipeline_spark.plans import registry
-
-PROP = dict(
-    max_examples=5,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
+from tests.helpers import (
+    DOCS_N,
+    PROP,
+    _dec,
+    _floor_cents,
+    _mk_docs,
+    _mk_events,
+    _q9_then_dec6,
 )
-
-
-def _mk_events(spark, rows):
-    df = spark.createDataFrame(
-        rows, "event_id long, t long, user_id long, event_type string, value double"
-    ).select(
-        "event_id",
-        F.col("t").cast("timestamp").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-    )
-    df.createOrReplaceTempView("events")
-
-
-def _dec(x: float, scale: str) -> Decimal:
-    return Decimal(repr(x)).quantize(Decimal(scale), ROUND_HALF_UP)
-
-
-def _q9_then_dec6(x: float) -> Decimal:
-    return _dec(float(_dec(x, "1e-9")), "1e-6")
-
-
-def _floor_cents(c: int) -> int:
-    return math.floor((c / 100.0) * 100.0)
 
 
 # ---------------------------------------------------------------------------
@@ -68,10 +45,7 @@ def test_bm25_matches_bruteforce(hand_views, docs):
     from rugpull_data_pipeline_spark.plans.llm_ops import _bm25
 
     docs = docs + [["table", "stream", "pad"]]  # at least one hit
-    spark.createDataFrame(
-        [(i, " ".join(toks), "en", "s1") for i, toks in enumerate(docs)],
-        "doc_id long, text string, lang string, source string",
-    ).createOrReplaceTempView("documents")
+    _mk_docs(spark, [(i, " ".join(toks), "en", "s1") for i, toks in enumerate(docs)])
     got = {r.doc_id: r for r in spark.sql(_bm25(SPARK)).collect()}
 
     terms = ("table", "stream", "fast")
@@ -245,13 +219,14 @@ def test_ridge_closed_form_matches_bruteforce(hand_views, docs):
     from rugpull_data_pipeline_spark.plans.feature_ops import _ridge
 
     docs = docs + [(["u", "v"], 50), (["u"], 300)]  # Syy > 0 guaranteed
-    spark.createDataFrame(
+    _mk_docs(
+        spark,
         [
             (i, " ".join(toks), "en", "s1", nc)
             for i, (toks, nc) in enumerate(docs)
         ],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).createOrReplaceTempView("documents")
+        DOCS_N,
+    )
     row = spark.sql(_ridge(SPARK)).collect()[0]
 
     feats = [

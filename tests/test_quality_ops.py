@@ -13,26 +13,20 @@ from rugpull_data_pipeline_spark.plans.quality_ops import (
     _semantic_dedup,
     _semantic_iv,
 )
-from rugpull_data_pipeline_spark.sources.tables import register_views
+from tests.helpers import DOC_TEXT, hand_table, _mk_docs, _mk_embeddings
 
 
 @pytest.fixture
-def crafted_views(spark, sf_dir):
-    """Yield a registrar for crafted temp views; restore the parquet views
-    (session-scoped SparkSession) afterwards."""
+def crafted_views(hand_views):
+    """Registrars for crafted documents and embeddings tables."""
 
     def set_docs(rows):
-        spark.createDataFrame(rows, "doc_id long, text string").createOrReplaceTempView(
-            "documents"
-        )
+        _mk_docs(hand_views, rows, DOC_TEXT)
 
     def set_embs(rows):
-        spark.createDataFrame(
-            rows, "vec_id long, embedding array<float>"
-        ).createOrReplaceTempView("embeddings")
+        _mk_embeddings(hand_views, rows, "vec_id long, embedding array<float>")
 
-    yield set_docs, set_embs
-    register_views(spark, sf_dir)
+    return set_docs, set_embs
 
 
 def test_repetition_score_handcrafted(spark, crafted_views):
@@ -96,28 +90,27 @@ def test_semantic_dedup_handcrafted(spark, crafted_views):
     assert out[9]["is_semantic_dup"] == 0
 
 
-def test_k_anonymity_small_groups_flagged(spark):
+def test_k_anonymity_small_groups_flagged(hand_views):
     from rugpull_data_pipeline_spark.functions.scalars import SPARK
-    from rugpull_data_pipeline_spark.plans import registry
     from rugpull_data_pipeline_spark.plans.quality_ops import _k_anonymity
 
-    spark.createDataFrame(
+    spark = hand_views
+    hand_table(
+        spark,
+        "customer",
         # QI class A: 5 identical members; class B: a singleton; class C:
         # negative balance lands in band floor(-500/1000) = -1.
         [(i, "c", 1, 1500.0, "AUTO") for i in range(5)]
         + [(10, "c", 2, 1500.0, "AUTO"), (11, "c", 1, -500.0, "AUTO")],
         "c_custkey long, c_name string, c_nationkey int, c_acctbal double,"
         " c_mktsegment string",
-    ).createOrReplaceTempView("customer")
-    try:
-        got = {r.k: r for r in spark.sql(_k_anonymity(SPARK)).collect()}
-        assert sorted(got) == [2, 5, 10]
-        assert all(got[k].n_groups == 3 for k in got)
-        # k=2: the two singletons violate; k=5: 5-member class is exactly k.
-        assert (got[2].n_violating_groups, got[2].rows_at_risk) == (2, 2)
-        assert (got[5].n_violating_groups, got[5].rows_at_risk) == (2, 2)
-        # k=10: every class violates.
-        assert (got[10].n_violating_groups, got[10].rows_at_risk) == (3, 7)
-        assert got[10].risk_rate == 1.0
-    finally:
-        registry._VIEWS_FOR.pop(id(spark), None)
+    )
+    got = {r.k: r for r in spark.sql(_k_anonymity(SPARK)).collect()}
+    assert sorted(got) == [2, 5, 10]
+    assert all(got[k].n_groups == 3 for k in got)
+    # k=2: the two singletons violate; k=5: 5-member class is exactly k.
+    assert (got[2].n_violating_groups, got[2].rows_at_risk) == (2, 2)
+    assert (got[5].n_violating_groups, got[5].rows_at_risk) == (2, 2)
+    # k=10: every class violates.
+    assert (got[10].n_violating_groups, got[10].rows_at_risk) == (3, 7)
+    assert got[10].risk_rate == 1.0

@@ -26,6 +26,7 @@ from rugpull_data_pipeline_spark.sources.solana import (
     write_blocks_json,
 )
 from rugpull_data_pipeline_spark.streaming.pipelines import stream_balance_pipeline
+from tests.helpers import hand_table
 
 
 def test_st6_checkpoint_restart_no_dup_no_loss(spark, tmp_path):
@@ -74,21 +75,20 @@ def _asof(spark, purchases, views):
         (100 + i, uid, ts, "view", float(v), None)
         for i, (uid, ts, v) in enumerate(views)
     ]
-    df = spark.createDataFrame(
-        rows, "event_id long, user_id long, ts timestamp, event_type string, value double, props string"
+    hand_table(
+        spark,
+        "events",
+        rows,
+        "event_id long, user_id long, ts timestamp, event_type string, value double, props string",
     )
-    df.createOrReplaceTempView("events")
-    from rugpull_data_pipeline_spark.plans import registry
-
-    registry._VIEWS_FOR[id(spark)] = "unused"  # static_table reads the view
     out = join_asof_last_view(spark, "unused")
     return {r.event_id: r.last_view_value for r in out.collect()}
 
 
-def test_asof_edge_semantics(spark, sf_dir):
+def test_asof_edge_semantics(hand_views):
     t = lambda s: dt.datetime(2024, 1, 1, 12, 0, s)
     got = _asof(
-        spark,
+        hand_views,
         purchases=[
             (1, t(10), 99),   # event 0: views strictly before -> latest wins
             (1, t(20), 99),   # event 1: a view at the SAME instant counts (<=)
@@ -106,7 +106,3 @@ def test_asof_edge_semantics(spark, sf_dir):
     assert got[1] == 3.0
     assert got[2] is None
     assert got[3] is None
-    # Restore the real fixture views for any later test using this session.
-    from rugpull_data_pipeline_spark.plans import registry
-
-    registry._VIEWS_FOR.clear()

@@ -8,7 +8,6 @@ from __future__ import annotations
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from rugpull_data_pipeline_spark.functions.scalars import SPARK
 from rugpull_data_pipeline_spark.plans import registry
@@ -18,25 +17,7 @@ from rugpull_data_pipeline_spark.plans.stats_eval import (
     _stump,
     _zipf,
 )
-
-
-def _mk_events(spark, rows):
-    df = spark.createDataFrame(
-        rows, "event_id long, t long, user_id long, event_type string, value double"
-    ).select(
-        "event_id",
-        F.col("t").cast("timestamp").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-    )
-    df.createOrReplaceTempView("events")
-
-
-def _mk_docs(spark, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string"
-    ).createOrReplaceTempView("documents")
+from tests.helpers import DOCS_N, _mk_docs, _mk_embeddings, _mk_events, _q9_then_dec6
 
 
 def test_auc_perfect_separation_and_tie_correction(hand_views):
@@ -169,9 +150,7 @@ def test_zipf_slope_is_minus_one_for_exact_power_law(hand_views):
 def test_pca_single_varying_dim_gets_unit_loading(hand_views):
     spark = hand_views
     rows = [(i, [float(i + 1)] + [0.0] * 63, 0) for i in range(4)]
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).createOrReplaceTempView("embeddings")
+    _mk_embeddings(spark, rows)
     res = {
         r.dim: r.loading
         for r in registry.get("sim_pca_power1").builder(spark, "unused").collect()
@@ -314,9 +293,7 @@ def test_whiten_rerank_removes_common_direction(hand_views):
         v = [10.0] + [0.0] * 63
         v[1 + i % 2] += 1.0
         rows.append((i, v, 0))
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).createOrReplaceTempView("embeddings")
+    _mk_embeddings(spark, rows)
     out = registry.get("sim_whiten_rerank").builder(spark, "unused").collect()
     by_q = {}
     for r in out:
@@ -375,12 +352,6 @@ def test_interarrival_gaps_exact(hand_views):
     assert row.mean_gap_s == pytest.approx(70 / 3, abs=1e-5)
 
 
-def _mk_docs_nchars(spark, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).createOrReplaceTempView("documents")
-
-
 def test_calibration_bins_diagonal(hand_views):
     spark = hand_views
     from rugpull_data_pipeline_spark.plans.stats_eval import _calibration
@@ -403,16 +374,18 @@ def test_ndcg_perfect_vs_inverted(hand_views):
     rich = " ".join(f"w{i}" for i in range(16))  # 16 distinct -> rel 2
     poor = "x x x x"  # 1 distinct -> rel 0
     # Length agrees with richness -> system order == ideal order -> NDCG 1.
-    _mk_docs_nchars(
+    _mk_docs(
         spark,
         [(1, rich, "en", "s", 100), (2, poor, "en", "s", 10)],
+        DOCS_N,
     )
     row = registry.get("eval_ndcg_ranking").builder(spark, "unused").collect()[0]
     assert row.ndcg_at_10 == 1.0 and row.dcg_at_10 == row.idcg_at_10
     # Invert the lengths: the rel-2 doc now ranks second -> NDCG < 1.
-    _mk_docs_nchars(
+    _mk_docs(
         spark,
         [(1, rich, "en", "s", 10), (2, poor, "en", "s", 100)],
+        DOCS_N,
     )
     row = registry.get("eval_ndcg_ranking").builder(spark, "unused").collect()[0]
     assert row.ndcg_at_10 < 1.0
@@ -424,7 +397,7 @@ def test_ndcg_perfect_vs_inverted(hand_views):
 def test_freq_of_freq_good_turing(hand_views):
     spark = hand_views
     from rugpull_data_pipeline_spark.plans.stats_eval import _freq_of_freq
-    _mk_docs_nchars(spark, [(1, "a a a b b c", "en", "s", 11)])
+    _mk_docs(spark, [(1, "a a a b b c", "en", "s", 11)], DOCS_N)
     got = {r.r: r for r in spark.sql(_freq_of_freq(SPARK)).collect()}
     assert sorted(got) == [1, 2, 3]
     assert all(got[r].n_types == 1 for r in got)
@@ -476,15 +449,16 @@ def test_cohens_kappa_bounds_and_perfect_agreement(hand_views):
     rich = " ".join(f"w{i}" for i in range(20))  # 20 distinct words
     poor = "x y"
     # Gates agree on both docs (long+rich kept, short+poor dropped) -> 1.0.
-    _mk_docs_nchars(
-        spark, [(1, rich, "en", "s", 200), (2, poor, "en", "s", 5)]
+    _mk_docs(
+        spark, [(1, rich, "en", "s", 200), (2, poor, "en", "s", 5)],
+        DOCS_N
     )
     row = spark.sql(_cohens_kappa(SPARK)).collect()[0]
     assert row.n_docs == 2
     assert row.observed_agree == 1.0 and row.kappa == 1.0
     # Gates split 2x2 across four docs -> zero agreement beyond chance is
     # impossible here: they DISAGREE on every doc -> kappa = -1.
-    _mk_docs_nchars(
+    _mk_docs(
         spark,
         [
             (1, rich, "en", "s", 5),   # B keep, A drop
@@ -492,6 +466,7 @@ def test_cohens_kappa_bounds_and_perfect_agreement(hand_views):
             (3, rich, "en", "s", 10),
             (4, poor, "en", "s", 300),
         ],
+        DOCS_N,
     )
     row = spark.sql(_cohens_kappa(SPARK)).collect()[0]
     assert row.observed_agree == 0.0
@@ -1069,17 +1044,6 @@ def test_perm_entropy_monotone_vs_mixed(hand_views):
 # ---------------------------------------------------------------------------
 
 
-def _q9_then_dec6(x: float):
-    """Replicate Spark's round(double, 9) -> cast(decimal(38,6)) chain.
-
-    Both steps go through the double's SHORTEST decimal repr (Java
-    BigDecimal.valueOf semantics == Python repr) with HALF_UP."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    t9 = float(Decimal(repr(x)).quantize(Decimal("1e-9"), ROUND_HALF_UP))
-    return Decimal(repr(t9)).quantize(Decimal("1e-6"), ROUND_HALF_UP)
-
-
 @settings(
     max_examples=6,
     deadline=None,
@@ -1128,7 +1092,7 @@ def test_ndcg_matches_bruteforce(hand_views, docs):
         (i + 1, " ".join(f"w{j}" for j in range(k)), "en", "s", nc)
         for i, (k, nc) in enumerate(docs)
     ]
-    _mk_docs_nchars(spark, rows)
+    _mk_docs(spark, rows, DOCS_N)
     row = registry.get("eval_ndcg_ranking").builder(spark, "unused").collect()[0]
     scored = [(i + 1, min(3, k // 8), nc) for i, (k, nc) in enumerate(docs)]
 
@@ -1163,7 +1127,7 @@ def test_cohens_kappa_matches_bruteforce(hand_views, docs):
         (i + 1, " ".join(f"w{j}" for j in range(k)), "en", "s", nc)
         for i, (k, nc) in enumerate(docs)
     ]
-    _mk_docs_nchars(spark, rows)
+    _mk_docs(spark, rows, DOCS_N)
     got = spark.sql(_cohens_kappa(SPARK)).collect()[0]
     cells = {}
     for k, nc in docs:

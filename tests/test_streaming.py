@@ -774,9 +774,10 @@ def test_flagship_e2e_batch_boundary_independence(spark, sf_dir):
     on the strictly increasing n_moves, so batch boundaries cannot leak
     into the result. 2 and 7 slices (coprime with the registered 4) both
     checked against the batch plan's rows."""
-    from rugpull_data_pipeline_spark.plans.registry import get
+    from rugpull_data_pipeline_spark.plans.registry import bind_views, get
     from rugpull_data_pipeline_spark.plans.stream_infra import _flagship_e2e
 
+    bind_views(spark, sf_dir)
     batch_rows = sorted(
         tuple(r) for r in get("flagship_balance_report").builder(spark, sf_dir).collect()
     )
@@ -795,9 +796,10 @@ def test_flagship_e2e_checkpoint_recovery(spark, sf_dir):
     the keyed update-mode aggregation state and process ONLY the new files
     — a replay would double-count n_moves/quantities, a loss would drop
     them — and the final sink must equal the uninterrupted batch answer."""
-    from rugpull_data_pipeline_spark.plans.registry import get
+    from rugpull_data_pipeline_spark.plans.registry import bind_views, get
     from rugpull_data_pipeline_spark.plans.stream_infra import _flagship_e2e
 
+    bind_views(spark, sf_dir)
     batch_rows = sorted(
         tuple(r) for r in get("flagship_balance_report").builder(spark, sf_dir).collect()
     )
@@ -934,8 +936,10 @@ def test_price_maint_e2e_checkpoint_recovery(spark, sf_dir):
     threshold chain and emits a different event set, a replayed slice
     emits duplicates — and the final price dimension must equal the
     uninterrupted run's."""
+    from rugpull_data_pipeline_spark.plans.registry import bind_views
     from rugpull_data_pipeline_spark.plans.stream_infra import _price_maint_e2e
 
+    bind_views(spark, sf_dir)
     uninterrupted = sorted(
         tuple(r) for r in _price_maint_e2e(spark, sf_dir).collect()
     )
@@ -953,8 +957,10 @@ def test_price_maint_tws_checkpoint_recovery(spark, sf_dir):
     typed ValueState (last-EMITTED base/quote per pair) held in the
     RocksDB state store and converge to the uninterrupted run's dimension.
     Runs through the vendored miniproto protobuf runtime end-to-end."""
+    from rugpull_data_pipeline_spark.plans.registry import bind_views
     from rugpull_data_pipeline_spark.plans.stream_infra import _price_maint_e2e
 
+    bind_views(spark, sf_dir)
     uninterrupted = sorted(
         tuple(r) for r in _price_maint_e2e(spark, sf_dir, kernel="tws").collect()
     )

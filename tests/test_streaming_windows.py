@@ -16,6 +16,7 @@ from rugpull_data_pipeline_spark.streaming.pipelines import (
     stream_stream_left_outer_purchases,
     windowed_counts,
 )
+from tests.helpers import HAND, _mk_events
 
 SF = "/root/testdata/sf0.001"
 
@@ -24,9 +25,10 @@ SF = "/root/testdata/sf0.001"
 def events_dir(spark, tmp_path_factory):
     """Events re-staged as a parquet directory a file stream can read."""
     d = str(tmp_path_factory.mktemp("ev_stream"))
-    from rugpull_data_pipeline_spark.sources.tables import load_tables
+    from rugpull_data_pipeline_spark.plans import registry
 
-    ev = load_tables(spark, SF, ("events",))["events"]
+    registry.bind_views(spark, SF)
+    ev = spark.table("events")
     ev.repartition(4).write.mode("overwrite").parquet(d)
     return d
 
@@ -148,25 +150,19 @@ def test_stream_stream_left_outer_join_null_pads(spark, events_dir):
     assert not (set(null_ids) & matched_purchases)
 
 
-def test_hopping_window_replay_overlap_semantics(spark, tmp_path):
+def test_hopping_window_replay_overlap_semantics(hand_views):
     """Every event lands in exactly TWO 1h/30m hopping windows; append mode
     emits each closed window once and total fan-out is exactly 2x events."""
     from rugpull_data_pipeline_spark.plans.stream_infra import (
         stream_hopping_window_replay,
     )
-    import pyspark.sql.functions as F
 
     # hand events at 00:10, 00:40, 01:10 (+1 sentinel handled internally):
     rows = [(0, 600, 1, "click", 1.0), (1, 2400, 1, "click", 1.0),
             (2, 4200, 1, "click", 1.0)]
-    df = spark.createDataFrame(
-        rows, "event_id long, t long, user_id long, event_type string, value double"
-    ).select("event_id", F.col("t").cast("timestamp").alias("ts"),
-             "user_id", "event_type", "value")
-    sf = str(tmp_path / "sf")
-    df.write.parquet(sf + "/events.parquet")
+    _mk_events(hand_views, rows)
     out = {r.window_start: r.n_events
-           for r in stream_hopping_window_replay(spark, sf).collect()}
+           for r in stream_hopping_window_replay(hand_views, HAND).collect()}
     # 00:10 -> windows [-1800,1800) start -1800 and [0,3600) start 0
     # 00:40 -> [0,3600) and [1800,5400); 01:10 -> [1800,5400) and [3600,7200)
     assert out == {-1800: 1, 0: 2, 1800: 2, 3600: 1}

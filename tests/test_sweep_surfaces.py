@@ -63,5 +63,5 @@ def test_surface_same_rows_on_both_engines(spark, mode):
                 if (len(s) == 0) != (mode == "empty"):  # no vacuous pass
                     problems[t].append(f"{len(s)} rows")
     finally:
-        registry._VIEWS_FOR.pop(id(spark), None)
+        registry.unbind_views(spark)
     assert not any(problems.values()), problems

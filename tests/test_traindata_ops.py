@@ -21,25 +21,9 @@ from rugpull_data_pipeline_spark.plans.traindata_ops import (
     _running_distinct,
     _target_encode,
 )
+from tests.helpers import DOCS_N, hand_table, _mk_docs, _mk_events
 
-
-def _mk_events(spark, rows):
-    df = spark.createDataFrame(
-        rows, "event_id long, t long, user_id long, event_type string, value double"
-    ).select(
-        "event_id",
-        F.col("t").cast("timestamp").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-    )
-    df.createOrReplaceTempView("events")
-
-
-def _mk_docs(spark, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, source string"
-    ).createOrReplaceTempView("documents")
+_DOCS = "doc_id long, text string, source string"
 
 
 def test_boilerplate_df_threshold_is_inclusive_and_tail_segment_counts(hand_views):
@@ -50,7 +34,7 @@ def test_boilerplate_df_threshold_is_inclusive_and_tail_segment_counts(hand_view
     rows = [(i, f"a b c d u{i} x y z{i}", "src1") for i in range(5)]
     rows += [(5 + i, f"e f g h p q r s{i}", "src1") for i in range(4)]
     rows += [(9, "m n o p q", "src1")]
-    _mk_docs(spark, rows)
+    _mk_docs(spark, rows, _DOCS)
     got = {r.doc_id: r for r in spark.sql(_boilerplate(SPARK)).collect()}
     assert got[0].n_segments == 2 and got[0].n_boilerplate == 1
     assert got[0].boiler_frac == pytest.approx(0.5)
@@ -69,6 +53,7 @@ def test_incremental_dedup_excludes_base_and_keeps_first_in_snapshot(hand_views)
             (12, "Y", "src11"),  # later Y -> dropped
             (13, "Z", "src12"),  # new -> kept
         ],
+        _DOCS,
     )
     got = [r.doc_id for r in spark.sql(_incremental(SPARK)).collect()]
     assert got == [11, 13]
@@ -164,6 +149,7 @@ def test_minhash_incremental_pairs_cross_corpus_only(hand_views):
             (12, t2, "src11"),  # inc clones of EACH OTHER only:
             (13, t2, "src12"),  # no cross-corpus pair may form
         ],
+        _DOCS,
     )
     got = [(r.inc_doc, r.base_doc, r.jaccard)
            for r in registry.get("dedup_minhash_incremental")
@@ -177,9 +163,13 @@ def test_skew_advisor_shares_and_salt(hand_views):
         ("2024-02-01",),
         ("2024-02-02",),
     ]
-    spark.createDataFrame(rows, "l_shipdate string").select(
-        F.col("l_shipdate").cast("date")
-    ).createOrReplaceTempView("lineitem")
+    hand_table(
+        spark,
+        "lineitem",
+        spark.createDataFrame(rows, "l_shipdate string").select(
+            F.col("l_shipdate").cast("date")
+        ),
+    )
     got = {r.part_month: r for r in spark.sql(_skew_advisor(SPARK)).collect()}
     jan, feb = got["2024-01"], got["2024-02"]
     assert jan.n_rows == 4 and feb.n_rows == 2
@@ -284,9 +274,7 @@ def test_logreg_gd3_matches_python_replica(hand_views):
                 40 * 2 if long else 4 * 2,
             )
         )
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, n_chars long"
-    ).createOrReplaceTempView("documents")
+    _mk_docs(spark, rows, "doc_id long, text string, lang string, n_chars long")
 
     from rugpull_data_pipeline_spark.plans.traindata_ops import _LR_ITERS
 
@@ -352,17 +340,11 @@ def test_km_survival_with_censoring_hand_values(hand_views):
     assert got[2].km_survival == pytest.approx(0.5, abs=1e-6)
 
 
-def _mk_docs_full(spark, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).createOrReplaceTempView("documents")
-
-
 def test_dataset_card_dup_rate_and_ttr(hand_views):
     spark = hand_views
     from rugpull_data_pipeline_spark.plans.traindata_ops import _dataset_card
 
-    _mk_docs_full(
+    _mk_docs(
         spark,
         [
             (1, "a b c d", "en", "s0", 7),
@@ -370,6 +352,7 @@ def test_dataset_card_dup_rate_and_ttr(hand_views):
             (3, "a a b b", "en", "s0", 7),   # 4 tokens, 2 distinct
             (4, "x y", "de", "s1", 3),
         ],
+        DOCS_N,
     )
     got = {(r.lang, r.source): r
            for r in spark.sql(_dataset_card(SPARK)).collect()}
@@ -395,7 +378,7 @@ def test_dsir_prefers_target_like_docs(hand_views):
         (5, "alpha beta alpha beta", "fr", "s", 20),  # target-like candidate
         (6, "gamma delta gamma delta", "fr", "s", 20),  # raw-like candidate
     ]
-    _mk_docs_full(spark, docs)
+    _mk_docs(spark, docs, DOCS_N)
     rows = registry.get("sample_dsir_selection").builder(spark, "unused").collect()
     ranks = {r.doc_id: i for i, r in enumerate(rows)}
     # all four non-en docs scored; doc 5 strictly above doc 6.

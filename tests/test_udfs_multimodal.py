@@ -16,6 +16,7 @@ from rugpull_data_pipeline_spark.multimodal import (
     extract_blob_metadata,
     sample_frames,
 )
+from tests.helpers import DOC_TEXT, _mk_docs
 
 
 def test_amm_quote_price(spark):
@@ -168,25 +169,22 @@ def test_phash_words_known_pattern_and_neardup_pairing(spark):
     assert {r.wv for r in phash_words(empty).collect()} == {0}
 
 
-def test_phash_neardup_finds_clone_pairs(spark):
-    from rugpull_data_pipeline_spark.plans import registry
+def test_phash_neardup_finds_clone_pairs(hand_views):
     from rugpull_data_pipeline_spark.plans.multimodal_q import (
         multimodal_phash_neardup,
     )
 
+    spark = hand_views
     t1 = "the quick brown fox jumps over the lazy dog again and again"
-    spark.createDataFrame(
+    _mk_docs(
+        spark,
         [(1, t1), (2, t1), (3, "zzz qqq xxx completely different text payload")],
-        "doc_id long, text string",
-    ).createOrReplaceTempView("documents")
-    registry._VIEWS_FOR[id(spark)] = "unused"  # static_table reads the view
-    try:
-        got = [
-            (r.doc_a, r.doc_b, r.hamming_bits)
-            for r in multimodal_phash_neardup(spark, "unused").collect()
-        ]
-    finally:
-        registry._VIEWS_FOR.pop(id(spark), None)
+        DOC_TEXT,
+    )
+    got = [
+        (r.doc_a, r.doc_b, r.hamming_bits)
+        for r in multimodal_phash_neardup(spark, "unused").collect()
+    ]
     assert (1, 2, 0) in got  # identical payloads -> hamming 0
     assert all(a == 1 and b == 2 for a, b, _h in got) or all(
         h <= 20 for _a, _b, h in got
@@ -256,23 +254,20 @@ def test_phash_words_byte_exact_on_non_ascii(spark):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
-def test_vad_segments_islands_and_threshold(spark):
+def test_vad_segments_islands_and_threshold(hand_views):
     from rugpull_data_pipeline_spark.plans.multimodal_q import (
         multimodal_vad_segments,
     )
-    from rugpull_data_pipeline_spark.plans import registry
 
+    spark = hand_views
     # doc 1: loud/quiet/loud 32-byte windows -> two single-window segments;
     # doc 2: loud/loud/quiet -> one merged [0,1] segment.
-    spark.createDataFrame(
+    _mk_docs(
+        spark,
         [(1, "z" * 32 + " " * 32 + "z" * 32), (2, "z" * 64 + " " * 32)],
-        "doc_id long, text string",
-    ).createOrReplaceTempView("documents")
-    registry._VIEWS_FOR[id(spark)] = "unused"  # static_table reads the view
-    try:
-        rows = multimodal_vad_segments(spark, "unused").collect()
-    finally:
-        registry._VIEWS_FOR.pop(id(spark), None)
+        DOC_TEXT,
+    )
+    rows = multimodal_vad_segments(spark, "unused").collect()
     segs = [(r.doc_id, r.seg_start, r.seg_end, r.n_wins) for r in rows]
     assert segs == [(1, 0, 0, 1), (1, 2, 2, 1), (2, 0, 1, 2)]
     z_energy = 32 * 122 * 122

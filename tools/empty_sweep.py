@@ -294,13 +294,14 @@ SURFACES: dict[str, Surface] = {
 def apply_surface(spark, con, sf_dir: str, mode: str) -> None:
     """Register surface ``mode`` of the ``sf_dir`` tables on both engines:
     Spark temp views over the real views, DuckDB views over the parquet
-    files. Pins the registry's view cache to ``sf_dir`` so builders read
-    the substituted views instead of re-registering the real ones."""
+    files. The session stays bound to ``sf_dir``, so builders read the
+    substituted views instead of re-registering the real ones."""
     from rugpull_data_pipeline_spark.plans import registry
-    from rugpull_data_pipeline_spark.sources.tables import register_views
 
     surface = SURFACES[mode]
-    register_views(spark, sf_dir)
+    registry.unbind_views(spark)
+    registry.bind_views(spark, sf_dir)
+    subs = {}
     for t in TABLES:
         src = f"read_parquet('{sf_dir}/{t}.parquet')"
         view = surface.views.get(t)
@@ -310,10 +311,8 @@ def apply_surface(spark, con, sf_dir: str, mode: str) -> None:
         cols = spark.table(t).columns
         con.execute(f"CREATE OR REPLACE VIEW {t} AS {view(DUCK, src, cols)}")
         df = spark.sql(view(SPARK, t, cols))
-        if t in surface.checkpoint:
-            df = df.localCheckpoint()
-        df.createOrReplaceTempView(t)
-    registry._VIEWS_FOR[id(spark)] = sf_dir
+        subs[t] = df.localCheckpoint() if t in surface.checkpoint else df
+    registry.bind_views(spark, sf_dir, subs)
 
 
 def _parser() -> argparse.ArgumentParser:
