@@ -1077,9 +1077,12 @@ def graph_hits_power3(spark, sf_dir):
         # + value side); without it the two references double the lineage
         # per half-step — 2^6 copies of the join/agg chain, measured 6.7 s
         # vs 2.0 s at sf0.1 (ReuseExchange does not recover it). eager=False
-        # materializes INSIDE the main action, so no extra driver round
-        # trips — the r11 eager-checkpoint+first() form paid 2 driver jobs
-        # per half-step for exactly this sharing.
+        # is not deferred under AQE: the frame is a shuffle, and the
+        # adaptive plan runs its shuffle-map job at this call to produce
+        # the checkpoint RDD, so each half-step still runs jobs while the
+        # query is BUILT (41 build jobs with AQE on, 14 with it off, same
+        # rows, sf0.01). Only with AQE off does it materialize inside the
+        # main action.
         unnorm = nodes.join(
             contrib, nodes.node == F.col(group_key), "left"
         ).select(

@@ -6,61 +6,86 @@ SQL-expressible, a DuckDB oracle string over the same parquet tables.
 ``__spark_entry__.py`` re-exports this registry as ``queries()`` /
 ``oracle_sql()``.
 
-A builder reads the fixture tables only as session views
-(``spark.table(name)``, or by name in SQL), which ``bind_views`` binds to
-its ``sf_dir`` before every registered build.
+A builder reads the fixture tables only as views (``spark.table(name)``)
+of the session ``bind_views`` returns: a child of the caller's session per
+sf_dir, holding them and ``tune_session``'s pins, so no build writes the
+caller's catalog or conf.
 """
 
 from __future__ import annotations
 
-import glob
+import functools
+import importlib
 import inspect
 import json
 import os
+import pathlib
 import re
-from dataclasses import dataclass, field
+import threading
+from dataclasses import dataclass
 from typing import Callable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.scalars import DUCK, SPARK
-from ..sources.tables import register_views
+from ..sources.tables import TABLES, register_views
 
 BuilderFn = Callable[[SparkSession, str], DataFrame]
 InputFn = Callable[[], object]
 
 _REGISTRY: dict[str, "QuerySpec"] = {}
 
-# The sf_dir each session's fixture-table views are bound to. Only
-# ``bind_views``/``unbind_views`` read or write it.
-_VIEWS_FOR: dict[int, str] = {}
+
+@dataclass
+class _Child:
+    """A build session, and the caller conf it copied at its last sync
+    (checked as one conf string: ≈0.5 ms, against ``getAll``'s ≈24)."""
+
+    session: SparkSession
+    uuid: str
+    conf: dict[str, str]
+    conf_text: str = ""
+
+    def sync(self, caller: SparkSession) -> None:
+        text = caller._jsparkSession.conf().getAll().toString()
+        if text != self.conf_text:
+            conf = caller.conf.getAll
+            for k in self.conf.keys() - conf.keys():
+                self.session.conf.unset(k)
+            for k, v in conf.items() - self.conf.items():
+                self.session.conf.set(k, v)
+            self.conf, self.conf_text = conf, text
+
+
+# (caller's JVM sessionUUID, sf_dir) -> its child. A child is also filed
+# under its own uuid, so a build it makes for that sf_dir runs in it.
+_CHILDREN: dict[tuple[str, str], _Child] = {}
+_LOCK = threading.Lock()
 
 
 def bind_views(
     spark: SparkSession, sf_dir: str, tables: Mapping[str, DataFrame] | None = None
-) -> None:
-    """Bind the session's fixture-table views to ``sf_dir``.
-
-    Without ``tables``, the parquet tables of ``sf_dir`` are registered
-    unless the session is already bound to it, so repeated builds don't
-    re-read parquet metadata. ``tables`` (view name -> DataFrame) replaces
-    those views with the given frames and records the session as bound to
-    ``sf_dir``, so registered builders called with it read the substituted
-    tables (hand-made test tables, the degenerate-input sweep surfaces)."""
-    key = id(spark)
-    if tables is None:
-        if _VIEWS_FOR.get(key) != sf_dir:
-            register_views(spark, sf_dir)
-    else:
-        for name, df in tables.items():
+) -> SparkSession:
+    """The session a build for ``(spark, sf_dir)`` runs in: made once, as
+    ``spark.newSession()`` with ``spark``'s runtime conf, ``tune_session``'s
+    pins and, without ``tables``, the parquet tables of ``sf_dir`` as views.
+    ``tables`` (view name -> DataFrame created in the returned session)
+    replaces views; substituted tables get an sf_dir of their own, first
+    bound with ``tables={}``. A child called with its sf_dir is returned."""
+    uuid = spark._jsparkSession.sessionUUID()
+    with _LOCK:
+        child = _CHILDREN.get((uuid, sf_dir))
+        if child is None:
+            s = spark.newSession()
+            child = _Child(s, s._jsparkSession.sessionUUID(), s.conf.getAll)
+            child.sync(spark)
+            register_views(s, sf_dir, TABLES if tables is None else ())
+            _CHILDREN[(uuid, sf_dir)] = _CHILDREN[(child.uuid, sf_dir)] = child
+        elif child.uuid != uuid:
+            child.sync(spark)
+        for name, df in (tables or {}).items():
             df.createOrReplaceTempView(name)
-    _VIEWS_FOR[key] = sf_dir
-
-
-def unbind_views(spark: SparkSession) -> None:
-    """Forget the session's binding, so the next ``bind_views`` registers
-    the parquet tables again over any substituted views."""
-    _VIEWS_FOR.pop(id(spark), None)
+    return child.session
 
 
 @dataclass
@@ -68,7 +93,7 @@ class QuerySpec:
     name: str
     builder: BuilderFn
     oracle: str | None = None
-    tags: tuple[str, ...] = field(default_factory=tuple)
+    tags: tuple[str, ...] = ()
     doc: str = ""
     inputs: tuple[InputFn, ...] = ()
 
@@ -94,9 +119,9 @@ def register(
 
     def deco(fn: BuilderFn) -> BuilderFn:
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            bind_views(spark, sf_dir)
+            session = bind_views(spark, sf_dir)
             spec.generate_inputs()
-            return fn(spark, sf_dir)
+            return fn(session, sf_dir)
 
         spec = QuerySpec(name, wrapped, oracle, tags, doc or fn.__doc__ or "", inputs)
         _REGISTRY[name] = spec
@@ -113,14 +138,15 @@ def pair(
     shared: dict[str, Callable[..., str]] | None = None,
 ) -> None:
     """Register ``q(dialect, **shared_cores) -> SQL text`` as its
-    Spark/DuckDB pair.
+    Spark/DuckDB pair; the Spark builder runs in the session ``bind_views``
+    returns, so its cores and frame belong to that child.
 
     ``shared`` maps a CTE name to its core text function ``core(dialect)``
     for cores read by more than one consumer in ``q``. Spark inlines a
     ``WITH`` CTE once per consumer, so each core is built once and eagerly
     ``localCheckpoint``ed, and ``q`` reads it as ``SELECT * FROM {name}``.
-    DuckDB materializes CTEs itself, so the oracle inlines ``core(DUCK)``.
-    This is the one place that policy lives.
+    DuckDB materializes CTEs itself, so the oracle inlines ``core(DUCK)``:
+    the one place that policy lives.
 
     Cores may depend on each other: ``shared`` is ordered, and a core
     ``core(dialect, **earlier)`` names the earlier cores it reads as
@@ -143,7 +169,7 @@ def pair(
     text = q(SPARK, **{k: ref[k] for k in q_reads})
 
     def builder(spark: SparkSession, sf_dir: str) -> DataFrame:
-        bind_views(spark, sf_dir)
+        spark = bind_views(spark, sf_dir)
         frames: dict[str, DataFrame] = {}
         for k in names:
             frames[k] = spark.sql(
@@ -164,9 +190,8 @@ def _reads(name: str, fn: Callable[..., str], known: list[str]) -> list[str]:
     params = list(inspect.signature(fn).parameters)[1:]
     bad = [p for p in params if p not in known]
     if bad:
-        raise ValueError(
-            f"{name}: {fn.__name__} reads {bad}, not among the cores before it {known}"
-        )
+        raise ValueError(f"{name}: {fn.__name__} reads {bad}, "
+                         f"not among the cores before it {known}")
     return params
 
 
@@ -190,11 +215,8 @@ _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__
 
 def load_grades() -> dict[str, dict]:
     """The recorded driver grades: artifact file name -> its JSON."""
-    files = {}
-    for path in sorted(glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json"))):
-        with open(path) as fh:
-            files[os.path.basename(path)] = json.load(fh)
-    return files
+    paths = sorted(pathlib.Path(_REPO).glob("CORRECTNESS_r*.json"))
+    return {p.name: json.loads(p.read_text()) for p in paths}
 
 
 def last_green_round(files: dict[str, dict]) -> dict[str, int]:
@@ -228,43 +250,20 @@ def all_queries() -> dict[str, BuilderFn]:
 
 
 def all_oracles() -> dict[str, str]:
-    specs = [(name, spec) for name, spec in _ordered() if spec.oracle is not None]
-    for _, spec in specs:
-        spec.generate_inputs()
-    return {name: spec.oracle for name, spec in specs}
+    return {n: get(n).oracle for n, spec in _ordered() if spec.oracle is not None}
 
 
-_LOADED = False
+# The plan modules; each registers its queries on import.
+_PLAN_MODULES = """
+    relational tpch_shapes spark4_features semi_structured llm_ops domain
+    advanced multimodal_q curation corpus_ops quality_ops stream_infra
+    pipeline_ops mlprep_ops traindata_ops stats_eval feature_ops mining_ops
+    analytics_ops diagnostics_ops insights_ops forensics_ops robustness_ops
+    screening_ops
+""".split()
 
 
+@functools.cache
 def _load_plan_modules() -> None:
-    """Import the plan modules exactly once (they register on import)."""
-    global _LOADED
-    if _LOADED:
-        return
-    from . import relational  # noqa: F401
-    from . import tpch_shapes  # noqa: F401
-    from . import spark4_features  # noqa: F401
-    from . import semi_structured  # noqa: F401
-    from . import llm_ops  # noqa: F401
-    from . import domain  # noqa: F401
-    from . import advanced  # noqa: F401
-    from . import multimodal_q  # noqa: F401
-    from . import curation  # noqa: F401
-    from . import corpus_ops  # noqa: F401
-    from . import quality_ops  # noqa: F401
-    from . import stream_infra  # noqa: F401
-    from . import pipeline_ops  # noqa: F401
-    from . import mlprep_ops  # noqa: F401
-    from . import traindata_ops  # noqa: F401
-    from . import stats_eval  # noqa: F401
-    from . import feature_ops  # noqa: F401
-    from . import mining_ops  # noqa: F401
-    from . import analytics_ops  # noqa: F401
-    from . import diagnostics_ops  # noqa: F401
-    from . import insights_ops  # noqa: F401
-    from . import forensics_ops  # noqa: F401
-    from . import robustness_ops  # noqa: F401
-    from . import screening_ops  # noqa: F401
-
-    _LOADED = True
+    for m in _PLAN_MODULES:
+        importlib.import_module(f".{m}", __package__)

@@ -44,10 +44,12 @@ def _flagship(d: str) -> str:
     # buffer mutable.
     # J3: a broadcast left join after the aggregate attaches the USD price
     # (SERVER/flightWithRedisLatest.py:92-112).
-    # No global ORDER BY: the output relation is fact-sized and the driver
-    # compare is order-insensitive — a full range-shuffle sort of the result
-    # would be pure waste at scale (same call as window_running_sum).
-    return f"""
+    # No global ORDER BY on Spark: the output relation is fact-sized and the
+    # driver compare is order-insensitive — a full range-shuffle sort of the
+    # result would be pure waste at scale (same call as window_running_sum).
+    # The oracle orders by (suppkey, partkey), the unique group key, so
+    # DuckDB returns its rows in one order on every run.
+    sql = f"""
     WITH watch AS (
         SELECT /*+ BROADCAST(n, r) */ s_suppkey, s_name
         FROM supplier
@@ -77,6 +79,7 @@ def _flagship(d: str) -> str:
     FROM moves m
     LEFT JOIN part p ON m.l_partkey = p.p_partkey
     """
+    return sql + "ORDER BY suppkey, partkey\n" if d == DUCK else sql
 
 
 # The one grading text of the batch flagship AND its streaming replay

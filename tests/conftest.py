@@ -48,29 +48,14 @@ def sf_dir():
     return SF_ORACLE
 
 
-def session_views(spark) -> set[str]:
-    """Names of the session's temp views (``SHOW VIEWS``: one cheap catalog
-    call, unlike ``spark.catalog.listTables()``)."""
-    return {r.viewName for r in spark.sql("SHOW VIEWS").collect()}
-
-
 @pytest.fixture
-def hand_views(spark):
-    """For tests that bind hand-made fixture tables (``tests.helpers``) and
-    call builders with the sf_dir ``HAND``: the session is bound to
-    ``HAND`` from the start, so registered builders read the hand tables.
-    Afterwards the views the test registered (every fixture-table name and
-    anything new) are dropped and the session unbound, so the next build
-    registers the real tables again and no hand rows leak into later tests."""
+def hand(spark):
+    """The build session of a fresh caller under the sf_dir ``HAND``, with
+    no fixture views: the test binds its hand-made tables there
+    (``tests.helpers``) and calls builders with it and ``HAND``. ``spark``
+    binds nothing, and the next test gets a fresh session of its own."""
     from rugpull_data_pipeline_spark.plans import registry
-    from rugpull_data_pipeline_spark.sources.tables import TABLES
 
     from .helpers import HAND
 
-    before = session_views(spark)
-    registry.bind_views(spark, HAND, {})
-    yield spark
-    after = session_views(spark)
-    for v in (after - before) | (after & set(TABLES)):
-        spark.catalog.dropTempView(v)
-    registry.unbind_views(spark)
+    return registry.bind_views(spark.newSession(), HAND, {})

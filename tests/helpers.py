@@ -1,9 +1,10 @@
 """Helpers shared by the test modules.
 
 - Hand-made fixture tables, bound the way the package binds the parquet
-  ones: as session views, through ``registry.bind_views``. A test that
-  binds them takes the ``hand_views`` fixture and calls builders with the
-  sf_dir ``HAND``; the fixture drops the views afterwards.
+  ones: as views of a build session, through ``registry.bind_views``. A
+  test takes the ``hand`` fixture (the ``HAND`` build session of a
+  fresh caller), creates its tables there and calls builders with it and
+  the sf_dir ``HAND``; nothing is left to drop afterwards.
 - The exact-decimal replicas of Spark's double -> decimal casts that the
   property tests compare against, and their shared Hypothesis settings.
 """
@@ -35,8 +36,9 @@ LINEITEM = (
 
 
 def hand_table(spark, name: str, data, schema: str | None = None) -> None:
-    """Bind ``data`` (rows with ``schema``, a pandas frame or a DataFrame)
-    as the fixture table ``name`` of the ``HAND`` tables."""
+    """Bind ``data`` (rows with ``schema``, a pandas frame or a DataFrame
+    created in ``spark``) as the fixture table ``name`` of the ``HAND``
+    build session ``spark``."""
     df = data if isinstance(data, DataFrame) else spark.createDataFrame(data, schema)
     registry.bind_views(spark, HAND, {name: df})
 

@@ -18,17 +18,11 @@ from rugpull_data_pipeline_spark.plans import registry
 SF = "/root/testdata/sf0.001"
 
 
-@pytest.fixture
-def views(spark):
-    yield spark
-    registry.unbind_views(spark)
-
-
-def test_lsh_band_sensitivity_nesting_and_scurve(views):
+def test_lsh_band_sensitivity_nesting_and_scurve(spark):
     rows = {
         r.config: r
         for r in registry.get("audit_lsh_band_sensitivity")
-        .builder(views, SF)
+        .builder(spark, SF)
         .collect()
     }
     assert set(rows) == {"b16r1", "b08r2", "b04r4", "b02r8"}
@@ -45,16 +39,16 @@ def test_lsh_band_sensitivity_nesting_and_scurve(views):
         assert r.n_bands * r.rows_per_band == 16
 
 
-def test_ann_recall_bounds_and_ratio(views):
-    rows = registry.get("audit_ann_recall").builder(views, SF).collect()
+def test_ann_recall_bounds_and_ratio(spark):
+    rows = registry.get("audit_ann_recall").builder(spark, SF).collect()
     assert rows  # sf0.001 has queries
     for r in rows:
         assert 0 <= r.hits <= r.k_exact
         assert r.recall_at_10 == pytest.approx(r.hits / r.k_exact, abs=2e-6)
 
 
-def test_multiprobe_recall_bounds_and_ratio(views):
-    rows = registry.get("audit_multiprobe_recall").builder(views, SF).collect()
+def test_multiprobe_recall_bounds_and_ratio(spark):
+    rows = registry.get("audit_multiprobe_recall").builder(spark, SF).collect()
     assert rows
     for r in rows:
         assert 0 <= r.hits_home <= r.k_exact
@@ -66,8 +60,8 @@ def test_multiprobe_recall_bounds_and_ratio(views):
     assert sum(r.hits_multi for r in rows) >= sum(r.hits_home for r in rows)
 
 
-def test_minhash_estimate_audit_bounds(views):
-    rows = registry.get("audit_minhash_estimate").builder(views, SF).collect()
+def test_minhash_estimate_audit_bounds(spark):
+    rows = registry.get("audit_minhash_estimate").builder(spark, SF).collect()
     for r in rows:
         d = r.asDict()
         est = d.get("jaccard_est")

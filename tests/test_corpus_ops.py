@@ -127,14 +127,13 @@ def test_substring_dedup_flags_cross_doc_windows(spark, sf_dir):
         assert (df["n_dup_windows"] > 0).sum() >= 2
 
 
-def test_bm25_scores_handmade(hand_views):
+def test_bm25_scores_handmade(hand):
     import math
     from rugpull_data_pipeline_spark.functions.scalars import SPARK
     from rugpull_data_pipeline_spark.plans.llm_ops import _bm25
 
-    spark = hand_views
-    _mk_docs(spark, [(1, "table table x y"), (2, "table z")], DOC_TEXT)
-    rows = spark.sql(_bm25(SPARK)).collect()
+    _mk_docs(hand, [(1, "table table x y"), (2, "table z")], DOC_TEXT)
+    rows = hand.sql(_bm25(SPARK)).collect()
     # N=2, ntok=6, df(table)=2 -> idf = ln(1.2); dl1=4, dl2=2, avgdl=3.
     idf = math.log(1.2)
     s1 = idf * 2 * 2.2 / (2 + 1.2 * (0.25 + 0.75 * 4 / 3))
@@ -145,7 +144,7 @@ def test_bm25_scores_handmade(hand_views):
     assert rows[0].n_terms_hit == 1
 
 
-def test_suffix_prefix_overlap_directional(hand_views):
+def test_suffix_prefix_overlap_directional(hand):
     from rugpull_data_pipeline_spark.functions.scalars import SPARK
     from rugpull_data_pipeline_spark.plans.llm_ops import _suffix_prefix_overlap
 
@@ -153,26 +152,24 @@ def test_suffix_prefix_overlap_directional(hand_views):
     a = "x1 x2 " + shared          # ends with the shared window
     b = shared + " y1 y2"          # starts with it
     c = "z1 z2 z3 z4 z5 z6 z7 z8"  # unrelated
-    spark = hand_views
-    _mk_docs(spark, [(1, a), (2, b), (3, c)], DOC_TEXT)
-    got = [(r.doc_a, r.doc_b) for r in spark.sql(_suffix_prefix_overlap(SPARK)).collect()]
+    _mk_docs(hand, [(1, a), (2, b), (3, c)], DOC_TEXT)
+    got = [(r.doc_a, r.doc_b) for r in hand.sql(_suffix_prefix_overlap(SPARK)).collect()]
     assert got == [(1, 2)]  # directional: A's suffix -> B's prefix only
 
 
-def test_bigram_kneser_ney_handmade(hand_views):
+def test_bigram_kneser_ney_handmade(hand):
     import math
     from rugpull_data_pipeline_spark.plans import registry
 
-    spark = hand_views
     # bigrams: (a,b) x2, (a,c) x1 -> c1(a)=3, N1+(a.)=2, N1+(.b)=N1+(.c)=1,
     # T=2. P(b|a)=1.25/3+0.75*(2/3)*0.5=2/3; P(c|a)=0.25/3+0.25=1/3.
     _mk_docs(
-        spark,
+        hand,
         [(1, "a b"), (2, "a b"), (3, "a c"), (4, "solo")],
         DOC_TEXT,
     )
     got = {r.doc_id: r for r in registry.get("text_bigram_kneser_ney")
-                                .builder(spark, "unused").collect()}
+                                .builder(hand, "unused").collect()}
     assert sorted(got) == [1, 2, 3]  # the 1-token doc has no bigrams
     assert got[1].n_bigrams == 1
     assert got[1].avg_nll_kn == pytest.approx(-math.log(2 / 3), abs=2e-6)

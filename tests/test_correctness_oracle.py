@@ -130,3 +130,17 @@ def test_every_oracle_runs_standalone_in_duckdb(sf_dir):
             failures.append(f"{name}: {ex}")
     con.close()
     assert not failures, "\n".join(failures)
+
+
+def test_flagship_oracle_rows_come_in_one_order():
+    """The flagship oracle orders its rows by its unique group key, so two
+    DuckDB runs return the same ordered frame (an ordered answer hash of
+    the query is reproducible)."""
+    from rugpull_data_pipeline_spark.plans.relational import FLAGSHIP_ORACLE
+
+    from .conftest import SF_SMOKE
+    from .oracle_harness import run_oracle
+
+    first = run_oracle(FLAGSHIP_ORACLE, SF_SMOKE)
+    assert len(first) > 0
+    assert first.equals(run_oracle(FLAGSHIP_ORACLE, SF_SMOKE))

@@ -139,7 +139,7 @@ def test_pack_sequences_invariants(spark, sf_dir):
     a source's last holds ≥ the 2048-token budget once its straddling doc
     (which began inside the window) is counted."""
     packs = registry.get("text_pack_sequences").builder(spark, sf_dir).collect()
-    docs = spark.sql(
+    docs = registry.bind_views(spark, sf_dir).sql(
         "select source, sum(size(split(trim(text), '\\\\s+'))) as n "
         "from documents group by source"
     ).collect()

@@ -40,33 +40,33 @@ def _constant_daily(n_days=8, cents=500):
     ]
 
 
-def test_acf_lags_constant_series_is_null_both_engines(hand_views):
+def test_acf_lags_constant_series_is_null_both_engines(hand):
     from rugpull_data_pipeline_spark.plans.mlprep_ops import _acf_lags
 
-    srows, ddf = _both(hand_views, _constant_daily(), _acf_lags)
+    srows, ddf = _both(hand, _constant_daily(), _acf_lags)
     assert len(srows) == 3 and len(ddf) == 3
     assert all(r.acf is None for r in srows)
     assert ddf["acf"].isna().all()
 
 
-def test_series_correlation_constant_pair_is_null_both_engines(hand_views):
+def test_series_correlation_constant_pair_is_null_both_engines(hand):
     from rugpull_data_pipeline_spark.plans.pipeline_ops import _series_correlation
 
     rows = []
     for i in range(30):  # >= 24 shared hourly buckets, both series constant
         rows.append((2 * i, i * 3600, 1, "a", 5.0))
         rows.append((2 * i + 1, i * 3600, 1, "b", 7.0))
-    srows, ddf = _both(hand_views, rows, _series_correlation)
+    srows, ddf = _both(hand, rows, _series_correlation)
     assert len(srows) == 1 and len(ddf) == 1
     assert srows[0].pearson_r is None
     assert ddf["pearson_r"].isna().all()
 
 
-def test_neyman_all_constant_strata_alloc_null_both_engines(hand_views):
+def test_neyman_all_constant_strata_alloc_null_both_engines(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _neyman
 
     rows = [(i, 10 * i, 1, ["a", "b"][i % 2], 5.0) for i in range(8)]
-    srows, ddf = _both(hand_views, rows, _neyman)
+    srows, ddf = _both(hand, rows, _neyman)
     assert len(srows) == 2 and len(ddf) == 2
     for r in srows:
         assert r.std_pop == 0.0
@@ -75,51 +75,51 @@ def test_neyman_all_constant_strata_alloc_null_both_engines(hand_views):
     assert ddf["alloc_n"].isna().all()
 
 
-def test_zscore_constant_type_yields_no_rows_both_engines(hand_views):
+def test_zscore_constant_type_yields_no_rows_both_engines(hand):
     from rugpull_data_pipeline_spark.plans.curation import _zscore_outliers
 
     # 6.11: floor-cents quantization makes ex2 - mu^2 epsilon-negative
     rows = [(i, 10 * i, 1, "click", 6.11) for i in range(5)]
-    srows, ddf = _both(hand_views, rows, _zscore_outliers)
+    srows, ddf = _both(hand, rows, _zscore_outliers)
     assert srows == [] and len(ddf) == 0
 
 
-def test_bootstrap_single_constant_row_sd_zero_both_engines(hand_views):
+def test_bootstrap_single_constant_row_sd_zero_both_engines(hand):
     from rugpull_data_pipeline_spark.plans.feature_ops import _bootstrap
 
     rows = [(i, 10 * i, 1, "click", 6.11) for i in range(4)]
-    srows, ddf = _both(hand_views, rows, _bootstrap)
+    srows, ddf = _both(hand, rows, _bootstrap)
     assert len(srows) == 1 and len(ddf) == 1
     assert srows[0].boot_sd is not None and not math.isnan(srows[0].boot_sd)
     assert srows[0].boot_sd == ddf["boot_sd"].iloc[0]
 
 
-def test_ab_ztest_zero_conversions_z_null_both_engines(hand_views):
+def test_ab_ztest_zero_conversions_z_null_both_engines(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _ab_ztest
 
     # no purchases at all: pooled rate 0 -> z denominator 0 -> NULL
     rows = [(i, i * 86400, 1, "click", 1.0) for i in range(6)]
-    srows, ddf = _both(hand_views, rows, _ab_ztest)
+    srows, ddf = _both(hand, rows, _ab_ztest)
     assert len(srows) == 1 and len(ddf) == 1
     assert srows[0].z_score is None
     assert ddf["z_score"].isna().all()
 
 
-def test_ab_ztest_empty_arm_null_both_engines(hand_views):
+def test_ab_ztest_empty_arm_null_both_engines(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _ab_ztest
 
     # every event on an odd day: arm A is empty -> rate_a and z are NULL
     rows = [
         (i, 86400 + i, 1, ["click", "purchase"][i % 2], 1.0) for i in range(6)
     ]
-    srows, ddf = _both(hand_views, rows, _ab_ztest)
+    srows, ddf = _both(hand, rows, _ab_ztest)
     assert len(srows) == 1 and len(ddf) == 1
     assert srows[0].n1 == 0
     assert srows[0].rate_a is None and srows[0].z_score is None
     assert ddf["rate_a"].isna().all() and ddf["z_score"].isna().all()
 
 
-def test_single_class_eval_metrics_null_both_engines(hand_views):
+def test_single_class_eval_metrics_null_both_engines(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import (
         _auc,
         _brier,
@@ -131,35 +131,34 @@ def test_single_class_eval_metrics_null_both_engines(hand_views):
     # one class, recall has no positives, Brier's climatology is 0, KS
     # has an empty odd-day sample — each was an ANSI divide on Spark
     rows = [(i, i * 2 * 86400 + i, 1, "click", 5.0 + i) for i in range(4)]
-    srows, ddf = _both(hand_views, rows, _auc)
+    srows, ddf = _both(hand, rows, _auc)
     assert srows[0].auc is None and ddf["auc"].isna().all()
-    srows, ddf = _both(hand_views, rows, _threshold_sweep)
+    srows, ddf = _both(hand, rows, _threshold_sweep)
     assert all(r.recall_ is None for r in srows)
     assert ddf["recall_"].isna().all()
-    srows, ddf = _both(hand_views, rows, _brier)
+    srows, ddf = _both(hand, rows, _brier)
     assert srows[0].brier_skill is None and ddf["brier_skill"].isna().all()
-    srows, ddf = _both(hand_views, rows, _ks_drift)
+    srows, ddf = _both(hand, rows, _ks_drift)
     assert srows[0].ks_stat is None and ddf["ks_stat"].isna().all()
 
 
-def test_kappa_unanimous_raters_null_both_engines(hand_views):
+def test_kappa_unanimous_raters_null_both_engines(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _cohens_kappa
 
     # every doc short and low-vocab: both gates say drop for everything,
     # expected agreement is 1 and kappa undefined — NULL on both engines
     docs = [(i, "tiny", "en", "s0") for i in range(4)]
-    spark = hand_views
     hand_table(
-        spark,
+        hand,
         "documents",
-        spark.createDataFrame(
+        hand.createDataFrame(
             docs, "doc_id long, text string, lang string, source string"
         ).withColumn("n_chars", F.length("text")),
     )
     con = duckdb.connect()
     pdf = pd.DataFrame(docs, columns=["doc_id", "text", "lang", "source"])
     con.register("documents", pdf.assign(n_chars=pdf["text"].str.len()))
-    srows = spark.sql(_cohens_kappa(SPARK)).collect()
+    srows = hand.sql(_cohens_kappa(SPARK)).collect()
     ddf = con.execute(_cohens_kappa(DUCK)).fetchdf()
     con.close()
     assert len(srows) == 1 and len(ddf) == 1
@@ -168,21 +167,20 @@ def test_kappa_unanimous_raters_null_both_engines(hand_views):
     assert ddf["kappa"].isna().all()
 
 
-def test_pmi_single_token_docs_empty_both_engines(hand_views):
+def test_pmi_single_token_docs_empty_both_engines(hand):
     from rugpull_data_pipeline_spark.plans import registry
 
     # single-token docs have no bigrams: Spark's sequence(1, 0) DESCENDS
     # and ANSI element_at threw on the out-of-bounds probe before the
     # size >= 2 prefilter; DuckDB's empty range() always skipped them
     docs = [(i, t, "en", "s0") for i, t in enumerate(["", "solo", "a b"])]
-    spark = hand_views
-    _mk_docs(spark, docs)
+    _mk_docs(hand, docs)
     con = duckdb.connect()
     con.register(
         "documents",
         pd.DataFrame(docs, columns=["doc_id", "text", "lang", "source"]),
     )
-    srows = registry.get("text_pmi_collocations").builder(spark, "unused").collect()
+    srows = registry.get("text_pmi_collocations").builder(hand, "unused").collect()
     drows = con.execute(registry.get("text_pmi_collocations").oracle).fetchall()
     con.close()
     # the one bigram ('a','b') is below the min-count threshold -> empty,
@@ -190,18 +188,17 @@ def test_pmi_single_token_docs_empty_both_engines(hand_views):
     assert srows == [] and drows == []
 
 
-def test_zipf_single_term_null_both_engines(hand_views):
+def test_zipf_single_term_null_both_engines(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _zipf
 
     docs = [(0, "word", "en", "s0"), (1, "word", "en", "s0")]
-    spark = hand_views
-    _mk_docs(spark, docs)
+    _mk_docs(hand, docs)
     con = duckdb.connect()
     con.register(
         "documents",
         pd.DataFrame(docs, columns=["doc_id", "text", "lang", "source"]),
     )
-    srows = spark.sql(_zipf(SPARK)).collect()
+    srows = hand.sql(_zipf(SPARK)).collect()
     ddf = con.execute(_zipf(DUCK)).fetchdf()
     con.close()
     assert len(srows) == 1 and len(ddf) == 1
@@ -210,7 +207,7 @@ def test_zipf_single_term_null_both_engines(hand_views):
     assert ddf["zipf_slope"].isna().all()
 
 
-def test_cosine_zero_vector_null_both_engines(hand_views):
+def test_cosine_zero_vector_null_both_engines(hand):
     from rugpull_data_pipeline_spark.plans.llm_ops import _sim_topk
 
     # one all-zero vector among normal ones: its cosines are NULL (0 norm)
@@ -222,8 +219,7 @@ def test_cosine_zero_vector_null_both_engines(hand_views):
         (2, [0.5, 1.0, 0.0, 2.0], 0),
         (3, [1.0, 1.0, 1.0, 1.0], 1),
     ]
-    spark = hand_views
-    _mk_embeddings(spark, vecs)
+    _mk_embeddings(hand, vecs)
     con = duckdb.connect()
     con.register(
         "embeddings",
@@ -231,7 +227,7 @@ def test_cosine_zero_vector_null_both_engines(hand_views):
     )
     srows = [
         (r.query_id, r.vec_id, r.cosine, r.rnk)
-        for r in spark.sql(_sim_topk(SPARK)).collect()
+        for r in hand.sql(_sim_topk(SPARK)).collect()
     ]
     ddf = con.execute(_sim_topk(DUCK)).fetchdf()
     drows = [
@@ -245,24 +241,24 @@ def test_cosine_zero_vector_null_both_engines(hand_views):
     assert all(c is None for q, v, c, _ in srows if q == 1 or v == 1)
 
 
-def test_ewma_all_null_values_null_both_engines(hand_views):
+def test_ewma_all_null_values_null_both_engines(hand):
     from rugpull_data_pipeline_spark.plans.pipeline_ops import _ewma_halflife
 
     # count(*) > 0 but count(value) = 0: every 8-lag window is all-NULL,
     # the weight sum is 0 — previously an ANSI DIVIDE_BY_ZERO on Spark
     rows = [(i, 10 * i, 1, "click", None) for i in range(6)]
-    srows, ddf = _both(hand_views, rows, _ewma_halflife)
+    srows, ddf = _both(hand, rows, _ewma_halflife)
     assert len(srows) == 1 and len(ddf) == 1
     assert srows[0].n == 6
     assert srows[0].sum_ewma is None and srows[0].max_ewma is None
     assert ddf["sum_ewma"].isna().all() and ddf["max_ewma"].isna().all()
 
 
-def test_entropy_rate_single_state_norm_null_both_engines(hand_views):
+def test_entropy_rate_single_state_norm_null_both_engines(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _entropy_rate
 
     rows = [(i, 100 + i, 1, "click", 1.0) for i in range(6)]
-    srows, ddf = _both(hand_views, rows, _entropy_rate)
+    srows, ddf = _both(hand, rows, _entropy_rate)
     assert len(srows) == 1 and len(ddf) == 1
     assert srows[0].n_states == 1
     assert srows[0].entropy_rate_nats == 0.0
@@ -270,7 +266,7 @@ def test_entropy_rate_single_state_norm_null_both_engines(hand_views):
     assert ddf["entropy_rate_norm"].isna().all()
 
 
-def test_hits_edgeless_graph_null_scores_both_engines(hand_views):
+def test_hits_edgeless_graph_null_scores_both_engines(hand):
     """Every user has exactly ONE event: nodes exist but the transition
     edge set is empty, so the L1 norm is 0. The DuckDB oracle's
     `val / nullif(norm, 0)` yields NULL authority/hub; the Spark builder
@@ -282,14 +278,13 @@ def test_hits_edgeless_graph_null_scores_both_engines(hand_views):
 
     from rugpull_data_pipeline_spark.plans import mlprep_ops
 
-    spark = hand_views
     rows = [(i, i * 3600, i, t, 1.0) for i, t in
             enumerate(["click", "buy", "view"])]
     pdf = pd.DataFrame(
         rows, columns=["event_id", "t", "user_id", "event_type", "value"]
     )
-    _mk_events(spark, pdf)
-    srows = mlprep_ops.graph_hits_power3(spark, "unused").collect()
+    _mk_events(hand, pdf)
+    srows = mlprep_ops.graph_hits_power3(hand, "unused").collect()
 
     con = _duckdb.connect()
     dpdf = pdf.assign(ts=pd.to_datetime(pdf["t"], unit="s")).drop(columns=["t"])
@@ -302,7 +297,7 @@ def test_hits_edgeless_graph_null_scores_both_engines(hand_views):
     assert ddf["authority"].isna().all() and ddf["hub"].isna().all()
 
 
-def test_higher_order_funcs_empty_text_csv_empty_string_both_engines(hand_views):
+def test_higher_order_funcs_empty_text_csv_empty_string_both_engines(hand):
     """A zero-token document: `split('', ' ')` yields [''] on both engines,
     the length>4 filter empties it, and the csv join of the EMPTY list must
     be '' on both — DuckDB's bare array_to_string returns NULL there
@@ -312,10 +307,9 @@ def test_higher_order_funcs_empty_text_csv_empty_string_both_engines(hand_views)
 
     from rugpull_data_pipeline_spark.plans.advanced import _higher_order
 
-    spark = hand_views
     pdf = pd.DataFrame({"doc_id": [1, 2], "text": ["", "tiny words only"]})
-    hand_table(spark, "documents", pdf)
-    srows = spark.sql(_higher_order(SPARK)).collect()
+    hand_table(hand, "documents", pdf)
+    srows = hand.sql(_higher_order(SPARK)).collect()
 
     con = _duckdb.connect()
     con.register("documents", pdf)

@@ -29,22 +29,18 @@ CASES = [
 ]
 
 
-@pytest.fixture
-def empty_views(spark):
-    """The sweep's ``empty`` surface: real schemas (incl. event-time
-    normalization), zero rows, bound to ``SF`` so builders don't
-    re-register; unbound afterwards so other tests get the real views
-    back."""
+@pytest.fixture(scope="module")
+def empty_sf(spark):
+    """The sf_dir under which builders called with ``spark`` read the
+    sweep's ``empty`` surface: real schemas (incl. event-time
+    normalization), zero rows."""
     with duckdb.connect() as con:
-        apply_surface(spark, con, SF, "empty")
-    yield spark
-    registry.unbind_views(spark)
+        return apply_surface(spark, con, SF, "empty")
 
 
 @pytest.mark.parametrize("name,expected_rows", CASES)
-def test_empty_input_matches_oracle_shape(empty_views, name, expected_rows):
-    spark = empty_views
-    rows = registry.get(name).builder(spark, SF).collect()
+def test_empty_input_matches_oracle_shape(spark, empty_sf, name, expected_rows):
+    rows = registry.get(name).builder(spark, empty_sf).collect()
     assert len(rows) == expected_rows
     if name == "events_entropy_rate":
         r = rows[0]

@@ -113,8 +113,8 @@ def test_lsh_buckets_df_matches_sql_twin(spark, sf_dir):
     from rugpull_data_pipeline_spark.plans import registry
     from rugpull_data_pipeline_spark.plans.llm_ops import _lsh_buckets
 
-    registry.bind_views(spark, sf_dir)
-    spark_rows = sorted(map(tuple, spark.sql(_lsh_buckets(SPARK)).collect()))
+    views = registry.bind_views(spark, sf_dir)
+    spark_rows = sorted(map(tuple, views.sql(_lsh_buckets(SPARK)).collect()))
     duck_rows = _duck_buckets(
         "CREATE VIEW embeddings AS SELECT * FROM "
         f"read_parquet('{sf_dir}/embeddings.parquet')"
@@ -123,13 +123,12 @@ def test_lsh_buckets_df_matches_sql_twin(spark, sf_dir):
     assert len(spark_rows) > 0
 
 
-def test_lsh_buckets_df_matches_sql_twin_degenerate(hand_views):
+def test_lsh_buckets_df_matches_sql_twin_degenerate(hand):
     # empty embedding (absent from buckets), null elements (skipped by SUM),
     # all-null vector (NULL sums -> bit 0 on every plane), plus a normal row
     from rugpull_data_pipeline_spark.functions.scalars import SPARK
     from rugpull_data_pipeline_spark.plans.llm_ops import _lsh_buckets
 
-    spark = hand_views
     rows = [
         (1, [0.5, -0.25, 1.0], 0),
         (2, [], 0),
@@ -137,8 +136,8 @@ def test_lsh_buckets_df_matches_sql_twin_degenerate(hand_views):
         (4, [None, None], 0),
         (5, [-1e-9, 1e-9], 0),
     ]
-    _mk_embeddings(spark, rows)
-    spark_rows = sorted(map(tuple, spark.sql(_lsh_buckets(SPARK)).collect()))
+    _mk_embeddings(hand, rows)
+    spark_rows = sorted(map(tuple, hand.sql(_lsh_buckets(SPARK)).collect()))
 
     def lit(v):
         return "NULL" if v is None else repr(v)

@@ -21,10 +21,9 @@ from tests.helpers import DOC_TEXT, PROP, _mk_docs, _mk_embeddings, _mk_events
 _EVENTS = "event_id long, t long, user_id long, event_type string"
 
 
-def test_chunking_boundaries(hand_views):
-    spark = hand_views
+def test_chunking_boundaries(hand):
     _mk_docs(
-        spark,
+        hand,
         [
             (1, "a b c d e"),  # shorter than one chunk -> single 5-token chunk
             (2, " ".join(f"t{i}" for i in range(32))),  # exact chunk size
@@ -32,7 +31,7 @@ def test_chunking_boundaries(hand_views):
         ],
         DOC_TEXT,
     )
-    rows = spark.sql(_chunk_sliding(SPARK)).collect()
+    rows = hand.sql(_chunk_sliding(SPARK)).collect()
     by_doc = {}
     for r in rows:
         by_doc.setdefault(r.doc_id, []).append(r.chunk_len)
@@ -44,10 +43,9 @@ def test_chunking_boundaries(hand_views):
     assert [r.chunk_id for r in rows if r.doc_id == 2] == [0, 1]
 
 
-def test_asof_tolerance_semantics(hand_views):
-    spark = hand_views
+def test_asof_tolerance_semantics(hand):
     _mk_events(
-        spark,
+        hand,
         [
             # user 1: two purchases in range -> nearest (dt=100) wins
             (10, 1000, 1, "click"),
@@ -69,7 +67,7 @@ def test_asof_tolerance_semantics(hand_views):
         ],
         _EVENTS,
     )
-    got = {r.click_id: (r.purchase_id, r.dt_s) for r in spark.sql(
+    got = {r.click_id: (r.purchase_id, r.dt_s) for r in hand.sql(
         _asof_tolerance(SPARK)
     ).collect()}
     assert got[10] == (12, 100)
@@ -79,10 +77,9 @@ def test_asof_tolerance_semantics(hand_views):
     assert got[50] == (51, 2)
 
 
-def test_interval_overlap_semantics(hand_views):
-    spark = hand_views
+def test_interval_overlap_semantics(hand):
     _mk_events(
-        spark,
+        hand,
         [
             # user 1: error starts exactly when signup window ends -> NO pair
             (10, 0, 1, "signup"),
@@ -97,7 +94,7 @@ def test_interval_overlap_semantics(hand_views):
         ],
         _EVENTS,
     )
-    rows = spark.sql(_interval_overlap(SPARK)).collect()
+    rows = hand.sql(_interval_overlap(SPARK)).collect()
     got = {(r.signup_id, r.error_id): r.overlap_s for r in rows}
     assert (10, 11) not in got
     assert got[(20, 21)] == 1
@@ -105,10 +102,9 @@ def test_interval_overlap_semantics(hand_views):
     assert len(rows) == 2  # no duplicate from the shared-bucket meeting
 
 
-def test_transition_matrix_rows_normalize(hand_views):
-    spark = hand_views
+def test_transition_matrix_rows_normalize(hand):
     _mk_events(
-        spark,
+        hand,
         [
             # user 1: view -> click -> view -> purchase
             (1, 100, 1, "view"),
@@ -121,7 +117,7 @@ def test_transition_matrix_rows_normalize(hand_views):
         ],
         _EVENTS,
     )
-    rows = spark.sql(_transition_matrix(SPARK)).collect()
+    rows = hand.sql(_transition_matrix(SPARK)).collect()
     got = {(r.prev_type, r.next_type): (r.n, r.p) for r in rows}
     # transitions: (view,click) x2, (click,view) x1, (view,purchase) x1
     assert got[("view", "click")][0] == 2
@@ -135,11 +131,10 @@ def test_transition_matrix_rows_normalize(hand_views):
     assert all(abs(s - 1.0) < 1e-9 for s in sums.values())
 
 
-def test_chunk_decontaminate_flags_embedded_eval_span(hand_views):
-    spark = hand_views
+def test_chunk_decontaminate_flags_embedded_eval_span(hand):
     eval_span = " ".join(f"e{i}" for i in range(8))
     _mk_docs(
-        spark,
+        hand,
         [
             # eval doc: span deliberately OFF the stride-4 grid (starts at
             # token 2) — the stride-1 eval indexing must still catch it
@@ -151,7 +146,7 @@ def test_chunk_decontaminate_flags_embedded_eval_span(hand_views):
         ],
         DOC_TEXT,
     )
-    rows = spark.sql(_chunk_decontaminate(SPARK)).collect()
+    rows = hand.sql(_chunk_decontaminate(SPARK)).collect()
     by_doc = {r.doc_id: r for r in rows}
     assert 30 in by_doc and by_doc[30].n_contaminated >= 1
     assert 40 not in by_doc
@@ -160,8 +155,7 @@ def test_chunk_decontaminate_flags_embedded_eval_span(hand_views):
     assert r.n_contaminated <= r.n_chunks
 
 
-def test_twap_weights_by_holding_time(hand_views):
-    spark = hand_views
+def test_twap_weights_by_holding_time(hand):
     # one series: value 10 held 100 s, value 20 held 300 s, last sample
     # (value 99) has no successor and must not contribute
     rows = [
@@ -174,10 +168,10 @@ def test_twap_weights_by_holding_time(hand_views):
         (5, 500, 1, "view", 7.0),
         (6, 600, 1, "view", 1.0),
     ]
-    _mk_events(spark, rows)
+    _mk_events(hand, rows)
     from rugpull_data_pipeline_spark.plans.pipeline_ops import _twap_irregular
 
-    got = {r.event_type: r for r in spark.sql(_twap_irregular(SPARK)).collect()}
+    got = {r.event_type: r for r in hand.sql(_twap_irregular(SPARK)).collect()}
     # click TWAP = (10*100 + 20*300) / 400 = 17.5
     assert got["click"].twap == pytest.approx(17.5)
     assert got["click"].n_intervals == 2 and got["click"].span_s == 400
@@ -186,42 +180,39 @@ def test_twap_weights_by_holding_time(hand_views):
     assert got["view"].n_intervals == 1
 
 
-def test_mad_outliers_robust_to_the_outlier_itself(hand_views):
-    spark = hand_views
+def test_mad_outliers_robust_to_the_outlier_itself(hand):
     # 9 values near 10 plus one wild outlier; the z-score filter's own
     # stats would be dragged by the outlier — MAD must not be
     vals = [9.0, 9.5, 10.0, 10.0, 10.0, 10.5, 11.0, 9.8, 10.2, 1000.0]
     rows = [(i, i * 60, 1, "click", v) for i, v in enumerate(vals)]
-    _mk_events(spark, rows)
+    _mk_events(hand, rows)
 
     r = {x.event_type: x for x in registry.get("agg_mad_outliers")
-                                  .builder(spark, "unused").collect()}["click"]
+                                  .builder(hand, "unused").collect()}["click"]
     assert r.n == 10
     assert r.n_outliers == 1  # exactly the 1000.0
     assert 9.5 <= r.med <= 10.5  # median unmoved by the outlier
     assert r.mad < 1.0
 
 
-def test_importance_sampling_threshold_is_exact(hand_views):
-    spark = hand_views
+def test_importance_sampling_threshold_is_exact(hand):
     docs = [
         (1, "a b c d e f g h", "en"),        # all-distinct: q = 1 -> u < 1e6 always kept
         (2, "a a a a a a a a", "en"),         # q = 1/8 -> kept iff u < 15625
     ]
-    _mk_docs(spark, docs, "doc_id long, text string, lang string")
+    _mk_docs(hand, docs, "doc_id long, text string, lang string")
     from rugpull_data_pipeline_spark.plans.pipeline_ops import _importance_sample
 
-    rows = {r.doc_id: r for r in spark.sql(_importance_sample(SPARK)).collect()}
+    rows = {r.doc_id: r for r in hand.sql(_importance_sample(SPARK)).collect()}
     assert 1 in rows and rows[1].quality == 1.0  # q=1 always survives
     if 2 in rows:  # survives only on a < 1.5625% hash draw
         assert rows[2].draw < 15625
 
 
-def test_winnowing_guarantee_and_short_doc_exclusion(hand_views):
-    spark = hand_views
+def test_winnowing_guarantee_and_short_doc_exclusion(hand):
     shared = " ".join(f"s{i}" for i in range(6))  # k + w - 1 = 6 tokens
     _mk_docs(
-        spark,
+        hand,
         [
             # two docs sharing a 6-token run at different positions/grids
             (1, "a1 a2 " + shared + " a3 a4 a5"),
@@ -236,7 +227,7 @@ def test_winnowing_guarantee_and_short_doc_exclusion(hand_views):
         _winnow_pairs,
     )
 
-    fps = spark.sql(_winnow_fingerprint(SPARK)).collect()
+    fps = hand.sql(_winnow_fingerprint(SPARK)).collect()
     docs_with_fps = {r.doc_id for r in fps}
     assert 3 not in docs_with_fps  # too short to fingerprint
     # the winnowing guarantee: a shared run of k+w-1 tokens yields at
@@ -244,7 +235,7 @@ def test_winnowing_guarantee_and_short_doc_exclusion(hand_views):
     fp1 = {r.fp for r in fps if r.doc_id == 1}
     fp2 = {r.fp for r in fps if r.doc_id == 2}
     assert fp1 & fp2, "shared 6-token run must share a fingerprint"
-    pairs = spark.sql(_winnow_pairs(SPARK)).collect()
+    pairs = hand.sql(_winnow_pairs(SPARK)).collect()
     # docs 1,2 pair only if they share >= 2 fingerprints — do not assert
     # the pair, but any reported pair must involve docs that HAVE fps
     for r in pairs:
@@ -252,14 +243,13 @@ def test_winnowing_guarantee_and_short_doc_exclusion(hand_views):
         assert r.n_shared >= 2
 
 
-def test_pmi_min_count_and_ratio(hand_views):
-    spark = hand_views
+def test_pmi_min_count_and_ratio(hand):
     # bigram "x y" appears 6 times; "p q" only twice (below min count 5)
     docs = [(i, "x y filler" + str(i)) for i in range(6)]
     docs += [(10, "p q"), (11, "p q")]
-    _mk_docs(spark, docs, DOC_TEXT)
+    _mk_docs(hand, docs, DOC_TEXT)
 
-    rows = registry.get("text_pmi_collocations").builder(spark, "unused").collect()
+    rows = registry.get("text_pmi_collocations").builder(hand, "unused").collect()
     got = {(r.a, r.b): r for r in rows}
     assert ("x", "y") in got
     assert ("p", "q") not in got  # below the min-count threshold
@@ -269,8 +259,7 @@ def test_pmi_min_count_and_ratio(hand_views):
     assert r.pmi_ratio > 1.0
 
 
-def test_manifest_prune_zone_maps(hand_views):
-    spark = hand_views
+def test_manifest_prune_zone_maps(hand):
     from rugpull_data_pipeline_spark.functions.scalars import SPARK
     from rugpull_data_pipeline_spark.plans.pipeline_ops import _manifest_prune
 
@@ -281,8 +270,8 @@ def test_manifest_prune_zone_maps(hand_views):
         (1, 200, 2, "click", 1.50),
         (2, 3 * 3600, 42, "click", 9.50),
     ]
-    _mk_events(spark, rows)
-    got = {r.probe: r for r in spark.sql(_manifest_prune(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.probe: r for r in hand.sql(_manifest_prune(SPARK)).collect()}
     # top_value_band (cents >= 900): file 0 zone [100,150] misses -> skipped.
     assert (got["top_value_band"].n_files, got["top_value_band"].n_skipped) == (2, 1)
     assert got["top_value_band"].skip_ratio == 0.5
@@ -295,14 +284,13 @@ def test_manifest_prune_zone_maps(hand_views):
     assert r.bytes_scanned + r.bytes_skipped == 3 * 64
 
 
-def test_kcenter_farthest_point_traversal(hand_views):
-    spark = hand_views
+def test_kcenter_farthest_point_traversal(hand):
     from rugpull_data_pipeline_spark.plans.pipeline_ops import (
         sample_kcenter_coreset,
     )
 
     _mk_embeddings(
-        spark,
+        hand,
         [
             (0, [0.0, 0.0]),
             (1, [8.0, 0.0]),
@@ -311,7 +299,7 @@ def test_kcenter_farthest_point_traversal(hand_views):
         ],
         "vec_id long, embedding array<float>",
     )
-    rows = sample_kcenter_coreset(spark, "unused").collect()
+    rows = sample_kcenter_coreset(hand, "unused").collect()
     # greedy: seed 0, then the farthest-point order 1 (64), 2 (36), 3 (2);
     # distances are micro-scaled so 8.0 -> 8e6, squared 64e12.
     assert [(r.center_rank, r.vec_id) for r in rows] == [
@@ -321,16 +309,15 @@ def test_kcenter_farthest_point_traversal(hand_views):
     assert [r.coverage_radius_sq for r in rows] == [64 * M, 36 * M, 2 * M, 0]
 
 
-def test_bloom_prefilter_no_false_negatives(hand_views):
-    spark = hand_views
+def test_bloom_prefilter_no_false_negatives(hand):
     # user 7 spends 600.00 on purchases (member); users 1..5 never qualify.
     rows = [(0, 100, 7, "purchase", 600.0)]
     rows += [(i, 200 + i, i, "click", 1.0) for i in range(1, 6)]
     rows += [(10, 300, 7, "view", 2.0)]
-    _mk_events(spark, rows)
+    _mk_events(hand, rows)
     got = {
         r.event_type: r
-        for r in registry.get("join_bloom_prefilter").builder(spark, "unused").collect()
+        for r in registry.get("join_bloom_prefilter").builder(hand, "unused").collect()
     }
     # every true member row passes the bloom (no false negatives):
     for r in got.values():
@@ -345,8 +332,7 @@ def test_bloom_prefilter_no_false_negatives(hand_views):
     assert got["click"].n_bloom_pass == 0 and got["click"].fp_rate == 0.0
 
 
-def test_sql_scripting_threshold_walk(hand_views):
-    spark = hand_views
+def test_sql_scripting_threshold_walk(hand):
     from rugpull_data_pipeline_spark.plans.spark4_features import (
         spark4_sql_scripting,
     )
@@ -355,8 +341,8 @@ def test_sql_scripting_threshold_walk(hand_views):
     # one doubling to thr=2 leaves only the spike (1 of 101 <= 1%).
     rows = [(i, i, 1, "click", 0.01) for i in range(100)]
     rows.append((100, 200, 1, "purchase", 10.0))
-    _mk_events(spark, rows)
-    row = spark4_sql_scripting(spark, "unused").collect()[0]
+    _mk_events(hand, rows)
+    row = spark4_sql_scripting(hand, "unused").collect()[0]
     assert (row.threshold_cents, row.n_above, row.n_total, row.n_iters) == (
         2, 1, 101, 1,
     )
@@ -416,12 +402,11 @@ def _kcenter_property(spark_session):
     return inner
 
 
-def test_kcenter_matches_bruteforce_greedy(hand_views):
-    _kcenter_property(hand_views)()
+def test_kcenter_matches_bruteforce_greedy(hand):
+    _kcenter_property(hand)()
 
 
-def test_vacuum_plan_flags_expired_and_superseded(hand_views):
-    spark = hand_views
+def test_vacuum_plan_flags_expired_and_superseded(hand):
     from rugpull_data_pipeline_spark.functions.scalars import SPARK
     from rugpull_data_pipeline_spark.plans.pipeline_ops import _vacuum_plan
 
@@ -434,10 +419,10 @@ def test_vacuum_plan_flags_expired_and_superseded(hand_views):
     rows += [(10, 86400 + 6 * 3600, 3, "click")]
     # Superseded: day 20, slot 1, 3 rows (192 B < 2400) but retained.
     rows += [(20 + i, 20 * 86400 + 3 * 3600 + i, 4, "click") for i in range(3)]
-    _mk_events(spark, rows, _EVENTS)
+    _mk_events(hand, rows, _EVENTS)
     got = [
         (r.day, r.reason, r.n_files, r.reclaim_bytes, r.first_slot, r.last_slot)
-        for r in spark.sql(_vacuum_plan(SPARK)).collect()
+        for r in hand.sql(_vacuum_plan(SPARK)).collect()
     ]
     assert got == [
         ("1970-01-01", "expired", 1, 128, 0, 0),

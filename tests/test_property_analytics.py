@@ -45,14 +45,13 @@ def _mk_customer(spark, rows):
         max_size=40,
     )
 )
-def test_t_closeness_matches_bruteforce(hand_views, rows):
-    spark = hand_views
+def test_t_closeness_matches_bruteforce(hand, rows):
     from rugpull_data_pipeline_spark.plans.analytics_ops import _t_closeness
 
-    _mk_customer(spark, [(n, s, float(b)) for n, s, b in rows])
+    _mk_customer(hand, [(n, s, float(b)) for n, s, b in rows])
     got = {
         (r.c_nationkey, r.c_mktsegment): r
-        for r in spark.sql(_t_closeness(SPARK)).collect()
+        for r in hand.sql(_t_closeness(SPARK)).collect()
     }
 
     import math
@@ -94,16 +93,15 @@ def test_t_closeness_matches_bruteforce(hand_views, rows):
     ),
     st.sets(st.integers(0, 9), min_size=1, max_size=3),  # seed part keys
 )
-def test_sssp_matches_bruteforce(hand_views, pairs, seeds):
-    spark = hand_views
+def test_sssp_matches_bruteforce(hand, pairs, seeds):
     li = [
         (o, p, i, 1, 1.0, 1.0, 0.0, 0.0, "N", "O", 1_700_000_000 + i)
         for i, (o, p) in enumerate(pairs)
     ]
-    _mk_lineitem(spark, li)
+    _mk_lineitem(hand, li)
     all_parts = sorted({p for _, p in pairs} | seeds)
     hand_table(
-        spark,
+        hand,
         "part",
         [(p, f"p{p}", "B", "T", 1 if p in seeds else 2, 10.0) for p in all_parts],
         "p_partkey long, p_name string, p_brand string, p_type string, "
@@ -111,7 +109,7 @@ def test_sssp_matches_bruteforce(hand_views, pairs, seeds):
     )
     got = [
         (r.rn, r.node, r.dist)
-        for r in registry.get("graph_sssp_bellman3").builder(spark, "unused").collect()
+        for r in registry.get("graph_sssp_bellman3").builder(hand, "unused").collect()
     ]
 
     by_order: dict[int, set[int]] = {}
@@ -160,8 +158,7 @@ def test_sssp_matches_bruteforce(hand_views, pairs, seeds):
         max_size=60,
     )
 )
-def test_boosted_stumps_matches_bruteforce(hand_views, pts):
-    spark = hand_views
+def test_boosted_stumps_matches_bruteforce(hand, pts):
     from rugpull_data_pipeline_spark.plans.analytics_ops import _boosted_stumps
 
     rows = [
@@ -169,8 +166,8 @@ def test_boosted_stumps_matches_bruteforce(hand_views, pts):
          "purchase" if y else "click", c / 100.0)
         for i, (c, h, y) in enumerate(pts)
     ]
-    _mk_events(spark, rows)
-    out = {r.stage: r for r in spark.sql(_boosted_stumps(SPARK)).collect()}
+    _mk_events(hand, rows)
+    out = {r.stage: r for r in hand.sql(_boosted_stumps(SPARK)).collect()}
 
     # stage 1: exact gain over the cents grid
     grid = sorted({c for c, _, _ in pts})
@@ -246,16 +243,15 @@ def test_boosted_stumps_matches_bruteforce(hand_views, pts):
         max_size=40,
     )
 )
-def test_sequential_support_matches_bruteforce(hand_views, evs):
-    spark = hand_views
+def test_sequential_support_matches_bruteforce(hand, evs):
     from rugpull_data_pipeline_spark.plans.analytics_ops import _seq_support
 
     rows = [
         (i, 1_700_000_000 + t, u, ty, 1.0) for i, (u, ty, t) in enumerate(evs)
     ]
-    _mk_events(spark, rows)
+    _mk_events(hand, rows)
     got = {
-        (r.type_a, r.type_b): r for r in spark.sql(_seq_support(SPARK)).collect()
+        (r.type_a, r.type_b): r for r in hand.sql(_seq_support(SPARK)).collect()
     }
 
     first: dict[tuple[int, str], int] = {}
@@ -299,8 +295,7 @@ def test_sequential_support_matches_bruteforce(hand_views, evs):
         max_size=5,
     )
 )
-def test_dau_wau_mau_matches_bruteforce(hand_views, per_user):
-    spark = hand_views
+def test_dau_wau_mau_matches_bruteforce(hand, per_user):
     from rugpull_data_pipeline_spark.plans import registry
 
     rows = []
@@ -309,9 +304,9 @@ def test_dau_wau_mau_matches_bruteforce(hand_views, per_user):
         for d in days:
             rows.append((eid, d * 86400 + 60, u, "click", 1.0))
             eid += 1
-    _mk_events(spark, rows)
+    _mk_events(hand, rows)
     got = {r.day_idx: r for r in registry.get("events_dau_wau_mau")
-                                 .builder(spark, "unused").collect()}
+                                 .builder(hand, "unused").collect()}
 
     days_present = sorted({d for ds in per_user.values() for d in ds})
     for d in days_present:
@@ -338,12 +333,11 @@ def test_dau_wau_mau_matches_bruteforce(hand_views, per_user):
     st.lists(st.integers(0, 300), min_size=1, max_size=20),  # catalog cents
     st.lists(st.integers(0, 300), min_size=1, max_size=6),  # probe cents
 )
-def test_nearest_value_matches_bruteforce(hand_views, cat, probes):
-    spark = hand_views
+def test_nearest_value_matches_bruteforce(hand, cat, probes):
     from rugpull_data_pipeline_spark.plans.analytics_ops import _nearest_value
 
     hand_table(
-        spark,
+        hand,
         "part",
         [(k, f"p{k}", "B", "T", 1, c / 100.0) for k, c in enumerate(cat)],
         "p_partkey long, p_name string, p_brand string, p_type string, "
@@ -353,8 +347,8 @@ def test_nearest_value_matches_bruteforce(hand_views, cat, probes):
         ((i + 1) * 500, 1_700_000_000 + i, i, "click", c / 100.0)
         for i, c in enumerate(probes)
     ]
-    _mk_events(spark, rows)
-    got = {r.event_id: r for r in spark.sql(_nearest_value(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.event_id: r for r in hand.sql(_nearest_value(SPARK)).collect()}
 
     cset = sorted(set(cat))
     for i, c in enumerate(probes):
@@ -387,8 +381,7 @@ def test_nearest_value_matches_bruteforce(hand_views, cat, probes):
         max_size=60,
     )
 )
-def test_pr_auc_and_ks_match_bruteforce(hand_views, pts):
-    spark = hand_views
+def test_pr_auc_and_ks_match_bruteforce(hand, pts):
     from rugpull_data_pipeline_spark.plans.analytics_ops import (
         _ks_separation,
         _pr_auc,
@@ -398,9 +391,9 @@ def test_pr_auc_and_ks_match_bruteforce(hand_views, pts):
         (i, 1_700_000_000 + i, i % 3, "purchase" if y else "click", c / 100.0)
         for i, (c, y) in enumerate(pts)
     ]
-    _mk_events(spark, rows)
-    pr_rows = spark.sql(_pr_auc(SPARK)).collect()
-    ks_rows = spark.sql(_ks_separation(SPARK)).collect()
+    _mk_events(hand, rows)
+    pr_rows = hand.sql(_pr_auc(SPARK)).collect()
+    ks_rows = hand.sql(_ks_separation(SPARK)).collect()
 
     grid_desc = sorted({c for c, _ in pts}, reverse=True)
     pos = sum(1 for _, y in pts if y)
@@ -452,16 +445,15 @@ def test_pr_auc_and_ks_match_bruteforce(hand_views, pts):
         max_size=50,
     )
 )
-def test_mode_peak_hour_matches_bruteforce(hand_views, evs):
-    spark = hand_views
+def test_mode_peak_hour_matches_bruteforce(hand, evs):
     from rugpull_data_pipeline_spark.plans.analytics_ops import _mode_peak_hour
 
     rows = [
         (i, 1_700_000_000 // 86400 * 86400 + h * 3600 + i % 60, i, ty, 1.0)
         for i, (ty, h) in enumerate(evs)
     ]
-    _mk_events(spark, rows)
-    got = {r.event_type: r for r in spark.sql(_mode_peak_hour(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.event_type: r for r in hand.sql(_mode_peak_hour(SPARK)).collect()}
 
     for ty in {t for t, _ in evs}:
         counts: dict[int, int] = {}

@@ -24,13 +24,12 @@ from tests.helpers import PROP, _dec, _floor_cents, _mk_events
 
 @settings(**PROP)
 @given(st.lists(st.integers(0, 9000), min_size=1, max_size=12))
-def test_rolling_median_matches_bruteforce(hand_views, cents_list):
-    spark = hand_views
+def test_rolling_median_matches_bruteforce(hand, cents_list):
     from rugpull_data_pipeline_spark.plans.mlprep_ops import _rolling_median
 
     rows = [(i, 10 * i, 1, "click", c / 100.0) for i, c in enumerate(cents_list)]
-    _mk_events(spark, rows)
-    got = {r.event_id: r.roll_median_5 for r in spark.sql(_rolling_median(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.event_id: r.roll_median_5 for r in hand.sql(_rolling_median(SPARK)).collect()}
 
     vals = [c / 100.0 for c in cents_list]
     for i in range(len(vals)):
@@ -49,8 +48,7 @@ def test_rolling_median_matches_bruteforce(hand_views, cents_list):
 
 @settings(**PROP)
 @given(st.lists(st.integers(0, 3000), min_size=5, max_size=14))
-def test_acf_lags_matches_bruteforce(hand_views, cents_list):
-    spark = hand_views
+def test_acf_lags_matches_bruteforce(hand, cents_list):
     from rugpull_data_pipeline_spark.plans.mlprep_ops import _acf_lags
 
     vals = [c / 100.0 for c in cents_list]
@@ -69,8 +67,8 @@ def test_acf_lags_matches_bruteforce(hand_views, cents_list):
         return n, den, (n * sxy - sx * sy)
 
     rows = [(i, 10 * i, 1, "click", v) for i, v in enumerate(vals)]
-    _mk_events(spark, rows)
-    got = {r.lag_k: r for r in spark.sql(_acf_lags(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.lag_k: r for r in hand.sql(_acf_lags(SPARK)).collect()}
     for k in (1, 2, 3):
         if len(vals) <= k:
             assert k not in got
@@ -92,14 +90,13 @@ def test_acf_lags_matches_bruteforce(hand_views, cents_list):
 
 @settings(**PROP)
 @given(st.lists(st.integers(0, 5000), min_size=1, max_size=14))
-def test_moments_matches_bruteforce(hand_views, cents_list):
-    spark = hand_views
+def test_moments_matches_bruteforce(hand, cents_list):
     from rugpull_data_pipeline_spark.plans.traindata_ops import _moments
 
     vals = [c / 100.0 for c in cents_list]
     rows = [(i, 10 * i, 1, "click", v) for i, v in enumerate(vals)]
-    _mk_events(spark, rows)
-    got = spark.sql(_moments(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    got = hand.sql(_moments(SPARK)).collect()[0]
 
     n = float(len(vals))
     s1 = float(sum((_dec(v, "1e-6") for v in vals), Decimal(0)))
@@ -127,14 +124,13 @@ def test_moments_matches_bruteforce(hand_views, cents_list):
 
 @settings(**PROP)
 @given(st.lists(st.integers(1, 99999), min_size=1, max_size=20))
-def test_benford_matches_bruteforce(hand_views, cents_list):
-    spark = hand_views
+def test_benford_matches_bruteforce(hand, cents_list):
     from rugpull_data_pipeline_spark.plans.traindata_ops import _BENFORD_P, _benford
 
     vals = [c / 100.0 for c in cents_list]
     rows = [(i, 10 * i, 1, "click", v) for i, v in enumerate(vals)]
-    _mk_events(spark, rows)
-    got = spark.sql(_benford(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    got = hand.sql(_benford(SPARK)).collect()[0]
 
     digits = [int(str(int(_dec(v * 100.0, "1"))) [0]) for v in vals]
     n = len(digits)
@@ -161,14 +157,13 @@ def test_benford_matches_bruteforce(hand_views, cents_list):
         max_size=16,
     )
 )
-def test_running_distinct_matches_bruteforce(hand_views, seq):
-    spark = hand_views
+def test_running_distinct_matches_bruteforce(hand, seq):
     from rugpull_data_pipeline_spark.plans.traindata_ops import _running_distinct
 
     rows = [(i, 100 + i, u, et, 1.0) for i, (u, et) in enumerate(seq)]
-    _mk_events(spark, rows)
+    _mk_events(hand, rows)
     got = {r.event_id: r.distinct_types_so_far
-           for r in spark.sql(_running_distinct(SPARK)).collect()}
+           for r in hand.sql(_running_distinct(SPARK)).collect()}
 
     seen: dict[int, set] = {}
     for i, (u, et) in enumerate(seq):
@@ -188,8 +183,7 @@ def test_running_distinct_matches_bruteforce(hand_views, seq):
         max_size=16,
     )
 )
-def test_ks_drift_matches_bruteforce(hand_views, pts):
-    spark = hand_views
+def test_ks_drift_matches_bruteforce(hand, pts):
     from rugpull_data_pipeline_spark.plans.stats_eval import _ks_drift
 
     pts = list(pts) + [(0, 400)]  # >= 1 row; hypothesis owns empty halves
@@ -197,8 +191,8 @@ def test_ks_drift_matches_bruteforce(hand_views, pts):
         (i, d * 86400 + i, 1, "click", c / 100.0)
         for i, (d, c) in enumerate(pts)
     ]
-    _mk_events(spark, rows)
-    got = spark.sql(_ks_drift(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    got = hand.sql(_ks_drift(SPARK)).collect()[0]
 
     a = sorted(_floor_cents(c) for d, c in pts if d % 2 == 0)
     b = sorted(_floor_cents(c) for d, c in pts if d % 2 == 1)
@@ -229,17 +223,16 @@ def test_ks_drift_matches_bruteforce(hand_views, pts):
     )
 )
 @pytest.mark.slow_property
-def test_rfm_segments_matches_bruteforce(hand_views, evts):
-    spark = hand_views
+def test_rfm_segments_matches_bruteforce(hand, evts):
     from rugpull_data_pipeline_spark.plans import registry
 
     rows = [
         (i, i * 40000, u, "click", c / 100.0) for i, (u, c) in enumerate(evts)
     ]
-    _mk_events(spark, rows)
+    _mk_events(hand, rows)
     got = {
         (r.r_score, r.f_score, r.m_score): r.n_users
-        for r in registry.get("events_rfm_segments").builder(spark, "unused").collect()
+        for r in registry.get("events_rfm_segments").builder(hand, "unused").collect()
     }
 
     mx = (len(evts) - 1) * 40000
@@ -294,8 +287,7 @@ def test_rfm_segments_matches_bruteforce(hand_views, evts):
         max_size=18,
     )
 )
-def test_survival_km_matches_bruteforce(hand_views, evts):
-    spark = hand_views
+def test_survival_km_matches_bruteforce(hand, evts):
     from rugpull_data_pipeline_spark.plans import registry
 
     evts = list(evts) + [(1, False, 100)]  # at least one view
@@ -303,9 +295,9 @@ def test_survival_km_matches_bruteforce(hand_views, evts):
         (i, t, u, "purchase" if p else "view", 1.0)
         for i, (u, p, t) in enumerate(evts)
     ]
-    _mk_events(spark, rows)
+    _mk_events(hand, rows)
     got = {r.t_minutes: r for r in registry.get("events_survival_km")
-                                   .builder(spark, "unused").collect()}
+                                   .builder(hand, "unused").collect()}
 
     mx = max(t for _, _, t in evts)
     fv: dict[int, int] = {}
@@ -347,8 +339,7 @@ def test_survival_km_matches_bruteforce(hand_views, evts):
 # ---------------------------------------------------------------------------
 
 
-def test_holt_linear_matches_python_fold(hand_views):
-    spark = hand_views
+def test_holt_linear_matches_python_fold(hand):
     from rugpull_data_pipeline_spark.plans.feature_ops import window_holt_linear
 
     vals = {"a": [3.0, 5.0, 4.0, 8.0, 2.0, 6.0], "b": [10.0, 10.0, 12.0]}
@@ -358,10 +349,10 @@ def test_holt_linear_matches_python_fold(hand_views):
             # two events per bucket so the mean path is exercised
             rows.append((eid, h * 3600 + 10, 1, et, v - 1.0)); eid += 1
             rows.append((eid, h * 3600 + 20, 1, et, v + 1.0)); eid += 1
-    _mk_events(spark, rows)
+    _mk_events(hand, rows)
     got = {
         (r.event_type, r.hr): r
-        for r in window_holt_linear(spark, "unused").collect()
+        for r in window_holt_linear(hand, "unused").collect()
     }
 
     for et, vs in vals.items():

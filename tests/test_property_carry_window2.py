@@ -36,16 +36,15 @@ from tests.helpers import (
         max_size=16,
     )
 )
-def test_markov_stationary_matches_bruteforce(hand_views, seq):
-    spark = hand_views
+def test_markov_stationary_matches_bruteforce(hand, seq):
     from rugpull_data_pipeline_spark.plans import registry
 
     seq = list(seq) + [(9, "a"), (9, "b")]  # at least one transition
     rows = [(i, 100 + i, u, et, 1.0) for i, (u, et) in enumerate(seq)]
-    _mk_events(spark, rows)
+    _mk_events(hand, rows)
     got = {r.event_type: r.stationary_w
            for r in registry.get("events_markov_stationary")
-                    .builder(spark, "unused").collect()}
+                    .builder(hand, "unused").collect()}
 
     # transitions per user in (ts, event_id) order
     per_user: dict[int, list] = {}
@@ -85,15 +84,14 @@ def test_markov_stationary_matches_bruteforce(hand_views, seq):
         max_size=16,
     )
 )
-def test_seasonal_baseline_matches_bruteforce(hand_views, pts):
-    spark = hand_views
+def test_seasonal_baseline_matches_bruteforce(hand, pts):
     from rugpull_data_pipeline_spark.plans.mlprep_ops import _seasonal_baseline
 
     rows = [
         (i, h * 3600 + i, 1, "click", c / 100.0) for i, (h, c) in enumerate(pts)
     ]
-    _mk_events(spark, rows)
-    got = {r.event_id: r for r in spark.sql(_seasonal_baseline(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.event_id: r for r in hand.sql(_seasonal_baseline(SPARK)).collect()}
 
     cells: dict[int, list] = {}
     for h, c in pts:
@@ -122,12 +120,11 @@ def test_seasonal_baseline_matches_bruteforce(hand_views, pts):
         max_size=12,
     )
 )
-def test_completeness_matches_bruteforce(hand_views, flags):
-    spark = hand_views
+def test_completeness_matches_bruteforce(hand, flags):
     from rugpull_data_pipeline_spark.plans.feature_ops import _completeness
 
     hand_table(
-        spark,
+        hand,
         "events",
         [
             (
@@ -143,7 +140,7 @@ def test_completeness_matches_bruteforce(hand_views, flags):
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     )
-    got = {r.col_name: r for r in spark.sql(_completeness(SPARK)).collect()}
+    got = {r.col_name: r for r in hand.sql(_completeness(SPARK)).collect()}
 
     n = len(flags)
     expect = {
@@ -172,14 +169,13 @@ def test_completeness_matches_bruteforce(hand_views, flags):
         max_size=16,
     )
 )
-def test_neyman_matches_bruteforce(hand_views, pts):
-    spark = hand_views
+def test_neyman_matches_bruteforce(hand, pts):
     from rugpull_data_pipeline_spark.plans.stats_eval import _NEYMAN_BUDGET, _neyman
 
     pts = list(pts) + [("z", 100), ("z", 900)]  # one spread stratum: tw > 0
     rows = [(i, 10 * i, 1, et, c / 100.0) for i, (et, c) in enumerate(pts)]
-    _mk_events(spark, rows)
-    got = {r.event_type: r for r in spark.sql(_neyman(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.event_type: r for r in hand.sql(_neyman(SPARK)).collect()}
 
     strata: dict[str, list] = {}
     for et, c in pts:
@@ -212,13 +208,12 @@ def test_neyman_matches_bruteforce(hand_views, pts):
 
 @settings(**PROP)
 @given(st.lists(st.integers(0, 86400), min_size=2, max_size=16))
-def test_interarrival_matches_bruteforce(hand_views, times):
-    spark = hand_views
+def test_interarrival_matches_bruteforce(hand, times):
     from rugpull_data_pipeline_spark.plans.stats_eval import _interarrival
 
     rows = [(i, t, 1, "click", 1.0) for i, t in enumerate(times)]
-    _mk_events(spark, rows)
-    got = spark.sql(_interarrival(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    got = hand.sql(_interarrival(SPARK)).collect()[0]
 
     # order by (t, event_id): stable sort on (t, index)
     ordered = [t for t, _ in sorted(zip(times, range(len(times))))]
@@ -240,13 +235,12 @@ def test_interarrival_matches_bruteforce(hand_views, times):
 
 @settings(**PROP)
 @given(st.lists(st.integers(1, 99999), min_size=1, max_size=18))
-def test_vpin_matches_bruteforce(hand_views, cents_list):
-    spark = hand_views
+def test_vpin_matches_bruteforce(hand, cents_list):
     from rugpull_data_pipeline_spark.plans.stats_eval import _VPIN_BUCKET, _vpin
 
     rows = [(i, 10 * i, 1, "click", c / 100.0) for i, c in enumerate(cents_list)]
-    _mk_events(spark, rows)
-    got = spark.sql(_vpin(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    got = hand.sql(_vpin(SPARK)).collect()[0]
 
     vs = [_floor_cents(c) for c in cents_list]
     # tick rule: sign of the last nonzero change; first trade pinned +1
@@ -286,13 +280,12 @@ _TOKEN_COUNTS = st.lists(st.integers(1, 9), min_size=2, max_size=12)
 
 @settings(**PROP)
 @given(_TOKEN_COUNTS)
-def test_freq_of_freq_matches_bruteforce(hand_views, counts):
-    spark = hand_views
+def test_freq_of_freq_matches_bruteforce(hand, counts):
     from rugpull_data_pipeline_spark.plans.stats_eval import _freq_of_freq
 
     text = " ".join(f"t{i}" for i, c in enumerate(counts) for _ in range(c))
-    _mk_docs(spark, [(0, text, "en", "s1")])
-    got = {r.r: r for r in spark.sql(_freq_of_freq(SPARK)).collect()}
+    _mk_docs(hand, [(0, text, "en", "s1")])
+    got = {r.r: r for r in hand.sql(_freq_of_freq(SPARK)).collect()}
 
     nr: dict[int, int] = {}
     for c in counts:
@@ -314,15 +307,14 @@ def test_freq_of_freq_matches_bruteforce(hand_views, counts):
 
 @settings(**PROP)
 @given(_TOKEN_COUNTS)
-def test_zipf_fit_matches_bruteforce(hand_views, counts):
-    spark = hand_views
+def test_zipf_fit_matches_bruteforce(hand, counts):
     from rugpull_data_pipeline_spark.plans.stats_eval import _zipf
 
     # two extra types with distinct counts guarantee >= 2 ranks
     counts = list(counts) + [11, 12]
     text = " ".join(f"t{i:02d}" for i, c in enumerate(counts) for _ in range(c))
-    _mk_docs(spark, [(0, text, "en", "s1")])
-    row = spark.sql(_zipf(SPARK)).collect()[0]
+    _mk_docs(hand, [(0, text, "en", "s1")])
+    row = hand.sql(_zipf(SPARK)).collect()[0]
 
     freq = sorted(
         ((f"t{i:02d}", c) for i, c in enumerate(counts)),
@@ -357,17 +349,16 @@ def test_zipf_fit_matches_bruteforce(hand_views, counts):
     )
 )
 @pytest.mark.slow_property
-def test_bigram_kneser_ney_matches_bruteforce(hand_views, docs):
-    spark = hand_views
+def test_bigram_kneser_ney_matches_bruteforce(hand, docs):
     from rugpull_data_pipeline_spark.plans import registry
 
     docs = docs + [["a", "b", "a", "c"]]  # at least one scorable doc
     _mk_docs(
-        spark,
+        hand,
         [(i, " ".join(toks), "en", "s1") for i, toks in enumerate(docs)],
     )
     got = {r.doc_id: r for r in registry.get("text_bigram_kneser_ney")
-                                .builder(spark, "unused").collect()}
+                                .builder(hand, "unused").collect()}
 
     # global bigram statistics over ' '-split tokens, docs with >= 2
     cb: dict[tuple, int] = {}

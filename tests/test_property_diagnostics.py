@@ -64,12 +64,11 @@ def _q4_brute(sorted_vals: list[int], q4: int) -> int:
     )
 )
 @pytest.mark.slow_property
-def test_mad_screen_matches_bruteforce(hand_views, rows):
-    spark = hand_views
+def test_mad_screen_matches_bruteforce(hand, rows):
     from rugpull_data_pipeline_spark.plans import registry
 
     hand_table(
-        spark,
+        hand,
         "lineitem",
         [
             (i, i, i % 3, float(q), ep / 100.0, dc / 100.0, tx / 100.0)
@@ -81,7 +80,7 @@ def test_mad_screen_matches_bruteforce(hand_views, rows):
 
     got = {
         r["column_name"]: r
-        for r in registry.get("profile_mad_screen").builder(spark, "unused").collect()
+        for r in registry.get("profile_mad_screen").builder(hand, "unused").collect()
     }
     cols = {
         "l_quantity": [q * 100 for q, _, _, _ in rows],
@@ -120,16 +119,15 @@ def test_mad_screen_matches_bruteforce(hand_views, rows):
     )
 )
 @pytest.mark.slow_property
-def test_kendall_tau_matches_bruteforce(hand_views, xy):
-    spark = hand_views
+def test_kendall_tau_matches_bruteforce(hand, xy):
     from rugpull_data_pipeline_spark.plans import registry
 
     series = {
         "view": [x for x, _ in xy],
         "purchase": [y for _, y in xy],
     }
-    _mk_events(spark, _daily_rows(series))
-    row = registry.get("eval_kendall_tau").builder(spark, "unused").collect()[0]
+    _mk_events(hand, _daily_rows(series))
+    row = registry.get("eval_kendall_tau").builder(hand, "unused").collect()[0]
 
     nc = nd = tx = ty = 0
     for i in range(len(xy)):
@@ -160,12 +158,11 @@ def test_kendall_tau_matches_bruteforce(hand_views, xy):
 
 @settings(**PROP)
 @given(st.lists(st.integers(0, 4), min_size=3, max_size=30))
-def test_runs_test_matches_bruteforce(hand_views, vals):
-    spark = hand_views
+def test_runs_test_matches_bruteforce(hand, vals):
     from rugpull_data_pipeline_spark.plans.diagnostics_ops import _runs_test
 
-    _mk_events(spark, _daily_rows({"click": vals}))
-    out = spark.sql(_runs_test(SPARK)).collect()
+    _mk_events(hand, _daily_rows({"click": vals}))
+    out = hand.sql(_runs_test(SPARK)).collect()
     signs = []
     for a, b in zip(vals, vals[1:]):
         if b != a:
@@ -201,12 +198,11 @@ def test_runs_test_matches_bruteforce(hand_views, vals):
 
 @settings(**PROP)
 @given(st.lists(st.integers(0, 100), min_size=2, max_size=30))
-def test_cusum_changepoint_matches_bruteforce(hand_views, vals):
-    spark = hand_views
+def test_cusum_changepoint_matches_bruteforce(hand, vals):
     from rugpull_data_pipeline_spark.plans.diagnostics_ops import _cusum_cp
 
-    _mk_events(spark, _daily_rows({"click": vals}))
-    r = spark.sql(_cusum_cp(SPARK)).collect()[0]
+    _mk_events(hand, _daily_rows({"click": vals}))
+    r = hand.sql(_cusum_cp(SPARK)).collect()[0]
 
     mu = _dm(vals)
     cum, best_day, best_abs = Decimal(0), 0, Decimal(-1)
@@ -246,12 +242,11 @@ def test_cusum_changepoint_matches_bruteforce(hand_views, vals):
         max_size=40,
     )
 )
-def test_hhi_matches_bruteforce(hand_views, rows):
-    spark = hand_views
+def test_hhi_matches_bruteforce(hand, rows):
     from rugpull_data_pipeline_spark.plans.diagnostics_ops import _hhi
 
     hand_table(
-        spark,
+        hand,
         "lineitem",
         [
             (i, b, s, float(p), 0.0)
@@ -261,13 +256,13 @@ def test_hhi_matches_bruteforce(hand_views, rows):
         " l_extendedprice double, l_discount double",
     )
     hand_table(
-        spark,
+        hand,
         "part",
         [(b, f"Brand#{b}") for b in {b for b, _, _ in rows}],
         "p_partkey long, p_brand string",
     )
 
-    got = {r["p_brand"]: r for r in spark.sql(_hhi(SPARK)).collect()}
+    got = {r["p_brand"]: r for r in hand.sql(_hhi(SPARK)).collect()}
     from collections import defaultdict
 
     by_brand: dict[str, dict[int, int]] = defaultdict(lambda: defaultdict(int))
@@ -296,16 +291,15 @@ def test_hhi_matches_bruteforce(hand_views, rows):
 @given(
     st.lists(st.integers(0, 23), min_size=1, max_size=60),
 )
-def test_hour_gof_matches_bruteforce(hand_views, hours):
-    spark = hand_views
+def test_hour_gof_matches_bruteforce(hand, hours):
     from rugpull_data_pipeline_spark.plans import registry
 
     rows = [
         (i, i * 86400 + h * 3600 + 5, 1, "click", 1.0)
         for i, h in enumerate(hours)
     ]
-    _mk_events(spark, rows)
-    r = registry.get("events_hour_uniformity_gof").builder(spark, "unused").collect()[0]
+    _mk_events(hand, rows)
+    r = registry.get("events_hour_uniformity_gof").builder(hand, "unused").collect()[0]
 
     n = len(hours)
     counts = [hours.count(h) for h in range(24)]

@@ -38,19 +38,18 @@ def _user_events(spark, rows):
         max_size=40,
     ).filter(lambda r: any(y for _, y in r) and any(not y for _, y in r))
 )
-def test_mann_whitney_matches_bruteforce(hand_views, rows):
-    spark = hand_views
+def test_mann_whitney_matches_bruteforce(hand, rows):
     from rugpull_data_pipeline_spark.plans.forensics_ops import _r6u  # noqa: F401
 
     _user_events(
-        spark,
+        hand,
         [
             (1, "purchase" if y else "click", v, i)
             for i, (v, y) in enumerate(rows)
         ],
     )
     out = {r["contrast_type"]: r for r in registry.get("eval_mann_whitney_u")
-                                          .builder(spark, "unused").collect()}
+                                          .builder(hand, "unused").collect()}
     pos = [v * 100 for v, y in rows if y]
     neg = [v * 100 for v, y in rows if not y]
     gt = sum(1 for p in pos for n in neg if p > n)
@@ -85,12 +84,11 @@ def test_mann_whitney_matches_bruteforce(hand_views, rows):
 # Exact xi = 0.5765385, on the 6-dp half boundary: a float sum of the logs
 # reads ...5000000043, a decimal sum divided in double ...4999999998.
 @example(vals=[259, 263, 331, 377, 389] + [1] * 102)
-def test_hill_tail_matches_bruteforce(hand_views, vals):
-    spark = hand_views
+def test_hill_tail_matches_bruteforce(hand, vals):
     from rugpull_data_pipeline_spark.plans.forensics_ops import _hill_tail
 
-    _user_events(spark, [(1, "click", v, i) for i, v in enumerate(vals)])
-    rows = spark.sql(_hill_tail(SPARK)).collect()
+    _user_events(hand, [(1, "click", v, i) for i, v in enumerate(vals)])
+    rows = hand.sql(_hill_tail(SPARK)).collect()
     cents = sorted((v * 100 for v in vals), reverse=True)
     top50, x51 = cents[:50], cents[50]
 
@@ -126,8 +124,7 @@ def test_hill_tail_matches_bruteforce(hand_views, vals):
     ).filter(lambda subs: any(ev for ev, _, _ in subs))
 )
 @pytest.mark.slow_property
-def test_concordance_index_matches_bruteforce(hand_views, subs):
-    spark = hand_views
+def test_concordance_index_matches_bruteforce(hand, subs):
 
     day = 86400
     horizon = 30 * day  # a late sentinel event pins the censor time
@@ -137,8 +134,8 @@ def test_concordance_index_matches_bruteforce(hand_views, subs):
         if ev:
             rows.append((u, "purchase", 1.0, delay * day))
         rows.extend((u, "click", 1.0, 1 + j) for j in range(clicks))
-    _user_events(spark, rows)
-    r = registry.get("eval_concordance_index").builder(spark, "unused").collect()[0]
+    _user_events(hand, rows)
+    r = registry.get("eval_concordance_index").builder(hand, "unused").collect()[0]
 
     mc = max(c for _, _, c in subs)
     width = max(1, (mc + 1) // 10)
@@ -181,12 +178,11 @@ def test_concordance_index_matches_bruteforce(hand_views, subs):
         max_size=60,
     )
 )
-def test_rbo_matches_bruteforce(hand_views, parts):
-    spark = hand_views
+def test_rbo_matches_bruteforce(hand, parts):
     from rugpull_data_pipeline_spark.plans.robustness_ops import _rbo
 
     hand_table(
-        spark,
+        hand,
         "lineitem",
         [
             (pk, float(q), p / 100.0)
@@ -194,7 +190,7 @@ def test_rbo_matches_bruteforce(hand_views, parts):
         ],
         "l_partkey long, l_quantity double, l_extendedprice double",
     )
-    r = spark.sql(_rbo(SPARK)).collect()[0]
+    r = hand.sql(_rbo(SPARK)).collect()[0]
 
     qty = {pk: q for pk, (q, _) in enumerate(parts)}
     rev = {pk: p for pk, (_, p) in enumerate(parts)}
@@ -234,12 +230,11 @@ def test_rbo_matches_bruteforce(hand_views, parts):
     ).filter(lambda r: len({g for g, _ in r}) >= 2
              and len(r) > len({g for g, _ in r}))
 )
-def test_anova_matches_bruteforce(hand_views, rows):
-    spark = hand_views
+def test_anova_matches_bruteforce(hand, rows):
     from rugpull_data_pipeline_spark.plans.forensics_ops import _anova
 
-    _user_events(spark, [(1, g, v, i) for i, (g, v) in enumerate(rows)])
-    out = spark.sql(_anova(SPARK)).collect()
+    _user_events(hand, [(1, g, v, i) for i, (g, v) in enumerate(rows)])
+    out = hand.sql(_anova(SPARK)).collect()
     groups: dict[str, list[int]] = {}
     for g, v in rows:
         groups.setdefault(g, []).append(v * 100)
@@ -271,17 +266,16 @@ def test_anova_matches_bruteforce(hand_views, rows):
 @given(
     st.lists(st.integers(1, 500), min_size=1, max_size=40),
 )
-def test_pps_matches_bruteforce(hand_views, weights):
-    spark = hand_views
+def test_pps_matches_bruteforce(hand, weights):
     from rugpull_data_pipeline_spark.plans.robustness_ops import _pps
 
     hand_table(
-        spark,
+        hand,
         "part",
         [(pk, w / 100.0) for pk, w in enumerate(weights)],
         "p_partkey long, p_retailprice double",
     )
-    out = {r["p_partkey"]: r for r in spark.sql(_pps(SPARK)).collect()}
+    out = {r["p_partkey"]: r for r in hand.sql(_pps(SPARK)).collect()}
 
     def h(pk: int) -> int:
         return int(hashlib.md5(f"pps:{pk}".encode()).hexdigest()[:15], 16)
@@ -330,13 +324,12 @@ def test_pps_matches_bruteforce(hand_views, weights):
     )
 )
 @pytest.mark.slow_property
-def test_token_novelty_matches_bruteforce(hand_views, docs):
-    spark = hand_views
+def test_token_novelty_matches_bruteforce(hand, docs):
 
-    _mk_docs(spark, [(i, " ".join(toks)) for i, toks in enumerate(docs)], DOC_TEXT)
+    _mk_docs(hand, [(i, " ".join(toks)) for i, toks in enumerate(docs)], DOC_TEXT)
     out = {r["ingest_batch"]: r
            for r in registry.get("text_token_novelty")
-                    .builder(spark, "unused").collect()}
+                    .builder(hand, "unused").collect()}
 
     mx = len(docs) - 1
     batch_of = {i: min(7, i * 8 // (mx + 1)) for i in range(len(docs))}

@@ -45,12 +45,11 @@ _EDGES = st.sets(
 
 @settings(**PROP)
 @given(_EDGES)
-def test_triangle_count_matches_bruteforce(hand_views, edge_set):
+def test_triangle_count_matches_bruteforce(hand, edge_set):
     """Inject an ARBITRARY graph through the co-occurrence build (one
     2-user event group per edge) and check per-user triangle counts
     against O(n^3) enumeration — exercises the degree-ordered orientation
     on graphs that are NOT unions of cliques."""
-    spark = hand_views
     from rugpull_data_pipeline_spark.plans import registry
 
     rows, eid = [], 0
@@ -58,10 +57,10 @@ def test_triangle_count_matches_bruteforce(hand_views, edge_set):
         # both members inside one hour bucket; group size 2 <= cap
         rows.append((eid, 2 * k, u, f"e{k}", 1.0)); eid += 1
         rows.append((eid, 2 * k + 1, v, f"e{k}", 1.0)); eid += 1
-    _mk_events(spark, rows)
+    _mk_events(hand, rows)
     got = {r.user_id: r.n_triangles
            for r in registry.get("graph_triangle_count")
-                    .builder(spark, "unused").collect()}
+                    .builder(hand, "unused").collect()}
 
     edges = set(edge_set)
     nodes = sorted({n for e in edges for n in e})
@@ -77,16 +76,15 @@ def test_triangle_count_matches_bruteforce(hand_views, edge_set):
 
 @settings(**PROP)
 @given(_EDGES)
-def test_kcore_peel_matches_bruteforce(hand_views, edge_set):
+def test_kcore_peel_matches_bruteforce(hand, edge_set):
     """One full k=2 peel round (degree, prune, re-degree) on random
     graphs, injected straight through the edges argument."""
-    spark = hand_views
     from rugpull_data_pipeline_spark.plans.feature_ops import _KCORE_K, _kcore
 
     edges = sorted(edge_set)
     vals = ", ".join(f"({u}, {v})" for u, v in edges)
     src = f"SELECT * FROM (VALUES {vals}) AS t(u, v)"
-    got = {r.user_id: r.core_degree for r in spark.sql(
+    got = {r.user_id: r.core_degree for r in hand.sql(
         _kcore(SPARK, src)).collect()}
 
     deg0: dict[int, int] = {}
@@ -110,8 +108,7 @@ def test_kcore_peel_matches_bruteforce(hand_views, edge_set):
 
 @settings(**PROP)
 @given(st.lists(st.tuples(st.integers(0, 3000), st.booleans()), max_size=14))
-def test_mcnemar_matches_bruteforce(hand_views, pts):
-    spark = hand_views
+def test_mcnemar_matches_bruteforce(hand, pts):
     from rugpull_data_pipeline_spark.plans.stats_eval import (
         _MCN_T_A, _MCN_T_B, _mcnemar,
     )
@@ -121,8 +118,8 @@ def test_mcnemar_matches_bruteforce(hand_views, pts):
         (i, 10 * i, 1, "purchase" if pos else "click", c / 100.0)
         for i, (c, pos) in enumerate(pts)
     ]
-    _mk_events(spark, rows)
-    got = spark.sql(_mcnemar(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    got = hand.sql(_mcnemar(SPARK)).collect()[0]
 
     b = c_ = ra = rb = 0
     for cents, pos in pts:
@@ -151,12 +148,11 @@ _DOC_GRID = st.lists(
 
 @settings(**PROP)
 @given(_DOC_GRID)
-def test_chi2_matches_bruteforce(hand_views, cells):
-    spark = hand_views
+def test_chi2_matches_bruteforce(hand, cells):
     from rugpull_data_pipeline_spark.plans import registry
 
-    _mk_docs(spark, [(i, "w", l, s) for i, (l, s) in enumerate(cells)])
-    got = registry.get("agg_chi2_independence").builder(spark, "unused").collect()[0]
+    _mk_docs(hand, [(i, "w", l, s) for i, (l, s) in enumerate(cells)])
+    got = registry.get("agg_chi2_independence").builder(hand, "unused").collect()[0]
 
     n = len(cells)
     obs: dict[tuple[str, str], int] = {}
@@ -179,12 +175,11 @@ def test_chi2_matches_bruteforce(hand_views, cells):
 
 @settings(**PROP)
 @given(_DOC_GRID)
-def test_mutual_info_matches_bruteforce(hand_views, cells):
-    spark = hand_views
+def test_mutual_info_matches_bruteforce(hand, cells):
     from rugpull_data_pipeline_spark.plans import registry
 
-    _mk_docs(spark, [(i, "w", l, s) for i, (l, s) in enumerate(cells)])
-    got = registry.get("agg_mutual_info").builder(spark, "unused").collect()[0]
+    _mk_docs(hand, [(i, "w", l, s) for i, (l, s) in enumerate(cells)])
+    got = registry.get("agg_mutual_info").builder(hand, "unused").collect()[0]
 
     n = len(cells)
     obs: dict[tuple[str, str], int] = {}
@@ -211,13 +206,12 @@ def test_mutual_info_matches_bruteforce(hand_views, cells):
 
 @settings(**PROP)
 @given(st.lists(st.integers(0, 5000), min_size=1, max_size=16))
-def test_winsorized_mean_matches_bruteforce(hand_views, cents_list):
-    spark = hand_views
+def test_winsorized_mean_matches_bruteforce(hand, cents_list):
     from rugpull_data_pipeline_spark.plans.stats_eval import _winsorized
 
     rows = [(i, 10 * i, 1, "click", c / 100.0) for i, c in enumerate(cents_list)]
-    _mk_events(spark, rows)
-    got = spark.sql(_winsorized(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    got = hand.sql(_winsorized(SPARK)).collect()[0]
 
     vals = sorted(_floor_cents(c) for c in cents_list)
     n = len(vals)
@@ -241,15 +235,14 @@ def test_winsorized_mean_matches_bruteforce(hand_views, cents_list):
         max_size=16,
     ).filter(lambda xs: len({d for d, _ in xs}) >= 2)
 )
-def test_linreg_daily_matches_bruteforce(hand_views, pts):
-    spark = hand_views
+def test_linreg_daily_matches_bruteforce(hand, pts):
     from rugpull_data_pipeline_spark.plans.mlprep_ops import _linreg_daily
 
     rows = [
         (i, d * 86400, 1, "click", c / 100.0) for i, (d, c) in enumerate(pts)
     ]
-    _mk_events(spark, rows)
-    got = spark.sql(_linreg_daily(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    got = hand.sql(_linreg_daily(SPARK)).collect()[0]
 
     # daily mean: decimal(38,9)-exact value sum / count; x = datediff from
     # 2024-01-01 (epoch-day 19723), so day d of 1970 maps to d - 19723.
@@ -271,10 +264,9 @@ def test_linreg_daily_matches_bruteforce(hand_views, pts):
     assert got.intercept == pytest.approx((sy - slope * sx) / n, abs=2e-6)
 
 
-def test_series_correlation_matches_replica(hand_views):
+def test_series_correlation_matches_replica(hand):
     """30 aligned hourly buckets, two deterministic mixed series — Pearson
     from the same decimal-exact co-moments as the SQL."""
-    spark = hand_views
     from rugpull_data_pipeline_spark.plans.pipeline_ops import _series_correlation
 
     va = [float((i * 37) % 11 + 1) for i in range(30)]
@@ -283,8 +275,8 @@ def test_series_correlation_matches_replica(hand_views):
     for i in range(30):
         rows.append((i, i * 3600, 1, "a", va[i]))
         rows.append((100 + i, i * 3600, 1, "b", vb[i]))
-    _mk_events(spark, rows)
-    row = spark.sql(_series_correlation(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    row = hand.sql(_series_correlation(SPARK)).collect()[0]
     assert (row.type_a, row.type_b, row.n_buckets) == ("a", "b", 30)
     n = 30.0
     sx, sy = sum(va), sum(vb)  # integers-valued doubles: decimal sums exact
@@ -306,17 +298,16 @@ def test_series_correlation_matches_replica(hand_views):
         max_size=24,
     )
 )
-def test_k_anonymity_matches_bruteforce(hand_views, custs):
-    spark = hand_views
+def test_k_anonymity_matches_bruteforce(hand, custs):
     from rugpull_data_pipeline_spark.plans.quality_ops import _k_anonymity
 
     hand_table(
-        spark,
+        hand,
         "customer",
         [(i, n, s, float(b)) for i, (n, s, b) in enumerate(custs)],
         "c_custkey long, c_nationkey int, c_mktsegment string, c_acctbal double",
     )
-    got = {r.k: r for r in spark.sql(_k_anonymity(SPARK)).collect()}
+    got = {r.k: r for r in hand.sql(_k_anonymity(SPARK)).collect()}
 
     grp: dict[tuple, int] = {}
     for n, s, b in custs:

@@ -33,8 +33,7 @@ from tests.helpers import PROP, _dec, _floor_cents, _mk_docs, _mk_events, _q9_th
         max_size=24,
     )
 )
-def test_manifest_prune_matches_bruteforce(hand_views, pts):
-    spark = hand_views
+def test_manifest_prune_matches_bruteforce(hand, pts):
     from rugpull_data_pipeline_spark.plans.pipeline_ops import (
         _ROW_BYTES,
         _manifest_prune,
@@ -44,8 +43,8 @@ def test_manifest_prune_matches_bruteforce(hand_views, pts):
         (i, day * 86400 + hr * 3600 + i, u, "click", c / 100.0)
         for i, (day, hr, u, c) in enumerate(pts)
     ]
-    _mk_events(spark, rows)
-    got = {r.probe: r for r in spark.sql(_manifest_prune(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.probe: r for r in hand.sql(_manifest_prune(SPARK)).collect()}
 
     files: dict[tuple, list] = {}
     for day, hr, u, c in pts:
@@ -97,16 +96,15 @@ def test_manifest_prune_matches_bruteforce(hand_views, pts):
 
 @settings(**PROP)
 @given(st.lists(st.integers(0, 5000), min_size=16, max_size=34))
-def test_hurst_rs_matches_bruteforce(hand_views, cents_list):
-    spark = hand_views
+def test_hurst_rs_matches_bruteforce(hand, cents_list):
     from rugpull_data_pipeline_spark.plans.stats_eval import _hurst_rs
 
     rows = [
         (i, di * 86400, 1, "click", c / 100.0)
         for i, (di, c) in enumerate(enumerate(cents_list))
     ]
-    _mk_events(spark, rows)
-    got = spark.sql(_hurst_rs(SPARK)).collect()
+    _mk_events(hand, rows)
+    got = hand.sql(_hurst_rs(SPARK)).collect()
 
     ys = [_floor_cents(c) for c in cents_list]
     pts = []  # (w, avg R/S) per scale with at least one admissible block
@@ -180,12 +178,11 @@ _HEAPS_DOC = st.lists(
 
 @settings(**PROP)
 @given(st.lists(_HEAPS_DOC, min_size=2, max_size=12))
-def test_heaps_fit_matches_bruteforce(hand_views, docs):
-    spark = hand_views
+def test_heaps_fit_matches_bruteforce(hand, docs):
     from rugpull_data_pipeline_spark.plans import registry
 
-    _mk_docs(spark, [(i, " ".join(toks), "en", "s0") for i, toks in enumerate(docs)])
-    got = registry.get("profile_heaps_law").builder(spark, "unused").collect()[0]
+    _mk_docs(hand, [(i, " ".join(toks), "en", "s0") for i, toks in enumerate(docs)])
+    got = registry.get("profile_heaps_law").builder(hand, "unused").collect()[0]
 
     nd = len(docs)
     step = (nd + 7) // 8

@@ -26,19 +26,18 @@ from tests.helpers import PROP, hand_table, _mk_events
         max_size=40,
     ).filter(lambda r: any(y for _, y in r) and any(not y for _, y in r))
 )
-def test_cliffs_delta_matches_bruteforce(hand_views, rows):
-    spark = hand_views
+def test_cliffs_delta_matches_bruteforce(hand, rows):
     from rugpull_data_pipeline_spark.plans.insights_ops import _cliffs_delta
 
     _mk_events(
-        spark,
+        hand,
         [
             (i, i, 1, "purchase" if y else "click", float(v))
             for i, (v, y) in enumerate(rows)
         ],
     )
 
-    r = spark.sql(_cliffs_delta(SPARK)).collect()[0]
+    r = hand.sql(_cliffs_delta(SPARK)).collect()[0]
     pos = [v * 100 for v, y in rows if y]
     neg = [v * 100 for v, y in rows if not y]
     gt = sum(1 for p in pos for n in neg if p > n)
@@ -58,19 +57,18 @@ def test_cliffs_delta_matches_bruteforce(hand_views, rows):
 
 @settings(**PROP)
 @given(st.lists(st.integers(1, 9999), min_size=1, max_size=50))
-def test_lorenz_deciles_match_bruteforce(hand_views, bals):
-    spark = hand_views
+def test_lorenz_deciles_match_bruteforce(hand, bals):
     from rugpull_data_pipeline_spark.plans.insights_ops import _lorenz
 
     hand_table(
-        spark,
+        hand,
         "customer",
         [(i, f"c{i}", 0, bals[i] / 100.0, "SEG") for i in range(len(bals))],
         "c_custkey long, c_name string, c_nationkey int, c_acctbal double,"
         " c_mktsegment string",
     )
 
-    got = {r["decile"]: r for r in spark.sql(_lorenz(SPARK)).collect()}
+    got = {r["decile"]: r for r in hand.sql(_lorenz(SPARK)).collect()}
     ordered = sorted(
         ((bals[i], i) for i in range(len(bals)))
     )  # (cents, key) rank order
@@ -100,18 +98,17 @@ def test_lorenz_deciles_match_bruteforce(hand_views, bals):
         max_size=40,
     )
 )
-def test_degree_gini_matches_bruteforce(hand_views, op_rows):
-    spark = hand_views
+def test_degree_gini_matches_bruteforce(hand, op_rows):
     from rugpull_data_pipeline_spark.plans import registry
 
     hand_table(
-        spark,
+        hand,
         "lineitem",
         [(o, p) for o, p in op_rows],
         "l_orderkey long, l_partkey long",
     )
 
-    out = registry.get("graph_degree_gini").builder(spark, "unused").collect()
+    out = registry.get("graph_degree_gini").builder(hand, "unused").collect()
     op = sorted(set(op_rows))
     edges = set()
     for i in range(len(op)):
@@ -151,16 +148,15 @@ def test_degree_gini_matches_bruteforce(hand_views, op_rows):
         max_size=40,
     )
 )
-def test_user_overlap_matches_bruteforce(hand_views, tu):
-    spark = hand_views
+def test_user_overlap_matches_bruteforce(hand, tu):
     from rugpull_data_pipeline_spark.plans import registry
 
-    _mk_events(spark, [(i, i, u, t, 1.0) for i, (t, u) in enumerate(tu)])
+    _mk_events(hand, [(i, i, u, t, 1.0) for i, (t, u) in enumerate(tu)])
 
     got = {
         (r["type_a"], r["type_b"]): r
         for r in registry.get("events_user_overlap_types")
-                 .builder(spark, "unused").collect()
+                 .builder(hand, "unused").collect()
     }
     sets: dict[str, set[int]] = {}
     for t, u in tu:

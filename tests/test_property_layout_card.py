@@ -31,8 +31,7 @@ _CARD_DOC = st.tuples(
 
 @settings(**PROP)
 @given(st.lists(_CARD_DOC, min_size=1, max_size=12))
-def test_dataset_card_matches_bruteforce(hand_views, docs):
-    spark = hand_views
+def test_dataset_card_matches_bruteforce(hand, docs):
     from rugpull_data_pipeline_spark.plans.traindata_ops import _dataset_card
 
     rows = [
@@ -40,12 +39,12 @@ def test_dataset_card_matches_bruteforce(hand_views, docs):
         for i, (lang, src, toks) in enumerate(docs)
     ]
     _mk_docs(
-        spark,
+        hand,
         rows,
         "doc_id long, text string, lang string, source string, n_chars int",
     )
     got = {
-        (r.lang, r.source): r for r in spark.sql(_dataset_card(SPARK)).collect()
+        (r.lang, r.source): r for r in hand.sql(_dataset_card(SPARK)).collect()
     }
 
     slices: dict[tuple, list] = {}
@@ -78,19 +77,18 @@ def test_dataset_card_matches_bruteforce(hand_views, docs):
 @given(
     st.lists(st.tuples(st.integers(1, 4), st.integers(1, 9)), min_size=1, max_size=30)
 )
-def test_skew_advisor_matches_bruteforce(hand_views, pts):
-    spark = hand_views
+def test_skew_advisor_matches_bruteforce(hand, pts):
     from rugpull_data_pipeline_spark.plans.traindata_ops import _skew_advisor
 
     rows = [(f"2024-0{m}-0{d}",) for m, d in pts]
     hand_table(
-        spark,
+        hand,
         "lineitem",
-        spark.createDataFrame(rows, "ship string").select(
+        hand.createDataFrame(rows, "ship string").select(
             F.col("ship").cast("date").alias("l_shipdate")
         ),
     )
-    got = {r.part_month: r for r in spark.sql(_skew_advisor(SPARK)).collect()}
+    got = {r.part_month: r for r in hand.sql(_skew_advisor(SPARK)).collect()}
 
     per_month: dict[str, int] = {}
     for m, _ in pts:
@@ -121,13 +119,12 @@ _WS_TEXT = st.text(
 
 @settings(**PROP)
 @given(st.lists(_WS_TEXT, min_size=1, max_size=8))
-def test_whitespace_normalize_matches_bruteforce(hand_views, texts):
-    spark = hand_views
+def test_whitespace_normalize_matches_bruteforce(hand, texts):
     from rugpull_data_pipeline_spark.plans.mlprep_ops import _ws_normalize
 
     rows = [(i, t, "en", "s0") for i, t in enumerate(texts)]
-    _mk_docs(spark, rows)
-    got = {r.doc_id: r for r in spark.sql(_ws_normalize(SPARK)).collect()}
+    _mk_docs(hand, rows)
+    got = {r.doc_id: r for r in hand.sql(_ws_normalize(SPARK)).collect()}
 
     for i, t in enumerate(texts):
         clean = re.sub(r"[ ]+", " ", re.sub(r"[\x00-\x1f]", " ", t)).strip(" ")
@@ -143,8 +140,7 @@ def test_whitespace_normalize_matches_bruteforce(hand_views, texts):
 
 @settings(**PROP)
 @given(st.lists(st.integers(0, 99999), min_size=0, max_size=14))
-def test_bootstrap_matches_bruteforce(hand_views, cents_list):
-    spark = hand_views
+def test_bootstrap_matches_bruteforce(hand, cents_list):
     from rugpull_data_pipeline_spark.plans.feature_ops import (
         _BOOT_B,
         _POIS_CDF,
@@ -155,8 +151,8 @@ def test_bootstrap_matches_bruteforce(hand_views, cents_list):
     # nonzero total Poisson weight (verified: min replicate weight is 3)
     vals = {i: c / 100.0 for i, c in enumerate(cents_list)}
     vals.update({1000 + j: (j + 1) * 1.25 for j in range(6)})
-    _mk_events(spark, [(i, 100 + i, 1, "click", v) for i, v in vals.items()])
-    got = spark.sql(_bootstrap(SPARK)).collect()[0]
+    _mk_events(hand, [(i, 100 + i, 1, "click", v) for i, v in vals.items()])
+    got = hand.sql(_bootstrap(SPARK)).collect()[0]
 
     cdf = [float(t) for t in _POIS_CDF]
 

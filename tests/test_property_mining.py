@@ -30,19 +30,18 @@ from tests.helpers import PROP, hand_table, _mk_events, _mk_lineitem, _round6
         max_size=30,
     )
 )
-def test_skyline_matches_bruteforce_dominance(hand_views, parts):
-    spark = hand_views
+def test_skyline_matches_bruteforce_dominance(hand, parts):
     from rugpull_data_pipeline_spark.plans.mining_ops import skyline_pareto_parts
 
     rows = [(i, pc / 100.0, sz) for i, (pc, sz) in enumerate(parts)]
     hand_table(
-        spark,
+        hand,
         "part",
         [(k, f"part{k}", "B", "T", sz, pr) for k, pr, sz in rows],
         "p_partkey long, p_name string, p_brand string, p_type string, "
         "p_size int, p_retailprice double",
     )
-    got = {r.p_partkey for r in skyline_pareto_parts(spark, "unused").collect()}
+    got = {r.p_partkey for r in skyline_pareto_parts(hand, "unused").collect()}
 
     def dominated(i):
         pc_i, sz_i = parts[i]
@@ -70,8 +69,7 @@ def test_skyline_matches_bruteforce_dominance(hand_views, parts):
         max_size=60,
     )
 )
-def test_isotonic_matches_pava(hand_views, pts):
-    spark = hand_views
+def test_isotonic_matches_pava(hand, pts):
     from rugpull_data_pipeline_spark.plans import registry
 
     rows = [
@@ -79,9 +77,9 @@ def test_isotonic_matches_pava(hand_views, pts):
          "purchase" if y else "click", b * 25.0 + 1.0)
         for i, (b, y) in enumerate(pts)
     ]
-    _mk_events(spark, rows)
+    _mk_events(hand, rows)
     got = {r.bin: r for r in registry.get("mlprep_isotonic_pava")
-                             .builder(spark, "unused").collect()}
+                             .builder(hand, "unused").collect()}
 
     # classical weighted PAVA over the ordered bin grid
     grid = sorted({b for b, _ in pts})
@@ -131,8 +129,7 @@ def test_isotonic_matches_pava(hand_views, pts):
         max_size=40,
     )
 )
-def test_weighted_median_matches_bruteforce(hand_views, items):
-    spark = hand_views
+def test_weighted_median_matches_bruteforce(hand, items):
     from rugpull_data_pipeline_spark.plans.mining_ops import _weighted_median
 
     rows = [
@@ -140,8 +137,8 @@ def test_weighted_median_matches_bruteforce(hand_views, items):
          1_700_000_000 + i)
         for i, (f, pc, q) in enumerate(items)
     ]
-    _mk_lineitem(spark, rows)
-    got = {r.flag: r for r in spark.sql(_weighted_median(SPARK)).collect()}
+    _mk_lineitem(hand, rows)
+    got = {r.flag: r for r in hand.sql(_weighted_median(SPARK)).collect()}
 
     flags = {f for f, _, _ in items}
     for f in flags:
@@ -176,8 +173,7 @@ def test_weighted_median_matches_bruteforce(hand_views, items):
         max_size=4,
     )
 )
-def test_gaps_islands_matches_bruteforce(hand_views, per_user):
-    spark = hand_views
+def test_gaps_islands_matches_bruteforce(hand, per_user):
     from rugpull_data_pipeline_spark.plans.mining_ops import _gaps_islands
 
     rows = []
@@ -188,8 +184,8 @@ def test_gaps_islands_matches_bruteforce(hand_views, per_user):
             for _ in range(1 + (d % 2)):
                 rows.append((eid, d * 86400 + eid % 3600, u, "click", 1.0))
                 eid += 1
-    _mk_events(spark, rows)
-    got = {r.user_id: r for r in spark.sql(_gaps_islands(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.user_id: r for r in hand.sql(_gaps_islands(SPARK)).collect()}
 
     for u, days in per_user.items():
         ordered = sorted(days)

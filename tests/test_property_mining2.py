@@ -51,11 +51,10 @@ def _copurchase_sym(pairs):
         max_size=40,
     )
 )
-def test_assortativity_matches_bruteforce(hand_views, pairs):
-    spark = hand_views
-    _mk_order_pairs(spark, pairs)
+def test_assortativity_matches_bruteforce(hand, pairs):
+    _mk_order_pairs(hand, pairs)
     row = (
-        registry.get("graph_degree_assortativity").builder(spark, "unused").collect()[0]
+        registry.get("graph_degree_assortativity").builder(hand, "unused").collect()[0]
     )
 
     edges = _copurchase_sym(pairs)
@@ -97,12 +96,11 @@ def test_assortativity_matches_bruteforce(hand_views, pairs):
     st.sets(st.integers(0, 9), min_size=0, max_size=4),  # seed part keys
 )
 @pytest.mark.slow_property
-def test_bfs_frontier_matches_bruteforce(hand_views, pairs, seeds):
-    spark = hand_views
-    _mk_order_pairs(spark, pairs)
+def test_bfs_frontier_matches_bruteforce(hand, pairs, seeds):
+    _mk_order_pairs(hand, pairs)
     all_parts = sorted({p for _, p in pairs} | seeds)
     hand_table(
-        spark,
+        hand,
         "part",
         [
             (p, f"part{p}", "B", "T", 1 if p in seeds else 5, 1.0)
@@ -113,7 +111,7 @@ def test_bfs_frontier_matches_bruteforce(hand_views, pairs, seeds):
     )
     got = {
         r.hop: r.n_reached
-        for r in registry.get("graph_bfs_frontier3").builder(spark, "unused").collect()
+        for r in registry.get("graph_bfs_frontier3").builder(hand, "unused").collect()
     }
 
     edges = _copurchase_sym(pairs)
@@ -141,15 +139,14 @@ def test_bfs_frontier_matches_bruteforce(hand_views, pairs, seeds):
         max_size=60,
     )
 )
-def test_bitmap_distinct_matches_sets(hand_views, evs):
-    spark = hand_views
+def test_bitmap_distinct_matches_sets(hand, evs):
     from rugpull_data_pipeline_spark.plans.mining_ops import _bitmap_distinct
 
     rows = [
         (i, 1_700_000_000 + i, u, t, 1.0) for i, (t, u) in enumerate(evs)
     ]
-    _mk_events(spark, rows)
-    got = {r.event_type: r for r in spark.sql(_bitmap_distinct(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.event_type: r for r in hand.sql(_bitmap_distinct(SPARK)).collect()}
 
     for t in {t for t, _ in evs}:
         users = {u for tt, u in evs if tt == t}
@@ -173,15 +170,14 @@ def test_bitmap_distinct_matches_sets(hand_views, evs):
         max_size=40,
     )
 )
-def test_cooccurrence_lift_matches_bruteforce(hand_views, evs):
-    spark = hand_views
+def test_cooccurrence_lift_matches_bruteforce(hand, evs):
     rows = [
         (i, 1_700_000_000 + i, u, t, 1.0) for i, (u, t) in enumerate(evs)
     ]
-    _mk_events(spark, rows)
+    _mk_events(hand, rows)
     got = {
         (r.type_a, r.type_b): r
-        for r in registry.get("events_cooccurrence_lift").builder(spark, "unused").collect()
+        for r in registry.get("events_cooccurrence_lift").builder(hand, "unused").collect()
     }
 
     users = {u for u, _ in evs}
@@ -228,20 +224,19 @@ def test_cooccurrence_lift_matches_bruteforce(hand_views, evs):
         max_size=12,
     )
 )
-def test_oov_rate_matches_bruteforce(hand_views, docs):
-    spark = hand_views
+def test_oov_rate_matches_bruteforce(hand, docs):
     from rugpull_data_pipeline_spark.plans.mining_ops import _OOV_TOP_K, _oov
 
     hand_table(
-        spark,
+        hand,
         "documents",
-        spark.createDataFrame(
+        hand.createDataFrame(
             [(i, " ".join(toks), "en", src) for i, (src, toks) in enumerate(docs)],
             "doc_id long, text string, lang string, source string",
         ).selectExpr("doc_id", "text", "lang", "source", "length(text) AS n_chars"
         ),
     )
-    got = {r.source: r for r in spark.sql(_oov(SPARK)).collect()}
+    got = {r.source: r for r in hand.sql(_oov(SPARK)).collect()}
 
     counts: dict[str, int] = {}
     for _, toks in docs:

@@ -34,13 +34,12 @@ def _hash60(s: str) -> int:
         unique_by=lambda r: r[0],  # event_id unique
     )
 )
-def test_systematic_matches_bruteforce(hand_views, evs):
-    spark = hand_views
+def test_systematic_matches_bruteforce(hand, evs):
     from rugpull_data_pipeline_spark.plans.mining_ops import _SYS_K, _systematic
 
     rows = [(e, 1_700_000_000 + e, e % 5, t, 1.0) for e, t in evs]
-    _mk_events(spark, rows)
-    got = {r.event_type: r for r in spark.sql(_systematic(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.event_type: r for r in hand.sql(_systematic(SPARK)).collect()}
 
     for t in {t for _, t in evs}:
         ids = [e for e, tt in evs if tt == t]
@@ -69,18 +68,17 @@ def test_systematic_matches_bruteforce(hand_views, evs):
         max_size=40,
     )
 )
-def test_l_diversity_matches_bruteforce(hand_views, custs):
-    spark = hand_views
+def test_l_diversity_matches_bruteforce(hand, custs):
     from rugpull_data_pipeline_spark.plans.mining_ops import _l_diversity
 
     hand_table(
-        spark,
+        hand,
         "customer",
         [(i, f"c{i}", nk, float(ab), seg) for i, (nk, seg, ab) in enumerate(custs)],
         "c_custkey long, c_name string, c_nationkey int, c_acctbal double, "
         "c_mktsegment string",
     )
-    row = spark.sql(_l_diversity(SPARK)).collect()[0]
+    row = hand.sql(_l_diversity(SPARK)).collect()[0]
 
     groups: dict[tuple, list[int]] = {}
     for nk, seg, ab in custs:
@@ -109,17 +107,16 @@ def test_l_diversity_matches_bruteforce(hand_views, custs):
         max_size=50,
     )
 )
-def test_bipartite_top20_matches_bruteforce(hand_views, pairs):
-    spark = hand_views
+def test_bipartite_top20_matches_bruteforce(hand, pairs):
     from rugpull_data_pipeline_spark.plans.mining_ops import _bipartite
 
     rows = [
         (o, p, i, 1, 1.0, 1.0, 0.0, 0.0, "N", "O", 1_700_000_000 + i)
         for i, (o, p) in enumerate(pairs)
     ]
-    _mk_lineitem(spark, rows)
+    _mk_lineitem(hand, rows)
     got = [(r.rn, r.part_a, r.part_b, r.n_orders)
-           for r in spark.sql(_bipartite(SPARK)).collect()]
+           for r in hand.sql(_bipartite(SPARK)).collect()]
 
     by_order: dict[int, set[int]] = {}
     for o, p in pairs:
@@ -148,8 +145,7 @@ def test_bipartite_top20_matches_bruteforce(hand_views, pairs):
         max_size=60,
     )
 )
-def test_lift_gains_matches_bruteforce(hand_views, pts):
-    spark = hand_views
+def test_lift_gains_matches_bruteforce(hand, pts):
     from rugpull_data_pipeline_spark.plans.mining_ops import _lift_gains
 
     rows = [
@@ -157,8 +153,8 @@ def test_lift_gains_matches_bruteforce(hand_views, pts):
          "purchase" if y else "click", c / 100.0)
         for i, (c, y) in enumerate(pts)
     ]
-    _mk_events(spark, rows)
-    got = {r.decile: r for r in spark.sql(_lift_gains(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.decile: r for r in hand.sql(_lift_gains(SPARK)).collect()}
 
     # floor(value*100) recovers the integer cents exactly for /100.0 inputs
     # up to fp dust: recompute the same way the SQL does.

@@ -36,12 +36,11 @@ def _q(x: float, scale: str) -> Decimal:
         max_size=40,
     )
 )
-def test_woe_iv_matches_bruteforce(hand_views, custs):
-    spark = hand_views
+def test_woe_iv_matches_bruteforce(hand, custs):
     from rugpull_data_pipeline_spark.plans.mining_ops import _woe_iv
 
     hand_table(
-        spark,
+        hand,
         "customer",
         [
             (i, f"c{i}", 0, -10.0 if neg else 10.0, seg)
@@ -50,7 +49,7 @@ def test_woe_iv_matches_bruteforce(hand_views, custs):
         "c_custkey long, c_name string, c_nationkey int, c_acctbal double, "
         "c_mktsegment string",
     )
-    got = {r.segment: r for r in spark.sql(_woe_iv(SPARK)).collect()}
+    got = {r.segment: r for r in hand.sql(_woe_iv(SPARK)).collect()}
 
     segs = sorted({s for s, _ in custs})
     pos = {s: sum(1 for ss, neg in custs if ss == s and neg) for s in segs}
@@ -99,20 +98,19 @@ def test_woe_iv_matches_bruteforce(hand_views, custs):
         max_size=12,
     )
 )
-def test_ttr_matches_bruteforce(hand_views, docs):
-    spark = hand_views
+def test_ttr_matches_bruteforce(hand, docs):
     from rugpull_data_pipeline_spark.plans.mining_ops import _ttr
 
     hand_table(
-        spark,
+        hand,
         "documents",
-        spark.createDataFrame(
+        hand.createDataFrame(
             [(i, " ".join(toks), lang, "s1") for i, (lang, toks) in enumerate(docs)],
             "doc_id long, text string, lang string, source string",
         ).selectExpr("doc_id", "text", "lang", "source", "length(text) AS n_chars"
         ),
     )
-    got = {r.lang: r for r in spark.sql(_ttr(SPARK)).collect()}
+    got = {r.lang: r for r in hand.sql(_ttr(SPARK)).collect()}
 
     for lang in {l for l, _ in docs}:
         ttrs = [
@@ -142,16 +140,15 @@ def test_ttr_matches_bruteforce(hand_views, docs):
 @given(
     st.lists(st.integers(0, 20), min_size=7, max_size=20),  # one value per day
 )
-def test_stl_matches_bruteforce(hand_views, series):
-    spark = hand_views
+def test_stl_matches_bruteforce(hand, series):
     from rugpull_data_pipeline_spark.plans.mining_ops import _stl
 
     rows = [
         (i, d * 86400 + 10, 0, "click", float(v))
         for i, (d, v) in enumerate(enumerate(series))
     ]
-    _mk_events(spark, rows)
-    got = {r.dow: r for r in spark.sql(_stl(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.dow: r for r in hand.sql(_stl(SPARK)).collect()}
 
     # one event per day, integer value -> dm = value exactly
     dm = [Decimal(v) for v in series]

@@ -37,20 +37,19 @@ def _q(x: float, scale: str) -> Decimal:
     )
 )
 @pytest.mark.slow_property
-def test_range_search_matches_bruteforce(hand_views, vecs):
-    spark = hand_views
+def test_range_search_matches_bruteforce(hand, vecs):
     from rugpull_data_pipeline_spark.plans.mining_ops import (
         _RADIUS,
         _range_search,
     )
 
     _mk_embeddings(
-        spark,
+        hand,
         [(i, [float(x) for x in v], i % 3) for i, v in enumerate(vecs)],
     )
     got = {
         (r.query_id, r.vec_id): r.cosine
-        for r in spark.sql(_range_search(SPARK)).collect()
+        for r in hand.sql(_range_search(SPARK)).collect()
     }
 
     tau = float(_RADIUS)
@@ -89,16 +88,15 @@ def test_range_search_matches_bruteforce(hand_views, vecs):
 
 @settings(**PROP)
 @given(st.lists(st.integers(0, 10), min_size=7, max_size=24))
-def test_ma_crossover_matches_bruteforce(hand_views, series):
-    spark = hand_views
+def test_ma_crossover_matches_bruteforce(hand, series):
     from rugpull_data_pipeline_spark.plans.mining_ops import _ma_crossover
 
     rows = [
         (i, d * 86400 + 5, 0, "click", float(v))
         for i, (d, v) in enumerate(enumerate(series))
     ]
-    _mk_events(spark, rows)
-    row = spark.sql(_ma_crossover(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    row = hand.sql(_ma_crossover(SPARK)).collect()[0]
 
     # one integer value per day -> dm exact; both windows need full frames
     sgn = {}

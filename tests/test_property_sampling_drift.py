@@ -28,8 +28,7 @@ from tests.helpers import PROP, _dec, _h60, _mk_docs, _mk_events, _q9_then_dec6
         max_size=20,
     )
 )
-def test_psi_drift_matches_bruteforce(hand_views, pts):
-    spark = hand_views
+def test_psi_drift_matches_bruteforce(hand, pts):
     from rugpull_data_pipeline_spark.plans.traindata_ops import (
         _PSI_BINS,
         _PSI_PRIOR,
@@ -40,8 +39,8 @@ def test_psi_drift_matches_bruteforce(hand_views, pts):
         (i, day * 86400 + i, 1, "click", c / 100.0)
         for i, (day, c) in enumerate(pts)
     ]
-    _mk_events(spark, rows)
-    got = registry.get("profile_drift_psi").builder(spark, "unused").collect()
+    _mk_events(hand, rows)
+    got = registry.get("profile_drift_psi").builder(hand, "unused").collect()
     assert len(got) == 1
     got = got[0]
 
@@ -88,18 +87,17 @@ _JSD_DOC = st.lists(
 
 @settings(**PROP)
 @given(st.lists(st.tuples(st.integers(0, 2), _JSD_DOC), min_size=2, max_size=8))
-def test_jsd_drift_matches_bruteforce(hand_views, docs):
-    spark = hand_views
+def test_jsd_drift_matches_bruteforce(hand, docs):
     from rugpull_data_pipeline_spark.plans import registry
 
     # two fixed docs guarantee >= 2 sources so the rest-corpus is nonempty
     docs = list(docs) + [(0, ["apple", "cat"]), (1, ["bird", "bird", "dog"])]
     _mk_docs(
-        spark,
+        hand,
         [(i, " ".join(toks), "en", f"s{src}") for i, (src, toks) in enumerate(docs)],
     )
     got = {r.source: r for r in registry.get("profile_jsd_source_drift")
-                                .builder(spark, "unused").collect()}
+                                .builder(hand, "unused").collect()}
 
     counts: dict[tuple, int] = {}
     for src, toks in docs:
@@ -145,14 +143,13 @@ def test_jsd_drift_matches_bruteforce(hand_views, docs):
         st.sampled_from(["click", "view", "purchase"]), min_size=2, max_size=20
     )
 )
-def test_class_rebalance_matches_bruteforce(hand_views, types):
-    spark = hand_views
+def test_class_rebalance_matches_bruteforce(hand, types):
     from rugpull_data_pipeline_spark.plans.traindata_ops import _rebalance
 
     types = list(types) + ["click", "view"]  # >= 2 classes
     rows = [(i, 100 + i, 1, et, 1.0) for i, et in enumerate(types)]
-    _mk_events(spark, rows)
-    got = {r.event_id: r for r in spark.sql(_rebalance(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.event_id: r for r in hand.sql(_rebalance(SPARK)).collect()}
 
     by_type: dict[str, list] = {}
     for i, et in enumerate(types):
@@ -176,16 +173,15 @@ def test_class_rebalance_matches_bruteforce(hand_views, types):
 
 @settings(**PROP)
 @given(st.lists(st.integers(1, 40), min_size=1, max_size=20))
-def test_group_holdout_matches_bruteforce(hand_views, users):
-    spark = hand_views
+def test_group_holdout_matches_bruteforce(hand, users):
     from rugpull_data_pipeline_spark.plans.traindata_ops import (
         _HOLDOUT_BUCKETS,
         _group_holdout,
     )
 
     rows = [(i, 100 + i, u, "click", 1.0) for i, u in enumerate(users)]
-    _mk_events(spark, rows)
-    got = {r.event_id: r for r in spark.sql(_group_holdout(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.event_id: r for r in hand.sql(_group_holdout(SPARK)).collect()}
 
     assert set(got) == set(range(len(users)))
     for i, u in enumerate(users):

@@ -40,14 +40,13 @@ def _daily_from(pairs):
         max_size=16,
     )
 )
-def test_theil_sen_matches_bruteforce(hand_views, pairs):
-    spark = hand_views
+def test_theil_sen_matches_bruteforce(hand, pairs):
     from rugpull_data_pipeline_spark.plans.stats_eval import _theil_sen
 
     pairs = list(pairs) + [(40, 100), (41, 250)]  # >= 2 distinct days
     rows, daily = _daily_from(pairs)
-    _mk_events(spark, rows)
-    got = spark.sql(_theil_sen(SPARK)).collect()
+    _mk_events(hand, rows)
+    got = hand.sql(_theil_sen(SPARK)).collect()
     assert len(got) == 1
     got = got[0]
 
@@ -78,14 +77,13 @@ def test_theil_sen_matches_bruteforce(hand_views, pairs):
         max_size=16,
     )
 )
-def test_pettitt_matches_bruteforce(hand_views, pairs):
-    spark = hand_views
+def test_pettitt_matches_bruteforce(hand, pairs):
     from rugpull_data_pipeline_spark.plans.stats_eval import _pettitt
 
     pairs = list(pairs) + [(30, 100), (31, 100)]  # ties + >= 2 days
     rows, daily = _daily_from(pairs)
-    _mk_events(spark, rows)
-    got = spark.sql(_pettitt(SPARK)).collect()
+    _mk_events(hand, rows)
+    got = hand.sql(_pettitt(SPARK)).collect()
     assert len(got) == 1
     got = got[0]
 
@@ -116,14 +114,13 @@ def test_pettitt_matches_bruteforce(hand_views, pairs):
 
 @settings(**PROP)
 @given(st.lists(st.integers(0, 5000), min_size=5, max_size=14))
-def test_ljung_box_matches_bruteforce(hand_views, cents_list):
-    spark = hand_views
+def test_ljung_box_matches_bruteforce(hand, cents_list):
     from rugpull_data_pipeline_spark.plans.stats_eval import _ljung_box
 
     pairs = [(di, c) for di, c in enumerate(cents_list)]
     rows, daily = _daily_from(pairs)
-    _mk_events(spark, rows)
-    got = spark.sql(_ljung_box(SPARK)).collect()
+    _mk_events(hand, rows)
+    got = hand.sql(_ljung_box(SPARK)).collect()
     assert len(got) == 1
     got = got[0]
 
@@ -161,15 +158,14 @@ def test_ljung_box_matches_bruteforce(hand_views, cents_list):
 
 @settings(**PROP)
 @given(st.lists(st.integers(0, 8), min_size=5, max_size=14))
-def test_mann_kendall_matches_bruteforce(hand_views, small_cents):
-    spark = hand_views
+def test_mann_kendall_matches_bruteforce(hand, small_cents):
     from rugpull_data_pipeline_spark.plans import registry
 
     # small value domain forces tie groups through the tie-correction path
     pairs = [(di, c * 100) for di, c in enumerate(small_cents)]
     rows, daily = _daily_from(pairs)
-    _mk_events(spark, rows)
-    got = registry.get("window_mann_kendall").builder(spark, "unused").collect()
+    _mk_events(hand, rows)
+    got = registry.get("window_mann_kendall").builder(hand, "unused").collect()
     assert len(got) == 1
     got = got[0]
 

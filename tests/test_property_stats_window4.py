@@ -23,8 +23,7 @@ from tests.helpers import PROP, _dec, _floor_cents, _mk_events, _q9_then_dec6
 
 @settings(**PROP)
 @given(st.lists(st.integers(0, 6), min_size=10, max_size=18))
-def test_perm_entropy_matches_bruteforce(hand_views, small_cents):
-    spark = hand_views
+def test_perm_entropy_matches_bruteforce(hand, small_cents):
     from rugpull_data_pipeline_spark.plans.stats_eval import _perm_entropy
 
     # small value domain exercises every ordinal tie-break branch
@@ -32,8 +31,8 @@ def test_perm_entropy_matches_bruteforce(hand_views, small_cents):
         (i, di * 86400, 1, "click", (c * 100) / 100.0)
         for i, (di, c) in enumerate(enumerate(small_cents))
     ]
-    _mk_events(spark, rows)
-    got = spark.sql(_perm_entropy(SPARK)).collect()
+    _mk_events(hand, rows)
+    got = hand.sql(_perm_entropy(SPARK)).collect()
     assert len(got) == 1
     got = got[0]
 
@@ -69,14 +68,13 @@ def test_perm_entropy_matches_bruteforce(hand_views, small_cents):
         max_size=16,
     )
 )
-def test_entropy_rate_matches_bruteforce(hand_views, seq):
-    spark = hand_views
+def test_entropy_rate_matches_bruteforce(hand, seq):
     from rugpull_data_pipeline_spark.plans.stats_eval import _entropy_rate
 
     seq = list(seq) + [(9, "a"), (9, "b"), (9, "a")]  # >= 2 prev states
     rows = [(i, 100 + i, u, et, 1.0) for i, (u, et) in enumerate(seq)]
-    _mk_events(spark, rows)
-    got = spark.sql(_entropy_rate(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    got = hand.sql(_entropy_rate(SPARK)).collect()[0]
 
     per_user: dict[int, list] = {}
     for u, et in seq:
@@ -119,18 +117,17 @@ def test_entropy_rate_matches_bruteforce(hand_views, seq):
         max_size=14,
     )
 )
-def test_crosscorr_matches_bruteforce(hand_views, day_pairs):
-    spark = hand_views
+def test_crosscorr_matches_bruteforce(hand, day_pairs):
     from rugpull_data_pipeline_spark.plans.stats_eval import _crosscorr
 
     rows = []
     for di, (ca, cb) in enumerate(day_pairs):
         rows.append((2 * di, di * 86400, 1, "click", ca / 100.0))
         rows.append((2 * di + 1, di * 86400 + 1, 1, "purchase", cb / 100.0))
-    _mk_events(spark, rows)
+    _mk_events(hand, rows)
     got = {
         (r.type_a, r.type_b, r.lag): r
-        for r in spark.sql(_crosscorr(SPARK)).collect()
+        for r in hand.sql(_crosscorr(SPARK)).collect()
     }
 
     a = {di: _floor_cents(ca) / 100.0 for di, (ca, _) in enumerate(day_pairs)}
@@ -178,8 +175,7 @@ def test_crosscorr_matches_bruteforce(hand_views, day_pairs):
         max_size=20,
     )
 )
-def test_simpson_matches_bruteforce(hand_views, evts):
-    spark = hand_views
+def test_simpson_matches_bruteforce(hand, evts):
     from rugpull_data_pipeline_spark.plans import registry
 
     # guarantee every (arm, stratum) cell is populated so no 0-denominator
@@ -190,9 +186,9 @@ def test_simpson_matches_bruteforce(hand_views, evts):
         (i, 100 + i, u, "purchase" if buy else "click", c / 100.0)
         for i, (u, c, buy) in enumerate(evts)
     ]
-    _mk_events(spark, rows)
+    _mk_events(hand, rows)
     got = {r.stratum: r for r in registry.get("profile_simpson_paradox")
-                                 .builder(spark, "unused").collect()}
+                                 .builder(hand, "unused").collect()}
 
     cells: dict[tuple, list] = {}
     for u, c, buy in evts:

@@ -31,14 +31,13 @@ from tests.helpers import (
 
 @settings(**PROP)
 @given(st.lists(st.integers(0, 50), min_size=1, max_size=24))
-def test_quantile_binning_matches_bruteforce(hand_views, small_cents):
-    spark = hand_views
+def test_quantile_binning_matches_bruteforce(hand, small_cents):
     from rugpull_data_pipeline_spark.plans.stats_eval import _QBIN_K, _quantile_bins
 
     # tiny value domain forces heavy tie groups through the one-bin rule
     rows = [(i, 10 * i, 1, "click", c / 100.0) for i, c in enumerate(small_cents)]
-    _mk_events(spark, rows)
-    got = {r.bin: r for r in spark.sql(_quantile_bins(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.bin: r for r in hand.sql(_quantile_bins(SPARK)).collect()}
 
     vs = sorted(_floor_cents(c) for c in small_cents)
     n = len(vs)
@@ -66,16 +65,15 @@ def test_quantile_binning_matches_bruteforce(hand_views, small_cents):
         max_size=6,
     )
 )
-def test_random_projection_matches_bruteforce(hand_views, vecs):
-    spark = hand_views
+def test_random_projection_matches_bruteforce(hand, vecs):
     from rugpull_data_pipeline_spark.plans.feature_ops import _JL_OUT, _jl_project
 
     # quarter-unit floats are exact in float32, so the double cast is exact
     emb = [[q / 4.0 for q in v] for v in vecs]
-    _mk_embeddings(spark, [(i, e, 0) for i, e in enumerate(emb)])
+    _mk_embeddings(hand, [(i, e, 0) for i, e in enumerate(emb)])
     got = {
         (r.vec_id, r.out_dim): r.pv
-        for r in spark.sql(_jl_project(SPARK)).collect()
+        for r in hand.sql(_jl_project(SPARK)).collect()
     }
 
     def sign(j, dim):
@@ -110,8 +108,7 @@ _CCNET_DOC = st.lists(
 
 @settings(**PROP)
 @given(st.lists(_CCNET_DOC, min_size=1, max_size=8))
-def test_boilerplate_ccnet_matches_bruteforce(hand_views, docs):
-    spark = hand_views
+def test_boilerplate_ccnet_matches_bruteforce(hand, docs):
     from rugpull_data_pipeline_spark.plans.traindata_ops import (
         _BOILER_DF,
         _SEG,
@@ -120,8 +117,8 @@ def test_boilerplate_ccnet_matches_bruteforce(hand_views, docs):
 
     # five extra docs share one 4-word segment -> guaranteed boilerplate
     docs = list(docs) + [["nav", "home", "buy", "the"]] * 5
-    _mk_docs(spark, [(i, " ".join(t), "en", "s0") for i, t in enumerate(docs)])
-    got = {r.doc_id: r for r in spark.sql(_boilerplate(SPARK)).collect()}
+    _mk_docs(hand, [(i, " ".join(t), "en", "s0") for i, t in enumerate(docs)])
+    got = {r.doc_id: r for r in hand.sql(_boilerplate(SPARK)).collect()}
 
     segs_per_doc = {}
     for i, toks in enumerate(docs):
@@ -158,12 +155,11 @@ def test_boilerplate_ccnet_matches_bruteforce(hand_views, docs):
         max_size=16,
     )
 )
-def test_incremental_newonly_matches_bruteforce(hand_views, docs):
-    spark = hand_views
+def test_incremental_newonly_matches_bruteforce(hand, docs):
     from rugpull_data_pipeline_spark.plans.traindata_ops import _incremental
 
-    _mk_docs(spark, [(i, text, "en", f"src{s}") for i, (s, text) in enumerate(docs)])
-    got = [(r.doc_id, r.source) for r in spark.sql(_incremental(SPARK)).collect()]
+    _mk_docs(hand, [(i, text, "en", f"src{s}") for i, (s, text) in enumerate(docs)])
+    got = [(r.doc_id, r.source) for r in hand.sql(_incremental(SPARK)).collect()]
 
     base_texts = {text for s, text in docs if s <= 9}
     seen, expect = set(), []
@@ -194,18 +190,17 @@ def test_incremental_newonly_matches_bruteforce(hand_views, docs):
         max_size=20,
     )
 )
-def test_label_prop2_matches_bruteforce(hand_views, memberships):
-    spark = hand_views
+def test_label_prop2_matches_bruteforce(hand, memberships):
     from rugpull_data_pipeline_spark.plans import registry as reg
 
     rows = [
         (i, hb * 3600 + 60, u, et, 1.0)
         for i, (u, et, hb) in enumerate(memberships)
     ]
-    _mk_events(spark, rows)
+    _mk_events(hand, rows)
     got = [
         (r.community, r.n_members)
-        for r in reg.get("graph_label_prop2").builder(spark, "unused").collect()
+        for r in reg.get("graph_label_prop2").builder(hand, "unused").collect()
     ]
 
     groups: dict[tuple, set] = {}

@@ -40,13 +40,12 @@ _VOCAB = ["table", "stream", "fast", "noise", "filler", "pad"]
         max_size=8,
     )
 )
-def test_bm25_matches_bruteforce(hand_views, docs):
-    spark = hand_views
+def test_bm25_matches_bruteforce(hand, docs):
     from rugpull_data_pipeline_spark.plans.llm_ops import _bm25
 
     docs = docs + [["table", "stream", "pad"]]  # at least one hit
-    _mk_docs(spark, [(i, " ".join(toks), "en", "s1") for i, toks in enumerate(docs)])
-    got = {r.doc_id: r for r in spark.sql(_bm25(SPARK)).collect()}
+    _mk_docs(hand, [(i, " ".join(toks), "en", "s1") for i, toks in enumerate(docs)])
+    got = {r.doc_id: r for r in hand.sql(_bm25(SPARK)).collect()}
 
     terms = ("table", "stream", "fast")
     k1, b = 1.2, 0.75
@@ -87,8 +86,7 @@ def test_bm25_matches_bruteforce(hand_views, docs):
 
 @settings(**PROP)
 @given(st.lists(st.tuples(st.integers(0, 900), st.booleans()), max_size=16))
-def test_calibration_bins_matches_bruteforce(hand_views, pts):
-    spark = hand_views
+def test_calibration_bins_matches_bruteforce(hand, pts):
     from rugpull_data_pipeline_spark.plans.stats_eval import _calibration
 
     pts = list(pts) + [(500, True)]  # max score > 0
@@ -96,8 +94,8 @@ def test_calibration_bins_matches_bruteforce(hand_views, pts):
         (i, 10 * i, 1, "purchase" if pos else "click", c / 100.0)
         for i, (c, pos) in enumerate(pts)
     ]
-    _mk_events(spark, rows)
-    got = {r.bin: r for r in spark.sql(_calibration(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.bin: r for r in hand.sql(_calibration(SPARK)).collect()}
 
     scored = [(_floor_cents(c), int(pos)) for c, pos in pts]
     m = max(s for s, _ in scored)
@@ -128,13 +126,12 @@ def test_calibration_bins_matches_bruteforce(hand_views, pts):
         max_size=14,
     )
 )
-def test_target_encode_loo_matches_bruteforce(hand_views, pts):
-    spark = hand_views
+def test_target_encode_loo_matches_bruteforce(hand, pts):
     from rugpull_data_pipeline_spark.plans.traindata_ops import _TE_SMOOTH, _target_encode
 
     rows = [(i, 10 * i, 1, et, c / 100.0) for i, (et, c) in enumerate(pts)]
-    _mk_events(spark, rows)
-    got = {r.event_id: r for r in spark.sql(_target_encode(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.event_id: r for r in hand.sql(_target_encode(SPARK)).collect()}
 
     vals = [c / 100.0 for _, c in pts]
     gmean = float(sum((_dec(v, "1e-6") for v in vals), Decimal(0))) / len(vals)
@@ -170,16 +167,15 @@ def test_target_encode_loo_matches_bruteforce(hand_views, pts):
         max_size=16,
     )
 )
-def test_decision_stump_matches_bruteforce(hand_views, pts):
-    spark = hand_views
+def test_decision_stump_matches_bruteforce(hand, pts):
     from rugpull_data_pipeline_spark.plans.stats_eval import _stump
 
     rows = [
         (i, 10 * i, 1, "purchase" if pos else "click", c / 100.0)
         for i, (c, pos) in enumerate(pts)
     ]
-    _mk_events(spark, rows)
-    got = spark.sql(_stump(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    got = hand.sql(_stump(SPARK)).collect()[0]
 
     scored = [(_floor_cents(c), int(pos)) for c, pos in pts]
     np_ = sum(y for _, y in scored)
@@ -214,20 +210,19 @@ def test_decision_stump_matches_bruteforce(hand_views, pts):
         max_size=10,
     )
 )
-def test_ridge_closed_form_matches_bruteforce(hand_views, docs):
-    spark = hand_views
+def test_ridge_closed_form_matches_bruteforce(hand, docs):
     from rugpull_data_pipeline_spark.plans.feature_ops import _ridge
 
     docs = docs + [(["u", "v"], 50), (["u"], 300)]  # Syy > 0 guaranteed
     _mk_docs(
-        spark,
+        hand,
         [
             (i, " ".join(toks), "en", "s1", nc)
             for i, (toks, nc) in enumerate(docs)
         ],
         DOCS_N,
     )
-    row = spark.sql(_ridge(SPARK)).collect()[0]
+    row = hand.sql(_ridge(SPARK)).collect()[0]
 
     feats = [
         (float(nc), float(len(toks)), float(len(set(toks))))
@@ -279,15 +274,14 @@ def test_ridge_closed_form_matches_bruteforce(hand_views, docs):
     )
 )
 @pytest.mark.slow_property
-def test_pagerank_matches_bruteforce(hand_views, seq):
-    spark = hand_views
+def test_pagerank_matches_bruteforce(hand, seq):
     from rugpull_data_pipeline_spark.plans.mlprep_ops import _PR_D, _PR_ITERS
 
     seq = list(seq) + [(9, "a"), (9, "b")]  # at least one edge
     rows = [(i, 100 + i, u, et, 1.0) for i, (u, et) in enumerate(seq)]
-    _mk_events(spark, rows)
+    _mk_events(hand, rows)
     got = {r.event_type: r.pagerank
-           for r in registry.get("graph_pagerank_power3").builder(spark, "unused").collect()}
+           for r in registry.get("graph_pagerank_power3").builder(hand, "unused").collect()}
 
     per_user: dict[int, list] = {}
     for i, (u, et) in enumerate(seq):
@@ -329,16 +323,15 @@ def test_pagerank_matches_bruteforce(hand_views, seq):
         max_size=14,
     )
 )
-def test_adamic_adar_matches_bruteforce(hand_views, incidence):
-    spark = hand_views
+def test_adamic_adar_matches_bruteforce(hand, incidence):
     from rugpull_data_pipeline_spark.plans import registry
 
     incidence = set(incidence) | {(9, "a"), (9, "b")}  # one shared user
     rows = [(i, 10 * i, u, et, 1.0) for i, (u, et) in enumerate(sorted(incidence))]
-    _mk_events(spark, rows)
+    _mk_events(hand, rows)
     got = {
         (r.type_a, r.type_b): r
-        for r in registry.get("graph_adamic_adar").builder(spark, "unused").collect()
+        for r in registry.get("graph_adamic_adar").builder(hand, "unused").collect()
     }
 
     deg: dict[int, int] = {}

@@ -17,19 +17,19 @@ from tests.helpers import DOC_TEXT, hand_table, _mk_docs, _mk_embeddings
 
 
 @pytest.fixture
-def crafted_views(hand_views):
+def crafted_views(hand):
     """Registrars for crafted documents and embeddings tables."""
 
     def set_docs(rows):
-        _mk_docs(hand_views, rows, DOC_TEXT)
+        _mk_docs(hand, rows, DOC_TEXT)
 
     def set_embs(rows):
-        _mk_embeddings(hand_views, rows, "vec_id long, embedding array<float>")
+        _mk_embeddings(hand, rows, "vec_id long, embedding array<float>")
 
     return set_docs, set_embs
 
 
-def test_repetition_score_handcrafted(spark, crafted_views):
+def test_repetition_score_handcrafted(hand, crafted_views):
     set_docs, _ = crafted_views
     set_docs(
         [
@@ -37,7 +37,7 @@ def test_repetition_score_handcrafted(spark, crafted_views):
             (2, "w x y z q r s t"),  # 6 grams, all unique
         ]
     )
-    rows = {r["doc_id"]: r for r in spark.sql(_repetition(SPARK)).collect()}
+    rows = {r["doc_id"]: r for r in hand.sql(_repetition(SPARK)).collect()}
     r1 = rows[1]
     assert (r1["n_grams"], r1["n_distinct"]) == (7, 3)
     assert r1["dup_gram_ratio"] == pytest.approx(1 - 3 / 7, abs=1e-6)
@@ -50,10 +50,10 @@ def test_repetition_score_handcrafted(spark, crafted_views):
     assert r2["is_repetitive"] == 0
 
 
-def test_bpe_top_pair_handcrafted(spark, crafted_views):
+def test_bpe_top_pair_handcrafted(hand, crafted_views):
     set_docs, _ = crafted_views
     set_docs([(1, "a b a b"), (2, "a b"), (3, "c d")])
-    rows = spark.sql(_bpe_pairs(SPARK)).collect()
+    rows = hand.sql(_bpe_pairs(SPARK)).collect()
     assert rows[0]["rank"] == 1
     assert rows[0]["pair"] == "a|b"  # 2 in doc1 + 1 in doc2
     assert rows[0]["n_occurrences"] == 3
@@ -62,7 +62,7 @@ def test_bpe_top_pair_handcrafted(spark, crafted_views):
 
 
 @pytest.mark.slow_property
-def test_semantic_dedup_handcrafted(spark, crafted_views):
+def test_semantic_dedup_handcrafted(hand, crafted_views):
     _, set_embs = crafted_views
     dim = 8
 
@@ -78,7 +78,7 @@ def test_semantic_dedup_handcrafted(spark, crafted_views):
     rows.append((9, v9))
     set_embs(rows)
 
-    out = {r["vec_id"]: r for r in spark.sql(_semantic_dedup(SPARK, _semantic_iv(SPARK))).collect()}
+    out = {r["vec_id"]: r for r in hand.sql(_semantic_dedup(SPARK, _semantic_iv(SPARK))).collect()}
     # Vectors 0..7 are each their own cluster keeper -> excluded.
     assert set(out) == {8, 9}
     assert out[8]["centroid_id"] == 0 and out[8]["keep_id"] == 0
@@ -90,13 +90,12 @@ def test_semantic_dedup_handcrafted(spark, crafted_views):
     assert out[9]["is_semantic_dup"] == 0
 
 
-def test_k_anonymity_small_groups_flagged(hand_views):
+def test_k_anonymity_small_groups_flagged(hand):
     from rugpull_data_pipeline_spark.functions.scalars import SPARK
     from rugpull_data_pipeline_spark.plans.quality_ops import _k_anonymity
 
-    spark = hand_views
     hand_table(
-        spark,
+        hand,
         "customer",
         # QI class A: 5 identical members; class B: a singleton; class C:
         # negative balance lands in band floor(-500/1000) = -1.
@@ -105,7 +104,7 @@ def test_k_anonymity_small_groups_flagged(hand_views):
         "c_custkey long, c_name string, c_nationkey int, c_acctbal double,"
         " c_mktsegment string",
     )
-    got = {r.k: r for r in spark.sql(_k_anonymity(SPARK)).collect()}
+    got = {r.k: r for r in hand.sql(_k_anonymity(SPARK)).collect()}
     assert sorted(got) == [2, 5, 10]
     assert all(got[k].n_groups == 3 for k in got)
     # k=2: the two singletons violate; k=5: 5-member class is exactly k.

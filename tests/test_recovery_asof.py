@@ -15,8 +15,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
 from rugpull_data_pipeline_spark.operators.balance import (
     extract_balance_changes,
     parse_blocks,
@@ -85,10 +83,10 @@ def _asof(spark, purchases, views):
     return {r.event_id: r.last_view_value for r in out.collect()}
 
 
-def test_asof_edge_semantics(hand_views):
+def test_asof_edge_semantics(hand):
     t = lambda s: dt.datetime(2024, 1, 1, 12, 0, s)
     got = _asof(
-        hand_views,
+        hand,
         purchases=[
             (1, t(10), 99),   # event 0: views strictly before -> latest wins
             (1, t(20), 99),   # event 1: a view at the SAME instant counts (<=)

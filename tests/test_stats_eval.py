@@ -20,11 +20,10 @@ from rugpull_data_pipeline_spark.plans.stats_eval import (
 from tests.helpers import DOCS_N, _mk_docs, _mk_embeddings, _mk_events, _q9_then_dec6
 
 
-def test_auc_perfect_separation_and_tie_correction(hand_views):
-    spark = hand_views
+def test_auc_perfect_separation_and_tie_correction(hand):
     # Perfect: both positives above every negative.
     _mk_events(
-        spark,
+        hand,
         [
             (1, 10, 1, "click", 1.0),
             (2, 20, 1, "click", 2.0),
@@ -32,23 +31,22 @@ def test_auc_perfect_separation_and_tie_correction(hand_views):
             (4, 40, 1, "purchase", 4.0),
         ],
     )
-    row = spark.sql(_auc(SPARK)).collect()[0]
+    row = hand.sql(_auc(SPARK)).collect()[0]
     assert (row.n_pos, row.n_neg, row.auc) == (2, 2, 1.0)
     # Tie at 1.0: average-rank correction gives 0.75, not 0.5 or 1.0.
     _mk_events(
-        spark,
+        hand,
         [
             (1, 10, 1, "click", 1.0),
             (2, 20, 1, "purchase", 1.0),
             (3, 30, 1, "purchase", 2.0),
         ],
     )
-    row = spark.sql(_auc(SPARK)).collect()[0]
+    row = hand.sql(_auc(SPARK)).collect()[0]
     assert (row.n_pos, row.n_neg, row.auc) == (2, 1, 0.75)
 
 
-def test_ks_zero_on_identical_halves_and_one_on_disjoint(hand_views):
-    spark = hand_views
+def test_ks_zero_on_identical_halves_and_one_on_disjoint(hand):
     # 'click': identical value multisets on even day 0 and odd day 1 -> 0.
     # 'error': disjoint supports -> 1.
     rows = [
@@ -59,17 +57,16 @@ def test_ks_zero_on_identical_halves_and_one_on_disjoint(hand_views):
         (5, 300, 1, "error", 1.0),
         (6, 86400 + 300, 1, "error", 9.0),
     ]
-    _mk_events(spark, rows)
-    got = {r.event_type: r for r in spark.sql(_ks_drift(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.event_type: r for r in hand.sql(_ks_drift(SPARK)).collect()}
     assert got["click"].ks_stat == 0.0
     assert got["error"].ks_stat == 1.0
     assert (got["error"].n_even_days, got["error"].n_odd_days) == (1, 1)
 
 
-def test_stump_finds_zero_error_split_and_breaks_ties_low(hand_views):
-    spark = hand_views
+def test_stump_finds_zero_error_split_and_breaks_ties_low(hand):
     _mk_events(
-        spark,
+        hand,
         [
             (1, 10, 1, "click", 1.0),
             (2, 20, 1, "click", 2.0),
@@ -77,17 +74,16 @@ def test_stump_finds_zero_error_split_and_breaks_ties_low(hand_views):
             (4, 40, 1, "purchase", 10.0),
         ],
     )
-    row = spark.sql(_stump(SPARK)).collect()[0]
+    row = hand.sql(_stump(SPARK)).collect()[0]
     assert row.misclassified == 0 and row.accuracy == 1.0
     # ties on error count resolve to the SMALLEST threshold: with all
     # labels equal every split has 0 errors -> lowest cents value wins.
-    _mk_events(spark, [(i, 10 * i, 1, "click", float(i)) for i in range(1, 4)])
-    row = spark.sql(_stump(SPARK)).collect()[0]
+    _mk_events(hand, [(i, 10 * i, 1, "click", float(i)) for i in range(1, 4)])
+    row = hand.sql(_stump(SPARK)).collect()[0]
     assert row.misclassified == 0 and row.threshold_cents == 100
 
 
-def test_chi2_zero_for_independent_uniform_grid(hand_views):
-    spark = hand_views
+def test_chi2_zero_for_independent_uniform_grid(hand):
     rows = []
     i = 0
     for lang in ("en", "fr"):
@@ -95,13 +91,12 @@ def test_chi2_zero_for_independent_uniform_grid(hand_views):
             for _ in range(3):  # perfectly balanced 2x2 -> independence
                 rows.append((i, "w", lang, src))
                 i += 1
-    _mk_docs(spark, rows)
-    row = registry.get("agg_chi2_independence").builder(spark, "unused").collect()[0]
+    _mk_docs(hand, rows)
+    row = registry.get("agg_chi2_independence").builder(hand, "unused").collect()[0]
     assert row.chi2 == 0.0 and row.dof == 1 and row.n_docs == 12
 
 
-def test_adamic_adar_weights_and_degree_floor(hand_views):
-    spark = hand_views
+def test_adamic_adar_weights_and_degree_floor(hand):
     # users 1,2 connect {a,b} (deg 2); user 3 touches only a (deg 1 ->
     # contributes nothing); expected score = 2 * round6(1/ln 2).
     rows = [
@@ -111,18 +106,17 @@ def test_adamic_adar_weights_and_degree_floor(hand_views):
         (4, 40, 2, "b", 1.0),
         (5, 50, 3, "a", 1.0),
     ]
-    _mk_events(spark, rows)
-    out = registry.get("graph_adamic_adar").builder(spark, "unused").collect()
+    _mk_events(hand, rows)
+    out = registry.get("graph_adamic_adar").builder(hand, "unused").collect()
     assert len(out) == 1
     r = out[0]
     assert (r.type_a, r.type_b, r.common_users) == ("a", "b", 2)
     assert r.adamic_adar == pytest.approx(2 * round(1 / math.log(2), 6), abs=1e-9)
 
 
-def test_naive_bayes_separable_vocab_gives_diagonal_confusion(hand_views):
-    spark = hand_views
+def test_naive_bayes_separable_vocab_gives_diagonal_confusion(hand):
     _mk_docs(
-        spark,
+        hand,
         [
             (0, "aa aa", "en", "s1"),  # train (even doc_id)
             (2, "bb bb", "fr", "s1"),  # train
@@ -132,39 +126,36 @@ def test_naive_bayes_separable_vocab_gives_diagonal_confusion(hand_views):
     )
     got = {(r.actual_lang, r.pred_lang): r.n_docs
            for r in registry.get("mlprep_naive_bayes")
-                    .builder(spark, "unused").collect()}
+                    .builder(hand, "unused").collect()}
     assert got == {("en", "en"): 1, ("fr", "fr"): 1}
 
 
-def test_zipf_slope_is_minus_one_for_exact_power_law(hand_views):
-    spark = hand_views
+def test_zipf_slope_is_minus_one_for_exact_power_law(hand):
     # token counts 6, 3, 2 = 6/rank for ranks 1..3 -> slope exactly -1.
     text = " ".join(["t1"] * 6 + ["t2"] * 3 + ["t3"] * 2)
-    _mk_docs(spark, [(0, text, "en", "s1")])
-    row = spark.sql(_zipf(SPARK)).collect()[0]
+    _mk_docs(hand, [(0, text, "en", "s1")])
+    row = hand.sql(_zipf(SPARK)).collect()[0]
     assert row.n_terms == 3
     assert row.zipf_slope == pytest.approx(-1.0, abs=1e-4)
     assert row.intercept == pytest.approx(math.log(6), abs=1e-4)
 
 
-def test_pca_single_varying_dim_gets_unit_loading(hand_views):
-    spark = hand_views
+def test_pca_single_varying_dim_gets_unit_loading(hand):
     rows = [(i, [float(i + 1)] + [0.0] * 63, 0) for i in range(4)]
-    _mk_embeddings(spark, rows)
+    _mk_embeddings(hand, rows)
     res = {
         r.dim: r.loading
-        for r in registry.get("sim_pca_power1").builder(spark, "unused").collect()
+        for r in registry.get("sim_pca_power1").builder(hand, "unused").collect()
     }
     assert res[0] == pytest.approx(1.0, abs=1e-6)
     assert all(abs(res[d]) < 1e-9 for d in range(1, 64))
 
 
-def test_threshold_sweep_confusion_counts_exact(hand_views):
-    spark = hand_views
+def test_threshold_sweep_confusion_counts_exact(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _threshold_sweep
     # positives at 60.00 and 260.00; negatives at 40.00 and 110.00.
     _mk_events(
-        spark,
+        hand,
         [
             (1, 10, 1, "click", 40.0),
             (2, 20, 1, "purchase", 60.0),
@@ -172,7 +163,7 @@ def test_threshold_sweep_confusion_counts_exact(hand_views):
             (4, 40, 1, "purchase", 260.0),
         ],
     )
-    got = {r.threshold_cents: r for r in spark.sql(_threshold_sweep(SPARK)).collect()}
+    got = {r.threshold_cents: r for r in hand.sql(_threshold_sweep(SPARK)).collect()}
     assert len(got) == 5
     r50 = got[5000]
     assert (r50.tp, r50.fp, r50.fn) == (2, 1, 0)
@@ -184,21 +175,19 @@ def test_threshold_sweep_confusion_counts_exact(hand_views):
     assert r250.f1 == pytest.approx(2 / 3, abs=1e-6)
 
 
-def test_neyman_allocation_prefers_high_variance_strata(hand_views):
-    spark = hand_views
+def test_neyman_allocation_prefers_high_variance_strata(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _neyman
     # 'click': constant values (sd 0 -> allocation 0);
     # 'error': same count, wide spread -> gets the whole budget.
     rows = [(i, 10 * i, 1, "click", 5.0) for i in range(4)]
     rows += [(10 + i, 10 * i, 1, "error", float(100 * i)) for i in range(4)]
-    _mk_events(spark, rows)
-    got = {r.event_type: r for r in spark.sql(_neyman(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.event_type: r for r in hand.sql(_neyman(SPARK)).collect()}
     assert got["click"].std_pop == 0.0 and got["click"].alloc_n == 0
     assert got["error"].alloc_n == 100
 
 
 def test_ann_recall_bounded_and_exact_k(spark):
-    from tests.oracle_harness import run_oracle
     from rugpull_data_pipeline_spark.plans import registry
     df = registry.get("audit_ann_recall").builder(
         spark, "/root/testdata/sf0.001"
@@ -209,15 +198,14 @@ def test_ann_recall_bounded_and_exact_k(spark):
     assert (df.hits <= df.k_exact).all()
 
 
-def test_quantile_bins_are_equal_frequency_and_tie_atomic(hand_views):
-    spark = hand_views
+def test_quantile_bins_are_equal_frequency_and_tie_atomic(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _quantile_bins
     # 8 rows, k=4 -> 2 per bin; the tie block of four 5.0s must land
     # whole in ONE bin (bin of its first position).
     rows = [(i, 10 * i, 1, "click", float(v))
             for i, v in enumerate([1, 2, 5, 5, 5, 5, 9, 10])]
-    _mk_events(spark, rows)
-    got = {r.bin: r for r in spark.sql(_quantile_bins(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.bin: r for r in hand.sql(_quantile_bins(SPARK)).collect()}
     assert got[0].n_rows == 2 and got[0].hi_cents == 200
     assert got[1].n_rows == 4  # the whole tie block
     assert got[1].lo_cents == got[1].hi_cents == 500
@@ -225,25 +213,23 @@ def test_quantile_bins_are_equal_frequency_and_tie_atomic(hand_views):
     assert 2 not in got  # positions 2..5 all in bin 1 -> bin 2 empty
 
 
-def test_mutual_info_zero_when_independent_and_nmi_one_when_equal(hand_views):
-    spark = hand_views
+def test_mutual_info_zero_when_independent_and_nmi_one_when_equal(hand):
     rows, i = [], 0
     for lang in ("en", "fr"):
         for src in ("s1", "s2"):
             rows.append((i, "w", lang, src)); i += 1
-    _mk_docs(spark, rows)
-    row = registry.get("agg_mutual_info").builder(spark, "unused").collect()[0]
+    _mk_docs(hand, rows)
+    row = registry.get("agg_mutual_info").builder(hand, "unused").collect()[0]
     assert row.mi_nats == 0.0 and row.nmi == 0.0
     # perfectly dependent: source determined by lang -> NMI = 1.
-    _mk_docs(spark, [(0, "w", "en", "s1"), (1, "w", "en", "s1"),
+    _mk_docs(hand, [(0, "w", "en", "s1"), (1, "w", "en", "s1"),
                      (2, "w", "fr", "s2"), (3, "w", "fr", "s2")])
-    row = registry.get("agg_mutual_info").builder(spark, "unused").collect()[0]
+    row = registry.get("agg_mutual_info").builder(hand, "unused").collect()[0]
     assert row.nmi == pytest.approx(1.0, abs=1e-6)
     assert row.mi_nats == pytest.approx(math.log(2), abs=1e-5)
 
 
-def test_ab_ztest_zero_when_rates_equal(hand_views):
-    spark = hand_views
+def test_ab_ztest_zero_when_rates_equal(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _ab_ztest
     rows = [
         (1, 100, 1, "purchase", 1.0),
@@ -251,21 +237,20 @@ def test_ab_ztest_zero_when_rates_equal(hand_views):
         (3, 86400 + 100, 1, "purchase", 1.0),
         (4, 86400 + 200, 1, "click", 1.0),
     ]
-    _mk_events(spark, rows)
-    row = spark.sql(_ab_ztest(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    row = hand.sql(_ab_ztest(SPARK)).collect()[0]
     assert (row.n1, row.k1, row.n2, row.k2) == (2, 1, 2, 1)
     assert row.z_score == 0.0 and row.rate_a == 0.5
 
 
-def test_label_prop_merges_connected_clique_to_min_label(hand_views):
-    spark = hand_views
+def test_label_prop_merges_connected_clique_to_min_label(hand):
     # users 1,2,3 co-occur in one (type, hour) group -> triangle; users
     # 8,9 in another. After 2 rounds each clique converges to its min id.
     rows = [(i, 100 + i, u, "a", 1.0) for i, u in enumerate([1, 2, 3])]
     rows += [(10 + i, 7200 + i, u, "b", 1.0) for i, u in enumerate([8, 9])]
-    _mk_events(spark, rows)
+    _mk_events(hand, rows)
     got = {r.community: r.n_members for r in registry.get("graph_label_prop2")
-                                             .builder(spark, "unused").collect()}
+                                             .builder(hand, "unused").collect()}
     assert got == {1: 3, 8: 2}
 
 
@@ -282,8 +267,7 @@ def test_multiprobe_recall_dominates_home_bucket(spark):
     assert ((df.recall_multi >= 0) & (df.recall_multi <= 1)).all()
 
 
-def test_whiten_rerank_removes_common_direction(hand_views):
-    spark = hand_views
+def test_whiten_rerank_removes_common_direction(hand):
     # All vectors share a big component on dim 0 (the anisotropic common
     # direction) plus a small id-specific signal on dim 1+vec_id%2.
     # Raw cosine would rank everything ~1; after deflating the top PC the
@@ -293,8 +277,8 @@ def test_whiten_rerank_removes_common_direction(hand_views):
         v = [10.0] + [0.0] * 63
         v[1 + i % 2] += 1.0
         rows.append((i, v, 0))
-    _mk_embeddings(spark, rows)
-    out = registry.get("sim_whiten_rerank").builder(spark, "unused").collect()
+    _mk_embeddings(hand, rows)
+    out = registry.get("sim_whiten_rerank").builder(hand, "unused").collect()
     by_q = {}
     for r in out:
         by_q.setdefault(r.query_id, []).append(r)
@@ -304,8 +288,7 @@ def test_whiten_rerank_removes_common_direction(hand_views):
         assert top == mates, f"query {q}: {top} != {mates}"
 
 
-def test_spearman_perfect_monotone_and_inverse(hand_views):
-    spark = hand_views
+def test_spearman_perfect_monotone_and_inverse(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _spearman
     # frequency and spend rise together across users -> rho = 1.
     rows = []
@@ -313,8 +296,8 @@ def test_spearman_perfect_monotone_and_inverse(hand_views):
     for u in range(1, 5):
         for _ in range(u):  # user u has u events of value 10*u
             rows.append((eid, 100 * eid, u, "click", 10.0 * u)); eid += 1
-    _mk_events(spark, rows)
-    row = spark.sql(_spearman(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    row = hand.sql(_spearman(SPARK)).collect()[0]
     assert row.n_users == 4 and row.spearman_rho == 1.0
     # invert the spend ordering (per-event value falls faster than the
     # event count rises, so total spend strictly decreases) -> rho = -1.
@@ -323,45 +306,42 @@ def test_spearman_perfect_monotone_and_inverse(hand_views):
     for u in range(1, 5):
         for _ in range(u):
             rows.append((eid, 100 * eid, u, "click", 10.0 / (u * u))); eid += 1
-    _mk_events(spark, rows)
-    row = spark.sql(_spearman(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    row = hand.sql(_spearman(SPARK)).collect()[0]
     assert row.spearman_rho == -1.0
 
 
-def test_winsorized_mean_clamps_outlier(hand_views):
-    spark = hand_views
+def test_winsorized_mean_clamps_outlier(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _winsorized
     # nine 10.00s and one 1000.00: p90 cut clamps the spike to 10.00.
     rows = [(i, 10 * i, 1, "click", 10.0) for i in range(9)]
     rows.append((9, 90, 1, "click", 1000.0))
-    _mk_events(spark, rows)
-    row = spark.sql(_winsorized(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    row = hand.sql(_winsorized(SPARK)).collect()[0]
     assert row.p10_cents == 1000 and row.p90_cents == 1000
     assert row.winsorized_mean == 10.0
     assert row.raw_mean == pytest.approx(109.0)
 
 
-def test_interarrival_gaps_exact(hand_views):
-    spark = hand_views
+def test_interarrival_gaps_exact(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _interarrival
     rows = [(i, t, 1, "click", 1.0) for i, t in enumerate([0, 10, 30, 70])]
-    _mk_events(spark, rows)
-    row = spark.sql(_interarrival(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    row = hand.sql(_interarrival(SPARK)).collect()[0]
     assert (row.n_gaps, row.min_gap_s, row.max_gap_s) == (3, 10, 40)
     assert row.median_gap_s == 20
     assert row.mean_gap_s == pytest.approx(70 / 3, abs=1e-5)
 
 
-def test_calibration_bins_diagonal(hand_views):
-    spark = hand_views
+def test_calibration_bins_diagonal(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _calibration
     # cents 0..9, max m=9 -> bin = 10*s div 10 = s; purchases at s >= 5.
     rows = [
         (i, 10 * i, 1, "purchase" if i >= 5 else "click", i / 100.0)
         for i in range(10)
     ]
-    _mk_events(spark, rows)
-    got = {r.bin: r for r in spark.sql(_calibration(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.bin: r for r in hand.sql(_calibration(SPARK)).collect()}
     assert sorted(got) == list(range(10))
     assert got[0].pos_rate == 0.0 and got[9].pos_rate == 1.0
     assert got[9].mean_pred == 1.0  # 9/9
@@ -369,36 +349,34 @@ def test_calibration_bins_diagonal(hand_views):
     assert all(got[b].n_events == 1 for b in got)
 
 
-def test_ndcg_perfect_vs_inverted(hand_views):
-    spark = hand_views
+def test_ndcg_perfect_vs_inverted(hand):
     rich = " ".join(f"w{i}" for i in range(16))  # 16 distinct -> rel 2
     poor = "x x x x"  # 1 distinct -> rel 0
     # Length agrees with richness -> system order == ideal order -> NDCG 1.
     _mk_docs(
-        spark,
+        hand,
         [(1, rich, "en", "s", 100), (2, poor, "en", "s", 10)],
         DOCS_N,
     )
-    row = registry.get("eval_ndcg_ranking").builder(spark, "unused").collect()[0]
+    row = registry.get("eval_ndcg_ranking").builder(hand, "unused").collect()[0]
     assert row.ndcg_at_10 == 1.0 and row.dcg_at_10 == row.idcg_at_10
     # Invert the lengths: the rel-2 doc now ranks second -> NDCG < 1.
     _mk_docs(
-        spark,
+        hand,
         [(1, rich, "en", "s", 10), (2, poor, "en", "s", 100)],
         DOCS_N,
     )
-    row = registry.get("eval_ndcg_ranking").builder(spark, "unused").collect()[0]
+    row = registry.get("eval_ndcg_ranking").builder(hand, "unused").collect()[0]
     assert row.ndcg_at_10 < 1.0
     # hand value: dcg = 0/log2(2) + 3/log2(3), idcg = 3/log2(2) = 3.
     expect = (3 / math.log2(3)) / 3.0
     assert row.ndcg_at_10 == pytest.approx(expect, abs=1e-5)
 
 
-def test_freq_of_freq_good_turing(hand_views):
-    spark = hand_views
+def test_freq_of_freq_good_turing(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _freq_of_freq
-    _mk_docs(spark, [(1, "a a a b b c", "en", "s", 11)], DOCS_N)
-    got = {r.r: r for r in spark.sql(_freq_of_freq(SPARK)).collect()}
+    _mk_docs(hand, [(1, "a a a b b c", "en", "s", 11)], DOCS_N)
+    got = {r.r: r for r in hand.sql(_freq_of_freq(SPARK)).collect()}
     assert sorted(got) == [1, 2, 3]
     assert all(got[r].n_types == 1 for r in got)
     assert got[1].gt_adjusted_r == 2.0  # (1+1)*N2/N1
@@ -407,8 +385,7 @@ def test_freq_of_freq_good_turing(hand_views):
     assert got[3].mass_share == 0.5  # 3 of 6 occurrences
 
 
-def test_theil_sen_ignores_outlier_day(hand_views):
-    spark = hand_views
+def test_theil_sen_ignores_outlier_day(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _theil_sen
     # days 0..2 rise exactly 1.00/day; day 3 is a 100x outlier.
     rows = [
@@ -417,16 +394,15 @@ def test_theil_sen_ignores_outlier_day(hand_views):
         (2, 2 * 86400, 1, "click", 3.0),
         (3, 3 * 86400, 1, "click", 100.0),
     ]
-    _mk_events(spark, rows)
-    row = spark.sql(_theil_sen(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    row = hand.sql(_theil_sen(SPARK)).collect()[0]
     assert (row.n_days, row.n_pairs) == (4, 6)
     # sorted slopes (cents/day): 100,100,100,3250,4850,9700 -> lower
     # median (rank 3) = 100 -> 1.00 per day in value units.
     assert row.ts_slope_per_day == 1.0
 
 
-def test_pettitt_finds_level_shift(hand_views):
-    spark = hand_views
+def test_pettitt_finds_level_shift(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _pettitt
     # 4 low days then 4 high days: the split must land on day index 3
     # (the last low day), with the maximal possible U for n=8.
@@ -434,8 +410,8 @@ def test_pettitt_finds_level_shift(hand_views):
     for i in range(8):
         v = 1.0 if i < 4 else 100.0
         rows.append((i, i * 86400, 1, "click", v))
-    _mk_events(spark, rows)
-    row = spark.sql(_pettitt(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    row = hand.sql(_pettitt(SPARK)).collect()[0]
     assert (row.n_days, row.change_day_idx) == (8, 3)
     # ranks of the low block are 1..4 (doubled 2,4,6,8 with no ties ->
     # r2 = 2*rank); U_4 = sum(2*ranks) - 4*(8+1) = 20 - 36 = -16.
@@ -443,23 +419,22 @@ def test_pettitt_finds_level_shift(hand_views):
     assert 0.0 < row.p_approx < 0.2
 
 
-def test_cohens_kappa_bounds_and_perfect_agreement(hand_views):
-    spark = hand_views
+def test_cohens_kappa_bounds_and_perfect_agreement(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _cohens_kappa
     rich = " ".join(f"w{i}" for i in range(20))  # 20 distinct words
     poor = "x y"
     # Gates agree on both docs (long+rich kept, short+poor dropped) -> 1.0.
     _mk_docs(
-        spark, [(1, rich, "en", "s", 200), (2, poor, "en", "s", 5)],
+        hand, [(1, rich, "en", "s", 200), (2, poor, "en", "s", 5)],
         DOCS_N
     )
-    row = spark.sql(_cohens_kappa(SPARK)).collect()[0]
+    row = hand.sql(_cohens_kappa(SPARK)).collect()[0]
     assert row.n_docs == 2
     assert row.observed_agree == 1.0 and row.kappa == 1.0
     # Gates split 2x2 across four docs -> zero agreement beyond chance is
     # impossible here: they DISAGREE on every doc -> kappa = -1.
     _mk_docs(
-        spark,
+        hand,
         [
             (1, rich, "en", "s", 5),   # B keep, A drop
             (2, poor, "en", "s", 200),  # A keep, B drop
@@ -468,20 +443,19 @@ def test_cohens_kappa_bounds_and_perfect_agreement(hand_views):
         ],
         DOCS_N,
     )
-    row = spark.sql(_cohens_kappa(SPARK)).collect()[0]
+    row = hand.sql(_cohens_kappa(SPARK)).collect()[0]
     assert row.observed_agree == 0.0
     assert row.kappa == -1.0
 
 
-def test_modularity_two_cliques(hand_views):
-    spark = hand_views
+def test_modularity_two_cliques(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _lpa_labels, _modularity
 
     # Two disjoint triangles via an explicit edge list: LPA labels each
     # clique by its smallest node; modularity of the perfect split is
     # Q = 2 * (3/6 - (6/12)^2) = 0.5.
     edges = "SELECT * FROM (VALUES (1, 2), (1, 3), (2, 3), (10, 11), (10, 12), (11, 12)) AS t(u, v)"
-    rows = spark.sql(_modularity(SPARK, edges, _lpa_labels(SPARK, edges))).collect()
+    rows = hand.sql(_modularity(SPARK, edges, _lpa_labels(SPARK, edges))).collect()
     assert len(rows) == 2
     for r in rows:
         assert r.n_members == 3
@@ -514,15 +488,14 @@ def _avg_ranks(vals):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(st.lists(st.integers(0, 500), min_size=4, max_size=9))
-def test_pettitt_matches_bruteforce(hand_views, daily_cents):
-    spark = hand_views
+def test_pettitt_matches_bruteforce(hand, daily_cents):
     from rugpull_data_pipeline_spark.plans.stats_eval import _pettitt
 
     rows = [
         (i, i * 86400, 1, "click", c / 100.0) for i, c in enumerate(daily_cents)
     ]
-    _mk_events(spark, rows)
-    got = spark.sql(_pettitt(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    got = hand.sql(_pettitt(SPARK)).collect()[0]
     # brute force on the SAME floored-cents series the SQL sees
     import math
     cents = [math.floor((c / 100.0) * 100.0) for c in daily_cents]
@@ -545,16 +518,15 @@ def test_pettitt_matches_bruteforce(hand_views, daily_cents):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(st.lists(st.integers(0, 1000), min_size=2, max_size=8))
-def test_theil_sen_matches_bruteforce(hand_views, daily_cents):
-    spark = hand_views
+def test_theil_sen_matches_bruteforce(hand, daily_cents):
     from rugpull_data_pipeline_spark.plans.stats_eval import _theil_sen
     import math
 
     rows = [
         (i, i * 86400, 1, "click", c / 100.0) for i, c in enumerate(daily_cents)
     ]
-    _mk_events(spark, rows)
-    got = spark.sql(_theil_sen(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    got = hand.sql(_theil_sen(SPARK)).collect()[0]
     cents = [math.floor((c / 100.0) * 100.0) for c in daily_cents]
     slopes = []
     for i in range(len(cents)):
@@ -578,8 +550,7 @@ def test_theil_sen_matches_bruteforce(hand_views, daily_cents):
         max_size=6,
     )
 )
-def test_spearman_matches_bruteforce(hand_views, users):
-    spark = hand_views
+def test_spearman_matches_bruteforce(hand, users):
     from rugpull_data_pipeline_spark.plans.stats_eval import _spearman
     import math
 
@@ -588,8 +559,8 @@ def test_spearman_matches_bruteforce(hand_views, users):
         for _ in range(cnt):
             rows.append((eid, 100 * eid, uid, "click", cents / 100.0))
             eid += 1
-    _mk_events(spark, rows)
-    got = spark.sql(_spearman(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    got = hand.sql(_spearman(SPARK)).collect()[0]
     fs = [cnt for cnt, cents in users]
     ms = [
         sum(math.floor((cents / 100.0) * 100.0) for _ in range(cnt))
@@ -609,8 +580,7 @@ def test_spearman_matches_bruteforce(hand_views, users):
         assert got.spearman_rho == expect
 
 
-def test_brier_perfect_predictor(hand_views):
-    spark = hand_views
+def test_brier_perfect_predictor(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _brier
     rows = [
         (0, 0, 1, "click", 0.0),
@@ -618,8 +588,8 @@ def test_brier_perfect_predictor(hand_views):
         (2, 20, 1, "purchase", 1.0),
         (3, 30, 1, "purchase", 1.0),
     ]
-    _mk_events(spark, rows)
-    row = spark.sql(_brier(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    row = hand.sql(_brier(SPARK)).collect()[0]
     assert (row.n_events, row.n_pos) == (4, 2)
     assert row.brier == 0.0
     assert row.brier_baseline == 0.25
@@ -640,16 +610,15 @@ def test_brier_perfect_predictor(hand_views):
         max_size=12,
     )
 )
-def test_modularity_matches_definition(hand_views, edge_set):
+def test_modularity_matches_definition(hand, edge_set):
     """Q from the SQL must equal the textbook definition computed in Python
     on the SAME label assignment (2 deterministic LPA rounds, replicated)."""
-    spark = hand_views
     from rugpull_data_pipeline_spark.plans.stats_eval import _lpa_labels, _modularity
 
     edges = sorted(edge_set)
     vals = ", ".join(f"({u}, {v})" for u, v in edges)
     src = f"SELECT * FROM (VALUES {vals}) AS t(u, v)"
-    rows = spark.sql(_modularity(SPARK, src, _lpa_labels(SPARK, src))).collect()
+    rows = hand.sql(_modularity(SPARK, src, _lpa_labels(SPARK, src))).collect()
 
     # python replica: 2 synchronous LPA rounds, majority label, min tie
     nodes = sorted({n for e in edges for n in e})
@@ -683,8 +652,7 @@ def test_modularity_matches_definition(hand_views, edge_set):
     assert rows[0].q_total == pytest.approx(round(q_total, 6), abs=2e-6)
 
 
-def test_vpin_one_sided_dump_is_toxic(hand_views):
-    spark = hand_views
+def test_vpin_one_sided_dump_is_toxic(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _vpin
     # monotonically falling prices -> every trade sells -> VPIN = 1.
     rows = [(i, 10 * i, 1, "dump", 10.0 - i * 0.5) for i in range(8)]
@@ -693,8 +661,8 @@ def test_vpin_one_sided_dump_is_toxic(hand_views):
         (100 + i, 10 * i, 1, "calm", 5.0 + (0.5 if i % 2 else -0.5))
         for i in range(8)
     ]
-    _mk_events(spark, rows)
-    got = {r.event_type: r for r in spark.sql(_vpin(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.event_type: r for r in hand.sql(_vpin(SPARK)).collect()}
     # first trade is pinned +1 (1000c buy), the other 7 sell 5600c:
     # |5600 - 1000| / 6600 exactly.
     assert got["dump"].vpin == round(4600 / 6600, 6)
@@ -705,8 +673,7 @@ def test_vpin_one_sided_dump_is_toxic(hand_views):
     assert got["calm"].n_buckets >= 1
 
 
-def test_ljung_box_white_noise_vs_trending(hand_views):
-    spark = hand_views
+def test_ljung_box_white_noise_vs_trending(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _ljung_box
     import math
     # strongly trending series: lag-1 autocorrelation near 1, large Q.
@@ -716,8 +683,8 @@ def test_ljung_box_white_noise_vs_trending(hand_views):
         (100 + i, i * 86400, 1, "alt", 2.0 if i % 2 else 1.0)
         for i in range(10)
     ]
-    _mk_events(spark, rows)
-    got = {r.event_type: r for r in spark.sql(_ljung_box(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.event_type: r for r in hand.sql(_ljung_box(SPARK)).collect()}
     assert got["trend"].acf1 > 0.5 and got["trend"].q_ljung_box > 5
     assert got["alt"].acf1 < -0.5
     # python replica of the textbook statistic for the trend series
@@ -733,8 +700,7 @@ def test_ljung_box_white_noise_vs_trending(hand_views):
     assert got["trend"].q_ljung_box == pytest.approx(q, abs=1e-4)
 
 
-def test_simpson_flag_on_classic_reversal(hand_views):
-    spark = hand_views
+def test_simpson_flag_on_classic_reversal(hand):
     # classic construction: B beats A inside BOTH strata, but A's traffic
     # concentrates in the easy (high-rate) stratum, so the pooled rate
     # reverses. user parity: even ids = A, odd = B. cents >= 500 = 'high'.
@@ -753,9 +719,9 @@ def test_simpson_flag_on_classic_reversal(hand_views):
     # low stratum: A 20 trials / 2 conv (10%) vs B 80/16 (20%)
     add(2, 1.0, 20, 2)
     add(3, 1.0, 80, 16)
-    _mk_events(spark, rows)
+    _mk_events(hand, rows)
     got = {r.stratum: r for r in registry.get("profile_simpson_paradox")
-                                 .builder(spark, "unused").collect()}
+                                 .builder(hand, "unused").collect()}
     # B wins both strata...
     assert got["high"].dir == -1 and got["low"].dir == -1
     # ...but A wins the pooled comparison (62/100 vs 32/100).
@@ -763,49 +729,46 @@ def test_simpson_flag_on_classic_reversal(hand_views):
     assert all(r.simpson_flag == 1 for r in got.values())
 
 
-def test_crosscorr_detects_one_day_lead(hand_views):
-    spark = hand_views
+def test_crosscorr_detects_one_day_lead(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _crosscorr
     va = [5.0, 3.0, 8.0, 1.0, 9.0, 2.0, 7.0, 4.0, 6.0, 10.0, 3.0, 8.0]
     rows = [(i, i * 86400, 1, "a", va[i]) for i in range(12)]
     # b replays a with a one-day delay: b[d] = a[d-1]
     rows += [(100 + i, i * 86400, 1, "b", va[i - 1]) for i in range(1, 13)]
-    _mk_events(spark, rows)
+    _mk_events(hand, rows)
     got = {
         (r.type_a, r.type_b, r.lag): r
-        for r in spark.sql(_crosscorr(SPARK)).collect()
+        for r in hand.sql(_crosscorr(SPARK)).collect()
     }
     assert got[("a", "b", 1)].xcorr_r == 1.0
     assert got[("a", "b", 1)].n_days == 12
     assert abs(got[("a", "b", 0)].xcorr_r) < 0.9
 
 
-def test_crosscorr_constant_series_nulls_not_errors(hand_views):
-    spark = hand_views
+def test_crosscorr_constant_series_nulls_not_errors(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _crosscorr
     rows = [(i, i * 86400, 1, "a", 5.0) for i in range(10)]
     rows += [(100 + i, i * 86400, 1, "b", float(i)) for i in range(10)]
-    _mk_events(spark, rows)
+    _mk_events(hand, rows)
     got = {
         (r.type_a, r.type_b, r.lag): r
-        for r in spark.sql(_crosscorr(SPARK)).collect()
+        for r in hand.sql(_crosscorr(SPARK)).collect()
     }
     # zero variance on the 'a' side -> NULL via nullif, never a /0 error
     assert got[("a", "b", 0)].xcorr_r is None
 
 
-def test_jsd_source_drift_matches_python_replica(hand_views):
-    spark = hand_views
+def test_jsd_source_drift_matches_python_replica(hand):
     import math
     _mk_docs(
-        spark,
+        hand,
         [
             (1, "a a b", "en", "s1"),
             (2, "a c c c", "en", "s2"),
         ],
     )
     got = {r.source: r for r in registry.get("profile_jsd_source_drift")
-                                .builder(spark, "unused").collect()}
+                                .builder(hand, "unused").collect()}
     # s1 vs rest: P = {a:2/3, b:1/3}, Q = (corpus - s1)/(7 - 3)
     p = {"a": 2 / 3, "b": 1 / 3}
     q = {"a": 1 / 4, "b": 0.0, "c": 3 / 4}
@@ -828,42 +791,39 @@ def test_jsd_source_drift_matches_python_replica(hand_views):
         assert 0.0 <= r.jsd_vs_rest <= math.log(2) + 1e-9
 
 
-def test_jsd_identical_distribution_is_zero(hand_views):
-    spark = hand_views
+def test_jsd_identical_distribution_is_zero(hand):
     _mk_docs(
-        spark,
+        hand,
         [
             (1, "a b", "en", "s1"),
             (2, "a b", "en", "s2"),
         ],
     )
     got = {r.source: r for r in registry.get("profile_jsd_source_drift")
-                                .builder(spark, "unused").collect()}
+                                .builder(hand, "unused").collect()}
     assert got["s1"].jsd_vs_rest == 0.0
     assert got["s2"].jsd_vs_rest == 0.0
 
 
-def test_mann_kendall_monotone_and_flat(hand_views):
-    spark = hand_views
+def test_mann_kendall_monotone_and_flat(hand):
     # strictly increasing: S = n(n-1)/2, tau_b = 1
     rows = [(i, i * 86400, 1, "up", float(i + 1)) for i in range(10)]
     # constant: every pair tied -> tau_b NULL (zero variance), S = 0
     rows += [(100 + i, i * 86400, 1, "flat", 7.0) for i in range(10)]
-    _mk_events(spark, rows)
+    _mk_events(hand, rows)
     got = {r.event_type: r for r in registry.get("window_mann_kendall")
-                                    .builder(spark, "unused").collect()}
+                                    .builder(hand, "unused").collect()}
     assert got["up"].s_stat == 45 and got["up"].tau_b == 1.0
     assert got["up"].z_mk > 3.0
     assert got["flat"].s_stat == 0 and got["flat"].tau_b is None
 
 
-def test_mann_kendall_tie_correction_matches_replica(hand_views):
-    spark = hand_views
+def test_mann_kendall_tie_correction_matches_replica(hand):
     import math
     vals = [1.0, 2.0, 2.0, 3.0, 1.0, 4.0]
     rows = [(i, i * 86400, 1, "x", vals[i]) for i in range(len(vals))]
-    _mk_events(spark, rows)
-    row = registry.get("window_mann_kendall").builder(spark, "unused").collect()[0]
+    _mk_events(hand, rows)
+    row = registry.get("window_mann_kendall").builder(hand, "unused").collect()[0]
     v = [math.floor(x * 100) for x in vals]
     n = len(v)
     s = sum(
@@ -884,8 +844,7 @@ def test_mann_kendall_tie_correction_matches_replica(hand_views):
     assert abs(row.z_mk - round(z, 6)) < 1e-9
 
 
-def test_mcnemar_counts_discordant_pairs(hand_views):
-    spark = hand_views
+def test_mcnemar_counts_discordant_pairs(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _mcnemar
     # values straddle the two thresholds (500 and 2000 cents):
     #   purchase @ 10.00: A says 1 (right), B says 0 (wrong) -> c
@@ -898,24 +857,23 @@ def test_mcnemar_counts_discordant_pairs(hand_views):
         (3, 2 * 86400, 1, "view", 10.0),
         (4, 3 * 86400, 1, "view", 1.0),
     ]
-    _mk_events(spark, rows)
-    row = spark.sql(_mcnemar(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    row = hand.sql(_mcnemar(SPARK)).collect()[0]
     assert row.n == 4
     assert row.b_only_b == 1 and row.c_only_a == 1
     assert row.mcnemar_chi2 == 0.0 and row.mcnemar_cc == 0.0
     assert row.right_a == 3 and row.right_b == 3
 
 
-def test_heaps_law_matches_python_replica(hand_views):
-    spark = hand_views
+def test_heaps_law_matches_python_replica(hand):
     from rugpull_data_pipeline_spark.plans import registry
     import math
     # doc i = "a t{i}": after i docs N = 2i tokens, V = i + 1 types.
     _mk_docs(
-        spark,
+        hand,
         [(i, f"a t{i}", "en", "s1") for i in range(1, 9)],
     )
-    row = registry.get("profile_heaps_law").builder(spark, "unused").collect()[0]
+    row = registry.get("profile_heaps_law").builder(hand, "unused").collect()[0]
     pts = [(math.log(2 * i), math.log(i + 1)) for i in range(1, 9)]
     xs = [round(x, 9) for x, _ in pts]
     ys = [round(y, 9) for _, y in pts]
@@ -929,8 +887,7 @@ def test_heaps_law_matches_python_replica(hand_views):
     assert 0.0 < row.beta_heaps < 1.0
 
 
-def test_hurst_trending_vs_alternating(hand_views):
-    spark = hand_views
+def test_hurst_trending_vs_alternating(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _hurst_rs
     # 64 days: a strong trend is persistent (H near 1); a strict
     # alternation is antipersistent (H near 0).
@@ -939,22 +896,21 @@ def test_hurst_trending_vs_alternating(hand_views):
         (1000 + i, i * 86400, 1, "alt", 2.0 if i % 2 else 1.0)
         for i in range(64)
     ]
-    _mk_events(spark, rows)
-    got = {r.event_type: r for r in spark.sql(_hurst_rs(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.event_type: r for r in hand.sql(_hurst_rs(SPARK)).collect()}
     assert got["trend"].n_scales == 3
     assert got["trend"].hurst > 0.85
     assert got["alt"].hurst < 0.35
     assert got["trend"].hurst > got["alt"].hurst
 
 
-def test_hurst_matches_python_replica(hand_views):
-    spark = hand_views
+def test_hurst_matches_python_replica(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _hurst_rs
     import math
     vals = [float((i * 37) % 11 + 1) for i in range(64)]  # deterministic mix
     rows = [(i, i * 86400, 1, "x", vals[i]) for i in range(64)]
-    _mk_events(spark, rows)
-    row = spark.sql(_hurst_rs(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    row = hand.sql(_hurst_rs(SPARK)).collect()[0]
     v = [math.floor(x * 100) for x in vals]
     pts = []
     for w in (8, 16, 32):
@@ -987,27 +943,25 @@ def test_hurst_matches_python_replica(hand_views):
     assert abs(row.hurst - round(h, 6)) < 5e-6
 
 
-def test_entropy_rate_deterministic_vs_uniform(hand_views):
-    spark = hand_views
+def test_entropy_rate_deterministic_vs_uniform(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _entropy_rate
     import math
     # user 1: deterministic cycle a->b->a->b...  (H = 0)
     rows = [(i, 10 * i, 1, "a" if i % 2 == 0 else "b", None) for i in range(20)]
-    _mk_events(spark, rows)
-    row = spark.sql(_entropy_rate(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    row = hand.sql(_entropy_rate(SPARK)).collect()[0]
     assert row.entropy_rate_nats == 0.0 and row.n_states == 2
     # fair alternation between two successors: H = ln 2 per step
     rows = [(i, 10 * i, 1, ["a", "b", "a", "c"][i % 4], None) for i in range(40)]
-    _mk_events(spark, rows)
-    row = spark.sql(_entropy_rate(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    row = hand.sql(_entropy_rate(SPARK)).collect()[0]
     # transitions: a->b (10), b->a (10), a->c (9 or 10), c->a (9 or 10):
     # a's row is the only stochastic one (~ln 2 weighted by a's occupancy)
     assert 0.0 < row.entropy_rate_nats < math.log(2)
     assert row.entropy_rate_norm < 1.0
 
 
-def test_perm_entropy_monotone_vs_mixed(hand_views):
-    spark = hand_views
+def test_perm_entropy_monotone_vs_mixed(hand):
     from rugpull_data_pipeline_spark.plans.stats_eval import _perm_entropy
     import math
     # strictly increasing: every triple is the same ordinal pattern -> H = 0
@@ -1015,8 +969,8 @@ def test_perm_entropy_monotone_vs_mixed(hand_views):
     # deterministic mixed series: several patterns -> H > 0
     vals = [float((i * 37) % 11 + 1) for i in range(16)]
     rows += [(100 + i, i * 86400, 1, "mix", vals[i]) for i in range(16)]
-    _mk_events(spark, rows)
-    got = {r.event_type: r for r in spark.sql(_perm_entropy(SPARK)).collect()}
+    _mk_events(hand, rows)
+    got = {r.event_type: r for r in hand.sql(_perm_entropy(SPARK)).collect()}
     assert got["up"].n_patterns == 1
     assert got["up"].perm_entropy_nats == 0.0
     assert got["mix"].n_patterns > 1
@@ -1050,15 +1004,14 @@ def test_perm_entropy_monotone_vs_mixed(hand_views):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(st.lists(st.tuples(st.integers(0, 40), st.booleans()), min_size=1, max_size=12))
-def test_auc_matches_bruteforce(hand_views, pts):
-    spark = hand_views
+def test_auc_matches_bruteforce(hand, pts):
     # no forced class rows: hypothesis owns the single-class NULL guard too
     rows = [
         (i, 10 * i, 1, "purchase" if pos else "click", c / 100.0)
         for i, (c, pos) in enumerate(pts)
     ]
-    _mk_events(spark, rows)
-    got = spark.sql(_auc(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    got = hand.sql(_auc(SPARK)).collect()[0]
     # brute force on the SAME floored-cents values the SQL sees
     sc = [(math.floor((c / 100.0) * 100.0), pos) for c, pos in pts]
     pos_s = [s for s, p in sc if p]
@@ -1085,15 +1038,14 @@ def test_auc_matches_bruteforce(hand_views, pts):
         max_size=14,
     )
 )
-def test_ndcg_matches_bruteforce(hand_views, docs):
-    spark = hand_views
+def test_ndcg_matches_bruteforce(hand, docs):
 
     rows = [
         (i + 1, " ".join(f"w{j}" for j in range(k)), "en", "s", nc)
         for i, (k, nc) in enumerate(docs)
     ]
-    _mk_docs(spark, rows, DOCS_N)
-    row = registry.get("eval_ndcg_ranking").builder(spark, "unused").collect()[0]
+    _mk_docs(hand, rows, DOCS_N)
+    row = registry.get("eval_ndcg_ranking").builder(hand, "unused").collect()[0]
     scored = [(i + 1, min(3, k // 8), nc) for i, (k, nc) in enumerate(docs)]
 
     def dcg(order):
@@ -1117,8 +1069,7 @@ def test_ndcg_matches_bruteforce(hand_views, docs):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(st.lists(st.tuples(st.integers(1, 25), st.integers(1, 400)), max_size=12))
-def test_cohens_kappa_matches_bruteforce(hand_views, docs):
-    spark = hand_views
+def test_cohens_kappa_matches_bruteforce(hand, docs):
     from rugpull_data_pipeline_spark.plans.stats_eval import _cohens_kappa
 
     # the two anchors force mixed margins, so the kappa denominator is > 0
@@ -1127,8 +1078,8 @@ def test_cohens_kappa_matches_bruteforce(hand_views, docs):
         (i + 1, " ".join(f"w{j}" for j in range(k)), "en", "s", nc)
         for i, (k, nc) in enumerate(docs)
     ]
-    _mk_docs(spark, rows, DOCS_N)
-    got = spark.sql(_cohens_kappa(SPARK)).collect()[0]
+    _mk_docs(hand, rows, DOCS_N)
+    got = hand.sql(_cohens_kappa(SPARK)).collect()[0]
     cells = {}
     for k, nc in docs:
         key = (nc >= 150, k >= 12)  # (rater A keeps, rater B keeps)
@@ -1151,8 +1102,7 @@ def test_cohens_kappa_matches_bruteforce(hand_views, docs):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(st.lists(st.tuples(st.integers(0, 40), st.booleans()), min_size=1, max_size=12))
-def test_brier_matches_bruteforce(hand_views, pts):
-    spark = hand_views
+def test_brier_matches_bruteforce(hand, pts):
     from rugpull_data_pipeline_spark.plans.stats_eval import _brier
 
     # no forced rows: hypothesis owns the degenerate paths too (0-max
@@ -1161,8 +1111,8 @@ def test_brier_matches_bruteforce(hand_views, pts):
         (i, 10 * i, 1, "purchase" if pos else "click", c / 100.0)
         for i, (c, pos) in enumerate(pts)
     ]
-    _mk_events(spark, rows)
-    got = spark.sql(_brier(SPARK)).collect()[0]
+    _mk_events(hand, rows)
+    got = hand.sql(_brier(SPARK)).collect()[0]
     grid = {}
     for c, pos in pts:
         s = math.floor((c / 100.0) * 100.0)

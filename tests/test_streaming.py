@@ -525,8 +525,6 @@ def test_bollinger_state_survives_batch_boundary(spark, tmp_path):
     production assumption shared with the price kernel) emits exactly the
     rows a single-batch replay does — including breakouts whose 8-row frame
     STRADDLES the batch boundary."""
-    import pandas as pd
-
     from rugpull_data_pipeline_spark.streaming.pipelines import bollinger_alerts
 
     # one key, 12 points: 11 quiet values then a spike; the spike's frame
@@ -777,7 +775,7 @@ def test_flagship_e2e_batch_boundary_independence(spark, sf_dir):
     from rugpull_data_pipeline_spark.plans.registry import bind_views, get
     from rugpull_data_pipeline_spark.plans.stream_infra import _flagship_e2e
 
-    bind_views(spark, sf_dir)
+    spark = bind_views(spark, sf_dir)
     batch_rows = sorted(
         tuple(r) for r in get("flagship_balance_report").builder(spark, sf_dir).collect()
     )
@@ -799,7 +797,7 @@ def test_flagship_e2e_checkpoint_recovery(spark, sf_dir):
     from rugpull_data_pipeline_spark.plans.registry import bind_views, get
     from rugpull_data_pipeline_spark.plans.stream_infra import _flagship_e2e
 
-    bind_views(spark, sf_dir)
+    spark = bind_views(spark, sf_dir)
     batch_rows = sorted(
         tuple(r) for r in get("flagship_balance_report").builder(spark, sf_dir).collect()
     )
@@ -939,7 +937,7 @@ def test_price_maint_e2e_checkpoint_recovery(spark, sf_dir):
     from rugpull_data_pipeline_spark.plans.registry import bind_views
     from rugpull_data_pipeline_spark.plans.stream_infra import _price_maint_e2e
 
-    bind_views(spark, sf_dir)
+    spark = bind_views(spark, sf_dir)
     uninterrupted = sorted(
         tuple(r) for r in _price_maint_e2e(spark, sf_dir).collect()
     )
@@ -960,7 +958,7 @@ def test_price_maint_tws_checkpoint_recovery(spark, sf_dir):
     from rugpull_data_pipeline_spark.plans.registry import bind_views
     from rugpull_data_pipeline_spark.plans.stream_infra import _price_maint_e2e
 
-    bind_views(spark, sf_dir)
+    spark = bind_views(spark, sf_dir)
     uninterrupted = sorted(
         tuple(r) for r in _price_maint_e2e(spark, sf_dir, kernel="tws").collect()
     )

@@ -27,8 +27,7 @@ def events_dir(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("ev_stream"))
     from rugpull_data_pipeline_spark.plans import registry
 
-    registry.bind_views(spark, SF)
-    ev = spark.table("events")
+    ev = registry.bind_views(spark, SF).table("events")
     ev.repartition(4).write.mode("overwrite").parquet(d)
     return d
 
@@ -150,7 +149,7 @@ def test_stream_stream_left_outer_join_null_pads(spark, events_dir):
     assert not (set(null_ids) & matched_purchases)
 
 
-def test_hopping_window_replay_overlap_semantics(hand_views):
+def test_hopping_window_replay_overlap_semantics(hand):
     """Every event lands in exactly TWO 1h/30m hopping windows; append mode
     emits each closed window once and total fan-out is exactly 2x events."""
     from rugpull_data_pipeline_spark.plans.stream_infra import (
@@ -160,9 +159,9 @@ def test_hopping_window_replay_overlap_semantics(hand_views):
     # hand events at 00:10, 00:40, 01:10 (+1 sentinel handled internally):
     rows = [(0, 600, 1, "click", 1.0), (1, 2400, 1, "click", 1.0),
             (2, 4200, 1, "click", 1.0)]
-    _mk_events(hand_views, rows)
+    _mk_events(hand, rows)
     out = {r.window_start: r.n_events
-           for r in stream_hopping_window_replay(hand_views, HAND).collect()}
+           for r in stream_hopping_window_replay(hand, HAND).collect()}
     # 00:10 -> windows [-1800,1800) start -1800 and [0,3600) start 0
     # 00:40 -> [0,3600) and [1800,5400); 01:10 -> [1800,5400) and [3600,7200)
     assert out == {-1800: 1, 0: 2, 1800: 2, 3600: 1}

@@ -48,20 +48,17 @@ def test_mode_choices_are_the_surfaces():
 @pytest.mark.parametrize("mode", list(SURFACES))
 def test_surface_same_rows_on_both_engines(spark, mode):
     problems = {}
-    try:
-        with duckdb.connect() as con:
-            apply_surface(spark, con, SF, mode)
-            for t in SURFACES[mode].views:
-                s = _digest_arrays(spark.table(t).toPandas())
-                d = _digest_arrays(con.execute(f"SELECT * FROM {t}").fetchdf())
-                problems[t] = compare(s, d)
-                duck_types = [_SPARK_TYPE.get(r[1], r[1]) for r in con.execute(
-                    f"DESCRIBE SELECT * FROM {t}").fetchall()]
-                spark_types = [ty for _, ty in spark.table(t).dtypes]
-                if duck_types != spark_types:
-                    problems[t].append(f"types: spark={spark_types} duck={duck_types}")
-                if (len(s) == 0) != (mode == "empty"):  # no vacuous pass
-                    problems[t].append(f"{len(s)} rows")
-    finally:
-        registry.unbind_views(spark)
+    with duckdb.connect() as con:
+        surf = registry.bind_views(spark, apply_surface(spark, con, SF, mode))
+        for t in SURFACES[mode].views:
+            s = _digest_arrays(surf.table(t).toPandas())
+            d = _digest_arrays(con.execute(f"SELECT * FROM {t}").fetchdf())
+            problems[t] = compare(s, d)
+            duck_types = [_SPARK_TYPE.get(r[1], r[1]) for r in con.execute(
+                f"DESCRIBE SELECT * FROM {t}").fetchall()]
+            spark_types = [ty for _, ty in surf.table(t).dtypes]
+            if duck_types != spark_types:
+                problems[t].append(f"types: spark={spark_types} duck={duck_types}")
+            if (len(s) == 0) != (mode == "empty"):  # no vacuous pass
+                problems[t].append(f"{len(s)} rows")
     assert not any(problems.values()), problems

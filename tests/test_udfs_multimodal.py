@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from rugpull_data_pipeline_spark.functions.udfs import (
     amm_quote_price,
@@ -169,21 +168,20 @@ def test_phash_words_known_pattern_and_neardup_pairing(spark):
     assert {r.wv for r in phash_words(empty).collect()} == {0}
 
 
-def test_phash_neardup_finds_clone_pairs(hand_views):
+def test_phash_neardup_finds_clone_pairs(hand):
     from rugpull_data_pipeline_spark.plans.multimodal_q import (
         multimodal_phash_neardup,
     )
 
-    spark = hand_views
     t1 = "the quick brown fox jumps over the lazy dog again and again"
     _mk_docs(
-        spark,
+        hand,
         [(1, t1), (2, t1), (3, "zzz qqq xxx completely different text payload")],
         DOC_TEXT,
     )
     got = [
         (r.doc_a, r.doc_b, r.hamming_bits)
-        for r in multimodal_phash_neardup(spark, "unused").collect()
+        for r in multimodal_phash_neardup(hand, "unused").collect()
     ]
     assert (1, 2, 0) in got  # identical payloads -> hamming 0
     assert all(a == 1 and b == 2 for a, b, _h in got) or all(
@@ -254,20 +252,19 @@ def test_phash_words_byte_exact_on_non_ascii(spark):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
-def test_vad_segments_islands_and_threshold(hand_views):
+def test_vad_segments_islands_and_threshold(hand):
     from rugpull_data_pipeline_spark.plans.multimodal_q import (
         multimodal_vad_segments,
     )
 
-    spark = hand_views
     # doc 1: loud/quiet/loud 32-byte windows -> two single-window segments;
     # doc 2: loud/loud/quiet -> one merged [0,1] segment.
     _mk_docs(
-        spark,
+        hand,
         [(1, "z" * 32 + " " * 32 + "z" * 32), (2, "z" * 64 + " " * 32)],
         DOC_TEXT,
     )
-    rows = multimodal_vad_segments(spark, "unused").collect()
+    rows = multimodal_vad_segments(hand, "unused").collect()
     segs = [(r.doc_id, r.seg_start, r.seg_end, r.n_wins) for r in rows]
     assert segs == [(1, 0, 0, 1), (1, 2, 2, 1), (2, 0, 1, 2)]
     z_energy = 32 * 122 * 122

@@ -33,8 +33,9 @@ One mode per degenerate surface; `--help` lists each with what it found:
 
 Each surface is written once, in SURFACES: per substituted table, one
 SELECT in dialect ``d`` over the table's source relation.
-``apply_surface`` renders it as the Spark temp view and as the DuckDB view,
-so both engines read the same rows by construction
+``apply_surface`` renders it as the DuckDB view and as the Spark temp view
+of the surface's own build session (``registry.bind_views`` under the
+sf_dir ``<sf_dir>#<mode>``), so both engines read the same rows by construction
 (tests/test_sweep_surfaces.py checks it for every mode).
 
 Exit 0 iff every query is `ok` or `explained`. (The round-6 self-sourced
@@ -63,7 +64,7 @@ from rugpull_data_pipeline_spark.functions.scalars import (  # noqa: E402
     idiv,
     json_get,
 )
-from rugpull_data_pipeline_spark.sources.tables import TABLES  # noqa: E402
+from rugpull_data_pipeline_spark.sources.tables import TABLES, register_views  # noqa: E402
 
 # Per-engine watchdog: seconds one query may run before it is cancelled.
 DEADLINE_S = 420
@@ -291,16 +292,17 @@ SURFACES: dict[str, Surface] = {
 }
 
 
-def apply_surface(spark, con, sf_dir: str, mode: str) -> None:
+def apply_surface(spark, con, sf_dir: str, mode: str) -> str:
     """Register surface ``mode`` of the ``sf_dir`` tables on both engines:
-    Spark temp views over the real views, DuckDB views over the parquet
-    files. The session stays bound to ``sf_dir``, so builders read the
-    substituted views instead of re-registering the real ones."""
+    DuckDB views over the parquet files, and Spark views over the real ones
+    in the build session of the returned sf_dir, so builders called with
+    ``spark`` and it read the substituted views."""
     from rugpull_data_pipeline_spark.plans import registry
 
     surface = SURFACES[mode]
-    registry.unbind_views(spark)
-    registry.bind_views(spark, sf_dir)
+    key = f"{sf_dir}#{mode}"
+    surf = registry.bind_views(spark, key, {})
+    register_views(surf, sf_dir)
     subs = {}
     for t in TABLES:
         src = f"read_parquet('{sf_dir}/{t}.parquet')"
@@ -308,11 +310,12 @@ def apply_surface(spark, con, sf_dir: str, mode: str) -> None:
         if view is None:
             con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM {src}")
             continue
-        cols = spark.table(t).columns
+        cols = surf.table(t).columns
         con.execute(f"CREATE OR REPLACE VIEW {t} AS {view(DUCK, src, cols)}")
-        df = spark.sql(view(SPARK, t, cols))
+        df = surf.sql(view(SPARK, t, cols))
         subs[t] = df.localCheckpoint() if t in surface.checkpoint else df
-    registry.bind_views(spark, sf_dir, subs)
+    registry.bind_views(surf, key, subs)
+    return key
 
 
 def _parser() -> argparse.ArgumentParser:
@@ -346,7 +349,7 @@ def main() -> int:
     sf_dir = os.path.join("/root/testdata", args.sf)
     spark = get_spark(app_name="empty-sweep")
     con = duckdb.connect()
-    apply_surface(spark, con, sf_dir, args.mode)
+    surf_dir = apply_surface(spark, con, sf_dir, args.mode)
 
     qs, osql = e.queries(), e.oracle_sql()
     names = [
@@ -415,7 +418,7 @@ def main() -> int:
         group = f"sweep-{name}"
         spark.sparkContext.setJobGroup(group, name, interruptOnCancel=True)
         s_pdf, s_err = _with_deadline(
-            lambda: qs[name](spark, sf_dir).toPandas(),
+            lambda: qs[name](spark, surf_dir).toPandas(),
             lambda: spark.sparkContext.cancelJobGroup(group),
         )
         d_pdf = d_err = None
