@@ -122,8 +122,9 @@ def read_block_stream(
     return reader.json(path_glob).select("result.*")
 
 
-# A transaction ``tx``'s key sequence (the ``keyed`` CTE below says how it
-# is indexed), written once for the extraction chain and ``transactions``.
+# A transaction ``tx``'s key sequence (the ``keyed`` level of
+# ``_EXTRACT_SQL`` says how it is indexed), written once for the extraction
+# chain and ``transactions``.
 _KEYS = """concat(
             coalesce(tx.transaction.message.accountKeys, array()),
             coalesce(tx.meta.loadedAddresses.readonly, array()),
@@ -132,47 +133,20 @@ _KEYS = """concat(
 # The DuckDB oracle's CTE chain as one Spark SQL statement, analysed once.
 # Built from DataFrame and Column calls, the same plan takes ~90 py4j round
 # trips that each re-analyse the growing plan, which on a one-block stream
-# micro-batch costs more than the scan.
+# micro-batch costs more than the scan. The steps nest as subqueries, read
+# from the innermost out, rather than chain as ``WITH`` CTEs: a stream
+# analyses the statement once per micro-batch, and the CTE form costs more
+# to parse, analyse and optimize for the same executed plan (one 0.7 MB
+# block, local[2] under C1 on a 4-vCPU host: ``sql()`` ≈70 → 52 ms,
+# optimization ≈24 → 17 ms).
 _EXTRACT_SQL = f"""
-WITH tx AS (
-    SELECT to_timestamp(from_unixtime(blockTime)) AS ts,
-        explode(transactions) AS tx
-    FROM {{blocks}}
-),
-keyed AS (
-    -- One concatenated key sequence with continuous indexing:
-    -- accountKeys, then loadedAddresses readonly, then writable
-    -- (stage2_processing.cpp:366-389).
-    SELECT ts,
-        tx.transaction.signatures[0] AS signature,
-        {_KEYS} AS all_keys,
-        tx.meta.preTokenBalances AS pre,
-        tx.meta.postTokenBalances AS post
-    FROM tx
-),
-hot AS (
-    -- J1: keep the tx iff any key is watchlisted (stage2_processing.cpp:
-    -- 358-364). The watchlist is the :watch array parameter, so the
-    -- filter is narrow and runs before any balance is exploded.
-    SELECT * FROM keyed WHERE arrays_overlap(all_keys, :watch)
-),
-entries AS (
-    -- The pre and post passes (stage2_processing.cpp:391-403) as ONE
-    -- generator over phase-tagged elements: a UNION ALL of two explodes
-    -- would plan the scan and the J1 filter twice.
-    SELECT ts, signature, all_keys, e.phase AS phase, e.b AS b
-    FROM (
-        SELECT ts, signature, all_keys,
-            explode(concat(
-                transform(coalesce(pre, array()),
-                    b -> struct('pre' AS phase, b AS b)),
-                transform(coalesce(post, array()),
-                    b -> struct('post' AS phase, b AS b)))) AS e
-        FROM hot
-    )
-    WHERE e.b IS NOT NULL
-),
-resolved AS (
+-- A1: per-(tx, wallet, mint) pre/post merge; a row exists only when the
+-- pre or the post side had an entry (stage2_processing.cpp:399-401).
+SELECT wallet, signature, mint,
+    max(CASE WHEN phase = 'pre' THEN amount END) AS pre_balance,
+    max(CASE WHEN phase = 'post' THEN amount END) AS post_balance,
+    max(ts) AS ts
+FROM (
     -- J2: when the address at accountIndex is watchlisted it is the pool
     -- vault and replaces the owner (stage2_processing.cpp:160-167).
     -- try_element_at: ANSI element_at throws on an out-of-range index; a
@@ -183,15 +157,44 @@ resolved AS (
              ELSE b.owner END AS wallet,
         b.mint AS mint,
         b.uiTokenAmount.uiAmountString AS amount
-    FROM entries
-)
--- A1: per-(tx, wallet, mint) pre/post merge; a row exists only when the
--- pre or the post side had an entry (stage2_processing.cpp:399-401).
-SELECT wallet, signature, mint,
-    max(CASE WHEN phase = 'pre' THEN amount END) AS pre_balance,
-    max(CASE WHEN phase = 'post' THEN amount END) AS post_balance,
-    max(ts) AS ts
-FROM resolved
+    FROM (
+        -- The pre and post passes (stage2_processing.cpp:391-403) as ONE
+        -- generator over phase-tagged elements: a UNION ALL of two explodes
+        -- would plan the scan and the J1 filter twice.
+        SELECT ts, signature, all_keys, e.phase AS phase, e.b AS b
+        FROM (
+            SELECT ts, signature, all_keys,
+                explode(concat(
+                    transform(coalesce(pre, array()),
+                        b -> struct('pre' AS phase, b AS b)),
+                    transform(coalesce(post, array()),
+                        b -> struct('post' AS phase, b AS b)))) AS e
+            FROM (
+                -- J1: keep the tx iff any key is watchlisted
+                -- (stage2_processing.cpp:358-364). The watchlist is the
+                -- :watch array parameter, so the filter is narrow and runs
+                -- before any balance is exploded.
+                SELECT * FROM (
+                    -- One concatenated key sequence with continuous
+                    -- indexing: accountKeys, then loadedAddresses readonly,
+                    -- then writable (stage2_processing.cpp:366-389).
+                    SELECT ts,
+                        tx.transaction.signatures[0] AS signature,
+                        {_KEYS} AS all_keys,
+                        tx.meta.preTokenBalances AS pre,
+                        tx.meta.postTokenBalances AS post
+                    FROM (
+                        SELECT to_timestamp(from_unixtime(blockTime)) AS ts,
+                            explode(transactions) AS tx
+                        FROM {{blocks}}
+                    ) tx
+                ) keyed
+                WHERE arrays_overlap(all_keys, :watch)
+            ) hot
+        )
+        WHERE e.b IS NOT NULL
+    ) entries
+) resolved
 GROUP BY signature, wallet, mint
 """
 

@@ -66,6 +66,18 @@ def get_spark(
         # the default cache of 100 holds, so every warm pass recompiled
         # ≈905 of them (sf0.01); 1000 keeps a pass's classes cached.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # Streaming checkpoint logs (offsets, commits, sources, state) go
+        # through FileSystem, not FileContext: FileContext's rename resolves
+        # links with FileUtil.readLink, which on a local file system without
+        # libhadoop starts a `readlink` process per call (≈24 per one-block
+        # micro-batch). On the local file system both managers do
+        # exists-then-rename, so an existing log file still fails the write.
+        # A session built elsewhere keeps Spark's default: as correct, slower.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

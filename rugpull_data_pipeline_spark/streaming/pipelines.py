@@ -16,7 +16,13 @@ Design notes for scale:
   once: the JSON file source parses every block at the scan, at the same
   pruned schema as batch ``read_blocks`` (a text source + ``from_json``
   re-parsed per consumer expression); and the extraction is one
-  parameterized SQL statement, analysed once.
+  parameterized SQL statement, analysed once, whose steps nest as
+  subqueries because a ``WITH`` chain costs more to analyse for the same
+  plan. The fixed file-system work starts no process either: the
+  checkpoint logs are written through the FileSystem-based manager
+  (``session.get_spark``) and the watchlist is listed with
+  ``listStatus``, which on a local file system without libhadoop spares a
+  ``readlink`` per log rename and an ``ls -ld`` per listed file.
 
 - **One job per one-partition micro-batch.** The watchlist is bound into
   the extraction as a driver-held array value, so a micro-batch runs no
@@ -66,15 +72,23 @@ from ..operators.balance import (
 
 
 def _listing(spark: SparkSession, path: str) -> list[tuple[str, int, int]]:
-    """(path, size, modification time) of every file under ``path``, via
-    the Hadoop file system the parquet reader itself lists with."""
+    """(path, size, modification time) of every file under ``path``, and
+    under its subdirectories, via the Hadoop file system the parquet reader
+    itself lists with. ``listStatus`` per directory, not ``listFiles``:
+    the ``LocatedFileStatus`` that ``listFiles`` builds per file reads
+    permission and owner, which the local file system without libhadoop
+    gets by starting an ``ls -ld`` process (Spark's ``HadoopFSUtils``
+    avoids that constructor for the same reason)."""
     sc = spark.sparkContext
     jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    files = jpath.getFileSystem(sc._jsc.hadoopConfiguration()).listFiles(jpath, True)
-    out = []
-    while files.hasNext():
-        f = files.next()
-        out.append((f.getPath().toString(), f.getLen(), f.getModificationTime()))
+    fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
+    out, dirs = [], [jpath]
+    while dirs:
+        for f in fs.listStatus(dirs.pop()):
+            if f.isDirectory():
+                dirs.append(f.getPath())
+            else:
+                out.append((f.getPath().toString(), f.getLen(), f.getModificationTime()))
     return sorted(out)
 
 

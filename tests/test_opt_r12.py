@@ -32,10 +32,10 @@ def _union_entries(tx):
 
 
 def test_fused_phase_explode_matches_union(spark):
-    """``extract_balance_changes`` (whose ``entries`` CTE is the fused
-    explode) against the union-of-two-explodes expectation, on block rows
-    carrying every edge the union handled row by row. Every balance indexes
-    a non-watchlisted key, so the wallet is the owner."""
+    """``extract_balance_changes`` (whose ``entries`` subquery is the
+    fused explode) against the union-of-two-explodes expectation, on block
+    rows carrying every edge the union handled row by row. Every balance
+    indexes a non-watchlisted key, so the wallet is the owner."""
     import json
 
     from rugpull_data_pipeline_spark.operators.balance import (

@@ -5,6 +5,7 @@ triggers, no live RPC/Redis."""
 
 from __future__ import annotations
 
+import os
 import re
 import time
 
@@ -142,17 +143,32 @@ def test_stream_micro_batch_parses_once_and_filters_before_explode(spark, tmp_pa
 def test_st5_dimension_refresh_next_batch(spark, tmp_path):
     """Watchlist updates must be visible to the next micro-batch — the
     reference's per-chunk Redis re-fetch contract (ST5) — whether the
-    writer overwrites the dimension or appends a new part file to it."""
+    writer overwrites the dimension, appends a new part file to it, or
+    lands one under a new ``partitionBy`` subdirectory. The last moves the
+    subdirectory in whole, so no file at the dimension's root changes and
+    only a listing that recurses sees it."""
     blocks_dir = str(tmp_path / "blocks")
     write_blocks_json(blocks_dir, n_blocks=12, seed=7, files=3)
     hot = hot_addresses()
 
-    for mode in ("overwrite", "append"):
+    for mode in ("overwrite", "append", "partitioned"):
         watch_dir = str(tmp_path / f"watch_{mode}")
+
+        def land(addresses, how, part):
+            df = spark.createDataFrame(
+                [(a, part) for a in addresses], "address string, src string"
+            )
+            if mode != "partitioned":
+                df.select("address").write.mode(how).parquet(watch_dir)
+            elif how == "overwrite":
+                df.write.mode(how).partitionBy("src").parquet(watch_dir)
+            else:
+                stage = str(tmp_path / "stage_partitioned")
+                df.write.partitionBy("src").parquet(stage)
+                os.rename(f"{stage}/src={part}", f"{watch_dir}/src={part}")
+
         # v1 watchlist: only half the hot addresses
-        spark.createDataFrame(
-            [(a,) for a in hot[:4]], "address string"
-        ).write.mode("overwrite").parquet(watch_dir)
+        land(hot[:4], "overwrite", "v1")
 
         seen_per_epoch: dict[int, set] = {}
 
@@ -162,10 +178,10 @@ def test_st5_dimension_refresh_next_batch(spark, tmp_path):
             # writer, like the pool-detector side pipeline S9): overwrite it
             # with the whole set, or append the missing half as a new part
             if epoch_id == 0:
-                spark.createDataFrame(
-                    [(a,) for a in (hot if mode == "overwrite" else hot[4:])],
-                    "address string",
-                ).write.mode(mode).parquet(watch_dir)
+                if mode == "overwrite":
+                    land(hot, "overwrite", "v2")
+                else:
+                    land(hot[4:], "append", "v2")
 
         q = stream_balance_pipeline(
             spark,
@@ -187,6 +203,78 @@ def test_st5_dimension_refresh_next_batch(spark, tmp_path):
         assert not any(w in hot[4:] for w in seen_per_epoch[0]), mode
         # ... and the refresh is read by the very next batch
         assert any(w in hot[4:] for w in seen_per_epoch[1]), mode
+
+
+def test_checkpoint_file_manager_is_filesystem_based_and_fails_if_exists(
+    spark, tmp_path
+):
+    """The session writes streaming checkpoint files through the
+    FileSystem-based manager, and its atomic create still refuses to
+    replace an existing file when overwriting is not asked for: an offsets
+    or commits log entry is written once."""
+    jvm = spark._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    path = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "ckpt" / "0"))
+    fm = checkpointing.CheckpointFileManager.create(
+        path.getParent(), spark._jsparkSession.sessionState().newHadoopConf()
+    )
+    assert fm.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+    out = fm.createAtomic(path, False)
+    out.write(1)
+    out.close()
+    again = fm.createAtomic(path, False)
+    again.write(2)
+    with pytest.raises(Exception, match="FileAlreadyExistsException"):
+        again.close()
+    assert (tmp_path / "ckpt" / "0").read_bytes() == bytes([1])
+
+
+def test_one_block_micro_batches_start_no_readlink_or_ls(spark, tmp_path):
+    """Three one-block micro-batches of the balance stream start no
+    ``readlink`` and no ``ls`` process. Hadoop's local file system without
+    libhadoop shells out to ``readlink`` when FileContext renames a
+    checkpoint log file, and to ``ls -ld`` for each file's permission when
+    a listing builds ``LocatedFileStatus``; a JFR recording of the JVM's
+    ``jdk.ProcessStart`` events shows either."""
+    blocks_dir = str(tmp_path / "blocks")
+    watch_dir = str(tmp_path / "watch")
+    write_blocks_json(blocks_dir, n_blocks=3, seed=7, files=3)
+    spark.createDataFrame(
+        [(a,) for a in hot_addresses()], "address string"
+    ).write.parquet(watch_dir)
+    batches = []
+
+    jvm = spark._jvm
+    dump = jvm.java.io.File(str(tmp_path / "process_start.jfr")).toPath()
+    recording = jvm.jdk.jfr.Recording()
+    try:
+        recording.enable("jdk.ProcessStart")
+        recording.start()
+        q = stream_balance_pipeline(
+            spark,
+            blocks_dir,
+            watch_dir,
+            lambda df, epoch_id: batches.append(df.count()),
+            max_files_per_trigger=1,
+            checkpoint_dir=str(tmp_path / "checkpoint"),
+        )
+        q.processAllAvailable()
+        q.stop()
+        recording.stop()
+        recording.dump(dump)
+    finally:
+        recording.close()
+    commands = [
+        e.getString("command")
+        for e in jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
+    ]
+
+    assert len(batches) == 3 and all(batches), batches
+    forked = [
+        c for c in commands if os.path.basename(c.split()[0]) in ("readlink", "ls")
+    ]
+    assert not forked, forked
 
 
 def test_stateful_price_change_10pct(spark, tmp_path):
